@@ -26,37 +26,39 @@ def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full canonical per-turn extraction over the documents table viewed as
     single-turn conversations (clinical prelude makes hits non-vacuous)."""
     from htep_spark.driver_queries import _clinical_col
-    from htep_spark.operators.extract import flagship_row_udf
+    from htep_spark.plans.pipeline import run_extraction
 
     # a small single-file table scans as one partition — spread the
     # UDF-heavy extraction across every core (cheap 5MB exchange)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
         spark.sparkContext.defaultParallelism
     )
-    # ONE Arrow crossing (round 7, guide §4.1): this surface projects six
-    # small fields, so the dedicated narrow UDF (which calls the monolithic
-    # extract_turn — identical whole-turn semantics by construction)
-    # replaces the stage-split composition that shipped the core struct out
-    # and content/corrected_text back in across four ArrowEvalPython nodes.
-    extracted = docs.select(
+    transcripts = docs.select(
         F.concat(F.lit("doc-"), F.col("doc_id")).alias("conv_id"),
         F.lit(0).cast("int").alias("turn_idx"),
-        flagship_row_udf(_clinical_col()).alias("r"),
+        F.lit("user").alias("role"),
+        _clinical_col().alias("text"),
+        F.lit(None).cast("timestamp").alias("ts"),
     )
-    # driver-facing select: the driver's canonicalizer sorts/hashes with
+    # the six fields below read only the core, classify and segments
+    # stages; Catalyst prunes the other stage UDFs out of the plan
+    # (tests/test_plan_quality.py::test_stage_udf_pruning).
+    # Driver-facing select: the driver's canonicalizer sorts/hashes with
     # pandas, which cannot hash list cells — serialize arrays to strings
     # (sorted for order-insensitive set semantics). Semantics unchanged.
-    return extracted.select(
+    return run_extraction(transcripts).select(
         "conv_id",
         "turn_idx",
-        F.col("r.document_type").alias("document_type"),
-        F.col("r.urgency").alias("urgency"),
-        F.array_join(F.array_sort("r.matched_drugs"), "|").alias("matched_drugs"),
-        F.array_join(F.array_sort("r.matched_diseases"), "|").alias(
+        F.col("result.document_type").alias("document_type"),
+        F.col("result.urgency").alias("urgency"),
+        F.array_join(F.array_sort("result.matched_drugs"), "|").alias(
+            "matched_drugs"
+        ),
+        F.array_join(F.array_sort("result.matched_diseases"), "|").alias(
             "matched_diseases"
         ),
-        F.col("r.corrected_text").alias("corrected_text"),
-        F.col("r.n_segments").alias("n_segments"),
+        F.col("result.corrected_text").alias("corrected_text"),
+        F.col("result.metrics.n_segments").alias("n_segments"),
     )
 
 
@@ -627,9 +629,10 @@ def _conv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ``turn_idx`` is only ever an ORDER key inside the grouped-map rollup
     # (``_rollup`` sorts by it and emits n_turns/first-non-null — never the
     # index values themselves), and within a source ``doc_id`` induces the
-    # identical order as ``row_number() - 1`` over it. Passing doc_id
-    # directly therefore yields byte-identical rollup rows while deleting
-    # the row_number window — and with it a whole exchange + two sorts
+    # identical order as ``row_number() - 1`` over it. Passing the 64-bit
+    # doc_id as is (never narrowed to int: under ANSI mode an id >= 2^31
+    # would raise CAST_OVERFLOW) therefore yields byte-identical rollup
+    # rows while deleting the row_number window — and with it a whole exchange + two sorts
     # (guide §2.4): the old plan shuffled the raw docs by source for the
     # window, ran extraction mid-stream, then re-shuffled the extracted
     # light columns for the grouped map (EvalPython nodes drop the
@@ -639,7 +642,7 @@ def _conv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projected light columns.
     transcripts = docs.select(
         F.col("source").alias("conv_id"),
-        F.col("doc_id").cast("int").alias("turn_idx"),
+        F.col("doc_id").alias("turn_idx"),
         F.lit("user").alias("role"),
         _clinical_col().alias("text"),
         F.lit("").alias("tool"),

@@ -21,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 _sf_match = re.search(r"sf([0-9.]+)", SF_DIR)
 SF = float(_sf_match.group(1)) if _sf_match else 0.1
 N_TURNS = int(os.environ.get("SPARK_GRAFT_TURNS", str(int(200_000 * SF / 0.1))))

@@ -12,8 +12,8 @@ standard ID/phone shapes from its synthetic corpus (``Patient ID : CH-3021``,
 ``deidentify(text)`` returns the masked text and the PII spans
 ``(start_char, end_char, kind)`` against the ORIGINAL text — the span
 bookkeeping the north_star requires. Deterministic, regex-only, pure
-Python; the Spark surface is an Arrow-vectorized UDF
-(``operators/extract.deid_udf``).
+Python; it is the ``deid`` stage of ``reference.STAGES``, whose Spark
+surface is the stage UDF ``operators/extract.deid_udf``.
 
 ``split_sentences(text)`` extracts sentence spans with a deliberately
 RE2-safe rule (``[^.!?]+[.!?]?`` runs, trimmed, non-empty) so the Spark and

@@ -21,15 +21,12 @@ def register_all(spark: SparkSession) -> None:
     from pyspark.sql.types import StringType
 
     from ..operators.dedup import simhash_udf
-    from ..operators.extract import corrected_text_udf, extract_turn_udf
+    from ..operators.extract import deid_udf, extract_turn_udf
     from ..operators.text_analysis import winnow_udf
     from .textops import fusion_correct
 
-    from ..operators.extract import deid_udf
-
     spark.udf.register("htep_extract", extract_turn_udf)
     spark.udf.register("htep_deid", deid_udf)
-    spark.udf.register("htep_corrected_text", corrected_text_udf)
     spark.udf.register("htep_simhash", simhash_udf)
     spark.udf.register("htep_winnow", winnow_udf)
 

@@ -7,29 +7,28 @@ the reference's own batching fix (``BlockICREngine._batch_predict_chars``,
 because per-item dispatch was too slow). No row-at-a-time Python UDF
 anywhere (BASELINE.json ``input_hint``: "no per-row Python").
 
-Round 7 (optimization guide §4.1 "pass only the columns the function
-needs"): the monolithic per-turn chain is SPLIT into stage-group pandas
-UDFs — core decode+dictionary-correction, segmentation, field extraction,
-classification, entity scan, de-identification — recomposed into the same
-``EXTRACTION_RESULT_TYPE`` struct with plain column references, so
-Catalyst's ``SimplifyExtractValueOps`` + column pruning DROP the stage
-UDFs a downstream query never reads (e.g. ``per_conversation_metrics``
-consumes only core-group fields → the fields/classify/entities/deid
-kernels — ~60% of per-turn CPU — are never evaluated; verified by
-``tests/test_plan_quality.py::test_conv_metrics_prunes_stage_udfs`` and
-``plans/r07/conv_metrics_after.txt``). Equal UDF expressions are
-deduplicated by ``ExtractPythonUDFs`` (evaluated once), and the full-struct
-query runs every group exactly once in two ArrowEvalPython nodes.
+One trunk: each stage of ``reference.STAGES`` (core decode + dictionary
+correction, segmentation, field extraction, classification, entity scan,
+de-identification) becomes one pandas UDF through ``_stage_udf``, which
+runs ``reference.run_stage`` — the same kernel call and the same per-stage
+fallback ``reference.extract_turn`` uses — and takes its return type from
+``schema.EXTRACTION_RESULT_TYPE``. This module calls no kernel and defines
+no fallback value of its own.
 
-Stage isolation matches the reference DAG (``app/api.py:215-293``): each
-stage group catches its own failure and degrades to that stage's canonical
-defaults — the per-stage isolation the reference implements — with
-``metrics.failed``/``metrics.error`` reporting the core group (payload
-decode + correction), whose fallback equals the whole-turn fallback of
-``reference.extract_turn`` field-for-field. On every gate corpus no stage
-raises, and the recomposition is byte-identical to ``extract_turn``
+``extract_transcripts`` recomposes the stage outputs into the
+``EXTRACTION_RESULT_TYPE`` struct with plain column references (optimization
+guide §4.1 "pass only the columns the function needs"), so Catalyst's
+``SimplifyExtractValueOps`` + column pruning DROP the stage UDFs a
+downstream query never reads (e.g. ``per_conversation_metrics`` consumes
+only core fields → the fields/classify/entities/deid kernels — ~60% of
+per-turn CPU — are never evaluated; verified by
+``tests/test_plan_quality.py::test_stage_udf_pruning``). Equal UDF
+expressions are deduplicated by ``ExtractPythonUDFs`` (evaluated once), and
+the full-struct query runs every stage exactly once in two ArrowEvalPython
+nodes. The recomposition equals ``extract_turn`` per turn
 (``tests/test_spark_pipeline.py::test_spark_equals_oracle_byte_for_byte``,
-``tests/test_golden.py``).
+``tests/test_golden.py``), including a turn where a stage raises
+(``tests/test_spark_pipeline.py::test_stage_failure_parity``).
 
 The per-worker memo tables (module-level in ``reference``/``textops``)
 amortize across every batch the worker ever sees. Per-turn extraction is
@@ -39,302 +38,70 @@ shuffle in the hot path.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StructType
 
-from ..reference import extract_turn
-from ..schema import (
-    CORRECTION_TYPE,
-    ENTITIES_TYPE,
-    EXTRACTED_TYPE,
-    EXTRACTION_RESULT_TYPE,
-    SEGMENT_TYPE,
-)
+from ..reference import STAGES, Stage, extract_turn, run_stage
+from ..schema import EXTRACTION_RESULT_TYPE, METRICS_TYPE
 
 __all__ = [
     "extract_turn_udf",
     "extract_transcripts",
-    "corrected_text_udf",
+    "extract_core_udf",
+    "segments_udf",
+    "fields_udf",
+    "classify_udf",
+    "entities_udf",
     "deid_udf",
-    "DEID_RESULT_TYPE",
 ]
 
 
 @F.pandas_udf(EXTRACTION_RESULT_TYPE)
-def extract_turn_udf(texts: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """text → full extraction-result struct, one Arrow batch at a time.
-
-    The monolithic single-UDF form — kept as the registered SQL function
-    (``functions/register.py``), the streaming surface and the golden-test
-    oracle harness; ``extract_transcripts`` below uses the prunable
-    stage-group split instead.
-
-    Iterator form so per-worker init (dictionary lookups, regex compiles —
-    the lazy-singleton pattern of ``app/api.py:56-104``) happens once per
-    Python worker process, not per batch.
-    """
-    for series in texts:
-        yield pd.DataFrame(
-            [extract_turn(t if isinstance(t, str) else None) for t in series]
-        )
+def extract_turn_udf(texts: pd.Series) -> pd.DataFrame:
+    """The SQL function ``htep_extract``: the whole trunk in one crossing."""
+    return pd.DataFrame([extract_turn(t) for t in texts])
 
 
-# ---------------------------------------------------------------------------
-# Stage-group UDFs (the prunable split surface)
-# ---------------------------------------------------------------------------
-
-CORE_RESULT_TYPE = StructType(
-    [
-        StructField("payload_kind", StringType(), True),
-        StructField("content", StringType(), True),
-        StructField("final_text", StringType(), True),
-        StructField("corrected_text", StringType(), True),
-        StructField("corrections", ArrayType(CORRECTION_TYPE), True),
-        StructField("matched_drugs", ArrayType(StringType()), True),
-        StructField("matched_diseases", ArrayType(StringType()), True),
-        StructField("blocks_kept", IntegerType(), True),
-        StructField("blocks_dropped", IntegerType(), True),
-        StructField("n_corrections", IntegerType(), True),
-        StructField("content_chars", IntegerType(), True),
-        StructField("failed", BooleanType(), True),
-        StructField("error", StringType(), True),
-    ]
-)
+_RESULT_FIELDS = {f.name: f for f in EXTRACTION_RESULT_TYPE.fields + METRICS_TYPE.fields}
 
 
-def _core_row(text) -> dict:
-    """Payload decode (S1-S3 routing) + T7 dictionary post-processing —
-    the per-turn trunk every downstream stage consumes. On failure the
-    fallback equals ``reference.extract_turn``'s whole-turn fallback for
-    these fields exactly."""
-    from ..dictionaries import (
-        DISEASES_MULTI,
-        DISEASES_SINGLE,
-        DISEASE_SET,
-        DRUGS_MULTI,
-        DRUGS_SINGLE,
-        DRUG_SET,
-    )
-    from ..functions.textops import postprocess
-    from ..reference import _DISEASE_MEMO, _DRUG_MEMO, decode_payload
+def _stage_udf(stage: Stage, name: str):
+    """The scalar pandas UDF of one stage. Scalar (non-iterator) form:
+    independent scalar pandas UDFs combine into ONE ArrowEvalPython node
+    (one Python worker, one row queue per task) — iterator-form UDFs each
+    get their own node, and six chained nodes cost ~45% extra wall on the
+    full-struct path (BENCH/r07 notes)."""
 
-    if not isinstance(text, str):
-        text = None
-    try:
-        content, payload_kind, kept, dropped = decode_payload(text)
-        final_text = content.strip()
-        post = postprocess(
-            final_text,
-            DRUGS_SINGLE,
-            DRUGS_MULTI,
-            DRUG_SET,
-            DISEASES_SINGLE,
-            DISEASES_MULTI,
-            DISEASE_SET,
-            85.0,
-            _DRUG_MEMO,
-            _DISEASE_MEMO,
-        )
-        corrections = [
-            {
-                "from": c["from"],
-                "to": c["to"],
-                "type": c["type"],
-                "score": int(c["score"]),
-            }
-            for c in post["corrections"]
-        ]
-        return {
-            "payload_kind": payload_kind,
-            "content": content,
-            "final_text": final_text,
-            "corrected_text": post["corrected_text"] if final_text else "",
-            "corrections": corrections,
-            "matched_drugs": post["matched_drugs"],
-            "matched_diseases": post["matched_diseases"],
-            "blocks_kept": kept,
-            "blocks_dropped": dropped,
-            "n_corrections": len(corrections),
-            "content_chars": len(content),
-            "failed": False,
-            "error": None,
-        }
-    except Exception as exc:  # stage isolation: never lose a turn
-        safe = text or ""
-        stripped = safe.strip()
-        return {
-            "payload_kind": "plain",
-            "content": safe,
-            "final_text": stripped,
-            "corrected_text": stripped,
-            "corrections": [],
-            "matched_drugs": [],
-            "matched_diseases": [],
-            "blocks_kept": 0,
-            "blocks_dropped": 0,
-            "n_corrections": 0,
-            "content_chars": len(safe),
-            "failed": True,
-            "error": f"{type(exc).__name__}: {exc}",
-        }
+    def udf(values: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame([run_stage(stage, v) for v in values])
+
+    udf.__name__ = udf.__qualname__ = name  # the name the plan shows
+    if isinstance(stage.fields, str):
+        return_type = _RESULT_FIELDS[stage.fields].dataType
+    else:
+        return_type = StructType([_RESULT_FIELDS[f] for f in stage.fields])
+    return F.pandas_udf(udf, return_type)
 
 
-@F.pandas_udf(CORE_RESULT_TYPE)
-def extract_core_udf(texts: pd.Series) -> pd.DataFrame:
-    # scalar (non-iterator) form: independent scalar pandas UDFs combine
-    # into ONE ArrowEvalPython node (one Python worker, one row queue per
-    # task) — iterator-form UDFs each get their own node, and six chained
-    # nodes cost ~45% extra wall on the full-struct path (BENCH/r07 notes)
-    return pd.DataFrame([_core_row(t) for t in texts])
-
-
-SEGMENTS_RESULT_TYPE = StructType(
-    [
-        StructField("segments", ArrayType(SEGMENT_TYPE), True),
-        StructField("n_segments", IntegerType(), True),
-    ]
-)
-
-
-@F.pandas_udf(SEGMENTS_RESULT_TYPE)
-def segments_udf(contents: pd.Series) -> pd.DataFrame:
-    """G1/G5 segmentation with char spans over the decoded content.
-    ``n_segments`` is emitted here (not as a JVM ``size()``) so every
-    recomposed struct leaf stays a plain attribute dereference — the
-    condition for CollapseProject/pruning (module docstring)."""
-    from ..functions.segments import segment_document
-
-    def one(content):
-        try:
-            segs = segment_document(content if isinstance(content, str) else "")
-        except Exception:
-            segs = []
-        return {"segments": segs, "n_segments": len(segs)}
-
-    return pd.DataFrame([one(c) for c in contents])
-
-
-def _fields_row(final_text) -> dict:
-    """E1/E2/E5 structured-field extraction + vitals normalization —
-    exactly ``reference._extract_turn_inner``'s extracted block."""
-    from ..functions.extract_fields import extract_record
-    from ..reference import _empty_extracted
-
-    try:
-        extracted = (
-            extract_record(final_text)
-            if isinstance(final_text, str) and final_text
-            else {}
-        )
-        if extracted:
-            vit = extracted.get("vitals") or {}
-            extracted["vitals"] = {
-                "bp": vit.get("bp"),
-                "temp": vit.get("temp"),
-                "pulse": vit.get("pulse"),
-            }
-            return extracted
-        return _empty_extracted()
-    except Exception:
-        return _empty_extracted()
-
-
-@F.pandas_udf(EXTRACTED_TYPE)
-def fields_udf(finals: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame([_fields_row(t) for t in finals])
-
-
-CLS_RESULT_TYPE = StructType(
-    [
-        StructField("document_type", StringType(), True),
-        StructField("doc_confidence", DoubleType(), True),
-        StructField("keywords_found", ArrayType(StringType()), True),
-        StructField(
-            "secondary_types",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("document_type", StringType(), True),
-                        StructField("confidence", DoubleType(), True),
-                    ]
-                )
-            ),
-            True,
+_STAGE_UDFS = [
+    _stage_udf(stage, name)
+    for stage, name in zip(
+        STAGES,
+        (
+            "extract_core_udf",
+            "segments_udf",
+            "fields_udf",
+            "classify_udf",
+            "entities_udf",
+            "deid_udf",
         ),
-        StructField("urgency", StringType(), True),
-        StructField("urgency_confidence", DoubleType(), True),
-    ]
+    )
+]
+extract_core_udf, segments_udf, fields_udf, classify_udf, entities_udf, deid_udf = (
+    _STAGE_UDFS
 )
-
-
-def _cls_row(corrected) -> dict:
-    """C1 classification + C2 urgency over the corrected text, in the
-    reference chain order (classify, then urgency)."""
-    from ..functions.classify import classify_document, document_urgency
-
-    try:
-        if not isinstance(corrected, str):
-            corrected = ""
-        cls = classify_document(corrected)
-        urgency, urgency_conf = document_urgency(corrected)
-        return {
-            "document_type": cls["document_type"],
-            "doc_confidence": float(cls["confidence"]),
-            "keywords_found": cls["keywords_found"],
-            "secondary_types": cls["secondary_types"],
-            "urgency": urgency,
-            "urgency_confidence": float(urgency_conf),
-        }
-    except Exception:
-        return {
-            "document_type": "unknown",
-            "doc_confidence": 0.0,
-            "keywords_found": [],
-            "secondary_types": [],
-            "urgency": "routine",
-            "urgency_confidence": 0.5,
-        }
-
-
-@F.pandas_udf(CLS_RESULT_TYPE)
-def classify_udf(correcteds: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame([_cls_row(t) for t in correcteds])
-
-
-_EMPTY_ENTITIES = {
-    "medications": [],
-    "conditions": [],
-    "procedures": [],
-    "measurements": [],
-}
-
-
-@F.pandas_udf(ENTITIES_TYPE)
-def entities_udf(correcteds: pd.Series) -> pd.DataFrame:
-    """C4 basic entity regex scan over the corrected text."""
-    from ..functions.classify import extract_medical_entities
-
-    def one(corrected):
-        try:
-            return extract_medical_entities(
-                corrected if isinstance(corrected, str) else ""
-            )
-        except Exception:
-            return dict(_EMPTY_ENTITIES)
-
-    return pd.DataFrame([one(t) for t in correcteds])
 
 
 def extract_transcripts(df: DataFrame) -> DataFrame:
@@ -350,139 +117,26 @@ def extract_transcripts(df: DataFrame) -> DataFrame:
     # stage UDFs no consumer reads (an expensive expression referenced
     # several times — e.g. a UDF inside the struct — would block the
     # collapse and defeat the pruning).
-    core = F.col("_core")
-    base = df.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "ts",
-        extract_core_udf(F.col("text")).alias("_core"),
-    )
+    keys = ("conv_id", "turn_idx", "role", "ts")
+    (core_stage, core_udf), *later = zip(STAGES, _STAGE_UDFS)
+    core = f"_{core_stage.name}"
+    base = df.select(*keys, core_udf(F.col(core_stage.source)).alias(core))
     stage2 = base.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "ts",
-        "_core",
-        segments_udf(core.getField("content")).alias("_segments"),
-        fields_udf(core.getField("final_text")).alias("_extracted"),
-        classify_udf(core.getField("corrected_text")).alias("_cls"),
-        entities_udf(core.getField("corrected_text")).alias("_entities"),
-        deid_udf(core.getField("final_text")).alias("_deid"),
+        *keys,
+        core,
+        *[
+            udf(F.col(core).getField(stage.source)).alias(f"_{stage.name}")
+            for stage, udf in later
+        ],
     )
-    cls = F.col("_cls")
-    result = F.struct(
-        core.getField("payload_kind").alias("payload_kind"),
-        core.getField("content").alias("content"),
-        core.getField("final_text").alias("final_text"),
-        core.getField("corrected_text").alias("corrected_text"),
-        core.getField("corrections").alias("corrections"),
-        core.getField("matched_drugs").alias("matched_drugs"),
-        core.getField("matched_diseases").alias("matched_diseases"),
-        F.col("_segments").getField("segments").alias("segments"),
-        F.col("_extracted").alias("extracted"),
-        cls.getField("document_type").alias("document_type"),
-        cls.getField("doc_confidence").alias("doc_confidence"),
-        cls.getField("keywords_found").alias("keywords_found"),
-        cls.getField("secondary_types").alias("secondary_types"),
-        cls.getField("urgency").alias("urgency"),
-        cls.getField("urgency_confidence").alias("urgency_confidence"),
-        F.col("_entities").alias("entities"),
-        F.col("_deid").alias("deid"),
-        F.struct(
-            core.getField("blocks_kept").alias("blocks_kept"),
-            core.getField("blocks_dropped").alias("blocks_dropped"),
-            F.col("_segments").getField("n_segments").alias("n_segments"),
-            core.getField("n_corrections").alias("n_corrections"),
-            core.getField("content_chars").alias("content_chars"),
-            core.getField("failed").alias("failed"),
-            core.getField("error").alias("error"),
-        ).alias("metrics"),
-    )
-    return stage2.select("conv_id", "turn_idx", "role", "ts", result.alias("result"))
-
-
-FLAGSHIP_ROW_TYPE = StructType(
-    [
-        StructField("document_type", StringType(), True),
-        StructField("urgency", StringType(), True),
-        StructField("matched_drugs", ArrayType(StringType()), True),
-        StructField("matched_diseases", ArrayType(StringType()), True),
-        StructField("corrected_text", StringType(), True),
-        StructField("n_segments", IntegerType(), True),
-    ]
-)
-
-
-@F.pandas_udf(FLAGSHIP_ROW_TYPE)
-def flagship_row_udf(texts: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """text → exactly the six fields the flagship surface projects, in ONE
-    Arrow crossing (round 7, guide §4.1): the full-struct split path paid
-    four ArrowEvalPython nodes and re-shipped content/corrected_text into
-    the stage UDFs, tripling extract_full_docs' wall time. Calls the
-    monolithic ``extract_turn`` so whole-turn stage-isolation semantics
-    (and therefore the rows-only canonical hash) are identical by
-    construction."""
-    for series in texts:
-        rows = []
-        for t in series:
-            r = extract_turn(t if isinstance(t, str) else None)
-            rows.append(
-                {
-                    "document_type": r["document_type"],
-                    "urgency": r["urgency"],
-                    "matched_drugs": r["matched_drugs"],
-                    "matched_diseases": r["matched_diseases"],
-                    "corrected_text": r["corrected_text"],
-                    "n_segments": r["metrics"]["n_segments"],
-                }
-            )
-        yield pd.DataFrame(rows)
-
-
-@F.pandas_udf(StringType())
-def corrected_text_udf(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Narrow variant: text → corrected main-content text only (cheaper
-    output schema when downstream needs just the text column)."""
-    for series in texts:
-        yield pd.Series(
-            [
-                extract_turn(t if isinstance(t, str) else None)["corrected_text"]
-                for t in series
-            ]
-        )
-
-
-DEID_RESULT_TYPE = StructType(
-    [
-        StructField("masked_text", StringType(), True),
-        StructField(
-            "spans",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("start_char", IntegerType(), True),
-                        StructField("end_char", IntegerType(), True),
-                        StructField("kind", StringType(), True),
-                    ]
-                )
-            ),
-            True,
-        ),
-    ]
-)
-
-
-@F.pandas_udf(DEID_RESULT_TYPE)
-def deid_udf(texts: pd.Series) -> pd.DataFrame:
-    """text → (masked_text, PII spans) — north_star de-identification stage."""
-    from ..functions.deid import deidentify
-
-    def one(t):
-        t = t if isinstance(t, str) else ""
-        try:
-            return deidentify(t)
-        except Exception:
-            return {"masked_text": t, "spans": []}
-
-    return pd.DataFrame([one(t) for t in texts])
+    # the same layout as reference.assemble, in schema order
+    cols = {}
+    for stage in STAGES:
+        out = F.col(f"_{stage.name}")
+        if isinstance(stage.fields, str):
+            cols[stage.fields] = out
+        else:
+            cols.update((name, out.getField(name)) for name in stage.fields)
+    cols["metrics"] = F.struct(*[cols.pop(f.name).alias(f.name) for f in METRICS_TYPE])
+    result = F.struct(*[cols[f.name].alias(f.name) for f in EXTRACTION_RESULT_TYPE])
+    return stage2.select(*keys, result.alias("result"))

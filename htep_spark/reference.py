@@ -19,16 +19,20 @@ line-anchored field regex. Segments come from the CLI DAG
 ``content`` with char spans. These composition choices are this engine's
 canonical semantics; every per-operator behavior is reference-faithful.
 
-This exact function body is both the pytest oracle and the kernel of the
-Spark pandas UDF (``htep_spark/operators/extract.py``) — equality by
-construction, then tested anyway. Stage-isolation semantics
-(``app/api.py:215-293``): any stage failure degrades that stage's output
-and sets ``metrics.failed`` — a turn is never lost.
+The chain is written once, as the stage table ``STAGES``: core (decode +
+T7 correction), segments, fields, classify (+ urgency), entities and deid,
+each with its input field, kernel call and default output.
+``extract_turn`` composes the table in-process; the Spark stage UDFs
+(``htep_spark/operators/extract.py``) are built from the same table —
+equality by construction, then tested anyway. One failure model on every
+path (``app/api.py:215-293`` stage isolation): a raising stage yields its
+own default and the other stages run as usual; only a core failure sets
+``metrics.failed``/``metrics.error``. A turn is never lost.
 """
 
 from __future__ import annotations
 
-from typing import Dict, Optional, Tuple
+from typing import Callable, Dict, NamedTuple, Optional, Sequence, Tuple, Union
 
 from .dictionaries import (
     DISEASES_MULTI,
@@ -55,7 +59,15 @@ from .functions.pdf_layout import looks_like_pdf_layout, parse_pdf_layout
 from .functions.segments import segment_document
 from .functions.textops import fusion_correct, postprocess
 
-__all__ = ["decode_payload", "extract_turn", "fusion_correct"]
+__all__ = [
+    "STAGES",
+    "Stage",
+    "assemble",
+    "decode_payload",
+    "extract_turn",
+    "fusion_correct",
+    "run_stage",
+]
 
 # Per-process fuzzy-lookup memo tables (pure caches: same in → same out).
 _DRUG_MEMO: Dict = {}
@@ -90,49 +102,95 @@ def decode_payload(text: Optional[str]) -> Tuple[str, str, int, int]:
     return text, "plain", 0, 0
 
 
-def extract_turn(text: Optional[str]) -> Dict:
-    """Full canonical per-turn extraction. Returns the dict form of
-    ``schema.EXTRACTION_RESULT_TYPE``."""
-    try:
-        return _extract_turn_inner(text)
-    except Exception as exc:  # stage isolation: never lose a turn
-        safe = text or ""
-        return {
-            "payload_kind": "plain",
-            "content": safe,
-            "final_text": safe.strip(),
-            "corrected_text": safe.strip(),
-            "corrections": [],
-            "matched_drugs": [],
-            "matched_diseases": [],
-            "segments": [],
-            "extracted": _empty_extracted(),
-            "document_type": "unknown",
-            "doc_confidence": 0.0,
-            "keywords_found": [],
-            "secondary_types": [],
-            "urgency": "routine",
-            "urgency_confidence": 0.5,
-            "entities": {
-                "medications": [],
-                "conditions": [],
-                "procedures": [],
-                "measurements": [],
-            },
-            "deid": {"masked_text": safe.strip(), "spans": []},
-            "metrics": {
-                "blocks_kept": 0,
-                "blocks_dropped": 0,
-                "n_segments": 0,
-                "n_corrections": 0,
-                "content_chars": len(safe),
-                "failed": True,
-                "error": f"{type(exc).__name__}: {exc}",
-            },
-        }
+def _core(text: str) -> Dict:
+    """Payload decode (S1-S3 routing) + T7 dictionary post-processing: the
+    trunk every later stage reads."""
+    content, payload_kind, kept, dropped = decode_payload(text)
+    # app/api.py:233 — the canonical text is the decoded content, stripped.
+    final_text = content.strip()
+    post = postprocess(
+        final_text,
+        DRUGS_SINGLE,
+        DRUGS_MULTI,
+        DRUG_SET,
+        DISEASES_SINGLE,
+        DISEASES_MULTI,
+        DISEASE_SET,
+        85.0,
+        _DRUG_MEMO,
+        _DISEASE_MEMO,
+    )
+    return {
+        "payload_kind": payload_kind,
+        "content": content,
+        "final_text": final_text,
+        "corrected_text": post["corrected_text"] if final_text else "",
+        "corrections": [
+            {
+                "from": c["from"],
+                "to": c["to"],
+                "type": c["type"],
+                "score": int(c["score"]),
+            }
+            for c in post["corrections"]
+        ],
+        "matched_drugs": post["matched_drugs"],
+        "matched_diseases": post["matched_diseases"],
+        "blocks_kept": kept,
+        "blocks_dropped": dropped,
+        "n_corrections": len(post["corrections"]),
+        "content_chars": len(content),
+        "failed": False,
+        "error": None,
+    }
 
 
-def _empty_extracted() -> Dict:
+def _core_default(text: str, exc: Exception) -> Dict:
+    """The raw text passes through as plain content; the only stage whose
+    failure sets ``metrics.failed``."""
+    stripped = text.strip()
+    return {
+        "payload_kind": "plain",
+        "content": text,
+        "final_text": stripped,
+        "corrected_text": stripped,
+        "corrections": [],
+        "matched_drugs": [],
+        "matched_diseases": [],
+        "blocks_kept": 0,
+        "blocks_dropped": 0,
+        "n_corrections": 0,
+        "content_chars": len(text),
+        "failed": True,
+        "error": f"{type(exc).__name__}: {exc}",
+    }
+
+
+def _segments(content: str) -> Dict:
+    # segments on multi-line content (documented deviation, module docstring)
+    segments = segment_document(content)
+    return {"segments": segments, "n_segments": len(segments)}
+
+
+def _segments_default(_content: str, _exc: Exception) -> Dict:
+    return {"segments": [], "n_segments": 0}
+
+
+def _fields(final_text: str) -> Dict:
+    # eval-harness DAG: field extraction on the newline-intact final text
+    extracted = extract_record(final_text) if final_text else {}
+    if not extracted:
+        return _fields_default(final_text, None)
+    vit = extracted.get("vitals") or {}
+    extracted["vitals"] = {
+        "bp": vit.get("bp"),
+        "temp": vit.get("temp"),
+        "pulse": vit.get("pulse"),
+    }
+    return extracted
+
+
+def _fields_default(_final_text: str, _exc: Optional[Exception]) -> Dict:
     return {
         "patient_name": None,
         "age": None,
@@ -147,81 +205,150 @@ def _empty_extracted() -> Dict:
     }
 
 
-def _extract_turn_inner(text: Optional[str]) -> Dict:
-    content, payload_kind, kept, dropped = decode_payload(text)
-
-    # app/api.py:233 — the canonical text is the decoded content, stripped.
-    final_text = content.strip()
-
-    post = postprocess(
-        final_text,
-        DRUGS_SINGLE,
-        DRUGS_MULTI,
-        DRUG_SET,
-        DISEASES_SINGLE,
-        DISEASES_MULTI,
-        DISEASE_SET,
-        85.0,
-        _DRUG_MEMO,
-        _DISEASE_MEMO,
-    )
-    corrected_text = post["corrected_text"] if final_text else ""
-
-    # segments on multi-line content (documented deviation, module docstring)
-    segments = segment_document(content)
-
-    # eval-harness DAG: field extraction on the newline-intact final text
-    extracted = extract_record(final_text) if final_text else {}
-    if extracted:
-        vit = extracted.get("vitals") or {}
-        extracted["vitals"] = {
-            "bp": vit.get("bp"),
-            "temp": vit.get("temp"),
-            "pulse": vit.get("pulse"),
-        }
-    else:
-        extracted = _empty_extracted()
-
-    cls = classify_document(corrected_text)
-    urgency, urgency_conf = document_urgency(corrected_text)
-    entities = extract_medical_entities(corrected_text)
-    # north_star de-identification: masked text + PII spans against the
-    # newline-intact final text (same reference frame as the extractor)
-    deid = deidentify(final_text)
-
+def _classify(corrected: str) -> Dict:
+    # reference chain order: classify, then urgency
+    cls = classify_document(corrected)
+    urgency, urgency_conf = document_urgency(corrected)
     return {
-        "payload_kind": payload_kind,
-        "content": content,
-        "final_text": final_text,
-        "corrected_text": corrected_text,
-        "corrections": [
-            {
-                "from": c["from"],
-                "to": c["to"],
-                "type": c["type"],
-                "score": int(c["score"]),
-            }
-            for c in post["corrections"]
-        ],
-        "matched_drugs": post["matched_drugs"],
-        "matched_diseases": post["matched_diseases"],
-        "segments": segments,
-        "extracted": extracted,
         "document_type": cls["document_type"],
         "doc_confidence": float(cls["confidence"]),
         "keywords_found": cls["keywords_found"],
         "secondary_types": cls["secondary_types"],
         "urgency": urgency,
         "urgency_confidence": float(urgency_conf),
-        "entities": entities,
-        "deid": deid,
-        "metrics": {
-            "blocks_kept": kept,
-            "blocks_dropped": dropped,
-            "n_segments": len(segments),
-            "n_corrections": len(post["corrections"]),
-            "content_chars": len(content),
-            "failed": False,
-            "error": None,
-        },
     }
+
+
+def _classify_default(_corrected: str, _exc: Exception) -> Dict:
+    return {
+        "document_type": "unknown",
+        "doc_confidence": 0.0,
+        "keywords_found": [],
+        "secondary_types": [],
+        "urgency": "routine",
+        "urgency_confidence": 0.5,
+    }
+
+
+def _entities(corrected: str) -> Dict:
+    return extract_medical_entities(corrected)
+
+
+def _entities_default(_corrected: str, _exc: Exception) -> Dict:
+    return {"medications": [], "conditions": [], "procedures": [], "measurements": []}
+
+
+def _deid(final_text: str) -> Dict:
+    # north_star de-identification: masked text + PII spans against the
+    # newline-intact final text (same reference frame as the extractor)
+    return deidentify(final_text)
+
+
+def _deid_default(final_text: str, _exc: Exception) -> Dict:
+    return {"masked_text": final_text, "spans": []}
+
+
+class Stage(NamedTuple):
+    """One stage of the per-turn chain.
+
+    ``run`` maps the ``source`` value (the turn text for core, else the
+    named core output) to the stage's output; ``default(value, exc)`` is the
+    output when ``run`` raises. ``fields`` says where the output lands in
+    the result: a tuple names the result or ``metrics`` leaves the output
+    dict carries; a string names the one result field the whole output
+    fills.
+    """
+
+    name: str
+    source: str
+    fields: Union[str, Tuple[str, ...]]
+    run: Callable[[str], Dict]
+    default: Callable[[str, Exception], Dict]
+
+
+STAGES = (
+    Stage(
+        "core",
+        "text",
+        (
+            "payload_kind",
+            "content",
+            "final_text",
+            "corrected_text",
+            "corrections",
+            "matched_drugs",
+            "matched_diseases",
+            "blocks_kept",
+            "blocks_dropped",
+            "n_corrections",
+            "content_chars",
+            "failed",
+            "error",
+        ),
+        _core,
+        _core_default,
+    ),
+    Stage(
+        "segments",
+        "content",
+        ("segments", "n_segments"),
+        _segments,
+        _segments_default,
+    ),
+    Stage("fields", "final_text", "extracted", _fields, _fields_default),
+    Stage(
+        "classify",
+        "corrected_text",
+        (
+            "document_type",
+            "doc_confidence",
+            "keywords_found",
+            "secondary_types",
+            "urgency",
+            "urgency_confidence",
+        ),
+        _classify,
+        _classify_default,
+    ),
+    Stage("entities", "corrected_text", "entities", _entities, _entities_default),
+    Stage("deid", "final_text", "deid", _deid, _deid_default),
+)
+
+METRIC_FIELDS = (
+    "blocks_kept",
+    "blocks_dropped",
+    "n_segments",
+    "n_corrections",
+    "content_chars",
+    "failed",
+    "error",
+)
+
+
+def run_stage(stage: Stage, value: Optional[str]) -> Dict:
+    """One stage on one value, isolated: a raising stage yields its
+    default and the turn is never lost (``app/api.py:215-293``)."""
+    value = value if isinstance(value, str) else ""
+    try:
+        return stage.run(value)
+    except Exception as exc:
+        return stage.default(value, exc)
+
+
+def assemble(outputs: Sequence[Dict]) -> Dict:
+    """Stage outputs, in ``STAGES`` order → the result dict."""
+    row: Dict = {}
+    for stage, out in zip(STAGES, outputs):
+        if isinstance(stage.fields, str):
+            row[stage.fields] = out
+        else:
+            row.update((name, out[name]) for name in stage.fields)
+    row["metrics"] = {name: row.pop(name) for name in METRIC_FIELDS}
+    return row
+
+
+def extract_turn(text: Optional[str]) -> Dict:
+    """Full canonical per-turn extraction. Returns the dict form of
+    ``schema.EXTRACTION_RESULT_TYPE``."""
+    core = run_stage(STAGES[0], text)
+    return assemble([core] + [run_stage(s, core[s.source]) for s in STAGES[1:]])

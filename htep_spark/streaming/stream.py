@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.extract import extract_turn_udf
+from ..operators.extract import extract_transcripts
 
 __all__ = [
     "stream_extraction",
@@ -80,13 +80,9 @@ def stream_interval_join(
 
 
 def stream_extraction(stream_df: DataFrame) -> DataFrame:
-    """streaming transcripts → streaming extraction results (stateless)."""
-    return stream_df.select(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        extract_turn_udf(F.col("text")).alias("result"),
-    )
+    """streaming transcripts → streaming extraction results (stateless),
+    through the batch trunk: same stage UDFs, same per-stage fallback."""
+    return extract_transcripts(stream_df).select("conv_id", "turn_idx", "ts", "result")
 
 
 def stream_dedup_turns(

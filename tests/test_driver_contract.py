@@ -213,3 +213,32 @@ def test_beam_replace_branches_nonvacuous():
         f"SELECT count(*) FROM ({q}) WHERE replacement_applied = 1"
     ).fetchone()[0]
     assert applied > 0
+
+
+def test_conv_rollup_keeps_64bit_doc_ids(spark, tmp_path):
+    """``conv_rollup`` orders a source's documents by the 64-bit doc_id and
+    never narrows it to int: ids past 2^32 (ANSI mode would raise
+    CAST_OVERFLOW on an int cast) give the same rows as small ids. The
+    offset is a multiple of the clinical-prelude count, so every document
+    keeps its prelude."""
+    from htep_spark.driver_queries import CLINICAL_SNIPPETS
+
+    texts = [
+        "Patient Name : Jane Doe\nDoctor : Dr. Adams",
+        "Hospital : St Mary Medical Center",
+        "Rx: aspirin daily, follow up in 2 weeks",
+        "no clinical content here",
+    ]
+    docs = [(i, texts[i % len(texts)], f"src-{i % 3}") for i in range(24)]
+    offset = len(CLINICAL_SNIPPETS) * 2**32
+
+    def rollup(base):
+        sf_dir = tmp_path / f"ids-{base}"
+        spark.createDataFrame(
+            [(base + i, text, src) for i, text, src in docs],
+            "doc_id long, text string, source string",
+        ).write.parquet(str(sf_dir / "documents.parquet"))
+        rows = entrymod._conv_rollup(spark, str(sf_dir)).collect()
+        return sorted(tuple(r) for r in rows)
+
+    assert rollup(offset) == rollup(0)

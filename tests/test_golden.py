@@ -57,22 +57,44 @@ def test_payload_variants_extract_same_fields():
         }
 
 
-def test_golden_corpus_through_spark(spark):
-    """Every golden case must round-trip identically through the Spark UDF
-    (not just the oracle function) — payload variants included."""
+def _via_extract_turn_udf(df):
     from pyspark.sql import functions as F
 
     from htep_spark.operators.extract import extract_turn_udf
 
+    return df.select("case_id", extract_turn_udf(F.col("text")).alias("result"))
+
+
+def _via_run_extraction(df):
+    from pyspark.sql import functions as F
+
+    from htep_spark.plans.pipeline import run_extraction
+
+    transcripts = df.select(
+        F.col("case_id").alias("conv_id"),
+        F.lit(0).alias("turn_idx"),
+        F.lit("user").alias("role"),
+        "text",
+        F.lit(None).cast("timestamp").alias("ts"),
+    )
+    return run_extraction(transcripts).select(
+        F.col("conv_id").alias("case_id"), "result"
+    )
+
+
+@pytest.mark.parametrize(
+    "path",
+    [_via_extract_turn_udf, _via_run_extraction],
+    ids=["extract_turn_udf", "run_extraction"],
+)
+def test_golden_corpus_through_spark(spark, path):
+    """Every golden case must round-trip identically through Spark (not
+    just the oracle function) — payload variants included — on both the
+    one-crossing SQL UDF and the stage-split production path."""
     df = spark.createDataFrame(
         [(g["case_id"], g["text"]) for g in _GOLDEN], ["case_id", "text"]
     )
-    rows = {
-        r["case_id"]: r["result"]
-        for r in df.select(
-            "case_id", extract_turn_udf(F.col("text")).alias("result")
-        ).collect()
-    }
+    rows = {r["case_id"]: r["result"] for r in path(df).collect()}
 
     import math
 

@@ -539,11 +539,10 @@ def test_stage_udf_pruning(spark):
     """Round-7 split-UDF surface (guide §4.1): consumers that read only a
     slice of the extraction struct must NOT evaluate the stage UDFs for the
     fields they never touch. conv_metrics reads core-group fields only →
-    exactly one ArrowEvalPython (extract_core_udf); the flagship slice
+    exactly one ArrowEvalPython (extract_core_udf); the flagship surface
     (document_type/urgency/matched/corrected/n_segments) must drop the
     fields/entities/deid kernels; the full struct runs every group."""
-    from pyspark.sql import functions as F
-
+    import __spark_entry__ as entrymod
     from htep_spark.plans.pipeline import per_conversation_metrics, run_extraction
     from htep_spark.sources.io import synthesize_transcripts
 
@@ -558,15 +557,7 @@ def test_stage_udf_pruning(spark):
     cm = udf_names(per_conversation_metrics(run_extraction(tr)))
     assert cm == {"extract_core_udf"}, cm
 
-    flagship_slice = run_extraction(tr).select(
-        "conv_id",
-        "result.document_type",
-        "result.urgency",
-        F.array_join(F.array_sort("result.matched_drugs"), "|").alias("d"),
-        "result.corrected_text",
-        F.col("result.metrics.n_segments"),
-    )
-    fl = udf_names(flagship_slice)
+    fl = udf_names(entrymod.entry(spark))  # the flagship at sf0.001
     assert fl == {"extract_core_udf", "classify_udf", "segments_udf"}, fl
 
     full = udf_names(run_extraction(tr))

@@ -290,3 +290,80 @@ def test_checkpoint_crash_between_data_and_manifest(spark, transcripts_pdf, tmp_
         spark.read.parquet(manifest_dir).filter("status='done'").count()
         == first["processed"]
     )
+
+
+# stage → the kernel its ``run`` calls through the ``reference`` module
+_STAGE_KERNELS = {
+    "core": "postprocess",
+    "segments": "segment_document",
+    "fields": "extract_record",
+    "classify": "classify_document",
+    "entities": "extract_medical_entities",
+    "deid": "deidentify",
+}
+
+
+@pytest.mark.parametrize("failing", list(_STAGE_KERNELS))
+def test_stage_failure_parity(monkeypatch, failing):
+    """One failure model: with one stage's kernel raising, ``extract_turn``
+    equals the row assembled from the stage UDFs (their Python functions,
+    called in-process the way ``extract_transcripts`` chains them); the
+    failed stage alone takes its default, and only a core failure sets
+    ``metrics.failed``."""
+    import json
+
+    import pandas as pd
+
+    from htep_spark import reference
+    from htep_spark.operators import extract as ops
+
+    golden = json.load(
+        open(os.path.join(os.path.dirname(__file__), "fixtures", "golden.json"))
+    )
+    # a discharge summary every stage has work on: fields, entities, PII
+    text = next(g["text"] for g in golden if g["case_id"] == "gt-0")
+    clean = reference.extract_turn(text)
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("injected")
+
+    monkeypatch.setattr(reference, _STAGE_KERNELS[failing], boom)
+    got = reference.extract_turn(text)
+
+    udfs = {
+        "core": ops.extract_core_udf,
+        "segments": ops.segments_udf,
+        "fields": ops.fields_udf,
+        "classify": ops.classify_udf,
+        "entities": ops.entities_udf,
+        "deid": ops.deid_udf,
+    }
+
+    def stage_row(stage, value):
+        return udfs[stage.name].func(pd.Series([value])).iloc[0].to_dict()
+
+    core = stage_row(reference.STAGES[0], text)
+    outputs = [core] + [stage_row(s, core[s.source]) for s in reference.STAGES[1:]]
+    assert _normalize(reference.assemble(outputs)) == _normalize(got)
+
+    def flat(row):
+        return {**{k: v for k, v in row.items() if k != "metrics"}, **row["metrics"]}
+
+    def owned(stage, row):
+        if isinstance(stage.fields, str):
+            return row[stage.fields]
+        return {name: flat(row)[name] for name in stage.fields}
+
+    stage = next(s for s in reference.STAGES if s.name == failing)
+    value = text if failing == "core" else clean[stage.source]
+    default = stage.default(value, RuntimeError("injected"))
+    assert owned(stage, got) == default
+    assert owned(stage, clean) != default  # the injected kernel had work
+    assert got["metrics"]["failed"] is (failing == "core")
+    if failing == "core":
+        assert got["metrics"]["error"] == "RuntimeError: injected"
+    else:
+        # every other stage is untouched
+        for other in reference.STAGES:
+            if other is not stage:
+                assert owned(other, got) == owned(other, clean), other.name
