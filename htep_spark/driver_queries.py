@@ -381,14 +381,6 @@ FROM scored
 # C1 — document-type classification (src/nlp/classifier.py:130-200)
 # --------------------------------------------------------------------------
 
-def _type_score_col(low, text_col, doc_type: str):
-    data = DOCUMENT_PATTERNS[doc_type]
-    score = _hits_col(low, data["keywords"])
-    for p in data["patterns"]:
-        score = score + F.regexp_count(text_col, F.lit(f"(?i){p}")) * 2
-    return score
-
-
 def _type_score_sql(text_expr: str, doc_type: str) -> str:
     data = DOCUMENT_PATTERNS[doc_type]
     kw = _hits_sql(text_expr, data["keywords"])
@@ -515,8 +507,6 @@ SQL_CLASSIFY = _classify_sql()
 # max-urgency / distinct-doc-type semantics get a hash-checked driver row
 # (the kernel-input variant stays rows-only as `conv_rollup`).
 # --------------------------------------------------------------------------
-
-_URGENCY_RANK_CASES = [("urgent", 2), ("high", 1)]
 
 
 def q_conv_class_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6004,64 +5994,6 @@ FROM documents d LEFT JOIN per p USING (doc_id)
 
 
 # --------------------------------------------------------------------------
-# Event-type Markov transition matrix (`event_transitions`): classic
-# behavioral analytics over the events stream — per-user event sequences
-# ordered by (ts, event_id), adjacent (src -> dst) transition counts, and
-# row-normalized transition probabilities. Complements `sessionize` /
-# `events_hourly` (volume surfaces) with the SEQUENCE structure.
-#
-# Scale shape: one hash exchange on user_id for the lead() window (a
-# PARTITIONED window — per-user sequences, never single-partition), one
-# map-side-combinable (src, dst) count, per-src totals re-aggregated from
-# the count table (|types|^2 rows — never a second corpus pass) and
-# broadcast back. Probability = round(cnt/total, 6) — identical integer
-# inputs both engines; the pytest asserts every value clears the 6dp
-# rounding boundary (a power-of-two denominator CAN land exactly on .5e-6,
-# where engines' rounding modes could diverge).
-# --------------------------------------------------------------------------
-
-
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir).select("user_id", "event_type", "ts", "event_id")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = (
-        ev.withColumn("dst", F.lead("event_type").over(w))
-        .filter(F.col("dst").isNotNull())
-        .select(F.col("event_type").alias("src"), "dst")
-    )
-    cnt = trans.groupBy("src", "dst").agg(F.count("*").alias("n"))
-    totals = cnt.groupBy("src").agg(F.sum("n").alias("total"))
-    return (
-        cnt.join(F.broadcast(totals), "src")
-        .select(
-            "src",
-            "dst",
-            F.col("n").cast("long").alias("n"),
-            F.round(F.col("n") / F.col("total"), 6).alias("p"),
-        )
-    )
-
-
-def _sql_event_transitions() -> str:
-    return """
-WITH trans AS (
-  SELECT event_type AS src,
-         lead(event_type) OVER (
-             PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM events
-), cnt AS (
-  SELECT src, dst, CAST(count(*) AS BIGINT) AS n
-  FROM trans WHERE dst IS NOT NULL GROUP BY src, dst
-), totals AS (
-  SELECT src, sum(n) AS total FROM cnt GROUP BY src
-)
-SELECT c.src, c.dst, c.n,
-       round(CAST(c.n AS DOUBLE) / CAST(t.total AS DOUBLE), 6) AS p
-FROM cnt c JOIN totals t USING (src)
-"""
-
-
-# --------------------------------------------------------------------------
 # Train/val/test split leakage audit (`split_leakage`): the pre-training
 # hygiene check a pipeline runs AFTER splitting — deterministic md5-bucket
 # split (8/1/1), then for every held-out doc: how many of its distinct
@@ -6469,114 +6401,6 @@ FROM toked tk JOIN final f USING (doc_id) LEFT JOIN best b USING (doc_id)
 
 
 # --------------------------------------------------------------------------
-# PMI bigram collocations (`pmi_bigrams`): corpus-level association mining
-# (Church & Hanks 1990) — the statistical complement to the frequency-only
-# `top_ngrams` surface. PMI(w1, w2) = ln(c12 * N / (cl(w1) * cr(w2))) over
-# bigram events, with POSITIONAL marginals (cl = count of bigrams whose
-# first word is w1, cr = second-word marginal) so the probabilities sum to
-# one on each axis; a min-count floor suppresses the rare-pair PMI
-# explosion, and the top-K cut ranks by the 6dp-rounded score (both
-# engines round the same libm ln, the dsir/gumbel margin discipline).
-#
-# Scale shape: one narrow zip_with bigram construction (no per-doc window
-# — contrast q_lm_score, which needs positions), one (w1, w2) hash agg
-# (map-side combinable), two tiny marginal re-aggregations OF THE COUNT
-# TABLE (never a second corpus scan), a broadcast 1-row total, and the
-# range-partitioned `exact_global_rank` cut — no single-partition window
-# anywhere. All numerators are cast to double BEFORE multiplying: c12 * N
-# overflows bigint at ~1e12-token corpora.
-# --------------------------------------------------------------------------
-
-PMI_MIN_COUNT = 5  # bigram count floor (kills the rare-pair PMI explosion)
-PMI_TOP_K = 50
-
-
-def q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import exact_global_rank
-
-    docs = _docs(spark, sf_dir)
-    toked = token_barrier(
-        docs,
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0),
-    )
-    n1 = F.size("t") - 1
-    bg_arr = F.when(
-        F.size("t") >= 2,
-        F.zip_with(
-            F.slice("t", F.lit(1), n1),
-            F.slice("t", F.lit(2), n1),
-            lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
-    bg = toked.select(F.explode(bg_arr).alias("b")).select("b.w1", "b.w2")
-    cb = bg.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-    cl = cb.groupBy("w1").agg(F.sum("c12").alias("cl"))
-    cr = cb.groupBy("w2").agg(F.sum("c12").alias("cr"))
-    nb = cb.agg(F.sum("c12").alias("nb"))  # 1 row, broadcast below
-    scored = (
-        cb.filter(F.col("c12") >= PMI_MIN_COUNT)
-        .join(cl, "w1")
-        .join(cr, "w2")
-        .crossJoin(F.broadcast(nb))
-        .withColumn(
-            "pmi",
-            F.round(
-                F.log(
-                    (F.col("c12").cast("double") * F.col("nb").cast("double"))
-                    / (F.col("cl").cast("double") * F.col("cr").cast("double"))
-                ),
-                6,
-            ),
-        )
-    )
-    ranked = exact_global_rank(
-        scored.withColumn("np", -F.col("pmi")), "np", tie_cols=("w1", "w2")
-    )
-    return (
-        ranked.filter(F.col("global_rank") <= PMI_TOP_K)
-        .select(
-            "w1",
-            "w2",
-            F.col("c12").cast("long").alias("c12"),
-            F.col("cl").cast("long").alias("cl"),
-            F.col("cr").cast("long").alias("cr"),
-            "pmi",
-            F.col("global_rank").cast("long").alias("rank"),
-        )
-    )
-
-
-def _sql_pmi_bigrams() -> str:
-    return f"""
-WITH toked AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '{_TOKEN_PATTERN}') AS t
-  FROM documents
-), bg AS (
-  SELECT t[i] AS w1, t[i + 1] AS w2
-  FROM (SELECT t, unnest(range(1, len(t))) AS i FROM toked)
-), cb AS (
-  SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12 FROM bg GROUP BY ALL
-), cl AS (
-  SELECT w1, CAST(sum(c12) AS BIGINT) AS cl FROM cb GROUP BY w1
-), cr AS (
-  SELECT w2, CAST(sum(c12) AS BIGINT) AS cr FROM cb GROUP BY w2
-), nb AS (
-  SELECT CAST(sum(c12) AS BIGINT) AS nb FROM cb
-), scored AS (
-  SELECT w1, w2, c12, cl, cr,
-         round(ln((CAST(c12 AS DOUBLE) * CAST(nb AS DOUBLE))
-                  / (CAST(cl AS DOUBLE) * CAST(cr AS DOUBLE))), 6) AS pmi
-  FROM cb JOIN cl USING (w1) JOIN cr USING (w2) CROSS JOIN nb
-  WHERE c12 >= {PMI_MIN_COUNT}
-)
-SELECT w1, w2, c12, cl, cr, pmi, CAST(rn AS BIGINT) AS rank
-FROM (SELECT *, row_number() OVER (ORDER BY pmi DESC, w1, w2) AS rn
-      FROM scored)
-WHERE rn <= {PMI_TOP_K}
-"""
-
-
-# --------------------------------------------------------------------------
 # Robots.txt path filtering (`robots_filter`): the compliance gate between
 # the frontier and the fetcher — per-domain Disallow prefix rules applied
 # to canonical paths (RFC 9309 longest-practice reduced to its
@@ -6695,81 +6519,6 @@ FROM verdict v JOIN dom d USING (domain)
 
 
 # --------------------------------------------------------------------------
-# Crawl frontier scheduling (`crawl_frontier`): what a crawler actually
-# DOES with `pagerank` and `url_domains` — order the fetch queue by host
-# authority while respecting per-host politeness (one request per
-# POLITENESS_DELAY_S per registrable domain; the Mercator/Heritrix
-# frontier discipline). Each URL gets its in-domain slot (row_number in a
-# PARTITIONED window ordered by doc_id — per-domain queues, never a
-# global sort), a scheduled fetch offset slot * delay, and the domain's
-# makespan rides along from the already-audited per-domain rollup. The
-# host score joins in from the pagerank table via the domain -> node map
-# (both composed operators are independently hash-verified; this checks
-# their COMPOSITION, the web_funnel discipline).
-#
-# Scale shape: url normalization is a projection; pagerank's node table
-# is tiny and broadcast; the only corpus-width work is one hash exchange
-# on domain for the per-domain window — exactly the partitioning a real
-# frontier shards by (host), so the skew story is the crawl's own skew
-# story (domain_quota is the cap for that).
-# --------------------------------------------------------------------------
-
-POLITENESS_DELAY_S = 5  # per-domain fetch spacing
-
-
-def q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    u = q_url_domains(spark, sf_dir).select(
-        "doc_id", "domain", "domain_docs"
-    )
-    p = q_pagerank(spark, sf_dir).select("node", "pr")
-    node = (
-        F.regexp_extract(F.col("domain"), r"^site([0-9]+)\.", 1).cast("long")
-        % PR_N_NODES
-    )
-    w = Window.partitionBy("domain").orderBy("doc_id")
-    return (
-        u.withColumn("node", node)
-        .join(F.broadcast(p), "node")
-        .withColumn("slot", (F.row_number().over(w) - 1).cast("long"))
-        .select(
-            "doc_id",
-            "domain",
-            "node",
-            "pr",
-            "slot",
-            (F.col("slot") * POLITENESS_DELAY_S).cast("long").alias("sched_s"),
-            F.col("domain_docs").cast("long").alias("dom_docs"),
-            ((F.col("domain_docs") - 1) * POLITENESS_DELAY_S)
-            .cast("long")
-            .alias("makespan_s"),
-        )
-    )
-
-
-def _sql_crawl_frontier() -> str:
-    return f"""
-WITH u AS ({_sql_url_domains()}), p AS ({_sql_pagerank()}),
-j AS (
-  SELECT u.doc_id, u.domain, u.domain_docs,
-         (CAST(regexp_extract(u.domain, '^site([0-9]+)\\.', 1) AS BIGINT)
-          % {PR_N_NODES}) AS node
-  FROM u
-), sl AS (
-  SELECT j.*, p.pr,
-         CAST(row_number() OVER (PARTITION BY j.domain ORDER BY j.doc_id)
-              - 1 AS BIGINT) AS slot
-  FROM j JOIN p USING (node)
-)
-SELECT doc_id, domain, node, pr, slot,
-       CAST(slot * {POLITENESS_DELAY_S} AS BIGINT) AS sched_s,
-       CAST(domain_docs AS BIGINT) AS dom_docs,
-       CAST((domain_docs - 1) * {POLITENESS_DELAY_S} AS BIGINT)
-         AS makespan_s
-FROM sl
-"""
-
-
-# --------------------------------------------------------------------------
 # Mojibake repair (`mojibake_fix`): the encoding-hygiene pass every web
 # corpus needs before tokenization — UTF-8 text that was decoded as
 # Latin-1 and re-encoded ("CafÃ©" for "Café", "â€™" for "'") is the most
@@ -6873,529 +6622,6 @@ SELECT doc_id, n_moji,
        CAST(CASE WHEN md5(fixed) <> md5(ctext) THEN 1 ELSE 0 END
             AS BIGINT) AS changed
 FROM rep
-"""
-
-
-# --------------------------------------------------------------------------
-# Two-sample Kolmogorov-Smirnov drift (`ks_drift`): the distribution-shift
-# monitor a production corpus pipeline runs between snapshots / sources /
-# time slices — here between a deterministic md5 half-split of the corpus
-# over the per-doc token-count distribution. KS = max_v |F_A(v) - F_B(v)|
-# over the merged support. The statistic is computed in EXACT INTEGER
-# arithmetic: the scaled CDF difference cum_a*tb - cum_b*ta is a BIGINT
-# (zero float drift in the argmax — the engines cannot disagree on WHICH
-# value attains the supremum), and doubles appear only in the final
-# 6dp-rounded ratio columns.
-#
-# Scale shape: one token-linear projection, one map-side-combinable agg to
-# the (value, n_a, n_b) table — bounded by the value domain, NOT the
-# corpus — then `exact_global_cumsum` twice over that bounded table
-# (range-partitioned prefix sums; no single-partition window, the
-# seq_pack discipline), a 1-row totals/argmax aggregate cross-joined
-# back. At 100 TB the per-value table is |distinct token counts| rows;
-# everything downstream of the first agg is summary-sized.
-# --------------------------------------------------------------------------
-
-
-def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import exact_global_cumsum
-
-    split = _md5_bucket_spark(F.concat_ws("|", F.lit("ks"), F.col("doc_id")), 2)
-    toks = F.size(
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0)
-    )
-    pv = (
-        _docs(spark, sf_dir)
-        .select(split.alias("b"), toks.cast("long").alias("v"))
-        .groupBy("v")
-        .agg(
-            F.sum(F.when(F.col("b") == 0, 1).otherwise(0)).alias("n_a"),
-            F.sum(F.when(F.col("b") == 1, 1).otherwise(0)).alias("n_b"),
-        )
-    )
-    c1 = exact_global_cumsum(pv, "v", "n_a").withColumnsRenamed(
-        {"cum_before": "cba", "global_total": "ta"}
-    )
-    c2 = exact_global_cumsum(c1, "v", "n_b").withColumnsRenamed(
-        {"cum_before": "cbb", "global_total": "tb"}
-    )
-    sc = c2.select(
-        "v",
-        "n_a",
-        "n_b",
-        (F.col("cba") + F.col("n_a")).alias("cum_a"),
-        (F.col("cbb") + F.col("n_b")).alias("cum_b"),
-        "ta",
-        "tb",
-    ).withColumn(
-        "dsc", F.col("cum_a") * F.col("tb") - F.col("cum_b") * F.col("ta")
-    )
-    ks = sc.agg(F.max(F.abs(F.col("dsc"))).alias("kss"))
-    denom = (F.col("ta") * F.col("tb")).cast("double")
-    return sc.crossJoin(F.broadcast(ks)).select(
-        "v",
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
-        F.col("cum_a").cast("long").alias("cum_a"),
-        F.col("cum_b").cast("long").alias("cum_b"),
-        F.round(F.col("cum_a") / F.col("ta"), 6).alias("cdf_a"),
-        F.round(F.col("cum_b") / F.col("tb"), 6).alias("cdf_b"),
-        F.round(F.abs(F.col("dsc")) / denom, 6).alias("adiff"),
-        (F.abs(F.col("dsc")) == F.col("kss")).cast("long").alias("is_ks"),
-        F.round(F.col("kss") / denom, 6).alias("ks_stat"),
-    )
-
-
-def _sql_ks_drift() -> str:
-    b = _md5_bucket_sql("'ks' || '|' || CAST(doc_id AS VARCHAR)", 2)
-    return f"""
-WITH lab AS (
-  SELECT {b} AS b,
-         CAST(len(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
-              AS BIGINT) AS v
-  FROM documents
-), pv AS (
-  SELECT v,
-         CAST(sum(CASE WHEN b = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-         CAST(sum(CASE WHEN b = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b
-  FROM lab GROUP BY v
-), cum AS (
-  SELECT v, n_a, n_b,
-         CAST(sum(n_a) OVER (ORDER BY v) AS BIGINT) AS cum_a,
-         CAST(sum(n_b) OVER (ORDER BY v) AS BIGINT) AS cum_b
-  FROM pv
-), tot AS (
-  SELECT CAST(sum(n_a) AS BIGINT) AS ta, CAST(sum(n_b) AS BIGINT) AS tb
-  FROM pv
-), sc AS (
-  SELECT cum.*, ta, tb, cum_a * tb - cum_b * ta AS dsc
-  FROM cum CROSS JOIN tot
-), ks AS (
-  SELECT max(abs(dsc)) AS kss FROM sc
-)
-SELECT v, n_a, n_b, cum_a, cum_b,
-       round(CAST(cum_a AS DOUBLE) / ta, 6) AS cdf_a,
-       round(CAST(cum_b AS DOUBLE) / tb, 6) AS cdf_b,
-       round(CAST(abs(dsc) AS DOUBLE) / (CAST(ta AS DOUBLE) * tb), 6)
-         AS adiff,
-       CAST(CASE WHEN abs(dsc) = kss THEN 1 ELSE 0 END AS BIGINT) AS is_ks,
-       round(CAST(kss AS DOUBLE) / (CAST(ta AS DOUBLE) * tb), 6) AS ks_stat
-FROM sc CROSS JOIN ks
-"""
-
-
-# --------------------------------------------------------------------------
-# Mergeable HyperLogLog (`hll_merge`): the property that makes sketches
-# work at 100 TB is not the estimate — it's MERGEABILITY (register-wise
-# max is associative/commutative/idempotent, so per-shard sketches
-# combine map-side with no error compounding; Flajolet et al. 2007 §4).
-# `approx_distinct` verified the estimator; this verifies the merge:
-# per-source-group register tables (src_num % HLL_MERGE_GROUPS), the
-# MERGED sketch (max over group registers per bucket), and the DIRECT
-# global sketch (one pass over all tokens) — emitted side by side with
-# serialized register arrays, so the driver hash certifies, and the
-# pytest asserts, that merged == direct byte-for-byte (the lossless-merge
-# theorem) on BOTH engines. Per-scope exact distinct counts ride along
-# for the honesty check.
-#
-# Scale shape: one token-linear pass to (group, bucket) registers — a
-# map-side-combinable max agg to GROUPS×m rows — then the merge is an agg
-# over those fixed-size summaries, never a second corpus pass. The
-# register fold runs in pinned bucket order (sorted list aggregation), so
-# the double sum is bitwise identical in both engines.
-# --------------------------------------------------------------------------
-
-HLL_MERGE_GROUPS = 4
-_HLL_MERGED_ID = 98  # grp sentinel: merged-from-groups sketch
-_HLL_GLOBAL_ID = 99  # grp sentinel: direct one-pass global sketch
-
-
-def q_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.hashing import md5_prefix60_spark
-
-    m = HLL_M
-    toks = _docs(spark, sf_dir).select(
-        (F.substring(F.col("source"), 4, 10).cast("long") % HLL_MERGE_GROUPS)
-        .alias("g"),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0)
-        ).alias("token"),
-    )
-    h = md5_prefix60_spark(F.col("token"))
-    rest = F.shiftrightunsigned(h, 6)
-    bitlen = F.length(F.conv(rest.cast("string"), 10, 2))
-    rho = F.when(rest == 0, F.lit(55)).otherwise(55 - bitlen)
-    hb = toks.select(
-        "g", F.pmod(h, F.lit(m)).alias("bucket"), rho.alias("rho"), "token"
-    )
-    gregs = hb.groupBy("g", "bucket").agg(F.max("rho").alias("reg"))
-    mregs = (
-        gregs.groupBy("bucket")
-        .agg(F.max("reg").alias("reg"))
-        .select(F.lit(_HLL_MERGED_ID).cast("long").alias("g"), "bucket", "reg")
-    )
-    dregs = (
-        hb.groupBy("bucket")
-        .agg(F.max("rho").alias("reg"))
-        .select(F.lit(_HLL_GLOBAL_ID).cast("long").alias("g"), "bucket", "reg")
-    )
-    allr = gregs.select("g", "bucket", "reg").union(mregs).union(dregs)
-    folded = allr.groupBy("g").agg(
-        F.sort_array(F.collect_list(F.struct("bucket", "reg"))).alias("rs")
-    ).select(
-        "g",
-        F.aggregate(
-            F.col("rs"), F.lit(0.0), lambda acc, x: acc + F.pow(2.0, -x["reg"])
-        ).alias("present_sum"),
-        F.size("rs").cast("long").alias("n_present"),
-        F.array_join(
-            F.transform(
-                F.col("rs"),
-                lambda x: F.concat(
-                    x["bucket"].cast("string"), F.lit(":"), x["reg"].cast("string")
-                ),
-            ),
-            "|",
-        ).alias("regs"),
-    )
-    gexact = toks.groupBy("g").agg(F.count_distinct("token").alias("n_exact"))
-    glob = toks.agg(F.count_distinct("token").alias("n_exact"))
-    exact = gexact.union(
-        glob.select(F.lit(_HLL_MERGED_ID).cast("long").alias("g"), "n_exact")
-    ).union(glob.select(F.lit(_HLL_GLOBAL_ID).cast("long").alias("g"), "n_exact"))
-    raw_est = F.lit(_HLL_ALPHA * m * m) / (
-        F.col("present_sum") + (F.lit(m) - F.col("n_present"))
-    )
-    zeros = (F.lit(m) - F.col("n_present")).cast("double")
-    est = F.when(
-        (raw_est <= 2.5 * m) & (zeros > 0),
-        F.lit(float(m)) * F.log(F.lit(float(m)) / zeros),
-    ).otherwise(raw_est)
-    return folded.join(exact, "g").select(
-        F.col("g").alias("grp"),
-        "n_present",
-        "regs",
-        F.round(est, 6).alias("est"),
-        F.col("n_exact").cast("long").alias("n_exact"),
-    )
-
-
-def _sql_hll_merge() -> str:
-    from .functions.hashing import md5_prefix60_sql
-
-    h = md5_prefix60_sql("token")
-    m = HLL_M
-    return f"""
-WITH toks AS (
-  SELECT (CAST(substr(source, 4) AS BIGINT) % {HLL_MERGE_GROUPS}) AS g,
-         unnest(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}')) AS token
-  FROM documents
-), hashed AS (
-  SELECT g, token, ({h}) % {m} AS bucket,
-         CASE WHEN ({h}) >> 6 = 0 THEN 55
-              ELSE 55 - length(bin(({h}) >> 6)) END AS rho
-  FROM toks
-), gregs AS (
-  SELECT g, bucket, max(rho) AS reg FROM hashed GROUP BY g, bucket
-), allr AS (
-  SELECT g, bucket, reg FROM gregs
-  UNION ALL
-  SELECT {_HLL_MERGED_ID} AS g, bucket, max(reg) FROM gregs GROUP BY bucket
-  UNION ALL
-  SELECT {_HLL_GLOBAL_ID} AS g, bucket, max(rho) FROM hashed GROUP BY bucket
-), folded AS (
-  SELECT g,
-         list_sum(list(pow(2.0, -reg) ORDER BY bucket)) AS present_sum,
-         CAST(count(*) AS BIGINT) AS n_present,
-         string_agg(bucket || ':' || reg, '|' ORDER BY bucket) AS regs
-  FROM allr GROUP BY g
-), exact AS (
-  SELECT g, count(DISTINCT token) AS n_exact FROM toks GROUP BY g
-  UNION ALL
-  SELECT {_HLL_MERGED_ID}, count(DISTINCT token) FROM toks
-  UNION ALL
-  SELECT {_HLL_GLOBAL_ID}, count(DISTINCT token) FROM toks
-), est AS (
-  SELECT g, n_present, regs,
-         CASE
-           WHEN ({_HLL_ALPHA} * {m} * {m})
-                / (present_sum + ({m} - n_present)) <= 2.5 * {m}
-                AND ({m} - n_present) > 0
-           THEN {m} * ln({m} / CAST({m} - n_present AS DOUBLE))
-           ELSE ({_HLL_ALPHA} * {m} * {m})
-                / (present_sum + ({m} - n_present))
-         END AS e
-  FROM folded
-)
-SELECT est.g AS grp, est.n_present, est.regs, round(est.e, 6) AS est,
-       CAST(exact.n_exact AS BIGINT) AS n_exact
-FROM est JOIN exact ON exact.g = est.g
-"""
-
-
-# --------------------------------------------------------------------------
-# Ordered conversion funnel (`event_funnel`): the classic product-analytics
-# sequence query over the events stream — per user, the first signup, then
-# the first click STRICTLY AFTER it within a conversion window, then the
-# first purchase strictly after that click within the same window
-# (MATCH_RECOGNIZE-lite; the sequential-dependency shape `sessionize` /
-# `event_transitions` don't cover). Stage = deepest step reached; step
-# latencies in exact integer microseconds. Every stage 1/2/3 fires at
-# sf0.001 with the 3-day window (probed; stage 0 is structurally absent —
-# step 1 is the unconditional first signup and every user signs up).
-#
-# Scale shape: three filtered scans aggregated per user (map-side
-# combinable min), each step an equi-join on user_id against the
-# MONOTONICALLY SHRINKING previous-step frame with the window predicate
-# applied at the join — never a per-user window function, never an
-# unbounded self-join (the time bound prunes candidate events before the
-# min). All arithmetic in BIGINT epoch-microseconds: exact cross-engine
-# parity, no timestamp-formatting surface.
-# --------------------------------------------------------------------------
-
-FUNNEL_STEPS = ("signup", "click", "purchase")
-FUNNEL_WINDOW_S = 3 * 86400  # per-step conversion window (probed: all
-# three stages populated at sf0.001 AND sf0.01)
-
-
-def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wu = FUNNEL_WINDOW_S * 1_000_000
-    # ts is TIMESTAMP_NTZ: unix_micros() rejects it and a cast to TIMESTAMP
-    # would inject the session timezone — timestampdiff from the NTZ epoch
-    # is the timezone-free exact-integer conversion (DuckDB epoch_us treats
-    # naive timestamps identically)
-    um = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-    )
-    ev = _events(spark, sf_dir).select("user_id", "event_type", um.alias("um"))
-    users = ev.select("user_id").distinct()
-    s1 = (
-        ev.filter(F.col("event_type") == FUNNEL_STEPS[0])
-        .groupBy("user_id")
-        .agg(F.min("um").alias("t1"))
-    )
-    s2 = (
-        ev.filter(F.col("event_type") == FUNNEL_STEPS[1])
-        .join(s1, "user_id")
-        .filter((F.col("um") > F.col("t1")) & (F.col("um") <= F.col("t1") + wu))
-        .groupBy("user_id")
-        .agg(F.min("um").alias("t2"))
-    )
-    s3 = (
-        ev.filter(F.col("event_type") == FUNNEL_STEPS[2])
-        .join(s2, "user_id")
-        .filter((F.col("um") > F.col("t2")) & (F.col("um") <= F.col("t2") + wu))
-        .groupBy("user_id")
-        .agg(F.min("um").alias("t3"))
-    )
-    stage = (
-        F.when(F.col("t3").isNotNull(), 3)
-        .when(F.col("t2").isNotNull(), 2)
-        .when(F.col("t1").isNotNull(), 1)
-        .otherwise(0)
-    )
-    return (
-        users.join(s1, "user_id", "left")
-        .join(s2, "user_id", "left")
-        .join(s3, "user_id", "left")
-        .select(
-            "user_id",
-            stage.cast("long").alias("stage"),
-            F.col("t1").cast("long").alias("t1_us"),
-            F.col("t2").cast("long").alias("t2_us"),
-            F.col("t3").cast("long").alias("t3_us"),
-            (F.col("t2") - F.col("t1")).cast("long").alias("micros_1_2"),
-            (F.col("t3") - F.col("t2")).cast("long").alias("micros_2_3"),
-        )
-    )
-
-
-def _sql_event_funnel() -> str:
-    wu = FUNNEL_WINDOW_S * 1_000_000
-    a, b, c = (_sql_quote(s) for s in FUNNEL_STEPS)
-    return f"""
-WITH s1 AS (
-  SELECT user_id, min(epoch_us(ts)) AS t1
-  FROM events WHERE event_type = {a} GROUP BY user_id
-), s2 AS (
-  SELECT e.user_id, min(epoch_us(e.ts)) AS t2
-  FROM events e JOIN s1 USING (user_id)
-  WHERE e.event_type = {b}
-    AND epoch_us(e.ts) > s1.t1 AND epoch_us(e.ts) <= s1.t1 + {wu}
-  GROUP BY e.user_id
-), s3 AS (
-  SELECT e.user_id, min(epoch_us(e.ts)) AS t3
-  FROM events e JOIN s2 USING (user_id)
-  WHERE e.event_type = {c}
-    AND epoch_us(e.ts) > s2.t2 AND epoch_us(e.ts) <= s2.t2 + {wu}
-  GROUP BY e.user_id
-)
-SELECT u.user_id,
-       CAST(CASE WHEN t3 IS NOT NULL THEN 3 WHEN t2 IS NOT NULL THEN 2
-                 WHEN t1 IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS stage,
-       CAST(t1 AS BIGINT) AS t1_us,
-       CAST(t2 AS BIGINT) AS t2_us,
-       CAST(t3 AS BIGINT) AS t3_us,
-       CAST(t2 - t1 AS BIGINT) AS micros_1_2,
-       CAST(t3 - t2 AS BIGINT) AS micros_2_3
-FROM (SELECT DISTINCT user_id FROM events) u
-LEFT JOIN s1 USING (user_id)
-LEFT JOIN s2 USING (user_id)
-LEFT JOIN s3 USING (user_id)
-"""
-
-
-# --------------------------------------------------------------------------
-# Domain link-graph PageRank (`pagerank`): the crawl-prioritization /
-# spam-demotion score every web-scale curation pipeline computes over its
-# host graph (Page et al. 1999; the CommonCrawl host-level ranking that
-# feeds URL frontier ordering and RefinedWeb-style source weighting —
-# complements `url_domains` (node hygiene) and `domain_quota` (per-node
-# caps) with the GRAPH structure between domains). The testdata has no
-# link column, so a deterministic host graph is synthesized from
-# (source, doc_id): node = src_num % PR_N_NODES, each doc emits one
-# directed edge node -> (src_num*7 + doc_id*13 + 3) % PR_N_NODES, edge
-# weight = number of emitting docs. Self-loops are dropped, and every
-# out-edge of nodes with node % 7 == PR_DANGLE_MOD is removed so the
-# dangling-mass branch (nodes with no out-edges redistribute their rank
-# uniformly) provably fires. PR_ITERS damped power iterations with
-# weighted out-degree normalization, teleport (1-d)/N.
-#
-# Scale shape: the graph tables (nodes / edges / out-weights) are derived
-# from ONE corpus scan, aggregated to at most PR_N_NODES^2 rows, and
-# pinned with eager localCheckpoint (the connected-components lineage
-# pattern) — the K iterations then join only the tiny checkpointed
-# frames, never re-scanning the corpus (plan-gated: zero FileScans in
-# the returned DataFrame). At real scale nodes/edges are |hosts|-sized,
-# each iteration is one broadcast-or-shuffle join + map-side-combinable
-# agg keyed by dst — the standard distributed PageRank shape. The
-# dangling mass and N ride 1-row cross-joined aggregates, never a
-# driver-side loop over rows.
-#
-# Cross-engine determinism: per-term arithmetic is identical; only the
-# reduce order of the <= PR_N_NODES-term contribution sums differs, and
-# the damping factor contracts accumulated float drift (error_{i+1} <=
-# d * error_i + eps), so ranks agree to ~1e-14 — far below the 6dp
-# boundary (pytest asserts every value clears the .5e-6 boundary by a
-# wide margin, the event_transitions discipline).
-# --------------------------------------------------------------------------
-
-PR_N_NODES = 24  # bounded node universe at any SF (src_num % 24)
-PR_DAMPING = 0.85
-PR_ITERS = 8
-PR_DANGLE_MOD = 3  # nodes with node % 7 == 3 lose all out-edges (dangle)
-
-
-def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    s = (src_num % PR_N_NODES).alias("src")
-    t = ((src_num * 7 + F.col("doc_id") * 13 + 3) % PR_N_NODES).alias("dst")
-    # ONE corpus pass (round 7, guide §2.4/§5): the (src, dst) universe is
-    # bounded at N^2 = 576 rows at ANY scale factor, so a single map-side-
-    # aggregated groupBy carries everything downstream (node universe,
-    # filtered edge weights). The bounded collect is the sanctioned
-    # dimension-sized class (cf. the 4096-row IVF sample / 1-row argmaxes);
-    # the 8 damped power-iteration rounds then run on the driver over <= 24
-    # values with the exact same expressions — replacing 2 extra corpus
-    # scans, 9 localCheckpoints and ~25 tiny shuffle jobs per call.
-    pairs = (
-        docs.select(s, t).groupBy("src", "dst").agg(F.count("*").alias("w"))
-    ).collect()
-    nodes = sorted({r["src"] for r in pairs} | {r["dst"] for r in pairs})
-    ew = {
-        (r["src"], r["dst"]): r["w"]
-        for r in pairs
-        if r["src"] != r["dst"] and r["src"] % 7 != PR_DANGLE_MOD
-    }
-    outw: Dict[int, int] = {}
-    n_in: Dict[int, int] = {}
-    for (u, v), w in sorted(ew.items()):
-        outw[u] = outw.get(u, 0) + w
-        n_in[v] = n_in.get(v, 0) + 1
-    frac = {(u, v): w / outw[u] for (u, v), w in ew.items()}
-    n = float(len(nodes))
-    d = PR_DAMPING
-    ranks = {nd: 1.0 / n for nd in nodes}
-    for _ in range(PR_ITERS):
-        contrib: Dict[int, float] = {}
-        for (u, v), fr in sorted(frac.items()):
-            contrib[v] = contrib.get(v, 0.0) + fr * ranks[u]
-        dm = sum(ranks[nd] for nd in nodes if nd not in outw)
-        ranks = {
-            nd: (1.0 - d) / n
-            + d * (contrib.get(nd, 0.0) + dm / n)
-            for nd in nodes
-        }
-    rows = [
-        (nd, outw.get(nd), n_in.get(nd), ranks[nd]) for nd in nodes
-    ]
-    return spark.createDataFrame(
-        rows, "node long, ow long, n_in long, r double"
-    ).select(
-        "node",
-        F.coalesce(F.col("ow"), F.lit(0)).cast("long").alias("out_weight"),
-        F.coalesce(F.col("n_in"), F.lit(0)).cast("long").alias("n_in"),
-        F.when(F.col("ow").isNull(), 1).otherwise(0).cast("long").alias(
-            "dangling"
-        ),
-        F.round(F.col("r"), 6).alias("pr"),
-    )
-
-
-def _sql_pagerank() -> str:
-    n, d = PR_N_NODES, PR_DAMPING
-    iters = []
-    for i in range(1, PR_ITERS + 1):
-        p = f"r{i - 1}"
-        iters.append(
-            f"""d{i} AS (
-  SELECT coalesce(sum(r), 0.0) AS dm FROM {p}
-  WHERE node NOT IN (SELECT src FROM outw)
-), c{i} AS (
-  SELECT e.dst AS node, sum(e.frac * p.r) AS c
-  FROM e JOIN {p} p ON p.node = e.src GROUP BY e.dst
-), r{i} AS (
-  SELECT nd.node,
-         {1.0 - d} / n + {d} * (coalesce(c.c, 0.0) + dm.dm / n) AS r
-  FROM nodes nd CROSS JOIN ncnt CROSS JOIN d{i} dm
-  LEFT JOIN c{i} c ON c.node = nd.node
-)"""
-        )
-    chain = ", ".join(iters)
-    return f"""
-WITH raw AS (
-  SELECT (CAST(substr(source, 4) AS BIGINT) % {n}) AS src,
-         ((CAST(substr(source, 4) AS BIGINT) * 7 + doc_id * 13 + 3) % {n})
-           AS dst
-  FROM documents
-), nodes AS (
-  SELECT src AS node FROM raw UNION SELECT dst FROM raw
-), ncnt AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes
-), edges AS (
-  SELECT src, dst, CAST(count(*) AS BIGINT) AS w
-  FROM raw WHERE src <> dst AND (src % 7) <> {PR_DANGLE_MOD}
-  GROUP BY src, dst
-), outw AS (
-  SELECT src, CAST(sum(w) AS BIGINT) AS ow FROM edges GROUP BY src
-), inw AS (
-  SELECT dst, CAST(count(*) AS BIGINT) AS n_in FROM edges GROUP BY dst
-), e AS (
-  SELECT src, dst, CAST(w AS DOUBLE) / ow AS frac
-  FROM edges JOIN outw USING (src)
-), r0 AS (
-  SELECT node, 1.0 / n AS r FROM nodes CROSS JOIN ncnt
-), {chain}
-SELECT nd.node,
-       CAST(coalesce(ow.ow, 0) AS BIGINT) AS out_weight,
-       CAST(coalesce(inw.n_in, 0) AS BIGINT) AS n_in,
-       CAST(CASE WHEN ow.ow IS NULL THEN 1 ELSE 0 END AS BIGINT) AS dangling,
-       round(rk.r, 6) AS pr
-FROM nodes nd
-JOIN r{PR_ITERS} rk ON rk.node = nd.node
-LEFT JOIN outw ow ON ow.src = nd.node
-LEFT JOIN inw ON inw.dst = nd.node
 """
 
 
@@ -7597,616 +6823,6 @@ FROM per p LEFT JOIN dtpl d USING (src)
 
 
 # --------------------------------------------------------------------------
-# Zipf rank-frequency fit (`zipf_fit`): the corpus-health diagnostic every
-# curation pipeline plots — natural text follows freq ∝ rank^(-s) with
-# s ≈ 1 (Zipf 1949); a slope far from -1 or a poor r² flags synthetic,
-# templated, or degenerate corpora. OLS of ln(freq) on ln(rank) over the
-# top ZIPF_TOP_K terms per SCOPE, with per-term residuals so head
-# outliers (boilerplate tokens) are visible. Two scopes make both sides
-# of the diagnostic provable: 'corpus' is the natural token stream (the
-# synthetic testdata is near-uniform — slope ≈ -0.18, r² ≈ 0.06, the
-# "templated corpus" verdict firing correctly), and 'planted' is an
-# exact power law built with the divisor trick — token zw_j is planted
-# in every doc with doc_id % j == 0, so count(zw_j) = ceil(N/j) ∝ 1/j
-# and the estimator must recover slope ≈ -1 with r² ≈ 1 (ground-truth
-# recovery, the dsir_select discipline).
-#
-# Scale shape: one token-linear count agg (map-side combinable), per-
-# scope ranking via `exact_global_rank` on (-freq, token) — range-
-# partitioned, no single-partition window — then ALL regression work
-# happens on the <= 2·ZIPF_TOP_K-row head: one small per-scope agg whose
-# five OLS sums run as pinned-order folds over the rank-sorted list (the
-# char_entropy discipline — float addition is not associative, so the
-# fold order is the contract), and the two-row fit table is broadcast
-# back onto the head rows.
-#
-# Cross-engine determinism: per-term ln() agrees to <= 1 ulp between
-# Java's Math.log and DuckDB's libm; the pinned-order sums keep the
-# accumulated drift ~1e-13, far under the 6dp boundary (margin pytest,
-# the event_transitions discipline).
-# --------------------------------------------------------------------------
-
-ZIPF_TOP_K = 200  # fit window: the head is where Zipf behavior is testable
-ZIPF_PLANT_MAX = 30  # planted family zw_1..zw_30, count(zw_j) = ceil(N/j)
-
-
-def _zipf_freq_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    planted = F.array_join(
-        F.filter(
-            F.transform(
-                F.sequence(F.lit(1), F.lit(ZIPF_PLANT_MAX)),
-                lambda j: F.when(
-                    F.col("doc_id") % j == 0,
-                    F.concat(F.lit("zw"), j.cast("string")),
-                ),
-            ),
-            lambda x: x.isNotNull(),
-        ),
-        " ",
-    )
-    ctext = F.concat_ws(" ", planted, F.col("text"))
-    return (
-        _docs(spark, sf_dir)
-        .select(
-            F.explode(
-                F.regexp_extract_all(F.lower(ctext), F.lit(_TOKEN_PATTERN), 0)
-            ).alias("token")
-        )
-        .withColumn(
-            "scope",
-            F.when(
-                F.col("token").rlike("^zw[0-9]+$"), F.lit("planted")
-            ).otherwise(F.lit("corpus")),
-        )
-        .groupBy("scope", "token")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-
-
-def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import exact_global_rank
-
-    # pinned (round 7): both per-scope rank calls re-ran the token-count
-    # corpus chain without the pin (2 corpus scans -> 1)
-    freq = (
-        _zipf_freq_spark(spark, sf_dir)
-        .withColumn("neg", -F.col("n"))
-        .localCheckpoint(eager=True)
-    )
-    tops = []
-    for scope in ("corpus", "planted"):
-        ranked = exact_global_rank(
-            freq.filter(F.col("scope") == scope), "neg", ("token",)
-        )
-        tops.append(
-            ranked.filter(F.col("global_rank") <= ZIPF_TOP_K).select(
-                "scope",
-                "token",
-                "n",
-                F.col("global_rank").alias("rank"),
-                F.col("global_count").alias("vocab_size"),
-                F.log(F.col("global_rank").cast("double")).alias("lnr"),
-                F.log(F.col("n").cast("double")).alias("lnf"),
-            )
-        )
-    top = tops[0].unionByName(tops[1])
-    lst = F.sort_array(
-        F.collect_list(F.struct(F.col("rank"), F.col("lnr"), F.col("lnf")))
-    )
-    sums = top.groupBy("scope").agg(lst.alias("l")).select(
-        "scope",
-        F.size("l").cast("double").alias("k"),
-        F.aggregate("l", F.lit(0.0), lambda a, x: a + x["lnr"]).alias("sx"),
-        F.aggregate("l", F.lit(0.0), lambda a, x: a + x["lnf"]).alias("sy"),
-        F.aggregate(
-            "l", F.lit(0.0), lambda a, x: a + x["lnr"] * x["lnr"]
-        ).alias("sxx"),
-        F.aggregate(
-            "l", F.lit(0.0), lambda a, x: a + x["lnr"] * x["lnf"]
-        ).alias("sxy"),
-        F.aggregate(
-            "l", F.lit(0.0), lambda a, x: a + x["lnf"] * x["lnf"]
-        ).alias("syy"),
-    )
-    slope = (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
-    fit = sums.withColumn("slope", slope).select(
-        "scope",
-        "slope",
-        ((F.col("sy") - F.col("slope") * F.col("sx")) / F.col("k")).alias(
-            "intercept"
-        ),
-        (
-            (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy"))
-            * (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy"))
-            / (
-                (F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx"))
-                * (F.col("k") * F.col("syy") - F.col("sy") * F.col("sy"))
-            )
-        ).alias("r2"),
-    )
-    return top.join(F.broadcast(fit), "scope").select(
-        "scope",
-        "token",
-        "n",
-        "rank",
-        "vocab_size",
-        F.round("lnr", 6).alias("ln_rank"),
-        F.round("lnf", 6).alias("ln_freq"),
-        F.round(
-            F.col("lnf") - (F.col("intercept") + F.col("slope") * F.col("lnr")),
-            6,
-        ).alias("resid"),
-        F.round("slope", 6).alias("slope"),
-        F.round("intercept", 6).alias("intercept"),
-        F.round("r2", 6).alias("r2"),
-    )
-
-
-def _sql_zipf_fit() -> str:
-    return f"""
-WITH base AS (
-  SELECT concat_ws(' ',
-           array_to_string(list_filter(list_transform(
-             range(1, {ZIPF_PLANT_MAX} + 1),
-             j -> CASE WHEN doc_id % j = 0 THEN 'zw' || j END),
-             x -> x IS NOT NULL), ' '),
-           text) AS ctext
-  FROM documents
-), tok AS (
-  SELECT unnest(regexp_extract_all(lower(ctext), '{_TOKEN_PATTERN}'))
-           AS token
-  FROM base
-), freq AS (
-  SELECT CASE WHEN regexp_matches(token, '^zw[0-9]+$') THEN 'planted'
-              ELSE 'corpus' END AS scope,
-         token, CAST(count(*) AS BIGINT) AS n
-  FROM tok GROUP BY 1, 2
-), vc AS (
-  SELECT scope, CAST(count(*) AS BIGINT) AS vocab_size
-  FROM freq GROUP BY scope
-), ranked AS (
-  SELECT scope, token, n,
-         CAST(row_number() OVER (PARTITION BY scope
-                                 ORDER BY n DESC, token) AS BIGINT) AS rank
-  FROM freq
-), top AS (
-  SELECT scope, token, n, rank,
-         ln(CAST(rank AS DOUBLE)) AS lnr,
-         ln(CAST(n AS DOUBLE)) AS lnf
-  FROM ranked WHERE rank <= {ZIPF_TOP_K}
-), s AS (
-  SELECT scope,
-         CAST(count(*) AS DOUBLE) AS k,
-         list_sum(list(lnr ORDER BY rank)) AS sx,
-         list_sum(list(lnf ORDER BY rank)) AS sy,
-         list_sum(list(lnr * lnr ORDER BY rank)) AS sxx,
-         list_sum(list(lnr * lnf ORDER BY rank)) AS sxy,
-         list_sum(list(lnf * lnf ORDER BY rank)) AS syy
-  FROM top GROUP BY scope
-), f1 AS (
-  SELECT scope, k, sx, sy, sxx, sxy, syy,
-         (k * sxy - sx * sy) / (k * sxx - sx * sx) AS slope
-  FROM s
-), fit AS (
-  SELECT scope, slope,
-         (sy - slope * sx) / k AS intercept,
-         (k * sxy - sx * sy) * (k * sxy - sx * sy)
-           / ((k * sxx - sx * sx) * (k * syy - sy * sy)) AS r2
-  FROM f1
-)
-SELECT t.scope, t.token, t.n, t.rank, vc.vocab_size,
-       round(t.lnr, 6) AS ln_rank,
-       round(t.lnf, 6) AS ln_freq,
-       round(t.lnf - (f.intercept + f.slope * t.lnr), 6) AS resid,
-       round(f.slope, 6) AS slope,
-       round(f.intercept, 6) AS intercept,
-       round(f.r2, 6) AS r2
-FROM top t
-JOIN fit f USING (scope)
-JOIN vc USING (scope)
-"""
-
-
-# --------------------------------------------------------------------------
-# HITS hubs & authorities (`hits`): Kleinberg 1999 — the other classical
-# host-graph score next to `pagerank`, separating nodes that LINK to good
-# content (hubs) from nodes that ARE good content (authorities); real
-# crawl pipelines use the pair to seed frontier and spam heuristics. Runs
-# over the SAME synthesized host graph as `pagerank` (identical node/edge
-# derivation incl. the dangle pruning), so the two scores are directly
-# joinable. HITS_ITERS alternating weighted updates with L1
-# normalization: h = E·a / ||E·a||_1, a = Eᵀ·h / ||Eᵀ·h||_1.
-#
-# Scale shape: the pagerank discipline verbatim — graph tables derived
-# from ONE corpus scan, aggregated to <= N² rows, pinned with eager
-# localCheckpoint; each iteration joins only the tiny pinned frames
-# (plan-gated: zero FileScans); the normalizer is a 1-row aggregate
-# broadcast back. At |hosts| scale each half-iteration is one
-# broadcast-or-shuffle join + map-side-combinable agg keyed by node.
-#
-# Cross-engine determinism: per-term arithmetic identical; only the
-# <= N-term reduce orders differ (contribution sums + the normalizer),
-# and L1 normalization keeps values in [0,1] so absolute drift stays
-# ~1e-15 per iteration — far under the 6dp boundary (margin pytest, the
-# pagerank discipline).
-# --------------------------------------------------------------------------
-
-HITS_ITERS = 8
-
-
-def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    # ONE corpus pass (round 7, guide §2.4/§5 — the pagerank discipline):
-    # (src, dst) is bounded at N^2 = 576 rows at any SF; the unfiltered
-    # groupBy carries both the node universe and (after the edge filter)
-    # the weighted edges. The 2*HITS_ITERS normalize/propagate half-steps
-    # then run on the driver over <= 24 values with the exact same
-    # expressions — replacing 3 corpus scans, 18 localCheckpoints and ~50
-    # tiny shuffle jobs per call.
-    pairs = (
-        docs.select(
-            (src_num % PR_N_NODES).alias("src"),
-            ((src_num * 7 + F.col("doc_id") * 13 + 3) % PR_N_NODES).alias(
-                "dst"
-            ),
-        )
-        .groupBy("src", "dst")
-        .agg(F.count("*").cast("double").alias("w"))
-    ).collect()
-    nodes = sorted({r["src"] for r in pairs} | {r["dst"] for r in pairs})
-    ew = {
-        (r["src"], r["dst"]): r["w"]
-        for r in pairs
-        if r["src"] != r["dst"] and r["src"] % 7 != PR_DANGLE_MOD
-    }
-    edges = sorted(ew.items())
-    n = float(len(nodes))
-    auth = {nd: 1.0 / n for nd in nodes}
-    hub: Dict[int, float] = {}
-    for _ in range(HITS_ITERS):
-        hv = {nd: 0.0 for nd in nodes}
-        for (u, v), w in edges:
-            if v in auth:
-                hv[u] += w * auth[v]
-        hs = sum(hv[nd] for nd in nodes)
-        hub = {nd: hv[nd] / hs for nd in nodes}
-        av = {nd: 0.0 for nd in nodes}
-        for (u, v), w in edges:
-            av[v] += w * hub[u]
-        asum = sum(av[nd] for nd in nodes)
-        auth = {nd: av[nd] / asum for nd in nodes}
-    outd: Dict[int, Tuple[int, float]] = {}
-    ind: Dict[int, Tuple[int, float]] = {}
-    for (u, v), w in edges:
-        c, sw = outd.get(u, (0, 0.0))
-        outd[u] = (c + 1, sw + w)
-        c, sw = ind.get(v, (0, 0.0))
-        ind[v] = (c + 1, sw + w)
-    rows = [
-        (
-            nd,
-            outd[nd][0] if nd in outd else None,
-            int(outd[nd][1]) if nd in outd else None,
-            ind[nd][0] if nd in ind else None,
-            int(ind[nd][1]) if nd in ind else None,
-            hub[nd],
-            auth[nd],
-        )
-        for nd in nodes
-    ]
-    return spark.createDataFrame(
-        rows,
-        "node long, n_out long, out_w long, n_in long, in_w long, "
-        "h double, a double",
-    ).select(
-        "node",
-        F.coalesce("n_out", F.lit(0)).cast("long").alias("n_out"),
-        F.coalesce("out_w", F.lit(0)).cast("long").alias("out_w"),
-        F.coalesce("n_in", F.lit(0)).cast("long").alias("n_in"),
-        F.coalesce("in_w", F.lit(0)).cast("long").alias("in_w"),
-        F.round("h", 6).alias("hub"),
-        F.round("a", 6).alias("auth"),
-    )
-
-
-def _sql_hits() -> str:
-    n = PR_N_NODES
-    iters = []
-    for i in range(1, HITS_ITERS + 1):
-        p = f"a{i - 1}"
-        # AS MATERIALIZED: DuckDB inlines CTEs by default, and the doubly-
-        # referenced per-half-step frames would re-open the parquet
-        # exponentially across 2*HITS_ITERS levels (observed: fd
-        # exhaustion) — the SQL mirror of the Spark-side localCheckpoint
-        iters.append(
-            f"""h{i}r AS MATERIALIZED (
-  SELECT nd.node, coalesce(x.hv, 0.0) AS hv
-  FROM nodes nd LEFT JOIN (
-    SELECT e.src AS node, sum(e.w * p.a) AS hv
-    FROM e JOIN {p} p ON p.node = e.dst GROUP BY e.src) x
-  ON x.node = nd.node
-), h{i}s AS (
-  SELECT sum(hv) AS s FROM h{i}r
-), h{i} AS MATERIALIZED (
-  SELECT node, hv / s AS h FROM h{i}r CROSS JOIN h{i}s
-), a{i}r AS MATERIALIZED (
-  SELECT nd.node, coalesce(x.av, 0.0) AS av
-  FROM nodes nd LEFT JOIN (
-    SELECT e.dst AS node, sum(e.w * p.h) AS av
-    FROM e JOIN h{i} p ON p.node = e.src GROUP BY e.dst) x
-  ON x.node = nd.node
-), a{i}s AS (
-  SELECT sum(av) AS s FROM a{i}r
-), a{i} AS MATERIALIZED (
-  SELECT node, av / s AS a FROM a{i}r CROSS JOIN a{i}s
-)"""
-        )
-    chain = ", ".join(iters)
-    return f"""
-WITH raw AS MATERIALIZED (
-  SELECT (CAST(substr(source, 4) AS BIGINT) % {n}) AS src,
-         ((CAST(substr(source, 4) AS BIGINT) * 7 + doc_id * 13 + 3) % {n})
-           AS dst
-  FROM documents
-), nodes AS MATERIALIZED (
-  SELECT src AS node FROM raw UNION SELECT dst FROM raw
-), ncnt AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes
-), e AS MATERIALIZED (
-  SELECT src, dst, CAST(count(*) AS DOUBLE) AS w
-  FROM raw WHERE src <> dst AND (src % 7) <> {PR_DANGLE_MOD}
-  GROUP BY src, dst
-), outd AS (
-  SELECT src, CAST(count(*) AS BIGINT) AS n_out,
-         CAST(sum(w) AS BIGINT) AS out_w
-  FROM e GROUP BY src
-), ind AS (
-  SELECT dst, CAST(count(*) AS BIGINT) AS n_in,
-         CAST(sum(w) AS BIGINT) AS in_w
-  FROM e GROUP BY dst
-), a0 AS (
-  SELECT node, 1.0 / n AS a FROM nodes CROSS JOIN ncnt
-), {chain}
-SELECT h.node,
-       CAST(coalesce(o.n_out, 0) AS BIGINT) AS n_out,
-       CAST(coalesce(o.out_w, 0) AS BIGINT) AS out_w,
-       CAST(coalesce(i.n_in, 0) AS BIGINT) AS n_in,
-       CAST(coalesce(i.in_w, 0) AS BIGINT) AS in_w,
-       round(h.h, 6) AS hub,
-       round(a.a, 6) AS auth
-FROM h{HITS_ITERS} h
-JOIN a{HITS_ITERS} a ON a.node = h.node
-LEFT JOIN outd o ON o.src = h.node
-LEFT JOIN ind i ON i.dst = h.node
-"""
-
-
-# --------------------------------------------------------------------------
-# Per-source Jensen-Shannon divergence (`js_divergence`): the
-# distributional drift monitor between each source's unigram distribution
-# and the corpus-wide one — the categorical counterpart to `ks_drift`
-# (which handles numeric distributions) and the quantitative backbone of
-# domain-mix audits (Lin 1991; used in data-mixture work to compare
-# domain token distributions). JSD = (KL(p‖m) + KL(q‖m)) / 2 with
-# m = (p+q)/2, bounded in [0, ln 2].
-#
-# Scale honesty: the support is NOT the raw vocabulary — it is the global
-# top-JSD_TOP_K terms plus one OTHER bucket carrying each distribution's
-# remaining mass (distributions stay proper, the estimate degrades
-# gracefully, and the per-source work is K+1 terms regardless of corpus
-# size). The term grid is a crossJoin of two ALREADY-AGGREGATED tiny
-# frames (|sources| × K) — never a corpus-sized product. One token-linear
-# (source, token) count agg; global counts and totals re-aggregated from
-# that table (never a second corpus pass); top-K via `exact_global_rank`.
-# The testdata vocab (31) exceeds K = 16, so the OTHER bucket provably
-# carries mass on both sides; a planted token in even-numbered sources
-# ("jscommon", rank 1 globally) forces the p = 0 zero-mass branch to
-# fire for every odd source.
-#
-# Cross-engine determinism: the KL sums run as pinned-order folds over
-# the term-sorted list (char_entropy discipline); ln() agrees to <= 1
-# ulp; margin pytest.
-# --------------------------------------------------------------------------
-
-JSD_TOP_K = 16  # support = global top-K terms + an OTHER tail bucket
-_JSD_OTHER = "~other"  # sorts after every [a-z0-9]+ token in both engines
-
-
-def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import exact_global_rank
-
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    ctext = F.concat(
-        F.col("text"),
-        F.coalesce(
-            F.when(src_num % 2 == 0, F.lit(" jscommon" * 8)), F.lit("")
-        ),
-    )
-    toks = _docs(spark, sf_dir).select(
-        "source",
-        F.explode(
-            F.regexp_extract_all(F.lower(ctext), F.lit(_TOKEN_PATTERN), 0)
-        ).alias("token"),
-    )
-    cst = toks.groupBy("source", "token").agg(
-        F.count("*").cast("long").alias("c")
-    )
-    ct = cst.groupBy("token").agg(F.sum("c").cast("long").alias("gc"))
-    tot = ct.agg(F.sum("gc").cast("long").alias("t"))
-    topk = (
-        exact_global_rank(ct.withColumn("neg", -F.col("gc")), "neg", ("token",))
-        .filter(F.col("global_rank") <= JSD_TOP_K)
-        .select("token", "gc")
-        .localCheckpoint(eager=True)  # tiny; reused by grid + tail math
-    )
-    ts = cst.groupBy("source").agg(F.sum("c").cast("long").alias("ts"))
-    top_q = topk.agg(F.sum("gc").cast("long").alias("top_gc"))
-    # full |sources| x K grid of two tiny aggregated frames (p=0 rows kept)
-    grid = (
-        ts.crossJoin(F.broadcast(topk))
-        .join(cst, ["source", "token"], "left")
-        .select(
-            "source",
-            "ts",
-            "token",
-            F.coalesce("c", F.lit(0)).cast("long").alias("c"),
-            "gc",
-        )
-    )
-    # per-source OTHER bucket: remaining in-source mass vs remaining
-    # global mass (both re-aggregated, never a second corpus pass)
-    in_top = grid.groupBy("source", "ts").agg(
-        F.sum("c").cast("long").alias("c_top")
-    )
-    other = (
-        in_top.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(top_q))
-        .select(
-            "source",
-            "ts",
-            F.lit(_JSD_OTHER).alias("token"),
-            (F.col("ts") - F.col("c_top")).cast("long").alias("c"),
-            (F.col("t") - F.col("top_gc")).cast("long").alias("gc"),
-        )
-    )
-    terms = grid.unionByName(other).crossJoin(F.broadcast(tot))
-    lst = F.sort_array(
-        F.collect_list(F.struct(F.col("token"), F.col("c"), F.col("gc")))
-    )
-    folded = (
-        terms.groupBy("source", "ts", "t")
-        .agg(
-            lst.alias("l"),
-            F.sum(F.when(F.col("c") > 0, 1).otherwise(0))
-            .cast("long")
-            .alias("n_present"),
-        )
-        .select(
-            "source",
-            "ts",
-            "n_present",
-            F.aggregate(
-                F.expr(
-                    "transform(l, e -> struct(e.token as token, e.c as c,"
-                    " cast(ts as double) as ts, e.gc as gc,"
-                    " cast(t as double) as t))"
-                ),
-                F.lit(0.0),
-                lambda a, x: a
-                + F.when(
-                    x["c"] > 0,
-                    (x["c"] / x["ts"])
-                    * F.log(
-                        (x["c"] / x["ts"])
-                        / ((x["c"] / x["ts"] + x["gc"] / x["t"]) / F.lit(2.0))
-                    ),
-                ).otherwise(F.lit(0.0)),
-            ).alias("klp"),
-            F.aggregate(
-                F.expr(
-                    "transform(l, e -> struct(e.token as token, e.c as c,"
-                    " cast(ts as double) as ts, e.gc as gc,"
-                    " cast(t as double) as t))"
-                ),
-                F.lit(0.0),
-                lambda a, x: a
-                + F.when(
-                    x["gc"] > 0,
-                    (x["gc"] / x["t"])
-                    * F.log(
-                        (x["gc"] / x["t"])
-                        / ((x["c"] / x["ts"] + x["gc"] / x["t"]) / F.lit(2.0))
-                    ),
-                ).otherwise(F.lit(0.0)),
-            ).alias("klq"),
-        )
-    )
-    return folded.select(
-        "source",
-        F.col("ts").alias("n_tokens"),
-        "n_present",
-        F.round("klp", 6).alias("kl_p_m"),
-        F.round("klq", 6).alias("kl_q_m"),
-        F.round((F.col("klp") + F.col("klq")) / F.lit(2.0), 6).alias("jsd"),
-    )
-
-
-def _sql_js_divergence() -> str:
-    k = JSD_TOP_K
-    return f"""
-WITH base AS MATERIALIZED (
-  SELECT source,
-         text || coalesce(CASE WHEN CAST(substr(source, 4) AS BIGINT) % 2 = 0
-                               THEN '{" jscommon" * 8}' END, '') AS ctext
-  FROM documents
-), tok AS (
-  SELECT source,
-         unnest(regexp_extract_all(lower(ctext), '{_TOKEN_PATTERN}'))
-           AS token
-  FROM base
-), cst AS MATERIALIZED (
-  SELECT source, token, CAST(count(*) AS BIGINT) AS c
-  FROM tok GROUP BY source, token
-), ct AS MATERIALIZED (
-  SELECT token, CAST(sum(c) AS BIGINT) AS gc FROM cst GROUP BY token
-), tot AS (
-  SELECT CAST(sum(gc) AS BIGINT) AS t FROM ct
-), topk AS MATERIALIZED (
-  SELECT token, gc
-  FROM (SELECT token, gc,
-               row_number() OVER (ORDER BY gc DESC, token) AS rnk
-        FROM ct)
-  WHERE rnk <= {k}
-), ts AS MATERIALIZED (
-  SELECT source, CAST(sum(c) AS BIGINT) AS ts FROM cst GROUP BY source
-), top_q AS (
-  SELECT CAST(sum(gc) AS BIGINT) AS top_gc FROM topk
-), grid AS (
-  SELECT s.source, s.ts, tk.token,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS c, tk.gc
-  FROM ts s CROSS JOIN topk tk
-  LEFT JOIN cst c ON c.source = s.source AND c.token = tk.token
-), other AS (
-  SELECT g.source, g.ts, '{_JSD_OTHER}' AS token,
-         CAST(g.ts - sum(g.c) AS BIGINT) AS c,
-         CAST(tot.t - top_q.top_gc AS BIGINT) AS gc
-  FROM grid g CROSS JOIN tot CROSS JOIN top_q
-  GROUP BY g.source, g.ts, tot.t, top_q.top_gc
-), terms AS (
-  SELECT * FROM grid UNION ALL SELECT * FROM other
-), folded AS (
-  SELECT source, ts, t,
-         CAST(sum(CASE WHEN c > 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_present,
-         list_sum(list(
-           CASE WHEN c > 0
-                THEN (c / CAST(ts AS DOUBLE))
-                     * ln((c / CAST(ts AS DOUBLE))
-                          / ((c / CAST(ts AS DOUBLE)
-                              + gc / CAST(t AS DOUBLE)) / 2.0))
-                ELSE 0.0 END ORDER BY token)) AS klp,
-         list_sum(list(
-           CASE WHEN gc > 0
-                THEN (gc / CAST(t AS DOUBLE))
-                     * ln((gc / CAST(t AS DOUBLE))
-                          / ((c / CAST(ts AS DOUBLE)
-                              + gc / CAST(t AS DOUBLE)) / 2.0))
-                ELSE 0.0 END ORDER BY token)) AS klq
-  FROM terms CROSS JOIN tot
-  GROUP BY source, ts, t
-)
-SELECT source, ts AS n_tokens, n_present,
-       round(klp, 6) AS kl_p_m,
-       round(klq, 6) AS kl_q_m,
-       round((klp + klq) / 2.0, 6) AS jsd
-FROM folded
-"""
-
-
-# --------------------------------------------------------------------------
 # Unicode NFC normalization (`nfc_normalize`): the canonical-form pass a
 # corpus needs before dedup/hashing — visually identical strings with
 # different code-point sequences ("e" + COMBINING ACUTE vs precomposed
@@ -8293,905 +6909,6 @@ SELECT doc_id,
        CAST(CASE WHEN md5(norm) <> md5(ctext) THEN 1 ELSE 0 END AS BIGINT)
          AS changed
 FROM rep
-"""
-
-
-# --------------------------------------------------------------------------
-# Label-propagation communities (`lpa_communities`): Raghavan et al. 2007
-# — the linear-time community detector crawl/curation pipelines run over
-# the host graph to group mirror farms and site families (the
-# community-level sibling of `dedup_keepers`' connected components, which
-# it generalizes: CC = LPA where any shared edge merges; LPA weighs
-# neighbor votes). SYNCHRONOUS updates with a deterministic tie-break
-# (max weighted vote, then smallest label) over the UNDIRECTED view of
-# the same pinned host graph as `pagerank`/`hits`; LPA_ITERS rounds
-# (convergence by round 2 on this graph — verified stable in pytest).
-# The dominant community plus singleton nodes prove both the vote branch
-# and the keep-own-label fallback fire.
-#
-# Scale shape: pagerank discipline — graph pinned once, per-round work is
-# one join + two map-side-combinable aggs keyed by node; the vote argmax
-# is the PACKED-ARGMIN idiom ((BIG - weight)*100 + label, then min) — no
-# window function, no sort, cluster-size invariant, and EXACT integer
-# arithmetic end to end (unlike pagerank/hits there is no float surface
-# at all: both engines must agree bit-for-bit, not just to 6dp).
-# --------------------------------------------------------------------------
-
-LPA_ITERS = 6
-_LPA_PACK = 10**12  # vote weights stay far below this at any plausible SF
-
-
-def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    raw = docs.select(
-        (src_num % PR_N_NODES).alias("src"),
-        ((src_num * 7 + F.col("doc_id") * 13 + 3) % PR_N_NODES).alias("dst"),
-    )
-    # ONE corpus pass (round 7, guide §2.4/§5 — the pagerank discipline):
-    # the unfiltered (src, dst) groupBy is bounded at N^2 = 576 rows at
-    # any SF and carries both the node universe and (after the edge
-    # filter) the weighted edges; the LPA_ITERS synchronous vote rounds
-    # then run on the driver with the exact same packed-argmin integer
-    # arithmetic — replacing 2 extra corpus scans and ~8 localCheckpoints
-    # / ~25 tiny shuffle jobs per call.
-    pairs = (
-        raw.groupBy("src", "dst").agg(F.count("*").cast("long").alias("w"))
-    ).collect()
-    nodes = sorted({r["src"] for r in pairs} | {r["dst"] for r in pairs})
-    und: Dict[Tuple[int, int], int] = {}
-    for r in pairs:
-        u, v, w = r["src"], r["dst"], r["w"]
-        if u != v and u % 7 != PR_DANGLE_MOD:
-            und[(u, v)] = und.get((u, v), 0) + w
-            und[(v, u)] = und.get((v, u), 0) + w
-    und_edges = sorted(und.items())
-    labels = {nd: nd for nd in nodes}
-    for _ in range(LPA_ITERS):
-        votes: Dict[Tuple[int, int], int] = {}
-        for (node, nbr), w in und_edges:
-            key = (node, labels[nbr])
-            votes[key] = votes.get(key, 0) + w
-        pick: Dict[int, int] = {}
-        for (node, lab), ws in sorted(votes.items()):
-            pk = (_LPA_PACK - ws) * 100 + lab
-            if node not in pick or pk < pick[node]:
-                pick[node] = pk
-        labels = {
-            nd: (pick[nd] % 100 if nd in pick else nd) for nd in nodes
-        }
-    sizes: Dict[int, int] = {}
-    for nd in nodes:
-        sizes[labels[nd]] = sizes.get(labels[nd], 0) + 1
-    n_comms = len(sizes)
-    rows = [
-        (
-            nd,
-            labels[nd],
-            sizes[labels[nd]],
-            n_comms,
-            1 if labels[nd] == nd else 0,
-        )
-        for nd in nodes
-    ]
-    return spark.createDataFrame(
-        rows,
-        "node long, community long, csize long, n_comms long, "
-        "own_label long",
-    )
-
-
-def _sql_lpa_communities() -> str:
-    n = PR_N_NODES
-    iters = []
-    for i in range(1, LPA_ITERS + 1):
-        p = f"l{i - 1}"
-        iters.append(
-            f"""v{i} AS (
-  SELECT u.node, l.lab, CAST(sum(u.w) AS BIGINT) AS ws
-  FROM und u JOIN {p} l ON l.node = u.nbr GROUP BY u.node, l.lab
-), p{i} AS (
-  SELECT node, min(({_LPA_PACK} - ws) * 100 + lab) AS mp
-  FROM v{i} GROUP BY node
-), l{i} AS MATERIALIZED (
-  SELECT nd.node, coalesce(p.mp % 100, nd.node) AS lab
-  FROM nodes nd LEFT JOIN p{i} p ON p.node = nd.node
-)"""
-        )
-    chain = ", ".join(iters)
-    return f"""
-WITH raw AS MATERIALIZED (
-  SELECT (CAST(substr(source, 4) AS BIGINT) % {n}) AS src,
-         ((CAST(substr(source, 4) AS BIGINT) * 7 + doc_id * 13 + 3) % {n})
-           AS dst
-  FROM documents
-), nodes AS MATERIALIZED (
-  SELECT src AS node FROM raw UNION SELECT dst FROM raw
-), w AS (
-  SELECT src, dst, CAST(count(*) AS BIGINT) AS w
-  FROM raw WHERE src <> dst AND (src % 7) <> {PR_DANGLE_MOD}
-  GROUP BY src, dst
-), und AS MATERIALIZED (
-  SELECT node, nbr, CAST(sum(w) AS BIGINT) AS w FROM (
-    SELECT src AS node, dst AS nbr, w FROM w
-    UNION ALL
-    SELECT dst AS node, src AS nbr, w FROM w
-  ) GROUP BY node, nbr
-), l0 AS MATERIALIZED (
-  SELECT node, node AS lab FROM nodes
-), {chain}, sizes AS (
-  SELECT lab, CAST(count(*) AS BIGINT) AS csize
-  FROM l{LPA_ITERS} GROUP BY lab
-), ncomm AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_comms FROM sizes
-)
-SELECT l.node, l.lab AS community, s.csize, ncomm.n_comms,
-       CAST(CASE WHEN l.lab = l.node THEN 1 ELSE 0 END AS BIGINT)
-         AS own_label
-FROM l{LPA_ITERS} l JOIN sizes s ON s.lab = l.lab CROSS JOIN ncomm
-"""
-
-
-# --------------------------------------------------------------------------
-# Distributed logistic-regression quality classifier (`logreg_quality`):
-# the trainable half of the fastText-style quality gate every curation
-# pipeline ends up with (CCNet's LM filter, GPT-3's WebText classifier,
-# RefinedWeb's rules) — here the TRAINER itself is the operator: full-
-# batch gradient descent with L2 regularization, run entirely as
-# DataFrame aggregations and hash-verified against DuckDB. Labels are a
-# planted rule (doc_id % 3 == 0 carries 1-2 'posmark' tokens); features
-# are ln(1+posmark) — informative — plus ln(1+tokens), ln(1+distinct
-# tokens) — near-noise the model must learn to ignore; features are
-# standardized (the convergence-critical step: unstandardized log-counts
-# dominate the separator and the 8-round budget underfits to 33%
-# accuracy — measured).
-#
-# Scale shape: the MLlib discipline — the standardized feature frame is
-# materialized ONCE (3 doubles/doc; the one corpus-sized checkpoint),
-# then each of LOGREG_ITERS rounds is ONE map-side-combinable gradient
-# aggregation over it (4 partial sums) with the 1-row weight frame
-# broadcast; weight updates are 1-row arithmetic pinned per round
-# (doubly-referenced lineage, the hits discipline). Feature means/stds
-# are two 1-row passes. No window functions, no driver-side loops over
-# rows, no collect.
-#
-# Cross-engine determinism: exp()/ln() agree to <= 1 ulp; the gradient
-# sums reduce in different orders (~1e-13 absolute drift) and the L2
-# term contracts accumulated error each round — margin pytest, the
-# pagerank discipline.
-# --------------------------------------------------------------------------
-
-LOGREG_ITERS = 8
-LOGREG_LR = 1.0
-LOGREG_L2 = 0.01
-
-
-def _logreg_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared trained-scorer frame (doc_id, y, z1..z3, a0..a3, p) —
-    reused by `logreg_quality` (training surface) and `conformal`
-    (calibration surface)."""
-    y = (F.col("doc_id") % 3 == 0).cast("long")
-    npos = F.when(
-        F.col("doc_id") % 3 == 0, 1 + (F.floor(F.col("doc_id") / 3) % 2)
-    ).otherwise(0).cast("long")
-    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0)
-    ntok = F.size(toks).cast("long") + npos
-    ndis = (
-        F.size(F.array_distinct(toks)).cast("long")
-        + (npos > 0).cast("long")
-    )
-    feats = (
-        _docs(spark, sf_dir)
-        .select(
-            "doc_id",
-            y.alias("y"),
-            F.log(F.lit(1.0) + npos.cast("double")).alias("x1"),
-            F.log(F.lit(1.0) + ntok.cast("double")).alias("x2"),
-            F.log(F.lit(1.0) + ndis.cast("double")).alias("x3"),
-        )
-        .localCheckpoint(eager=True)  # the one corpus-sized pin: 8 GD
-        # rounds + the two stats passes all re-read this frame
-    )
-    mu = feats.agg(
-        (F.sum("x1") / F.count("*")).alias("mu1"),
-        (F.sum("x2") / F.count("*")).alias("mu2"),
-        (F.sum("x3") / F.count("*")).alias("mu3"),
-        F.count("*").cast("double").alias("n"),
-    )
-    sd = (
-        feats.crossJoin(F.broadcast(mu))
-        .agg(
-            F.sqrt(
-                F.sum(
-                    (F.col("x1") - F.col("mu1")) * (F.col("x1") - F.col("mu1"))
-                )
-                / F.first("n")
-            ).alias("sd1"),
-            F.sqrt(
-                F.sum(
-                    (F.col("x2") - F.col("mu2")) * (F.col("x2") - F.col("mu2"))
-                )
-                / F.first("n")
-            ).alias("sd2"),
-            F.sqrt(
-                F.sum(
-                    (F.col("x3") - F.col("mu3")) * (F.col("x3") - F.col("mu3"))
-                )
-                / F.first("n")
-            ).alias("sd3"),
-        )
-    )
-    z = (
-        feats.crossJoin(F.broadcast(mu))
-        .crossJoin(F.broadcast(sd))
-        .select(
-            "doc_id",
-            "y",
-            ((F.col("x1") - F.col("mu1")) / F.col("sd1")).alias("z1"),
-            ((F.col("x2") - F.col("mu2")) / F.col("sd2")).alias("z2"),
-            ((F.col("x3") - F.col("mu3")) / F.col("sd3")).alias("z3"),
-            "n",
-        )
-        .localCheckpoint(eager=True)
-    )
-    w = spark.createDataFrame(
-        [(0.0, 0.0, 0.0, 0.0)], "a0 double, a1 double, a2 double, a3 double"
-    )
-    for _ in range(LOGREG_ITERS):
-        scored = z.crossJoin(F.broadcast(w)).withColumn(
-            "p",
-            F.lit(1.0)
-            / (
-                F.lit(1.0)
-                + F.exp(
-                    -(
-                        F.col("a0")
-                        + F.col("a1") * F.col("z1")
-                        + F.col("a2") * F.col("z2")
-                        + F.col("a3") * F.col("z3")
-                    )
-                )
-            ),
-        )
-        r = F.col("p") - F.col("y").cast("double")
-        g = scored.agg(
-            F.sum(r).alias("g0"),
-            F.sum(r * F.col("z1")).alias("g1"),
-            F.sum(r * F.col("z2")).alias("g2"),
-            F.sum(r * F.col("z3")).alias("g3"),
-            F.first("n").alias("n"),
-        )
-        w = (
-            g.crossJoin(F.broadcast(w))
-            .select(
-                *[
-                    (
-                        F.col(f"a{j}")
-                        - F.lit(LOGREG_LR)
-                        * (
-                            F.col(f"g{j}") / F.col("n")
-                            + F.lit(LOGREG_L2) * F.col(f"a{j}")
-                        )
-                    ).alias(f"a{j}")
-                    for j in range(4)
-                ]
-            )
-            .localCheckpoint(eager=True)  # hits discipline: w is read by
-            # both the next scoring pass and the next update
-        )
-    scored = z.crossJoin(F.broadcast(w)).withColumn(
-        "p",
-        F.lit(1.0)
-        / (
-            F.lit(1.0)
-            + F.exp(
-                -(
-                    F.col("a0")
-                    + F.col("a1") * F.col("z1")
-                    + F.col("a2") * F.col("z2")
-                    + F.col("a3") * F.col("z3")
-                )
-            )
-        ),
-    )
-    return scored
-
-
-def q_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scored = _logreg_scored(spark, sf_dir)
-    return scored.select(
-        "doc_id",
-        "y",
-        F.round("z1", 6).alias("z1"),
-        F.round("z2", 6).alias("z2"),
-        F.round("z3", 6).alias("z3"),
-        F.round("p", 6).alias("score"),
-        (F.col("p") > 0.5).cast("long").alias("pred"),
-        ((F.col("p") > 0.5) == (F.col("y") == 1)).cast("long").alias(
-            "correct"
-        ),
-        F.round("a0", 6).alias("w0"),
-        F.round("a1", 6).alias("w1"),
-        F.round("a2", 6).alias("w2"),
-        F.round("a3", 6).alias("w3"),
-    )
-
-
-def _sql_logreg_chain() -> str:
-    """Shared CTE chain ending in the raw `scores` frame — reused by
-    `logreg_quality` and `conformal`."""
-    lr, l2 = LOGREG_LR, LOGREG_L2
-    iters = []
-    for i in range(1, LOGREG_ITERS + 1):
-        p = f"w{i - 1}"
-        iters.append(
-            f"""g{i} AS (
-  SELECT sum(p - CAST(y AS DOUBLE)) AS g0,
-         sum((p - CAST(y AS DOUBLE)) * z1) AS g1,
-         sum((p - CAST(y AS DOUBLE)) * z2) AS g2,
-         sum((p - CAST(y AS DOUBLE)) * z3) AS g3,
-         first(n) AS n
-  FROM (SELECT z.*,
-               1.0 / (1.0 + exp(-(a0 + a1 * z1 + a2 * z2 + a3 * z3))) AS p
-        FROM z CROSS JOIN {p})
-), w{i} AS MATERIALIZED (
-  SELECT a0 - {lr} * (g0 / n + {l2} * a0) AS a0,
-         a1 - {lr} * (g1 / n + {l2} * a1) AS a1,
-         a2 - {lr} * (g2 / n + {l2} * a2) AS a2,
-         a3 - {lr} * (g3 / n + {l2} * a3) AS a3
-  FROM g{i} CROSS JOIN {p}
-)"""
-        )
-    chain = ", ".join(iters)
-    return f"""feats AS MATERIALIZED (
-  SELECT doc_id,
-         CAST(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS BIGINT) AS y,
-         ln(1.0 + CAST(CASE WHEN doc_id % 3 = 0
-                            THEN 1 + (doc_id // 3) % 2
-                            ELSE 0 END AS DOUBLE)) AS x1,
-         ln(1.0 + CAST(len(regexp_extract_all(lower(text),
-                                              '{_TOKEN_PATTERN}'))
-                       + CASE WHEN doc_id % 3 = 0
-                              THEN 1 + (doc_id // 3) % 2
-                              ELSE 0 END AS DOUBLE)) AS x2,
-         ln(1.0 + CAST(len(list_distinct(regexp_extract_all(lower(text),
-                                                    '{_TOKEN_PATTERN}')))
-                       + CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END
-                       AS DOUBLE)) AS x3
-  FROM documents
-), mu AS (
-  SELECT sum(x1) / count(*) AS mu1,
-         sum(x2) / count(*) AS mu2,
-         sum(x3) / count(*) AS mu3,
-         CAST(count(*) AS DOUBLE) AS n
-  FROM feats
-), sd AS (
-  SELECT sqrt(sum((x1 - mu1) * (x1 - mu1)) / first(n)) AS sd1,
-         sqrt(sum((x2 - mu2) * (x2 - mu2)) / first(n)) AS sd2,
-         sqrt(sum((x3 - mu3) * (x3 - mu3)) / first(n)) AS sd3
-  FROM feats CROSS JOIN mu
-), z AS MATERIALIZED (
-  SELECT doc_id, y,
-         (x1 - mu1) / sd1 AS z1,
-         (x2 - mu2) / sd2 AS z2,
-         (x3 - mu3) / sd3 AS z3,
-         n
-  FROM feats CROSS JOIN mu CROSS JOIN sd
-), w0 AS (
-  SELECT 0.0 AS a0, 0.0 AS a1, 0.0 AS a2, 0.0 AS a3
-), {chain}, scores AS MATERIALIZED (
-  SELECT z.doc_id, z.y, z.z1, z.z2, z.z3, a0, a1, a2, a3,
-         1.0 / (1.0 + exp(-(a0 + a1 * z1 + a2 * z2 + a3 * z3))) AS p
-  FROM z CROSS JOIN w{LOGREG_ITERS}
-)"""
-
-
-def _sql_logreg_quality() -> str:
-    return f"""
-WITH {_sql_logreg_chain()}
-SELECT doc_id, y,
-       round(z1, 6) AS z1, round(z2, 6) AS z2, round(z3, 6) AS z3,
-       round(p, 6) AS score,
-       CAST(CASE WHEN p > 0.5 THEN 1 ELSE 0 END AS BIGINT) AS pred,
-       CAST(CASE WHEN (p > 0.5) = (y = 1) THEN 1 ELSE 0 END AS BIGINT)
-         AS correct,
-       round(a0, 6) AS w0, round(a1, 6) AS w1,
-       round(a2, 6) AS w2, round(a3, 6) AS w3
-FROM scores
-"""
-
-
-# --------------------------------------------------------------------------
-# Classifier evaluation: exact AUC + confusion metrics (`auc_eval`): the
-# measurement half of the quality-gate story (`logreg_quality` trains;
-# this evaluates) — exact Mann-Whitney AUC with tie-averaged ranks plus
-# threshold precision/recall/F1, over a deterministic noisy scorer
-# (score = 30·npos + md5-bucket noise, INTEGER-valued) whose class
-# distributions overlap, so mid-range AUC, cross-class ties (the
-# average-rank branch), and every confusion cell are all provably
-# exercised.
-#
-# Exactness: integer scores make every quantity rational with
-# denominator 2 — average ranks are exact halves, their weighted sums
-# are exactly representable doubles (values << 2^53), so BOTH engines
-# compute bit-identical AUC with no reduce-order surface at all (a
-# stronger guarantee than the pagerank/hits margin argument).
-#
-# Scale shape: one corpus pass to the per-score group table (bounded by
-# the score domain, not the corpus — the ks_drift discipline),
-# `exact_global_cumsum` for rank offsets (range-partitioned, no
-# single-partition window), and 1-row metric aggregates broadcast back
-# onto the group rows.
-# --------------------------------------------------------------------------
-
-AUC_THRESH = 65  # integer threshold inside the class-overlap band
-
-
-def q_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import exact_global_cumsum
-
-    y = (F.col("doc_id") % 3 == 0).cast("long")
-    npos = F.when(
-        F.col("doc_id") % 3 == 0, 1 + (F.floor(F.col("doc_id") / 3) % 2)
-    ).otherwise(0).cast("long")
-    noise = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("auc"), F.col("doc_id")), 100
-    )
-    sc = _docs(spark, sf_dir).select(
-        y.alias("y"), (F.lit(30) * npos + noise).cast("long").alias("score")
-    )
-    g = sc.groupBy("score").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("y").cast("long").alias("n_pos"),
-    )
-    c = exact_global_cumsum(g, "score", "n")
-    ranked = c.select(
-        "score",
-        "n",
-        "n_pos",
-        F.col("cum_before").cast("long").alias("cum_before"),
-        (
-            F.col("cum_before").cast("double")
-            + (F.col("n").cast("double") + F.lit(1.0)) / F.lit(2.0)
-        ).alias("avg_rank"),
-        F.col("global_total").cast("long").alias("total"),
-    )
-    m = ranked.agg(
-        F.sum(F.col("n_pos").cast("double") * F.col("avg_rank")).alias(
-            "rpos"
-        ),
-        F.sum("n_pos").cast("long").alias("p"),
-        F.first("total").alias("tot"),
-        F.sum(
-            F.when(F.col("score") >= AUC_THRESH, F.col("n_pos")).otherwise(0)
-        )
-        .cast("long")
-        .alias("tp"),
-        F.sum(
-            F.when(
-                F.col("score") >= AUC_THRESH, F.col("n") - F.col("n_pos")
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("fp"),
-    )
-    met = m.select(
-        "rpos",
-        "p",
-        (F.col("tot") - F.col("p")).alias("nn"),
-        "tp",
-        "fp",
-        (F.col("p") - F.col("tp")).alias("fn"),
-        (F.col("tot") - F.col("p") - F.col("fp")).alias("tn"),
-    ).select(
-        "p",
-        "nn",
-        "tp",
-        "fp",
-        "fn",
-        "tn",
-        (
-            (
-                F.col("rpos")
-                - F.col("p").cast("double")
-                * (F.col("p").cast("double") + F.lit(1.0))
-                / F.lit(2.0)
-            )
-            / (F.col("p").cast("double") * F.col("nn").cast("double"))
-        ).alias("auc"),
-        (
-            F.col("tp").cast("double")
-            / (F.col("tp") + F.col("fp")).cast("double")
-        ).alias("prec"),
-        (
-            F.col("tp").cast("double")
-            / (F.col("tp") + F.col("fn")).cast("double")
-        ).alias("rec"),
-    )
-    return ranked.crossJoin(F.broadcast(met)).select(
-        "score",
-        "n",
-        "n_pos",
-        "cum_before",
-        F.round("avg_rank", 6).alias("avg_rank"),
-        "p",
-        F.col("nn").cast("long").alias("nn"),
-        "tp",
-        "fp",
-        F.col("fn").cast("long").alias("fn"),
-        F.col("tn").cast("long").alias("tn"),
-        F.round("auc", 6).alias("auc"),
-        F.round("prec", 6).alias("precision"),
-        F.round("rec", 6).alias("recall"),
-        F.round(
-            F.lit(2.0)
-            * F.col("prec")
-            * F.col("rec")
-            / (F.col("prec") + F.col("rec")),
-            6,
-        ).alias("f1"),
-    )
-
-
-def _sql_auc_eval() -> str:
-    noise = _md5_bucket_sql("'auc' || '|' || CAST(doc_id AS VARCHAR)", 100)
-    return f"""
-WITH sc AS (
-  SELECT CAST(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS BIGINT) AS y,
-         CAST(30 * (CASE WHEN doc_id % 3 = 0
-                         THEN 1 + (doc_id // 3) % 2 ELSE 0 END)
-              + {noise} AS BIGINT) AS score
-  FROM documents
-), g AS (
-  SELECT score, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(y) AS BIGINT) AS n_pos
-  FROM sc GROUP BY score
-), ranked AS (
-  SELECT score, n, n_pos,
-         CAST(coalesce(sum(n) OVER (ORDER BY score
-                                    ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND 1 PRECEDING), 0) AS BIGINT)
-           AS cum_before,
-         CAST(sum(n) OVER () AS BIGINT) AS total
-  FROM g
-), r2 AS (
-  SELECT score, n, n_pos, cum_before,
-         CAST(cum_before AS DOUBLE)
-           + (CAST(n AS DOUBLE) + 1.0) / 2.0 AS avg_rank,
-         total
-  FROM ranked
-), m AS (
-  SELECT sum(CAST(n_pos AS DOUBLE) * avg_rank) AS rpos,
-         CAST(sum(n_pos) AS BIGINT) AS p,
-         first(total) AS tot,
-         CAST(sum(CASE WHEN score >= {AUC_THRESH} THEN n_pos ELSE 0 END)
-              AS BIGINT) AS tp,
-         CAST(sum(CASE WHEN score >= {AUC_THRESH} THEN n - n_pos
-                       ELSE 0 END) AS BIGINT) AS fp
-  FROM r2
-), met AS (
-  SELECT p, CAST(tot - p AS BIGINT) AS nn, tp, fp,
-         CAST(p - tp AS BIGINT) AS fn,
-         CAST(tot - p - fp AS BIGINT) AS tn,
-         (rpos - CAST(p AS DOUBLE) * (CAST(p AS DOUBLE) + 1.0) / 2.0)
-           / (CAST(p AS DOUBLE) * CAST(tot - p AS DOUBLE)) AS auc,
-         CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) AS prec,
-         CAST(tp AS DOUBLE) / CAST(tp + (p - tp) AS DOUBLE) AS rec
-  FROM m
-)
-SELECT r2.score, r2.n, r2.n_pos, r2.cum_before,
-       round(r2.avg_rank, 6) AS avg_rank,
-       met.p, met.nn, met.tp, met.fp, met.fn, met.tn,
-       round(met.auc, 6) AS auc,
-       round(met.prec, 6) AS precision,
-       round(met.rec, 6) AS recall,
-       round(2.0 * met.prec * met.rec / (met.prec + met.rec), 6) AS f1
-FROM r2 CROSS JOIN met
-"""
-
-
-# --------------------------------------------------------------------------
-# Distributed k-means over embeddings (`kmeans_embed`): Lloyd's algorithm
-# — the clustering workhorse behind SemDeDup's cluster stage, IVF index
-# training (`ann_ivf`'s quantizer is one-shot seeded assignment; this is
-# the ITERATIVE refinement that production index builds actually run),
-# and data-mixture curation by embedding region. Seeded-row init
-# (centroids = vec_id 0..K-1, the semdedup discipline), KMEANS_ITERS
-# Lloyd rounds: assign to nearest centroid (squared L2), recompute
-# centroids as per-dimension means; empty clusters keep their previous
-# centroid (fallback coalesce on both engines).
-#
-# Scale shape: the embedding frame is pinned once; each round is one
-# broadcast of the K×64 centroid table against it (never a corpus
-# shuffle), one map-side-combinable argmin per vector (min over a
-# struct(d2, cid) — deterministic tie-break), and one map-side-
-# combinable per-(cid, dim) sum/count agg — the exact shape of MLlib's
-# k-means. Centroid tables pinned per round (hits discipline).
-#
-# Cross-engine determinism: every DISTANCE is bit-identical (the 64-term
-# fold runs in pinned index order over f32→f64-exact inputs), so
-# assignments can only diverge through centroid-mean reduce order
-# (~1e-14); the pytest margin-sweeps every point's best-vs-second-best
-# distance gap (the dsir_select discipline for discrete decisions) and
-# boundary-checks every rounded output.
-# --------------------------------------------------------------------------
-
-KMEANS_K = 8
-KMEANS_ITERS = 5
-KMEANS_DIM = 64
-
-
-def _kmeans_d2_col():
-    return F.aggregate(
-        F.zip_with(F.col("v"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _kmeans_assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
-    return (
-        emb.crossJoin(F.broadcast(centroids))
-        .select("vec_id", "cid", _kmeans_d2_col().alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cid")).alias("m"))
-        .select(
-            "vec_id", F.col("m.cid").alias("cid"), F.col("m.d2").alias("d2")
-        )
-    )
-
-
-def _kmeans_frames(spark: SparkSession, sf_dir: str):
-    """Shared Lloyd chain: returns (emb, final_centroids) — reused by
-    `kmeans_embed` (assignment surface) and `silhouette` (eval surface)."""
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .select(
-            "vec_id",
-            "label",
-            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias(
-                "v"
-            ),
-        )
-        .localCheckpoint(eager=True)
-    )
-    cents = emb.filter(F.col("vec_id") < KMEANS_K).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    for _ in range(KMEANS_ITERS):
-        asg = _kmeans_assign(emb, cents)
-        dims = (
-            asg.join(emb, "vec_id")
-            .select("cid", F.posexplode("v").alias("dim", "val"))
-            .groupBy("cid", "dim")
-            .agg(F.sum("val").alias("s"), F.count("*").alias("n"))
-        )
-        newc = dims.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct("dim", (F.col("s") / F.col("n")).alias("m"))
-                    )
-                ),
-                lambda st: st["m"],
-            ).alias("ncv")
-        )
-        cents = (
-            cents.join(newc, "cid", "left")
-            .select(
-                "cid", F.coalesce(F.col("ncv"), F.col("cv")).alias("cv")
-            )
-            .localCheckpoint(eager=True)
-        )
-    return emb, cents
-
-
-def q_kmeans_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb, cents = _kmeans_frames(spark, sf_dir)
-    # pinned (round 7): final feeds sizes, inertia AND the output join
-    final = _kmeans_assign(emb, cents).localCheckpoint(eager=True)
-    sizes = final.groupBy("cid").agg(
-        F.count("*").cast("long").alias("csize")
-    )
-    inertia = final.agg(F.sum("d2").alias("inertia"))
-    return (
-        final.join(emb.select("vec_id", "label"), "vec_id")
-        .join(F.broadcast(sizes), "cid")
-        .crossJoin(F.broadcast(inertia))
-        .select(
-            "vec_id",
-            F.col("label").cast("long").alias("label"),
-            F.col("cid").cast("long").alias("cid"),
-            F.round("d2", 6).alias("d2"),
-            "csize",
-            F.round("inertia", 6).alias("inertia"),
-        )
-    )
-
-
-def _sql_kmeans_d2() -> str:
-    return (
-        f"list_sum(list_transform(range(1, {KMEANS_DIM} + 1),"
-        f" i -> (v[i] - cv[i]) * (v[i] - cv[i])))"
-    )
-
-
-def _sql_kmeans_chain() -> str:
-    """Shared Lloyd CTE chain ending in `fin` (final assignments) and the
-    final centroid table c{KMEANS_ITERS} — reused by `kmeans_embed` and
-    `silhouette`."""
-    k, dim = KMEANS_K, KMEANS_DIM
-    d2 = _sql_kmeans_d2()
-    iters = []
-    for i in range(1, KMEANS_ITERS + 1):
-        p = f"c{i - 1}"
-        iters.append(
-            f"""a{i} AS MATERIALIZED (
-  SELECT vec_id, cid, d2 FROM (
-    SELECT e.vec_id, c.cid, {d2} AS d2,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {d2}, c.cid) AS rn
-    FROM emb e CROSS JOIN {p} c)
-  WHERE rn = 1
-), u{i} AS (
-  SELECT cid, list(s / n ORDER BY dim) AS ncv FROM (
-    SELECT a.cid, r.i AS dim, sum(e.v[r.i + 1]) AS s, count(*) AS n
-    FROM a{i} a JOIN emb e USING (vec_id)
-    CROSS JOIN range({dim}) r(i)
-    GROUP BY a.cid, r.i)
-  GROUP BY cid
-), c{i} AS MATERIALIZED (
-  SELECT p.cid, coalesce(u.ncv, p.cv) AS cv
-  FROM {p} p LEFT JOIN u{i} u ON u.cid = p.cid
-)"""
-        )
-    chain = ", ".join(iters)
-    return f"""emb AS MATERIALIZED (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-), c0 AS MATERIALIZED (
-  SELECT vec_id AS cid, v AS cv FROM emb WHERE vec_id < {k}
-), {chain}, fin AS MATERIALIZED (
-  SELECT vec_id, cid, d2 FROM (
-    SELECT e.vec_id, c.cid, {d2} AS d2,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {d2}, c.cid) AS rn
-    FROM emb e CROSS JOIN c{KMEANS_ITERS} c)
-  WHERE rn = 1
-)"""
-
-
-def _sql_kmeans_embed() -> str:
-    return f"""
-WITH {_sql_kmeans_chain()}, sizes AS (
-  SELECT cid, CAST(count(*) AS BIGINT) AS csize FROM fin GROUP BY cid
-), inert AS (
-  SELECT sum(d2) AS inertia FROM fin
-)
-SELECT f.vec_id,
-       CAST(e.label AS BIGINT) AS label,
-       CAST(f.cid AS BIGINT) AS cid,
-       round(f.d2, 6) AS d2,
-       s.csize,
-       round(inert.inertia, 6) AS inertia
-FROM fin f
-JOIN emb e USING (vec_id)
-JOIN sizes s USING (cid)
-CROSS JOIN inert
-"""
-
-
-# --------------------------------------------------------------------------
-# Simplified silhouette (`silhouette`): the cluster-quality evaluation
-# for `kmeans_embed` — per point, a = distance to own centroid, b = min
-# distance to any OTHER centroid, s = (b - a) / max(a, b) (the
-# centroid-based simplified silhouette, the O(n·K) form production
-# systems use because the classical O(n²) pairwise silhouette cannot
-# scale; Rousseeuw 1987 §2 / the Spark MLlib ClusteringEvaluator
-# measure). Completes the ML quadrant: train (`logreg_quality`),
-# cluster (`kmeans_embed`), supervised eval (`auc_eval`), cluster eval
-# (here).
-#
-# Scale shape: reuses the shared Lloyd chain (`_kmeans_frames` /
-# `_sql_kmeans_chain` — composition of a hash-verified block, the
-# web_funnel discipline), then ONE broadcast of the final centroid table
-# and one map-side min/agg per point; per-cluster and global means are
-# re-aggregated from the per-point table.
-#
-# Cross-engine determinism: a and b are sqrt of bit-identical pinned-
-# order distance folds; the mean sums reduce in different orders
-# (pagerank discipline, margin pytest).
-# --------------------------------------------------------------------------
-
-
-def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb, cents = _kmeans_frames(spark, sf_dir)
-    dists = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "cid", F.sqrt(_kmeans_d2_col()).alias("d")
-    )
-    # ONE groupBy replaces own + other + their joins (round 7): each cid
-    # appears exactly once per vec_id, so sorting the K (d, cid) structs
-    # gives own = arr[0] and b = arr[1].d — the min d over cids != own cid
-    # under the identical (d, cid) tie-break. No arithmetic changes, only
-    # selection; 3 exchanges + 2 joins -> 1 exchange. `per` is pinned: it
-    # feeds cmean, gmean AND the output join.
-    arr = F.array_sort(F.collect_list(F.struct("d", "cid")))
-    per = (
-        dists.groupBy("vec_id")
-        .agg(arr.alias("arr"))
-        .select(
-            "vec_id",
-            F.col("arr")[0]["cid"].alias("cid"),
-            F.col("arr")[0]["d"].alias("a"),
-            F.col("arr")[1]["d"].alias("b"),
-        )
-        .select(
-            "vec_id",
-            "cid",
-            "a",
-            "b",
-            (
-                (F.col("b") - F.col("a"))
-                / F.greatest(F.col("a"), F.col("b"))
-            ).alias("s"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    cmean = per.groupBy("cid").agg(
-        (F.sum("s") / F.count("*")).alias("cluster_sil"),
-        F.count("*").cast("long").alias("csize"),
-    )
-    gmean = per.agg((F.sum("s") / F.count("*")).alias("global_sil"))
-    return (
-        per.join(F.broadcast(cmean), "cid")
-        .crossJoin(F.broadcast(gmean))
-        .select(
-            "vec_id",
-            F.col("cid").cast("long").alias("cid"),
-            F.round("a", 6).alias("a"),
-            F.round("b", 6).alias("b"),
-            F.round("s", 6).alias("sil"),
-            "csize",
-            F.round("cluster_sil", 6).alias("cluster_sil"),
-            F.round("global_sil", 6).alias("global_sil"),
-        )
-    )
-
-
-def _sql_silhouette() -> str:
-    d2 = _sql_kmeans_d2()
-    return f"""
-WITH {_sql_kmeans_chain()}, dists AS MATERIALIZED (
-  SELECT e.vec_id, c.cid, sqrt({d2}) AS d
-  FROM emb e CROSS JOIN c{KMEANS_ITERS} c
-), own AS (
-  SELECT vec_id, cid, d AS a FROM (
-    SELECT vec_id, cid, d,
-           row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-    FROM dists)
-  WHERE rn = 1
-), oth AS (
-  SELECT d.vec_id, min(d.d) AS b
-  FROM dists d JOIN own o ON o.vec_id = d.vec_id AND d.cid <> o.cid
-  GROUP BY d.vec_id
-), per AS MATERIALIZED (
-  SELECT o.vec_id, o.cid, o.a, t.b,
-         (t.b - o.a) / greatest(o.a, t.b) AS s
-  FROM own o JOIN oth t USING (vec_id)
-), cmean AS (
-  SELECT cid, sum(s) / count(*) AS cluster_sil,
-         CAST(count(*) AS BIGINT) AS csize
-  FROM per GROUP BY cid
-), gmean AS (
-  SELECT sum(s) / count(*) AS global_sil FROM per
-)
-SELECT p.vec_id, CAST(p.cid AS BIGINT) AS cid,
-       round(p.a, 6) AS a, round(p.b, 6) AS b, round(p.s, 6) AS sil,
-       c.csize,
-       round(c.cluster_sil, 6) AS cluster_sil,
-       round(g.global_sil, 6) AS global_sil
-FROM per p JOIN cmean c USING (cid) CROSS JOIN gmean g
 """
 
 
@@ -9396,8743 +7113,6 @@ WHERE NOT d.is_train
 """
 
 
-# --------------------------------------------------------------------------
-# Classic warehouse OLAP shapes (`tpch_pricing`, `tpch_regional_revenue`):
-# the relational half of the testdata (region/nation/customer/supplier/
-# orders/lineitem — the TPC-H star) was previously untouched; these two
-# queries certify the bread-and-butter shapes a 100 TB warehouse runs all
-# day. `tpch_pricing` is the Q1 shape (scan-heavy filtered aggregation
-# with map-side partial aggs); `tpch_regional_revenue` is the Q5 shape
-# (fact-fact equi-join lineitem⋈orders with pushed-down date pruning,
-# then a chain of BROADCAST dimension joins customer/supplier/nation/
-# region with the c_nationkey = s_nationkey locality predicate). A plan
-# gate asserts the dims actually broadcast, the date filter reaches the
-# orders scan as a PushedFilter, and ReadSchema pruning holds.
-#
-# Cross-engine determinism: money math runs in bounded DECIMALs —
-# doubles cast to DECIMAL(12,2)/(4,2) at the scan, products stay within
-# exact precision ((12,2)x(5,2)x(5,2) -> scale 6 << 38), sums are exact
-# integer arithmetic in BOTH engines, and doubles only appear casting
-# the exact sums at the output boundary. No reduce-order surface at all.
-# --------------------------------------------------------------------------
-
-TPCH_PRICING_CUTOFF = "1998-09-01"
-TPCH_REVENUE_REGION = "ASIA"
-TPCH_REVENUE_LO, TPCH_REVENUE_HI = "1996-01-01", "1998-01-01"
-
-
-def _tpch(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def q_tpch_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _tpch(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") < F.lit(TPCH_PRICING_CUTOFF).cast("timestamp")
-    )
-    qty = F.col("l_quantity").cast("decimal(12,2)")
-    price = F.col("l_extendedprice").cast("decimal(12,2)")
-    disc = F.col("l_discount").cast("decimal(4,2)")
-    tax = F.col("l_tax").cast("decimal(4,2)")
-    one = F.lit(1).cast("decimal(3,2)")
-    agg = (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(qty).alias("sq"),
-            F.sum(price).alias("sb"),
-            F.sum(price * (one - disc)).alias("sd"),
-            F.sum(price * (one - disc) * (one + tax)).alias("sc"),
-            F.sum(disc).alias("sdisc"),
-            F.count("*").cast("long").alias("count_order"),
-        )
-    )
-    n = F.col("count_order").cast("double")
-    return agg.select(
-        "l_returnflag",
-        "l_linestatus",
-        F.round(F.col("sq").cast("double"), 2).alias("sum_qty"),
-        F.round(F.col("sb").cast("double"), 2).alias("sum_base_price"),
-        F.round(F.col("sd").cast("double"), 2).alias("sum_disc_price"),
-        F.round(F.col("sc").cast("double"), 2).alias("sum_charge"),
-        F.round(F.col("sq").cast("double") / n, 6).alias("avg_qty"),
-        F.round(F.col("sb").cast("double") / n, 6).alias("avg_price"),
-        F.round(F.col("sdisc").cast("double") / n, 6).alias("avg_disc"),
-        "count_order",
-    )
-
-
-def _sql_tpch_pricing() -> str:
-    return f"""
-SELECT l_returnflag, l_linestatus,
-       round(CAST(sq AS DOUBLE), 2) AS sum_qty,
-       round(CAST(sb AS DOUBLE), 2) AS sum_base_price,
-       round(CAST(sd AS DOUBLE), 2) AS sum_disc_price,
-       round(CAST(sc AS DOUBLE), 2) AS sum_charge,
-       round(CAST(sq AS DOUBLE) / CAST(count_order AS DOUBLE), 6)
-         AS avg_qty,
-       round(CAST(sb AS DOUBLE) / CAST(count_order AS DOUBLE), 6)
-         AS avg_price,
-       round(CAST(sdisc AS DOUBLE) / CAST(count_order AS DOUBLE), 6)
-         AS avg_disc,
-       count_order
-FROM (
-  SELECT l_returnflag, l_linestatus,
-         sum(CAST(l_quantity AS DECIMAL(12,2))) AS sq,
-         sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS sb,
-         sum(CAST(l_extendedprice AS DECIMAL(12,2))
-             * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))))
-           AS sd,
-         sum(CAST(l_extendedprice AS DECIMAL(12,2))
-             * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))
-             * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(4,2))))
-           AS sc,
-         sum(CAST(l_discount AS DECIMAL(4,2))) AS sdisc,
-         CAST(count(*) AS BIGINT) AS count_order
-  FROM lineitem
-  WHERE l_shipdate < TIMESTAMP '{TPCH_PRICING_CUTOFF} 00:00:00'
-  GROUP BY l_returnflag, l_linestatus
-)
-"""
-
-
-def q_tpch_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _tpch(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_suppkey",
-        (
-            F.col("l_extendedprice").cast("decimal(12,2)")
-            * (
-                F.lit(1).cast("decimal(3,2)")
-                - F.col("l_discount").cast("decimal(4,2)")
-            )
-        ).alias("rev"),
-    )
-    orders = _tpch(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit(TPCH_REVENUE_LO).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(TPCH_REVENUE_HI).cast("timestamp"))
-    ).select("o_orderkey", "o_custkey")
-    cust = _tpch(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = _tpch(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nat = _tpch(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name", "n_regionkey"
-    )
-    reg = _tpch(spark, sf_dir, "region").filter(
-        F.col("r_name") == TPCH_REVENUE_REGION
-    ).select("r_regionkey")
-    joined = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(
-            F.broadcast(supp),
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(reg), F.col("n_regionkey") == F.col("r_regionkey"))
-    )
-    return (
-        joined.groupBy("n_name")
-        .agg(
-            F.sum("rev").alias("srev"),
-            F.count("*").cast("long").alias("n_lineitems"),
-        )
-        .select(
-            "n_name",
-            F.round(F.col("srev").cast("double"), 2).alias("revenue"),
-            "n_lineitems",
-        )
-    )
-
-
-def _sql_tpch_regional_revenue() -> str:
-    return f"""
-SELECT n_name,
-       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
-                      * (CAST(1 AS DECIMAL(3,2))
-                         - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE), 2)
-         AS revenue,
-       CAST(count(*) AS BIGINT) AS n_lineitems
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE o_orderdate >= TIMESTAMP '{TPCH_REVENUE_LO} 00:00:00'
-  AND o_orderdate < TIMESTAMP '{TPCH_REVENUE_HI} 00:00:00'
-  AND r_name = '{TPCH_REVENUE_REGION}'
-GROUP BY n_name
-"""
-
-
-# --------------------------------------------------------------------------
-# Differentially-private aggregate release (`dp_release`): the mechanics
-# every privacy-conscious data pipeline runs before publishing per-group
-# statistics (Dwork et al. 2006) — bounded-contribution clipping, the
-# Laplace mechanism via inverse-CDF sampling, and sequential-composition
-# epsilon accounting across the two released statistics (per-source doc
-# count, sensitivity 1, and per-source token sum clipped at DP_CLIP per
-# doc, sensitivity DP_CLIP). The "randomness" is a SEEDED md5 uniform
-# (u = (h % 2^20 + 0.5) / 2^20 — never exactly 0.5, and the discrete
-# grid bounds |noise| <= b*ln(2^20) so no infinite tail), which makes
-# the released values deterministic and cross-engine hash-checkable;
-# a production release would swap in a CSPRNG, everything else is the
-# real mechanism.
-#
-# Scale shape: one token-linear projection (clip is per-doc, exact
-# integers), one map-side-combinable per-source agg, noise applied as a
-# scalar expression on the |sources|-row result. The clip branch is
-# provably non-vacuous (n_clipped rides along).
-# --------------------------------------------------------------------------
-
-DP_CLIP = 64  # per-doc token-contribution bound (sensitivity of the sum)
-DP_EPS_COUNT = 0.5
-DP_EPS_SUM = 0.5
-_DP_GRID = 1048576  # 2^20 uniform grid
-
-
-def _dp_lap_spark(salt: str, b: float):
-    u = (
-        _md5_bucket_spark(
-            F.concat(F.lit(salt + "|"), F.col("source")), _DP_GRID
-        ).cast("double")
-        + F.lit(0.5)
-    ) / F.lit(float(_DP_GRID))
-    s = F.when(u >= 0.5, F.lit(1.0)).otherwise(F.lit(-1.0))
-    return -F.lit(b) * s * F.log(F.lit(1.0) - F.lit(2.0) * F.abs(u - F.lit(0.5)))
-
-
-def q_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ntok = F.size(
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0)
-    ).cast("long")
-    per = (
-        _docs(spark, sf_dir)
-        .select(
-            "source",
-            ntok.alias("ntok"),
-            F.least(ntok, F.lit(DP_CLIP)).alias("ctok"),
-        )
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("ctok").cast("long").alias("clip_sum"),
-            F.sum((F.col("ntok") > DP_CLIP).cast("long"))
-            .cast("long")
-            .alias("n_clipped"),
-        )
-    )
-    b1 = 1.0 / DP_EPS_COUNT
-    b2 = DP_CLIP / DP_EPS_SUM
-    return per.select(
-        "source",
-        "n_docs",
-        "clip_sum",
-        "n_clipped",
-        F.round(
-            F.col("n_docs").cast("double") + _dp_lap_spark("dpc", b1), 6
-        ).alias("noisy_count"),
-        F.round(
-            F.col("clip_sum").cast("double") + _dp_lap_spark("dps", b2), 6
-        ).alias("noisy_token_sum"),
-        F.lit(float(b1)).alias("b_count"),
-        F.lit(float(b2)).alias("b_sum"),
-        F.lit(float(DP_EPS_COUNT + DP_EPS_SUM)).alias("eps_total"),
-    )
-
-
-def _sql_dp_lap(salt: str, b: float) -> str:
-    h = _md5_bucket_sql(f"'{salt}' || '|' || source", _DP_GRID)
-    u = f"((CAST({h} AS DOUBLE) + 0.5) / {float(_DP_GRID)})"
-    s = f"(CASE WHEN {u} >= 0.5 THEN 1.0 ELSE -1.0 END)"
-    return f"(-{b} * {s} * ln(1.0 - 2.0 * abs({u} - 0.5)))"
-
-
-def _sql_dp_release() -> str:
-    b1 = 1.0 / DP_EPS_COUNT
-    b2 = DP_CLIP / DP_EPS_SUM
-    return f"""
-WITH per AS (
-  SELECT source,
-         CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(least(ntok, {DP_CLIP})) AS BIGINT) AS clip_sum,
-         CAST(sum(CASE WHEN ntok > {DP_CLIP} THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_clipped
-  FROM (
-    SELECT source,
-           CAST(len(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
-                AS BIGINT) AS ntok
-    FROM documents
-  ) GROUP BY source
-)
-SELECT source, n_docs, clip_sum, n_clipped,
-       round(CAST(n_docs AS DOUBLE) + {_sql_dp_lap("dpc", b1)}, 6)
-         AS noisy_count,
-       round(CAST(clip_sum AS DOUBLE) + {_sql_dp_lap("dps", b2)}, 6)
-         AS noisy_token_sum,
-       {float(b1)} AS b_count,
-       {float(b2)} AS b_sum,
-       {float(DP_EPS_COUNT + DP_EPS_SUM)} AS eps_total
-FROM per
-"""
-
-
-# --------------------------------------------------------------------------
-# Chi-squared feature selection (`chi2_select`): the classic supervised
-# vocabulary ranking (Yang & Pedersen 1997) behind fastText-era quality
-# classifiers — per token, the 2x2 document-presence contingency table
-# against the planted label (the `logreg_quality` rule: doc_id % 3 == 0
-# carries 'posmark' tokens), chi2 = N(AD-BC)^2 / ((A+B)(C+D)(A+C)(B+D)).
-# The planted marker must rank first by construction (ground-truth
-# recovery); natural tokens sit near zero (present in ~every doc of both
-# classes). chi2 is bit-identical across engines (one division of exact
-# integer products), and the ranking runs over the 6dp-ROUNDED value
-# with a token tie-break — `exact_global_rank` Spark-side, a plain
-# window in the single-node oracle.
-#
-# Scale shape: one token-linear distinct-(doc, token) projection, one
-# map-side-combinable per-token agg to the vocab-sized table, class
-# totals re-aggregated and broadcast, ranking range-partitioned. At
-# 100 TB this is the cheapest supervised signal there is.
-# --------------------------------------------------------------------------
-
-
-def q_chi2_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import exact_global_rank
-
-    y = (F.col("doc_id") % 3 == 0).cast("long")
-    npos = F.when(
-        F.col("doc_id") % 3 == 0, 1 + (F.floor(F.col("doc_id") / 3) % 2)
-    ).otherwise(0)
-    ctext = F.concat(
-        F.col("text"),
-        F.when(npos > 0, F.lit(" posmark")).otherwise(F.lit("")),
-    )
-    pres = (
-        _docs(spark, sf_dir)
-        .select(
-            "doc_id",
-            y.alias("y"),
-            F.explode(
-                F.array_distinct(
-                    F.regexp_extract_all(
-                        F.lower(ctext), F.lit(_TOKEN_PATTERN), 0
-                    )
-                )
-            ).alias("token"),
-        )
-    )
-    tok = pres.groupBy("token").agg(
-        F.sum("y").cast("long").alias("a"),
-        F.sum(1 - F.col("y")).cast("long").alias("b"),
-    )
-    totals = (
-        _docs(spark, sf_dir)
-        .select(y.alias("y"))
-        .agg(
-            F.sum("y").cast("long").alias("n_pos"),
-            F.sum(1 - F.col("y")).cast("long").alias("n_neg"),
-        )
-    )
-    t = tok.crossJoin(F.broadcast(totals)).select(
-        "token",
-        "a",
-        "b",
-        (F.col("n_pos") - F.col("a")).alias("c"),
-        (F.col("n_neg") - F.col("b")).alias("d"),
-        (F.col("n_pos") + F.col("n_neg")).alias("n"),
-    )
-    det = F.col("a") * F.col("d") - F.col("b") * F.col("c")
-    chi2 = (
-        (F.col("n") * det * det).cast("double")
-        / (
-            (F.col("a") + F.col("b"))
-            * (F.col("c") + F.col("d"))
-            * (F.col("a") + F.col("c"))
-            * (F.col("b") + F.col("d"))
-        ).cast("double")
-    )
-    scored = t.withColumn("chi2", F.round(chi2, 6)).withColumn(
-        "neg_chi2", -F.col("chi2")
-    )
-    ranked = exact_global_rank(scored, "neg_chi2", ("token",))
-    return ranked.select(
-        "token",
-        F.col("a").cast("long").alias("a"),
-        F.col("b").cast("long").alias("b"),
-        F.col("c").cast("long").alias("c"),
-        F.col("d").cast("long").alias("d"),
-        "chi2",
-        F.col("global_rank").cast("long").alias("rank"),
-    )
-
-
-def _sql_chi2_select() -> str:
-    return f"""
-WITH lab AS (
-  SELECT doc_id,
-         CAST(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS BIGINT) AS y,
-         text || CASE WHEN doc_id % 3 = 0 THEN ' posmark' ELSE '' END
-           AS ctext
-  FROM documents
-), pres AS (
-  SELECT doc_id, y,
-         unnest(list_distinct(
-           regexp_extract_all(lower(ctext), '{_TOKEN_PATTERN}'))) AS token
-  FROM lab
-), tok AS (
-  SELECT token,
-         CAST(sum(y) AS BIGINT) AS a,
-         CAST(sum(1 - y) AS BIGINT) AS b
-  FROM pres GROUP BY token
-), totals AS (
-  SELECT CAST(sum(y) AS BIGINT) AS n_pos,
-         CAST(sum(1 - y) AS BIGINT) AS n_neg
-  FROM lab
-), t AS (
-  SELECT token, a, b,
-         n_pos - a AS c, n_neg - b AS d, n_pos + n_neg AS n
-  FROM tok CROSS JOIN totals
-), scored AS (
-  SELECT token, a, b, c, d,
-         round(CAST(n * (a * d - b * c) * (a * d - b * c) AS DOUBLE)
-               / CAST((a + b) * (c + d) * (a + c) * (b + d) AS DOUBLE), 6)
-           AS chi2
-  FROM t
-)
-SELECT token, a, b, c, d, chi2,
-       CAST(row_number() OVER (ORDER BY chi2 DESC, token) AS BIGINT) AS rank
-FROM scored
-"""
-
-
-# --------------------------------------------------------------------------
-# Split-conformal prediction (`conformal`): distribution-free prediction
-# sets with finite-sample coverage (Vovk et al. 2005; Angelopoulos &
-# Bates 2023) over the `logreg_quality` scorer — the modern way a
-# production classifier reports calibrated uncertainty. An md5
-# calibration/test split; nonconformity = score of the true class's
-# complement (1-p for positives, p for negatives); threshold = the
-# ceil((n_cal+1)(1-alpha))-th smallest calibration nonconformity (exact
-# rank selection — no quantile interpolation ambiguity); each test doc
-# gets the prediction set {y : nonconf_y <= t}, its size (0/1/2 — the
-# abstain and ambiguous branches), and the coverage indicator whose mean
-# the theorem lower-bounds by 1 - alpha.
-#
-# Scale shape: composes the shared trained-scorer chain (`_logreg_scored`
-# / `_sql_logreg_chain` — the web_funnel discipline), then one
-# projection, `exact_global_rank` over the calibration half (range-
-# partitioned), a 1-row threshold broadcast, and a per-test-row scalar
-# evaluation. Nonconformity is ranked on its 6dp-rounded value with a
-# doc_id tie-break so the selected rank is engine-invariant (the margin
-# pytest guarantees the rounding is clear of boundaries).
-# --------------------------------------------------------------------------
-
-CONFORMAL_ALPHA = 0.1
-CONFORMAL_SALT = "conf"
-
-
-def q_conformal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import exact_global_rank
-
-    scored = _logreg_scored(spark, sf_dir).select(
-        "doc_id",
-        "y",
-        "p",
-        _md5_bucket_spark(
-            F.concat_ws("|", F.lit(CONFORMAL_SALT), F.col("doc_id")), 2
-        ).alias("half"),
-    )
-    nonconf = F.when(
-        F.col("y") == 1, F.lit(1.0) - F.col("p")
-    ).otherwise(F.col("p"))
-    frame = scored.withColumn("nc", F.round(nonconf, 6))
-    cal = frame.filter(F.col("half") == 0)
-    ranked = exact_global_rank(cal, "nc", ("doc_id",))
-    # k = ceil((n_cal + 1) * (1 - alpha)); global_count rides as a literal
-    k = F.ceil(
-        (F.col("global_count") + 1) * F.lit(1.0 - CONFORMAL_ALPHA)
-    ).cast("long")
-    thr = (
-        ranked.filter(F.col("global_rank") == k)
-        .select(
-            F.col("nc").alias("t"),
-            F.col("global_count").cast("long").alias("n_cal"),
-        )
-    )
-    test = frame.filter(F.col("half") == 1)
-    in_pos = (F.round(F.lit(1.0) - F.col("p"), 6) <= F.col("t")).cast("long")
-    in_neg = (F.round(F.col("p"), 6) <= F.col("t")).cast("long")
-    return test.crossJoin(F.broadcast(thr)).select(
-        "doc_id",
-        "y",
-        F.round("p", 6).alias("score"),
-        F.col("nc").alias("nonconf"),
-        in_pos.alias("in_set_pos"),
-        in_neg.alias("in_set_neg"),
-        (in_pos + in_neg).cast("long").alias("set_size"),
-        (F.col("nc") <= F.col("t")).cast("long").alias("covered"),
-        F.col("t").alias("threshold"),
-        "n_cal",
-    )
-
-
-def _sql_conformal() -> str:
-    split = _md5_bucket_sql(
-        f"'{CONFORMAL_SALT}' || '|' || CAST(doc_id AS VARCHAR)", 2
-    )
-    a = CONFORMAL_ALPHA
-    return f"""
-WITH {_sql_logreg_chain()}, halves AS (
-  SELECT doc_id, y, p, {split} AS half,
-         round(CASE WHEN y = 1 THEN 1.0 - p ELSE p END, 6) AS nc
-  FROM scores
-), cal AS (
-  SELECT nc, doc_id,
-         row_number() OVER (ORDER BY nc, doc_id) AS rnk,
-         count(*) OVER () AS n_cal
-  FROM halves WHERE half = 0
-), thr AS (
-  SELECT nc AS t, CAST(n_cal AS BIGINT) AS n_cal
-  FROM cal
-  WHERE rnk = CAST(ceil((n_cal + 1) * (1.0 - {a})) AS BIGINT)
-)
-SELECT h.doc_id, h.y,
-       round(h.p, 6) AS score,
-       h.nc AS nonconf,
-       CAST(CASE WHEN round(1.0 - h.p, 6) <= thr.t THEN 1 ELSE 0 END
-            AS BIGINT) AS in_set_pos,
-       CAST(CASE WHEN round(h.p, 6) <= thr.t THEN 1 ELSE 0 END AS BIGINT)
-         AS in_set_neg,
-       CAST(CASE WHEN round(1.0 - h.p, 6) <= thr.t THEN 1 ELSE 0 END
-            + CASE WHEN round(h.p, 6) <= thr.t THEN 1 ELSE 0 END AS BIGINT)
-         AS set_size,
-       CAST(CASE WHEN h.nc <= thr.t THEN 1 ELSE 0 END AS BIGINT)
-         AS covered,
-       thr.t AS threshold,
-       thr.n_cal
-FROM halves h CROSS JOIN thr
-WHERE h.half = 1
-"""
-
-
-# --------------------------------------------------------------------------
-# Poisson bootstrap confidence interval (`bootstrap_ci`): THE distributed
-# bootstrap (Chamandy et al., Google 2012; Kleiner et al.'s BLB is the
-# sibling) — classical resampling needs n draws per replicate and B
-# passes; the Poisson trick gives each row an independent Poisson(1)
-# weight per replicate, so ALL B replicates compute in ONE corpus pass
-# with map-side-combinable weighted sums (the explode-by-replicate is
-# in-task; the exchange carries B rows per partition). Weights come from
-# seeded md5 uniforms through the exact Poisson(1) inverse CDF (literal
-# cumulative constants, capped at 8 — P(W>8) < 1.1e-6). Statistic: mean
-# per-doc token count; CI = percentile method at exact ranks over the B
-# replicate means.
-#
-# Cross-engine determinism: token counts and weights are integers, so
-# every replicate's Σwx and Σw are EXACT integer sums — the replicate
-# mean is one division of identical integers, bit-identical with no
-# reduce-order surface (the auc_eval class of guarantee).
-# --------------------------------------------------------------------------
-
-BOOT_B = 64  # replicates
-BOOT_ALPHA = 0.05
-# Poisson(1) CDF: P(W <= k) for k = 0..7; u >= last -> w = 8
-_POIS_CDF = [
-    0.36787944117144233,
-    0.7357588823428847,
-    0.9196986029286058,
-    0.9810118431238462,
-    0.9963401531726563,
-    0.9994058151824183,
-    0.9999167588507119,
-    0.9999897508033253,
-]
-
-
-def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ntok = F.size(
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0)
-    ).cast("long")
-    rows = _docs(spark, sf_dir).select("doc_id", ntok.alias("x"))
-    rep = rows.select(
-        "doc_id",
-        "x",
-        F.explode(F.sequence(F.lit(0), F.lit(BOOT_B - 1))).alias("b"),
-    )
-    u = (
-        _md5_bucket_spark(
-            F.concat_ws(
-                "|", F.lit("boot"), F.col("b"), F.col("doc_id")
-            ),
-            _DP_GRID,
-        ).cast("double")
-        + F.lit(0.5)
-    ) / F.lit(float(_DP_GRID))
-    w = F.lit(8)
-    for k in range(len(_POIS_CDF) - 1, -1, -1):
-        w = F.when(u < F.lit(_POIS_CDF[k]), F.lit(k)).otherwise(w)
-    reps = (
-        rep.withColumn("w", w.cast("long"))
-        .groupBy("b")
-        .agg(
-            F.sum(F.col("w") * F.col("x")).cast("long").alias("swx"),
-            F.sum("w").cast("long").alias("sw"),
-        )
-        .select(
-            "b",
-            "swx",
-            "sw",
-            (F.col("swx").cast("double") / F.col("sw").cast("double")).alias(
-                "mean_b"
-            ),
-        )
-    )
-    lo_k = math.ceil(BOOT_ALPHA / 2 * BOOT_B)
-    hi_k = math.ceil((1 - BOOT_ALPHA / 2) * BOOT_B)
-    ordered = reps.select(
-        F.sort_array(F.collect_list(F.struct("mean_b", "b"))).alias("ms")
-    ).select(
-        F.element_at("ms", lo_k)["mean_b"].alias("ci_lo"),
-        F.element_at("ms", hi_k)["mean_b"].alias("ci_hi"),
-    )
-    point = rows.agg(
-        (F.sum("x").cast("double") / F.count("*").cast("double")).alias(
-            "point"
-        ),
-        F.count("*").cast("long").alias("n"),
-    )
-    return (
-        reps.crossJoin(F.broadcast(ordered))
-        .crossJoin(F.broadcast(point))
-        .select(
-            F.col("b").cast("long").alias("b"),
-            "swx",
-            "sw",
-            F.round("mean_b", 6).alias("mean_b"),
-            F.round("point", 6).alias("point"),
-            F.round("ci_lo", 6).alias("ci_lo"),
-            F.round("ci_hi", 6).alias("ci_hi"),
-            "n",
-        )
-    )
-
-
-def _sql_bootstrap_ci() -> str:
-    h = _md5_bucket_sql(
-        "'boot' || '|' || CAST(b AS VARCHAR) || '|' || CAST(doc_id AS VARCHAR)",
-        _DP_GRID,
-    )
-    u = f"((CAST({h} AS DOUBLE) + 0.5) / {float(_DP_GRID)})"
-    w = "8"
-    for k in range(len(_POIS_CDF) - 1, -1, -1):
-        w = f"CASE WHEN {u} < {_POIS_CDF[k]!r} THEN {k} ELSE {w} END"
-    lo_k = math.ceil(BOOT_ALPHA / 2 * BOOT_B)
-    hi_k = math.ceil((1 - BOOT_ALPHA / 2) * BOOT_B)
-    return f"""
-WITH rows_ AS (
-  SELECT doc_id,
-         CAST(len(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
-              AS BIGINT) AS x
-  FROM documents
-), rep AS (
-  SELECT doc_id, x, b, CAST({w} AS BIGINT) AS w
-  FROM rows_ CROSS JOIN (SELECT unnest(range({BOOT_B})) AS b)
-), reps AS MATERIALIZED (
-  SELECT b,
-         CAST(sum(w * x) AS BIGINT) AS swx,
-         CAST(sum(w) AS BIGINT) AS sw,
-         CAST(sum(w * x) AS DOUBLE) / CAST(sum(w) AS DOUBLE) AS mean_b
-  FROM rep GROUP BY b
-), ci AS (
-  SELECT (list(mean_b ORDER BY mean_b, b))[{lo_k}] AS ci_lo,
-         (list(mean_b ORDER BY mean_b, b))[{hi_k}] AS ci_hi
-  FROM reps
-), pt AS (
-  SELECT CAST(sum(x) AS DOUBLE) / count(*) AS point,
-         CAST(count(*) AS BIGINT) AS n
-  FROM rows_
-)
-SELECT CAST(reps.b AS BIGINT) AS b, reps.swx, reps.sw,
-       round(reps.mean_b, 6) AS mean_b,
-       round(pt.point, 6) AS point,
-       round(ci.ci_lo, 6) AS ci_lo,
-       round(ci.ci_hi, 6) AS ci_hi,
-       pt.n
-FROM reps CROSS JOIN ci CROSS JOIN pt
-"""
-
-
-# --------------------------------------------------------------------------
-# A/B test with CUPED variance reduction (`cuped_ab`): the modern
-# experimentation stack in one operator (Deng et al. 2013, WSDM) — an md5
-# arm assignment, a planted +CUPED_EFFECT treatment lift on the metric
-# (per-doc token count), Welch's t on the raw difference, then the CUPED
-# adjustment Y - theta*(X - mean(X)) with theta = cov(X,Y)/var(X) over a
-# PRE-TREATMENT covariate (per-doc char count — strongly correlated with
-# tokens, which is precisely when CUPED shines). The adjusted per-arm
-# variance is Var(Y) - 2*theta*Cov + theta^2*Var(X), so the whole
-# analysis derives from one pass of per-arm moment sums — no second scan,
-# no per-doc adjusted column materialized.
-#
-# Cross-engine determinism: the metric and covariate are integers, so
-# every moment sum (Σy, Σy², Σx, Σx², Σxy per arm) is EXACT; floats
-# appear only in the final closed-form statistics — identical ops on
-# identical integers, bit-for-bit (the auc_eval class).
-# --------------------------------------------------------------------------
-
-CUPED_EFFECT = 5  # planted treatment lift in tokens
-
-
-def q_cuped_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    arm = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("ab"), F.col("doc_id")), 2
-    )
-    ntok = F.size(
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0)
-    ).cast("long")
-    rows = _docs(spark, sf_dir).select(
-        arm.alias("arm"),
-        (ntok + F.when(arm == 1, CUPED_EFFECT).otherwise(0)).alias("y"),
-        F.col("n_chars").cast("long").alias("x"),
-    )
-    per = rows.groupBy("arm").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-    )
-    tot = per.agg(
-        F.sum("n").cast("double").alias("tn"),
-        F.sum("sy").cast("double").alias("tsy"),
-        F.sum("sx").cast("double").alias("tsx"),
-        F.sum("sxx").cast("double").alias("tsxx"),
-        F.sum("sxy").cast("double").alias("tsxy"),
-    ).select(
-        "tn",
-        (F.col("tsx") / F.col("tn")).alias("mx"),
-        (
-            (F.col("tsxy") - F.col("tsx") * F.col("tsy") / F.col("tn"))
-            / (F.col("tsxx") - F.col("tsx") * F.col("tsx") / F.col("tn"))
-        ).alias("theta"),
-    )
-    nd = F.col("n").cast("double")
-    my = F.col("sy").cast("double") / nd
-    mx_arm = F.col("sx").cast("double") / nd
-    vy = (F.col("syy").cast("double") - nd * my * my) / (nd - F.lit(1.0))
-    vx = (F.col("sxx").cast("double") - nd * mx_arm * mx_arm) / (
-        nd - F.lit(1.0)
-    )
-    cxy = (F.col("sxy").cast("double") - nd * mx_arm * my) / (nd - F.lit(1.0))
-    stats = per.crossJoin(F.broadcast(tot)).select(
-        "arm",
-        "n",
-        my.alias("mean_y"),
-        mx_arm.alias("mean_x"),
-        vy.alias("var_y"),
-        (my - F.col("theta") * (mx_arm - F.col("mx"))).alias("mean_adj"),
-        (
-            vy
-            - F.lit(2.0) * F.col("theta") * cxy
-            + F.col("theta") * F.col("theta") * vx
-        ).alias("var_adj"),
-        "theta",
-    )
-    # two-arm closed form: pivot the 2-row frame via conditional aggs
-    piv = stats.agg(
-        F.sum(F.when(F.col("arm") == 1, F.col("mean_y"))).alias("m1"),
-        F.sum(F.when(F.col("arm") == 0, F.col("mean_y"))).alias("m0"),
-        F.sum(F.when(F.col("arm") == 1, F.col("mean_adj"))).alias("a1"),
-        F.sum(F.when(F.col("arm") == 0, F.col("mean_adj"))).alias("a0"),
-        F.sum(F.when(F.col("arm") == 1, F.col("var_y") / F.col("n"))).alias(
-            "se1"
-        ),
-        F.sum(F.when(F.col("arm") == 0, F.col("var_y") / F.col("n"))).alias(
-            "se0"
-        ),
-        F.sum(
-            F.when(F.col("arm") == 1, F.col("var_adj") / F.col("n"))
-        ).alias("sa1"),
-        F.sum(
-            F.when(F.col("arm") == 0, F.col("var_adj") / F.col("n"))
-        ).alias("sa0"),
-    ).select(
-        (F.col("m1") - F.col("m0")).alias("diff_raw"),
-        ((F.col("m1") - F.col("m0")) / F.sqrt(F.col("se1") + F.col("se0"))).alias(
-            "t_raw"
-        ),
-        (F.col("a1") - F.col("a0")).alias("diff_adj"),
-        ((F.col("a1") - F.col("a0")) / F.sqrt(F.col("sa1") + F.col("sa0"))).alias(
-            "t_adj"
-        ),
-        ((F.col("sa1") + F.col("sa0")) / (F.col("se1") + F.col("se0"))).alias(
-            "var_ratio"
-        ),
-    )
-    return stats.crossJoin(F.broadcast(piv)).select(
-        F.col("arm").cast("long").alias("arm"),
-        "n",
-        F.round("mean_y", 6).alias("mean_y"),
-        F.round("mean_x", 6).alias("mean_x"),
-        F.round("var_y", 6).alias("var_y"),
-        F.round("mean_adj", 6).alias("mean_adj"),
-        F.round("var_adj", 6).alias("var_adj"),
-        F.round("theta", 6).alias("theta"),
-        F.round("diff_raw", 6).alias("diff_raw"),
-        F.round("t_raw", 6).alias("t_raw"),
-        F.round("diff_adj", 6).alias("diff_adj"),
-        F.round("t_adj", 6).alias("t_adj"),
-        F.round("var_ratio", 6).alias("var_ratio"),
-    )
-
-
-def _sql_cuped_ab() -> str:
-    arm = _md5_bucket_sql("'ab' || '|' || CAST(doc_id AS VARCHAR)", 2)
-    return f"""
-WITH rows_ AS (
-  SELECT {arm} AS arm,
-         CAST(len(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
-              + CASE WHEN {arm} = 1 THEN {CUPED_EFFECT} ELSE 0 END
-              AS BIGINT) AS y,
-         CAST(n_chars AS BIGINT) AS x
-  FROM documents
-), per AS (
-  SELECT arm, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(y * y) AS BIGINT) AS syy,
-         CAST(sum(x) AS BIGINT) AS sx,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
-         CAST(sum(x * y) AS BIGINT) AS sxy
-  FROM rows_ GROUP BY arm
-), tot AS (
-  SELECT CAST(sum(n) AS DOUBLE) AS tn,
-         CAST(sum(sx) AS DOUBLE) / CAST(sum(n) AS DOUBLE) AS mx,
-         (CAST(sum(sxy) AS DOUBLE)
-            - CAST(sum(sx) AS DOUBLE) * CAST(sum(sy) AS DOUBLE)
-              / CAST(sum(n) AS DOUBLE))
-         / (CAST(sum(sxx) AS DOUBLE)
-            - CAST(sum(sx) AS DOUBLE) * CAST(sum(sx) AS DOUBLE)
-              / CAST(sum(n) AS DOUBLE)) AS theta
-  FROM per
-), stats AS (
-  SELECT arm, n,
-         CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) AS mean_y,
-         CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS mean_x,
-         (CAST(syy AS DOUBLE) - CAST(n AS DOUBLE)
-            * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-            * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))
-           / (CAST(n AS DOUBLE) - 1.0) AS var_y,
-         CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)
-           - theta * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) - mx)
-           AS mean_adj,
-         (CAST(syy AS DOUBLE) - CAST(n AS DOUBLE)
-            * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-            * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))
-           / (CAST(n AS DOUBLE) - 1.0)
-         - 2.0 * theta
-           * ((CAST(sxy AS DOUBLE) - CAST(n AS DOUBLE)
-                 * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                 * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))
-              / (CAST(n AS DOUBLE) - 1.0))
-         + theta * theta
-           * ((CAST(sxx AS DOUBLE) - CAST(n AS DOUBLE)
-                 * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                 * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))
-              / (CAST(n AS DOUBLE) - 1.0)) AS var_adj,
-         theta
-  FROM per CROSS JOIN tot
-), piv AS (
-  SELECT sum(CASE WHEN arm = 1 THEN mean_y END)
-           - sum(CASE WHEN arm = 0 THEN mean_y END) AS diff_raw,
-         (sum(CASE WHEN arm = 1 THEN mean_y END)
-            - sum(CASE WHEN arm = 0 THEN mean_y END))
-           / sqrt(sum(CASE WHEN arm = 1 THEN var_y / n END)
-                  + sum(CASE WHEN arm = 0 THEN var_y / n END)) AS t_raw,
-         sum(CASE WHEN arm = 1 THEN mean_adj END)
-           - sum(CASE WHEN arm = 0 THEN mean_adj END) AS diff_adj,
-         (sum(CASE WHEN arm = 1 THEN mean_adj END)
-            - sum(CASE WHEN arm = 0 THEN mean_adj END))
-           / sqrt(sum(CASE WHEN arm = 1 THEN var_adj / n END)
-                  + sum(CASE WHEN arm = 0 THEN var_adj / n END)) AS t_adj,
-         (sum(CASE WHEN arm = 1 THEN var_adj / n END)
-            + sum(CASE WHEN arm = 0 THEN var_adj / n END))
-           / (sum(CASE WHEN arm = 1 THEN var_y / n END)
-              + sum(CASE WHEN arm = 0 THEN var_y / n END)) AS var_ratio
-  FROM stats
-)
-SELECT CAST(s.arm AS BIGINT) AS arm, s.n,
-       round(s.mean_y, 6) AS mean_y,
-       round(s.mean_x, 6) AS mean_x,
-       round(s.var_y, 6) AS var_y,
-       round(s.mean_adj, 6) AS mean_adj,
-       round(s.var_adj, 6) AS var_adj,
-       round(s.theta, 6) AS theta,
-       round(p.diff_raw, 6) AS diff_raw,
-       round(p.t_raw, 6) AS t_raw,
-       round(p.diff_adj, 6) AS diff_adj,
-       round(p.t_adj, 6) AS t_adj,
-       round(p.var_ratio, 6) AS var_ratio
-FROM stats s CROSS JOIN piv p
-"""
-
-
-# --------------------------------------------------------------------------
-# Holt's linear-trend forecast (`holt_forecast`): the classic
-# double-exponential smoother (Holt 1957; Hyndman & Athanasopoulos
-# fpp3 §8.2) — the capacity-planning forecast an event pipeline runs over
-# its hourly volume series. The series is the DENSE hourly grid between
-# the first and last event (missing hours zero-filled — both engines
-# generate the identical grid), smoothed with l_t = α·y_t +
-# (1-α)(l_{t-1}+b_{t-1}), b_t = β(l_t - l_{t-1}) + (1-β)b_{t-1}; one-
-# step-ahead fitted values, in-sample SSE, and an h-step forecast fan
-# l_T + h·b_T ride along every row.
-#
-# Scale shape: one map-side-combinable hourly count agg; the recursion
-# runs over the BOUNDED series (|hours| rows — qdigest's bounded-
-# histogram class, collected as one sorted array), never over events.
-# Cross-engine determinism: the smoother is a pinned-order fold
-# (char_entropy discipline) mirrored by an ordered recursive CTE — both
-# execute the identical per-step formulas in the identical order, so
-# states agree to the last ulp; margin pytest.
-# --------------------------------------------------------------------------
-
-HOLT_ALPHA = 0.5
-HOLT_BETA = 0.3
-HOLT_H = 6  # forecast horizon (hours)
-
-
-def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(
-            F.sequence("h0", "h1", F.expr("interval 1 hour"))
-        ).alias("h")
-    )
-    cnt = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count("*").alias("c")
-    )
-    ser = (
-        grid.join(cnt, "h", "left")
-        .select(
-            "h", F.coalesce("c", F.lit(0)).cast("double").alias("y")
-        )
-    )
-    arr_df = ser.agg(
-        F.sort_array(F.collect_list(F.struct("h", "y"))).alias("a")
-    )
-    a, b_ = float(HOLT_ALPHA), float(HOLT_BETA)
-    y1 = F.element_at("a", 1)["y"]
-    y2 = F.element_at("a", 2)["y"]
-    acc0 = F.named_struct(
-        F.lit("l"), y1,
-        F.lit("b"), y2 - y1,
-        F.lit("fits"), F.array().cast("array<double>"),
-        F.lit("sse"), F.lit(0.0),
-    )
-    new_l = (
-        lambda acc, x: F.lit(a) * x["y"]
-        + F.lit(1.0 - a) * (acc["l"] + acc["b"])
-    )
-    folded = arr_df.select(
-        "a",
-        F.aggregate(
-            F.slice(F.col("a"), 2, F.size("a") - 1),
-            acc0,
-            lambda acc, x: F.named_struct(
-                F.lit("l"), new_l(acc, x),
-                F.lit("b"),
-                F.lit(b_) * (new_l(acc, x) - acc["l"])
-                + F.lit(1.0 - b_) * acc["b"],
-                F.lit("fits"),
-                F.concat(acc["fits"], F.array(acc["l"] + acc["b"])),
-                F.lit("sse"),
-                acc["sse"]
-                + (x["y"] - (acc["l"] + acc["b"]))
-                * (x["y"] - (acc["l"] + acc["b"])),
-            ),
-        ).alias("st"),
-    )
-    rows = folded.select(
-        F.posexplode("a").alias("i0", "e"),
-        F.col("st.l").alias("lf"),
-        F.col("st.b").alias("bf"),
-        F.col("st.fits").alias("fits"),
-        F.col("st.sse").alias("sse"),
-    ).select(
-        (F.col("i0") + 1).cast("long").alias("t"),
-        F.unix_timestamp(F.col("e.h")).alias("epoch"),
-        F.col("e.y").cast("long").alias("y"),
-        # t = 1 has no one-step-ahead prediction (i0 = 0 would be an
-        # invalid 0 index anyway — Spark arrays are 1-based)
-        F.round(
-            F.when(
-                F.col("i0") >= 1, F.element_at("fits", F.col("i0"))
-            ),
-            6,
-        ).alias("fitted"),
-        F.round(
-            F.when(
-                F.col("i0") >= 1,
-                F.col("e.y") - F.element_at("fits", F.col("i0")),
-            ),
-            6,
-        ).alias("resid"),
-        F.round("lf", 6).alias("level_fin"),
-        F.round("bf", 6).alias("trend_fin"),
-        F.round("sse", 6).alias("sse"),
-        *[
-            F.round(
-                F.col("lf") + F.lit(float(h)) * F.col("bf"), 6
-            ).alias(f"fc{h}")
-            for h in range(1, HOLT_H + 1)
-        ],
-    )
-    return rows
-
-
-def _sql_holt_forecast() -> str:
-    a, b_ = float(HOLT_ALPHA), float(HOLT_BETA)
-    fcs = ",\n       ".join(
-        f"round(f.l + {float(h)} * f.b, 6) AS fc{h}"
-        for h in range(1, HOLT_H + 1)
-    )
-    nl = f"({a} * s.y + {1.0 - a} * (hw.l + hw.b))"
-    return f"""
-WITH RECURSIVE bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser AS MATERIALIZED (
-  SELECT row_number() OVER (ORDER BY g.h) AS i, g.h,
-         CAST(coalesce(c.c, 0) AS DOUBLE) AS y
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), nn AS (
-  SELECT CAST(max(i) AS BIGINT) AS n FROM ser
-), hw AS (
-  SELECT CAST(1 AS BIGINT) AS i,
-         (SELECT y FROM ser WHERE i = 1) AS l,
-         (SELECT y FROM ser WHERE i = 2)
-           - (SELECT y FROM ser WHERE i = 1) AS b,
-         CAST(NULL AS DOUBLE) AS fit,
-         CAST(0.0 AS DOUBLE) AS sse
-  UNION ALL
-  SELECT s.i,
-         {nl} AS l,
-         {b_} * ({nl} - hw.l) + {1.0 - b_} * hw.b AS b,
-         hw.l + hw.b AS fit,
-         hw.sse + (s.y - (hw.l + hw.b)) * (s.y - (hw.l + hw.b)) AS sse
-  FROM hw JOIN ser s ON s.i = hw.i + 1
-), fin AS (
-  SELECT hw.l, hw.b, hw.sse FROM hw CROSS JOIN nn WHERE hw.i = nn.n
-)
-SELECT CAST(s.i AS BIGINT) AS t,
-       CAST(epoch(s.h) AS BIGINT) AS epoch,
-       CAST(s.y AS BIGINT) AS y,
-       round(hw.fit, 6) AS fitted,
-       round(s.y - hw.fit, 6) AS resid,
-       round(f.l, 6) AS level_fin,
-       round(f.b, 6) AS trend_fin,
-       round(f.sse, 6) AS sse,
-       {fcs}
-FROM ser s
-JOIN hw ON hw.i = s.i
-CROSS JOIN fin f
-"""
-
-
-# --------------------------------------------------------------------------
-# Seasonal-naive MASE evaluation (`seasonal_mase`): the scale-free
-# forecast-accuracy metric (Hyndman & Koehler 2006) every monitoring
-# stack reports — per event type, the dense hourly series splits into
-# train and a MASE_TEST_H-hour holdout; the seasonal-naive forecast
-# y_{t-24} is scored on the holdout, scaled by the same forecaster's
-# in-train MAE (MASE < 1 = beats the naive seasonal repeat). Completes
-# the time-series pair: `holt_forecast` fits, this evaluates.
-#
-# Scale shape: dense grid = hour-sequence × distinct types (both tiny,
-# broadcast); counts one map-side agg; lags via windows PARTITIONED by
-# event type (never single-partition); absolute errors are integers so
-# the MAE sums are exact — MASE is one division of exact integers per
-# type (bit-identical, the auc_eval class).
-# --------------------------------------------------------------------------
-
-MASE_SEASON = 24  # hours
-MASE_TEST_H = 48  # holdout length (hours)
-
-
-def q_seasonal_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias(
-            "h"
-        )
-    )
-    types = ev.select("event_type").distinct()
-    cnt = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("h"), "event_type"
-    ).agg(F.count("*").alias("c"))
-    ser = (
-        grid.crossJoin(F.broadcast(types))
-        .join(cnt, ["h", "event_type"], "left")
-        .select(
-            "event_type",
-            "h",
-            F.coalesce("c", F.lit(0)).cast("long").alias("y"),
-        )
-    )
-    w = Window.partitionBy("event_type").orderBy("h")
-    lagged = (
-        ser.withColumn("y_lag", F.lag("y", MASE_SEASON).over(w))
-        .withColumn("idx", F.row_number().over(w))
-        .withColumn("n_tot", F.count("*").over(Window.partitionBy("event_type")))
-    )
-    flagged = lagged.filter(F.col("y_lag").isNotNull()).select(
-        "event_type",
-        (F.col("idx") > F.col("n_tot") - MASE_TEST_H).cast("long").alias(
-            "is_test"
-        ),
-        F.abs(F.col("y") - F.col("y_lag")).alias("ae"),
-    )
-    per = flagged.groupBy("event_type").agg(
-        F.sum(F.when(F.col("is_test") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_train"),
-        F.sum(F.when(F.col("is_test") == 1, 1).otherwise(0))
-        .cast("long")
-        .alias("n_test"),
-        F.sum(F.when(F.col("is_test") == 0, F.col("ae")).otherwise(0))
-        .cast("long")
-        .alias("sae_train"),
-        F.sum(F.when(F.col("is_test") == 1, F.col("ae")).otherwise(0))
-        .cast("long")
-        .alias("sae_test"),
-    )
-    mae_tr = F.col("sae_train").cast("double") / F.col("n_train").cast(
-        "double"
-    )
-    mae_te = F.col("sae_test").cast("double") / F.col("n_test").cast("double")
-    return per.select(
-        "event_type",
-        "n_train",
-        "n_test",
-        "sae_train",
-        "sae_test",
-        F.round(mae_tr, 6).alias("mae_naive_train"),
-        F.round(mae_te, 6).alias("mae_test"),
-        F.round(mae_te / mae_tr, 6).alias("mase"),
-    )
-
-
-def _sql_seasonal_mase() -> str:
-    m, th = MASE_SEASON, MASE_TEST_H
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), types AS (
-  SELECT DISTINCT event_type FROM events
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, event_type, count(*) AS c
-  FROM events GROUP BY 1, 2
-), ser AS (
-  SELECT t.event_type, g.h, CAST(coalesce(c.c, 0) AS BIGINT) AS y
-  FROM grid g CROSS JOIN types t
-  LEFT JOIN cnt c ON c.h = g.h AND c.event_type = t.event_type
-), lagged AS (
-  SELECT event_type, y,
-         lag(y, {m}) OVER (PARTITION BY event_type ORDER BY h) AS y_lag,
-         row_number() OVER (PARTITION BY event_type ORDER BY h) AS idx,
-         count(*) OVER (PARTITION BY event_type) AS n_tot
-  FROM ser
-), flagged AS (
-  SELECT event_type,
-         CAST(CASE WHEN idx > n_tot - {th} THEN 1 ELSE 0 END AS BIGINT)
-           AS is_test,
-         abs(y - y_lag) AS ae
-  FROM lagged WHERE y_lag IS NOT NULL
-), per AS (
-  SELECT event_type,
-         CAST(sum(CASE WHEN is_test = 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_train,
-         CAST(sum(CASE WHEN is_test = 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_test,
-         CAST(sum(CASE WHEN is_test = 0 THEN ae ELSE 0 END) AS BIGINT)
-           AS sae_train,
-         CAST(sum(CASE WHEN is_test = 1 THEN ae ELSE 0 END) AS BIGINT)
-           AS sae_test
-  FROM flagged GROUP BY event_type
-)
-SELECT event_type, n_train, n_test, sae_train, sae_test,
-       round(CAST(sae_train AS DOUBLE) / CAST(n_train AS DOUBLE), 6)
-         AS mae_naive_train,
-       round(CAST(sae_test AS DOUBLE) / CAST(n_test AS DOUBLE), 6)
-         AS mae_test,
-       round((CAST(sae_test AS DOUBLE) / CAST(n_test AS DOUBLE))
-             / (CAST(sae_train AS DOUBLE) / CAST(n_train AS DOUBLE)), 6)
-         AS mase
-FROM per
-"""
-
-
-# --------------------------------------------------------------------------
-# BLEU-4 evaluation (`bleu_eval`): the MT-standard n-gram metric
-# (Papineni et al. 2002) — modified n-gram precision with reference
-# clipping, geometric mean over n = 1..4, and the brevity penalty; both
-# the per-document score (zero if any p_n = 0, the unsmoothed rule) and
-# the CORPUS score (numerators/denominators pooled before the ratio —
-# the aggregation the paper actually defines, robust to per-doc zeros).
-# Candidates are deterministic corruptions of the reference: docs with
-# doc_id % 5 == 0 stay verbatim (the BLEU = 1 branch); others drop every
-# 7th token and substitute every 11th — so deletion (brevity) and
-# substitution (precision) effects are both planted.
-#
-# Scale shape: token-linear — per n, one map-side (doc, gram) count for
-# each side, an equi-join on the SAME keys (co-partitioned), per-doc
-# clipped sums, and a 1-row corpus aggregate broadcast back. exp/ln
-# agree to <= 1 ulp (margin pytest, the js_divergence class).
-# --------------------------------------------------------------------------
-
-BLEU_MAX_N = 4
-
-
-def q_bleu_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    ref = token_barrier(
-        docs,
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0),
-        keep_cols=("doc_id",),
-    ).withColumnRenamed("t", "r")
-    corrupt = F.col("doc_id") % 5 != 0
-    cand = F.filter(
-        F.transform(
-            F.sequence(F.lit(0), F.size("r") - 1),
-            lambda i: F.when(corrupt & (i % 7 == 6), F.lit(None))
-            .when(
-                corrupt & (i % 11 == 10),
-                F.concat(F.lit("xerr"), (i % 3).cast("string")),
-            )
-            .otherwise(F.element_at("r", i + 1)),
-        ),
-        lambda x: x.isNotNull(),
-    )
-    base = ref.select("doc_id", "r", cand.alias("c")).localCheckpoint(
-        eager=True
-    )
-
-    def grams(col, n):
-        return F.when(
-            F.size(col) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(col) - n),
-                lambda j: F.concat_ws(" ", F.slice(col, j + 1, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    parts = []
-    for n in range(1, BLEU_MAX_N + 1):
-        cc = (
-            base.select(
-                "doc_id", F.explode(grams(F.col("c"), n)).alias("g")
-            )
-            .groupBy("doc_id", "g")
-            .agg(F.count("*").alias("cc"))
-        )
-        rc = (
-            base.select(
-                "doc_id", F.explode(grams(F.col("r"), n)).alias("g")
-            )
-            .groupBy("doc_id", "g")
-            .agg(F.count("*").alias("rc"))
-        )
-        per = (
-            cc.join(rc, ["doc_id", "g"], "left")
-            .groupBy("doc_id")
-            .agg(
-                F.sum(
-                    F.least(F.col("cc"), F.coalesce("rc", F.lit(0)))
-                )
-                .cast("long")
-                .alias("m"),
-                F.sum("cc").cast("long").alias("c"),
-            )
-            .withColumn("n", F.lit(n))
-        )
-        parts.append(per)
-    alln = parts[0]
-    for p in parts[1:]:
-        alln = alln.unionByName(p)
-    piv = alln.groupBy("doc_id").agg(
-        *[
-            F.coalesce(F.sum(F.when(F.col("n") == n, F.col("m"))), F.lit(0))
-            .cast("long")
-            .alias(f"m{n}")
-            for n in range(1, BLEU_MAX_N + 1)
-        ],
-        *[
-            F.coalesce(F.sum(F.when(F.col("n") == n, F.col("c"))), F.lit(0))
-            .cast("long")
-            .alias(f"c{n}")
-            for n in range(1, BLEU_MAX_N + 1)
-        ],
-    )
-    lens = base.select(
-        "doc_id",
-        F.size("c").cast("long").alias("cand_len"),
-        F.size("r").cast("long").alias("ref_len"),
-    )
-    per_doc = lens.join(piv, "doc_id")
-    bp_doc = F.when(
-        F.col("cand_len") >= F.col("ref_len"), F.lit(1.0)
-    ).otherwise(
-        F.exp(
-            F.lit(1.0)
-            - F.col("ref_len").cast("double")
-            / F.col("cand_len").cast("double")
-        )
-    )
-    logsum_doc = sum(
-        F.log(
-            F.col(f"m{n}").cast("double") / F.col(f"c{n}").cast("double")
-        )
-        for n in range(1, BLEU_MAX_N + 1)
-    )
-    any_zero = None
-    for n in range(1, BLEU_MAX_N + 1):
-        cond = F.col(f"m{n}") == 0
-        any_zero = cond if any_zero is None else (any_zero | cond)
-    bleu_doc = F.when(any_zero, F.lit(0.0)).otherwise(
-        bp_doc * F.exp(logsum_doc / F.lit(float(BLEU_MAX_N)))
-    )
-    corpus = per_doc.agg(
-        F.sum("cand_len").cast("double").alias("tc"),
-        F.sum("ref_len").cast("double").alias("tr"),
-        *[
-            F.sum(f"m{n}").cast("double").alias(f"tm{n}")
-            for n in range(1, BLEU_MAX_N + 1)
-        ],
-        *[
-            F.sum(f"c{n}").cast("double").alias(f"tc{n}")
-            for n in range(1, BLEU_MAX_N + 1)
-        ],
-    )
-    bp_corp = F.when(F.col("tc") >= F.col("tr"), F.lit(1.0)).otherwise(
-        F.exp(F.lit(1.0) - F.col("tr") / F.col("tc"))
-    )
-    logsum_corp = sum(
-        F.log(F.col(f"tm{n}") / F.col(f"tc{n}"))
-        for n in range(1, BLEU_MAX_N + 1)
-    )
-    corp = corpus.select(
-        *[
-            F.round(F.col(f"tm{n}") / F.col(f"tc{n}"), 6).alias(f"p{n}")
-            for n in range(1, BLEU_MAX_N + 1)
-        ],
-        F.round(bp_corp, 6).alias("bp_corpus"),
-        F.round(
-            bp_corp * F.exp(logsum_corp / F.lit(float(BLEU_MAX_N))), 6
-        ).alias("bleu_corpus"),
-    )
-    return per_doc.crossJoin(F.broadcast(corp)).select(
-        "doc_id",
-        "cand_len",
-        "ref_len",
-        *[F.col(f"m{n}") for n in range(1, BLEU_MAX_N + 1)],
-        *[F.col(f"c{n}") for n in range(1, BLEU_MAX_N + 1)],
-        F.round(bleu_doc, 6).alias("bleu_doc"),
-        *[F.col(f"p{n}") for n in range(1, BLEU_MAX_N + 1)],
-        "bp_corpus",
-        "bleu_corpus",
-    )
-
-
-def _sql_bleu_eval() -> str:
-    mn = BLEU_MAX_N
-    gram_parts = []
-    for n in range(1, mn + 1):
-        gram_parts.append(
-            f"""cc{n} AS (
-  SELECT doc_id, g, count(*) AS cc FROM (
-    SELECT doc_id,
-           array_to_string(c[j + 1 : j + {n}], ' ') AS g
-    FROM base, unnest(range(len(c) - {n} + 1)) AS u(j)
-    WHERE len(c) >= {n}) GROUP BY doc_id, g
-), rc{n} AS (
-  SELECT doc_id, g, count(*) AS rc FROM (
-    SELECT doc_id,
-           array_to_string(r[j + 1 : j + {n}], ' ') AS g
-    FROM base, unnest(range(len(r) - {n} + 1)) AS u(j)
-    WHERE len(r) >= {n}) GROUP BY doc_id, g
-), per{n} AS (
-  SELECT c.doc_id,
-         CAST(sum(least(c.cc, coalesce(r.rc, 0))) AS BIGINT) AS m,
-         CAST(sum(c.cc) AS BIGINT) AS c
-  FROM cc{n} c LEFT JOIN rc{n} r ON r.doc_id = c.doc_id AND r.g = c.g
-  GROUP BY c.doc_id
-)"""
-        )
-    grams_sql = ", ".join(gram_parts)
-    mcols = ", ".join(
-        f"coalesce(p{n}.m, 0) AS m{n}, coalesce(p{n}.c, 0) AS c{n}"
-        for n in range(1, mn + 1)
-    )
-    joins = " ".join(
-        f"LEFT JOIN per{n} p{n} ON p{n}.doc_id = l.doc_id"
-        for n in range(1, mn + 1)
-    )
-    logsum_doc = " + ".join(
-        f"ln(CAST(m{n} AS DOUBLE) / CAST(c{n} AS DOUBLE))"
-        for n in range(1, mn + 1)
-    )
-    zero = " OR ".join(f"m{n} = 0" for n in range(1, mn + 1))
-    tcols = ", ".join(
-        f"CAST(sum(m{n}) AS DOUBLE) AS tm{n},"
-        f" CAST(sum(c{n}) AS DOUBLE) AS tc{n}"
-        for n in range(1, mn + 1)
-    )
-    logsum_corp = " + ".join(f"ln(tm{n} / tc{n})" for n in range(1, mn + 1))
-    pcols = ", ".join(
-        f"round(tm{n} / tc{n}, 6) AS p{n}" for n in range(1, mn + 1)
-    )
-    out_p = ", ".join(f"corp.p{n}" for n in range(1, mn + 1))
-    out_m = ", ".join(f"d.m{n}" for n in range(1, mn + 1))
-    out_c = ", ".join(f"d.c{n}" for n in range(1, mn + 1))
-    return f"""
-WITH toked AS (
-  SELECT doc_id,
-         regexp_extract_all(lower(text), '{_TOKEN_PATTERN}') AS r
-  FROM documents
-), base AS MATERIALIZED (
-  SELECT doc_id, r,
-         list_filter(list_transform(range(len(r)),
-           i -> CASE WHEN doc_id % 5 <> 0 AND i % 7 = 6 THEN NULL
-                     WHEN doc_id % 5 <> 0 AND i % 11 = 10
-                       THEN 'xerr' || CAST(i % 3 AS VARCHAR)
-                     ELSE r[i + 1] END),
-           x -> x IS NOT NULL) AS c
-  FROM toked
-), {grams_sql}, per_doc AS MATERIALIZED (
-  SELECT l.doc_id,
-         CAST(len(l.c) AS BIGINT) AS cand_len,
-         CAST(len(l.r) AS BIGINT) AS ref_len,
-         {mcols}
-  FROM base l {joins}
-), corp0 AS (
-  SELECT CAST(sum(cand_len) AS DOUBLE) AS tc,
-         CAST(sum(ref_len) AS DOUBLE) AS tr,
-         {tcols}
-  FROM per_doc
-), corp AS (
-  SELECT {pcols},
-         round(CASE WHEN tc >= tr THEN 1.0
-                    ELSE exp(1.0 - tr / tc) END, 6) AS bp_corpus,
-         round((CASE WHEN tc >= tr THEN 1.0
-                     ELSE exp(1.0 - tr / tc) END)
-               * exp(({logsum_corp}) / {float(mn)}), 6) AS bleu_corpus
-  FROM corp0
-)
-SELECT d.doc_id, d.cand_len, d.ref_len, {out_m}, {out_c},
-       round(CASE WHEN {zero} THEN 0.0
-                  ELSE (CASE WHEN cand_len >= ref_len THEN 1.0
-                             ELSE exp(1.0 - CAST(ref_len AS DOUBLE)
-                                      / CAST(cand_len AS DOUBLE)) END)
-                       * exp(({logsum_doc}) / {float(mn)}) END, 6)
-         AS bleu_doc,
-       {out_p}, corp.bp_corpus, corp.bleu_corpus
-FROM per_doc d CROSS JOIN corp
-"""
-
-
-# --------------------------------------------------------------------------
-# Spearman rank correlation (`spearman_corr`): the robust monotone-
-# association statistic data-quality audits report alongside Pearson —
-# tie-AWARE (average ranks per tied value group, the Kendall/Spearman
-# textbook rule), computed as Pearson over the rank vectors. Two planted
-# pairs prove both branches: (n_chars, tokens) is near-perfectly
-# monotone (rho ~ 1), (md5-noise, tokens) is independent (rho ~ 0).
-#
-# Exactness: average ranks are exact halves (the auc_eval trick — per-
-# value groups + `exact_global_cumsum`, no dense per-row window), so
-# every moment sum is a sum of exactly-representable quarters far below
-# 2^53 — BOTH engines compute bit-identical rho with no reduce-order
-# surface. Ties are real on every variable (integer-valued columns).
-# --------------------------------------------------------------------------
-
-SPEARMAN_PAIRS = ("chars_tokens", "noise_tokens")
-
-
-def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ntok = F.size(
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0)
-    ).cast("long")
-    noise = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("sp"), F.col("doc_id")), 1000
-    )
-    # Round 7 (guide §2.4, the kmv discipline): pin the tokenizing corpus
-    # projection ONCE — the three chained rank joins each re-ran it (and
-    # the two per-pair aggregations re-ran the whole chain again). The
-    # per-value rank tables are all derived from the pinned frame (joins
-    # only add columns one-to-one, so the per-value counts are identical),
-    # and ALL moment sums for both pairs come from ONE aggregation pass,
-    # pinned at 1 row before the two output projections read it.
-    rows = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.col("n_chars").cast("long").alias("xc"),
-        noise.alias("xn"),
-        ntok.alias("y"),
-    ).localCheckpoint(eager=True)
-    ranked = rows
-    for col in ("xc", "xn", "y"):
-        from .operators.ranking import exact_global_cumsum
-
-        g = rows.groupBy(col).agg(F.count("*").alias("cnt"))
-        c = exact_global_cumsum(g, col, "cnt")
-        ranks = c.select(
-            col,
-            (
-                F.col("cum_before").cast("double")
-                + (F.col("cnt").cast("double") + F.lit(1.0)) / F.lit(2.0)
-            ).alias(f"r_{col}"),
-        )
-        ranked = ranked.join(ranks, col)
-    m = ranked.agg(
-        F.count("*").cast("double").alias("n"),
-        F.sum("r_xc").alias("sx_c"),
-        F.sum("r_xn").alias("sx_n"),
-        F.sum("r_y").alias("sy"),
-        F.sum(F.col("r_xc") * F.col("r_xc")).alias("sxx_c"),
-        F.sum(F.col("r_xn") * F.col("r_xn")).alias("sxx_n"),
-        F.sum(F.col("r_y") * F.col("r_y")).alias("syy"),
-        F.sum(F.col("r_xc") * F.col("r_y")).alias("sxy_c"),
-        F.sum(F.col("r_xn") * F.col("r_y")).alias("sxy_n"),
-    ).localCheckpoint(eager=True)
-    out = []
-    for pair, sx, sxx, sxy in (
-        ("chars_tokens", "sx_c", "sxx_c", "sxy_c"),
-        ("noise_tokens", "sx_n", "sxx_n", "sxy_n"),
-    ):
-        out.append(
-            m.select(
-                F.lit(pair).alias("pair"),
-                F.col("n").cast("long").alias("n"),
-                F.round(
-                    (F.col(sxy) - F.col(sx) * F.col("sy") / F.col("n"))
-                    / F.sqrt(
-                        (F.col(sxx) - F.col(sx) * F.col(sx) / F.col("n"))
-                        * (F.col("syy") - F.col("sy") * F.col("sy") / F.col("n"))
-                    ),
-                    6,
-                ).alias("rho"),
-            )
-        )
-    return out[0].unionByName(out[1])
-
-
-def _sql_spearman_corr() -> str:
-    noise = _md5_bucket_sql("'sp' || '|' || CAST(doc_id AS VARCHAR)", 1000)
-
-    def ranked(col):
-        return f"""(
-  SELECT v.*, g.r_{col}
-  FROM v JOIN (
-    SELECT {col},
-           CAST(coalesce(sum(cnt) OVER (ORDER BY {col}
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                AS DOUBLE)
-             + (CAST(cnt AS DOUBLE) + 1.0) / 2.0 AS r_{col}
-    FROM (SELECT {col}, count(*) AS cnt FROM v GROUP BY {col})) g
-  USING ({col}))"""
-
-    corr = (
-        "(sxy - sx * sy / n) / sqrt((sxx - sx * sx / n)"
-        " * (syy - sy * sy / n))"
-    )
-    return f"""
-WITH v AS MATERIALIZED (
-  SELECT doc_id,
-         CAST(n_chars AS BIGINT) AS xc,
-         {noise} AS xn,
-         CAST(len(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
-              AS BIGINT) AS y
-  FROM documents
-), rk AS MATERIALIZED (
-  SELECT a.doc_id, a.r_xc, b.r_xn, c.r_y
-  FROM {ranked("xc")} a
-  JOIN {ranked("xn")} b USING (doc_id)
-  JOIN {ranked("y")} c USING (doc_id)
-), pairs AS (
-  SELECT 'chars_tokens' AS pair, CAST(count(*) AS DOUBLE) AS n,
-         sum(r_xc) AS sx, sum(r_y) AS sy,
-         sum(r_xc * r_xc) AS sxx, sum(r_y * r_y) AS syy,
-         sum(r_xc * r_y) AS sxy
-  FROM rk
-  UNION ALL
-  SELECT 'noise_tokens', CAST(count(*) AS DOUBLE),
-         sum(r_xn), sum(r_y), sum(r_xn * r_xn), sum(r_y * r_y),
-         sum(r_xn * r_y)
-  FROM rk
-)
-SELECT pair, CAST(n AS BIGINT) AS n, round({corr}, 6) AS rho
-FROM pairs
-"""
-
-
-# --------------------------------------------------------------------------
-# Gini / Lorenz vocabulary concentration (`gini_lorenz`): the inequality
-# audit for corpus token mass — how much of the corpus a few head tokens
-# carry (the Lorenz curve Zipf-style corpora bend hard; complements
-# `zipf_fit`'s slope with the standard concentration scalar). Terms rank
-# ascending by count (token tie-break); cum_share is each prefix's
-# fraction of total mass; Gini = 2·Σ(rank·c) / (n·Σc) − (n+1)/n, the
-# exact discrete formula.
-#
-# Exactness: ranks and counts are integers, Σ(rank·c) and Σc are exact
-# integer aggregates, so Gini and every cum_share are single divisions
-# of identical integers — bit-identical both engines (the auc_eval
-# class). Ranking via `exact_global_rank`, prefix sums via
-# `exact_global_cumsum` — range-partitioned, no single-partition window.
-# --------------------------------------------------------------------------
-
-
-def q_gini_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import exact_global_cumsum, exact_global_rank
-
-    freq = (
-        _docs(spark, sf_dir)
-        .select(
-            F.explode(
-                F.regexp_extract_all(
-                    F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0
-                )
-            ).alias("token")
-        )
-        .groupBy("token")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
-    ranked = exact_global_rank(freq, "c", ("token",))
-    cum = exact_global_cumsum(
-        ranked.select("token", "c", F.col("global_rank").alias("rank"),
-                      F.col("global_count").alias("n")),
-        "rank",
-        "c",
-    )
-    tot = cum.agg(
-        F.sum("c").cast("long").alias("tc"),
-        F.sum(F.col("rank") * F.col("c")).cast("long").alias("trc"),
-        F.first("n").cast("double").alias("nd"),
-    )
-    gini = (
-        F.lit(2.0) * F.col("trc").cast("double")
-        / (F.col("nd") * F.col("tc").cast("double"))
-        - (F.col("nd") + F.lit(1.0)) / F.col("nd")
-    )
-    g = tot.select(
-        "tc", F.round(gini, 6).alias("gini")
-    )
-    return cum.crossJoin(F.broadcast(g)).select(
-        "token",
-        "c",
-        F.col("rank").cast("long").alias("rank"),
-        F.col("n").cast("long").alias("vocab_size"),
-        F.round(
-            (F.col("cum_before") + F.col("c")).cast("double")
-            / F.col("tc").cast("double"),
-            6,
-        ).alias("cum_share"),
-        F.round(
-            F.col("rank").cast("double") / F.col("n").cast("double"), 6
-        ).alias("pop_share"),
-        "gini",
-    )
-
-
-def _sql_gini_lorenz() -> str:
-    return f"""
-WITH freq AS (
-  SELECT token, CAST(count(*) AS BIGINT) AS c FROM (
-    SELECT unnest(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
-             AS token
-    FROM documents) GROUP BY token
-), ranked AS (
-  SELECT token, c,
-         CAST(row_number() OVER (ORDER BY c, token) AS BIGINT) AS rank,
-         CAST(count(*) OVER () AS BIGINT) AS n
-  FROM freq
-), cum AS (
-  SELECT token, c, rank, n,
-         CAST(coalesce(sum(c) OVER (ORDER BY rank
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              AS BIGINT) AS cum_before
-  FROM ranked
-), tot AS (
-  SELECT CAST(sum(c) AS BIGINT) AS tc,
-         CAST(sum(rank * c) AS BIGINT) AS trc,
-         CAST(first(n) AS DOUBLE) AS nd
-  FROM cum
-), g AS (
-  SELECT tc,
-         round(2.0 * CAST(trc AS DOUBLE) / (nd * CAST(tc AS DOUBLE))
-               - (nd + 1.0) / nd, 6) AS gini
-  FROM tot
-)
-SELECT cum.token, cum.c, cum.rank, cum.n AS vocab_size,
-       round(CAST(cum.cum_before + cum.c AS DOUBLE)
-             / CAST(g.tc AS DOUBLE), 6) AS cum_share,
-       round(CAST(cum.rank AS DOUBLE) / CAST(cum.n AS DOUBLE), 6)
-         AS pop_share,
-       g.gini
-FROM cum CROSS JOIN g
-"""
-
-
-# --------------------------------------------------------------------------
-# Rank-biased overlap of top-k rankings (`rbo_topk`): the ranking-
-# stability monitor (Webber, Moffat & Zobel 2010) search and curation
-# stacks use to compare two top-k lists with top-weighted emphasis —
-# here the top-RBO_K token rankings of the two md5 corpus halves (the
-# ks_drift split applied to the RANKING surface rather than the
-# distribution). RBO@k = (1-p)·Σ_{d=1..k} p^{d-1}·X_d/d where X_d is
-# the overlap of the two depth-d prefixes; a matched token with ranks
-# (ra, rb) enters every depth d >= max(ra, rb), so X_d is one
-# cumulative count over max-rank — no per-depth set intersection.
-# Set-level Jaccard@k rides along.
-#
-# Scale shape: per-half token counts (map-side), `exact_global_rank`
-# per half, the k-row head tables joined on token, X_d via
-# `exact_global_cumsum` over the bounded depth table; the depth rows
-# and the 1-row RBO total are summary-sized. X_d and Jaccard are exact
-# integers; the geometric weights are literal powers (<= 1 ulp, margin
-# pytest).
-# --------------------------------------------------------------------------
-
-RBO_K = 20
-RBO_P = 0.9
-
-
-def q_rbo_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import exact_global_cumsum
-
-    half = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("ks"), F.col("doc_id")), 2
-    )
-    toks = _docs(spark, sf_dir).select(
-        half.alias("b"),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0)
-        ).alias("token"),
-    )
-    # pinned (round 7): the aggregated (half, token, c) frame feeds BOTH
-    # per-half heads — without the pin each re-ran the token explode +
-    # groupBy corpus chain; the K=100 heads are distributed top-K
-    # (orderBy+limit = TakeOrderedAndProject, the bm25 discipline) with
-    # ranks re-derived by row_number over the bounded K-row result —
-    # identical rows/ranks under the same (-c, token) total order
-    freq = (
-        toks.groupBy("b", "token")
-        .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=True)
-    )
-
-    def head(b):
-        top = (
-            freq.filter(F.col("b") == b)
-            .withColumn("neg", -F.col("c"))
-            .orderBy("neg", "token")
-            .limit(RBO_K)
-        )
-        return top.select(
-            "token",
-            F.row_number()
-            .over(Window.orderBy("neg", "token"))
-            .cast("long")
-            .alias(f"r{b}"),
-        )
-    matched = (
-        head(0)
-        .join(head(1), "token")
-        .select("token", "r0", "r1", F.greatest("r0", "r1").alias("m"))
-        .localCheckpoint(eager=True)
-    )
-    n_match = matched.agg(F.count("*").cast("long").alias("nm"))
-    depth = spark.range(1, RBO_K + 1).select(F.col("id").alias("d"))
-    per_m = matched.groupBy("m").agg(F.count("*").alias("cm"))
-    xd = (
-        depth.join(per_m, depth["d"] == per_m["m"], "left")
-        .select("d", F.coalesce("cm", F.lit(0)).alias("cm"))
-    )
-    xcum = exact_global_cumsum(xd, "d", "cm").select(
-        "d", (F.col("cum_before") + F.col("cm")).cast("long").alias("x_d")
-    )
-    contrib = (
-        F.lit(1.0 - RBO_P)
-        * F.pow(F.lit(RBO_P), F.col("d").cast("double") - F.lit(1.0))
-        * F.col("x_d").cast("double")
-        / F.col("d").cast("double")
-    )
-    terms = xcum.withColumn("contrib", contrib)
-    rbo = terms.agg(
-        F.sort_array(F.collect_list(F.struct("d", "contrib"))).alias("l")
-    ).select(
-        F.aggregate(
-            F.col("l"), F.lit(0.0), lambda a, x: a + x["contrib"]
-        ).alias("rbo")
-    )
-    return (
-        terms.crossJoin(F.broadcast(rbo))
-        .crossJoin(F.broadcast(n_match))
-        .select(
-            F.col("d").cast("long").alias("d"),
-            "x_d",
-            F.round("contrib", 6).alias("contrib"),
-            F.round("rbo", 6).alias("rbo"),
-            F.round(
-                F.col("nm").cast("double")
-                / (F.lit(2.0 * RBO_K) - F.col("nm").cast("double")),
-                6,
-            ).alias("jaccard"),
-            F.col("nm").cast("long").alias("n_matched"),
-        )
-    )
-
-
-def _sql_rbo_topk() -> str:
-    b = _md5_bucket_sql("'ks' || '|' || CAST(doc_id AS VARCHAR)", 2)
-    k, p = RBO_K, RBO_P
-    return f"""
-WITH toks AS (
-  SELECT {b} AS b,
-         unnest(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
-           AS token
-  FROM documents
-), freq AS MATERIALIZED (
-  SELECT b, token, CAST(count(*) AS BIGINT) AS c
-  FROM toks GROUP BY b, token
-), h0 AS (
-  SELECT token, rnk AS r0 FROM (
-    SELECT token, CAST(row_number() OVER (ORDER BY c DESC, token)
-                       AS BIGINT) AS rnk
-    FROM freq WHERE b = 0) WHERE rnk <= {k}
-), h1 AS (
-  SELECT token, rnk AS r1 FROM (
-    SELECT token, CAST(row_number() OVER (ORDER BY c DESC, token)
-                       AS BIGINT) AS rnk
-    FROM freq WHERE b = 1) WHERE rnk <= {k}
-), matched AS MATERIALIZED (
-  SELECT h0.token, r0, r1, greatest(r0, r1) AS m FROM h0 JOIN h1 USING (token)
-), nm AS (
-  SELECT CAST(count(*) AS BIGINT) AS nm FROM matched
-), depth AS (
-  SELECT CAST(unnest(range(1, {k} + 1)) AS BIGINT) AS d
-), xd AS (
-  SELECT d.d,
-         CAST(coalesce((SELECT count(*) FROM matched WHERE m <= d.d), 0)
-              AS BIGINT) AS x_d
-  FROM depth d
-), terms AS MATERIALIZED (
-  SELECT d, x_d,
-         {1.0 - p} * pow({p}, CAST(d AS DOUBLE) - 1.0)
-           * CAST(x_d AS DOUBLE) / CAST(d AS DOUBLE) AS contrib
-  FROM xd
-), rbo AS (
-  SELECT list_sum(list(contrib ORDER BY d)) AS rbo FROM terms
-)
-SELECT t.d, t.x_d,
-       round(t.contrib, 6) AS contrib,
-       round(rbo.rbo, 6) AS rbo,
-       round(CAST(nm.nm AS DOUBLE) / ({2.0 * k} - CAST(nm.nm AS DOUBLE)), 6)
-         AS jaccard,
-       nm.nm AS n_matched
-FROM terms t CROSS JOIN rbo CROSS JOIN nm
-"""
-
-
-# --------------------------------------------------------------------------
-# Population Stability Index (`psi_drift`): the model-risk-management
-# drift standard (credit scoring's metric of record, with the industry
-# verdict bands: < 0.1 stable, < 0.25 moderate, else shifted) — PSI =
-# Σ (p̃_i − q̃_i)·ln(p̃_i/q̃_i) over the EXPECTED side's decile bins.
-# Complements `ks_drift` (sup-norm) and `js_divergence` (categorical):
-# PSI is the binned symmetric-KL practitioners actually gate deploys on.
-# Two scopes prove both verdicts: 'same' compares the md5 halves of the
-# token-count distribution (statistically identical → stable) and
-# 'shifted' adds PSI_SHIFT tokens to half B (→ shifted). Decile edges
-# come from half A via exact rank selection (the token_quantiles
-# machinery); bins are assignment-by-edge-count; zero bins take add-half
-# smoothing ((cnt + 0.5)/(n + 5) over 10 bins — deterministic, both
-# engines).
-#
-# Scale shape: one corpus pass to per-(scope, half) values; edges via
-# `exact_global_rank` (9 rows per scope, broadcast); binning = one
-# broadcast join + map-side sum of indicators; everything downstream of
-# the (scope, bin, half) count table is summary-sized; PSI folds in
-# pinned bin order (ln to <= 1 ulp, margin pytest).
-# --------------------------------------------------------------------------
-
-PSI_BINS = 10
-PSI_SHIFT = 8  # planted half-B shift in the 'shifted' scope
-
-
-def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import exact_global_rank
-
-    half = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("ks"), F.col("doc_id")), 2
-    )
-    ntok = F.size(
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0)
-    ).cast("long")
-    base = _docs(spark, sf_dir).select(half.alias("b"), ntok.alias("v0"))
-    vals = None
-    for scope in ("same", "shifted"):
-        v = F.col("v0") + (
-            F.when(
-                (F.lit(scope) == "shifted") & (F.col("b") == 1), PSI_SHIFT
-            ).otherwise(0)
-        )
-        part = base.select(
-            F.lit(scope).alias("scope"), "b", v.alias("v")
-        )
-        vals = part if vals is None else vals.unionByName(part)
-    vals = vals.localCheckpoint(eager=True)
-    # decile edges from the expected (half-0) side, per scope
-    a = vals.filter(F.col("b") == 0)
-    ranked = None
-    for scope in ("same", "shifted"):
-        r = exact_global_rank(
-            a.filter(F.col("scope") == scope), "v", ("v",)
-        ).select("scope", "v", "global_rank", "global_count")
-        ranked = r if ranked is None else ranked.unionByName(r)
-    edges = (
-        ranked.filter(
-            F.expr(
-                " OR ".join(
-                    f"global_rank = CAST(ceil({i} * global_count /"
-                    f" {PSI_BINS}.0) AS BIGINT)"
-                    for i in range(1, PSI_BINS)
-                )
-            )
-        )
-        .select("scope", F.col("v").alias("e"))
-        .distinct()
-    )
-    # bin map over the DISTINCT value domain (bounded), then one join
-    # back onto the corpus rows — bin = #edges strictly below v
-    dom = vals.select("scope", "v").distinct()
-    domb = (
-        dom.join(F.broadcast(edges), "scope")
-        .groupBy("scope", "v")
-        .agg(F.sum((F.col("v") > F.col("e")).cast("long")).alias("bin"))
-    )
-    cnts = (
-        vals.join(F.broadcast(domb), ["scope", "v"])
-        .groupBy("scope", "bin", "b")
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-    grid = (
-        spark.range(PSI_BINS)
-        .select(F.col("id").alias("bin"))
-        .crossJoin(
-            spark.createDataFrame(
-                [("same",), ("shifted",)], "scope string"
-            )
-        )
-    )
-    wide = (
-        grid.join(
-            cnts.filter(F.col("b") == 0).select(
-                "scope", "bin", F.col("cnt").alias("ca")
-            ),
-            ["scope", "bin"],
-            "left",
-        )
-        .join(
-            cnts.filter(F.col("b") == 1).select(
-                "scope", "bin", F.col("cnt").alias("cb")
-            ),
-            ["scope", "bin"],
-            "left",
-        )
-        .select(
-            "scope",
-            "bin",
-            F.coalesce("ca", F.lit(0)).cast("long").alias("ca"),
-            F.coalesce("cb", F.lit(0)).cast("long").alias("cb"),
-        )
-    )
-    tots = wide.groupBy("scope").agg(
-        F.sum("ca").cast("double").alias("na"),
-        F.sum("cb").cast("double").alias("nb"),
-    )
-    lst = F.sort_array(F.collect_list(F.struct("bin", "ca", "cb")))
-    folded = (
-        wide.join(tots, "scope")
-        .groupBy("scope", "na", "nb")
-        .agg(lst.alias("l"))
-        .select(
-            "scope",
-            "na",
-            "nb",
-            "l",
-            F.aggregate(
-                F.col("l"),
-                F.lit(0.0),
-                lambda acc, x: acc
-                + (
-                    (x["ca"].cast("double") + F.lit(0.5))
-                    / (F.col("na") + F.lit(5.0))
-                    - (x["cb"].cast("double") + F.lit(0.5))
-                    / (F.col("nb") + F.lit(5.0))
-                )
-                * F.log(
-                    (
-                        (x["ca"].cast("double") + F.lit(0.5))
-                        / (F.col("na") + F.lit(5.0))
-                    )
-                    / (
-                        (x["cb"].cast("double") + F.lit(0.5))
-                        / (F.col("nb") + F.lit(5.0))
-                    )
-                ),
-            ).alias("psi"),
-        )
-    )
-    verdict = (
-        F.when(F.col("psi") < 0.1, F.lit("stable"))
-        .when(F.col("psi") < 0.25, F.lit("moderate"))
-        .otherwise(F.lit("shifted"))
-    )
-    return folded.select(
-        "scope", F.posexplode("l").alias("_i", "e"), "na", "nb", "psi"
-    ).select(
-        "scope",
-        F.col("e.bin").cast("long").alias("bin"),
-        F.col("e.ca").cast("long").alias("cnt_a"),
-        F.col("e.cb").cast("long").alias("cnt_b"),
-        F.round(
-            (F.col("e.ca").cast("double") + F.lit(0.5))
-            / (F.col("na") + F.lit(5.0)),
-            6,
-        ).alias("p"),
-        F.round(
-            (F.col("e.cb").cast("double") + F.lit(0.5))
-            / (F.col("nb") + F.lit(5.0)),
-            6,
-        ).alias("q"),
-        F.round("psi", 6).alias("psi"),
-        verdict.alias("verdict"),
-    )
-
-
-def _sql_psi_drift() -> str:
-    b = _md5_bucket_sql("'ks' || '|' || CAST(doc_id AS VARCHAR)", 2)
-    nb = PSI_BINS
-    rank_cond = " OR ".join(
-        f"rnk = CAST(ceil({i} * n / {nb}.0) AS BIGINT)"
-        for i in range(1, nb)
-    )
-    return f"""
-WITH base AS (
-  SELECT {b} AS b,
-         CAST(len(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
-              AS BIGINT) AS v0
-  FROM documents
-), vals AS MATERIALIZED (
-  SELECT scope, b,
-         v0 + CASE WHEN scope = 'shifted' AND b = 1
-                   THEN {PSI_SHIFT} ELSE 0 END AS v
-  FROM base CROSS JOIN (SELECT unnest(['same', 'shifted']) AS scope)
-), ranked AS (
-  SELECT scope, v,
-         CAST(row_number() OVER (PARTITION BY scope ORDER BY v, v)
-              AS BIGINT) AS rnk,
-         CAST(count(*) OVER (PARTITION BY scope) AS BIGINT) AS n
-  FROM vals WHERE b = 0
-), edges AS MATERIALIZED (
-  SELECT DISTINCT scope, v AS e FROM ranked WHERE {rank_cond}
-), dom AS (
-  SELECT DISTINCT scope, v FROM vals
-), domb AS MATERIALIZED (
-  SELECT d.scope, d.v,
-         CAST(sum(CASE WHEN d.v > e.e THEN 1 ELSE 0 END) AS BIGINT) AS bin
-  FROM dom d JOIN edges e ON e.scope = d.scope
-  GROUP BY d.scope, d.v
-), cnts AS (
-  SELECT v.scope, m.bin, v.b, CAST(count(*) AS BIGINT) AS cnt
-  FROM vals v JOIN domb m ON m.scope = v.scope AND m.v = v.v
-  GROUP BY v.scope, m.bin, v.b
-), grid AS (
-  SELECT s.scope, CAST(g.bin AS BIGINT) AS bin
-  FROM (SELECT unnest(['same', 'shifted']) AS scope) s
-  CROSS JOIN (SELECT unnest(range({nb})) AS bin) g
-), wide AS MATERIALIZED (
-  SELECT g.scope, g.bin,
-         CAST(coalesce(a.cnt, 0) AS BIGINT) AS ca,
-         CAST(coalesce(bb.cnt, 0) AS BIGINT) AS cb
-  FROM grid g
-  LEFT JOIN cnts a ON a.scope = g.scope AND a.bin = g.bin AND a.b = 0
-  LEFT JOIN cnts bb ON bb.scope = g.scope AND bb.bin = g.bin AND bb.b = 1
-), tots AS (
-  SELECT scope, CAST(sum(ca) AS DOUBLE) AS na,
-         CAST(sum(cb) AS DOUBLE) AS nb
-  FROM wide GROUP BY scope
-), psi AS (
-  SELECT w.scope, t.na, t.nb,
-         list_sum(list(
-           ((CAST(w.ca AS DOUBLE) + 0.5) / (t.na + 5.0)
-            - (CAST(w.cb AS DOUBLE) + 0.5) / (t.nb + 5.0))
-           * ln(((CAST(w.ca AS DOUBLE) + 0.5) / (t.na + 5.0))
-                / ((CAST(w.cb AS DOUBLE) + 0.5) / (t.nb + 5.0)))
-           ORDER BY w.bin)) AS psi
-  FROM wide w JOIN tots t USING (scope)
-  GROUP BY w.scope, t.na, t.nb
-)
-SELECT w.scope, w.bin, w.ca AS cnt_a, w.cb AS cnt_b,
-       round((CAST(w.ca AS DOUBLE) + 0.5) / (p.na + 5.0), 6) AS p,
-       round((CAST(w.cb AS DOUBLE) + 0.5) / (p.nb + 5.0), 6) AS q,
-       round(p.psi, 6) AS psi,
-       CASE WHEN p.psi < 0.1 THEN 'stable'
-            WHEN p.psi < 0.25 THEN 'moderate'
-            ELSE 'shifted' END AS verdict
-FROM wide w JOIN psi p USING (scope)
-"""
-
-
-# --------------------------------------------------------------------------
-# OLAP CUBE rollup (`doc_cube`): the multi-granularity aggregation surface
-# every BI/warehouse layer sits on — one pass emits ALL four granularities
-# of (source, lang) — per-pair, per-source, per-lang, grand total — with
-# the SQL-standard GROUPING() bitmask distinguishing real keys from
-# aggregated-away placeholders (Spark `df.cube` + `grouping_id` vs DuckDB
-# `GROUP BY CUBE` + `GROUPING`; first listed column = most significant
-# bit, both engines follow the standard). Measures are exact integers
-# (count / sum / min / max of n_chars) plus one derived double (avg,
-# 6dp). NULL group keys are coalesced to '(all)' AFTER the grouping id is
-# computed, so a hypothetical real-NULL key could never collide with a
-# placeholder.
-#
-# Scale shape: CUBE over G grouping sets is ONE scan with map-side
-# combinable partial aggs expanded G-fold before the single exchange —
-# at 100 TB this is strictly cheaper than G separate groupBy passes and
-# never materializes the fact table twice. Output is |sources| x |langs|
-# sized — summary-scale.
-# --------------------------------------------------------------------------
-
-
-def q_doc_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    return (
-        d.cube("source", "lang")
-        .agg(
-            F.grouping_id("source", "lang").cast("long").alias("gid"),
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("chars"),
-            F.min("n_chars").cast("long").alias("min_chars"),
-            F.max("n_chars").cast("long").alias("max_chars"),
-        )
-        .select(
-            F.coalesce("source", F.lit("(all)")).alias("source_g"),
-            F.coalesce("lang", F.lit("(all)")).alias("lang_g"),
-            "gid",
-            "n_docs",
-            "chars",
-            "min_chars",
-            "max_chars",
-            F.round(
-                F.col("chars").cast("double") / F.col("n_docs").cast("double"),
-                6,
-            ).alias("avg_chars"),
-        )
-    )
-
-
-def _sql_doc_cube() -> str:
-    return """
-SELECT coalesce(source, '(all)') AS source_g,
-       coalesce(lang, '(all)') AS lang_g,
-       CAST(GROUPING(source, lang) AS BIGINT) AS gid,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS chars,
-       CAST(min(n_chars) AS BIGINT) AS min_chars,
-       CAST(max(n_chars) AS BIGINT) AS max_chars,
-       round(CAST(sum(n_chars) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-         AS avg_chars
-FROM documents
-GROUP BY CUBE(source, lang)
-"""
-
-
-# --------------------------------------------------------------------------
-# Cohort retention matrix (`cohort_retention`): THE product-analytics
-# table — users grouped by their acquisition day (first RET_EVENT), then
-# for each day-offset the share of the cohort still active. Day index is
-# exact integer epoch-microseconds // 86_400_000_000 (timezone-free, the
-# event_funnel discipline — no date-formatting surface); activity =
-# distinct (user, day) pairs of the same event type, so the matrix is the
-# classic triangle (purchase days are sparse: ~1/3 of user-days fire at
-# sf0.001, cohorts split over 5 acquisition days). retention(c, 0) = 1 by
-# construction (the min day has an event), which is what makes the
-# offset-0 row the cohort-size denominator.
-#
-# Scale shape: one filtered scan → per-user min (map-side combinable) +
-# distinct (user, day) (one exchange each); the user-sized cohort join
-# co-partitions on user_id under AQE (never broadcast — |users| grows
-# with the corpus); the per-cohort denominator frame is |cohorts|-sized
-# and broadcast. Output is |cohorts| x RET_MAX_OFFSET — summary-scale.
-# --------------------------------------------------------------------------
-
-RET_EVENT = "purchase"
-RET_MAX_OFFSET = 14  # matrix width cap (events span ~30 days at any SF)
-_DAY_US = 86_400_000_000
-
-
-def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    day = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-        f" div {_DAY_US}"
-    )
-    ev = (
-        _events(spark, sf_dir)
-        .filter(F.col("event_type") == RET_EVENT)
-        .select("user_id", day.alias("d"))
-    )
-    act = ev.distinct()
-    coh = ev.groupBy("user_id").agg(F.min("d").alias("cd"))
-    m = (
-        act.join(coh, "user_id")
-        .select("cd", (F.col("d") - F.col("cd")).alias("off"), "user_id")
-        .filter(F.col("off") <= RET_MAX_OFFSET)
-        .groupBy("cd", "off")
-        .agg(F.count("*").cast("long").alias("n_active"))
-    )
-    base = m.filter(F.col("off") == 0).select(
-        "cd", F.col("n_active").alias("n_cohort")
-    )
-    return m.join(F.broadcast(base), "cd").select(
-        F.col("cd").cast("long").alias("cohort_day"),
-        F.col("off").cast("long").alias("day_offset"),
-        "n_active",
-        "n_cohort",
-        F.round(
-            F.col("n_active").cast("double") / F.col("n_cohort").cast("double"),
-            6,
-        ).alias("retention"),
-    )
-
-
-def _sql_cohort_retention() -> str:
-    return f"""
-WITH ev AS (
-  SELECT user_id, epoch_us(ts) // {_DAY_US} AS d
-  FROM events WHERE event_type = {_sql_quote(RET_EVENT)}
-), act AS (
-  SELECT DISTINCT user_id, d FROM ev
-), coh AS (
-  SELECT user_id, min(d) AS cd FROM ev GROUP BY user_id
-), m AS MATERIALIZED (
-  SELECT c.cd, a.d - c.cd AS off, CAST(count(*) AS BIGINT) AS n_active
-  FROM act a JOIN coh c USING (user_id)
-  WHERE a.d - c.cd <= {RET_MAX_OFFSET}
-  GROUP BY c.cd, a.d - c.cd
-)
-SELECT CAST(m.cd AS BIGINT) AS cohort_day,
-       CAST(m.off AS BIGINT) AS day_offset,
-       m.n_active,
-       b.n_active AS n_cohort,
-       round(CAST(m.n_active AS DOUBLE) / CAST(b.n_active AS DOUBLE), 6)
-         AS retention
-FROM m JOIN (SELECT cd, n_active FROM m WHERE off = 0) b USING (cd)
-"""
-
-
-# --------------------------------------------------------------------------
-# K-minimum-values sketch + set-operation estimates (`kmv_intersect`):
-# the distinct-count sketch family's SET-ALGEBRA member (Beyer et al.
-# 2007) — the capability HLL lacks: because a KMV sketch is literally the
-# K smallest hash values of the set, the K smallest of two sketches'
-# union IS the union's sketch, and the fraction of union-sketch values
-# present in both sides estimates Jaccard — giving |A∪B| and |A∩B|
-# estimates from two fixed-size summaries. Sets = the md5 doc-halves'
-# distinct 3-token shingle sets (~16k members per half at sf0.001 with
-# heavy natural overlap — the raw 31-token vocabulary is smaller than K
-# and would degenerate the sketch, probed); hash = the shared 60-bit md5
-# prefix (M = 2^60); estimator |S| ≈ (K−1)·M/h_K.
-# Exact distinct/union/intersection counts ride along so the sketch
-# error is visible in the output (and bound in pytest).
-#
-# Scale shape: one corpus pass to distinct (half, hash) — at 100 TB the
-# sketch build is a map-side-combinable "keep K smallest" agg (here the
-# audited exact_global_rank takes that role, range-partitioned, no
-# single-partition window); everything downstream operates on <= 2K-row
-# frames, broadcast. The exact columns are the one full groupBy — they
-# are the validation surface the sketch replaces at scale (same role as
-# n_exact in approx_distinct / hll_merge).
-# --------------------------------------------------------------------------
-
-KMV_K = 64
-KMV_SHINGLE_N = 3
-_KMV_M = float(1 << 60)  # hash space size (md5_prefix60 is 60-bit)
-
-
-def q_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.hashing import md5_prefix60_spark
-
-    n = KMV_SHINGLE_N
-    toks_expr = F.regexp_extract_all(
-        F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0
-    )
-    docs = token_barrier(
-        _docs(spark, sf_dir), toks_expr, keep_cols=("doc_id",), alias="toks"
-    )
-    half = _md5_bucket_spark(F.concat_ws("|", F.lit("ks"), F.col("doc_id")), 2)
-    shingle_arr = F.when(
-        F.size("toks") >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size("toks") - n),
-                lambda i: F.array_join(F.slice("toks", i + 1, n), " "),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    sh = docs.select(half.alias("b"), F.explode(shingle_arr).alias("token"))
-    # Round 7 (guide §2.4, the bm25 discipline): pin the corpus-sized
-    # distinct (b, u) frame ONCE — it feeds both 64-row sketches AND the
-    # exact-count arm, and without the pin each of the ~7 downstream
-    # references re-ran the tokenize/shingle/md5/distinct chain. The
-    # bottom-K sketches are then distributed top-K (orderBy + limit =
-    # TakeOrderedAndProject, identical rows under the total order on u)
-    # instead of exact_global_rank's corpus-wide rank machinery; ranks are
-    # re-derived by row_number over the <= 2K-row union, which is bounded.
-    hashed = (
-        sh.select("b", md5_prefix60_spark(F.col("token")).alias("u"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sk = {}
-    for b in (0, 1):
-        sk[b] = (
-            hashed.filter(F.col("b") == b)
-            .select("u")
-            .orderBy("u")
-            .limit(KMV_K)
-            .localCheckpoint(eager=True)
-        )
-    est = {
-        b: sk[b].agg(
-            (
-                F.lit(KMV_K - 1.0)
-                * F.lit(_KMV_M)
-                / F.max("u").cast("double")
-            ).alias(f"est_{n}")
-        )
-        for b, n in ((0, "a"), (1, "b"))
-    }
-    uni = (
-        sk[0]
-        .unionByName(sk[1])
-        .distinct()
-        .orderBy("u")
-        .limit(KMV_K)
-        .select(
-            F.row_number()
-            .over(Window.orderBy("u"))
-            .cast("long")
-            .alias("global_rank"),
-            "u",
-        )
-    )
-    usk = (
-        uni.join(sk[0].select("u", F.lit(1).alias("ia")), "u", "left")
-        .join(sk[1].select("u", F.lit(1).alias("ib")), "u", "left")
-        .select(
-            F.col("global_rank").cast("long").alias("rank"),
-            "u",
-            F.coalesce("ia", F.lit(0)).cast("long").alias("in_a"),
-            F.coalesce("ib", F.lit(0)).cast("long").alias("in_b"),
-        )
-    )
-    usum = usk.agg(
-        (
-            F.lit(KMV_K - 1.0) * F.lit(_KMV_M) / F.max("u").cast("double")
-        ).alias("est_union"),
-        (
-            F.sum(F.col("in_a") * F.col("in_b")).cast("double")
-            / F.lit(float(KMV_K))
-        ).alias("jaccard_k"),
-    )
-    ex = hashed.groupBy("u").agg(
-        F.max((F.col("b") == 0).cast("int")).alias("a"),
-        F.max((F.col("b") == 1).cast("int")).alias("bb"),
-    )
-    exact = ex.agg(
-        F.sum("a").cast("long").alias("exact_a"),
-        F.sum("bb").cast("long").alias("exact_b"),
-        F.count("*").cast("long").alias("exact_union"),
-        F.sum(F.col("a") * F.col("bb")).cast("long").alias("exact_inter"),
-    )
-    return (
-        usk.crossJoin(F.broadcast(est[0]))
-        .crossJoin(F.broadcast(est[1]))
-        .crossJoin(F.broadcast(usum))
-        .crossJoin(F.broadcast(exact))
-        .select(
-            "rank",
-            "u",
-            "in_a",
-            "in_b",
-            F.round("est_a", 6).alias("est_a"),
-            F.round("est_b", 6).alias("est_b"),
-            F.round("est_union", 6).alias("est_union"),
-            F.round("jaccard_k", 6).alias("jaccard_k"),
-            F.round(F.col("jaccard_k") * F.col("est_union"), 6).alias(
-                "est_inter"
-            ),
-            "exact_a",
-            "exact_b",
-            "exact_union",
-            "exact_inter",
-        )
-    )
-
-
-def _sql_kmv_intersect() -> str:
-    from .functions.hashing import md5_prefix60_sql
-
-    b = _md5_bucket_sql("'ks' || '|' || CAST(doc_id AS VARCHAR)", 2)
-    h = md5_prefix60_sql("token")
-    k, m, n = KMV_K, _KMV_M, KMV_SHINGLE_N
-    return f"""
-WITH t AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '{_TOKEN_PATTERN}') AS t
-  FROM documents
-), toks AS (
-  SELECT {b} AS b,
-         unnest(list_distinct(list_transform(
-             range(1, greatest(len(t) - {n} + 1, 0) + 1),
-             i -> array_to_string(t[i : i + {n} - 1], ' ')))) AS token
-  FROM t
-), hashed AS MATERIALIZED (
-  SELECT DISTINCT b, {h} AS u FROM toks
-), s0 AS MATERIALIZED (
-  SELECT u FROM (
-    SELECT u, row_number() OVER (ORDER BY u) AS rk
-    FROM (SELECT DISTINCT u FROM hashed WHERE b = 0)) WHERE rk <= {k}
-), s1 AS MATERIALIZED (
-  SELECT u FROM (
-    SELECT u, row_number() OVER (ORDER BY u) AS rk
-    FROM (SELECT DISTINCT u FROM hashed WHERE b = 1)) WHERE rk <= {k}
-), uni AS MATERIALIZED (
-  SELECT u, rk FROM (
-    SELECT u, row_number() OVER (ORDER BY u) AS rk
-    FROM (SELECT u FROM s0 UNION SELECT u FROM s1)) WHERE rk <= {k}
-), usk AS MATERIALIZED (
-  SELECT CAST(uni.rk AS BIGINT) AS rank, uni.u,
-         CAST(CASE WHEN a.u IS NULL THEN 0 ELSE 1 END AS BIGINT) AS in_a,
-         CAST(CASE WHEN bb.u IS NULL THEN 0 ELSE 1 END AS BIGINT) AS in_b
-  FROM uni LEFT JOIN s0 a ON a.u = uni.u LEFT JOIN s1 bb ON bb.u = uni.u
-), summ AS (
-  SELECT ({k} - 1.0) * {m} / CAST(max(u) AS DOUBLE) AS est_union,
-         CAST(sum(in_a * in_b) AS DOUBLE) / {float(k)} AS jaccard_k
-  FROM usk
-), ea AS (
-  SELECT ({k} - 1.0) * {m} / CAST(max(u) AS DOUBLE) AS est_a FROM s0
-), eb AS (
-  SELECT ({k} - 1.0) * {m} / CAST(max(u) AS DOUBLE) AS est_b FROM s1
-), ex AS (
-  SELECT u, max(CASE WHEN b = 0 THEN 1 ELSE 0 END) AS a,
-         max(CASE WHEN b = 1 THEN 1 ELSE 0 END) AS bb
-  FROM hashed GROUP BY u
-), exact AS (
-  SELECT CAST(sum(a) AS BIGINT) AS exact_a,
-         CAST(sum(bb) AS BIGINT) AS exact_b,
-         CAST(count(*) AS BIGINT) AS exact_union,
-         CAST(sum(a * bb) AS BIGINT) AS exact_inter
-  FROM ex
-)
-SELECT usk.rank, usk.u, usk.in_a, usk.in_b,
-       round(ea.est_a, 6) AS est_a,
-       round(eb.est_b, 6) AS est_b,
-       round(summ.est_union, 6) AS est_union,
-       round(summ.jaccard_k, 6) AS jaccard_k,
-       round(summ.jaccard_k * summ.est_union, 6) AS est_inter,
-       exact.exact_a, exact.exact_b, exact.exact_union, exact.exact_inter
-FROM usk CROSS JOIN summ CROSS JOIN ea CROSS JOIN eb CROSS JOIN exact
-"""
-
-
-# --------------------------------------------------------------------------
-# CUSUM changepoint detection (`cusum_changepoint`): Page's 1954
-# cumulative-sum control chart — the sequential mean-shift detector SRE /
-# data-quality monitors run over ingestion rates — on the dense hourly
-# event-count series. S_t = max(0, S_{t-1} + (x_t − μ0 − k)) with
-# allowance k = μ0/2 and alarm threshold h = CUSUM_H_MULT·μ0, where μ0 is
-# the first-third baseline mean. EVERYTHING is exact BIGINT: scaling the
-# recurrence by 2·n0 turns (x_t − μ0 − μ0/2) into 2·n0·x_t − 3·sum0 and
-# the threshold into 2·CUSUM_H_MULT·sum0 — no float enters the operator,
-# so the fold is bit-identical across engines with no rounding surface
-# at all (the exact-reduction design rule from PLANS.md). Two scopes:
-# 'same' (raw series, no alarm) and 'shifted' (counts double after
-# t0 = 2n/3 — the planted changepoint), so both verdict branches fire.
-#
-# Scale shape: one corpus pass to hourly counts (map-side combinable);
-# the series is |hours|-sized (bounded, summary-scale) — the pinned-order
-# fold and the recursive-CTE twin both run over that summary, never the
-# corpus. first_alarm_t is a per-scope min over the alarm flags (no
-# window function).
-# --------------------------------------------------------------------------
-
-CUSUM_H_MULT = 12  # alarm threshold in baseline-means (h = 12·μ0)
-
-
-def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias("h")
-    )
-    cnt = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count("*").alias("c")
-    )
-    ser = grid.join(cnt, "h", "left").select(
-        "h", F.coalesce("c", F.lit(0)).cast("long").alias("x")
-    )
-    arr = (
-        ser.agg(F.sort_array(F.collect_list(F.struct("h", "x"))).alias("a"))
-        .select(
-            "a",
-            F.expr("cast(size(a) div 3 as bigint)").alias("n0"),
-            F.expr("cast((2 * size(a)) div 3 as bigint)").alias("t0"),
-            F.expr(
-                "aggregate(slice(a, 1, size(a) div 3),"
-                " cast(0 as bigint), (acc, e) -> acc + e.x)"
-            ).alias("sum0"),
-        )
-    )
-    scopes = None
-    for scope in ("same", "shifted"):
-        eff = F.transform(
-            F.col("a"),
-            lambda e, i: F.struct(
-                e["h"].alias("h"),
-                F.when(
-                    (F.lit(scope) == "shifted")
-                    & ((i + 1).cast("long") > F.col("t0")),
-                    2 * e["x"],
-                )
-                .otherwise(e["x"])
-                .alias("y"),
-            ),
-        )
-        part = arr.select(
-            F.lit(scope).alias("scope"), eff.alias("a"), "n0", "t0", "sum0"
-        )
-        scopes = part if scopes is None else scopes.unionByName(part)
-    new_s = lambda acc, e: F.greatest(  # noqa: E731
-        F.lit(0).cast("long"),
-        acc["s"] + 2 * F.col("n0") * e["y"] - 3 * F.col("sum0"),
-    )
-    folded = scopes.select(
-        "scope",
-        "a",
-        "n0",
-        "t0",
-        "sum0",
-        F.aggregate(
-            F.col("a"),
-            F.named_struct(
-                F.lit("s"),
-                F.lit(0).cast("long"),
-                F.lit("ss"),
-                F.array().cast("array<bigint>"),
-            ),
-            lambda acc, e: F.named_struct(
-                F.lit("s"),
-                new_s(acc, e),
-                F.lit("ss"),
-                F.concat(acc["ss"], F.array(new_s(acc, e))),
-            ),
-        )["ss"].alias("ss"),
-    )
-    thresh = 2 * CUSUM_H_MULT * F.col("sum0")
-    rows = folded.select(
-        "scope",
-        F.posexplode("a").alias("i0", "e"),
-        "n0",
-        "t0",
-        "sum0",
-        "ss",
-    ).select(
-        "scope",
-        (F.col("i0") + 1).cast("long").alias("t"),
-        F.unix_timestamp(F.col("e.h")).alias("epoch"),
-        F.col("e.y").cast("long").alias("y"),
-        (2 * F.col("n0") * F.col("e.y") - 3 * F.col("sum0")).alias("resid"),
-        F.element_at("ss", F.col("i0") + 1).alias("s"),
-        thresh.cast("long").alias("threshold"),
-        (F.element_at("ss", F.col("i0") + 1) > thresh)
-        .cast("long")
-        .alias("alarm"),
-        F.col("t0").alias("shift_t0"),
-    )
-    fa = rows.groupBy("scope").agg(
-        F.min(F.when(F.col("alarm") == 1, F.col("t"))).alias("first_alarm_t")
-    )
-    return rows.join(F.broadcast(fa), "scope").select(
-        "scope",
-        "t",
-        "epoch",
-        "y",
-        "resid",
-        "s",
-        "threshold",
-        "alarm",
-        "shift_t0",
-        F.col("first_alarm_t").cast("long").alias("first_alarm_t"),
-    )
-
-
-def _sql_cusum_changepoint() -> str:
-    h = CUSUM_H_MULT
-    return f"""
-WITH RECURSIVE bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser AS MATERIALIZED (
-  SELECT row_number() OVER (ORDER BY g.h) AS t, g.h,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS x
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), nn AS (
-  SELECT CAST(max(t) // 3 AS BIGINT) AS n0,
-         CAST((2 * max(t)) // 3 AS BIGINT) AS t0
-  FROM ser
-), base AS (
-  SELECT CAST(sum(s.x) AS BIGINT) AS sum0 FROM ser s, nn WHERE s.t <= nn.n0
-), eff AS MATERIALIZED (
-  SELECT sc.scope, s.t, s.h,
-         CASE WHEN sc.scope = 'shifted' AND s.t > nn.t0
-              THEN 2 * s.x ELSE s.x END AS y
-  FROM ser s
-  CROSS JOIN nn
-  CROSS JOIN (SELECT unnest(['same', 'shifted']) AS scope) sc
-), cu AS (
-  SELECT e.scope, e.t,
-         greatest(0, 2 * nn.n0 * e.y - 3 * b.sum0) AS s
-  FROM eff e, nn, base b WHERE e.t = 1
-  UNION ALL
-  SELECT e.scope, e.t,
-         greatest(0, cu.s + 2 * nn.n0 * e.y - 3 * b.sum0) AS s
-  FROM cu JOIN eff e ON e.scope = cu.scope AND e.t = cu.t + 1, nn, base b
-), rows_ AS MATERIALIZED (
-  SELECT e.scope, CAST(e.t AS BIGINT) AS t,
-         CAST(epoch(e.h) AS BIGINT) AS epoch,
-         CAST(e.y AS BIGINT) AS y,
-         CAST(2 * nn.n0 * e.y - 3 * b.sum0 AS BIGINT) AS resid,
-         CAST(cu.s AS BIGINT) AS s,
-         CAST(2 * {h} * b.sum0 AS BIGINT) AS threshold,
-         CAST(CASE WHEN cu.s > 2 * {h} * b.sum0 THEN 1 ELSE 0 END
-              AS BIGINT) AS alarm,
-         nn.t0 AS shift_t0
-  FROM eff e
-  JOIN cu ON cu.scope = e.scope AND cu.t = e.t, nn, base b
-), fa AS (
-  SELECT scope, CAST(min(CASE WHEN alarm = 1 THEN t END) AS BIGINT)
-           AS first_alarm_t
-  FROM rows_ GROUP BY scope
-)
-SELECT r.*, fa.first_alarm_t
-FROM rows_ r JOIN fa USING (scope)
-"""
-
-
-# --------------------------------------------------------------------------
-# NDCG ranking evaluation (`ndcg_eval`): the graded retrieval metric
-# (Järvelin & Kekäläinen 2002) — completes the evaluation quadrant's
-# RANKING face (auc_eval scores binary discrimination, rbo_topk compares
-# two rankings; NDCG scores one ranking against graded ground truth, the
-# search/recsys standard). Queries = sources, items = their docs,
-# relevance = md5-derived grade 0..3, and two scorers: 'model'
-# (rel·NDCG_W + hash-noise — informative but imperfect: the noise range
-# overlaps adjacent grades) and 'random' (noise only). DCG@K with the
-# 2^rel−1 gain, IDCG over the full group, NDCG = DCG/IDCG; the model
-# scope must dominate the random scope (pytest).
-#
-# Scale shape: ranks are row_number windows PARTITIONED by
-# (scope, source) — bounded 25-doc groups, never single-partition; the
-# log2 gains fold in pinned rank order per group (list_sum ORDER BY twin
-# in DuckDB), per-scope means ride a broadcast 1-row agg per scope.
-# --------------------------------------------------------------------------
-
-NDCG_K = 10
-NDCG_W = 800  # model-score grade weight vs U(0, 1000) hash noise
-
-
-def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rel = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("rel"), F.col("doc_id")), 4
-    )
-    noise = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("sc"), F.col("doc_id")), 1000
-    )
-    base = _docs(spark, sf_dir).select(
-        "source", "doc_id", rel.alias("rel"), noise.alias("u")
-    )
-    df = None
-    for scope in ("model", "random"):
-        score = (
-            F.col("rel") * NDCG_W + F.col("u")
-            if scope == "model"
-            else F.col("u")
-        )
-        part = base.select(
-            F.lit(scope).alias("scope"),
-            "source",
-            "doc_id",
-            "rel",
-            score.cast("long").alias("score"),
-        )
-        df = part if df is None else df.unionByName(part)
-    w = Window.partitionBy("scope", "source").orderBy(
-        F.desc("score"), "doc_id"
-    )
-    wi = Window.partitionBy("scope", "source").orderBy(
-        F.desc("rel"), "doc_id"
-    )
-    ranked = df.select(
-        "scope",
-        "source",
-        "rel",
-        F.row_number().over(w).alias("r"),
-        F.row_number().over(wi).alias("ri"),
-    )
-
-    def _fold(rank_col: str):
-        lst = F.sort_array(F.collect_list(F.struct(rank_col, "rel")))
-        return F.aggregate(
-            lst,
-            F.lit(0.0),
-            lambda acc, e: acc
-            + (F.pow(F.lit(2.0), e["rel"].cast("double")) - F.lit(1.0))
-            / F.log2(e[rank_col].cast("double") + F.lit(1.0)),
-        )
-
-    dcg = (
-        ranked.filter(F.col("r") <= NDCG_K)
-        .groupBy("scope", "source")
-        .agg(_fold("r").alias("dcg"))
-    )
-    idcg = (
-        ranked.filter(F.col("ri") <= NDCG_K)
-        .groupBy("scope", "source")
-        .agg(_fold("ri").alias("idcg"), F.count("*").alias("k_used"))
-    )
-    n_items = df.groupBy("scope", "source").agg(
-        F.count("*").cast("long").alias("n_items")
-    )
-    per = (
-        dcg.join(idcg, ["scope", "source"])
-        .join(n_items, ["scope", "source"])
-        .select(
-            "scope",
-            "source",
-            "n_items",
-            "dcg",
-            "idcg",
-            F.when(
-                F.col("idcg") > 0, F.col("dcg") / F.col("idcg")
-            )
-            .otherwise(F.lit(0.0))
-            .alias("ndcg"),
-        )
-    )
-    mean = per.groupBy("scope").agg(
-        (
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("source", "ndcg"))),
-                F.lit(0.0),
-                lambda acc, e: acc + e["ndcg"],
-            )
-            / F.count("*").cast("double")
-        ).alias("mean_ndcg")
-    )
-    return per.join(F.broadcast(mean), "scope").select(
-        "scope",
-        "source",
-        "n_items",
-        F.round("dcg", 6).alias("dcg"),
-        F.round("idcg", 6).alias("idcg"),
-        F.round("ndcg", 6).alias("ndcg"),
-        F.round("mean_ndcg", 6).alias("mean_ndcg"),
-    )
-
-
-def _sql_ndcg_eval() -> str:
-    rel = _md5_bucket_sql("'rel' || '|' || CAST(doc_id AS VARCHAR)", 4)
-    noise = _md5_bucket_sql("'sc' || '|' || CAST(doc_id AS VARCHAR)", 1000)
-    k = NDCG_K
-    return f"""
-WITH base AS (
-  SELECT source, doc_id, {rel} AS rel, {noise} AS u FROM documents
-), scored AS (
-  SELECT sc.scope, b.source, b.doc_id, b.rel,
-         CAST(CASE WHEN sc.scope = 'model'
-                   THEN b.rel * {NDCG_W} + b.u ELSE b.u END
-              AS BIGINT) AS score
-  FROM base b CROSS JOIN (SELECT unnest(['model', 'random']) AS scope) sc
-), ranked AS MATERIALIZED (
-  SELECT scope, source, rel,
-         row_number() OVER (PARTITION BY scope, source
-                            ORDER BY score DESC, doc_id) AS r,
-         row_number() OVER (PARTITION BY scope, source
-                            ORDER BY rel DESC, doc_id) AS ri
-  FROM scored
-), dcg AS (
-  SELECT scope, source,
-         list_sum(list((pow(2.0, CAST(rel AS DOUBLE)) - 1.0)
-                       / log2(CAST(r AS DOUBLE) + 1.0) ORDER BY r)) AS dcg
-  FROM ranked WHERE r <= {k} GROUP BY scope, source
-), idcg AS (
-  SELECT scope, source,
-         list_sum(list((pow(2.0, CAST(rel AS DOUBLE)) - 1.0)
-                       / log2(CAST(ri AS DOUBLE) + 1.0) ORDER BY ri))
-           AS idcg
-  FROM ranked WHERE ri <= {k} GROUP BY scope, source
-), n_items AS (
-  SELECT scope, source, CAST(count(*) AS BIGINT) AS n_items
-  FROM scored GROUP BY scope, source
-), per AS MATERIALIZED (
-  SELECT d.scope, d.source, n.n_items, d.dcg, i.idcg,
-         CASE WHEN i.idcg > 0 THEN d.dcg / i.idcg ELSE 0.0 END AS ndcg
-  FROM dcg d
-  JOIN idcg i ON i.scope = d.scope AND i.source = d.source
-  JOIN n_items n ON n.scope = d.scope AND n.source = d.source
-), mean AS (
-  SELECT scope,
-         list_sum(list(ndcg ORDER BY source)) / count(*) AS mean_ndcg
-  FROM per GROUP BY scope
-)
-SELECT p.scope, p.source, p.n_items,
-       round(p.dcg, 6) AS dcg,
-       round(p.idcg, 6) AS idcg,
-       round(p.ndcg, 6) AS ndcg,
-       round(m.mean_ndcg, 6) AS mean_ndcg
-FROM per p JOIN mean m USING (scope)
-"""
-
-
-# --------------------------------------------------------------------------
-# Cohen's kappa inter-annotator agreement (`cohen_kappa`): the
-# chance-corrected agreement coefficient (Cohen 1960) every labeling /
-# LLM-judge pipeline reports before trusting its annotations. Rater A =
-# the oracled C1 document-type classifier; rater B = A with an
-# md5-planted disagreement: 1-in-KAPPA_DISAGREE_MOD docs get a uniformly
-# chosen DIFFERENT label (shift 1..6 around DOCUMENT_TYPE_ORDER), so
-# agreement is structurally ~80% and kappa is strictly below po but
-# above 0. EXACT integer arithmetic end to end: kappa =
-# (N·Σdiag − Σ_k row_k·col_k) / (N² − Σ_k row_k·col_k) — BIGINT
-# numerators/denominators, one final division per emitted double (po,
-# pe, kappa at 6dp; the auc_eval exactness class).
-#
-# Scale shape: the label pass rides the already-audited classify plan
-# (broadcast keyword theta-join + map-side combine); the confusion
-# matrix is |labels|²-sized, marginals a full outer join of two tiny
-# aggs, scalars on broadcast 1-row frames.
-# --------------------------------------------------------------------------
-
-KAPPA_DISAGREE_MOD = 5  # 1-in-5 docs get a planted different rater-B label
-# the label universe must include the classifier's total=0 FALLBACK label:
-# array_position/list_position diverge on a missing label (0 vs NULL)
-KAPPA_TYPES = list(DOCUMENT_TYPE_ORDER) + ["general_medical"]
-
-
-def q_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    types = KAPPA_TYPES
-    k = len(types)
-    cls = q_classify(spark, sf_dir).select(
-        "doc_id", F.col("document_type").alias("label_a")
-    )
-    arr = F.array(*[F.lit(t) for t in types])
-    disagree = (
-        _md5_bucket_spark(
-            F.concat_ws("|", F.lit("rater"), F.col("doc_id")),
-            KAPPA_DISAGREE_MOD,
-        )
-        == 0
-    )
-    shift = (
-        _md5_bucket_spark(
-            F.concat_ws("|", F.lit("shift"), F.col("doc_id")), k - 1
-        )
-        + 1
-    )
-    pos = F.array_position(arr, F.col("label_a"))
-    label_b = F.when(
-        disagree,
-        F.element_at(
-            arr, (F.pmod(pos - 1 + shift, F.lit(k)) + 1).cast("int")
-        ),
-    ).otherwise(F.col("label_a"))
-    # pinned (round 7): the <= |labels|^2-row confusion matrix feeds the
-    # row/col marginals, the scalar aggregates AND the output join — each
-    # reference re-ran the whole classify corpus chain without the pin
-    # (measured: 18 parquet scans in the plan)
-    conf = (
-        cls.select("label_a", label_b.alias("label_b"))
-        .groupBy("label_a", "label_b")
-        .agg(F.count("*").cast("long").alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    rowm = conf.groupBy("label_a").agg(
-        F.sum("n").cast("long").alias("row_n")
-    )
-    colm = conf.groupBy("label_b").agg(
-        F.sum("n").cast("long").alias("col_n")
-    )
-    margins = (
-        rowm.select(F.col("label_a").alias("lbl"), "row_n")
-        .join(colm.select(F.col("label_b").alias("lbl"), "col_n"), "lbl", "full")
-        .select(
-            "lbl",
-            F.coalesce("row_n", F.lit(0)).cast("long").alias("row_n"),
-            F.coalesce("col_n", F.lit(0)).cast("long").alias("col_n"),
-        )
-    )
-    scalars = conf.agg(
-        F.sum("n").cast("long").alias("n_total"),
-        F.sum(
-            F.when(F.col("label_a") == F.col("label_b"), F.col("n")).otherwise(
-                0
-            )
-        )
-        .cast("long")
-        .alias("n_agree"),
-    ).crossJoin(
-        F.broadcast(
-            margins.agg(
-                F.sum(F.col("row_n") * F.col("col_n"))
-                .cast("long")
-                .alias("pe_num")
-            )
-        )
-    )
-    kappa = (
-        (F.col("n_total") * F.col("n_agree") - F.col("pe_num")).cast("double")
-        / (F.col("n_total") * F.col("n_total") - F.col("pe_num")).cast(
-            "double"
-        )
-    )
-    return (
-        conf.join(F.broadcast(rowm), "label_a")
-        .join(F.broadcast(colm), "label_b")
-        .crossJoin(F.broadcast(scalars))
-        .select(
-            "label_a",
-            "label_b",
-            "n",
-            "row_n",
-            "col_n",
-            "n_total",
-            "n_agree",
-            F.round(
-                F.col("n_agree").cast("double")
-                / F.col("n_total").cast("double"),
-                6,
-            ).alias("po"),
-            F.round(
-                F.col("pe_num").cast("double")
-                / (F.col("n_total") * F.col("n_total")).cast("double"),
-                6,
-            ).alias("pe"),
-            F.round(kappa, 6).alias("kappa"),
-        )
-    )
-
-
-def _sql_cohen_kappa() -> str:
-    types = KAPPA_TYPES
-    k = len(types)
-    arr = "[" + ", ".join(_sql_quote(t) for t in types) + "]"
-    dis = _md5_bucket_sql("'rater' || '|' || CAST(doc_id AS VARCHAR)",
-                          KAPPA_DISAGREE_MOD)
-    shift = _md5_bucket_sql("'shift' || '|' || CAST(doc_id AS VARCHAR)", k - 1)
-    return f"""
-WITH cls AS ({SQL_CLASSIFY}),
-pairs AS (
-  SELECT document_type AS label_a,
-         CASE WHEN {dis} = 0
-              THEN {arr}[CAST(
-                (list_position({arr}, document_type) - 1 + {shift} + 1) % {k}
-                AS INTEGER) + 1]
-              ELSE document_type END AS label_b
-  FROM cls
-), conf AS MATERIALIZED (
-  SELECT label_a, label_b, CAST(count(*) AS BIGINT) AS n
-  FROM pairs GROUP BY label_a, label_b
-), rowm AS (
-  SELECT label_a, CAST(sum(n) AS BIGINT) AS row_n FROM conf GROUP BY label_a
-), colm AS (
-  SELECT label_b, CAST(sum(n) AS BIGINT) AS col_n FROM conf GROUP BY label_b
-), margins AS (
-  SELECT coalesce(r.label_a, c.label_b) AS lbl,
-         CAST(coalesce(r.row_n, 0) AS BIGINT) AS row_n,
-         CAST(coalesce(c.col_n, 0) AS BIGINT) AS col_n
-  FROM rowm r FULL OUTER JOIN colm c ON c.label_b = r.label_a
-), scalars AS (
-  SELECT (SELECT CAST(sum(n) AS BIGINT) FROM conf) AS n_total,
-         (SELECT CAST(coalesce(sum(CASE WHEN label_a = label_b THEN n END),
-                               0) AS BIGINT) FROM conf) AS n_agree,
-         (SELECT CAST(sum(row_n * col_n) AS BIGINT) FROM margins) AS pe_num
-)
-SELECT c.label_a, c.label_b, c.n, r.row_n, m.col_n,
-       s.n_total, s.n_agree,
-       round(CAST(s.n_agree AS DOUBLE) / CAST(s.n_total AS DOUBLE), 6) AS po,
-       round(CAST(s.pe_num AS DOUBLE)
-             / CAST(s.n_total * s.n_total AS DOUBLE), 6) AS pe,
-       round(CAST(s.n_total * s.n_agree - s.pe_num AS DOUBLE)
-             / CAST(s.n_total * s.n_total - s.pe_num AS DOUBLE), 6) AS kappa
-FROM conf c
-JOIN rowm r USING (label_a)
-JOIN colm m USING (label_b)
-CROSS JOIN scalars s
-"""
-
-
-# --------------------------------------------------------------------------
-# TPC-H Q3 shape (`tpch_shipping`): the unshipped-orders shipping-
-# priority query — the warehouse's three-way fact join with OPPOSING
-# date predicates (orders placed before the cutoff, lineitems shipped
-# after it) and a global top-N by exact DECIMAL revenue. Completes the
-# star-schema trio: Q1 (tpch_pricing) scans, Q5 (tpch_regional_revenue)
-# joins the dim chain, Q3 adds selective fact-fact pruning + top-N.
-#
-# Scale shape: both date filters push to the parquet scans; the
-# customer-segment dim broadcasts; the fact-fact join shuffles on
-# orderkey (AQE); the top-N is orderBy+limit → TakeOrderedAndProject
-# (distributed per-partition heads merged on the driver — never a
-# single-partition window). DECIMAL revenue makes the ordering exact, so
-# the N-th boundary cannot drift between engines; orderkey tie-break.
-# --------------------------------------------------------------------------
-
-TPCH_SHIP_SEGMENT = "BUILDING"
-TPCH_SHIP_CUTOFF = "1998-07-01"
-TPCH_SHIP_TOPN = 10
-
-
-def q_tpch_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = (
-        _tpch(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == TPCH_SHIP_SEGMENT)
-        .select("c_custkey")
-    )
-    orders = (
-        _tpch(spark, sf_dir, "orders")
-        .filter(
-            F.col("o_orderdate") < F.lit(TPCH_SHIP_CUTOFF).cast("timestamp")
-        )
-        .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-    )
-    li = (
-        _tpch(spark, sf_dir, "lineitem")
-        .filter(
-            F.col("l_shipdate") > F.lit(TPCH_SHIP_CUTOFF).cast("timestamp")
-        )
-        .select(
-            "l_orderkey",
-            (
-                F.col("l_extendedprice").cast("decimal(12,2)")
-                * (
-                    F.lit(1).cast("decimal(3,2)")
-                    - F.col("l_discount").cast("decimal(4,2)")
-                )
-            ).alias("rev"),
-        )
-    )
-    agg = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum("rev").alias("srev"))
-    )
-    return (
-        agg.orderBy(F.desc("srev"), "l_orderkey")
-        .limit(TPCH_SHIP_TOPN)
-        .select(
-            "l_orderkey",
-            F.round(F.col("srev").cast("double"), 2).alias("revenue"),
-            F.unix_timestamp("o_orderdate").alias("orderdate_epoch"),
-            "o_orderpriority",
-        )
-    )
-
-
-def _sql_tpch_shipping() -> str:
-    return f"""
-SELECT l_orderkey,
-       round(CAST(srev AS DOUBLE), 2) AS revenue,
-       CAST(epoch(o_orderdate) AS BIGINT) AS orderdate_epoch,
-       o_orderpriority
-FROM (
-  SELECT l.l_orderkey, o.o_orderdate, o.o_orderpriority,
-         sum(CAST(l.l_extendedprice AS DECIMAL(12,2))
-             * (CAST(1 AS DECIMAL(3,2))
-                - CAST(l.l_discount AS DECIMAL(4,2)))) AS srev
-  FROM customer c
-  JOIN orders o ON o.o_custkey = c.c_custkey
-  JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-  WHERE c.c_mktsegment = {_sql_quote(TPCH_SHIP_SEGMENT)}
-    AND o.o_orderdate < TIMESTAMP '{TPCH_SHIP_CUTOFF} 00:00:00'
-    AND l.l_shipdate > TIMESTAMP '{TPCH_SHIP_CUTOFF} 00:00:00'
-  GROUP BY 1, 2, 3
-)
-ORDER BY srev DESC, l_orderkey
-LIMIT {TPCH_SHIP_TOPN}
-"""
-
-
-# --------------------------------------------------------------------------
-# TPC-H Q18 shape (`tpch_big_orders`): the large-volume-customer query —
-# a HAVING-threshold semi-join back onto the same fact table (orders
-# whose total quantity exceeds the threshold, with their customer).
-# The shape Q1/Q3/Q5 don't cover: a grouped predicate on the fact
-# becomes the driving filter of a second pass over itself.
-#
-# Scale shape: the qualifying-order set is one map-side-combinable
-# groupBy + filter (summary-sized — the >threshold tail); it joins back
-# to lineitem/orders as an equi-join Spark plans as a broadcast once AQE
-# sees the tiny side, exactly how a warehouse executes Q18. DECIMAL
-# quantity sums are exact, so the threshold boundary cannot drift.
-# --------------------------------------------------------------------------
-
-TPCH_BIGORDER_QTY = 250
-
-
-def q_tpch_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _tpch(spark, sf_dir, "lineitem").select(
-        "l_orderkey", F.col("l_quantity").cast("decimal(12,2)").alias("qty")
-    )
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("qty").alias("total_qty"))
-        .filter(F.col("total_qty") > TPCH_BIGORDER_QTY)
-    )
-    orders = _tpch(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    cust = _tpch(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    return (
-        big.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            "c_name",
-            "c_custkey",
-            F.col("l_orderkey").alias("o_orderkey"),
-            F.unix_timestamp("o_orderdate").alias("orderdate_epoch"),
-            F.round(F.col("o_totalprice").cast("double"), 2).alias(
-                "o_totalprice"
-            ),
-            F.round(F.col("total_qty").cast("double"), 2).alias("total_qty"),
-        )
-    )
-
-
-def _sql_tpch_big_orders() -> str:
-    return f"""
-WITH big AS (
-  SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(12,2))) AS total_qty
-  FROM lineitem GROUP BY l_orderkey
-  HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > {TPCH_BIGORDER_QTY}
-)
-SELECT c.c_name, c.c_custkey, b.l_orderkey AS o_orderkey,
-       CAST(epoch(o.o_orderdate) AS BIGINT) AS orderdate_epoch,
-       round(CAST(o.o_totalprice AS DOUBLE), 2) AS o_totalprice,
-       round(CAST(b.total_qty AS DOUBLE), 2) AS total_qty
-FROM big b
-JOIN orders o ON o.o_orderkey = b.l_orderkey
-JOIN customer c ON c.c_custkey = o.o_custkey
-"""
-
-
-# --------------------------------------------------------------------------
-# Rolling-window anomaly detection (`rolling_anomaly`): the trailing
-# z-score monitor every ingestion/ops dashboard runs — for each hour,
-# mean/std over the PREVIOUS ANOM_W hours (ROWS BETWEEN W PRECEDING AND
-# 1 PRECEDING — the frame never includes the scored point, so a spike
-# cannot mask itself) and the standardized residual z = (x − μ)/σ.
-# Complements `cusum_changepoint` (persistent level shifts) with the
-# point-anomaly face. Two scopes: 'same' (raw series — must stay quiet
-# at Z=ANOM_Z) and 'spiked' (one planted hour at t0 = 3n/4 gets
-# x' = 6x + 50 — multiplicative+floor, so the spike scales with any SF's
-# rate and always clears the threshold).
-#
-# Exactness: the window aggregates are BIGINT sums (cnt, Σx, Σx²); the
-# variance numerator cnt·Σx² − (Σx)² stays integer, so only the final
-# σ/z doubles exist (identical expression order both engines, 6dp).
-#
-# Scale shape: one map-side hourly count agg; the window runs over the
-# BOUNDED dense series (|hours| rows — the holt/qdigest summary class),
-# partitioned by scope, never over raw events.
-# --------------------------------------------------------------------------
-
-ANOM_W = 48  # trailing window (hours)
-ANOM_Z = 6.0  # anomaly threshold (probed quiet on the raw series)
-ANOM_SPIKE_MULT = 6
-ANOM_SPIKE_ADD = 50
-
-
-def q_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias("h")
-    )
-    cnt = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count("*").alias("c")
-    )
-    ser = grid.join(cnt, "h", "left").select(
-        "h", F.coalesce("c", F.lit(0)).cast("long").alias("x")
-    )
-    n1 = ser.agg(F.count("*").alias("n"))
-    base = ser.crossJoin(F.broadcast(n1)).select(
-        "h",
-        "x",
-        F.expr("cast((3 * n) div 4 as bigint)").alias("t0"),
-    )
-    scoped = None
-    for scope in ("same", "spiked"):
-        part = base.select(F.lit(scope).alias("scope"), "h", "x", "t0")
-        scoped = part if scoped is None else scoped.unionByName(part)
-    wq = Window.partitionBy("scope").orderBy("h")
-    idx = scoped.select(
-        "scope",
-        "h",
-        "t0",
-        F.row_number().over(wq).cast("long").alias("t"),
-        "x",
-    ).select(
-        "scope",
-        "h",
-        "t",
-        "t0",
-        F.when(
-            (F.col("scope") == "spiked") & (F.col("t") == F.col("t0")),
-            ANOM_SPIKE_MULT * F.col("x") + ANOM_SPIKE_ADD,
-        )
-        .otherwise(F.col("x"))
-        .alias("y"),
-    )
-    fr = (
-        Window.partitionBy("scope")
-        .orderBy("t")
-        .rowsBetween(-ANOM_W, -1)
-    )
-    stats = idx.select(
-        "scope",
-        "t",
-        "t0",
-        F.unix_timestamp("h").alias("epoch"),
-        "y",
-        F.count("y").over(fr).cast("long").alias("wc"),
-        F.sum("y").over(fr).cast("long").alias("ws"),
-        F.sum(F.col("y") * F.col("y")).over(fr).cast("long").alias("wss"),
-    ).filter(F.col("t") > ANOM_W)
-    mean = F.col("ws").cast("double") / F.col("wc").cast("double")
-    varn = (
-        F.col("wc") * F.col("wss") - F.col("ws") * F.col("ws")
-    ).cast("double") / (F.col("wc") * (F.col("wc") - 1)).cast("double")
-    z = (F.col("y").cast("double") - mean) / F.sqrt(varn)
-    return stats.select(
-        "scope",
-        "t",
-        "epoch",
-        "y",
-        "wc",
-        "ws",
-        "wss",
-        F.round(mean, 6).alias("mean"),
-        F.round(F.sqrt(varn), 6).alias("std"),
-        F.round(z, 6).alias("z"),
-        (z > ANOM_Z).cast("long").alias("anomaly"),
-        F.col("t0").alias("spike_t0"),
-    )
-
-
-def _sql_rolling_anomaly() -> str:
-    w, zt = ANOM_W, ANOM_Z
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser AS MATERIALIZED (
-  SELECT row_number() OVER (ORDER BY g.h) AS t, g.h,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS x
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), nn AS (
-  SELECT CAST((3 * max(t)) // 4 AS BIGINT) AS t0 FROM ser
-), eff AS (
-  SELECT sc.scope, s.t, s.h, nn.t0,
-         CASE WHEN sc.scope = 'spiked' AND s.t = nn.t0
-              THEN {ANOM_SPIKE_MULT} * s.x + {ANOM_SPIKE_ADD}
-              ELSE s.x END AS y
-  FROM ser s
-  CROSS JOIN nn
-  CROSS JOIN (SELECT unnest(['same', 'spiked']) AS scope) sc
-), stats AS MATERIALIZED (
-  SELECT scope, CAST(t AS BIGINT) AS t, t0,
-         CAST(epoch(h) AS BIGINT) AS epoch,
-         CAST(y AS BIGINT) AS y,
-         CAST(count(y) OVER win AS BIGINT) AS wc,
-         CAST(sum(y) OVER win AS BIGINT) AS ws,
-         CAST(sum(y * y) OVER win AS BIGINT) AS wss
-  FROM eff
-  WINDOW win AS (PARTITION BY scope ORDER BY t
-                 ROWS BETWEEN {w} PRECEDING AND 1 PRECEDING)
-)
-SELECT scope, t, epoch, y, wc, ws, wss,
-       round(CAST(ws AS DOUBLE) / CAST(wc AS DOUBLE), 6) AS mean,
-       round(sqrt(CAST(wc * wss - ws * ws AS DOUBLE)
-                  / CAST(wc * (wc - 1) AS DOUBLE)), 6) AS std,
-       round((CAST(y AS DOUBLE) - CAST(ws AS DOUBLE) / CAST(wc AS DOUBLE))
-             / sqrt(CAST(wc * wss - ws * ws AS DOUBLE)
-                    / CAST(wc * (wc - 1) AS DOUBLE)), 6) AS z,
-       CAST(CASE WHEN (CAST(y AS DOUBLE)
-                       - CAST(ws AS DOUBLE) / CAST(wc AS DOUBLE))
-                      / sqrt(CAST(wc * wss - ws * ws AS DOUBLE)
-                             / CAST(wc * (wc - 1) AS DOUBLE)) > {zt}
-                 THEN 1 ELSE 0 END AS BIGINT) AS anomaly,
-       t0 AS spike_t0
-FROM stats
-WHERE t > {w}
-"""
-
-
-# --------------------------------------------------------------------------
-# Expected Calibration Error (`ece_calibration`): the reliability-diagram
-# metric (Naeini et al. 2015; Guo et al. 2017) — does a probabilistic
-# scorer's confidence MEAN what it says? Completes the probabilistic-
-# model eval face over the shared logreg chain: auc_eval scores
-# discrimination, conformal wraps set coverage, ECE audits calibration.
-# The trick that makes a binned metric cross-engine-safe: the score is
-# first scaled to an EXACT integer sp = round(p·1e6) (the same 6dp
-# boundary the whole repo rounds at; margin pytest keeps every p·1e6 off
-# the .5 line and sp off bin edges), after which bins (sp div 100000,
-# capped), per-bin counts, the ECE numerator Σ|1e6·n_pos_b − Σsp_b| and
-# the Brier numerator Σ(sp − 1e6·y)² are ALL BIGINT — one division per
-# emitted double (the exact-reduction rule).
-#
-# Scale shape: the scorer chain is the audited logreg plan (features
-# pinned once, one agg per GD round); calibration adds one map-side
-# groupBy to a 10-row frame + a broadcast 1-row total.
-# --------------------------------------------------------------------------
-
-ECE_BINS = 10
-_ECE_SCALE = 1_000_000  # 6dp fixed-point; bin width = 100000
-
-
-def q_ece_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scored = _logreg_scored(spark, sf_dir).select(
-        "y", F.round(F.col("p") * _ECE_SCALE, 0).cast("long").alias("sp")
-    )
-    width = _ECE_SCALE // ECE_BINS
-    rows = scored.select(
-        "y",
-        "sp",
-        F.least(
-            F.expr(f"sp div {width}"), F.lit(ECE_BINS - 1).cast("long")
-        ).alias("bin"),
-    )
-    per = rows.groupBy("bin").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("y").cast("long").alias("n_pos"),
-        F.sum("sp").cast("long").alias("ssp"),
-        F.sum(
-            (F.col("sp") - _ECE_SCALE * F.col("y"))
-            * (F.col("sp") - _ECE_SCALE * F.col("y"))
-        )
-        .cast("long")
-        .alias("sq"),
-    )
-    tot = per.agg(
-        F.sum("n").cast("long").alias("nn"),
-        F.sum(F.abs(_ECE_SCALE * F.col("n_pos") - F.col("ssp")))
-        .cast("long")
-        .alias("ece_num"),
-        F.sum("sq").cast("long").alias("brier_num"),
-    )
-    grid = spark.range(ECE_BINS).select(F.col("id").cast("long").alias("bin"))
-    filled = grid.join(per, "bin", "left").select(
-        "bin",
-        F.coalesce("n", F.lit(0)).cast("long").alias("n"),
-        F.coalesce("n_pos", F.lit(0)).cast("long").alias("n_pos"),
-        F.coalesce("ssp", F.lit(0)).cast("long").alias("ssp"),
-    )
-    conf = F.when(
-        F.col("n") > 0,
-        F.col("ssp").cast("double")
-        / (F.col("n") * _ECE_SCALE).cast("double"),
-    ).otherwise(F.lit(0.0))
-    acc = F.when(
-        F.col("n") > 0,
-        F.col("n_pos").cast("double") / F.col("n").cast("double"),
-    ).otherwise(F.lit(0.0))
-    return filled.crossJoin(F.broadcast(tot)).select(
-        "bin",
-        "n",
-        "n_pos",
-        "ssp",
-        F.round(conf, 6).alias("avg_conf"),
-        F.round(acc, 6).alias("acc"),
-        F.round(F.abs(acc - conf), 6).alias("gap"),
-        F.round(
-            F.col("ece_num").cast("double")
-            / (F.col("nn") * _ECE_SCALE).cast("double"),
-            6,
-        ).alias("ece"),
-        F.round(
-            F.col("brier_num").cast("double")
-            / (
-                F.col("nn").cast("double")
-                * F.lit(float(_ECE_SCALE) * float(_ECE_SCALE))
-            ),
-            6,
-        ).alias("brier"),
-    )
-
-
-def _sql_ece_calibration() -> str:
-    s, nb = _ECE_SCALE, ECE_BINS
-    width = s // nb
-    return f"""
-WITH {_sql_logreg_chain()}, spt AS (
-  SELECT y, CAST(round(p * {s}) AS BIGINT) AS sp FROM scores
-), binned AS (
-  SELECT y, sp, least(sp // {width}, {nb - 1}) AS bin FROM spt
-), per AS MATERIALIZED (
-  SELECT bin, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(y) AS BIGINT) AS n_pos,
-         CAST(sum(sp) AS BIGINT) AS ssp,
-         CAST(sum((sp - {s} * y) * (sp - {s} * y)) AS BIGINT) AS sq
-  FROM binned GROUP BY bin
-), tot AS (
-  SELECT CAST(sum(n) AS BIGINT) AS nn,
-         CAST(sum(abs({s} * n_pos - ssp)) AS BIGINT) AS ece_num,
-         CAST(sum(sq) AS BIGINT) AS brier_num
-  FROM per
-), grid AS (
-  SELECT CAST(unnest(range({nb})) AS BIGINT) AS bin
-), filled AS (
-  SELECT g.bin,
-         CAST(coalesce(p.n, 0) AS BIGINT) AS n,
-         CAST(coalesce(p.n_pos, 0) AS BIGINT) AS n_pos,
-         CAST(coalesce(p.ssp, 0) AS BIGINT) AS ssp
-  FROM grid g LEFT JOIN per p ON p.bin = g.bin
-)
-SELECT f.bin, f.n, f.n_pos, f.ssp,
-       round(CASE WHEN f.n > 0
-                  THEN CAST(f.ssp AS DOUBLE) / CAST(f.n * {s} AS DOUBLE)
-                  ELSE 0.0 END, 6) AS avg_conf,
-       round(CASE WHEN f.n > 0
-                  THEN CAST(f.n_pos AS DOUBLE) / CAST(f.n AS DOUBLE)
-                  ELSE 0.0 END, 6) AS acc,
-       round(abs(CASE WHEN f.n > 0
-                      THEN CAST(f.n_pos AS DOUBLE) / CAST(f.n AS DOUBLE)
-                      ELSE 0.0 END
-                 - CASE WHEN f.n > 0
-                        THEN CAST(f.ssp AS DOUBLE)
-                             / CAST(f.n * {s} AS DOUBLE)
-                        ELSE 0.0 END), 6) AS gap,
-       round(CAST(t.ece_num AS DOUBLE) / CAST(t.nn * {s} AS DOUBLE), 6)
-         AS ece,
-       round(CAST(t.brier_num AS DOUBLE)
-             / (CAST(t.nn AS DOUBLE) * {float(s) * float(s)}), 6) AS brier
-FROM filled f CROSS JOIN tot t
-"""
-
-
-# --------------------------------------------------------------------------
-# Triangle counting + clustering coefficients (`triangle_count`): the
-# graph-structure primitive the spectral family (pagerank/hits/lpa)
-# doesn't touch — community density. Over the SAME pinned host graph,
-# undirected (canonical a<b edges): triangles enumerate once each via
-# the ordered edge-iterator join a<b<c (the Cohen 2009 / GraphX shape),
-# per-node counts by exploding each triangle to its three corners,
-# local clustering coefficient 2·tri/(deg·(deg−1)), and global
-# transitivity 3·△/#wedges with wedges = Σ deg(deg−1)/2 — all counts
-# BIGINT-exact, coefficients one division each (6dp).
-#
-# Scale shape: the canonical-edge table derives from one corpus scan and
-# is pinned; the two-hop join shuffles on edge endpoints (at real scale
-# the standard mitigation — iterate each triangle from its LOWEST-DEGREE
-# vertex — drops straight into the same plan by replacing the id
-# ordering with a (degree, id) ordering; the id ordering is kept here
-# because the 24-node universe makes skew moot and DuckDB mirrors it
-# verbatim).
-# --------------------------------------------------------------------------
-
-
-def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    s = (src_num % PR_N_NODES).alias("src")
-    t = ((src_num * 7 + F.col("doc_id") * 13 + 3) % PR_N_NODES).alias("dst")
-    raw = docs.select(s, t).filter(F.col("src") != F.col("dst"))
-    und = (
-        raw.select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        und.select(F.col("u").alias("node"))
-        .union(und.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .union(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("deg"))
-    )
-    tri = (
-        und.alias("e1")
-        .join(und.alias("e2"), F.col("e1.v") == F.col("e2.u"))
-        .join(
-            und.alias("e3"),
-            (F.col("e3.u") == F.col("e1.u"))
-            & (F.col("e3.v") == F.col("e2.v")),
-        )
-        .select(
-            F.col("e1.u").alias("a"),
-            F.col("e1.v").alias("b"),
-            F.col("e2.v").alias("c"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    tri_n = (
-        tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("tri"))
-    )
-    tot = tri.agg(F.count("*").cast("long").alias("n_tri"))
-    wedges = deg.agg(
-        F.sum(F.expr("(deg * (deg - 1)) div 2")).cast("long").alias("wedges")
-    )
-    lcc = F.when(
-        F.col("deg") >= 2,
-        (2 * F.col("tri")).cast("double")
-        / (F.col("deg") * (F.col("deg") - 1)).cast("double"),
-    ).otherwise(F.lit(0.0))
-    return (
-        nodes.join(deg, "node")
-        .join(tri_n, "node", "left")
-        .select(
-            "node", "deg", F.coalesce("tri", F.lit(0)).cast("long").alias("tri")
-        )
-        .crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(wedges))
-        .select(
-            "node",
-            "deg",
-            "tri",
-            F.round(lcc, 6).alias("lcc"),
-            "n_tri",
-            "wedges",
-            F.round(
-                F.when(
-                    F.col("wedges") > 0,
-                    (3 * F.col("n_tri")).cast("double")
-                    / F.col("wedges").cast("double"),
-                ).otherwise(F.lit(0.0)),
-                6,
-            ).alias("transitivity"),
-        )
-    )
-
-
-def _sql_triangle_count() -> str:
-    n = PR_N_NODES
-    return f"""
-WITH raw AS (
-  SELECT CAST(substr(source, 4, 10) AS BIGINT) % {n} AS src,
-         (CAST(substr(source, 4, 10) AS BIGINT) * 7 + doc_id * 13 + 3)
-           % {n} AS dst
-  FROM documents
-), und AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM raw WHERE src <> dst
-), nodes AS (
-  SELECT DISTINCT node FROM (
-    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-), deg AS MATERIALIZED (
-  SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-  GROUP BY node
-), tri AS MATERIALIZED (
-  SELECT e1.u AS a, e1.v AS b, e2.v AS c
-  FROM und e1
-  JOIN und e2 ON e2.u = e1.v
-  JOIN und e3 ON e3.u = e1.u AND e3.v = e2.v
-), tri_n AS (
-  SELECT node, CAST(count(*) AS BIGINT) AS tri FROM (
-    SELECT a AS node FROM tri
-    UNION ALL SELECT b FROM tri
-    UNION ALL SELECT c FROM tri)
-  GROUP BY node
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_tri FROM tri
-), wedges AS (
-  SELECT CAST(sum((deg * (deg - 1)) // 2) AS BIGINT) AS wedges FROM deg
-)
-SELECT nodes.node, d.deg,
-       CAST(coalesce(tn.tri, 0) AS BIGINT) AS tri,
-       round(CASE WHEN d.deg >= 2
-                  THEN CAST(2 * coalesce(tn.tri, 0) AS DOUBLE)
-                       / CAST(d.deg * (d.deg - 1) AS DOUBLE)
-                  ELSE 0.0 END, 6) AS lcc,
-       tot.n_tri, w.wedges,
-       round(CASE WHEN w.wedges > 0
-                  THEN CAST(3 * tot.n_tri AS DOUBLE)
-                       / CAST(w.wedges AS DOUBLE)
-                  ELSE 0.0 END, 6) AS transitivity
-FROM nodes
-JOIN deg d USING (node)
-LEFT JOIN tri_n tn USING (node)
-CROSS JOIN tot CROSS JOIN wedges w
-"""
-
-
-# --------------------------------------------------------------------------
-# ROUGE-L summarization evaluation (`rouge_l`): the LCS-based recall
-# metric (Lin 2004) — the summarization/compression face of the eval
-# family (bleu_eval covers clipped n-gram precision). References are the
-# first ROUGE_MAX_TOK tokens; candidates apply the SAME deterministic
-# perturbation rule as bleu_eval (doc_id%5==0 verbatim, else delete
-# i%7==6, substitute i%11==10 with an 'xerrN' token) TO THE TRUNCATED
-# reference. β=1 LCS-F simplifies to integer ratios: P = LCS/|c|,
-# R = LCS/|r|, F = 2·LCS/(|c|+|r|) — one division each, pooled corpus
-# scores from summed BIGINTs.
-#
-# The Spark side runs the REAL token-LCS dynamic program (vectorized
-# row-DP in an Arrow-batched mapInPandas kernel — the operator a user
-# would point at arbitrary candidate/reference pairs). The DuckDB oracle
-# uses the planted data's closed form: the candidate is an
-# order-preserving subsequence of the reference plus unmatchable 'xerr'
-# tokens (no corpus token starts with 'xerr' — asserted in pytest), so
-# every non-xerr candidate token is matchable via the identity alignment
-# and none other is: LCS = |{c_i : c_i not like 'xerr%'}|. The
-# hash-equality of real DP vs closed form IS the theorem checked on
-# data; the pytest re-proves it with a textbook DP.
-#
-# Scale shape: truncation bounds the DP at ROUGE_MAX_TOK² cells per doc;
-# the kernel is one Arrow projection behind the token barrier (zero
-# shuffles beyond it); pooled scores are one map-side-combinable agg.
-# --------------------------------------------------------------------------
-
-ROUGE_MAX_TOK = 64
-
-
-def _lcs_len(a, b) -> int:
-    """Textbook O(|a|·|b|) LCS length, row-vectorized (numpy)."""
-    import numpy as np
-
-    if len(a) == 0 or len(b) == 0:
-        return 0
-    bb = np.array(b, dtype=object)
-    prev = np.zeros(len(b) + 1, dtype=np.int64)
-    for x in a:
-        eq = bb == x
-        v = np.maximum(prev[1:], np.where(eq, prev[:-1] + 1, 0))
-        cur = np.empty_like(prev)
-        cur[0] = 0
-        cur[1:] = np.maximum.accumulate(v)
-        prev = cur
-    return int(prev[-1])
-
-
-def q_rouge_l(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    toked = token_barrier(
-        docs,
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0),
-        keep_cols=("doc_id",),
-    )
-    r = F.slice(F.col("t"), 1, ROUGE_MAX_TOK)
-    ref = toked.select("doc_id", r.alias("r"))
-    corrupt = F.col("doc_id") % 5 != 0
-    cand = F.filter(
-        F.transform(
-            F.sequence(F.lit(0), F.size("r") - 1),
-            lambda i: F.when(corrupt & (i % 7 == 6), F.lit(None))
-            .when(
-                corrupt & (i % 11 == 10),
-                F.concat(F.lit("xerr"), (i % 3).cast("string")),
-            )
-            .otherwise(F.element_at("r", i + 1)),
-        ),
-        lambda x: x.isNotNull(),
-    )
-    base = ref.select("doc_id", "r", cand.alias("c"))
-
-    def kernel(batches):
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "lcs": [
-                        _lcs_len(list(c), list(r_))
-                        for c, r_ in zip(pdf["c"], pdf["r"])
-                    ],
-                    "cand_len": [len(c) for c in pdf["c"]],
-                    "ref_len": [len(r_) for r_ in pdf["r"]],
-                }
-            )
-            yield out
-
-    per = base.mapInPandas(
-        kernel, "doc_id long, lcs long, cand_len long, ref_len long"
-    )
-    pooled = per.agg(
-        F.sum("lcs").cast("long").alias("tl"),
-        F.sum("cand_len").cast("long").alias("tc"),
-        F.sum("ref_len").cast("long").alias("tr"),
-    )
-    return per.crossJoin(F.broadcast(pooled)).select(
-        "doc_id",
-        "lcs",
-        "cand_len",
-        "ref_len",
-        F.round(
-            F.col("lcs").cast("double") / F.col("cand_len").cast("double"), 6
-        ).alias("p"),
-        F.round(
-            F.col("lcs").cast("double") / F.col("ref_len").cast("double"), 6
-        ).alias("r"),
-        F.round(
-            (2 * F.col("lcs")).cast("double")
-            / (F.col("cand_len") + F.col("ref_len")).cast("double"),
-            6,
-        ).alias("f"),
-        F.round(
-            (2 * F.col("tl")).cast("double")
-            / (F.col("tc") + F.col("tr")).cast("double"),
-            6,
-        ).alias("f_corpus"),
-    )
-
-
-def _sql_rouge_l() -> str:
-    m = ROUGE_MAX_TOK
-    return f"""
-WITH toked AS (
-  SELECT doc_id,
-         regexp_extract_all(lower(text), '{_TOKEN_PATTERN}')[1 : {m}] AS r
-  FROM documents
-), base AS MATERIALIZED (
-  SELECT doc_id, r,
-         list_filter(list_transform(range(len(r)),
-           i -> CASE WHEN doc_id % 5 <> 0 AND i % 7 = 6 THEN NULL
-                     WHEN doc_id % 5 <> 0 AND i % 11 = 10
-                       THEN 'xerr' || CAST(i % 3 AS VARCHAR)
-                     ELSE r[i + 1] END),
-           x -> x IS NOT NULL) AS c
-  FROM toked
-), per AS MATERIALIZED (
-  -- closed form (see operator header): the candidate is an order-
-  -- preserving subsequence of r plus unmatchable xerr tokens, so
-  -- LCS(c, r) = #non-xerr candidate tokens
-  SELECT doc_id,
-         CAST(len(list_filter(c, x -> x NOT LIKE 'xerr%')) AS BIGINT)
-           AS lcs,
-         CAST(len(c) AS BIGINT) AS cand_len,
-         CAST(len(r) AS BIGINT) AS ref_len
-  FROM base
-), pooled AS (
-  SELECT CAST(sum(lcs) AS BIGINT) AS tl,
-         CAST(sum(cand_len) AS BIGINT) AS tc,
-         CAST(sum(ref_len) AS BIGINT) AS tr
-  FROM per
-)
-SELECT p.doc_id, p.lcs, p.cand_len, p.ref_len,
-       round(CAST(p.lcs AS DOUBLE) / CAST(p.cand_len AS DOUBLE), 6) AS p,
-       round(CAST(p.lcs AS DOUBLE) / CAST(p.ref_len AS DOUBLE), 6) AS r,
-       round(CAST(2 * p.lcs AS DOUBLE)
-             / CAST(p.cand_len + p.ref_len AS DOUBLE), 6) AS f,
-       round(CAST(2 * po.tl AS DOUBLE)
-             / CAST(po.tc + po.tr AS DOUBLE), 6) AS f_corpus
-FROM per p CROSS JOIN pooled po
-"""
-
-
-# --------------------------------------------------------------------------
-# Data-quality profile (`data_profile`): the Deequ/dbt-tests capability —
-# per-column completeness (null counts), cardinality (exact distinct),
-# the primary-key audit (uniq = distinct==n AND no nulls), numeric
-# min/max, exact integer means, and deterministic top values for
-# bounded-domain string columns ((count DESC, value ASC) argmin so ties
-# cannot drift). Profiles BOTH the documents and events tables in one
-# operator — the pre-flight audit every ingestion run gates on.
-# Column kinds: 'int' (exact mean = Σ/n of BIGINTs), 'dbl' (min/max
-# only — a double mean would have a reduce-order surface), 'top'
-# (bounded string domain), 'skip' (text — counts only).
-#
-# Scale shape: one aggregate pass per table carries every scalar stat
-# (count_distinct included — Catalyst plans the multi-distinct via
-# expand, still a single logical pass); top values are per-column
-# groupBys over bounded domains; output is |columns|-sized.
-# --------------------------------------------------------------------------
-
-_PROFILE_SPEC = (
-    (
-        "documents",
-        (
-            ("doc_id", "int"),
-            ("text", "skip"),
-            ("lang", "top"),
-            ("source", "top"),
-            ("n_chars", "int"),
-        ),
-    ),
-    (
-        "events",
-        (
-            ("event_id", "int"),
-            ("user_id", "int"),
-            ("event_type", "top"),
-            ("value", "dbl"),
-            ("props", "top"),
-        ),
-    ),
-)
-
-
-def q_data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    frames = []
-    for table, cols in _PROFILE_SPEC:
-        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-        aggs = [F.count(F.lit(1)).cast("long").alias("n")]
-        for c, kind in cols:
-            aggs.append(
-                F.sum(F.col(c).isNull().cast("long"))
-                .cast("long")
-                .alias(f"null_{c}")
-            )
-            aggs.append(
-                F.count_distinct(F.col(c)).cast("long").alias(f"nd_{c}")
-            )
-            if kind in ("int", "dbl"):
-                aggs.append(F.min(c).cast("double").alias(f"mn_{c}"))
-                aggs.append(F.max(c).cast("double").alias(f"mx_{c}"))
-            if kind == "int":
-                aggs.append(F.sum(c).cast("long").alias(f"sum_{c}"))
-        stats = df.agg(*aggs).localCheckpoint(eager=True)
-        for c, kind in cols:
-            num_null = F.lit(None).cast("double")
-            row = stats.select(
-                F.lit(table).alias("table_name"),
-                F.lit(c).alias("column_name"),
-                F.col("n"),
-                F.col(f"null_{c}").alias("n_null"),
-                F.col(f"nd_{c}").alias("n_distinct"),
-                (
-                    (F.col(f"nd_{c}") == F.col("n"))
-                    & (F.col(f"null_{c}") == 0)
-                )
-                .cast("long")
-                .alias("uniq"),
-                (
-                    F.round(F.col(f"mn_{c}"), 6)
-                    if kind in ("int", "dbl")
-                    else num_null
-                ).alias("min_num"),
-                (
-                    F.round(F.col(f"mx_{c}"), 6)
-                    if kind in ("int", "dbl")
-                    else num_null
-                ).alias("max_num"),
-                (
-                    F.round(
-                        F.col(f"sum_{c}").cast("double")
-                        / F.col("n").cast("double"),
-                        6,
-                    )
-                    if kind == "int"
-                    else num_null
-                ).alias("mean_num"),
-            )
-            if kind == "top":
-                top = (
-                    df.groupBy(F.col(c).cast("string").alias("v"))
-                    .agg(F.count("*").cast("long").alias("cnt"))
-                    .agg(
-                        F.min(
-                            F.struct(
-                                (-F.col("cnt")).alias("negc"),
-                                F.col("v").alias("v"),
-                            )
-                        ).alias("s")
-                    )
-                    .select(
-                        F.col("s.v").alias("top_value"),
-                        (-F.col("s.negc")).cast("long").alias("top_count"),
-                    )
-                )
-                row = row.crossJoin(F.broadcast(top))
-            else:
-                row = row.select(
-                    "*",
-                    F.lit(None).cast("string").alias("top_value"),
-                    F.lit(None).cast("long").alias("top_count"),
-                )
-            frames.append(row)
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
-
-
-def _sql_data_profile() -> str:
-    selects = []
-    for table, cols in _PROFILE_SPEC:
-        for c, kind in cols:
-            if kind in ("int", "dbl"):
-                mn = f"round(CAST(min({c}) AS DOUBLE), 6)"
-                mx = f"round(CAST(max({c}) AS DOUBLE), 6)"
-            else:
-                mn = mx = "CAST(NULL AS DOUBLE)"
-            mean = (
-                f"round(CAST(sum({c}) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)"
-                if kind == "int"
-                else "CAST(NULL AS DOUBLE)"
-            )
-            if kind == "top":
-                top_v = (
-                    f"(SELECT v FROM (SELECT CAST({c} AS VARCHAR) AS v,"
-                    f" count(*) AS cnt FROM {table} GROUP BY 1"
-                    f" ORDER BY cnt DESC, v LIMIT 1))"
-                )
-                top_c = (
-                    f"(SELECT CAST(cnt AS BIGINT) FROM (SELECT"
-                    f" CAST({c} AS VARCHAR) AS v, count(*) AS cnt"
-                    f" FROM {table} GROUP BY 1 ORDER BY cnt DESC, v LIMIT 1))"
-                )
-            else:
-                top_v = "CAST(NULL AS VARCHAR)"
-                top_c = "CAST(NULL AS BIGINT)"
-            selects.append(
-                f"""SELECT '{table}' AS table_name, '{c}' AS column_name,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_null,
-       CAST(count(DISTINCT {c}) AS BIGINT) AS n_distinct,
-       CAST(CASE WHEN count(DISTINCT {c}) = count(*)
-                  AND sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) = 0
-                 THEN 1 ELSE 0 END AS BIGINT) AS uniq,
-       {mn} AS min_num,
-       {mx} AS max_num,
-       {mean} AS mean_num,
-       {top_v} AS top_value,
-       {top_c} AS top_count
-FROM {table}"""
-            )
-    return "\nUNION ALL\n".join(selects)
-
-
-# --------------------------------------------------------------------------
-# Skyline / Pareto frontier (`skyline`): the classic database operator
-# (Börzsönyi et al. ICDE 2001) — the set of documents not strictly
-# dominated on (x = n_chars, y = distinct-token count): a point is
-# dominated iff some other point beats it on BOTH dimensions. The
-# textbook formulation is a quadratic NOT EXISTS self-join; the
-# scale-honest plan used here exploits the bounded y-domain (≤ 31 for
-# this corpus; any discretized dimension works the same way at 100 TB):
-# per-y maxima M₀(y) = max{x : points at y} fold into the threshold
-# curve M(y) = max{x' : y' > y} over the ≤|Y|² level table, and a point
-# is dominated iff x < M(y) — one map-side agg + one broadcast join,
-# never a self-join of the corpus. All-BIGINT (zero rounding surface).
-#
-# The DuckDB oracle runs the literal quadratic NOT EXISTS definition —
-# so the hash equality PROVES the threshold-curve plan computes the
-# textbook skyline on data (the rouge_l closed-form discipline).
-# --------------------------------------------------------------------------
-
-
-def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = F.regexp_extract_all(
-        F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0
-    )
-    p = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.col("n_chars").cast("long").alias("x"),
-        F.size(F.array_distinct(toks)).cast("long").alias("y"),
-    )
-    per_y = p.groupBy("y").agg(F.max("x").alias("mx"))
-    thresh = (
-        per_y.alias("a")
-        .join(per_y.alias("b"), F.col("b.y") > F.col("a.y"), "left")
-        .groupBy(F.col("a.y").alias("y"))
-        .agg(F.max(F.col("b.mx")).alias("m"))
-    )
-    out = p.join(F.broadcast(thresh), "y")
-    dominated = F.when(
-        F.col("m").isNotNull() & (F.col("x") < F.col("m")), F.lit(1)
-    ).otherwise(F.lit(0))
-    flagged = out.select(
-        "doc_id", "x", "y", dominated.cast("long").alias("dominated")
-    )
-    nsky = flagged.agg(
-        F.sum(1 - F.col("dominated")).cast("long").alias("n_skyline")
-    )
-    return flagged.crossJoin(F.broadcast(nsky)).select(
-        "doc_id",
-        "x",
-        "y",
-        "dominated",
-        (1 - F.col("dominated")).cast("long").alias("skyline"),
-        "n_skyline",
-    )
-
-
-def _sql_skyline() -> str:
-    return f"""
-WITH p AS MATERIALIZED (
-  SELECT doc_id, CAST(n_chars AS BIGINT) AS x,
-         CAST(len(list_distinct(
-             regexp_extract_all(lower(text), '{_TOKEN_PATTERN}')))
-           AS BIGINT) AS y
-  FROM documents
-), flagged AS MATERIALIZED (
-  -- the literal quadratic definition: dominated iff a strictly-better
-  -- point exists on BOTH dims (the Spark side uses the bounded-domain
-  -- threshold curve; hash equality proves the equivalence on data)
-  SELECT a.doc_id, a.x, a.y,
-         CAST(CASE WHEN EXISTS (
-             SELECT 1 FROM p b WHERE b.x > a.x AND b.y > a.y)
-           THEN 1 ELSE 0 END AS BIGINT) AS dominated
-  FROM p a
-)
-SELECT doc_id, x, y, dominated,
-       CAST(1 - dominated AS BIGINT) AS skyline,
-       (SELECT CAST(sum(1 - dominated) AS BIGINT) FROM flagged)
-         AS n_skyline
-FROM flagged
-"""
-
-
-# --------------------------------------------------------------------------
-# Association rules (`assoc_rules`): Agrawal-Srikant market-basket
-# mining — directed rules a→b over per-document distinct-token baskets
-# with the three canonical measures: support = n_ab/N, confidence =
-# n_ab/n_a, lift = N·n_ab/(n_a·n_b). Complements `pmi_bigrams`
-# (ADJACENCY association) with set-membership co-occurrence — the
-# item-affinity primitive recommenders and query-expansion mine. Rules
-# below ASSOC_MIN_COUNT co-occurrences are pruned (the Apriori support
-# floor).
-#
-# Scale shape: baskets = distinct (doc, token) (one exchange); pair
-# generation is a self-equi-join on doc_id whose blowup is bounded by
-# the ≤31-token basket width (the shingle co-occurrence discipline —
-# at real scale the support floor prunes BEFORE the join via a
-# broadcast frequent-item filter, which this corpus's bounded vocabulary
-# makes vacuous); marginals are map-side-combinable counts broadcast
-# onto the ≤|V|² rule table. All counts BIGINT; the three measures are
-# one division each (6dp).
-# --------------------------------------------------------------------------
-
-ASSOC_MIN_COUNT = 5
-
-
-def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = F.regexp_extract_all(
-        F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0
-    )
-    items = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.explode(F.array_distinct(toks)).alias("token"))
-        .localCheckpoint(eager=True)
-    )
-    nn = items.agg(F.count_distinct("doc_id").cast("long").alias("n_docs"))
-    marg = items.groupBy("token").agg(F.count("*").cast("long").alias("nt"))
-    pairs = (
-        items.alias("a")
-        .join(
-            items.alias("b"),
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (F.col("a.token") != F.col("b.token")),
-        )
-        .groupBy(
-            F.col("a.token").alias("ant"), F.col("b.token").alias("cons")
-        )
-        .agg(F.count("*").cast("long").alias("n_ab"))
-        .filter(F.col("n_ab") >= ASSOC_MIN_COUNT)
-    )
-    return (
-        pairs.join(
-            F.broadcast(marg.select(F.col("token").alias("ant"),
-                                    F.col("nt").alias("n_a"))),
-            "ant",
-        )
-        .join(
-            F.broadcast(marg.select(F.col("token").alias("cons"),
-                                    F.col("nt").alias("n_b"))),
-            "cons",
-        )
-        .crossJoin(F.broadcast(nn))
-        .select(
-            "ant",
-            "cons",
-            "n_ab",
-            "n_a",
-            "n_b",
-            "n_docs",
-            F.round(
-                F.col("n_ab").cast("double") / F.col("n_docs").cast("double"),
-                6,
-            ).alias("support"),
-            F.round(
-                F.col("n_ab").cast("double") / F.col("n_a").cast("double"), 6
-            ).alias("confidence"),
-            F.round(
-                (F.col("n_docs") * F.col("n_ab")).cast("double")
-                / (F.col("n_a") * F.col("n_b")).cast("double"),
-                6,
-            ).alias("lift"),
-        )
-    )
-
-
-def _sql_assoc_rules() -> str:
-    return f"""
-WITH items AS MATERIALIZED (
-  SELECT DISTINCT doc_id, t.token
-  FROM documents,
-       unnest(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
-         AS t(token)
-), nn AS (
-  SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs FROM items
-), marg AS MATERIALIZED (
-  SELECT token, CAST(count(*) AS BIGINT) AS nt FROM items GROUP BY token
-), pairs AS MATERIALIZED (
-  SELECT a.token AS ant, b.token AS cons, CAST(count(*) AS BIGINT) AS n_ab
-  FROM items a JOIN items b
-    ON b.doc_id = a.doc_id AND b.token <> a.token
-  GROUP BY 1, 2
-  HAVING count(*) >= {ASSOC_MIN_COUNT}
-)
-SELECT p.ant, p.cons, p.n_ab, ma.nt AS n_a, mb.nt AS n_b, nn.n_docs,
-       round(CAST(p.n_ab AS DOUBLE) / CAST(nn.n_docs AS DOUBLE), 6)
-         AS support,
-       round(CAST(p.n_ab AS DOUBLE) / CAST(ma.nt AS DOUBLE), 6)
-         AS confidence,
-       round(CAST(nn.n_docs * p.n_ab AS DOUBLE)
-             / CAST(ma.nt * mb.nt AS DOUBLE), 6) AS lift
-FROM pairs p
-JOIN marg ma ON ma.token = p.ant
-JOIN marg mb ON mb.token = p.cons
-CROSS JOIN nn
-"""
-
-
-# --------------------------------------------------------------------------
-# RFM segmentation (`rfm_segments`): the classic customer-value
-# segmentation (Hughes 1994) — per user over purchase events: Recency =
-# exact integer days from last purchase to the corpus horizon, Frequency
-# = purchase count, Monetary = Σ round(value·100) in exact BIGINT cents.
-# Each dimension quintile-scores 1..5 by EXACT global rank (score =
-# ceil(5·rank/n); R ranks ascending — 5 = most recent; F and M rank
-# descending via negation — 5 = highest), and the three digits
-# concatenate into the segment label. ZERO doubles anywhere — ranks,
-# ceil-division and labels are all integer/string (the cusum exactness
-# class).
-#
-# Scale shape: one filtered scan → per-user min/max/count/sum (map-side
-# combinable); three range-partitioned exact_global_rank passes over the
-# |users| frame (the audited no-single-partition-window path); the
-# horizon rides a broadcast 1-row agg.
-# --------------------------------------------------------------------------
-
-
-def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import exact_global_rank
-
-    um = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-    )
-    ev = (
-        _events(spark, sf_dir)
-        .filter(F.col("event_type") == RET_EVENT)
-        .select(
-            "user_id",
-            um.alias("um"),
-            F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
-        )
-    )
-    per = ev.groupBy("user_id").agg(
-        F.max("um").alias("last_um"),
-        F.count("*").cast("long").alias("freq"),
-        F.sum("cents").cast("long").alias("monetary"),
-    )
-    horizon = ev.agg(F.max("um").alias("hz"))
-    # pinned (round 7): base feeds the three score rank calls AND the
-    # output join — each re-ran the per-user aggregation corpus chain
-    # without the pin (4 corpus scans -> 1); four numeric columns
-    base = (
-        per.crossJoin(F.broadcast(horizon))
-        .select(
-            "user_id",
-            F.expr(f"cast((hz - last_um) div {_DAY_US} as bigint)").alias(
-                "recency_days"
-            ),
-            "freq",
-            "monetary",
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    def score(df: DataFrame, col: str, desc: bool, out: str) -> DataFrame:
-        src = df.withColumn("_k", -F.col(col) if desc else F.col(col))
-        r = exact_global_rank(src, "_k", ("user_id",))
-        return r.select(
-            "user_id",
-            F.ceil(5 * F.col("global_rank") / F.col("global_count"))
-            .cast("long")
-            .alias(out),
-        )
-
-    rs = score(base, "recency_days", False, "r_score")
-    fs = score(base, "freq", True, "f_score")
-    ms = score(base, "monetary", True, "m_score")
-    return (
-        base.join(rs, "user_id")
-        .join(fs, "user_id")
-        .join(ms, "user_id")
-        .select(
-            "user_id",
-            "recency_days",
-            "freq",
-            "monetary",
-            "r_score",
-            "f_score",
-            "m_score",
-            F.concat(
-                F.col("r_score").cast("string"),
-                F.col("f_score").cast("string"),
-                F.col("m_score").cast("string"),
-            ).alias("segment"),
-        )
-    )
-
-
-def _sql_rfm_segments() -> str:
-    return f"""
-WITH ev AS (
-  SELECT user_id, epoch_us(ts) AS um,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events WHERE event_type = {_sql_quote(RET_EVENT)}
-), per AS MATERIALIZED (
-  SELECT user_id, max(um) AS last_um,
-         CAST(count(*) AS BIGINT) AS freq,
-         CAST(sum(cents) AS BIGINT) AS monetary
-  FROM ev GROUP BY user_id
-), hz AS (
-  SELECT max(um) AS hz FROM ev
-), base AS MATERIALIZED (
-  SELECT user_id,
-         CAST((hz.hz - per.last_um) // {_DAY_US} AS BIGINT)
-           AS recency_days,
-         freq, monetary
-  FROM per CROSS JOIN hz
-), scored AS (
-  SELECT user_id, recency_days, freq, monetary,
-         CAST(ceil(5.0 * row_number()
-                     OVER (ORDER BY recency_days, user_id)
-                   / count(*) OVER ()) AS BIGINT) AS r_score,
-         CAST(ceil(5.0 * row_number()
-                     OVER (ORDER BY -freq, user_id)
-                   / count(*) OVER ()) AS BIGINT) AS f_score,
-         CAST(ceil(5.0 * row_number()
-                     OVER (ORDER BY -monetary, user_id)
-                   / count(*) OVER ()) AS BIGINT) AS m_score
-  FROM base
-)
-SELECT user_id, recency_days, freq, monetary,
-       r_score, f_score, m_score,
-       CAST(r_score AS VARCHAR) || CAST(f_score AS VARCHAR)
-         || CAST(m_score AS VARCHAR) AS segment
-FROM scored
-"""
-
-
-# --------------------------------------------------------------------------
-# k-core decomposition (`k_core`): the degeneracy peel (Seidman 1983) —
-# iteratively delete nodes of degree < K until fixpoint; the surviving
-# K-core is the graph's cohesive backbone (spam-farm / community-seed
-# detection on host graphs). Completes the graph quartet: pagerank
-# (centrality), hits (dual centrality), lpa (communities),
-# triangle_count (density), k_core (cohesion). The pagerank edge rule is
-# near-REGULAR (probed: every k peels all-or-nothing), so this operator
-# synthesizes a degree-SKEWED host graph from the same corpus columns:
-# src = src_num % N, dst = (src_num·7 + doc_id·13 + 3) % (src + 1) — a
-# preferential-attachment-style rule where low-index hosts accumulate
-# degree. Two scopes prove both peel regimes at every SF (probed at
-# sf0.001/0.01/0.1): 'core' (K=6) converges in one round to a 17-node
-# core; 'cascade' (K=7) unravels over SIX onion layers to the empty
-# graph — the multi-round removal path. KC_ROUNDS = 12 synchronous
-# peels; the converged flag certifies fixpoint (size of the last two
-# rounds equal) in the output itself. ALL-integer.
-#
-# Scale shape: each peel is one endpoint-join degree count + one filter
-# over the (pinned, |hosts|-sized) alive set — the standard distributed
-# k-core; iterations never re-scan the corpus (the pagerank per-round
-# pin discipline). DuckDB unrolls the same rounds as generated CTEs
-# (the lpa_communities pattern), both scopes in one chain via a scope
-# column.
-# --------------------------------------------------------------------------
-
-KC_SCOPES = (("core", 6), ("cascade", 7))
-KC_ROUNDS = 12  # ≥ the 6-layer cascade depth; fixpoint certified in-output
-
-
-def q_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    a = (src_num % PR_N_NODES).alias("src")
-    b = ((src_num * 7 + F.col("doc_id") * 13 + 3) % (src_num % PR_N_NODES + 1)).alias("dst")
-    # ONE corpus pass (round 7, guide §2.4/§5 — the pagerank discipline):
-    # the undirected edge universe is bounded at N^2/2 rows at any SF; the
-    # KC_ROUNDS peel rounds over both scopes then run on the driver with
-    # the exact same integer arithmetic — replacing 2 corpus scans and
-    # ~15 localCheckpoints / ~60 tiny shuffle jobs per call.
-    und = sorted(
-        (r["u"], r["v"])
-        for r in docs.select(a, b)
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-        .collect()
-    )
-    nodes0 = sorted({u for u, _ in und} | {v for _, v in und})
-    rows = []
-    for scope, k in KC_SCOPES:
-        alive = set(nodes0)
-        removed_round: Dict[int, int] = {}
-        prev = set(alive)
-        for i in range(1, KC_ROUNDS + 1):
-            deg: Dict[int, int] = {}
-            for u, v in und:
-                if u in alive and v in alive:
-                    deg[u] = deg.get(u, 0) + 1
-                    deg[v] = deg.get(v, 0) + 1
-            keep = {nd for nd in alive if deg.get(nd, 0) >= k}
-            for nd in alive - keep:
-                removed_round[nd] = i
-            prev = alive
-            alive = keep
-        core_deg: Dict[int, int] = {}
-        for u, v in und:
-            if u in alive and v in alive:
-                core_deg[u] = core_deg.get(u, 0) + 1
-                core_deg[v] = core_deg.get(v, 0) + 1
-        n_core, n_prev = len(alive), len(prev)
-        for nd in nodes0:
-            rows.append(
-                (
-                    scope,
-                    nd,
-                    removed_round.get(nd),
-                    1 if nd in alive else 0,
-                    core_deg.get(nd, 0),
-                    k,
-                    n_core,
-                    1 if n_core == n_prev else 0,
-                )
-            )
-    return spark.createDataFrame(
-        rows,
-        "scope string, node long, removed_round long, in_core long, "
-        "core_degree long, k long, n_core long, converged long",
-    )
-
-
-def _sql_k_core() -> str:
-    n = PR_N_NODES
-    iters = []
-    for i in range(1, KC_ROUNDS + 1):
-        p = f"a{i - 1}"
-        iters.append(
-            f"""d{i} AS (
-  SELECT scope, node, CAST(count(*) AS BIGINT) AS deg FROM (
-    SELECT x.scope, e.u AS node FROM und e
-    JOIN {p} x ON x.node = e.u
-    JOIN {p} y ON y.scope = x.scope AND y.node = e.v
-    UNION ALL
-    SELECT x.scope, e.v FROM und e
-    JOIN {p} x ON x.node = e.u
-    JOIN {p} y ON y.scope = x.scope AND y.node = e.v
-  ) GROUP BY scope, node
-), a{i} AS MATERIALIZED (
-  SELECT a.scope, a.node, a.k FROM {p} a
-  JOIN d{i} d ON d.scope = a.scope AND d.node = a.node
-  WHERE d.deg >= a.k
-), r{i} AS (
-  SELECT a.scope, a.node, {i} AS removed_round FROM {p} a
-  WHERE NOT EXISTS (
-    SELECT 1 FROM a{i} s WHERE s.scope = a.scope AND s.node = a.node)
-)"""
-        )
-    chain = ", ".join(iters)
-    removed_union = "\n    UNION ALL\n    ".join(
-        f"SELECT scope, node, removed_round FROM r{i}"
-        for i in range(1, KC_ROUNDS + 1)
-    )
-    scope_rows = ", ".join(
-        f"('{sc}', {k})" for sc, k in KC_SCOPES
-    )
-    return f"""
-WITH raw AS MATERIALIZED (
-  SELECT (CAST(substr(source, 4, 10) AS BIGINT) % {n}) AS src,
-         ((CAST(substr(source, 4, 10) AS BIGINT) * 7 + doc_id * 13 + 3)
-           % ((CAST(substr(source, 4, 10) AS BIGINT) % {n}) + 1)) AS dst
-  FROM documents
-), und AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM raw WHERE src <> dst
-), nodes0 AS MATERIALIZED (
-  SELECT DISTINCT u AS node FROM und UNION SELECT v FROM und
-), scopes(scope, k) AS (
-  SELECT * FROM (VALUES {scope_rows}) t(scope, k)
-), a0 AS MATERIALIZED (
-  SELECT s.scope, nd.node, CAST(s.k AS BIGINT) AS k
-  FROM nodes0 nd CROSS JOIN scopes s
-), {chain}, removed AS MATERIALIZED (
-  SELECT scope, node, CAST(min(removed_round) AS BIGINT) AS removed_round
-  FROM ({removed_union}) GROUP BY scope, node
-), core AS MATERIALIZED (
-  SELECT scope, node FROM a{KC_ROUNDS}
-), ce AS (
-  SELECT x.scope, e.u, e.v FROM und e
-  JOIN core x ON x.node = e.u
-  JOIN core y ON y.scope = x.scope AND y.node = e.v
-), core_deg AS (
-  SELECT scope, node, CAST(count(*) AS BIGINT) AS core_degree FROM (
-    SELECT scope, u AS node FROM ce
-    UNION ALL SELECT scope, v FROM ce
-  ) GROUP BY scope, node
-), ncore AS (
-  SELECT s.scope,
-         CAST(coalesce(c.cnt, 0) AS BIGINT) AS n_core
-  FROM scopes s LEFT JOIN (
-    SELECT scope, count(*) AS cnt FROM core GROUP BY scope) c
-    ON c.scope = s.scope
-), nprev AS (
-  SELECT s.scope,
-         CAST(coalesce(c.cnt, 0) AS BIGINT) AS n_prev
-  FROM scopes s LEFT JOIN (
-    SELECT scope, count(*) AS cnt FROM a{KC_ROUNDS - 1} GROUP BY scope) c
-    ON c.scope = s.scope
-)
-SELECT a0.scope, a0.node, r.removed_round,
-       CAST(CASE WHEN c.node IS NULL THEN 0 ELSE 1 END AS BIGINT)
-         AS in_core,
-       CAST(coalesce(cd.core_degree, 0) AS BIGINT) AS core_degree,
-       a0.k, nc.n_core,
-       CAST(CASE WHEN nc.n_core = np.n_prev THEN 1 ELSE 0 END AS BIGINT)
-         AS converged
-FROM a0
-LEFT JOIN removed r ON r.scope = a0.scope AND r.node = a0.node
-LEFT JOIN core c ON c.scope = a0.scope AND c.node = a0.node
-LEFT JOIN core_deg cd ON cd.scope = a0.scope AND cd.node = a0.node
-JOIN ncore nc ON nc.scope = a0.scope
-JOIN nprev np ON np.scope = a0.scope
-"""
-
-
-# --------------------------------------------------------------------------
-# Reciprocal rank fusion (`rrf_fusion`): the rank-combination standard
-# (Cormack et al. SIGIR 2009) every hybrid-retrieval stack uses to merge
-# lexical and semantic rankings — score(d) = Σ_r 1/(K + rank_r(d)),
-# K = 60. The two input rankings are deterministic quality signals over
-# the corpus (total token count and distinct-token count, both desc) —
-# correlated but different, so fusion genuinely reorders. Ranks come
-# from exact_global_rank (range-partitioned, doc_id tie-break); the RRF
-# score is a fixed-order two-term sum of identical doubles (bit-
-# identical cross-engine), and the fused rank orders by (rrf DESC,
-# doc_id) — RRF ties are EXACT ((r1, r2) permutations sum to the same
-# double), so the tie-break is well-defined on both engines.
-#
-# Scale shape: two ranking passes + one fused-rank pass, all
-# range-partitioned (never a single-partition window on Spark); the
-# joins are doc_id equi-joins that co-partition under AQE.
-# --------------------------------------------------------------------------
-
-RRF_K = 60
-
-
-def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import exact_global_rank
-
-    toks = F.regexp_extract_all(
-        F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0
-    )
-    # pinned (round 7): base feeds both rank calls AND the scored join —
-    # each re-ran the double-tokenize projection without the pin (3 corpus
-    # scans -> 1); three numeric columns, cheap to materialize
-    base = (
-        _docs(spark, sf_dir)
-        .select(
-            "doc_id",
-            F.size(toks).cast("long").alias("ntok"),
-            F.size(F.array_distinct(toks)).cast("long").alias("ndis"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    def rank_of(col: str, out: str) -> DataFrame:
-        src = base.withColumn("_k", -F.col(col))
-        r = exact_global_rank(src, "_k", ("doc_id",))
-        return r.select(
-            "doc_id", F.col("global_rank").cast("long").alias(out)
-        )
-
-    r1 = rank_of("ntok", "r1")
-    r2 = rank_of("ndis", "r2")
-    scored = (
-        base.join(r1, "doc_id")
-        .join(r2, "doc_id")
-        .withColumn(
-            "rrf",
-            F.lit(1.0) / (F.lit(float(RRF_K)) + F.col("r1").cast("double"))
-            + F.lit(1.0) / (F.lit(float(RRF_K)) + F.col("r2").cast("double")),
-        )
-        .withColumn("_neg", -F.col("rrf"))
-    )
-    fused = exact_global_rank(scored, "_neg", ("doc_id",))
-    return fused.select(
-        "doc_id",
-        "ntok",
-        "ndis",
-        "r1",
-        "r2",
-        F.round("rrf", 6).alias("rrf"),
-        F.col("global_rank").cast("long").alias("fused_rank"),
-    )
-
-
-def _sql_rrf_fusion() -> str:
-    k = float(RRF_K)
-    return f"""
-WITH base AS MATERIALIZED (
-  SELECT doc_id,
-         CAST(len(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
-              AS BIGINT) AS ntok,
-         CAST(len(list_distinct(
-             regexp_extract_all(lower(text), '{_TOKEN_PATTERN}')))
-           AS BIGINT) AS ndis
-  FROM documents
-), ranked AS MATERIALIZED (
-  SELECT doc_id, ntok, ndis,
-         CAST(row_number() OVER (ORDER BY ntok DESC, doc_id) AS BIGINT)
-           AS r1,
-         CAST(row_number() OVER (ORDER BY ndis DESC, doc_id) AS BIGINT)
-           AS r2
-  FROM base
-), scored AS MATERIALIZED (
-  SELECT *, 1.0 / ({k} + CAST(r1 AS DOUBLE))
-            + 1.0 / ({k} + CAST(r2 AS DOUBLE)) AS rrf
-  FROM ranked
-)
-SELECT doc_id, ntok, ndis, r1, r2,
-       round(rrf, 6) AS rrf,
-       CAST(row_number() OVER (ORDER BY rrf DESC, doc_id) AS BIGINT)
-         AS fused_rank
-FROM scored
-"""
-
-
-# --------------------------------------------------------------------------
-# Multi-touch attribution (`attribution`): the martech credit-assignment
-# triple — for each purchase, the user's clicks in the trailing
-# ATTR_WINDOW get credit under three models: first-touch (earliest
-# click), last-touch (latest click at-or-before the purchase), and
-# linear (1/k to each of the k touchpoints). Channel = the click's
-# props payload (a 100-value domain). The sequential-causality shape
-# `event_funnel` (fixed step order) and `asof_events` (single nearest
-# match) don't cover: ALL touchpoints in a window share credit.
-#
-# Exactness: first/last resolve by the exact (t_click, event_id) key
-# (Spark struct-min/max == DuckDB row_number on the same key); linear
-# credits are 1/k doubles folded in pinned (conv, click) order
-# (list_sum ORDER BY twin). Counts BIGINT.
-#
-# Scale shape: the touch join is a user-keyed equi-join with the window
-# predicate applied AT the join (the asof_events discipline — time
-# bounds prune before any per-conversion work); per-conversion k is a
-# map-side-combinable count; per-channel rollups are summary-sized.
-# --------------------------------------------------------------------------
-
-ATTR_WINDOW_S = 7 * 86400
-
-
-def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wu = ATTR_WINDOW_S * 1_000_000
-    um = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-    )
-    ev = _events(spark, sf_dir).select(
-        "user_id", "event_type", "event_id", "props", um.alias("um")
-    )
-    buys = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("event_id").alias("conv_id"),
-        F.col("um").alias("t_conv"),
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.col("um").alias("t_click"),
-        F.col("props").alias("channel"),
-    )
-    touch = (
-        buys.join(clicks, "user_id")
-        .filter(
-            (F.col("t_click") <= F.col("t_conv"))
-            & (F.col("t_click") > F.col("t_conv") - wu)
-        )
-        .localCheckpoint(eager=True)
-    )
-    kf = touch.groupBy("conv_id").agg(F.count("*").cast("long").alias("k"))
-    ends = touch.groupBy("conv_id").agg(
-        F.min(F.struct("t_click", "click_id", "channel")).alias("fs"),
-        F.max(F.struct("t_click", "click_id", "channel")).alias("ls"),
-    )
-    first_n = (
-        ends.select(F.col("fs.channel").alias("channel"))
-        .groupBy("channel")
-        .agg(F.count("*").cast("long").alias("first_n"))
-    )
-    last_n = (
-        ends.select(F.col("ls.channel").alias("channel"))
-        .groupBy("channel")
-        .agg(F.count("*").cast("long").alias("last_n"))
-    )
-    linear = (
-        # no broadcast hint: kf is |conversions|-sized (grows with the
-        # corpus) — the conv_id equi-join co-partitions under AQE
-        touch.join(kf, "conv_id")
-        .select(
-            "channel",
-            "conv_id",
-            "click_id",
-            (F.lit(1.0) / F.col("k").cast("double")).alias("credit"),
-        )
-        .groupBy("channel")
-        .agg(
-            F.aggregate(
-                F.sort_array(
-                    F.collect_list(F.struct("conv_id", "click_id", "credit"))
-                ),
-                F.lit(0.0),
-                lambda acc, e: acc + e["credit"],
-            ).alias("linear_credit"),
-            F.count("*").cast("long").alias("touches"),
-        )
-    )
-    tot = buys.agg(
-        F.count("*").cast("long").alias("n_conversions")
-    ).crossJoin(
-        F.broadcast(
-            touch.agg(
-                F.count_distinct("conv_id").cast("long").alias("n_attributed")
-            )
-        )
-    )
-    return (
-        linear.join(first_n, "channel", "left")
-        .join(last_n, "channel", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "channel",
-            F.coalesce("first_n", F.lit(0)).cast("long").alias("first_n"),
-            F.coalesce("last_n", F.lit(0)).cast("long").alias("last_n"),
-            F.round("linear_credit", 6).alias("linear_credit"),
-            "touches",
-            "n_conversions",
-            "n_attributed",
-        )
-    )
-
-
-def _sql_attribution() -> str:
-    wu = ATTR_WINDOW_S * 1_000_000
-    return f"""
-WITH buys AS (
-  SELECT user_id, event_id AS conv_id, epoch_us(ts) AS t_conv
-  FROM events WHERE event_type = 'purchase'
-), clicks AS (
-  SELECT user_id, event_id AS click_id, epoch_us(ts) AS t_click,
-         props AS channel
-  FROM events WHERE event_type = 'click'
-), touch AS MATERIALIZED (
-  SELECT b.conv_id, c.click_id, c.t_click, c.channel
-  FROM buys b JOIN clicks c USING (user_id)
-  WHERE c.t_click <= b.t_conv AND c.t_click > b.t_conv - {wu}
-), kf AS (
-  SELECT conv_id, CAST(count(*) AS BIGINT) AS k FROM touch GROUP BY conv_id
-), ordered AS (
-  SELECT conv_id, channel,
-         row_number() OVER (PARTITION BY conv_id
-                            ORDER BY t_click, click_id) AS rn_first,
-         row_number() OVER (PARTITION BY conv_id
-                            ORDER BY t_click DESC, click_id DESC)
-           AS rn_last
-  FROM touch
-), first_n AS (
-  SELECT channel, CAST(count(*) AS BIGINT) AS first_n
-  FROM ordered WHERE rn_first = 1 GROUP BY channel
-), last_n AS (
-  SELECT channel, CAST(count(*) AS BIGINT) AS last_n
-  FROM ordered WHERE rn_last = 1 GROUP BY channel
-), linear AS MATERIALIZED (
-  SELECT t.channel,
-         list_sum(list(1.0 / CAST(k.k AS DOUBLE)
-                       ORDER BY t.conv_id, t.click_id)) AS linear_credit,
-         CAST(count(*) AS BIGINT) AS touches
-  FROM touch t JOIN kf k USING (conv_id)
-  GROUP BY t.channel
-), tot AS (
-  SELECT (SELECT CAST(count(*) AS BIGINT) FROM buys) AS n_conversions,
-         (SELECT CAST(count(DISTINCT conv_id) AS BIGINT) FROM touch)
-           AS n_attributed
-)
-SELECT l.channel,
-       CAST(coalesce(f.first_n, 0) AS BIGINT) AS first_n,
-       CAST(coalesce(ln.last_n, 0) AS BIGINT) AS last_n,
-       round(l.linear_credit, 6) AS linear_credit,
-       l.touches,
-       tot.n_conversions, tot.n_attributed
-FROM linear l
-LEFT JOIN first_n f ON f.channel = l.channel
-LEFT JOIN last_n ln ON ln.channel = l.channel
-CROSS JOIN tot
-"""
-
-
-# --------------------------------------------------------------------------
-# Kaplan-Meier survival estimator (`kaplan_meier`): the right-censored
-# time-to-event curve (Kaplan & Meier 1958) — the churn/retention-
-# duration analysis the cohort_retention matrix doesn't give (KM handles
-# CENSORING: users still active at the horizon contribute risk time
-# without biasing the curve). Subjects = users with ≥1 purchase; t0/t1 =
-# first/last purchase day; a user CHURNS iff the horizon is more than
-# KM_GAP_DAYS past their last purchase (duration t1−t0), else is
-# censored at H−t0 (probed: 3/31/256 churners at sf0.001/0.01/0.1 — both
-# branches live everywhere). S(t) = Π_{t_i ≤ t} (1 − d_i/n_i) over
-# distinct churn times; at-risk counts n_i follow the standard
-# censored-after-event tie convention (duration ≥ t_i).
-#
-# Exactness: n/d are BIGINT; each q_i = 1 − d_i/n_i is one division of
-# identical integers (bit-identical), and the survival product folds in
-# pinned time order (Spark sorted-array fold == DuckDB recursive CTE —
-# the holt discipline), so S agrees to the last ulp; 6dp margins pytest.
-#
-# Scale shape: per-user spans are one map-side-combinable agg; the
-# event-time table is bounded (≤ |days| rows, broadcast against the
-# subject frame for at-risk counts); the fold runs over that summary.
-# --------------------------------------------------------------------------
-
-KM_GAP_DAYS = 3
-
-
-def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    day = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-        f" div {_DAY_US}"
-    )
-    per = (
-        _events(spark, sf_dir)
-        .filter(F.col("event_type") == RET_EVENT)
-        .select("user_id", day.alias("d"))
-        .groupBy("user_id")
-        .agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
-    )
-    hz = per.agg(F.max("d1").alias("h"))
-    subj = per.crossJoin(F.broadcast(hz)).select(
-        "user_id",
-        F.when(
-            F.col("h") - F.col("d1") > KM_GAP_DAYS, F.col("d1") - F.col("d0")
-        )
-        .otherwise(F.col("h") - F.col("d0"))
-        .alias("dur"),
-        (F.col("h") - F.col("d1") > KM_GAP_DAYS).cast("long").alias("ev"),
-    ).localCheckpoint(eager=True)
-    times = (
-        subj.filter(F.col("ev") == 1)
-        .select(F.col("dur").alias("t"))
-        .distinct()
-    )
-    stats = (
-        subj.crossJoin(F.broadcast(times))
-        .groupBy("t")
-        .agg(
-            F.sum((F.col("dur") >= F.col("t")).cast("long"))
-            .cast("long")
-            .alias("n_risk"),
-            F.sum(
-                ((F.col("dur") == F.col("t")) & (F.col("ev") == 1)).cast(
-                    "long"
-                )
-            )
-            .cast("long")
-            .alias("d"),
-        )
-    )
-    folded = stats.agg(
-        F.sort_array(F.collect_list(F.struct("t", "n_risk", "d"))).alias("a")
-    ).select(
-        "a",
-        F.aggregate(
-            F.col("a"),
-            F.named_struct(
-                F.lit("s"),
-                F.lit(1.0),
-                F.lit("ss"),
-                F.array().cast("array<double>"),
-            ),
-            lambda acc, e: F.named_struct(
-                F.lit("s"),
-                acc["s"]
-                * (
-                    F.lit(1.0)
-                    - e["d"].cast("double") / e["n_risk"].cast("double")
-                ),
-                F.lit("ss"),
-                F.concat(
-                    acc["ss"],
-                    F.array(
-                        acc["s"]
-                        * (
-                            F.lit(1.0)
-                            - e["d"].cast("double")
-                            / e["n_risk"].cast("double")
-                        )
-                    ),
-                ),
-            ),
-        )["ss"].alias("ss"),
-    )
-    n_subj = subj.agg(
-        F.count("*").cast("long").alias("n_subjects"),
-        F.sum("ev").cast("long").alias("n_events"),
-    )
-    return (
-        folded.select(F.posexplode("a").alias("i0", "e"), "ss")
-        .select(
-            F.col("e.t").cast("long").alias("t"),
-            F.col("e.n_risk").alias("n_risk"),
-            F.col("e.d").alias("d"),
-            F.round(
-                F.lit(1.0)
-                - F.col("e.d").cast("double")
-                / F.col("e.n_risk").cast("double"),
-                6,
-            ).alias("q"),
-            F.round(F.element_at("ss", F.col("i0") + 1), 6).alias("s"),
-        )
-        .crossJoin(F.broadcast(n_subj))
-    )
-
-
-def _sql_kaplan_meier() -> str:
-    g = KM_GAP_DAYS
-    return f"""
-WITH RECURSIVE per AS (
-  SELECT user_id,
-         min(epoch_us(ts) // {_DAY_US}) AS d0,
-         max(epoch_us(ts) // {_DAY_US}) AS d1
-  FROM events WHERE event_type = {_sql_quote(RET_EVENT)}
-  GROUP BY user_id
-), hz AS (
-  SELECT max(d1) AS h FROM per
-), subj AS MATERIALIZED (
-  SELECT user_id,
-         CASE WHEN hz.h - d1 > {g} THEN d1 - d0 ELSE hz.h - d0 END AS dur,
-         CAST(CASE WHEN hz.h - d1 > {g} THEN 1 ELSE 0 END AS BIGINT) AS ev
-  FROM per CROSS JOIN hz
-), times AS (
-  SELECT DISTINCT dur AS t FROM subj WHERE ev = 1
-), stats AS MATERIALIZED (
-  SELECT t.t,
-         CAST(sum(CASE WHEN s.dur >= t.t THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_risk,
-         CAST(sum(CASE WHEN s.dur = t.t AND s.ev = 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS d
-  FROM times t CROSS JOIN subj s
-  GROUP BY t.t
-), ordered AS MATERIALIZED (
-  SELECT t, n_risk, d,
-         row_number() OVER (ORDER BY t) AS i,
-         count(*) OVER () AS ni
-  FROM stats
-), km AS (
-  SELECT i, t, n_risk, d,
-         1.0 * (1.0 - CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE)) AS s
-  FROM ordered WHERE i = 1
-  UNION ALL
-  SELECT o.i, o.t, o.n_risk, o.d,
-         km.s * (1.0 - CAST(o.d AS DOUBLE) / CAST(o.n_risk AS DOUBLE))
-  FROM km JOIN ordered o ON o.i = km.i + 1
-), nsub AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_subjects,
-         CAST(sum(ev) AS BIGINT) AS n_events
-  FROM subj
-)
-SELECT CAST(km.t AS BIGINT) AS t, km.n_risk, km.d,
-       round(1.0 - CAST(km.d AS DOUBLE) / CAST(km.n_risk AS DOUBLE), 6)
-         AS q,
-       round(km.s, 6) AS s,
-       nsub.n_subjects, nsub.n_events
-FROM km CROSS JOIN nsub
-"""
-
-
-# --------------------------------------------------------------------------
-# Benford first-digit test (`benford_test`): the forensic-accounting /
-# data-fabrication screen (Benford 1938; Nigrini's audit standard) —
-# does a value column's first significant digit follow
-# P(d) = log10(1 + 1/d)? Two scopes prove both verdicts: 'raw' (first
-# digit of the events value column — synthetic near-uniform magnitudes,
-# REJECTS) and 'benford' (a planted log-uniform sample: u =
-# md5(event_id) % 1e6 / 1e6, digit decided by comparing the EXACT
-# rational u against literal log10(d) thresholds — no pow/log at
-# runtime, so the digit is integer-decided and exactly
-# Benford-distributed up to grid resolution; CONFORMS). The raw digit
-# comes from the cents-integer's decimal string (first significant
-# digit of value — no float log10 boundary). Chi² vs expected N·p_d in
-# a generated digit-order 9-term sum; verdict at the df=8, α=0.05
-# critical value 15.507.
-#
-# Scale shape: one scan → per-(scope, digit) counts (map-side
-# combinable); everything downstream is 18 rows. Digits, counts and
-# verdicts are integer-decided; chi² uses shared literal constants.
-# --------------------------------------------------------------------------
-
-import math as _math
-
-BENFORD_P = {d: _math.log10(1 + 1 / d) for d in range(1, 10)}
-BENFORD_T = {d: _math.log10(d) for d in range(2, 10)}
-BENFORD_CRIT = 15.507  # chi2 df=8, alpha=0.05
-_BENFORD_GRID = 1_000_000
-
-
-def q_benford_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cents = F.round(F.col("value") * 100, 0).cast("long")
-    raw_digit = F.substring(cents.cast("string"), 1, 1).cast("long")
-    u = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("bf"), F.col("event_id")), _BENFORD_GRID
-    ).cast("double") / F.lit(float(_BENFORD_GRID))
-    syn_digit = F.lit(9)
-    for d in range(9, 1, -1):
-        syn_digit = F.when(u < F.lit(BENFORD_T[d]), F.lit(d - 1)).otherwise(
-            syn_digit
-        )
-    uni_digit = (
-        _md5_bucket_spark(
-            F.concat_ws("|", F.lit("bu"), F.col("event_id")), 9
-        )
-        + 1
-    )
-    ev = _events(spark, sf_dir).filter(F.col("value") > 0)
-    # ONE corpus scan (round 7, guide §2.4): the three scope projections
-    # become one inline-exploded array of (scope, digit) structs — the
-    # exact row multiset of the 3-way union they replace
-    rows = ev.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("raw").alias("scope"), raw_digit.alias("digit")
-                ),
-                F.struct(
-                    F.lit("benford").alias("scope"),
-                    syn_digit.cast("long").alias("digit"),
-                ),
-                F.struct(
-                    F.lit("uniform").alias("scope"),
-                    uni_digit.cast("long").alias("digit"),
-                ),
-            )
-        ).alias("t")
-    ).select(F.col("t.scope").alias("scope"), F.col("t.digit").alias("digit"))
-    cnt = rows.groupBy("scope", "digit").agg(
-        F.count("*").cast("long").alias("observed")
-    )
-    grid = spark.createDataFrame(
-        [(s, d) for s in ("raw", "benford", "uniform") for d in range(1, 10)],
-        "scope string, digit long",
-    )
-    filled = grid.join(cnt, ["scope", "digit"], "left").select(
-        "scope",
-        "digit",
-        F.coalesce("observed", F.lit(0)).cast("long").alias("observed"),
-    )
-    tot = filled.groupBy("scope").agg(
-        F.sum("observed").cast("long").alias("n")
-    )
-    pmap = F.element_at(
-        F.array(*[F.lit(BENFORD_P[d]) for d in range(1, 10)]),
-        F.col("digit").cast("int"),
-    )
-    base = filled.join(F.broadcast(tot), "scope").select(
-        "scope",
-        "digit",
-        "observed",
-        "n",
-        pmap.alias("p_benford"),
-        (F.col("n").cast("double") * pmap).alias("expected"),
-    )
-    chi2 = base.groupBy("scope").agg(
-        F.aggregate(
-            F.sort_array(
-                F.collect_list(F.struct("digit", "observed", "expected"))
-            ),
-            F.lit(0.0),
-            lambda acc, e: acc
-            + (e["observed"].cast("double") - e["expected"])
-            * (e["observed"].cast("double") - e["expected"])
-            / e["expected"],
-        ).alias("chi2")
-    )
-    return base.join(F.broadcast(chi2), "scope").select(
-        "scope",
-        "digit",
-        "observed",
-        F.round("expected", 6).alias("expected"),
-        F.round("p_benford", 6).alias("p_benford"),
-        F.round("chi2", 6).alias("chi2"),
-        F.when(F.col("chi2") > BENFORD_CRIT, F.lit("reject"))
-        .otherwise(F.lit("conform"))
-        .alias("verdict"),
-    )
-
-
-def _sql_benford_test() -> str:
-    u = _md5_bucket_sql(
-        "'bf' || '|' || CAST(event_id AS VARCHAR)", _BENFORD_GRID
-    )
-    uni = _md5_bucket_sql("'bu' || '|' || CAST(event_id AS VARCHAR)", 9)
-    syn = "9"
-    for d in range(9, 1, -1):
-        syn = (
-            f"CASE WHEN uu < {BENFORD_T[d]!r} THEN {d - 1} ELSE {syn} END"
-        )
-    parr = ", ".join(repr(BENFORD_P[d]) for d in range(1, 10))
-    return f"""
-WITH ev AS (
-  SELECT event_id, value FROM events WHERE value > 0
-), rows_ AS (
-  SELECT 'raw' AS scope,
-         CAST(substr(CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR),
-                     1, 1) AS BIGINT) AS digit
-  FROM ev
-  UNION ALL
-  SELECT 'benford' AS scope, CAST(({syn}) AS BIGINT) AS digit
-  FROM (SELECT CAST({u} AS DOUBLE) / {float(_BENFORD_GRID)} AS uu FROM ev)
-  UNION ALL
-  SELECT 'uniform' AS scope, CAST({uni} + 1 AS BIGINT) AS digit FROM ev
-), cnt AS (
-  SELECT scope, digit, CAST(count(*) AS BIGINT) AS observed
-  FROM rows_ GROUP BY scope, digit
-), grid AS (
-  SELECT s.scope, CAST(d.d AS BIGINT) AS digit
-  FROM (SELECT unnest(['raw', 'benford', 'uniform']) AS scope) s
-  CROSS JOIN (SELECT unnest(range(1, 10)) AS d) d
-), filled AS (
-  SELECT g.scope, g.digit,
-         CAST(coalesce(c.observed, 0) AS BIGINT) AS observed
-  FROM grid g LEFT JOIN cnt c ON c.scope = g.scope AND c.digit = g.digit
-), tot AS (
-  SELECT scope, CAST(sum(observed) AS BIGINT) AS n FROM filled GROUP BY scope
-), base AS MATERIALIZED (
-  SELECT f.scope, f.digit, f.observed, t.n,
-         CAST(([{parr}])[CAST(f.digit AS INTEGER)] AS DOUBLE) AS p_benford,
-         CAST(t.n AS DOUBLE)
-           * CAST(([{parr}])[CAST(f.digit AS INTEGER)] AS DOUBLE)
-           AS expected
-  FROM filled f JOIN tot t USING (scope)
-), chi2 AS (
-  SELECT scope,
-         list_sum(list(
-           (CAST(observed AS DOUBLE) - expected)
-           * (CAST(observed AS DOUBLE) - expected) / expected
-           ORDER BY digit)) AS chi2
-  FROM base GROUP BY scope
-)
-SELECT b.scope, b.digit, b.observed,
-       round(b.expected, 6) AS expected,
-       round(b.p_benford, 6) AS p_benford,
-       round(c.chi2, 6) AS chi2,
-       CASE WHEN c.chi2 > {BENFORD_CRIT} THEN 'reject'
-            ELSE 'conform' END AS verdict
-FROM base b JOIN chi2 c USING (scope)
-"""
-
-
-# --------------------------------------------------------------------------
-# Isotonic calibration (`isotonic_calibration`): the pool-adjacent-
-# violators recalibration (Ayer et al. 1955; Zadrozny & Elkan 2002) —
-# ece_calibration MEASURES miscalibration, this FIXES it: fit the
-# best monotone (isotonic) accuracy curve over the 10 score deciles.
-# PAV's sequential pooling loop doesn't shard, but its value at bin i
-# equals the MINIMAX identity fit_i = max_{j≤i} min_{k≥i}
-# avg(y over bins j..k) — a closed form over the BOUNDED bin grid that
-# both engines compute relationally: prefix sums give every interval
-# average as ONE division of BIGINTs (weighted by bin counts), the
-# j≤i≤k grid is ≤ B³ rows, and min/max over bit-identical doubles is
-# deterministic. A pytest replays a REAL stack-based PAV pool loop and
-# asserts the minimax fit equals it bin for bin (the theorem, checked
-# on data). Before/after reliability (|acc−conf| vs |iso−conf| weighted
-# MAEs) ride along — isotonic never does worse in L2, and the weighted
-# calibration error strictly improves on this corpus (asserted).
-#
-# Scale shape: the corpus pass is the audited logreg chain + one
-# map-side bin agg; everything else lives on the ≤10-row bin table
-# (grid joins broadcast).
-# --------------------------------------------------------------------------
-
-
-ISO_FLIP_MOD = 3  # md5 1-in-3 label flips in high bins (degraded scope)
-ISO_FLIP_BIN = 7
-
-
-def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scored = _logreg_scored(spark, sf_dir).select(
-        "doc_id",
-        "y",
-        F.round(F.col("p") * _ECE_SCALE, 0).cast("long").alias("sp"),
-    )
-    width = _ECE_SCALE // ECE_BINS
-    binned = scored.select(
-        "doc_id",
-        "y",
-        "sp",
-        F.least(
-            F.expr(f"sp div {width}"), F.lit(ECE_BINS - 1).cast("long")
-        ).alias("bin"),
-    )
-    flip = (
-        _md5_bucket_spark(
-            F.concat_ws("|", F.lit("iso"), F.col("doc_id")), ISO_FLIP_MOD
-        )
-        == 0
-    ) & (F.col("bin") >= ISO_FLIP_BIN)
-    rows = None
-    for scope in ("model", "degraded"):
-        ye = (
-            F.when(flip, 1 - F.col("y")).otherwise(F.col("y"))
-            if scope == "degraded"
-            else F.col("y")
-        )
-        part = binned.select(
-            F.lit(scope).alias("scope"),
-            "bin",
-            ye.cast("long").alias("y"),
-            "sp",
-        )
-        rows = part if rows is None else rows.unionByName(part)
-    per = (
-        rows.groupBy("scope", "bin")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("y").cast("long").alias("ny"),
-            F.sum("sp").cast("long").alias("ssp"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    # inclusive and exclusive prefix sums over the bounded bin table
-    pre = (
-        per.alias("a")
-        .join(
-            F.broadcast(per.alias("b")),
-            (F.col("b.scope") == F.col("a.scope"))
-            & (F.col("b.bin") <= F.col("a.bin")),
-        )
-        .groupBy(F.col("a.scope").alias("scope"), F.col("a.bin").alias("bin"))
-        .agg(
-            F.sum(F.col("b.n")).cast("long").alias("cn"),
-            F.sum(F.col("b.ny")).cast("long").alias("cy"),
-        )
-    )
-    pre_ex = (
-        per.alias("a")
-        .join(
-            F.broadcast(per.alias("b")),
-            (F.col("b.scope") == F.col("a.scope"))
-            & (F.col("b.bin") < F.col("a.bin")),
-            "left",
-        )
-        .groupBy(F.col("a.scope").alias("scope"), F.col("a.bin").alias("bin"))
-        .agg(
-            F.coalesce(F.sum(F.col("b.n")), F.lit(0))
-            .cast("long")
-            .alias("pn"),
-            F.coalesce(F.sum(F.col("b.ny")), F.lit(0))
-            .cast("long")
-            .alias("py"),
-        )
-    )
-    spans = (
-        pre.alias("k")
-        .join(
-            F.broadcast(pre_ex.alias("j")),
-            (F.col("j.scope") == F.col("k.scope"))
-            & (F.col("j.bin") <= F.col("k.bin")),
-        )
-        .select(
-            F.col("k.scope").alias("scope"),
-            F.col("j.bin").alias("j"),
-            F.col("k.bin").alias("k"),
-            (
-                (F.col("k.cy") - F.col("j.py")).cast("double")
-                / (F.col("k.cn") - F.col("j.pn")).cast("double")
-            ).alias("avg"),
-        )
-    )
-    mins = (
-        per.select("scope", "bin")
-        .alias("i")
-        .join(
-            F.broadcast(spans.alias("s")),
-            (F.col("s.scope") == F.col("i.scope"))
-            & (F.col("s.j") <= F.col("i.bin"))
-            & (F.col("s.k") >= F.col("i.bin")),
-        )
-        .groupBy(
-            F.col("i.scope").alias("scope"),
-            F.col("i.bin").alias("bin"),
-            F.col("s.j").alias("j"),
-        )
-        .agg(F.min("avg").alias("mn"))
-    )
-    fit = mins.groupBy("scope", "bin").agg(F.max("mn").alias("iso_fit"))
-    conf = F.col("ssp").cast("double") / (
-        F.col("n") * _ECE_SCALE
-    ).cast("double")
-    acc = F.col("ny").cast("double") / F.col("n").cast("double")
-    joined = per.join(F.broadcast(fit), ["scope", "bin"]).select(
-        "scope",
-        "bin",
-        "n",
-        "ny",
-        conf.alias("conf"),
-        acc.alias("acc"),
-        "iso_fit",
-    )
-    # pinned bin-order folds — a bare double sum over bins would have a
-    # nondeterministic reduce order
-    lst = F.sort_array(
-        F.collect_list(F.struct("bin", "n", "conf", "acc", "iso_fit"))
-    )
-    tot = (
-        joined.groupBy("scope")
-        .agg(F.sum("n").cast("double").alias("tn"), lst.alias("l"))
-        .select(
-            "scope",
-            (
-                F.aggregate(
-                    F.col("l"),
-                    F.lit(0.0),
-                    lambda a, e: a
-                    + e["n"].cast("double") * F.abs(e["acc"] - e["conf"]),
-                )
-                / F.col("tn")
-            ).alias("ece_before"),
-            (
-                F.aggregate(
-                    F.col("l"),
-                    F.lit(0.0),
-                    lambda a, e: a
-                    + e["n"].cast("double")
-                    * F.abs(e["iso_fit"] - e["conf"]),
-                )
-                / F.col("tn")
-            ).alias("drift_after"),
-        )
-    )
-    return joined.join(F.broadcast(tot), "scope").select(
-        "scope",
-        "bin",
-        "n",
-        "ny",
-        F.round("conf", 6).alias("conf"),
-        F.round("acc", 6).alias("acc"),
-        F.round("iso_fit", 6).alias("iso_fit"),
-        F.round("ece_before", 6).alias("ece_before"),
-        F.round("drift_after", 6).alias("drift_after"),
-    )
-
-
-def _sql_isotonic_calibration() -> str:
-    s, nb = _ECE_SCALE, ECE_BINS
-    width = s // nb
-    flip = _md5_bucket_sql(
-        "'iso' || '|' || CAST(doc_id AS VARCHAR)", ISO_FLIP_MOD
-    )
-    return f"""
-WITH {_sql_logreg_chain()}, binned AS (
-  SELECT doc_id, y, CAST(round(p * {s}) AS BIGINT) AS sp,
-         least(CAST(round(p * {s}) AS BIGINT) // {width}, {nb - 1}) AS bin
-  FROM scores
-), rows_ AS (
-  SELECT 'model' AS scope, bin, y, sp FROM binned
-  UNION ALL
-  SELECT 'degraded' AS scope, bin,
-         CASE WHEN {flip} = 0 AND bin >= {ISO_FLIP_BIN}
-              THEN 1 - y ELSE y END AS y,
-         sp
-  FROM binned
-), per AS MATERIALIZED (
-  SELECT scope, bin, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(y) AS BIGINT) AS ny,
-         CAST(sum(sp) AS BIGINT) AS ssp
-  FROM rows_ GROUP BY scope, bin
-), pre AS MATERIALIZED (
-  SELECT a.scope, a.bin,
-         CAST(sum(b.n) AS BIGINT) AS cn,
-         CAST(sum(b.ny) AS BIGINT) AS cy
-  FROM per a JOIN per b ON b.scope = a.scope AND b.bin <= a.bin
-  GROUP BY a.scope, a.bin
-), pre_ex AS MATERIALIZED (
-  SELECT a.scope, a.bin,
-         CAST(coalesce(sum(b.n), 0) AS BIGINT) AS pn,
-         CAST(coalesce(sum(b.ny), 0) AS BIGINT) AS py
-  FROM per a LEFT JOIN per b ON b.scope = a.scope AND b.bin < a.bin
-  GROUP BY a.scope, a.bin
-), spans AS MATERIALIZED (
-  SELECT k.scope, j.bin AS j, k.bin AS k,
-         CAST(k.cy - j.py AS DOUBLE) / CAST(k.cn - j.pn AS DOUBLE) AS avg
-  FROM pre k JOIN pre_ex j ON j.scope = k.scope AND j.bin <= k.bin
-), mins AS (
-  SELECT i.scope, i.bin, sp.j, min(sp.avg) AS mn
-  FROM per i JOIN spans sp
-    ON sp.scope = i.scope AND sp.j <= i.bin AND sp.k >= i.bin
-  GROUP BY i.scope, i.bin, sp.j
-), fit AS MATERIALIZED (
-  SELECT scope, bin, max(mn) AS iso_fit FROM mins GROUP BY scope, bin
-), joined AS MATERIALIZED (
-  SELECT p.scope, p.bin, p.n, p.ny,
-         CAST(p.ssp AS DOUBLE) / CAST(p.n * {s} AS DOUBLE) AS conf,
-         CAST(p.ny AS DOUBLE) / CAST(p.n AS DOUBLE) AS acc,
-         f.iso_fit
-  FROM per p JOIN fit f ON f.scope = p.scope AND f.bin = p.bin
-), tot AS (
-  SELECT scope,
-         list_sum(list(CAST(n AS DOUBLE) * abs(acc - conf) ORDER BY bin))
-           / CAST(sum(n) AS DOUBLE) AS ece_before,
-         list_sum(list(CAST(n AS DOUBLE) * abs(iso_fit - conf)
-                       ORDER BY bin))
-           / CAST(sum(n) AS DOUBLE) AS drift_after
-  FROM joined GROUP BY scope
-)
-SELECT j.scope, j.bin, j.n, j.ny,
-       round(j.conf, 6) AS conf,
-       round(j.acc, 6) AS acc,
-       round(j.iso_fit, 6) AS iso_fit,
-       round(t.ece_before, 6) AS ece_before,
-       round(t.drift_after, 6) AS drift_after
-FROM joined j JOIN tot t USING (scope)
-"""
-
-
-# --------------------------------------------------------------------------
-# Window-function family parity (`window_funcs`): the full ANSI ranking/
-# navigation toolbox in one operator — row_number, rank, dense_rank,
-# percent_rank, cume_dist, ntile, lag/lead, nth_value, first/last_value
-# — over tie-RICH partitions (order key = md5 grade 0..4, so rank vs
-# dense_rank genuinely diverge and percent_rank/cume_dist exercise tie
-# semantics). Ranking functions order by the tying key alone (standard
-# tie semantics, identical in both engines); navigation functions order
-# by (k, doc_id) with an explicit unbounded frame so every value is
-# deterministic. percent_rank/cume_dist are single divisions of exact
-# integers.
-#
-# Scale shape: one window pass PARTITIONED by source (bounded 25-doc
-# groups — never a single-partition window); at 100 TB this is the
-# WindowExec-per-partition shape every BI layer emits.
-# --------------------------------------------------------------------------
-
-
-def q_window_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    k = _md5_bucket_spark(F.concat_ws("|", F.lit("wf"), F.col("doc_id")), 5)
-    base = _docs(spark, sf_dir).select("source", "doc_id", k.alias("k"))
-    wt = Window.partitionBy("source").orderBy("k")  # ties allowed
-    wd = Window.partitionBy("source").orderBy("k", "doc_id")
-    wf = wd.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    return base.select(
-        "source",
-        "doc_id",
-        "k",
-        F.row_number().over(wd).cast("long").alias("rn"),
-        F.rank().over(wt).cast("long").alias("rnk"),
-        F.dense_rank().over(wt).cast("long").alias("drnk"),
-        F.round(F.percent_rank().over(wt), 6).alias("pr"),
-        F.round(F.cume_dist().over(wt), 6).alias("cd"),
-        F.ntile(4).over(wd).cast("long").alias("nt"),
-        F.lag("doc_id", 1).over(wd).cast("long").alias("lag_id"),
-        F.lead("doc_id", 1).over(wd).cast("long").alias("lead_id"),
-        F.nth_value("doc_id", 3).over(wf).cast("long").alias("nth3"),
-        F.first("doc_id").over(wf).cast("long").alias("first_id"),
-        F.last("doc_id").over(wf).cast("long").alias("last_id"),
-    )
-
-
-def _sql_window_funcs() -> str:
-    k = _md5_bucket_sql("'wf' || '|' || CAST(doc_id AS VARCHAR)", 5)
-    return f"""
-WITH base AS (
-  SELECT source, doc_id, {k} AS k FROM documents
-)
-SELECT source, doc_id, k,
-       CAST(row_number() OVER wd AS BIGINT) AS rn,
-       CAST(rank() OVER wt AS BIGINT) AS rnk,
-       CAST(dense_rank() OVER wt AS BIGINT) AS drnk,
-       round(percent_rank() OVER wt, 6) AS pr,
-       round(cume_dist() OVER wt, 6) AS cd,
-       CAST(ntile(4) OVER wd AS BIGINT) AS nt,
-       CAST(lag(doc_id, 1) OVER wd AS BIGINT) AS lag_id,
-       CAST(lead(doc_id, 1) OVER wd AS BIGINT) AS lead_id,
-       CAST(nth_value(doc_id, 3) OVER wf AS BIGINT) AS nth3,
-       CAST(first_value(doc_id) OVER wf AS BIGINT) AS first_id,
-       CAST(last_value(doc_id) OVER wf AS BIGINT) AS last_id
-FROM base
-WINDOW wt AS (PARTITION BY source ORDER BY k),
-       wd AS (PARTITION BY source ORDER BY k, doc_id),
-       wf AS (PARTITION BY source ORDER BY k, doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-"""
-
-
-# --------------------------------------------------------------------------
-# Quantile normalization (`quantile_normalize`): the cross-batch
-# distribution-alignment transform (Bolstad et al. 2003 — the microarray
-# standard, equally the fix for per-source length-distribution drift in
-# a corpus): rank every document within its source, replace each value
-# with the ACROSS-SOURCE MEAN of the values at that rank — afterwards
-# every source has the identical value multiset (the defining property,
-# asserted in pytest). The testdata's uniform 25-doc sources (probed at
-# both SFs) make the rank join total; the reference value at each rank
-# is Σ BIGINT / n_sources — one division (6dp), everything else integer.
-#
-# Scale shape: within-source ranks are windows over bounded 25-doc
-# partitions; the per-rank reference is one map-side-combinable agg to a
-# |group-size| frame, broadcast back. At 100 TB with ragged groups the
-# same plan runs on interpolated rank positions — the bounded-rank join
-# is unchanged.
-# --------------------------------------------------------------------------
-
-
-def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = F.regexp_extract_all(
-        F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0
-    )
-    base = _docs(spark, sf_dir).select(
-        "source", "doc_id", F.size(toks).cast("long").alias("v")
-    )
-    w = Window.partitionBy("source").orderBy("v", "doc_id")
-    ranked = base.select(
-        "source", "doc_id", "v", F.row_number().over(w).cast("long").alias("r")
-    )
-    ref = ranked.groupBy("r").agg(
-        F.sum("v").cast("long").alias("ref_sum"),
-        F.count("*").cast("long").alias("n_sources"),
-    )
-    return ranked.join(F.broadcast(ref), "r").select(
-        "source",
-        "doc_id",
-        "v",
-        "r",
-        "ref_sum",
-        "n_sources",
-        F.round(
-            F.col("ref_sum").cast("double") / F.col("n_sources").cast("double"),
-            6,
-        ).alias("normalized"),
-    )
-
-
-def _sql_quantile_normalize() -> str:
-    return f"""
-WITH base AS (
-  SELECT source, doc_id,
-         CAST(len(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
-              AS BIGINT) AS v
-  FROM documents
-), ranked AS MATERIALIZED (
-  SELECT source, doc_id, v,
-         CAST(row_number() OVER (PARTITION BY source ORDER BY v, doc_id)
-              AS BIGINT) AS r
-  FROM base
-), ref AS (
-  SELECT r, CAST(sum(v) AS BIGINT) AS ref_sum,
-         CAST(count(*) AS BIGINT) AS n_sources
-  FROM ranked GROUP BY r
-)
-SELECT rk.source, rk.doc_id, rk.v, rk.r, ref.ref_sum, ref.n_sources,
-       round(CAST(ref.ref_sum AS DOUBLE) / CAST(ref.n_sources AS DOUBLE), 6)
-         AS normalized
-FROM ranked rk JOIN ref USING (r)
-"""
-
-
-# --------------------------------------------------------------------------
-# Classical seasonal decomposition (`seasonal_decompose`): the additive
-# moving-average decompose (Macaulay 1931; statsmodels' `seasonal_
-# decompose`) — y = trend + seasonal + residual over the dense hourly
-# series with period 24. Completes the time-series suite: holt forecasts,
-# seasonal_mase evaluates, cusum/rolling_anomaly detect, THIS explains.
-# The even period uses the standard 2×24 centered MA — computed as the
-# SUM of two offset 24-hour BIGINT window sums (trend = strend/48, one
-# division); detrended values stay integer as d48 = 48·y − strend;
-# per-hour-of-day seasonal means are BIGINT ratios; only the seasonal
-# CENTERING (mean of the 24 raw seasonals) is a genuine float sum — it
-# folds in pinned hour order (list_sum ORDER BY twin). Residual = y −
-# trend − seasonal in fixed expression order.
-#
-# Scale shape: one hourly agg; window sums over the bounded series; the
-# hour-of-day aggregation is 24 groups; everything downstream is
-# summary-sized.
-# --------------------------------------------------------------------------
-
-SD_PERIOD = 24
-
-
-def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = SD_PERIOD
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias("h")
-    )
-    cnt = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count("*").alias("c")
-    )
-    w = Window.orderBy("h")
-    ser = (
-        grid.join(cnt, "h", "left")
-        .select("h", F.coalesce("c", F.lit(0)).cast("long").alias("y"))
-        .select(
-            "h", "y", F.row_number().over(w).cast("long").alias("t")
-        )
-    )
-    # single-partition windows are safe ONLY because they sit ABOVE the
-    # hourly-count aggregation — the frame is the bounded |hours| series,
-    # never the corpus (the mixture_plan/ADVICE-r05 discipline)
-    wt = Window.orderBy("t")
-    half = p // 2
-    s1 = F.sum("y").over(wt.rowsBetween(-half, half - 1))
-    s2 = F.sum("y").over(wt.rowsBetween(-(half - 1), half))
-    c1 = F.count("y").over(wt.rowsBetween(-half, half - 1))
-    c2 = F.count("y").over(wt.rowsBetween(-(half - 1), half))
-    wins = ser.select(
-        "h",
-        "t",
-        "y",
-        (s1 + s2).cast("long").alias("strend"),
-        (c1 + c2).cast("long").alias("wcnt"),
-        ((F.col("t") - 1) % p).cast("long").alias("hod"),
-    ).filter(F.col("wcnt") == 2 * p)
-    valid = wins.localCheckpoint(eager=True)
-    sea = valid.groupBy("hod").agg(
-        F.sum(2 * p * F.col("y") - F.col("strend"))
-        .cast("long")
-        .alias("s_num"),
-        F.count("*").cast("long").alias("s_cnt"),
-    )
-    raw_seasonal = F.col("s_num").cast("double") / (
-        F.lit(float(2 * p)) * F.col("s_cnt").cast("double")
-    )
-    sea2 = sea.select("hod", "s_num", "s_cnt", raw_seasonal.alias("sraw"))
-    center = sea2.agg(
-        (
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("hod", "sraw"))),
-                F.lit(0.0),
-                lambda a, e: a + e["sraw"],
-            )
-            / F.count("*").cast("double")
-        ).alias("center")
-    )
-    sea3 = sea2.crossJoin(F.broadcast(center)).select(
-        "hod",
-        "s_num",
-        "s_cnt",
-        (F.col("sraw") - F.col("center")).alias("seasonal"),
-    )
-    trend = F.col("strend").cast("double") / F.lit(float(2 * p))
-    return valid.join(F.broadcast(sea3), "hod").select(
-        "t",
-        F.unix_timestamp("h").alias("epoch"),
-        "y",
-        "hod",
-        "strend",
-        F.round(trend, 6).alias("trend"),
-        F.round("seasonal", 6).alias("seasonal"),
-        F.round(
-            F.col("y").cast("double") - trend - F.col("seasonal"), 6
-        ).alias("resid"),
-    )
-
-
-def _sql_seasonal_decompose() -> str:
-    p = SD_PERIOD
-    half = p // 2
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser AS MATERIALIZED (
-  SELECT row_number() OVER (ORDER BY g.h) AS t, g.h,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS y
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), wins AS MATERIALIZED (
-  SELECT t, h, y,
-         CAST(sum(y) OVER w1 + sum(y) OVER w2 AS BIGINT) AS strend,
-         CAST(count(y) OVER w1 + count(y) OVER w2 AS BIGINT) AS wcnt,
-         CAST((t - 1) % {p} AS BIGINT) AS hod
-  FROM ser
-  WINDOW w1 AS (ORDER BY t ROWS BETWEEN {half} PRECEDING
-                AND {half - 1} FOLLOWING),
-         w2 AS (ORDER BY t ROWS BETWEEN {half - 1} PRECEDING
-                AND {half} FOLLOWING)
-), valid AS MATERIALIZED (
-  SELECT * FROM wins WHERE wcnt = {2 * p}
-), sea AS MATERIALIZED (
-  SELECT hod,
-         CAST(sum({2 * p} * y - strend) AS BIGINT) AS s_num,
-         CAST(count(*) AS BIGINT) AS s_cnt
-  FROM valid GROUP BY hod
-), sea2 AS MATERIALIZED (
-  SELECT hod, s_num, s_cnt,
-         CAST(s_num AS DOUBLE) / ({float(2 * p)} * CAST(s_cnt AS DOUBLE))
-           AS sraw
-  FROM sea
-), center AS (
-  SELECT list_sum(list(sraw ORDER BY hod)) / CAST(count(*) AS DOUBLE)
-           AS center
-  FROM sea2
-), sea3 AS (
-  SELECT hod, s_num, s_cnt, sraw - center.center AS seasonal
-  FROM sea2 CROSS JOIN center
-)
-SELECT v.t, CAST(epoch(v.h) AS BIGINT) AS epoch, v.y, v.hod, v.strend,
-       round(CAST(v.strend AS DOUBLE) / {float(2 * p)}, 6) AS trend,
-       round(s.seasonal, 6) AS seasonal,
-       round(CAST(v.y AS DOUBLE)
-             - CAST(v.strend AS DOUBLE) / {float(2 * p)}
-             - s.seasonal, 6) AS resid
-FROM valid v JOIN sea3 s USING (hod)
-"""
-
-
-# --------------------------------------------------------------------------
-# Active-user engagement (`active_users`): the DAU/WAU/stickiness board
-# metric — per day: distinct daily actives, trailing-7-day distinct
-# actives, and the DAU/WAU engagement ratio. Distinct-over-sliding-
-# window is NOT a window function (COUNT(DISTINCT) OVER a frame is
-# unsupported and would be wrong anyway); the scale-honest plan is the
-# CONTRIBUTION-EXPLODE: dedupe to (user, day), explode each user-day to
-# the ≤AU_WINDOW target days it contributes to, dedupe (user, target),
-# count — a bounded ×W blowup of the already-deduped user-day frame,
-# never a per-day scan. Exact integers; the ratio is one division.
-#
-# Scale shape: (user, day) dedup is one exchange; the explode is
-# W-bounded; the second dedup + count is map-side combinable. Only
-# days with a FULL trailing window emit (partial-window edges excluded,
-# same discipline as rolling_anomaly).
-# --------------------------------------------------------------------------
-
-AU_WINDOW = 7  # trailing days for WAU
-
-
-def q_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    day = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-        f" div {_DAY_US}"
-    )
-    ud = (
-        _events(spark, sf_dir)
-        .select("user_id", day.alias("d"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    bounds = ud.agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
-    dau = ud.groupBy("d").agg(F.count("*").cast("long").alias("dau"))
-    contrib = ud.select(
-        "user_id",
-        F.explode(
-            F.sequence(F.col("d"), F.col("d") + AU_WINDOW - 1)
-        ).alias("d"),
-    ).distinct()
-    wau = contrib.groupBy("d").agg(F.count("*").cast("long").alias("wau"))
-    return (
-        dau.join(wau, "d")
-        .crossJoin(F.broadcast(bounds))
-        .filter(
-            (F.col("d") >= F.col("d0") + AU_WINDOW - 1)
-            & (F.col("d") <= F.col("d1"))
-        )
-        .select(
-            F.col("d").cast("long").alias("day"),
-            "dau",
-            "wau",
-            F.round(
-                F.col("dau").cast("double") / F.col("wau").cast("double"), 6
-            ).alias("stickiness"),
-        )
-    )
-
-
-def _sql_active_users() -> str:
-    w = AU_WINDOW
-    return f"""
-WITH ud AS MATERIALIZED (
-  SELECT DISTINCT user_id, epoch_us(ts) // {_DAY_US} AS d FROM events
-), bounds AS (
-  SELECT min(d) AS d0, max(d) AS d1 FROM ud
-), dau AS (
-  SELECT d, CAST(count(*) AS BIGINT) AS dau FROM ud GROUP BY d
-), contrib AS (
-  SELECT DISTINCT user_id, d + g.i AS d
-  FROM ud, LATERAL (SELECT unnest(range({w})) AS i) g
-), wau AS (
-  SELECT d, CAST(count(*) AS BIGINT) AS wau FROM contrib GROUP BY d
-)
-SELECT CAST(dau.d AS BIGINT) AS day, dau.dau, wau.wau,
-       round(CAST(dau.dau AS DOUBLE) / CAST(wau.wau AS DOUBLE), 6)
-         AS stickiness
-FROM dau JOIN wau USING (d) CROSS JOIN bounds
-WHERE dau.d >= bounds.d0 + {w} - 1 AND dau.d <= bounds.d1
-"""
-
-
-# --------------------------------------------------------------------------
-# Difference-in-differences (`diff_in_diff`): the panel causal estimator
-# (Card & Krueger 1994) — completes the causal family: cuped_ab reduces
-# variance in a RANDOMIZED test, DiD identifies an effect under a
-# CONFOUNDED baseline. Users split into md5 arms; days split at the
-# integer midpoint into pre/post; outcome = per-(user, period) event
-# count with a PLANTED structure: treated users get +DID_BASE in BOTH
-# periods (the baseline confound) and +DID_EFFECT only post. The naive
-# post-only comparison reads BASE+EFFECT; the DiD contrast
-# (Δtreat − Δcontrol) recovers EXACTLY EFFECT up to noise — both
-# estimates ride the output so the bias the method removes is visible
-# (and asserted in pytest). All moments are BIGINT sums (the cuped_ab
-# exactness class); means/variances/t are fixed-order expressions.
-#
-# Scale shape: one scan → per-(user, period) counts → 4-cell moment agg
-# (map-side combinable); everything downstream is 4 rows.
-# --------------------------------------------------------------------------
-
-DID_BASE = 20  # planted always-on treated-arm baseline confound
-DID_EFFECT = 12  # planted treatment effect (post-period only)
-
-
-def q_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    day = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-        f" div {_DAY_US}"
-    )
-    ev = _events(spark, sf_dir).select("user_id", day.alias("d"))
-    bounds = ev.agg(
-        F.expr("cast((min(d) + max(d)) div 2 as bigint)").alias("mid")
-    )
-    arm = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("did"), F.col("user_id")), 2
-    )
-    per = (
-        ev.crossJoin(F.broadcast(bounds))
-        .select(
-            "user_id",
-            arm.alias("treat"),
-            (F.col("d") > F.col("mid")).cast("long").alias("post"),
-        )
-        .groupBy("user_id", "treat", "post")
-        .agg(F.count("*").cast("long").alias("c0"))
-        .select(
-            "user_id",
-            "treat",
-            "post",
-            (
-                F.col("c0")
-                + F.col("treat") * DID_BASE
-                + F.col("treat") * F.col("post") * DID_EFFECT
-            ).alias("y"),
-        )
-    )
-    cells = per.groupBy("treat", "post").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-    )
-    nd = F.col("n").cast("double")
-    mean = F.col("sy").cast("double") / nd
-    var = (F.col("syy").cast("double") - nd * mean * mean) / (nd - F.lit(1.0))
-    stats = cells.select(
-        "treat", "post", "n", "sy", "syy", mean.alias("mean"),
-        var.alias("var"), (var / nd).alias("vn"),
-    )
-    piv = stats.agg(
-        F.sum(F.when((F.col("treat") == 1) & (F.col("post") == 1),
-                     F.col("mean"))).alias("m11"),
-        F.sum(F.when((F.col("treat") == 1) & (F.col("post") == 0),
-                     F.col("mean"))).alias("m10"),
-        F.sum(F.when((F.col("treat") == 0) & (F.col("post") == 1),
-                     F.col("mean"))).alias("m01"),
-        F.sum(F.when((F.col("treat") == 0) & (F.col("post") == 0),
-                     F.col("mean"))).alias("m00"),
-        # each conditional sum touches exactly ONE row; the four-term
-        # addition below is a FIXED-order expression (a bare sum(vn)
-        # would have a nondeterministic reduce order)
-        F.sum(F.when((F.col("treat") == 1) & (F.col("post") == 1),
-                     F.col("vn"))).alias("v11"),
-        F.sum(F.when((F.col("treat") == 1) & (F.col("post") == 0),
-                     F.col("vn"))).alias("v10"),
-        F.sum(F.when((F.col("treat") == 0) & (F.col("post") == 1),
-                     F.col("vn"))).alias("v01"),
-        F.sum(F.when((F.col("treat") == 0) & (F.col("post") == 0),
-                     F.col("vn"))).alias("v00"),
-    ).select(
-        ((F.col("m11") - F.col("m10")) - (F.col("m01") - F.col("m00"))).alias(
-            "did"
-        ),
-        (F.col("m11") - F.col("m01")).alias("naive_post_diff"),
-        F.sqrt(
-            F.col("v11") + F.col("v10") + F.col("v01") + F.col("v00")
-        ).alias("se"),
-    )
-    return stats.crossJoin(F.broadcast(piv)).select(
-        "treat",
-        "post",
-        "n",
-        F.round("mean", 6).alias("mean"),
-        F.round("var", 6).alias("var"),
-        F.round("did", 6).alias("did"),
-        F.round("naive_post_diff", 6).alias("naive_post_diff"),
-        F.round("se", 6).alias("se"),
-        F.round(F.col("did") / F.col("se"), 6).alias("t_did"),
-    )
-
-
-def _sql_diff_in_diff() -> str:
-    arm = _md5_bucket_sql("'did' || '|' || CAST(user_id AS VARCHAR)", 2)
-    return f"""
-WITH ev AS (
-  SELECT user_id, epoch_us(ts) // {_DAY_US} AS d FROM events
-), bounds AS (
-  SELECT CAST((min(d) + max(d)) // 2 AS BIGINT) AS mid FROM ev
-), per AS MATERIALIZED (
-  SELECT user_id, treat, post,
-         c0 + treat * {DID_BASE} + treat * post * {DID_EFFECT} AS y
-  FROM (
-    SELECT user_id, {arm} AS treat,
-           CAST(CASE WHEN d > bounds.mid THEN 1 ELSE 0 END AS BIGINT)
-             AS post,
-           CAST(count(*) AS BIGINT) AS c0
-    FROM ev CROSS JOIN bounds
-    GROUP BY user_id, treat, post, bounds.mid
-  )
-), cells AS MATERIALIZED (
-  SELECT treat, post, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(y * y) AS BIGINT) AS syy
-  FROM per GROUP BY treat, post
-), stats AS MATERIALIZED (
-  SELECT treat, post, n, sy, syy,
-         CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) AS mean,
-         (CAST(syy AS DOUBLE)
-            - CAST(n AS DOUBLE) * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-              * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))
-           / (CAST(n AS DOUBLE) - 1.0) AS var,
-         ((CAST(syy AS DOUBLE)
-            - CAST(n AS DOUBLE) * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-              * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))
-           / (CAST(n AS DOUBLE) - 1.0)) / CAST(n AS DOUBLE) AS vn
-  FROM cells
-), piv AS (
-  SELECT (sum(CASE WHEN treat = 1 AND post = 1 THEN mean END)
-            - sum(CASE WHEN treat = 1 AND post = 0 THEN mean END))
-         - (sum(CASE WHEN treat = 0 AND post = 1 THEN mean END)
-            - sum(CASE WHEN treat = 0 AND post = 0 THEN mean END)) AS did,
-         sum(CASE WHEN treat = 1 AND post = 1 THEN mean END)
-           - sum(CASE WHEN treat = 0 AND post = 1 THEN mean END)
-           AS naive_post_diff,
-         sqrt(sum(CASE WHEN treat = 1 AND post = 1 THEN vn END)
-              + sum(CASE WHEN treat = 1 AND post = 0 THEN vn END)
-              + sum(CASE WHEN treat = 0 AND post = 1 THEN vn END)
-              + sum(CASE WHEN treat = 0 AND post = 0 THEN vn END)) AS se
-  FROM stats
-)
-SELECT s.treat, s.post, s.n,
-       round(s.mean, 6) AS mean,
-       round(s.var, 6) AS var,
-       round(p.did, 6) AS did,
-       round(p.naive_post_diff, 6) AS naive_post_diff,
-       round(p.se, 6) AS se,
-       round(p.did / p.se, 6) AS t_did
-FROM stats s CROSS JOIN piv p
-"""
-
-
-# --------------------------------------------------------------------------
-# JSON path extraction (`json_extract`): the semi-structured surface —
-# schema-on-read over the events `props` JSON column (the ubiquitous
-# "properties bag" of every event pipeline). Typed path extraction
-# (Spark get_json_object vs DuckDB json_extract_string — both return
-# the unquoted scalar), validity accounting (a deliberately-corrupted
-# 1-in-11 slice exercises the NULL-on-parse-failure contract both
-# engines share), and a per-key rollup with distinct-user counts.
-# Completes the source-format story: parquet (everything), text
-# (corpus), binary (multimodal), JSON (this).
-#
-# Scale shape: one scan; JSON parsing is per-row JVM-side (no Python);
-# the rollup is map-side combinable; output is |keys|-sized.
-# --------------------------------------------------------------------------
-
-JSON_CORRUPT_MOD = 11  # 1-in-11 events get an unparseable props payload
-
-
-def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corrupt = (
-        _md5_bucket_spark(
-            F.concat_ws("|", F.lit("js"), F.col("event_id")),
-            JSON_CORRUPT_MOD,
-        )
-        == 0
-    )
-    payload = F.when(
-        corrupt, F.concat(F.lit("{broken"), F.col("props"))
-    ).otherwise(F.col("props"))
-    ev = _events(spark, sf_dir).select(
-        "event_id", "user_id", payload.alias("j")
-    )
-    k = F.get_json_object(F.col("j"), "$.k").cast("long")
-    parsed = ev.select("event_id", "user_id", k.alias("k"))
-    tot = parsed.agg(
-        F.count("*").cast("long").alias("n_total"),
-        F.sum(F.col("k").isNotNull().cast("long"))
-        .cast("long")
-        .alias("n_valid"),
-    )
-    per = (
-        parsed.filter(F.col("k").isNotNull())
-        .groupBy("k")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.count_distinct("user_id").cast("long").alias("n_users"),
-        )
-    )
-    return per.crossJoin(F.broadcast(tot)).select(
-        "k", "n", "n_users", "n_total", "n_valid"
-    )
-
-
-def _sql_json_extract() -> str:
-    corrupt = _md5_bucket_sql(
-        "'js' || '|' || CAST(event_id AS VARCHAR)", JSON_CORRUPT_MOD
-    )
-    return f"""
-WITH ev AS (
-  SELECT event_id, user_id,
-         CASE WHEN {corrupt} = 0 THEN '{{broken' || props
-              ELSE props END AS j
-  FROM events
-), parsed AS MATERIALIZED (
-  SELECT event_id, user_id,
-         CAST(CASE WHEN json_valid(j)
-                   THEN json_extract_string(j, '$.k') END AS BIGINT) AS k
-  FROM ev
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_total,
-         CAST(sum(CASE WHEN k IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_valid
-  FROM parsed
-)
-SELECT p.k, CAST(count(*) AS BIGINT) AS n,
-       CAST(count(DISTINCT p.user_id) AS BIGINT) AS n_users,
-       tot.n_total, tot.n_valid
-FROM parsed p CROSS JOIN tot
-WHERE p.k IS NOT NULL
-GROUP BY p.k, tot.n_total, tot.n_valid
-"""
-
-
-# --------------------------------------------------------------------------
-# Mann-Kendall trend test (`mann_kendall`): the nonparametric monotone-
-# trend detector (Mann 1945; Kendall 1975 — the hydrology/climate
-# standard, and the right test for "is ingestion volume drifting?"
-# because it assumes no distribution). S = Σ_{i<j} sign(x_j − x_i) over
-# the hourly series — EXACT integer via the rank identity: S computed
-# from concordant/discordant pair counts with tie correction
-# Var(S) = [n(n−1)(2n+5) − Σ_t t(t−1)(2t+5)]/18 (exact integer
-# numerator). Two scopes: 'same' (raw series — no trend at α=0.05) and
-# 'trended' (planted +t·RATE/GRID drift — detects). Z uses the
-# continuity correction; verdict at |Z| > 1.959964.
-#
-# Scale shape: the O(n²) pair sum runs over the BOUNDED hourly summary
-# (720 points → 259k pairs — still summary-sized; at unbounded n the
-# identity S = Σ sign folds to rank statistics computable by sort, the
-# same exact_global_rank machinery). Pairs via a self-join of the
-# bounded series; everything integer until the final z division.
-# --------------------------------------------------------------------------
-
-MK_RATE = 2  # planted drift: x_t += (t * MK_RATE) div MK_GRID
-MK_GRID = 48
-_MK_CRIT = 1.959964  # two-sided alpha = 0.05
-
-
-def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias("h")
-    )
-    cnt = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count("*").alias("c")
-    )
-    w = Window.orderBy("h")  # bounded hourly summary (decompose rule)
-    ser = (
-        grid.join(cnt, "h", "left")
-        .select("h", F.coalesce("c", F.lit(0)).cast("long").alias("x"))
-        .select("x", F.row_number().over(w).cast("long").alias("t"))
-        .localCheckpoint(eager=True)
-    )
-    out = None
-    for scope in ("same", "trended"):
-        y = (
-            F.col("x")
-            + F.expr(f"cast((t * {MK_RATE}) div {MK_GRID} as bigint)")
-            if scope == "trended"
-            else F.col("x")
-        )
-        s = ser.select(F.lit(scope).alias("scope"), "t", y.alias("y"))
-        pairs = (
-            s.alias("a")
-            .join(
-                s.alias("b"),
-                (F.col("b.scope") == F.col("a.scope"))
-                & (F.col("b.t") > F.col("a.t")),
-            )
-            .agg(
-                F.sum(
-                    F.signum(
-                        (F.col("b.y") - F.col("a.y")).cast("double")
-                    ).cast("long")
-                )
-                .cast("long")
-                .alias("s_stat"),
-                F.count("*").cast("long").alias("n_pairs"),
-            )
-        )
-        ties = (
-            s.groupBy("y")
-            .agg(F.count("*").cast("long").alias("tc"))
-            .agg(
-                F.sum(
-                    F.col("tc") * (F.col("tc") - 1) * (2 * F.col("tc") + 5)
-                )
-                .cast("long")
-                .alias("tie_term"),
-                F.sum("tc").cast("long").alias("n"),
-            )
-        )
-        part = pairs.crossJoin(F.broadcast(ties)).select(
-            F.lit(scope).alias("scope"), "s_stat", "n_pairs", "n", "tie_term"
-        )
-        out = part if out is None else out.unionByName(part)
-    var_num = (
-        F.col("n") * (F.col("n") - 1) * (2 * F.col("n") + 5)
-        - F.col("tie_term")
-    ).cast("long")
-    var_d = var_num.cast("double") / F.lit(18.0)
-    z = (
-        F.when(
-            F.col("s_stat") > 0,
-            (F.col("s_stat").cast("double") - F.lit(1.0)) / F.sqrt(var_d),
-        )
-        .when(
-            F.col("s_stat") < 0,
-            (F.col("s_stat").cast("double") + F.lit(1.0)) / F.sqrt(var_d),
-        )
-        .otherwise(F.lit(0.0))
-    )
-    return out.select(
-        "scope",
-        "s_stat",
-        "n_pairs",
-        "n",
-        "tie_term",
-        var_num.alias("var_num"),
-        F.round(z, 6).alias("z"),
-        F.when(F.abs(z) > _MK_CRIT, F.lit("trend"))
-        .otherwise(F.lit("no_trend"))
-        .alias("verdict"),
-    )
-
-
-def _sql_mann_kendall() -> str:
-    crit = _MK_CRIT
-    scopes = []
-    for scope in ("same", "trended"):
-        yexpr = (
-            f"x + CAST((t * {MK_RATE}) // {MK_GRID} AS BIGINT)"
-            if scope == "trended"
-            else "x"
-        )
-        scopes.append(
-            f"SELECT '{scope}' AS scope, t, {yexpr} AS y FROM ser"
-        )
-    scoped_union = "\n  UNION ALL\n  ".join(scopes)
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser AS MATERIALIZED (
-  SELECT CAST(row_number() OVER (ORDER BY g.h) AS BIGINT) AS t,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS x
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), scoped AS MATERIALIZED (
-  {scoped_union}
-), pairs AS (
-  SELECT a.scope,
-         CAST(sum(CASE WHEN b.y > a.y THEN 1
-                       WHEN b.y < a.y THEN -1 ELSE 0 END) AS BIGINT)
-           AS s_stat,
-         CAST(count(*) AS BIGINT) AS n_pairs
-  FROM scoped a JOIN scoped b ON b.scope = a.scope AND b.t > a.t
-  GROUP BY a.scope
-), ties AS (
-  SELECT scope,
-         CAST(sum(tc * (tc - 1) * (2 * tc + 5)) AS BIGINT) AS tie_term,
-         CAST(sum(tc) AS BIGINT) AS n
-  FROM (SELECT scope, y, CAST(count(*) AS BIGINT) AS tc
-        FROM scoped GROUP BY scope, y)
-  GROUP BY scope
-), base AS MATERIALIZED (
-  SELECT p.scope, p.s_stat, p.n_pairs, t.n, t.tie_term,
-         CAST(t.n * (t.n - 1) * (2 * t.n + 5) - t.tie_term AS BIGINT)
-           AS var_num
-  FROM pairs p JOIN ties t USING (scope)
-)
-SELECT scope, s_stat, n_pairs, n, tie_term, var_num,
-       round(CASE WHEN s_stat > 0
-                  THEN (CAST(s_stat AS DOUBLE) - 1.0)
-                       / sqrt(CAST(var_num AS DOUBLE) / 18.0)
-                  WHEN s_stat < 0
-                  THEN (CAST(s_stat AS DOUBLE) + 1.0)
-                       / sqrt(CAST(var_num AS DOUBLE) / 18.0)
-                  ELSE 0.0 END, 6) AS z,
-       CASE WHEN abs(CASE WHEN s_stat > 0
-                          THEN (CAST(s_stat AS DOUBLE) - 1.0)
-                               / sqrt(CAST(var_num AS DOUBLE) / 18.0)
-                          WHEN s_stat < 0
-                          THEN (CAST(s_stat AS DOUBLE) + 1.0)
-                               / sqrt(CAST(var_num AS DOUBLE) / 18.0)
-                          ELSE 0.0 END) > {crit}
-            THEN 'trend' ELSE 'no_trend' END AS verdict
-FROM base
-"""
-
-
-# --------------------------------------------------------------------------
-# Pivot table (`pivot_table`): the wide-format BI surface — per-source
-# doc counts and char sums pivoted across the bounded language domain
-# (Spark's `groupBy().pivot(values=...)` with an EXPLICIT pinned value
-# list — never the value-discovering two-pass form — vs DuckDB
-# conditional aggregation producing the identical column set). Missing
-# cells are zero-filled so the wide schema is total. All-BIGINT.
-#
-# Scale shape: a pivot with pinned values is ONE map-side-combinable
-# aggregation whose row width is |languages| — the groupBy shuffle is on
-# source alone; no second pass, no distinct-values driver action.
-# --------------------------------------------------------------------------
-
-PIVOT_LANGS = ("de", "en", "es", "fr", "zh")
-
-
-def q_pivot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    piv = (
-        _docs(spark, sf_dir)
-        .groupBy("source")
-        .pivot("lang", list(PIVOT_LANGS))
-        .agg(
-            # count(*) is rejected inside Pivot (INVALID_USAGE_OF_STAR)
-            F.count(F.lit(1)).alias("n"),
-            F.sum("n_chars").alias("chars"),
-        )
-    )
-    cols = [F.col("source")]
-    for lg in PIVOT_LANGS:
-        cols.append(
-            F.coalesce(F.col(f"{lg}_n"), F.lit(0))
-            .cast("long")
-            .alias(f"{lg}_n")
-        )
-        cols.append(
-            F.coalesce(F.col(f"{lg}_chars"), F.lit(0))
-            .cast("long")
-            .alias(f"{lg}_chars")
-        )
-    return piv.select(*cols)
-
-
-def _sql_pivot_table() -> str:
-    cells = ",\n       ".join(
-        f"CAST(coalesce(sum(CASE WHEN lang = '{lg}' THEN 1 END), 0)"
-        f" AS BIGINT) AS {lg}_n,\n       "
-        f"CAST(coalesce(sum(CASE WHEN lang = '{lg}' THEN n_chars END), 0)"
-        f" AS BIGINT) AS {lg}_chars"
-        for lg in PIVOT_LANGS
-    )
-    return f"""
-SELECT source,
-       {cells}
-FROM documents
-GROUP BY source
-"""
-
-
-# --------------------------------------------------------------------------
-# RAKE keyphrase extraction (`rake_keyphrases`): Rapid Automatic Keyword
-# Extraction (Rose et al. 2010) — candidate phrases are maximal
-# stopword-free token runs; word degree/frequency statistics over all
-# phrase occurrences score each phrase as Σ deg(w)/freq(w). The
-# text-mining face pmi_bigrams (associations) and top_ngrams (raw
-# frequency) don't cover: multiword KEYPHRASES. The run extraction is
-# REGEX-RELATIONAL (stopwords rewritten to a separator, split, trim) —
-# no fold — identical in both engines; runs longer than RAKE_MAX_LEN
-# are discarded (the bounded-phrase variant, deterministic); phrase
-# scores fold deg/freq terms in PINNED word-position order; the top-K
-# cut orders by (score, phrase) — scores are identical doubles from
-# identical BIGINT ratios folded identically.
-#
-# Scale shape: one corpus pass to phrase occurrences; word stats are a
-# map-side-combinable agg over exploded words; scoring is one broadcast
-# join of the |vocab|-sized stat table; the top-K uses
-# exact_global_rank (range-partitioned).
-# --------------------------------------------------------------------------
-
-RAKE_MAX_LEN = 4
-RAKE_K = 25
-
-
-def q_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import exact_global_rank
-
-    stops = set(STOPWORDS_EN)
-    toks_expr = F.regexp_extract_all(
-        F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0
-    )
-    docs = token_barrier(
-        _docs(spark, sf_dir), toks_expr, keep_cols=("doc_id",), alias="toks"
-    )
-    marked = F.array_join(
-        F.transform(
-            F.col("toks"),
-            lambda t: F.when(
-                t.isin(*sorted(stops)), F.lit("|")
-            ).otherwise(t),
-        ),
-        " ",
-    )
-    runs = docs.select(
-        "doc_id", F.explode(F.split(marked, r"\|")).alias("run")
-    ).select("doc_id", F.trim(F.col("run")).alias("phrase"))
-    occ = (
-        runs.filter(F.col("phrase") != "")
-        .select(
-            "doc_id",
-            "phrase",
-            F.size(F.split(F.col("phrase"), " ")).alias("plen"),
-        )
-        .filter(F.col("plen") <= RAKE_MAX_LEN)
-        .localCheckpoint(eager=True)
-    )
-    words = occ.select(
-        "plen", F.posexplode(F.split(F.col("phrase"), " ")).alias("pos", "w")
-    )
-    stats = words.groupBy("w").agg(
-        F.count("*").cast("long").alias("freq"),
-        F.sum("plen").cast("long").alias("deg"),
-    )
-    pw = (
-        occ.select(
-            "phrase",
-            F.posexplode(F.split(F.col("phrase"), " ")).alias("pos", "w"),
-        )
-        .distinct()
-        .join(F.broadcast(stats), "w")
-    )
-    scored = pw.groupBy("phrase").agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("pos", "deg", "freq"))),
-            F.lit(0.0),
-            lambda a, e: a
-            + e["deg"].cast("double") / e["freq"].cast("double"),
-        ).alias("score")
-    )
-    counts = occ.groupBy("phrase").agg(
-        F.count("*").cast("long").alias("n_occ")
-    )
-    ranked = exact_global_rank(
-        scored.join(counts, "phrase").withColumn("_neg", -F.col("score")),
-        "_neg",
-        ("phrase",),
-    )
-    return ranked.filter(F.col("global_rank") <= RAKE_K).select(
-        F.col("global_rank").cast("long").alias("rank"),
-        "phrase",
-        "n_occ",
-        F.round("score", 6).alias("score"),
-    )
-
-
-def _sql_rake_keyphrases() -> str:
-    stops = ", ".join(_sql_quote(s) for s in sorted(set(STOPWORDS_EN)))
-    return f"""
-WITH toked AS (
-  SELECT doc_id,
-         regexp_extract_all(lower(text), '{_TOKEN_PATTERN}') AS toks
-  FROM documents
-), marked AS (
-  SELECT doc_id,
-         array_to_string(list_transform(toks,
-           t -> CASE WHEN t IN ({stops}) THEN '|' ELSE t END), ' ')
-           AS m
-  FROM toked
-), occ AS MATERIALIZED (
-  SELECT doc_id, phrase, len(string_split(phrase, ' ')) AS plen
-  FROM (
-    SELECT doc_id, trim(unnest(string_split(m, '|'))) AS phrase
-    FROM marked)
-  WHERE phrase <> '' AND len(string_split(phrase, ' ')) <= {RAKE_MAX_LEN}
-), words AS (
-  SELECT plen, unnest(string_split(phrase, ' ')) AS w FROM occ
-), stats AS MATERIALIZED (
-  SELECT w, CAST(count(*) AS BIGINT) AS freq,
-         CAST(sum(plen) AS BIGINT) AS deg
-  FROM words GROUP BY w
-), pw AS (
-  SELECT DISTINCT p.phrase, u.pos, u.w
-  FROM occ p,
-       LATERAL (SELECT unnest(string_split(p.phrase, ' ')) AS w,
-                       generate_subscripts(string_split(p.phrase, ' '), 1)
-                         AS pos) u
-), scored AS MATERIALIZED (
-  SELECT pw.phrase,
-         list_sum(list(CAST(s.deg AS DOUBLE) / CAST(s.freq AS DOUBLE)
-                       ORDER BY pw.pos)) AS score
-  FROM pw JOIN stats s ON s.w = pw.w
-  GROUP BY pw.phrase
-), counts AS (
-  SELECT phrase, CAST(count(*) AS BIGINT) AS n_occ FROM occ GROUP BY phrase
-), ranked AS (
-  SELECT sc.phrase, sc.score, c.n_occ,
-         CAST(row_number() OVER (ORDER BY sc.score DESC, sc.phrase)
-              AS BIGINT) AS rank
-  FROM scored sc JOIN counts c USING (phrase)
-)
-SELECT rank, phrase, n_occ, round(score, 6) AS score
-FROM ranked WHERE rank <= {RAKE_K}
-"""
-
-
-# --------------------------------------------------------------------------
-# Off-policy evaluation (`ips_eval`): the inverse-propensity-scoring
-# counterfactual estimator (Horvitz-Thompson 1952; Li et al. WWW 2011 —
-# how recommenders evaluate a NEW policy on OLD logs without deploying
-# it). Logged data: uniform random actions over IPS_K arms (known
-# propensity 1/K) with an integer reward that pays IPS_BONUS when the
-# logged action hits the user's md5-planted target arm. Two target
-# policies are evaluated on the same logs: 'optimal' (π = the target
-# arm) and 'shifted' (π = target+1 — never right). IPS value =
-# K·Σ_{a==π(u)} r / n — exact BIGINT numerator, one division; the
-# estimated optimal-vs-shifted gap must recover the planted bonus
-# (pytest, within sampling noise). The logged average rides along as
-# the behavior-policy baseline.
-#
-# Scale shape: one scan, two map-side-combinable conditional aggs —
-# the estimator is embarrassingly parallel by construction.
-# --------------------------------------------------------------------------
-
-IPS_K = 4
-IPS_BONUS = 15
-IPS_BASE_MOD = 10
-
-
-def q_ips_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    a = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("act"), F.col("event_id")), IPS_K
-    )
-    base_r = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("rw"), F.col("event_id")), IPS_BASE_MOD
-    )
-    tgt = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("tgt"), F.col("user_id")), IPS_K
-    )
-    logs = _events(spark, sf_dir).select(
-        a.alias("a"),
-        tgt.alias("tgt"),
-        (
-            base_r
-            + F.when(a == tgt, IPS_BONUS).otherwise(0)
-        )
-        .cast("long")
-        .alias("r"),
-    )
-    out = None
-    for policy, shift in (("optimal", 0), ("shifted", 1)):
-        pi = F.pmod(F.col("tgt") + shift, F.lit(IPS_K))
-        part = logs.agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum((F.col("a") == pi).cast("long"))
-            .cast("long")
-            .alias("n_match"),
-            F.sum(F.when(F.col("a") == pi, F.col("r")).otherwise(0))
-            .cast("long")
-            .alias("sum_matched_r"),
-            F.sum("r").cast("long").alias("sum_logged_r"),
-        ).select(
-            F.lit(policy).alias("policy"),
-            "n",
-            "n_match",
-            "sum_matched_r",
-            F.round(
-                F.lit(float(IPS_K))
-                * F.col("sum_matched_r").cast("double")
-                / F.col("n").cast("double"),
-                6,
-            ).alias("ips_value"),
-            F.round(
-                F.col("sum_logged_r").cast("double")
-                / F.col("n").cast("double"),
-                6,
-            ).alias("logged_avg_r"),
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def _sql_ips_eval() -> str:
-    a = _md5_bucket_sql("'act' || '|' || CAST(event_id AS VARCHAR)", IPS_K)
-    base_r = _md5_bucket_sql(
-        "'rw' || '|' || CAST(event_id AS VARCHAR)", IPS_BASE_MOD
-    )
-    tgt = _md5_bucket_sql("'tgt' || '|' || CAST(user_id AS VARCHAR)", IPS_K)
-    parts = []
-    for policy, shift in (("optimal", 0), ("shifted", 1)):
-        parts.append(
-            f"""SELECT '{policy}' AS policy,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CASE WHEN a = (tgt + {shift}) % {IPS_K} THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_match,
-       CAST(sum(CASE WHEN a = (tgt + {shift}) % {IPS_K} THEN r ELSE 0 END)
-            AS BIGINT) AS sum_matched_r,
-       round({float(IPS_K)}
-             * CAST(sum(CASE WHEN a = (tgt + {shift}) % {IPS_K}
-                            THEN r ELSE 0 END) AS DOUBLE)
-             / CAST(count(*) AS DOUBLE), 6) AS ips_value,
-       round(CAST(sum(r) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-         AS logged_avg_r
-FROM logs"""
-        )
-    body = "\nUNION ALL\n".join(parts)
-    return f"""
-WITH logs AS MATERIALIZED (
-  SELECT {a} AS a, {tgt} AS tgt,
-         CAST({base_r}
-              + CASE WHEN {a} = {tgt} THEN {IPS_BONUS} ELSE 0 END
-              AS BIGINT) AS r
-  FROM events
-)
-{body}
-"""
-
-
-# --------------------------------------------------------------------------
-# PCA power iteration (`pca_power`): the top principal component of the
-# embeddings table by PCA_ITERS power-iteration rounds — the
-# dimensionality-reduction face of the embedding-ML family (kmeans
-# clusters, silhouette evaluates, semdedup dedups; THIS finds the
-# dominant axis). The MLlib shape: the mean-centered matrix is pinned
-# once; each round is one per-row pinned-order dot fold (s_i = c_i·v),
-# one map-side-combinable per-dim weighted sum (w = Σ c_i·s_i), and a
-# 1-row normalize.
-#
-# Cross-engine determinism — the QUANTIZED-STATE trick (stronger than
-# the logreg contraction argument): after every round the state vector
-# is rounded to 6dp, so the ~1e-13 reduce-order drift of the per-dim
-# sums is erased and BOTH engines enter each round with byte-identical
-# state (the bpe/qdigest deterministic-compaction discipline); the mean
-# vector is likewise quantized before centering. A margin pytest checks
-# every quantized component sits >=1e-4 away from its rounding boundary
-# at sf0.001, so the erasure is provably safe on this corpus.
-# --------------------------------------------------------------------------
-
-PCA_ITERS = 8
-PCA_DIM = 64
-
-
-def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda v: v.cast("double")).alias("x"),
-        )
-    )
-    # 1-based dim ids (matching DuckDB generate_subscripts)
-    dims = emb.select("vec_id", F.posexplode("x").alias("d0", "val")).select(
-        "vec_id", (F.col("d0") + 1).alias("d"), "val"
-    )
-    mu = dims.groupBy("d").agg(
-        F.round(F.sum("val") / F.count("*"), 6).alias("mu")
-    )
-    mu_arr = mu.agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("d", "mu"))),
-            lambda e: e["mu"],
-        ).alias("m")
-    )
-    cx = (
-        emb.crossJoin(F.broadcast(mu_arr))
-        .select(
-            "vec_id",
-            F.zip_with("x", "m", lambda a, b: a - b).alias("c"),
-        )
-        .localCheckpoint(eager=True)  # the one corpus-sized pin
-    )
-    n1 = cx.agg(F.count("*").cast("long").alias("n"))
-    v = spark.range(1).select(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(PCA_DIM)),
-            lambda _: F.lit(1.0) / F.sqrt(F.lit(float(PCA_DIM))),
-        ).alias("v")
-    )
-    eig = None
-    for _ in range(PCA_ITERS):
-        s = cx.crossJoin(F.broadcast(v)).select(
-            "vec_id",
-            "c",
-            F.aggregate(
-                F.zip_with("c", "v", lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            ).alias("s"),
-        )
-        w = (
-            s.select(F.posexplode("c").alias("d", "val"), "s")
-            .groupBy("d")
-            .agg(F.sum(F.col("val") * F.col("s")).alias("w"))
-        )
-        warr = w.agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("d", "w"))),
-                lambda e: e["w"],
-            ).alias("w")
-        ).select(
-            "w",
-            F.sqrt(
-                F.aggregate(
-                    F.col("w"), F.lit(0.0), lambda acc, t: acc + t * t
-                )
-            ).alias("norm"),
-        )
-        # quantize state: both engines re-enter the next round with
-        # byte-identical v (margin pytest guards the 6dp boundaries)
-        v = warr.select(
-            F.transform(
-                F.col("w"), lambda t: F.round(t / F.col("norm"), 6)
-            ).alias("v")
-        ).localCheckpoint(eager=True)
-        eig = warr.select(F.col("norm").alias("eig_raw"))
-    tot = (
-        cx.select(F.explode("c").alias("val"))
-        .agg(F.sum(F.col("val") * F.col("val")).alias("ss"))
-    )
-    out = (
-        v.select(F.posexplode("v").alias("d0", "loading"))
-        .crossJoin(F.broadcast(eig))
-        .crossJoin(F.broadcast(n1))
-        .crossJoin(F.broadcast(tot))
-    )
-    return out.join(
-        F.broadcast(mu), (out["d0"] + 1) == mu["d"]
-    ).select(
-        F.col("d").cast("long").alias("d"),
-        F.col("mu").alias("mu"),
-        F.col("loading").alias("loading"),
-        F.round("eig_raw", 6).alias("eig_norm"),
-        F.round(
-            F.col("eig_raw") / (F.col("n") - 1).cast("double"), 6
-        ).alias("eigval"),
-        F.round(F.col("eig_raw") / F.col("ss"), 6).alias("expl_share"),
-    )
-
-
-def _sql_pca_power() -> str:
-    d, k = PCA_DIM, PCA_ITERS
-    rounds = []
-    for i in range(1, k + 1):
-        p = f"v{i - 1}"
-        rounds.append(
-            f"""s{i} AS (
-  SELECT cx.vec_id, cx.c,
-         list_sum(list_transform(cx.c, (a, j) -> a * {p}.v[j])) AS s
-  FROM cx CROSS JOIN {p}
-), w{i} AS (
-  SELECT u.d, sum(u.val * s{i}.s) AS w
-  FROM s{i},
-       LATERAL (SELECT unnest(s{i}.c) AS val,
-                       generate_subscripts(s{i}.c, 1) AS d) u
-  GROUP BY u.d
-), wa{i} AS MATERIALIZED (
-  SELECT list(w ORDER BY d) AS w,
-         sqrt(list_sum(list_transform(list(w ORDER BY d), t -> t * t)))
-           AS norm
-  FROM w{i}
-), v{i} AS MATERIALIZED (
-  SELECT list_transform(w, t -> round(t / norm, 6)) AS v FROM wa{i}
-)"""
-        )
-    chain = ", ".join(rounds)
-    return f"""
-WITH emb AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS x
-  FROM embeddings
-), dims AS (
-  SELECT u.d, u.val
-  FROM emb,
-       LATERAL (SELECT unnest(emb.x) AS val,
-                       generate_subscripts(emb.x, 1) AS d) u
-), mu AS MATERIALIZED (
-  SELECT d, round(sum(val) / count(*), 6) AS mu FROM dims GROUP BY d
-), mu_arr AS (
-  SELECT list(mu ORDER BY d) AS m FROM mu
-), cx AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform(x, (a, j) -> a - mu_arr.m[j]) AS c
-  FROM emb CROSS JOIN mu_arr
-), nn AS (
-  SELECT CAST(count(*) AS BIGINT) AS n FROM cx
-), v0 AS (
-  SELECT list_transform(range(1, {d} + 1),
-                        i -> 1.0 / sqrt({float(d)})) AS v
-), {chain}, tot AS (
-  SELECT sum(u.val * u.val) AS ss
-  FROM cx, LATERAL (SELECT unnest(cx.c) AS val) u
-), final AS (
-  SELECT u.d, u.loading
-  FROM v{k},
-       LATERAL (SELECT unnest(v{k}.v) AS loading,
-                       generate_subscripts(v{k}.v, 1) AS d) u
-)
-SELECT CAST(f.d AS BIGINT) AS d,
-       m.mu,
-       f.loading,
-       round(wa{k}.norm, 6) AS eig_norm,
-       round(wa{k}.norm / (CAST(nn.n AS DOUBLE) - 1.0), 6) AS eigval,
-       round(wa{k}.norm / tot.ss, 6) AS expl_share
-FROM final f
-JOIN mu m ON m.d = f.d
-CROSS JOIN wa{k} CROSS JOIN nn CROSS JOIN tot
-"""
-
-
-# --------------------------------------------------------------------------
-# Categorical mutual information (`mutual_info`): MI(lang, source) =
-# Σ p(x,y)·ln(p(x,y)/(p(x)p(y))) — the dependence measure completing the
-# information-theoretic family (char_entropy: marginal; js_divergence /
-# psi_drift: distribution drift; chi2_select: supervised ranking; THIS:
-# column-pair dependence — the schema-discovery / leakage-audit
-# primitive). Two scopes: 'natural' (lang vs source as stored —
-# independent by construction, MI ≈ 0) and 'coupled' (half the docs get
-# lang rewritten to a deterministic function of their source — MI
-# provably > 0). All counts BIGINT; MI folds per scope in pinned
-# (lang, source) cell order over OBSERVED cells only (zero cells
-# contribute 0 and are excluded identically on both sides); normalized
-# MI = MI/min(H(x), H(y)) rides along, entropies likewise pinned folds.
-#
-# Scale shape: one scan → |X|·|Y| contingency cells (map-side
-# combinable); marginals/folds are summary-scale.
-# --------------------------------------------------------------------------
-
-MI_COUPLE_MOD = 2  # doc_id % 2 == 0 docs get the coupled lang
-
-
-def q_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
-    langs = F.array(*[F.lit(x) for x in PIVOT_LANGS])
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    coupled_lang = F.when(
-        F.col("doc_id") % MI_COUPLE_MOD == 0,
-        F.element_at(
-            langs, (src_num % len(PIVOT_LANGS) + 1).cast("int")
-        ),
-    ).otherwise(F.col("lang"))
-    base = _docs(spark, sf_dir)
-    rows = base.select(
-        F.lit("natural").alias("scope"), "lang", "source"
-    ).unionByName(
-        base.select(
-            F.lit("coupled").alias("scope"),
-            coupled_lang.alias("lang"),
-            "source",
-        )
-    )
-    cells = rows.groupBy("scope", "lang", "source").agg(
-        F.count("*").cast("long").alias("nxy")
-    )
-    mx = cells.groupBy("scope", "lang").agg(
-        F.sum("nxy").cast("long").alias("nx")
-    )
-    my = cells.groupBy("scope", "source").agg(
-        F.sum("nxy").cast("long").alias("ny")
-    )
-    nn = cells.groupBy("scope").agg(F.sum("nxy").cast("long").alias("n"))
-    joined = (
-        cells.join(F.broadcast(mx), ["scope", "lang"])
-        .join(F.broadcast(my), ["scope", "source"])
-        .join(F.broadcast(nn), "scope")
-    )
-    term = lambda e: (  # noqa: E731
-        e["nxy"].cast("double") / e["n"].cast("double")
-    ) * F.log(
-        (e["nxy"].cast("double") * e["n"].cast("double"))
-        / (e["nx"].cast("double") * e["ny"].cast("double"))
-    )
-    lst = F.sort_array(
-        F.collect_list(F.struct("lang", "source", "nxy", "nx", "ny", "n"))
-    )
-    mi = joined.groupBy("scope").agg(lst.alias("l")).select(
-        "scope",
-        F.aggregate(
-            F.col("l"), F.lit(0.0), lambda a, e: a + term(e)
-        ).alias("mi"),
-    )
-    hx = mx.join(F.broadcast(nn), "scope").groupBy("scope").agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("lang", "nx", "n"))),
-            F.lit(0.0),
-            lambda a, e: a
-            - (e["nx"].cast("double") / e["n"].cast("double"))
-            * F.log(e["nx"].cast("double") / e["n"].cast("double")),
-        ).alias("hx")
-    )
-    hy = my.join(F.broadcast(nn), "scope").groupBy("scope").agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("source", "ny", "n"))),
-            F.lit(0.0),
-            lambda a, e: a
-            - (e["ny"].cast("double") / e["n"].cast("double"))
-            * F.log(e["ny"].cast("double") / e["n"].cast("double")),
-        ).alias("hy")
-    )
-    return (
-        joined.join(F.broadcast(mi), "scope")
-        .join(F.broadcast(hx), "scope")
-        .join(F.broadcast(hy), "scope")
-        .select(
-            "scope",
-            "lang",
-            "source",
-            "nxy",
-            "nx",
-            "ny",
-            "n",
-            F.round("mi", 6).alias("mi"),
-            F.round(
-                F.col("mi") / F.least("hx", "hy"), 6
-            ).alias("nmi"),
-        )
-    )
-
-
-def _sql_mutual_info() -> str:
-    langs = "[" + ", ".join(_sql_quote(x) for x in PIVOT_LANGS) + "]"
-    k = len(PIVOT_LANGS)
-    return f"""
-WITH rows_ AS (
-  SELECT 'natural' AS scope, lang, source FROM documents
-  UNION ALL
-  SELECT 'coupled' AS scope,
-         CASE WHEN doc_id % {MI_COUPLE_MOD} = 0
-              THEN {langs}[CAST(
-                CAST(substr(source, 4, 10) AS BIGINT) % {k} AS INTEGER) + 1]
-              ELSE lang END AS lang,
-         source
-  FROM documents
-), cells AS MATERIALIZED (
-  SELECT scope, lang, source, CAST(count(*) AS BIGINT) AS nxy
-  FROM rows_ GROUP BY scope, lang, source
-), mx AS MATERIALIZED (
-  SELECT scope, lang, CAST(sum(nxy) AS BIGINT) AS nx
-  FROM cells GROUP BY scope, lang
-), my AS MATERIALIZED (
-  SELECT scope, source, CAST(sum(nxy) AS BIGINT) AS ny
-  FROM cells GROUP BY scope, source
-), nn AS (
-  SELECT scope, CAST(sum(nxy) AS BIGINT) AS n FROM cells GROUP BY scope
-), joined AS MATERIALIZED (
-  SELECT c.scope, c.lang, c.source, c.nxy, x.nx, y.ny, nn.n
-  FROM cells c
-  JOIN mx x ON x.scope = c.scope AND x.lang = c.lang
-  JOIN my y ON y.scope = c.scope AND y.source = c.source
-  JOIN nn ON nn.scope = c.scope
-), mi AS (
-  SELECT scope,
-         list_sum(list(
-           (CAST(nxy AS DOUBLE) / CAST(n AS DOUBLE))
-           * ln((CAST(nxy AS DOUBLE) * CAST(n AS DOUBLE))
-                / (CAST(nx AS DOUBLE) * CAST(ny AS DOUBLE)))
-           ORDER BY lang, source)) AS mi
-  FROM joined GROUP BY scope
-), hx AS (
-  SELECT m.scope,
-         list_sum(list(
-           -(CAST(m.nx AS DOUBLE) / CAST(nn.n AS DOUBLE))
-           * ln(CAST(m.nx AS DOUBLE) / CAST(nn.n AS DOUBLE))
-           ORDER BY m.lang)) AS hx
-  FROM mx m JOIN nn ON nn.scope = m.scope GROUP BY m.scope
-), hy AS (
-  SELECT m.scope,
-         list_sum(list(
-           -(CAST(m.ny AS DOUBLE) / CAST(nn.n AS DOUBLE))
-           * ln(CAST(m.ny AS DOUBLE) / CAST(nn.n AS DOUBLE))
-           ORDER BY m.source)) AS hy
-  FROM my m JOIN nn ON nn.scope = m.scope GROUP BY m.scope
-)
-SELECT j.scope, j.lang, j.source, j.nxy, j.nx, j.ny, j.n,
-       round(mi.mi, 6) AS mi,
-       round(mi.mi / least(hx.hx, hy.hy), 6) AS nmi
-FROM joined j
-JOIN mi USING (scope)
-JOIN hx USING (scope)
-JOIN hy USING (scope)
-"""
-
-
-# --------------------------------------------------------------------------
-# DAG critical path (`critical_path`): longest weighted path in a DAG —
-# the scheduling primitive (CPM, Kelley & Walker 1959) every pipeline /
-# build-graph analyzer computes. The canonical u<v orientation of the
-# host graph IS a DAG by construction (edges only point to higher ids);
-# weights = emitting-doc counts (BIGINT). Value iteration dist(v) =
-# max(0, max_{(u,v)} dist(u) + w) over |V| rounds (longest chain < |V|
-# proves fixpoint — certified in-output like k_core); predecessors
-# resolve deterministically by the packed (max dist+w, min u) struct
-# argmin, so the critical path is reconstructible. ALL-integer.
-#
-# Scale shape: the edge table derives from one corpus scan and is
-# pinned; each round is one equi-join + map-side max per dst over the
-# |hosts|-sized frame (never the corpus; the pagerank pin discipline).
-# --------------------------------------------------------------------------
-
-CP_ROUNDS = 14  # probed fixpoint depth: 7/7/9 rounds at sf0.001/0.01/0.1;
-# 14 leaves >50% headroom and the in-output converged flag certifies it
-# at runtime (a deeper graph would read converged = 0, never silently
-# wrong)
-
-
-def q_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    s = (src_num % PR_N_NODES).alias("src")
-    t = ((src_num * 7 + F.col("doc_id") * 13 + 3) % PR_N_NODES).alias("dst")
-    # ONE corpus pass (round 7, guide §2.4/§5 — the pagerank discipline):
-    # the u<v DAG edge table is bounded at N^2/2 rows at any SF; the
-    # CP_ROUNDS value-iteration rounds then run on the driver with the
-    # exact same packed-argmin integer arithmetic — replacing a second
-    # corpus scan and ~16 localCheckpoints / ~45 tiny shuffle jobs per
-    # call.
-    edges = sorted(
-        ((r["u"], r["v"]), r["w"])
-        for r in docs.select(s, t)
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .groupBy("u", "v")
-        .agg(F.count("*").cast("long").alias("w"))
-        .collect()
-    )
-    nodes = sorted({u for (u, _), _ in edges} | {v for (_, v), _ in edges})
-    dist = {nd: 0 for nd in nodes}
-    pred: Dict[int, Optional[int]] = {nd: None for nd in nodes}
-    prev = dict(dist)
-    for _ in range(CP_ROUNDS):
-        cand: Dict[int, Tuple[int, int]] = {}  # v -> (negd, u) struct-min
-        for (u, v), w in edges:
-            b = (-(dist[u] + w), u)
-            if v not in cand or b < cand[v]:
-                cand[v] = b
-        prev = dist
-        new_dist: Dict[int, int] = {}
-        for nd in nodes:
-            c = cand.get(nd)
-            cd = -c[0] if c is not None else 0
-            new_dist[nd] = max(cd, 0)
-            pred[nd] = c[1] if cd > 0 else None
-        dist = new_dist
-    crit_len, crit_sink = (
-        min((-dist[nd], nd) for nd in nodes) if nodes else (0, None)
-    )
-    crit_len = -crit_len
-    n_changed = sum(1 for nd in nodes if dist[nd] != prev[nd])
-    rows = [
-        (
-            nd,
-            dist[nd],
-            pred[nd],
-            crit_len,
-            crit_sink,
-            1 if nd == crit_sink else 0,
-            1 if n_changed == 0 else 0,
-        )
-        for nd in nodes
-    ]
-    return spark.createDataFrame(
-        rows,
-        "node long, dist long, pred long, crit_len long, crit_sink long, "
-        "is_sink long, converged long",
-    )
-
-
-def _sql_critical_path() -> str:
-    n = PR_N_NODES
-    iters = []
-    for i in range(1, CP_ROUNDS + 1):
-        p = f"d{i - 1}"
-        iters.append(
-            f"""c{i} AS (
-  SELECT e.v AS node,
-         min(struct_pack(negd := -(dd.dist + e.w), u := e.u)) AS b
-  FROM edges e JOIN {p} dd ON dd.node = e.u
-  GROUP BY e.v
-), d{i} AS MATERIALIZED (
-  SELECT nd.node,
-         CAST(greatest(coalesce(-(c.b).negd, 0), 0) AS BIGINT) AS dist,
-         CAST(CASE WHEN coalesce(-(c.b).negd, 0) > 0
-                   THEN (c.b).u END AS BIGINT) AS pred
-  FROM nodes nd LEFT JOIN c{i} c ON c.node = nd.node
-)"""
-        )
-    chain = ", ".join(iters)
-    return f"""
-WITH raw AS MATERIALIZED (
-  SELECT (CAST(substr(source, 4, 10) AS BIGINT) % {n}) AS src,
-         ((CAST(substr(source, 4, 10) AS BIGINT) * 7 + doc_id * 13 + 3)
-           % {n}) AS dst
-  FROM documents
-), edges AS MATERIALIZED (
-  SELECT least(src, dst) AS u, greatest(src, dst) AS v,
-         CAST(count(*) AS BIGINT) AS w
-  FROM raw WHERE src <> dst GROUP BY 1, 2
-), nodes AS MATERIALIZED (
-  SELECT DISTINCT u AS node FROM edges UNION SELECT v FROM edges
-), d0 AS MATERIALIZED (
-  SELECT node, CAST(0 AS BIGINT) AS dist, CAST(NULL AS BIGINT) AS pred
-  FROM nodes
-), {chain}, crit AS (
-  SELECT CAST(-(min(struct_pack(negd := -dist, n2 := node))).negd
-              AS BIGINT) AS crit_len,
-         CAST((min(struct_pack(negd := -dist, n2 := node))).n2
-              AS BIGINT) AS crit_sink
-  FROM d{CP_ROUNDS}
-), conv AS (
-  SELECT CAST(sum(CASE WHEN a.dist <> b.dist THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_changed
-  FROM d{CP_ROUNDS} a JOIN d{CP_ROUNDS - 1} b USING (node)
-)
-SELECT d.node, d.dist, d.pred, crit.crit_len, crit.crit_sink,
-       CAST(CASE WHEN d.node = crit.crit_sink THEN 1 ELSE 0 END AS BIGINT)
-         AS is_sink,
-       CAST(CASE WHEN conv.n_changed = 0 THEN 1 ELSE 0 END AS BIGINT)
-         AS converged
-FROM d{CP_ROUNDS} d CROSS JOIN crit CROSS JOIN conv
-"""
-
-
-# --------------------------------------------------------------------------
-# Autocorrelation function (`autocorrelation`): ACF at lags 1..ACF_MAX
-# over the dense hourly series — the diagnostics face completing the
-# time-series suite (decompose explains, holt forecasts, mase evaluates,
-# cusum/rolling detect, mann_kendall tests trend; ACF reveals the
-# memory/seasonality structure practitioners read FIRST). The n-scaled
-# deviations keep everything BIGINT: d_t = n·x_t − S (S = Σx), num_k =
-# Σ_t d_t·d_{t+k}, acf_k = num_k/num_0 — one exact-integer division per
-# lag (the cusum exactness class). Overflow headroom: even at sf1
-# (n = 720 hours, x ≤ ~1.4e4/hour) |d| ≤ 1e7, d² ≤ 1e14, and the ≤720-
-# term sums stay ≤ ~7e16 — far inside int64.
-#
-# Scale shape: lag pairs via a self-join of the BOUNDED series on
-# t + k (≤ ACF_MAX·|hours| rows — summary-scale, never the corpus);
-# sums map-side combinable. Pairs use only t where both endpoints
-# exist; the denominator num_0 runs over all n (the standard biased
-# estimator).
-# --------------------------------------------------------------------------
-
-ACF_MAX = 48
-
-
-def q_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias("h")
-    )
-    cnt = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count("*").alias("c")
-    )
-    w = Window.orderBy("h")  # bounded hourly summary
-    ser = (
-        grid.join(cnt, "h", "left")
-        .select("h", F.coalesce("c", F.lit(0)).cast("long").alias("x"))
-        .select("x", F.row_number().over(w).cast("long").alias("t"))
-        .localCheckpoint(eager=True)
-    )
-    tot = ser.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("x").cast("long").alias("s"),
-    )
-    dev = ser.crossJoin(F.broadcast(tot)).select(
-        "t", (F.col("n") * F.col("x") - F.col("s")).alias("d"), "n"
-    ).localCheckpoint(eager=True)
-    num0 = dev.agg(
-        F.sum(F.col("d") * F.col("d")).cast("long").alias("num0")
-    )
-    lags = spark.range(1, ACF_MAX + 1).select(F.col("id").alias("lag"))
-    pairs = (
-        dev.alias("a")
-        .crossJoin(F.broadcast(lags))
-        .join(
-            dev.alias("b").select(
-                F.col("t").alias("tb"), F.col("d").alias("db")
-            ),
-            F.col("tb") == F.col("a.t") + F.col("lag"),
-        )
-        .groupBy("lag")
-        .agg(
-            F.sum(F.col("a.d") * F.col("db")).cast("long").alias("numk"),
-            F.count("*").cast("long").alias("n_pairs"),
-        )
-    )
-    return pairs.crossJoin(F.broadcast(num0)).select(
-        F.col("lag").cast("long").alias("lag"),
-        "numk",
-        "num0",
-        "n_pairs",
-        F.round(
-            F.col("numk").cast("double") / F.col("num0").cast("double"), 6
-        ).alias("acf"),
-    )
-
-
-def _sql_autocorrelation() -> str:
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser AS MATERIALIZED (
-  SELECT CAST(row_number() OVER (ORDER BY g.h) AS BIGINT) AS t,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS x
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS s
-  FROM ser
-), dev AS MATERIALIZED (
-  SELECT t, CAST(tot.n * x - tot.s AS BIGINT) AS d
-  FROM ser CROSS JOIN tot
-), num0 AS (
-  SELECT CAST(sum(d * d) AS BIGINT) AS num0 FROM dev
-), lags AS (
-  SELECT CAST(unnest(range(1, {ACF_MAX} + 1)) AS BIGINT) AS lag
-), pairs AS MATERIALIZED (
-  SELECT l.lag,
-         CAST(sum(a.d * b.d) AS BIGINT) AS numk,
-         CAST(count(*) AS BIGINT) AS n_pairs
-  FROM lags l
-  JOIN dev a ON TRUE
-  JOIN dev b ON b.t = a.t + l.lag
-  GROUP BY l.lag
-)
-SELECT p.lag, p.numk, num0.num0, p.n_pairs,
-       round(CAST(p.numk AS DOUBLE) / CAST(num0.num0 AS DOUBLE), 6) AS acf
-FROM pairs p CROSS JOIN num0
-"""
-
-
-# --------------------------------------------------------------------------
-# OHLC time bars + VWAP (`ohlc_bars`): the financial/metrics bar
-# aggregation — per hourly bar over purchase events: open/close by the
-# exact (ts_us, event_id) key (Spark struct-min/max == DuckDB arg-style
-# struct mins — the attribution first/last discipline), high/low as
-# plain extrema, volume counts, and VWAP in exact integer cents
-# (Σ cents / n — one division). The bar shape every monitoring and
-# market-data stack emits; min_by/max_by-class parity in both engines.
-#
-# Scale shape: one filtered scan → per-bar map-side-combinable
-# aggregates keyed by the hour bucket; output is |bars|-sized.
-# --------------------------------------------------------------------------
-
-
-def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    um = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-    )
-    ev = (
-        _events(spark, sf_dir)
-        .filter(F.col("event_type") == RET_EVENT)
-        .select(
-            "event_id",
-            um.alias("um"),
-            F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
-        )
-        .select(
-            "event_id",
-            "um",
-            "cents",
-            F.expr("um div 3600000000").cast("long").alias("bar"),
-        )
-    )
-    agg = ev.groupBy("bar").agg(
-        F.count("*").cast("long").alias("n_trades"),
-        F.sum("cents").cast("long").alias("sum_cents"),
-        F.min(F.struct("um", "event_id", "cents")).alias("o"),
-        F.max(F.struct("um", "event_id", "cents")).alias("c"),
-        F.max("cents").cast("long").alias("high"),
-        F.min("cents").cast("long").alias("low"),
-    )
-    return agg.select(
-        "bar",
-        "n_trades",
-        F.col("o.cents").alias("open"),
-        "high",
-        "low",
-        F.col("c.cents").alias("close"),
-        F.round(
-            F.col("sum_cents").cast("double")
-            / F.col("n_trades").cast("double")
-            / 100.0,
-            6,
-        ).alias("vwap"),
-    )
-
-
-def _sql_ohlc_bars() -> str:
-    return f"""
-WITH ev AS (
-  SELECT event_id, epoch_us(ts) AS um,
-         CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(epoch_us(ts) // 3600000000 AS BIGINT) AS bar
-  FROM events WHERE event_type = {_sql_quote(RET_EVENT)}
-)
-SELECT bar,
-       CAST(count(*) AS BIGINT) AS n_trades,
-       CAST((min(struct_pack(um := um, eid := event_id, c := cents))).c
-            AS BIGINT) AS open,
-       CAST(max(cents) AS BIGINT) AS high,
-       CAST(min(cents) AS BIGINT) AS low,
-       CAST((max(struct_pack(um := um, eid := event_id, c := cents))).c
-            AS BIGINT) AS close,
-       round(CAST(sum(cents) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-             / 100.0, 6) AS vwap
-FROM ev GROUP BY bar
-"""
-
-
-# --------------------------------------------------------------------------
-# Robust means (`trimmed_stats`): the trimmed and winsorized means
-# (Tukey's robust-statistics staples — what quality dashboards switch to
-# when rolling_anomaly-style outliers poison plain averages). Over the
-# token-count distribution with a PLANTED outlier scope (1-in-50 docs
-# get +1000 tokens): the raw mean moves by ~20, the 10%-trimmed and
-# winsorized means barely move (asserted). Exact construction: ranks
-# via exact_global_rank with doc_id tie-break; trim bounds are integer
-# rank cuts k = floor(n/10); the trimmed sum, and the winsorized sum
-# (boundary-value replacement: the exact rank-(k+1) and rank-(n−k)
-# VALUES — themselves integers — substituted for the tails), stay
-# BIGINT; one division per mean.
-#
-# Scale shape: exact_global_rank (range-partitioned), two broadcast
-# 1-row boundary frames, map-side-combinable conditional sums.
-# --------------------------------------------------------------------------
-
-TRIM_FRAC_DEN = 10  # trim k = n div 10 from each tail
-TRIM_OUTLIER_MOD = 50
-TRIM_OUTLIER_ADD = 1000
-
-
-def q_trimmed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import exact_global_rank
-
-    ntok = F.size(
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0)
-    ).cast("long")
-    outlier = (
-        _md5_bucket_spark(
-            F.concat_ws("|", F.lit("tr"), F.col("doc_id")), TRIM_OUTLIER_MOD
-        )
-        == 0
-    )
-    # pinned (round 7): both per-scope rank calls re-ran the tokenizing
-    # projection without the pin (2 corpus scans -> 1); the frame is two
-    # numeric columns — cheap to materialize
-    base = (
-        _docs(spark, sf_dir)
-        .select("doc_id", ntok.alias("v0"))
-        .localCheckpoint(eager=True)
-    )
-    out = None
-    for scope in ("clean", "polluted"):
-        v = (
-            F.col("v0")
-            + F.when(outlier & F.lit(scope == "polluted"),
-                     TRIM_OUTLIER_ADD).otherwise(0)
-        )
-        part = base.select(
-            F.lit(scope).alias("scope"), "doc_id", v.alias("v")
-        )
-        ranked = exact_global_rank(part, "v", ("doc_id",))
-        k = F.expr(f"cast(global_count div {TRIM_FRAC_DEN} as bigint)")
-        r = ranked.select(
-            "scope",
-            "v",
-            F.col("global_rank").alias("rk"),
-            F.col("global_count").alias("n"),
-            k.alias("k"),
-        )
-        lo = (
-            r.filter(F.col("rk") == F.col("k") + 1)
-            .select("scope", F.col("v").alias("lo_v"))
-        )
-        hi = (
-            r.filter(F.col("rk") == F.col("n") - F.col("k"))
-            .select("scope", F.col("v").alias("hi_v"))
-        )
-        stats = (
-            r.join(F.broadcast(lo), "scope")
-            .join(F.broadcast(hi), "scope")
-            .groupBy("scope")
-            .agg(
-                F.max("n").alias("n"),
-                F.max("k").alias("k"),
-                F.max("lo_v").alias("lo_v"),
-                F.max("hi_v").alias("hi_v"),
-                F.sum("v").cast("long").alias("sum_all"),
-                F.sum(
-                    F.when(
-                        (F.col("rk") > F.col("k"))
-                        & (F.col("rk") <= F.col("n") - F.col("k")),
-                        F.col("v"),
-                    ).otherwise(0)
-                )
-                .cast("long")
-                .alias("sum_trim"),
-                F.sum(
-                    F.when(F.col("rk") <= F.col("k"), F.col("lo_v"))
-                    .when(F.col("rk") > F.col("n") - F.col("k"),
-                          F.col("hi_v"))
-                    .otherwise(F.col("v"))
-                )
-                .cast("long")
-                .alias("sum_wins"),
-            )
-        )
-        out = stats if out is None else out.unionByName(stats)
-    nd = F.col("n").cast("double")
-    return out.select(
-        "scope",
-        "n",
-        "k",
-        "lo_v",
-        "hi_v",
-        "sum_all",
-        "sum_trim",
-        "sum_wins",
-        F.round(F.col("sum_all").cast("double") / nd, 6).alias("mean"),
-        F.round(
-            F.col("sum_trim").cast("double")
-            / (F.col("n") - 2 * F.col("k")).cast("double"),
-            6,
-        ).alias("trimmed_mean"),
-        F.round(F.col("sum_wins").cast("double") / nd, 6).alias(
-            "winsorized_mean"
-        ),
-    )
-
-
-def _sql_trimmed_stats() -> str:
-    outlier = _md5_bucket_sql(
-        "'tr' || '|' || CAST(doc_id AS VARCHAR)", TRIM_OUTLIER_MOD
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id,
-         CAST(len(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
-              AS BIGINT) AS v0,
-         CASE WHEN {outlier} = 0 THEN 1 ELSE 0 END AS is_out
-  FROM documents
-), scoped AS (
-  SELECT sc.scope, doc_id,
-         v0 + CASE WHEN sc.scope = 'polluted' AND is_out = 1
-                   THEN {TRIM_OUTLIER_ADD} ELSE 0 END AS v
-  FROM base CROSS JOIN (SELECT unnest(['clean', 'polluted']) AS scope) sc
-), ranked AS MATERIALIZED (
-  SELECT scope, v,
-         CAST(row_number() OVER (PARTITION BY scope ORDER BY v, doc_id)
-              AS BIGINT) AS rk,
-         CAST(count(*) OVER (PARTITION BY scope) AS BIGINT) AS n
-  FROM scoped
-), kk AS (
-  SELECT scope, max(n) AS n, CAST(max(n) // {TRIM_FRAC_DEN} AS BIGINT) AS k
-  FROM ranked GROUP BY scope
-), bounds AS MATERIALIZED (
-  SELECT r.scope,
-         max(CASE WHEN r.rk = kk.k + 1 THEN r.v END) AS lo_v,
-         max(CASE WHEN r.rk = kk.n - kk.k THEN r.v END) AS hi_v
-  FROM ranked r JOIN kk USING (scope)
-  GROUP BY r.scope
-)
-SELECT r.scope, kk.n, kk.k, b.lo_v, b.hi_v,
-       CAST(sum(r.v) AS BIGINT) AS sum_all,
-       CAST(sum(CASE WHEN r.rk > kk.k AND r.rk <= kk.n - kk.k
-                     THEN r.v ELSE 0 END) AS BIGINT) AS sum_trim,
-       CAST(sum(CASE WHEN r.rk <= kk.k THEN b.lo_v
-                     WHEN r.rk > kk.n - kk.k THEN b.hi_v
-                     ELSE r.v END) AS BIGINT) AS sum_wins,
-       round(CAST(sum(r.v) AS DOUBLE) / CAST(kk.n AS DOUBLE), 6) AS mean,
-       round(CAST(sum(CASE WHEN r.rk > kk.k AND r.rk <= kk.n - kk.k
-                           THEN r.v ELSE 0 END) AS DOUBLE)
-             / CAST(kk.n - 2 * kk.k AS DOUBLE), 6) AS trimmed_mean,
-       round(CAST(sum(CASE WHEN r.rk <= kk.k THEN b.lo_v
-                           WHEN r.rk > kk.n - kk.k THEN b.hi_v
-                           ELSE r.v END) AS DOUBLE)
-             / CAST(kk.n AS DOUBLE), 6) AS winsorized_mean
-FROM ranked r
-JOIN kk USING (scope)
-JOIN bounds b USING (scope)
-GROUP BY r.scope, kk.n, kk.k, b.lo_v, b.hi_v
-"""
-
-
-# --------------------------------------------------------------------------
-# AMS second-moment sketch (`ams_f2`): the Alon-Matias-Szegedy F₂
-# estimator (Gödel-prize 1996 paper) — F₂ = Σ c_w² is the self-join
-# size / collision mass, THE quantity query optimizers and skew
-# detectors estimate. The textbook median-of-means form: AMS_K = 9
-# estimators (±1 md5 signs per token, Z_j = Σ s_j(w)·c_w, Z_j² each
-# unbiased for F₂) in AMS_GROUPS = 3 groups of 3; group sums stay
-# BIGINT, the median group sum is an exact rank over 3 integers, and
-# the final estimate divides by 3 once (the only double). Exact F₂
-# rides along. NOTE (documented honesty): on this corpus the 31-token
-# near-uniform vocabulary makes the estimate distribution lumpy — the
-# realized deterministic estimate sits at ~0.4×F₂ at every SF (probed);
-# the pytest asserts the order-of-magnitude band the probabilistic
-# guarantee actually supports, not a fake tight factor.
-#
-# Scale shape: one token pass to (token, count); each estimator is one
-# map-side-combinable signed sum over the vocab table. At 100 TB the
-# sketch IS the point: K counters replace the frequency table.
-# --------------------------------------------------------------------------
-
-AMS_K = 9
-AMS_GROUPS = 3
-
-
-def q_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    per = AMS_K // AMS_GROUPS
-    toks = _docs(spark, sf_dir).select(
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0)
-        ).alias("token")
-    )
-    freq = (
-        toks.groupBy("token")
-        .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    f2 = freq.agg(
-        F.sum(F.col("c") * F.col("c")).cast("long").alias("f2_exact")
-    )
-    ests = None
-    for j in range(AMS_K):
-        sign = (
-            2
-            * _md5_bucket_spark(
-                F.concat_ws("|", F.col("token"), F.lit(f"ams{j}")), 2
-            )
-            - 1
-        )
-        part = freq.agg(
-            F.sum(sign * F.col("c")).cast("long").alias("z")
-        ).select(
-            F.lit(j).cast("long").alias("j"),
-            F.lit(j // per).cast("long").alias("grp"),
-            "z",
-            (F.col("z") * F.col("z")).cast("long").alias("est"),
-        )
-        ests = part if ests is None else ests.unionByName(part)
-    gsum = ests.groupBy("grp").agg(
-        F.sum("est").cast("long").alias("gsum")
-    )
-    med = gsum.agg(
-        F.element_at(
-            F.sort_array(F.collect_list("gsum")), (AMS_GROUPS + 1) // 2
-        ).alias("med_gsum")
-    )
-    return (
-        ests.join(F.broadcast(gsum), "grp")
-        .crossJoin(F.broadcast(f2))
-        .crossJoin(F.broadcast(med))
-        .select(
-            "j",
-            "grp",
-            "z",
-            "est",
-            "gsum",
-            "f2_exact",
-            "med_gsum",
-            F.round(
-                F.col("med_gsum").cast("double") / F.lit(float(per)), 6
-            ).alias("f2_est"),
-        )
-    )
-
-
-def _sql_ams_f2() -> str:
-    per = AMS_K // AMS_GROUPS
-    parts = []
-    for j in range(AMS_K):
-        sign = _md5_bucket_sql(f"token || '|' || 'ams{j}'", 2)
-        parts.append(
-            f"""SELECT CAST({j} AS BIGINT) AS j,
-       CAST({j // per} AS BIGINT) AS grp,
-       CAST(sum((2 * {sign} - 1) * c) AS BIGINT) AS z
-FROM freq"""
-        )
-    body = "\nUNION ALL\n".join(parts)
-    return f"""
-WITH toks AS (
-  SELECT unnest(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
-           AS token
-  FROM documents
-), freq AS MATERIALIZED (
-  SELECT token, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY token
-), f2 AS (
-  SELECT CAST(sum(c * c) AS BIGINT) AS f2_exact FROM freq
-), ests AS MATERIALIZED (
-  SELECT j, grp, z, CAST(z * z AS BIGINT) AS est FROM (
-    {body}
-  )
-), gsum AS MATERIALIZED (
-  SELECT grp, CAST(sum(est) AS BIGINT) AS gsum FROM ests GROUP BY grp
-), med AS (
-  SELECT CAST((list_sort(list(gsum)))[{(AMS_GROUPS + 1) // 2}] AS BIGINT)
-           AS med_gsum
-  FROM gsum
-)
-SELECT e.j, e.grp, e.z, e.est, g.gsum, f2.f2_exact, med.med_gsum,
-       round(CAST(med.med_gsum AS DOUBLE) / {float(per)}, 6) AS f2_est
-FROM ests e
-JOIN gsum g USING (grp)
-CROSS JOIN f2 CROSS JOIN med
-"""
-
-
-# --------------------------------------------------------------------------
-# Degree assortativity (`assortativity`): Newman's degree-correlation
-# coefficient (PRL 2002) — do high-degree hosts link to high-degree
-# hosts? The structural summary the iterative family (pagerank/hits/
-# lpa/k_core/triangles/critical_path) doesn't give. r = Pearson
-# correlation of endpoint degrees over the edge list with BOTH
-# orientations counted (the standard undirected convention). EXACT
-# integer moment sums (degrees ≤ |V|, ≤2|E| terms); r is one fixed-order
-# expression of six BIGINTs (the cuped_ab exactness class). Emitted per
-# edge with the endpoint degrees so the joint distribution is visible.
-#
-# Scale shape: degrees = one map-side agg; the moment pass is one scan
-# of the |E|-sized edge list with two broadcast degree joins.
-# --------------------------------------------------------------------------
-
-
-def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    a = (src_num % PR_N_NODES).alias("src")
-    b = ((src_num * 7 + F.col("doc_id") * 13 + 3) % PR_N_NODES).alias("dst")
-    raw = docs.select(a, b).filter(F.col("src") != F.col("dst"))
-    und = (
-        raw.select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .union(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("deg"))
-    )
-    both = und.unionByName(
-        und.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    pairs = (
-        both.join(
-            F.broadcast(deg.select(F.col("node").alias("u"),
-                                   F.col("deg").alias("du"))),
-            "u",
-        )
-        .join(
-            F.broadcast(deg.select(F.col("node").alias("v"),
-                                   F.col("deg").alias("dv"))),
-            "v",
-        )
-    )
-    m = pairs.agg(
-        F.count("*").cast("long").alias("m"),
-        F.sum("du").cast("long").alias("sx"),
-        F.sum("dv").cast("long").alias("sy"),
-        F.sum(F.col("du") * F.col("dv")).cast("long").alias("sxy"),
-        F.sum(F.col("du") * F.col("du")).cast("long").alias("sxx"),
-        F.sum(F.col("dv") * F.col("dv")).cast("long").alias("syy"),
-    )
-    md = F.col("m").cast("double")
-    num = F.col("sxy").cast("double") - (
-        F.col("sx").cast("double") * F.col("sy").cast("double") / md
-    )
-    denx = F.col("sxx").cast("double") - (
-        F.col("sx").cast("double") * F.col("sx").cast("double") / md
-    )
-    deny = F.col("syy").cast("double") - (
-        F.col("sy").cast("double") * F.col("sy").cast("double") / md
-    )
-    r = num / F.sqrt(denx * deny)
-    return pairs.crossJoin(F.broadcast(m)).select(
-        "u",
-        "v",
-        "du",
-        "dv",
-        "m",
-        "sxy",
-        F.round(r, 6).alias("assortativity"),
-    )
-
-
-def _sql_assortativity() -> str:
-    n = PR_N_NODES
-    return f"""
-WITH raw AS MATERIALIZED (
-  SELECT (CAST(substr(source, 4, 10) AS BIGINT) % {n}) AS src,
-         ((CAST(substr(source, 4, 10) AS BIGINT) * 7 + doc_id * 13 + 3)
-           % {n}) AS dst
-  FROM documents
-), und AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM raw WHERE src <> dst
-), deg AS MATERIALIZED (
-  SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-  GROUP BY node
-), both_ AS (
-  SELECT u, v FROM und UNION ALL SELECT v AS u, u AS v FROM und
-), pairs AS MATERIALIZED (
-  SELECT b.u, b.v, x.deg AS du, y.deg AS dv
-  FROM both_ b
-  JOIN deg x ON x.node = b.u
-  JOIN deg y ON y.node = b.v
-), mm AS (
-  SELECT CAST(count(*) AS BIGINT) AS m,
-         CAST(sum(du) AS BIGINT) AS sx,
-         CAST(sum(dv) AS BIGINT) AS sy,
-         CAST(sum(du * dv) AS BIGINT) AS sxy,
-         CAST(sum(du * du) AS BIGINT) AS sxx,
-         CAST(sum(dv * dv) AS BIGINT) AS syy
-  FROM pairs
-)
-SELECT p.u, p.v, p.du, p.dv, mm.m, mm.sxy,
-       round((CAST(mm.sxy AS DOUBLE)
-              - CAST(mm.sx AS DOUBLE) * CAST(mm.sy AS DOUBLE)
-                / CAST(mm.m AS DOUBLE))
-             / sqrt((CAST(mm.sxx AS DOUBLE)
-                     - CAST(mm.sx AS DOUBLE) * CAST(mm.sx AS DOUBLE)
-                       / CAST(mm.m AS DOUBLE))
-                    * (CAST(mm.syy AS DOUBLE)
-                       - CAST(mm.sy AS DOUBLE) * CAST(mm.sy AS DOUBLE)
-                         / CAST(mm.m AS DOUBLE))), 6) AS assortativity
-FROM pairs p CROSS JOIN mm
-"""
-
-
-# --------------------------------------------------------------------------
-# Inter-arrival burstiness (`interarrival_stats`): the Goh-Barabási
-# burstiness coefficient B = (σ−μ)/(σ+μ) over each user's inter-event
-# gaps — the temporal-texture diagnostic (B→−1 periodic, ≈0 Poisson,
-# →1 bursty) that sessionize/event_funnel don't measure. Gaps are
-# EXACT integer SECONDS (µs div 1e6 — µs² would overflow int64 on
-# month-long gaps; seconds² has 1000× headroom); per-user moment sums
-# stay BIGINT; σ/μ/B are fixed-order doubles. Users need ≥ 2 gaps. The
-# corpus-level mean B folds in pinned user order.
-#
-# Scale shape: gaps via lag windows PARTITIONED by user (bounded
-# per-user groups, the seasonal_mase discipline); per-user moments
-# map-side combinable; the summary is a pinned fold over the |users|
-# frame.
-# --------------------------------------------------------------------------
-
-
-def q_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    um = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-    )
-    ev = _events(spark, sf_dir).select(
-        "user_id", "event_id", um.alias("um")
-    )
-    w = Window.partitionBy("user_id").orderBy("um", "event_id")
-    gaps = (
-        ev.select(
-            "user_id",
-            (F.col("um") - F.lag("um", 1).over(w)).alias("dus"),
-        )
-        .filter(F.col("dus").isNotNull())
-        .select(
-            "user_id", F.expr("cast(dus div 1000000 as bigint)").alias("g")
-        )
-    )
-    per = (
-        gaps.groupBy("user_id")
-        .agg(
-            F.count("*").cast("long").alias("n_gaps"),
-            F.sum("g").cast("long").alias("sg"),
-            F.sum(F.col("g") * F.col("g")).cast("long").alias("sgg"),
-        )
-        .filter(F.col("n_gaps") >= 2)
-    )
-    nd = F.col("n_gaps").cast("double")
-    mu = F.col("sg").cast("double") / nd
-    var = (F.col("sgg").cast("double") - nd * mu * mu) / (nd - F.lit(1.0))
-    sig = F.sqrt(var)
-    stats = per.select(
-        "user_id",
-        "n_gaps",
-        "sg",
-        "sgg",
-        mu.alias("mu"),
-        sig.alias("sig"),
-        ((sig - mu) / (sig + mu)).alias("b"),
-    )
-    summary = stats.agg(
-        (
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("user_id", "b"))),
-                F.lit(0.0),
-                lambda a, e: a + e["b"],
-            )
-            / F.count("*").cast("double")
-        ).alias("mean_b")
-    )
-    return stats.crossJoin(F.broadcast(summary)).select(
-        "user_id",
-        "n_gaps",
-        "sg",
-        "sgg",
-        F.round("mu", 6).alias("mean_gap_s"),
-        F.round("sig", 6).alias("std_gap_s"),
-        F.round("b", 6).alias("burstiness"),
-        F.round("mean_b", 6).alias("mean_burstiness"),
-    )
-
-
-def _sql_interarrival_stats() -> str:
-    return """
-WITH ev AS (
-  SELECT user_id, event_id, epoch_us(ts) AS um FROM events
-), gaps AS (
-  SELECT user_id,
-         CAST((um - lag(um, 1) OVER (PARTITION BY user_id
-                                     ORDER BY um, event_id))
-              // 1000000 AS BIGINT) AS g
-  FROM ev
-  QUALIFY lag(um, 1) OVER (PARTITION BY user_id
-                           ORDER BY um, event_id) IS NOT NULL
-), per AS MATERIALIZED (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n_gaps,
-         CAST(sum(g) AS BIGINT) AS sg,
-         CAST(sum(g * g) AS BIGINT) AS sgg
-  FROM gaps GROUP BY user_id
-  HAVING count(*) >= 2
-), stats AS MATERIALIZED (
-  SELECT user_id, n_gaps, sg, sgg,
-         CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE) AS mu,
-         sqrt((CAST(sgg AS DOUBLE)
-               - CAST(n_gaps AS DOUBLE)
-                 * (CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE))
-                 * (CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE)))
-              / (CAST(n_gaps AS DOUBLE) - 1.0)) AS sig
-  FROM per
-), summary AS (
-  SELECT list_sum(list((sig - mu) / (sig + mu) ORDER BY user_id))
-           / CAST(count(*) AS DOUBLE) AS mean_b
-  FROM stats
-)
-SELECT s.user_id, s.n_gaps, s.sg, s.sgg,
-       round(s.mu, 6) AS mean_gap_s,
-       round(s.sig, 6) AS std_gap_s,
-       round((s.sig - s.mu) / (s.sig + s.mu), 6) AS burstiness,
-       round(summary.mean_b, 6) AS mean_burstiness
-FROM stats s CROSS JOIN summary
-"""
-
-
-# --------------------------------------------------------------------------
-# Referential-integrity audit (`ref_integrity`): the dbt `relationships`
-# test — for every foreign-key edge of the star schema (lineitem→orders,
-# lineitem→part, lineitem→supplier, orders→customer, customer→nation,
-# supplier→nation, nation→region), count child rows, distinct child
-# keys, orphan rows (no parent), and null keys. Complements
-# `data_profile` (single-column audits) with the CROSS-TABLE contract
-# every warehouse load gates on. All-BIGINT.
-#
-# Scale shape: each edge is one left-anti-style aggregate — child keys
-# grouped map-side, then ONE join against the parent key set (parent
-# sides here are dimension-sized and broadcast; the fact-fact edge
-# co-partitions under AQE). Output is |edges|-sized.
-# --------------------------------------------------------------------------
-
-_RI_EDGES = (
-    ("lineitem", "l_orderkey", "orders", "o_orderkey"),
-    ("lineitem", "l_partkey", "part", "p_partkey"),
-    ("lineitem", "l_suppkey", "supplier", "s_suppkey"),
-    ("orders", "o_custkey", "customer", "c_custkey"),
-    ("customer", "c_nationkey", "nation", "n_nationkey"),
-    ("supplier", "s_nationkey", "nation", "n_nationkey"),
-    ("nation", "n_regionkey", "region", "r_regionkey"),
-)
-
-
-def q_ref_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = None
-    for child, ck, parent, pk in _RI_EDGES:
-        c = spark.read.parquet(f"{sf_dir}/{child}.parquet").select(
-            F.col(ck).alias("k")
-        )
-        p = (
-            spark.read.parquet(f"{sf_dir}/{parent}.parquet")
-            .select(F.col(pk).alias("k"))
-            .distinct()
-        )
-        keys = c.groupBy("k").agg(F.count("*").cast("long").alias("cnt"))
-        joined = keys.join(
-            p.select("k", F.lit(1).alias("hit")), "k", "left"
-        )
-        stats = joined.agg(
-            F.sum("cnt").cast("long").alias("n_child"),
-            F.count("*").cast("long").alias("n_child_keys"),
-            F.sum(F.when(F.col("k").isNull(), F.col("cnt")).otherwise(0))
-            .cast("long")
-            .alias("n_null"),
-            F.sum(
-                F.when(
-                    F.col("hit").isNull() & F.col("k").isNotNull(),
-                    F.col("cnt"),
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_orphans"),
-        ).select(
-            F.lit(f"{child}.{ck}").alias("fk"),
-            F.lit(f"{parent}.{pk}").alias("references"),
-            "n_child",
-            "n_child_keys",
-            "n_null",
-            "n_orphans",
-            (F.col("n_orphans") == 0).cast("long").alias("intact"),
-        )
-        out = stats if out is None else out.unionByName(stats)
-    return out
-
-
-def _sql_ref_integrity() -> str:
-    parts = []
-    for child, ck, parent, pk in _RI_EDGES:
-        parts.append(
-            f"""SELECT '{child}.{ck}' AS fk,
-       '{parent}.{pk}' AS "references",
-       CAST(sum(cnt) AS BIGINT) AS n_child,
-       CAST(count(*) AS BIGINT) AS n_child_keys,
-       CAST(sum(CASE WHEN k IS NULL THEN cnt ELSE 0 END) AS BIGINT)
-         AS n_null,
-       CAST(sum(CASE WHEN hit IS NULL AND k IS NOT NULL
-                     THEN cnt ELSE 0 END) AS BIGINT) AS n_orphans,
-       CAST(CASE WHEN sum(CASE WHEN hit IS NULL AND k IS NOT NULL
-                               THEN cnt ELSE 0 END) = 0
-                 THEN 1 ELSE 0 END AS BIGINT) AS intact
-FROM (
-  SELECT c.k, c.cnt, p.hit FROM (
-    SELECT {ck} AS k, CAST(count(*) AS BIGINT) AS cnt
-    FROM {child} GROUP BY {ck}
-  ) c LEFT JOIN (
-    SELECT DISTINCT {pk} AS k, 1 AS hit FROM {parent}
-  ) p ON p.k = c.k
-)"""
-        )
-    return "\nUNION ALL\n".join(parts)
-
-
-# --------------------------------------------------------------------------
-# Wald-Wolfowitz runs test (`runs_test`): the classic randomness test —
-# binarize the hourly series above/below its exact median (median-ties
-# excluded, the standard convention), count sign runs, compare against
-# E[R] = 2n₁n₂/n + 1 with the exact variance formula. Completes the
-# hypothesis-test family (ks_drift: distribution, mann_kendall: trend,
-# chi2/benford: categorical fit; THIS: serial randomness). Two scopes:
-# 'same' (raw series — fails to reject) and 'clumped' (a planted
-# 36-hour square wave forces long runs → z strongly negative, rejects).
-# R, n₁, n₂ and the median are exact integers; E/Var/z are fixed-order
-# doubles (6dp + verdict at |z| > 1.959964).
-#
-# Scale shape: the median is an exact rank over the bounded hourly
-# summary; runs count via one lag window over the same summary.
-# --------------------------------------------------------------------------
-
-RUNS_AMP = 40  # planted square-wave amplitude (clumped scope)
-RUNS_HALF_PERIOD = 36  # hours
-
-
-def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias("h")
-    )
-    cnt = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count("*").alias("c")
-    )
-    w = Window.orderBy("h")  # bounded hourly summary
-    ser = (
-        grid.join(cnt, "h", "left")
-        .select("h", F.coalesce("c", F.lit(0)).cast("long").alias("x"))
-        .select("x", F.row_number().over(w).cast("long").alias("t"))
-        .localCheckpoint(eager=True)
-    )
-    out = None
-    for scope in ("same", "clumped"):
-        y = (
-            F.col("x")
-            + F.when(
-                F.expr(f"((t - 1) div {RUNS_HALF_PERIOD}) % 2 = 0")
-                & F.lit(scope == "clumped"),
-                RUNS_AMP,
-            ).otherwise(0)
-        )
-        s = ser.select("t", y.alias("y"))
-        med = (
-            s.select(
-                "y",
-                F.row_number()
-                .over(Window.orderBy("y", "t"))
-                .alias("rk"),
-            )
-            .crossJoin(
-                F.broadcast(s.agg(F.count("*").alias("n0")))
-            )
-            .filter(F.col("rk") == F.expr("cast((n0 + 1) div 2 as int)"))
-            .select(F.col("y").alias("med"))
-        )
-        kept = (
-            s.crossJoin(F.broadcast(med))
-            .filter(F.col("y") != F.col("med"))
-            .select("t", (F.col("y") > F.col("med")).cast("long").alias("s"))
-        )
-        wk = Window.orderBy("t")
-        runs = kept.select(
-            "s", F.lag("s", 1).over(wk).alias("prev")
-        ).agg(
-            (
-                F.lit(1)
-                + F.sum(
-                    F.when(
-                        F.col("prev").isNotNull()
-                        & (F.col("s") != F.col("prev")),
-                        1,
-                    ).otherwise(0)
-                )
-            )
-            .cast("long")
-            .alias("r"),
-            F.sum("s").cast("long").alias("n1"),
-            F.sum(1 - F.col("s")).cast("long").alias("n2"),
-        )
-        part = runs.crossJoin(F.broadcast(med)).select(
-            F.lit(scope).alias("scope"), "r", "n1", "n2", "med"
-        )
-        out = part if out is None else out.unionByName(part)
-    n1d = F.col("n1").cast("double")
-    n2d = F.col("n2").cast("double")
-    nd = n1d + n2d
-    er = 2.0 * n1d * n2d / nd + 1.0
-    vr = (
-        2.0
-        * n1d
-        * n2d
-        * (2.0 * n1d * n2d - n1d - n2d)
-        / (nd * nd * (nd - 1.0))
-    )
-    z = (F.col("r").cast("double") - er) / F.sqrt(vr)
-    return out.select(
-        "scope",
-        "r",
-        "n1",
-        "n2",
-        "med",
-        F.round(er, 6).alias("expected_r"),
-        F.round(z, 6).alias("z"),
-        F.when(F.abs(z) > _MK_CRIT, F.lit("reject"))
-        .otherwise(F.lit("random"))
-        .alias("verdict"),
-    )
-
-
-def _sql_runs_test() -> str:
-    scopes = []
-    for scope in ("same", "clumped"):
-        add = (
-            f"CASE WHEN ((t - 1) // {RUNS_HALF_PERIOD}) % 2 = 0"
-            f" THEN {RUNS_AMP} ELSE 0 END"
-            if scope == "clumped"
-            else "0"
-        )
-        scopes.append(f"SELECT '{scope}' AS scope, t, x + {add} AS y FROM ser")
-    scoped_union = "\n  UNION ALL\n  ".join(scopes)
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser AS MATERIALIZED (
-  SELECT CAST(row_number() OVER (ORDER BY g.h) AS BIGINT) AS t,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS x
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), scoped AS MATERIALIZED (
-  {scoped_union}
-), med AS MATERIALIZED (
-  SELECT scope, y AS med FROM (
-    SELECT scope, y,
-           row_number() OVER (PARTITION BY scope ORDER BY y, t) AS rk,
-           count(*) OVER (PARTITION BY scope) AS n0
-    FROM scoped)
-  WHERE rk = CAST((n0 + 1) // 2 AS BIGINT)
-), kept AS MATERIALIZED (
-  SELECT s.scope, s.t,
-         CAST(CASE WHEN s.y > m.med THEN 1 ELSE 0 END AS BIGINT) AS s
-  FROM scoped s JOIN med m USING (scope)
-  WHERE s.y <> m.med
-), runs AS (
-  SELECT scope,
-         CAST(1 + sum(CASE WHEN prev IS NOT NULL AND s <> prev
-                           THEN 1 ELSE 0 END) AS BIGINT) AS r,
-         CAST(sum(s) AS BIGINT) AS n1,
-         CAST(sum(1 - s) AS BIGINT) AS n2
-  FROM (
-    SELECT scope, s,
-           lag(s, 1) OVER (PARTITION BY scope ORDER BY t) AS prev
-    FROM kept)
-  GROUP BY scope
-)
-SELECT r.scope, r.r, r.n1, r.n2, m.med,
-       round(2.0 * CAST(r.n1 AS DOUBLE) * CAST(r.n2 AS DOUBLE)
-             / (CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE)) + 1.0, 6)
-         AS expected_r,
-       round((CAST(r.r AS DOUBLE)
-              - (2.0 * CAST(r.n1 AS DOUBLE) * CAST(r.n2 AS DOUBLE)
-                 / (CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE)) + 1.0))
-             / sqrt(2.0 * CAST(r.n1 AS DOUBLE) * CAST(r.n2 AS DOUBLE)
-                    * (2.0 * CAST(r.n1 AS DOUBLE) * CAST(r.n2 AS DOUBLE)
-                       - CAST(r.n1 AS DOUBLE) - CAST(r.n2 AS DOUBLE))
-                    / ((CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE))
-                       * (CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE))
-                       * (CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE)
-                          - 1.0))), 6) AS z,
-       CASE WHEN abs((CAST(r.r AS DOUBLE)
-              - (2.0 * CAST(r.n1 AS DOUBLE) * CAST(r.n2 AS DOUBLE)
-                 / (CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE)) + 1.0))
-             / sqrt(2.0 * CAST(r.n1 AS DOUBLE) * CAST(r.n2 AS DOUBLE)
-                    * (2.0 * CAST(r.n1 AS DOUBLE) * CAST(r.n2 AS DOUBLE)
-                       - CAST(r.n1 AS DOUBLE) - CAST(r.n2 AS DOUBLE))
-                    / ((CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE))
-                       * (CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE))
-                       * (CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE)
-                          - 1.0)))) > {_MK_CRIT}
-            THEN 'reject' ELSE 'random' END AS verdict
-FROM runs r JOIN med m USING (scope)
-"""
-
-
-# --------------------------------------------------------------------------
-# BFS hop distances (`bfs_hops`): unweighted shortest paths from the
-# minimum-id host — the Pregel hello-world and the distance metric the
-# graph family still lacked (critical_path = longest weighted,
-# triangle/k_core = local structure; THIS = global reachability).
-# Synchronous relaxation dist(v) = min(dist(v), min_{(u,v)} dist(u)+1)
-# over BFS_ROUNDS rounds with per-round pins; converged certified
-# in-output (last two rounds equal — the k_core discipline); source
-# eccentricity = max finite distance; unreachable nodes stay NULL.
-# ALL-integer.
-#
-# Scale shape: each round is one undirected-edge join + map-side min
-# over the pinned |hosts| frame — the Pregel superstep; iterations
-# never re-scan the corpus.
-# --------------------------------------------------------------------------
-
-BFS_ROUNDS = 12  # graph diameter is tiny (probed ≤ 3); headroom + flag
-
-
-def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    a = (src_num % PR_N_NODES).alias("src")
-    b = ((src_num * 7 + F.col("doc_id") * 13 + 3) % PR_N_NODES).alias("dst")
-    # ONE corpus pass (round 7, guide §2.4/§5 — the pagerank discipline):
-    # the distinct undirected edge set is bounded at N^2/2 rows at any SF;
-    # the BFS_ROUNDS synchronous relaxations then run on the driver with
-    # the exact same integer arithmetic — replacing a second corpus scan
-    # and ~15 localCheckpoints / ~40 tiny shuffle jobs per call.
-    und0 = sorted(
-        (r["u"], r["v"])
-        for r in docs.select(a, b)
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-        .collect()
-    )
-    und = und0 + [(v, u) for u, v in und0]
-    nodes = sorted({u for u, _ in und})
-    root = min(nodes) if nodes else None
-    dist: Dict[int, Optional[int]] = {
-        nd: (0 if nd == root else None) for nd in nodes
-    }
-    prev = dict(dist)
-    for _ in range(BFS_ROUNDS):
-        cand: Dict[int, int] = {}
-        for u, v in und:
-            du = dist[u]
-            if du is not None and (v not in cand or du + 1 < cand[v]):
-                cand[v] = du + 1
-        prev = dist
-        new_dist: Dict[int, Optional[int]] = {}
-        for nd in nodes:
-            d, c = dist[nd], cand.get(nd)
-            new_dist[nd] = d if c is None else (c if d is None else min(d, c))
-        dist = new_dist
-    finite = [d for d in dist.values() if d is not None]
-    ecc = max(finite) if finite else None
-    # mirrors the SQL/Spark null semantics: a null<->value flip yields a
-    # NULL comparison that sum() skips, so only non-null != non-null counts
-    n_changed = sum(
-        1
-        for nd in nodes
-        if dist[nd] is not None
-        and prev[nd] is not None
-        and dist[nd] != prev[nd]
-    )
-    rows = [
-        (
-            nd,
-            dist[nd],
-            root,
-            ecc,
-            1 if dist[nd] is not None else 0,
-            1 if n_changed == 0 else 0,
-        )
-        for nd in nodes
-    ]
-    return spark.createDataFrame(
-        rows,
-        "node long, dist long, root long, eccentricity long, "
-        "reachable long, converged long",
-    )
-
-
-def _sql_bfs_hops() -> str:
-    n = PR_N_NODES
-    iters = []
-    for i in range(1, BFS_ROUNDS + 1):
-        p = f"d{i - 1}"
-        iters.append(
-            f"""c{i} AS (
-  SELECT e.v AS node, CAST(min(dd.dist) + 1 AS BIGINT) AS nd
-  FROM und e JOIN {p} dd ON dd.node = e.u
-  WHERE dd.dist IS NOT NULL
-  GROUP BY e.v
-), d{i} AS MATERIALIZED (
-  SELECT dd.node,
-         CAST(least(coalesce(dd.dist, c.nd), coalesce(c.nd, dd.dist))
-              AS BIGINT) AS dist
-  FROM {p} dd LEFT JOIN c{i} c ON c.node = dd.node
-)"""
-        )
-    chain = ", ".join(iters)
-    return f"""
-WITH raw AS MATERIALIZED (
-  SELECT (CAST(substr(source, 4, 10) AS BIGINT) % {n}) AS src,
-         ((CAST(substr(source, 4, 10) AS BIGINT) * 7 + doc_id * 13 + 3)
-           % {n}) AS dst
-  FROM documents
-), und0 AS (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM raw WHERE src <> dst
-), und AS MATERIALIZED (
-  SELECT u, v FROM und0 UNION ALL SELECT v AS u, u AS v FROM und0
-), nodes AS MATERIALIZED (
-  SELECT DISTINCT u AS node FROM und
-), root AS (
-  SELECT CAST(min(node) AS BIGINT) AS r FROM nodes
-), d0 AS MATERIALIZED (
-  SELECT node,
-         CAST(CASE WHEN node = root.r THEN 0 END AS BIGINT) AS dist
-  FROM nodes CROSS JOIN root
-), {chain}, ecc AS (
-  SELECT CAST(max(dist) AS BIGINT) AS eccentricity FROM d{BFS_ROUNDS}
-), conv AS (
-  SELECT CAST(sum(CASE WHEN a.dist IS DISTINCT FROM b.dist
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_changed
-  FROM d{BFS_ROUNDS} a JOIN d{BFS_ROUNDS - 1} b USING (node)
-)
-SELECT d.node, d.dist, root.r AS root, ecc.eccentricity,
-       CAST(CASE WHEN d.dist IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-         AS reachable,
-       CAST(CASE WHEN conv.n_changed = 0 THEN 1 ELSE 0 END AS BIGINT)
-         AS converged
-FROM d{BFS_ROUNDS} d CROSS JOIN root CROSS JOIN ecc CROSS JOIN conv
-"""
-
-
-# --------------------------------------------------------------------------
-# Haar wavelet energy (`haar_energy`): the multiresolution decomposition
-# of the hourly series — UNNORMALIZED Haar (pairwise sums and
-# differences), so every coefficient at every level is an exact BIGINT
-# and the per-level detail energies Σd² are integer-exact (the
-# time-frequency face: autocorrelation sees periodicity, seasonal_
-# decompose a fixed period; wavelet energies localize WHICH scale the
-# variance lives at — the 16-32h band dominates on this daily-cycled
-# corpus, asserted). The series truncates to the largest power of two
-# (512 of ~720 hours) for clean dyadic levels; HAAR_LEVELS levels of
-# (approx, detail) via pair aggregation; Parseval-style accounting is
-# exact because nothing is normalized.
-#
-# Scale shape: each level is one (t div 2) groupBy over the bounded
-# series (pairs = map-side combinable min/max-position sums); L levels
-# of summary-sized frames.
-# --------------------------------------------------------------------------
-
-HAAR_LEVELS = 5
-
-
-def q_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias("h")
-    )
-    cnt = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count("*").alias("c")
-    )
-    w = Window.orderBy("h")  # bounded hourly summary
-    ser0 = (
-        grid.join(cnt, "h", "left")
-        .select("h", F.coalesce("c", F.lit(0)).cast("long").alias("a"))
-        .select("a", (F.row_number().over(w) - 1).cast("long").alias("t"))
-    )
-    n2 = ser0.agg(
-        F.expr(
-            "cast(pow(2, floor(log2(count(*)))) as bigint)"
-        ).alias("m")
-    )
-    approx = (
-        ser0.crossJoin(F.broadcast(n2))
-        .filter(F.col("t") < F.col("m"))
-        .select("t", "a")
-        .localCheckpoint(eager=True)
-    )
-    out = None
-    for lvl in range(1, HAAR_LEVELS + 1):
-        paired = approx.groupBy(
-            F.expr("cast(t div 2 as bigint)").alias("t")
-        ).agg(
-            F.sum(
-                F.when(F.col("t") % 2 == 0, F.col("a")).otherwise(0)
-            ).alias("x0"),
-            F.sum(
-                F.when(F.col("t") % 2 == 1, F.col("a")).otherwise(0)
-            ).alias("x1"),
-        )
-        level = paired.select(
-            "t",
-            (F.col("x0") + F.col("x1")).cast("long").alias("a"),
-            (F.col("x0") - F.col("x1")).cast("long").alias("d"),
-        ).localCheckpoint(eager=True)
-        stats = level.agg(
-            F.count("*").cast("long").alias("n_coeffs"),
-            F.sum(F.col("d") * F.col("d")).cast("long").alias("detail_energy"),
-            F.sum(F.col("a") * F.col("a")).cast("long").alias("approx_energy"),
-        ).select(
-            F.lit(lvl).cast("long").alias("level"),
-            F.lit(2 ** lvl).cast("long").alias("scale_hours"),
-            "n_coeffs",
-            "detail_energy",
-            "approx_energy",
-        )
-        out = stats if out is None else out.unionByName(stats)
-        approx = level.select("t", "a")
-    return out
-
-
-def _sql_haar_energy() -> str:
-    levels = []
-    for lvl in range(1, HAAR_LEVELS + 1):
-        p = f"l{lvl - 1}"
-        levels.append(
-            f"""l{lvl} AS MATERIALIZED (
-  SELECT CAST(t // 2 AS BIGINT) AS t,
-         CAST(sum(CASE WHEN t % 2 = 0 THEN a ELSE 0 END)
-              + sum(CASE WHEN t % 2 = 1 THEN a ELSE 0 END) AS BIGINT) AS a,
-         CAST(sum(CASE WHEN t % 2 = 0 THEN a ELSE 0 END)
-              - sum(CASE WHEN t % 2 = 1 THEN a ELSE 0 END) AS BIGINT) AS d
-  FROM {p} GROUP BY t // 2
-), s{lvl} AS (
-  SELECT CAST({lvl} AS BIGINT) AS level,
-         CAST({2 ** lvl} AS BIGINT) AS scale_hours,
-         CAST(count(*) AS BIGINT) AS n_coeffs,
-         CAST(sum(d * d) AS BIGINT) AS detail_energy,
-         CAST(sum(a * a) AS BIGINT) AS approx_energy
-  FROM l{lvl}
-)"""
-        )
-    chain = ", ".join(levels)
-    sel = "\nUNION ALL\n".join(
-        f"SELECT * FROM s{lvl}" for lvl in range(1, HAAR_LEVELS + 1)
-    )
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser0 AS MATERIALIZED (
-  SELECT CAST(row_number() OVER (ORDER BY g.h) - 1 AS BIGINT) AS t,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS a
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), n2 AS (
-  SELECT CAST(pow(2, floor(log2(count(*)))) AS BIGINT) AS m FROM ser0
-), l0 AS MATERIALIZED (
-  SELECT t, a FROM ser0 CROSS JOIN n2 WHERE t < n2.m
-), {chain}
-{sel}
-"""
-
-
-# --------------------------------------------------------------------------
-# Theil-Sen slope (`theil_sen`): the robust trend ESTIMATOR companion to
-# mann_kendall's trend TEST (Sen 1968) — the median of all pairwise
-# slopes, immune to the outliers that wreck OLS. Shares mann_kendall's
-# scopes: 'same' (slope ≈ 0) and 'trended' (the planted +t·MK_RATE/
-# MK_GRID staircase drift — the estimate must recover ≈ MK_RATE/MK_GRID,
-# asserted within 20%). Every pairwise slope is ONE division of exact
-# integers (bit-identical doubles), the median is an exact rank with the
-# (t_i, t_j) tie-break, and the intercept is the exact-rank median of
-# y − slope·t. The median pair's (t_i, t_j) ride along as the integer
-# parity anchor.
-#
-# Scale shape: the O(n²) pair join runs over the BOUNDED hourly summary
-# (mann_kendall's class); medians via exact_global_rank
-# (range-partitioned) on Spark, row_number in DuckDB.
-# --------------------------------------------------------------------------
-
-
-def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    # ONE corpus pass (round 7, guide §2.4/§5 — the pagerank discipline):
-    # the hourly count table is bounded by the fixed 720-hour event window
-    # at any SF (verified 719h span at sf0.001/0.01/0.1), and the grid
-    # bounds are its own min/max keys, so a single map-side-aggregated
-    # groupBy carries everything. The O(|hours|^2) pairwise slopes and
-    # both exact-rank medians (identical (slope, ti, tj) / (r, t)
-    # orderings, rank (n+1) div 2) then run on the driver — replacing 4
-    # localCheckpoints and ~10 shuffle/rank jobs per call.
-    cnt = {
-        r["h"]: r["c"]
-        for r in ev.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("h")
-        )
-        .agg(F.count("*").alias("c"))
-        .collect()
-    }
-    import datetime as _dt
-
-    hours = sorted(cnt)
-    rows = []
-    if hours:
-        h0, h1 = hours[0], hours[-1]
-        grid = []
-        h = h0
-        while h <= h1:
-            grid.append(h)
-            h = h + _dt.timedelta(hours=1)
-        xs = [cnt.get(h, 0) for h in grid]
-        ts = list(range(1, len(grid) + 1))
-        for scope in ("same", "trended"):
-            if scope == "trended":
-                ys = [x + (t * MK_RATE) // MK_GRID for x, t in zip(xs, ts)]
-            else:
-                ys = xs
-            pairs = [
-                ((ys[j] - ys[i]) / (ts[j] - ts[i]), ts[i], ts[j])
-                for i in range(len(ts))
-                for j in range(i + 1, len(ts))
-            ]
-            pairs.sort()
-            n_pairs = len(pairs)
-            if n_pairs == 0:  # single-hour grid: no median row (as before)
-                continue
-            med_slope, med_ti, med_tj = pairs[(n_pairs + 1) // 2 - 1]
-            resid = sorted(
-                (y - med_slope * t, t) for t, y in zip(ts, ys)
-            )
-            intercept = resid[(len(resid) + 1) // 2 - 1][0]
-            rows.append(
-                (scope, n_pairs, med_ti, med_tj, med_slope, intercept)
-            )
-    return spark.createDataFrame(
-        rows,
-        "scope string, n_pairs long, med_ti long, med_tj long, "
-        "med_slope double, intercept double",
-    ).select(
-        "scope",
-        "n_pairs",
-        "med_ti",
-        "med_tj",
-        F.round("med_slope", 6).alias("slope"),
-        F.round("intercept", 6).alias("intercept"),
-    )
-
-
-def _sql_theil_sen() -> str:
-    scopes = []
-    for scope in ("same", "trended"):
-        yexpr = (
-            f"x + CAST((t * {MK_RATE}) // {MK_GRID} AS BIGINT)"
-            if scope == "trended"
-            else "x"
-        )
-        scopes.append(f"SELECT '{scope}' AS scope, t, {yexpr} AS y FROM ser")
-    scoped_union = "\n  UNION ALL\n  ".join(scopes)
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser AS MATERIALIZED (
-  SELECT CAST(row_number() OVER (ORDER BY g.h) AS BIGINT) AS t,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS x
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), scoped AS MATERIALIZED (
-  {scoped_union}
-), pairs AS MATERIALIZED (
-  SELECT a.scope, a.t AS ti, b.t AS tj,
-         CAST(b.y - a.y AS DOUBLE) / CAST(b.t - a.t AS DOUBLE) AS slope
-  FROM scoped a JOIN scoped b ON b.scope = a.scope AND b.t > a.t
-), med AS MATERIALIZED (
-  SELECT scope, slope AS med_slope, ti AS med_ti, tj AS med_tj,
-         n AS n_pairs
-  FROM (
-    SELECT scope, slope, ti, tj,
-           row_number() OVER (PARTITION BY scope
-                              ORDER BY slope, ti, tj) AS rk,
-           count(*) OVER (PARTITION BY scope) AS n
-    FROM pairs)
-  WHERE rk = CAST((n + 1) // 2 AS BIGINT)
-), inter AS MATERIALIZED (
-  SELECT scope, r AS intercept FROM (
-    SELECT s.scope,
-           CAST(s.y AS DOUBLE) - m.med_slope * CAST(s.t AS DOUBLE) AS r,
-           row_number() OVER (PARTITION BY s.scope
-                              ORDER BY CAST(s.y AS DOUBLE)
-                                       - m.med_slope
-                                         * CAST(s.t AS DOUBLE), s.t)
-             AS rk,
-           count(*) OVER (PARTITION BY s.scope) AS n
-    FROM scoped s JOIN med m USING (scope))
-  WHERE rk = CAST((n + 1) // 2 AS BIGINT)
-)
-SELECT m.scope, CAST(m.n_pairs AS BIGINT) AS n_pairs,
-       m.med_ti, m.med_tj,
-       round(m.med_slope, 6) AS slope,
-       round(i.intercept, 6) AS intercept
-FROM med m JOIN inter i USING (scope)
-"""
-
-
-# --------------------------------------------------------------------------
-# Poisson dispersion test (`poisson_dispersion`): the count-model
-# diagnostic — is a per-type hourly arrival series consistent with a
-# Poisson process (D = s²/x̄ ≈ 1), overdispersed (bursty/clustered,
-# D > 1) or underdispersed (regularized, D < 1)? Fisher's index with
-# the normal approximation z = (D−1)·√((n−1)/2) at |z| > 1.959964.
-# The five real event types ride alongside two PLANTED series that pin
-# both verdict branches: 'planted_burst' (the corpus series doubled on
-# alternating 12-hour blocks — strongly overdispersed) and
-# 'planted_const' (a constant series — D = 0, underdispersed). Moments
-# are BIGINT over the dense per-type grid; D/z are fixed-order doubles.
-#
-# Scale shape: the dense grid is hour-sequence × types (broadcast);
-# counts one map-side agg; everything downstream is |types|-sized.
-# --------------------------------------------------------------------------
-
-PD_BLOCK_H = 12  # planted burst: counts double on alternating blocks
-PD_CONST = 5
-
-
-def q_poisson_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias("h")
-    )
-    types = ev.select("event_type").distinct()
-    cnt = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("h"), "event_type"
-    ).agg(F.count("*").alias("c"))
-    w = Window.orderBy("h")
-    idx = grid.select("h", (F.row_number().over(w) - 1).cast("long").alias("t"))
-    ser = (
-        idx.crossJoin(F.broadcast(types))
-        .join(cnt, ["h", "event_type"], "left")
-        .select(
-            F.col("event_type").alias("series"),
-            "t",
-            F.coalesce("c", F.lit(0)).cast("long").alias("x"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    total = ser.groupBy("t").agg(F.sum("x").cast("long").alias("x"))
-    burst = total.select(
-        F.lit("planted_burst").alias("series"),
-        "t",
-        F.when(
-            F.expr(f"(t div {PD_BLOCK_H}) % 2 = 0"), 2 * F.col("x")
-        )
-        .otherwise(F.col("x"))
-        .cast("long")
-        .alias("x"),
-    )
-    const = idx.select(
-        F.lit("planted_const").alias("series"),
-        "t",
-        F.lit(PD_CONST).cast("long").alias("x"),
-    )
-    allser = ser.unionByName(burst).unionByName(const)
-    per = allser.groupBy("series").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("x").cast("long").alias("s"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("ss"),
-    )
-    nd = F.col("n").cast("double")
-    mean = F.col("s").cast("double") / nd
-    var = (F.col("ss").cast("double") - nd * mean * mean) / (nd - F.lit(1.0))
-    disp = var / mean
-    z = (disp - F.lit(1.0)) * F.sqrt((nd - F.lit(1.0)) / F.lit(2.0))
-    verdict = (
-        F.when(z > _MK_CRIT, F.lit("overdispersed"))
-        .when(z < -_MK_CRIT, F.lit("underdispersed"))
-        .otherwise(F.lit("poisson"))
-    )
-    return per.select(
-        "series",
-        "n",
-        "s",
-        "ss",
-        F.round(mean, 6).alias("mean"),
-        F.round(var, 6).alias("var"),
-        F.round(disp, 6).alias("dispersion"),
-        F.round(z, 6).alias("z"),
-        verdict.alias("verdict"),
-    )
-
-
-def _sql_poisson_dispersion() -> str:
-    crit = _MK_CRIT
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), idx AS MATERIALIZED (
-  SELECT h, CAST(row_number() OVER (ORDER BY h) - 1 AS BIGINT) AS t
-  FROM grid
-), types AS (
-  SELECT DISTINCT event_type FROM events
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, event_type, count(*) AS c
-  FROM events GROUP BY 1, 2
-), ser AS MATERIALIZED (
-  SELECT ty.event_type AS series, i.t,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS x
-  FROM idx i
-  CROSS JOIN types ty
-  LEFT JOIN cnt c ON c.h = i.h AND c.event_type = ty.event_type
-), total AS (
-  SELECT t, CAST(sum(x) AS BIGINT) AS x FROM ser GROUP BY t
-), allser AS MATERIALIZED (
-  SELECT series, t, x FROM ser
-  UNION ALL
-  SELECT 'planted_burst', t,
-         CAST(CASE WHEN (t // {PD_BLOCK_H}) % 2 = 0
-                   THEN 2 * x ELSE x END AS BIGINT)
-  FROM total
-  UNION ALL
-  SELECT 'planted_const', t, CAST({PD_CONST} AS BIGINT) FROM idx
-), per AS MATERIALIZED (
-  SELECT series, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS s,
-         CAST(sum(x * x) AS BIGINT) AS ss
-  FROM allser GROUP BY series
-)
-SELECT series, n, s, ss,
-       round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean,
-       round((CAST(ss AS DOUBLE)
-              - CAST(n AS DOUBLE) * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)))
-             / (CAST(n AS DOUBLE) - 1.0), 6) AS var,
-       round(((CAST(ss AS DOUBLE)
-               - CAST(n AS DOUBLE) * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                 * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)))
-              / (CAST(n AS DOUBLE) - 1.0))
-             / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)), 6) AS dispersion,
-       round((((CAST(ss AS DOUBLE)
-                - CAST(n AS DOUBLE) * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                  * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)))
-               / (CAST(n AS DOUBLE) - 1.0))
-              / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) - 1.0)
-             * sqrt((CAST(n AS DOUBLE) - 1.0) / 2.0), 6) AS z,
-       CASE WHEN (((CAST(ss AS DOUBLE)
-                - CAST(n AS DOUBLE) * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                  * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)))
-               / (CAST(n AS DOUBLE) - 1.0))
-              / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) - 1.0)
-             * sqrt((CAST(n AS DOUBLE) - 1.0) / 2.0) > {crit}
-              THEN 'overdispersed'
-            WHEN (((CAST(ss AS DOUBLE)
-                - CAST(n AS DOUBLE) * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                  * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)))
-               / (CAST(n AS DOUBLE) - 1.0))
-              / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) - 1.0)
-             * sqrt((CAST(n AS DOUBLE) - 1.0) / 2.0) < -{crit}
-              THEN 'underdispersed'
-            ELSE 'poisson' END AS verdict
-FROM per
-"""
-
-
-# --------------------------------------------------------------------------
-# Grouped exact quantiles (`group_quantiles`): per-source token-count
-# quartiles (q1/median/q3) + IQR by exact rank selection — the GROUPED
-# variant `token_quantiles` (global) leaves open, and the BI staple
-# behind every box plot. Rank r_q = ceil(q·n) per group (the lower
-# quantile convention, integer-exact); the quartile VALUES are integers,
-# so the whole operator is BIGINT except nothing — zero doubles.
-#
-# Scale shape: ranks are windows PARTITIONED by source (bounded 25-doc
-# groups — never single-partition); the three rank selections are one
-# filtered pass re-aggregated per group; at ragged scale the same plan
-# runs per-group unchanged.
-# --------------------------------------------------------------------------
-
-GQ_QS = ((1, 4), (2, 4), (3, 4))  # q1, median, q3 as fractions
-
-
-def q_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ntok = F.size(
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0)
-    ).cast("long")
-    base = _docs(spark, sf_dir).select(
-        "source", "doc_id", ntok.alias("v")
-    )
-    w = Window.partitionBy("source").orderBy("v", "doc_id")
-    ranked = base.select(
-        "source",
-        "v",
-        F.row_number().over(w).cast("long").alias("rk"),
-        F.count("*")
-        .over(Window.partitionBy("source"))
-        .cast("long")
-        .alias("n"),
-    )
-    sel = None
-    for num, den in GQ_QS:
-        # ceiling with POSITIVE operands only: Spark `div` truncates
-        # toward zero while DuckDB `//` floors — they diverge on
-        # negatives, so the -(-a div b) ceiling trick is engine-unsafe
-        part = ranked.filter(
-            F.col("rk")
-            == F.expr(
-                f"cast(({num} * n + {den} - 1) div {den} as bigint)"
-            )
-        ).select(
-            "source",
-            "n",
-            F.lit(f"q{num * 100 // den}").alias("q"),
-            F.col("v").alias("value"),
-        )
-        sel = part if sel is None else sel.unionByName(part)
-    wide = sel.groupBy("source", "n").agg(
-        F.max(F.when(F.col("q") == "q25", F.col("value"))).alias("q25"),
-        F.max(F.when(F.col("q") == "q50", F.col("value"))).alias("q50"),
-        F.max(F.when(F.col("q") == "q75", F.col("value"))).alias("q75"),
-    )
-    return wide.select(
-        "source",
-        "n",
-        F.col("q25").cast("long").alias("q25"),
-        F.col("q50").cast("long").alias("q50"),
-        F.col("q75").cast("long").alias("q75"),
-        (F.col("q75") - F.col("q25")).cast("long").alias("iqr"),
-    )
-
-
-def _sql_group_quantiles() -> str:
-    cases = []
-    for num, den in GQ_QS:
-        label = f"q{num * 100 // den}"
-        cases.append(
-            f"max(CASE WHEN rk = CAST(({num} * n + {den} - 1) // {den}"
-            f" AS BIGINT) THEN v END) AS {label}"
-        )
-    sel = ",\n       ".join(cases)
-    return f"""
-WITH base AS (
-  SELECT source, doc_id,
-         CAST(len(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
-              AS BIGINT) AS v
-  FROM documents
-), ranked AS MATERIALIZED (
-  SELECT source, v,
-         CAST(row_number() OVER (PARTITION BY source ORDER BY v, doc_id)
-              AS BIGINT) AS rk,
-         CAST(count(*) OVER (PARTITION BY source) AS BIGINT) AS n
-  FROM base
-)
-SELECT source, n,
-       {sel},
-       CAST(max(CASE WHEN rk = CAST((3 * n + 3) // 4 AS BIGINT)
-                     THEN v END)
-            - max(CASE WHEN rk = CAST((1 * n + 3) // 4 AS BIGINT)
-                       THEN v END) AS BIGINT) AS iqr
-FROM ranked
-GROUP BY source, n
-"""
-
-
 QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]]] = {
     "fusion": (q_fusion, SQL_FUSION),
     "fusion_events": (q_fusion_events, SQL_FUSION_EVENTS),
@@ -18214,92 +7194,12 @@ QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]
     "dsir_sampled": (q_dsir_sampled, _sql_dsir_sampled()),
     "web_funnel": (q_web_funnel, _sql_web_funnel()),
     "line_dedup": (q_line_dedup, _sql_line_dedup()),
-    "pmi_bigrams": (q_pmi_bigrams, _sql_pmi_bigrams()),
     "dup_longest": (q_dup_longest, _sql_dup_longest()),
     "span_scrub": (q_span_scrub, _sql_span_scrub()),
     "split_leakage": (q_split_leakage, _sql_split_leakage()),
-    "event_transitions": (q_event_transitions, _sql_event_transitions()),
-    "pagerank": (q_pagerank, _sql_pagerank()),
-    "event_funnel": (q_event_funnel, _sql_event_funnel()),
-    "hll_merge": (q_hll_merge, _sql_hll_merge()),
-    "ks_drift": (q_ks_drift, _sql_ks_drift()),
     "mojibake_fix": (q_mojibake_fix, _sql_mojibake_fix()),
-    "crawl_frontier": (q_crawl_frontier, _sql_crawl_frontier()),
     "robots_filter": (q_robots_filter, _sql_robots_filter()),
     "template_lines": (q_template_lines, _sql_template_lines()),
-    "zipf_fit": (q_zipf_fit, _sql_zipf_fit()),
-    "hits": (q_hits, _sql_hits()),
-    "js_divergence": (q_js_divergence, _sql_js_divergence()),
     "nfc_normalize": (q_nfc_normalize, _sql_nfc_normalize()),
-    "lpa_communities": (q_lpa_communities, _sql_lpa_communities()),
-    "logreg_quality": (q_logreg_quality, _sql_logreg_quality()),
-    "auc_eval": (q_auc_eval, _sql_auc_eval()),
-    "kmeans_embed": (q_kmeans_embed, _sql_kmeans_embed()),
-    "silhouette": (q_silhouette, _sql_silhouette()),
     "lm_kneser_ney": (q_lm_kneser_ney, _sql_lm_kneser_ney()),
-    "tpch_pricing": (q_tpch_pricing, _sql_tpch_pricing()),
-    "tpch_regional_revenue": (q_tpch_regional_revenue, _sql_tpch_regional_revenue()),
-    "dp_release": (q_dp_release, _sql_dp_release()),
-    "chi2_select": (q_chi2_select, _sql_chi2_select()),
-    "conformal": (q_conformal, _sql_conformal()),
-    "bootstrap_ci": (q_bootstrap_ci, _sql_bootstrap_ci()),
-    "cuped_ab": (q_cuped_ab, _sql_cuped_ab()),
-    "holt_forecast": (q_holt_forecast, _sql_holt_forecast()),
-    "seasonal_mase": (q_seasonal_mase, _sql_seasonal_mase()),
-    "bleu_eval": (q_bleu_eval, _sql_bleu_eval()),
-    "spearman_corr": (q_spearman_corr, _sql_spearman_corr()),
-    "gini_lorenz": (q_gini_lorenz, _sql_gini_lorenz()),
-    "rbo_topk": (q_rbo_topk, _sql_rbo_topk()),
-    "psi_drift": (q_psi_drift, _sql_psi_drift()),
-    "doc_cube": (q_doc_cube, _sql_doc_cube()),
-    "cohort_retention": (q_cohort_retention, _sql_cohort_retention()),
-    "kmv_intersect": (q_kmv_intersect, _sql_kmv_intersect()),
-    "cusum_changepoint": (q_cusum_changepoint, _sql_cusum_changepoint()),
-    "ndcg_eval": (q_ndcg_eval, _sql_ndcg_eval()),
-    "cohen_kappa": (q_cohen_kappa, _sql_cohen_kappa()),
-    "tpch_shipping": (q_tpch_shipping, _sql_tpch_shipping()),
-    "tpch_big_orders": (q_tpch_big_orders, _sql_tpch_big_orders()),
-    "rolling_anomaly": (q_rolling_anomaly, _sql_rolling_anomaly()),
-    "ece_calibration": (q_ece_calibration, _sql_ece_calibration()),
-    "triangle_count": (q_triangle_count, _sql_triangle_count()),
-    "rouge_l": (q_rouge_l, _sql_rouge_l()),
-    "data_profile": (q_data_profile, _sql_data_profile()),
-    "skyline": (q_skyline, _sql_skyline()),
-    "assoc_rules": (q_assoc_rules, _sql_assoc_rules()),
-    "rfm_segments": (q_rfm_segments, _sql_rfm_segments()),
-    "k_core": (q_k_core, _sql_k_core()),
-    "rrf_fusion": (q_rrf_fusion, _sql_rrf_fusion()),
-    "attribution": (q_attribution, _sql_attribution()),
-    "kaplan_meier": (q_kaplan_meier, _sql_kaplan_meier()),
-    "benford_test": (q_benford_test, _sql_benford_test()),
-    "isotonic_calibration": (
-        q_isotonic_calibration,
-        _sql_isotonic_calibration(),
-    ),
-    "window_funcs": (q_window_funcs, _sql_window_funcs()),
-    "quantile_normalize": (q_quantile_normalize, _sql_quantile_normalize()),
-    "seasonal_decompose": (q_seasonal_decompose, _sql_seasonal_decompose()),
-    "active_users": (q_active_users, _sql_active_users()),
-    "diff_in_diff": (q_diff_in_diff, _sql_diff_in_diff()),
-    "json_extract": (q_json_extract, _sql_json_extract()),
-    "mann_kendall": (q_mann_kendall, _sql_mann_kendall()),
-    "pivot_table": (q_pivot_table, _sql_pivot_table()),
-    "rake_keyphrases": (q_rake_keyphrases, _sql_rake_keyphrases()),
-    "ips_eval": (q_ips_eval, _sql_ips_eval()),
-    "pca_power": (q_pca_power, _sql_pca_power()),
-    "mutual_info": (q_mutual_info, _sql_mutual_info()),
-    "critical_path": (q_critical_path, _sql_critical_path()),
-    "autocorrelation": (q_autocorrelation, _sql_autocorrelation()),
-    "ohlc_bars": (q_ohlc_bars, _sql_ohlc_bars()),
-    "trimmed_stats": (q_trimmed_stats, _sql_trimmed_stats()),
-    "ams_f2": (q_ams_f2, _sql_ams_f2()),
-    "assortativity": (q_assortativity, _sql_assortativity()),
-    "interarrival_stats": (q_interarrival_stats, _sql_interarrival_stats()),
-    "ref_integrity": (q_ref_integrity, _sql_ref_integrity()),
-    "runs_test": (q_runs_test, _sql_runs_test()),
-    "bfs_hops": (q_bfs_hops, _sql_bfs_hops()),
-    "haar_energy": (q_haar_energy, _sql_haar_energy()),
-    "theil_sen": (q_theil_sen, _sql_theil_sen()),
-    "poisson_dispersion": (q_poisson_dispersion, _sql_poisson_dispersion()),
-    "group_quantiles": (q_group_quantiles, _sql_group_quantiles()),
 }

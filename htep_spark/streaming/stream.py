@@ -626,8 +626,8 @@ def stream_windowed_jsd(
     watermark: str = "5 minutes",
 ) -> DataFrame:
     """Streaming per-window unigram histogram over a FIXED reference
-    support (the batch `js_divergence` discipline: top-K reference tokens
-    plus one OTHER tail bucket) — the feed half of a windowed
+    support (top-K reference tokens plus one OTHER tail bucket) — the
+    feed half of a windowed
     distribution-drift monitor. A pure watermarked tumbling-window
     aggregation: no custom state operator, and the state store holds at
     most |ref_tokens| + 1 rows PER OPEN WINDOW regardless of stream rate
@@ -659,9 +659,8 @@ def merge_windowed_jsd(summaries: DataFrame, ref_counts: dict) -> DataFrame:
     distribution (``ref_counts``: term -> count over the SAME support,
     including the OTHER bucket). Pure batch post-step: the per-window
     support grid keeps zero-count terms (the p = 0 branch), and the KL
-    sums run as pinned-order folds over the term-sorted list — the exact
-    arithmetic shape of the hash-verified batch `js_divergence`, so the
-    batch oracle validates this math."""
+    sums run as pinned-order folds over the term-sorted list, so the
+    result does not depend on shuffle arrival order."""
     spark = summaries.sparkSession
     ref = F.broadcast(
         spark.createDataFrame(
@@ -736,8 +735,7 @@ def stream_active_users(
     window_duration: str = "1 day",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Streaming per-window distinct active users — the DAU feed of the
-    batch ``active_users`` operator (driver_queries.py), built from the
+    """Streaming per-window distinct active users (DAU), built from the
     two chained stateful operators Structured Streaming supports since
     the multi-stateful-operator lift: a watermark-bounded
     ``dropDuplicates`` on (window, user) followed by a windowed count.

@@ -242,3 +242,39 @@ def test_conv_rollup_keeps_64bit_doc_ids(spark, tmp_path):
         return sorted(tuple(r) for r in rows)
 
     assert rollup(offset) == rollup(0)
+
+
+def test_bench_headline_names_resolve():
+    """Every name in bench.py's frozen headline loop resolves: the loop
+    indexes ``QUERIES[name]`` with no skip for names missing from its
+    ``extra`` dict, so deleting a QUERIES entry the headline times would
+    crash the bench. Read through ``ast`` so bench.py is never run."""
+    import ast
+    from pathlib import Path
+
+    from htep_spark.driver_queries import QUERIES
+
+    tree = ast.parse((Path(__file__).resolve().parents[1] / "bench.py").read_text())
+    (extra,) = [
+        node.value
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Assign)
+        and [getattr(t, "id", None) for t in node.targets] == ["extra"]
+    ]
+    extra_names = {k.value for k in extra.keys}
+    # the headline loop is the one that looks its callable up in `extra`
+    (headline,) = [
+        node.iter
+        for node in ast.walk(tree)
+        if isinstance(node, ast.For)
+        and any(
+            isinstance(n, ast.Attribute)
+            and n.attr == "get"
+            and getattr(n.value, "id", None) == "extra"
+            for n in ast.walk(node)
+        )
+    ]
+    names = [e.value for e in headline.elts]
+    assert len(names) == 16, names
+    missing = [n for n in names if n not in extra_names and n not in QUERIES]
+    assert not missing, f"bench.py headline names missing from QUERIES: {missing}"

@@ -1019,66 +1019,6 @@ def test_line_dedup_keep_first_and_reconstruction():
     assert len(got) == len(rows)
 
 
-def test_pmi_bigrams_pure_python_replay_and_margins():
-    """PMI collocations (`pmi_bigrams`): an independent pure-Python replay
-    — positional-marginal PMI over min-count-floored bigrams, top-K by
-    (rounded pmi desc, w1, w2) — must match the DuckDB oracle exactly at
-    sf0.001, every score must clear its 6dp rounding boundary by > 1e-12
-    (cross-libm ln parity, the dsir/gumbel margin discipline), and the cut
-    must be non-vacuous (more candidates than K, so the rank actually
-    selects)."""
-    import math
-    import re as _re
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        _TOKEN_PATTERN,
-        PMI_MIN_COUNT,
-        PMI_TOP_K,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    got = con.execute(QUERIES["pmi_bigrams"][1]).fetchall()
-
-    rows = con.execute("SELECT text FROM documents").fetchall()
-    c12: dict = {}
-    for (text,) in rows:
-        toks = _re.findall(_TOKEN_PATTERN, text.lower())
-        for a, b in zip(toks, toks[1:]):
-            c12[(a, b)] = c12.get((a, b), 0) + 1
-    cl: dict = {}
-    cr: dict = {}
-    for (a, b), c in c12.items():
-        cl[a] = cl.get(a, 0) + c
-        cr[b] = cr.get(b, 0) + c
-    nb = sum(c12.values())
-    scored = []
-    for (a, b), c in c12.items():
-        if c >= PMI_MIN_COUNT:
-            pmi = math.log((float(c) * float(nb)) / (float(cl[a]) * float(cr[b])))
-            frac = abs(pmi * 1e6 - round(pmi * 1e6))
-            assert abs(frac - 0.5) * 1e-6 > 1e-12, ((a, b), pmi)
-            scored.append((a, b, c, cl[a], cr[b], round(pmi, 6)))
-    assert len(scored) > PMI_TOP_K, "cut vacuous: candidates <= K"
-    scored.sort(key=lambda r: (-r[5], r[0], r[1]))
-    want = [r + (i + 1,) for i, r in enumerate(scored[:PMI_TOP_K])]
-    assert got == want
-    # association is a different ordering than frequency: the PMI top-K
-    # ranking differs from the raw count ranking (the surface top_ngrams
-    # would return) — PMI must reorder, not merely re-emit, the head
-    by_freq = sorted(
-        ((a, b) for (a, b), c in c12.items() if c >= PMI_MIN_COUNT),
-        key=lambda k: (-c12[k], k),
-    )[:PMI_TOP_K]
-    assert [(r[0], r[1]) for r in got] != by_freq
-
-
 def test_dup_longest_matches_brute_force():
     """Exact longest duplicated token-substring (`dup_longest`): the
     DuckDB bisection oracle must equal a brute-force scan (descending L,
@@ -1272,51 +1212,6 @@ def test_split_leakage_pure_python_replay():
     assert attributed, "attribution vacuous"
 
 
-def test_event_transitions_pure_python_replay_and_margins():
-    """Event-type Markov matrix (`event_transitions`): an independent
-    pure-Python replay — per-user sequences ordered by (ts, event_id),
-    adjacent transitions, row-normalized probabilities — must match the
-    DuckDB oracle at sf0.001; per-src probabilities must sum to 1 within
-    float tolerance; every probability must clear its 6dp rounding
-    boundary by > 1e-9 (power-of-two denominators can land exactly on
-    .5e-6, where engine rounding modes could diverge)."""
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    got = {
-        (r[0], r[1]): (r[2], r[3])
-        for r in con.execute(QUERIES["event_transitions"][1]).fetchall()
-    }
-    rows = con.execute(
-        "SELECT user_id, event_type, ts, event_id FROM events "
-        "ORDER BY user_id, ts, event_id"
-    ).fetchall()
-    cnt: dict = {}
-    prev: dict = {}
-    for user_id, etype, _ts, _eid in rows:
-        if user_id in prev:
-            cnt[(prev[user_id], etype)] = cnt.get((prev[user_id], etype), 0) + 1
-        prev[user_id] = etype
-    totals: dict = {}
-    for (src, _dst), n in cnt.items():
-        totals[src] = totals.get(src, 0) + n
-    assert set(got) == set(cnt)
-    for key, n in cnt.items():
-        p = n / totals[key[0]]
-        frac = abs(p * 1e6 - round(p * 1e6))
-        assert abs(frac - 0.5) > 1e-9, (key, p)
-        assert got[key] == (n, round(p, 6)), (key, got[key], (n, p))
-    for src, tot in totals.items():
-        s = sum(got[(s2, d)][1] for (s2, d) in got if s2 == src)
-        assert abs(s - 1.0) < 1e-4, (src, s)
-
-
 def test_robots_filter_pure_python_replay_and_branches():
     """Robots filtering (`robots_filter`): a pure-Python replay of the
     first-matching-rule semantics must match the DuckDB oracle at
@@ -1360,42 +1255,6 @@ def test_robots_filter_pure_python_replay_and_branches():
     # per-domain rollup consistency (re-scan now that totals are final)
     for doc_id, domain, path, rgrp, midx, mpfx, allowed, db, dt in rows:
         assert [db, dt] == dom_counts[domain], (domain, db, dt)
-
-
-def test_crawl_frontier_politeness_invariants():
-    """Crawl frontier (`crawl_frontier`): per-domain slots must be dense
-    0..n-1 in doc_id order, scheduled offsets spaced exactly one
-    politeness delay apart, the last slot's offset must equal the
-    domain's makespan, and every row's pr must equal the pagerank
-    table's value for the domain's node (the composition contract)."""
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        POLITENESS_DELAY_S,
-        PR_N_NODES,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    pr = {r[0]: r[4] for r in con.execute(QUERIES["pagerank"][1]).fetchall()}
-    rows = con.execute(QUERIES["crawl_frontier"][1]).fetchall()
-    assert rows
-    by_dom: dict = {}
-    for doc_id, domain, node, p, slot, sched, dom_docs, makespan in rows:
-        assert p == pr[node], (domain, node)
-        assert sched == slot * POLITENESS_DELAY_S
-        assert makespan == (dom_docs - 1) * POLITENESS_DELAY_S
-        assert node == int(domain.split(".")[0][4:]) % PR_N_NODES
-        by_dom.setdefault(domain, []).append((doc_id, slot, dom_docs))
-    for domain, entries in by_dom.items():
-        entries.sort()
-        n = entries[0][2]
-        assert len(entries) == n, (domain, len(entries), n)
-        assert [s for _d, s, _n in entries] == list(range(n)), domain
 
 
 def test_mojibake_fix_pure_python_replay_and_branches():
@@ -1444,249 +1303,6 @@ def test_mojibake_fix_pure_python_replay_and_branches():
             clean += 1
             assert exp[3] == exp[4] and exp[5] == 0
     assert hit and clean, (hit, clean)
-
-
-def test_ks_drift_pure_python_replay_and_boundary_margins():
-    """Two-sample KS drift (`ks_drift`): an independent pure-Python replay
-    — md5 half-split, per-value counts, integer-scaled CDF differences,
-    the max — must match the DuckDB oracle at sf0.001 AND sf0.01; every
-    6dp-rounded ratio must clear its rounding boundary (cdf denominators
-    are data-dependent split sizes — the one place engines' rounding
-    modes could diverge); the is_ks flag must mark exactly the argmax
-    rows; both splits must be non-empty."""
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES
-
-    for sf in ("0.001", "0.01"):
-        con = duckdb.connect()
-        con.execute(
-            "CREATE VIEW documents AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf{sf}/documents.parquet')"
-        )
-        got = con.execute(QUERIES["ks_drift"][1]).fetchall()
-        raw = con.execute(
-            "SELECT CAST(concat('0x', substr(md5('ks' || '|' ||"
-            " CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 2,"
-            " len(regexp_extract_all(lower(text), '[a-z0-9]+'))"
-            " FROM documents"
-        ).fetchall()
-        cnt: dict = {}
-        for b, v in raw:
-            key = int(v)
-            na, nb = cnt.get(key, (0, 0))
-            cnt[key] = (na + (b == 0), nb + (b == 1))
-        ta = sum(a for a, _ in cnt.values())
-        tb = sum(b for _, b in cnt.values())
-        assert ta > 0 and tb > 0
-        cum_a = cum_b = 0
-        exp = {}
-        for v in sorted(cnt):
-            na, nb = cnt[v]
-            cum_a, cum_b = cum_a + na, cum_b + nb
-            exp[v] = (na, nb, cum_a, cum_b, cum_a * tb - cum_b * ta)
-        kss = max(abs(d) for *_x, d in exp.values())
-        assert len(got) == len(exp)
-        n_argmax = 0
-        for row in got:
-            v, na, nb, ca, cb, cdf_a, cdf_b, adiff, is_ks, ks_stat = row
-            ena, enb, eca, ecb, edsc = exp[v]
-            assert (na, nb, ca, cb) == (ena, enb, eca, ecb), (sf, v, row)
-            for val in (cdf_a, cdf_b, adiff, ks_stat):
-                frac = abs(val * 1e6 - round(val * 1e6))
-                # 0 means the unrounded value was exactly representable at
-                # 6dp (e.g. 1.0, 0.5) — no tie-break ambiguity there
-                assert abs(frac - 0.5) > 1e-9, (sf, v, val)
-            assert cdf_a == round(eca / ta, 6), (sf, v)
-            assert cdf_b == round(ecb / tb, 6), (sf, v)
-            assert adiff == round(abs(edsc) / (ta * tb), 6), (sf, v)
-            assert ks_stat == round(kss / (ta * tb), 6), (sf, v)
-            assert is_ks == (1 if abs(edsc) == kss else 0), (sf, v)
-            n_argmax += is_ks
-        assert n_argmax >= 1
-        assert kss > 0, "KS vacuous: identical split distributions"
-
-
-def test_hll_merge_lossless_merge_theorem_and_bounds():
-    """Mergeable HLL (`hll_merge`): the merged-from-groups sketch must be
-    BYTE-IDENTICAL to the direct one-pass global sketch (register-wise max
-    is associative — the lossless-merge theorem), per-group registers must
-    pointwise lower-bound the global registers, and every estimate must be
-    within a loose 5*1.04/sqrt(m) relative error of its exact count."""
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        HLL_M,
-        HLL_MERGE_GROUPS,
-        _HLL_GLOBAL_ID,
-        _HLL_MERGED_ID,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    rows = {
-        r[0]: {"n_present": r[1], "regs": r[2], "est": r[3], "n_exact": r[4]}
-        for r in con.execute(QUERIES["hll_merge"][1]).fetchall()
-    }
-    assert set(rows) == set(range(HLL_MERGE_GROUPS)) | {
-        _HLL_MERGED_ID,
-        _HLL_GLOBAL_ID,
-    }
-    merged, glob = rows[_HLL_MERGED_ID], rows[_HLL_GLOBAL_ID]
-    assert merged == glob, (merged, glob)
-
-    def parse(regs):
-        return {
-            int(b): int(r)
-            for b, r in (kv.split(":") for kv in regs.split("|"))
-        }
-
-    gmap = parse(glob["regs"])
-    for g in range(HLL_MERGE_GROUPS):
-        for b, r in parse(rows[g]["regs"]).items():
-            assert r <= gmap[b], (g, b, r, gmap[b])
-    bound = 5 * 1.04 / (HLL_M ** 0.5)
-    for g, row in rows.items():
-        rel = abs(row["est"] - row["n_exact"]) / row["n_exact"]
-        assert rel < bound, (g, row, rel)
-
-
-def test_event_funnel_pure_python_replay_and_branches():
-    """Ordered conversion funnel (`event_funnel`): an independent
-    pure-Python replay — first signup, first click strictly after it
-    within the window, first purchase strictly after that click within
-    the window — must match the DuckDB oracle at sf0.001; all three
-    stages must be populated (the window constant was probed for this);
-    latencies must be positive and within the window."""
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        FUNNEL_STEPS,
-        FUNNEL_WINDOW_S,
-        QUERIES,
-    )
-
-    wu = FUNNEL_WINDOW_S * 1_000_000
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    got = {
-        r[0]: r[1:]
-        for r in con.execute(QUERIES["event_funnel"][1]).fetchall()
-    }
-    rows = con.execute(
-        "SELECT user_id, event_type, epoch_us(ts) FROM events"
-    ).fetchall()
-    by_user: dict = {}
-    for uid, etype, um in rows:
-        by_user.setdefault(uid, []).append((etype, um))
-
-    def first_after(evs, step, lo, hi):
-        cands = [um for et, um in evs if et == step and lo < um <= hi]
-        return min(cands) if cands else None
-
-    stages_seen = set()
-    assert set(got) == set(by_user)
-    for uid, evs in by_user.items():
-        t1 = min(
-            (um for et, um in evs if et == FUNNEL_STEPS[0]), default=None
-        )
-        t2 = (
-            first_after(evs, FUNNEL_STEPS[1], t1, t1 + wu)
-            if t1 is not None
-            else None
-        )
-        t3 = (
-            first_after(evs, FUNNEL_STEPS[2], t2, t2 + wu)
-            if t2 is not None
-            else None
-        )
-        stage = 3 if t3 else 2 if t2 else 1 if t1 else 0
-        stages_seen.add(stage)
-        m12 = t2 - t1 if t2 else None
-        m23 = t3 - t2 if t3 else None
-        assert got[uid] == (stage, t1, t2, t3, m12, m23), (uid, got[uid])
-        if m12 is not None:
-            assert 0 < m12 <= wu
-        if m23 is not None:
-            assert 0 < m23 <= wu
-    assert {1, 2, 3} <= stages_seen, stages_seen
-
-
-def test_pagerank_pure_python_replay_and_invariants():
-    """Domain link-graph PageRank (`pagerank`): an independent pure-Python
-    power iteration — same synthesized graph, same damping/teleport/
-    dangling-mass rules — must match the DuckDB oracle at sf0.001 to 6dp;
-    ranks must sum to 1; the dangling branch must provably fire (every
-    node % 7 == PR_DANGLE_MOD present in the graph has out_weight 0 and
-    dangling = 1); every rank clears its 6dp rounding boundary (the
-    cross-engine float-sum-order guard)."""
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        PR_DAMPING,
-        PR_DANGLE_MOD,
-        PR_ITERS,
-        PR_N_NODES,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    got = {
-        r[0]: (r[1], r[2], r[3], r[4])
-        for r in con.execute(QUERIES["pagerank"][1]).fetchall()
-    }
-
-    pairs = con.execute(
-        f"SELECT (CAST(substr(source, 4) AS BIGINT) % {PR_N_NODES}),"
-        f" ((CAST(substr(source, 4) AS BIGINT) * 7 + doc_id * 13 + 3)"
-        f" % {PR_N_NODES}) FROM documents"
-    ).fetchall()
-    nodes = sorted({s for s, _ in pairs} | {t for _, t in pairs})
-    w: dict = {}
-    for s, t in pairs:
-        if s != t and s % 7 != PR_DANGLE_MOD:
-            w[(s, t)] = w.get((s, t), 0) + 1
-    ow: dict = {}
-    for (s, _t), c in w.items():
-        ow[s] = ow.get(s, 0) + c
-    n = len(nodes)
-    r = {v: 1.0 / n for v in nodes}
-    for _ in range(PR_ITERS):
-        dm = sum(r[v] for v in nodes if v not in ow)
-        contrib = {v: 0.0 for v in nodes}
-        for (s, t), c in w.items():
-            contrib[t] += (c / ow[s]) * r[s]
-        r = {
-            v: (1.0 - PR_DAMPING) / n
-            + PR_DAMPING * (contrib[v] + dm / n)
-            for v in nodes
-        }
-    assert set(got) == set(nodes)
-    dangled = 0
-    for v in nodes:
-        out_weight, n_in, dangling, pr = got[v]
-        frac = abs(r[v] * 1e6 - round(r[v] * 1e6))
-        assert abs(frac - 0.5) > 1e-9, (v, r[v])
-        assert pr == round(r[v], 6), (v, pr, r[v])
-        assert out_weight == ow.get(v, 0), (v, out_weight)
-        assert dangling == (0 if v in ow else 1), (v, dangling)
-        if v % 7 == PR_DANGLE_MOD:
-            assert dangling == 1 and out_weight == 0, (v, got[v])
-            dangled += 1
-    assert dangled >= 2, "dangling branch vacuous: no planted dangler in graph"
-    assert abs(sum(r.values()) - 1.0) < 1e-9
-    assert abs(sum(p for _, _, _, p in got.values()) - 1.0) < 1e-4
 
 
 def test_template_lines_pure_python_replay_and_branches():
@@ -1773,211 +1389,6 @@ def test_template_lines_pure_python_replay_and_branches():
     assert set(per_dom.values()) == {2}, per_dom
 
 
-def test_zipf_fit_ground_truth_recovery_and_margins():
-    """Zipf fit (`zipf_fit`): the planted divisor-trick scope is an exact
-    power law (count(zw_j) = ceil(N/j)) and the estimator must recover
-    slope ~ -1 with r2 ~ 1; the near-uniform natural corpus must read as
-    non-Zipfian. A pure-Python OLS replay must agree to ~1e-9, and every
-    6dp-rounded output must clear the rounding boundary by a wide margin
-    (the event_transitions discipline)."""
-    import math
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        QUERIES,
-        ZIPF_PLANT_MAX,
-        ZIPF_TOP_K,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    n_docs = con.execute("SELECT count(*) FROM documents").fetchone()[0]
-    rows = con.execute(QUERIES["zipf_fit"][1]).fetchall()
-    assert rows
-    by_scope: dict = {}
-    for r in rows:
-        by_scope.setdefault(r[0], []).append(r)
-    assert set(by_scope) == {"corpus", "planted"}
-    # planted scope: exact ceil(N/j) counts, estimator recovers the law
-    planted = sorted(by_scope["planted"], key=lambda r: r[3])
-    assert len(planted) == ZIPF_PLANT_MAX
-    ids = set(range(n_docs))
-    for scope, token, n, rank, vocab, lnr, lnf, resid, slope, b, r2 in planted:
-        j = int(token[2:])
-        assert n == sum(1 for d in ids if d % j == 0), token
-        assert vocab == ZIPF_PLANT_MAX
-        assert -1.1 < slope < -0.9, slope
-        assert r2 > 0.99, r2
-    # corpus scope: near-uniform head -> the templated-corpus verdict
-    c = by_scope["corpus"][0]
-    assert c[8] > -0.5 and c[10] < 0.5, (c[8], c[10])
-    # pure-Python OLS replay + margin sweep per scope
-    for scope, entries in by_scope.items():
-        entries = sorted(entries, key=lambda r: r[3])
-        xs = [math.log(r[3]) for r in entries]
-        ys = [math.log(r[2]) for r in entries]
-        k = float(len(xs))
-        sx, sy = sum(xs), sum(ys)
-        sxx = sum(x * x for x in xs)
-        sxy = sum(x * y for x, y in zip(xs, ys))
-        syy = sum(y * y for y in ys)
-        slope = (k * sxy - sx * sy) / (k * sxx - sx * sx)
-        intercept = (sy - slope * sx) / k
-        r2 = (k * sxy - sx * sy) ** 2 / ((k * sxx - sx * sx) * (k * syy - sy * sy))
-        assert abs(entries[0][8] - slope) < 1e-6
-        assert abs(entries[0][9] - intercept) < 1e-6
-        assert abs(entries[0][10] - r2) < 1e-6
-        for r, x, y in zip(entries, xs, ys):
-            raw = [x, y, y - (intercept + slope * x), slope, intercept, r2]
-            for v in raw:
-                # distance of v*1e6 from the .5 rounding boundary within
-                # its unit interval (0 = exactly on the boundary)
-                frac = abs((v * 1e6) - math.floor(v * 1e6) - 0.5)
-                assert frac > 1e-4, (scope, r[1], v)
-    assert len(by_scope["corpus"]) <= ZIPF_TOP_K
-
-
-def test_hits_pure_python_replay_and_invariants():
-    """HITS (`hits`): an independent pure-Python alternating-update
-    replay — same synthesized graph as pagerank, L1 normalization — must
-    match the DuckDB oracle at sf0.001 to 6dp; hub and auth vectors each
-    sum to 1; pruned-out-edge (dangle-rule) nodes have hub 0 but can
-    still hold authority; every value clears its 6dp rounding boundary
-    (the cross-engine float-sum-order guard)."""
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        HITS_ITERS,
-        PR_DANGLE_MOD,
-        PR_N_NODES,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    got = {
-        r[0]: r[1:] for r in con.execute(QUERIES["hits"][1]).fetchall()
-    }
-    pairs = con.execute(
-        f"SELECT (CAST(substr(source, 4) AS BIGINT) % {PR_N_NODES}),"
-        f" ((CAST(substr(source, 4) AS BIGINT) * 7 + doc_id * 13 + 3)"
-        f" % {PR_N_NODES}) FROM documents"
-    ).fetchall()
-    nodes = sorted({s for s, _ in pairs} | {t for _, t in pairs})
-    w: dict = {}
-    for s, t in pairs:
-        if s != t and s % 7 != PR_DANGLE_MOD:
-            w[(s, t)] = w.get((s, t), 0) + 1
-    n = len(nodes)
-    a = {v: 1.0 / n for v in nodes}
-    h: dict = {}
-    for _ in range(HITS_ITERS):
-        h = {v: 0.0 for v in nodes}
-        for (s, t), c in w.items():
-            h[s] += float(c) * a[t]
-        hs = sum(h.values())
-        h = {v: x / hs for v, x in h.items()}
-        a = {v: 0.0 for v in nodes}
-        for (s, t), c in w.items():
-            a[t] += float(c) * h[s]
-        asum = sum(a.values())
-        a = {v: x / asum for v, x in a.items()}
-    assert set(got) == set(nodes)
-    pruned_with_auth = 0
-    for v in nodes:
-        n_out, out_w, n_in, in_w, hub, auth = got[v]
-        for val, exp in ((hub, h[v]), (auth, a[v])):
-            frac = abs(exp * 1e6 - round(exp * 1e6))
-            assert abs(frac - 0.5) > 1e-9, (v, exp)
-            assert val == round(exp, 6), (v, val, exp)
-        assert n_out == sum(1 for (s, _t) in w if s == v)
-        assert out_w == sum(c for (s, _t), c in w.items() if s == v)
-        assert in_w == sum(c for (_s, t), c in w.items() if t == v)
-        if v % 7 == PR_DANGLE_MOD:
-            assert hub == 0.0 and n_out == 0, (v, got[v])
-            if auth > 0:
-                pruned_with_auth += 1
-    assert pruned_with_auth >= 1, "hub/auth separation vacuous"
-    assert abs(sum(h.values()) - 1.0) < 1e-9
-    assert abs(sum(a.values()) - 1.0) < 1e-9
-
-
-def test_js_divergence_pure_python_replay_and_branches():
-    """JSD drift (`js_divergence`): a pure-Python replay of the
-    top-K + OTHER-bucket construction must match the DuckDB oracle at
-    sf0.001; JSD stays in [0, ln 2]; the planted 'jscommon' token makes
-    every odd source hit the p = 0 branch (n_present = JSD_TOP_K) and
-    gives odd sources strictly higher divergence than even ones; the
-    OTHER bucket carries mass on both sides; every rounded value clears
-    the 6dp boundary."""
-    import math
-    import re
-    from collections import Counter, defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import JSD_TOP_K, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, text FROM documents").fetchall()
-    cst: dict = defaultdict(Counter)
-    for source, text in raw:
-        t = text + (" jscommon" * 8 if int(source[3:]) % 2 == 0 else "")
-        cst[source].update(re.findall("[a-z0-9]+", t.lower()))
-    ct: Counter = Counter()
-    for c in cst.values():
-        ct.update(c)
-    t_tot = sum(ct.values())
-    topk = sorted(ct.items(), key=lambda kv: (-kv[1], kv[0]))[:JSD_TOP_K]
-    top_tokens = [tok for tok, _ in topk]
-    assert "jscommon" in top_tokens
-    top_gc = sum(gc for _, gc in topk)
-    rows = con.execute(QUERIES["js_divergence"][1]).fetchall()
-    assert len(rows) == len(cst)
-    jsd_by_parity: dict = {0: [], 1: []}
-    for source, n_tokens, n_present, klp_r, klq_r, jsd_r in rows:
-        ts = sum(cst[source].values())
-        assert n_tokens == ts
-        terms = [(tok, cst[source].get(tok, 0), gc) for tok, gc in topk]
-        terms.append(
-            ("~other", ts - sum(c for _, c, _ in terms), t_tot - top_gc)
-        )
-        terms.sort()
-        klp = klq = 0.0
-        for _tok, c, gc in terms:
-            p, q = c / ts, gc / t_tot
-            m = (p + q) / 2.0
-            if c > 0:
-                klp += p * math.log(p / m)
-            if gc > 0:
-                klq += q * math.log(q / m)
-        jsd = (klp + klq) / 2.0
-        for got, exp in ((klp_r, klp), (klq_r, klq), (jsd_r, jsd)):
-            frac = abs(exp * 1e6 - math.floor(exp * 1e6) - 0.5)
-            assert frac > 1e-4, (source, exp)
-            assert got == round(exp, 6), (source, got, exp)
-        assert 0.0 <= jsd_r <= math.log(2) + 1e-9
-        parity = int(source[3:]) % 2
-        assert n_present == (JSD_TOP_K + 1 if parity == 0 else JSD_TOP_K)
-        # OTHER bucket non-vacuous on both sides
-        other = terms[-1]
-        assert other[0] == "~other" and other[1] > 0 and other[2] > 0
-        jsd_by_parity[parity].append(jsd_r)
-    # planted drift: every odd source diverges more than every even one
-    assert max(jsd_by_parity[0]) < min(jsd_by_parity[1])
-
-
 def test_nfc_normalize_pure_python_replay_and_branches():
     """NFC normalization (`nfc_normalize`): a pure-Python unicodedata
     replay must match the DuckDB (utf8proc) oracle at sf0.001 — two
@@ -2023,383 +1434,6 @@ def test_nfc_normalize_pure_python_replay_and_branches():
     # the ogonek+acute case exercises canonical REORDERING, not just
     # composition: the raw mark order is non-canonical
     assert unicodedata.normalize("NFC", NFC_SNIPPETS[4]) != NFC_SNIPPETS[4]
-
-
-def test_lpa_communities_pure_python_replay_and_invariants():
-    """LPA (`lpa_communities`): an independent pure-Python synchronous
-    label propagation — same undirected weighted graph, same
-    max-vote/min-label tie-break — must match the DuckDB oracle at
-    sf0.001 EXACTLY (integer arithmetic end to end); labels must be
-    stable for one extra round (converged, not truncated mid-flight);
-    community sizes must sum to |nodes|; both the dominant community and
-    singleton self-label nodes must exist."""
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        LPA_ITERS,
-        PR_DANGLE_MOD,
-        PR_N_NODES,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    pairs = con.execute(
-        f"SELECT (CAST(substr(source, 4) AS BIGINT) % {PR_N_NODES}),"
-        f" ((CAST(substr(source, 4) AS BIGINT) * 7 + doc_id * 13 + 3)"
-        f" % {PR_N_NODES}) FROM documents"
-    ).fetchall()
-    nodes = sorted({s for s, _ in pairs} | {t for _, t in pairs})
-    w: dict = defaultdict(int)
-    for s, t in pairs:
-        if s != t and s % 7 != PR_DANGLE_MOD:
-            w[(s, t)] += 1
-    und: dict = defaultdict(int)
-    for (s, t), c in w.items():
-        und[(s, t)] += c
-        und[(t, s)] += c
-
-    def step(lab):
-        ws: dict = defaultdict(int)
-        for (u, v), c in und.items():
-            ws[(u, lab[v])] += c
-        new = {}
-        for nd in nodes:
-            cands = [(l, x) for (u, l), x in ws.items() if u == nd]
-            new[nd] = (
-                min(cands, key=lambda p: (-p[1], p[0]))[0] if cands else lab[nd]
-            )
-        return new
-
-    lab = {v: v for v in nodes}
-    for _ in range(LPA_ITERS):
-        lab = step(lab)
-    assert step(lab) == lab, "labels not converged after LPA_ITERS rounds"
-    sizes: dict = defaultdict(int)
-    for v in lab.values():
-        sizes[v] += 1
-    rows = con.execute(QUERIES["lpa_communities"][1]).fetchall()
-    assert len(rows) == len(nodes)
-    for node, community, csize, n_comms, own in rows:
-        assert community == lab[node], (node, community, lab[node])
-        assert csize == sizes[community]
-        assert n_comms == len(sizes)
-        assert own == (1 if community == node else 0)
-    assert sum(sizes.values()) == len(nodes)
-    assert max(sizes.values()) > 1 and min(sizes.values()) == 1, sizes
-
-
-def test_logreg_quality_pure_python_replay_and_margins():
-    """Distributed logistic regression (`logreg_quality`): an independent
-    pure-Python full-batch GD — same features, standardization, LR, L2
-    and iteration count — must reproduce the DuckDB oracle at sf0.001 to
-    6dp (weights, per-doc scores, standardized features); training must
-    reach 100% accuracy with the classes separated by a wide score gap;
-    the informative feature's weight must dominate the noise features;
-    every rounded value clears its 6dp boundary."""
-    import math
-    import re
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        LOGREG_ITERS,
-        LOGREG_L2,
-        LOGREG_LR,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute(
-        "SELECT doc_id, text FROM documents ORDER BY doc_id"
-    ).fetchall()
-    ids, Y, Xr = [], [], []
-    for d, t in raw:
-        y = 1 if d % 3 == 0 else 0
-        npos = (1 + (d // 3) % 2) if y else 0
-        toks = re.findall("[a-z0-9]+", t.lower())
-        ids.append(d)
-        Y.append(y)
-        Xr.append(
-            [
-                math.log(1.0 + npos),
-                math.log(1.0 + len(toks) + npos),
-                math.log(1.0 + len(set(toks)) + (1 if npos else 0)),
-            ]
-        )
-    n = float(len(Xr))
-    mu = [sum(r[j] for r in Xr) / n for j in range(3)]
-    sd = [
-        math.sqrt(sum((r[j] - mu[j]) ** 2 for r in Xr) / n) for j in range(3)
-    ]
-    Z = [[(r[j] - mu[j]) / sd[j] for j in range(3)] for r in Xr]
-    w = [0.0, 0.0, 0.0, 0.0]
-    for _ in range(LOGREG_ITERS):
-        g = [0.0] * 4
-        for z, y in zip(Z, Y):
-            p = 1.0 / (
-                1.0 + math.exp(-(w[0] + w[1] * z[0] + w[2] * z[1] + w[3] * z[2]))
-            )
-            g[0] += p - y
-            for j in range(3):
-                g[j + 1] += (p - y) * z[j]
-        w = [wj - LOGREG_LR * (gj / n + LOGREG_L2 * wj) for wj, gj in zip(w, g)]
-    exp_by_id = {}
-    for d, z, y in zip(ids, Z, Y):
-        p = 1.0 / (
-            1.0 + math.exp(-(w[0] + w[1] * z[0] + w[2] * z[1] + w[3] * z[2]))
-        )
-        exp_by_id[d] = (z, y, p)
-    rows = con.execute(QUERIES["logreg_quality"][1]).fetchall()
-    assert len(rows) == len(raw)
-    n_correct = 0
-    pos_scores, neg_scores = [], []
-    for doc_id, y, z1, z2, z3, score, pred, correct, w0, w1, w2, w3 in rows:
-        ze, ye, pe = exp_by_id[doc_id]
-        assert y == ye
-        for got, exp in (
-            (z1, ze[0]),
-            (z2, ze[1]),
-            (z3, ze[2]),
-            (score, pe),
-            (w0, w[0]),
-            (w1, w[1]),
-            (w2, w[2]),
-            (w3, w[3]),
-        ):
-            frac = abs(exp * 1e6 - math.floor(exp * 1e6) - 0.5)
-            assert frac > 1e-4, (doc_id, exp)
-            assert got == round(exp, 6), (doc_id, got, exp)
-        assert pred == (1 if pe > 0.5 else 0)
-        assert correct == (1 if pred == y else 0)
-        n_correct += correct
-        (pos_scores if y else neg_scores).append(score)
-    assert n_correct == len(rows), "training did not reach 100% accuracy"
-    assert max(neg_scores) < 0.5 < min(pos_scores)
-    # informative feature dominates the near-noise ones
-    assert w[1] > 5 * abs(w[2]) and w[1] > 5 * abs(w[3]), w
-    # 'posmark' is genuinely absent from the natural vocabulary (the
-    # arithmetic-append model of the plant is faithful)
-    assert not any("posmark" in t.lower() for _d, t in raw)
-
-
-def test_auc_eval_pair_counting_theorem_and_branches():
-    """AUC eval (`auc_eval`): the rank-sum AUC must equal brute-force
-    pair counting (concordant + half-credit ties over P*N — the
-    Mann-Whitney identity) EXACTLY; confusion cells must all be
-    populated and consistent with precision/recall/F1; cross-class tie
-    groups must exist (the average-rank branch is non-vacuous); every
-    group row's cum_before/avg_rank must replay."""
-    import hashlib
-
-    import duckdb
-
-    from htep_spark.driver_queries import AUC_THRESH, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    ids = [r[0] for r in con.execute("SELECT doc_id FROM documents").fetchall()]
-    pts = []
-    for d in ids:
-        y = 1 if d % 3 == 0 else 0
-        npos = (1 + (d // 3) % 2) if y else 0
-        h = int(hashlib.md5(f"auc|{d}".encode()).hexdigest()[:15], 16)
-        score = 30 * npos + h % 100
-        pts.append((score, y))
-    pos = [s for s, y in pts if y]
-    neg = [s for s, y in pts if not y]
-    conc = sum(1 for p in pos for q in neg if p > q)
-    ties = sum(1 for p in pos for q in neg if p == q)
-    auc_pairs = (conc + 0.5 * ties) / (len(pos) * len(neg))
-    rows = con.execute(QUERIES["auc_eval"][1]).fetchall()
-    assert rows
-    from collections import Counter
-
-    by_score = Counter(s for s, _ in pts)
-    pos_by_score = Counter(s for s, y in pts if y)
-    cross_ties = 0
-    for (
-        score, n, n_pos, cum_before, avg_rank, p, nn, tp, fp, fn, tn,
-        auc, prec, rec, f1,
-    ) in rows:
-        assert n == by_score[score] and n_pos == pos_by_score[score]
-        assert cum_before == sum(c for s, c in by_score.items() if s < score)
-        assert avg_rank == cum_before + (n + 1) / 2.0
-        assert auc == round(auc_pairs, 6), (auc, auc_pairs)
-        assert p == len(pos) and nn == len(neg)
-        exp_tp = sum(1 for s in pos if s >= AUC_THRESH)
-        exp_fp = sum(1 for s in neg if s >= AUC_THRESH)
-        assert (tp, fp, fn, tn) == (
-            exp_tp, exp_fp, len(pos) - exp_tp, len(neg) - exp_fp
-        )
-        assert min(tp, fp, fn, tn) > 0, "a confusion cell is vacuous"
-        pe, re_ = tp / (tp + fp), tp / (tp + fn)
-        assert prec == round(pe, 6) and rec == round(re_, 6)
-        assert f1 == round(2 * pe * re_ / (pe + re_), 6)
-        if 0 < n_pos < n:
-            cross_ties += 1
-    assert ties > 0 and cross_ties > 0, "tie branch vacuous"
-
-
-def test_kmeans_embed_pure_python_replay_and_margins():
-    """k-means (`kmeans_embed`): an independent pure-Python Lloyd run —
-    seeded-row init, (d2, cid) argmin tie-break, empty-cluster keep —
-    must match the DuckDB oracle at sf0.001 to 6dp; inertia must be
-    monotonically non-increasing across rounds (Lloyd's theorem); every
-    point's best-vs-second-best distance margin must dwarf the
-    centroid-mean reduce-order drift (the discrete-decision guard); all
-    rounded outputs clear their 6dp boundary."""
-    import math
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        KMEANS_ITERS,
-        KMEANS_K,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/embeddings.parquet')"
-    )
-    raw = con.execute(
-        "SELECT vec_id, label, embedding FROM embeddings ORDER BY vec_id"
-    ).fetchall()
-    V = {r[0]: [float(x) for x in r[2]] for r in raw}
-    labels = {r[0]: r[1] for r in raw}
-    cents = {i: V[i][:] for i in range(KMEANS_K)}
-
-    def assign(cs):
-        out = {}
-        for vid, v in V.items():
-            best = min(
-                (
-                    (sum((a - b) * (a - b) for a, b in zip(v, cs[c])), c)
-                    for c in cs
-                ),
-            )
-            out[vid] = best
-        return out
-
-    inertias = []
-    for _ in range(KMEANS_ITERS):
-        asg = assign(cents)
-        inertias.append(sum(d for d, _c in asg.values()))
-        newc = {}
-        for c in cents:
-            members = [V[vid] for vid, (_d, cc) in asg.items() if cc == c]
-            if members:
-                newc[c] = [
-                    sum(m[j] for m in members) / len(members)
-                    for j in range(len(V[0]))
-                ]
-            else:
-                newc[c] = cents[c]
-        cents = newc
-    fin = assign(cents)
-    inertias.append(sum(d for d, _c in fin.values()))
-    assert all(b <= a + 1e-9 for a, b in zip(inertias, inertias[1:])), inertias
-    sizes: dict = {}
-    for _d, c in fin.values():
-        sizes[c] = sizes.get(c, 0) + 1
-    inertia = inertias[-1]
-    rows = con.execute(QUERIES["kmeans_embed"][1]).fetchall()
-    assert len(rows) == len(V)
-    min_margin = float("inf")
-    for vec_id, label, cid, d2, csize, got_inertia in rows:
-        de, ce = fin[vec_id]
-        assert cid == ce, (vec_id, cid, ce)
-        assert label == labels[vec_id]
-        assert csize == sizes[ce]
-        for got, exp in ((d2, de), (got_inertia, inertia)):
-            frac = abs(exp * 1e6 - math.floor(exp * 1e6) - 0.5)
-            assert frac > 1e-4, (vec_id, exp)
-            assert got == round(exp, 6), (vec_id, got, exp)
-        dists = sorted(
-            sum((a - b) * (a - b) for a, b in zip(V[vec_id], cents[c]))
-            for c in cents
-        )
-        min_margin = min(min_margin, dists[1] - dists[0])
-    assert min_margin > 1e-6, min_margin
-    assert sum(sizes.values()) == len(V) and len(sizes) == KMEANS_K
-
-
-def test_silhouette_pure_python_replay_and_margins():
-    """Silhouette (`silhouette`): a pure-Python simplified-silhouette
-    replay over the same Lloyd centroids must match the DuckDB oracle at
-    sf0.001 to 6dp; s in [-1, 1]; the own-centroid must agree with the
-    kmeans assignment; every rounded value clears its boundary; s >= 0
-    ALWAYS for the simplified form (a converged assignment makes the own
-    centroid the argmin, so a <= b by construction) with a
-    non-degenerate spread."""
-    import math
-
-    import duckdb
-
-    from htep_spark.driver_queries import KMEANS_ITERS, KMEANS_K, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/embeddings.parquet')"
-    )
-    raw = con.execute(
-        "SELECT vec_id, embedding FROM embeddings ORDER BY vec_id"
-    ).fetchall()
-    V = {r[0]: [float(x) for x in r[1]] for r in raw}
-    cents = {i: V[i][:] for i in range(KMEANS_K)}
-    for _ in range(KMEANS_ITERS):
-        asg = {
-            vid: min(
-                (sum((a - b) * (a - b) for a, b in zip(v, cents[c])), c)
-                for c in cents
-            )[1]
-            for vid, v in V.items()
-        }
-        for c in cents:
-            mem = [V[vid] for vid, cc in asg.items() if cc == c]
-            if mem:
-                cents[c] = [
-                    sum(m[j] for m in mem) / len(mem) for j in range(len(V[0]))
-                ]
-    rows = con.execute(QUERIES["silhouette"][1]).fetchall()
-    assert len(rows) == len(V)
-    signs = set()
-    for vec_id, cid, a, b, sil, csize, cluster_sil, global_sil in rows:
-        ds = sorted(
-            (
-                math.sqrt(
-                    sum((x - y) * (x - y) for x, y in zip(V[vec_id], cents[c]))
-                ),
-                c,
-            )
-            for c in cents
-        )
-        ae, ce = ds[0]
-        be = min(d for d, c in ds if c != ce)
-        se = (be - ae) / max(ae, be)
-        assert cid == ce
-        for got, exp in ((a, ae), (b, be), (sil, se)):
-            frac = abs(exp * 1e6 - math.floor(exp * 1e6) - 0.5)
-            assert frac > 1e-4, (vec_id, exp)
-            assert got == round(exp, 6), (vec_id, got, exp)
-        assert 0.0 <= sil <= 1.0 + 1e-9  # a <= b for converged kmeans
-        signs.add(sil)
-    assert max(signs) - min(signs) > 0.05, "degenerate silhouette spread"
 
 
 def test_lm_kneser_ney_pure_python_replay_and_branches():
@@ -2491,3939 +1525,3 @@ def test_lm_kneser_ney_pure_python_replay_and_branches():
         for w2 in vocab
     )
     assert abs(total_p - 1.0) < 0.02, total_p
-
-
-def test_dp_release_pure_python_replay_and_mechanism():
-    """DP release (`dp_release`): a pure-Python replay of the clipped
-    aggregates and the seeded inverse-CDF Laplace mechanism must match
-    the DuckDB oracle at sf0.001 to 6dp; the clip branch is non-vacuous
-    in both directions (some docs clipped, some not); both noise signs
-    occur across sources; |noise| respects the discrete-grid bound
-    b*ln(2^20); epsilon accounting is the sequential composition of the
-    two releases; every rounded value clears its boundary."""
-    import hashlib
-    import math
-    import re
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        DP_CLIP,
-        DP_EPS_COUNT,
-        DP_EPS_SUM,
-        QUERIES,
-        _DP_GRID,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, text FROM documents").fetchall()
-    agg: dict = {}
-    any_clipped = any_unclipped = 0
-    for source, text in raw:
-        ntok = len(re.findall("[a-z0-9]+", text.lower()))
-        a = agg.setdefault(source, [0, 0, 0])
-        a[0] += 1
-        a[1] += min(ntok, DP_CLIP)
-        a[2] += 1 if ntok > DP_CLIP else 0
-        if ntok > DP_CLIP:
-            any_clipped += 1
-        else:
-            any_unclipped += 1
-    assert any_clipped > 0 and any_unclipped > 0, "clip branch vacuous"
-
-    def lap(salt, source, b):
-        h = int(
-            hashlib.md5(f"{salt}|{source}".encode()).hexdigest()[:15], 16
-        )
-        u = (h % _DP_GRID + 0.5) / _DP_GRID
-        s = 1.0 if u >= 0.5 else -1.0
-        return -b * s * math.log(1.0 - 2.0 * abs(u - 0.5))
-
-    b1, b2 = 1.0 / DP_EPS_COUNT, DP_CLIP / DP_EPS_SUM
-    rows = con.execute(QUERIES["dp_release"][1]).fetchall()
-    assert len(rows) == len(agg)
-    signs = set()
-    for (
-        source, n_docs, clip_sum, n_clipped, noisy_count, noisy_sum,
-        bc, bs, eps,
-    ) in rows:
-        n, cs, nc = agg[source]
-        assert (n_docs, clip_sum, n_clipped) == (n, cs, nc)
-        l1, l2 = lap("dpc", source, b1), lap("dps", source, b2)
-        for got, exp in ((noisy_count, n + l1), (noisy_sum, cs + l2)):
-            frac = abs(exp * 1e6 - math.floor(exp * 1e6) - 0.5)
-            assert frac > 1e-4, (source, exp)
-            assert got == round(exp, 6), (source, got, exp)
-        assert abs(l1) <= b1 * math.log(_DP_GRID) + 1e-9
-        assert abs(l2) <= b2 * math.log(_DP_GRID) + 1e-9
-        signs.add(l1 > 0)
-        assert (bc, bs) == (b1, b2)
-        assert eps == DP_EPS_COUNT + DP_EPS_SUM
-    assert signs == {True, False}, "noise never changed sign"
-
-
-def test_chi2_select_ground_truth_and_replay():
-    """Chi-squared selection (`chi2_select`): a pure-Python replay of the
-    2x2 contingency tables must match the DuckDB oracle at sf0.001; the
-    planted 'posmark' token must rank 1 with a chi2 equal to N (perfect
-    class separation on presence); natural tokens must sit far below;
-    contingency rows must be internally consistent (a+c = n_pos,
-    b+d = n_neg); every rounded chi2 clears its boundary."""
-    import math
-    import re
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT doc_id, text FROM documents").fetchall()
-    pres: dict = defaultdict(lambda: [0, 0])
-    n_pos = n_neg = 0
-    for d, t in raw:
-        y = 1 if d % 3 == 0 else 0
-        n_pos += y
-        n_neg += 1 - y
-        toks = set(re.findall("[a-z0-9]+", t.lower()))
-        if y:
-            toks.add("posmark")
-        for tk in toks:
-            pres[tk][0 if y else 1] += 1
-    n = n_pos + n_neg
-    exp = {}
-    for tk, (a, b) in pres.items():
-        c, dd = n_pos - a, n_neg - b
-        det = a * dd - b * c
-        chi2 = (n * det * det) / ((a + b) * (c + dd) * (a + c) * (b + dd))
-        exp[tk] = (a, b, c, dd, chi2)
-    order = sorted(exp.items(), key=lambda kv: (-round(kv[1][4], 6), kv[0]))
-    exp_rank = {tk: i + 1 for i, (tk, _v) in enumerate(order)}
-    rows = con.execute(QUERIES["chi2_select"][1]).fetchall()
-    assert len(rows) == len(exp)
-    for token, a, b, c, d, chi2, rank in rows:
-        ea, eb, ec, ed, echi = exp[token]
-        assert (a, b, c, d) == (ea, eb, ec, ed), token
-        assert a + c == n_pos and b + d == n_neg
-        frac = abs(echi * 1e6 - math.floor(echi * 1e6) - 0.5)
-        assert frac > 1e-4, (token, echi)
-        assert chi2 == round(echi, 6), (token, chi2, echi)
-        assert rank == exp_rank[token], (token, rank)
-        if token == "posmark":
-            # perfect presence separation: A = n_pos, B = 0 -> chi2 = N
-            assert rank == 1 and (a, b) == (n_pos, 0)
-            assert chi2 == float(n)
-        else:
-            assert chi2 < n / 4, (token, chi2)
-
-
-def test_conformal_pure_python_replay_and_coverage():
-    """Split conformal (`conformal`): a pure-Python replay — the full GD
-    scorer, md5 calibration split, exact-rank threshold — must match the
-    DuckDB oracle at sf0.001; realized coverage must sit near the 1-alpha
-    guarantee (the marginal theorem allows small one-split dips); the
-    abstain branch (set_size 0) must fire; set_size 2 is structurally
-    absent exactly when the threshold < 0.5 (sharp classifier) — assert
-    that implication rather than its vacuous absence."""
-    import hashlib
-    import math
-    import re
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        CONFORMAL_ALPHA,
-        CONFORMAL_SALT,
-        LOGREG_ITERS,
-        LOGREG_L2,
-        LOGREG_LR,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute(
-        "SELECT doc_id, text FROM documents ORDER BY doc_id"
-    ).fetchall()
-    ids, Y, Xr = [], [], []
-    for d, t in raw:
-        y = 1 if d % 3 == 0 else 0
-        npos = (1 + (d // 3) % 2) if y else 0
-        toks = re.findall("[a-z0-9]+", t.lower())
-        ids.append(d)
-        Y.append(y)
-        Xr.append(
-            [
-                math.log(1.0 + npos),
-                math.log(1.0 + len(toks) + npos),
-                math.log(1.0 + len(set(toks)) + (1 if npos else 0)),
-            ]
-        )
-    n = float(len(Xr))
-    mu = [sum(r[j] for r in Xr) / n for j in range(3)]
-    sd = [
-        math.sqrt(sum((r[j] - mu[j]) ** 2 for r in Xr) / n) for j in range(3)
-    ]
-    Z = [[(r[j] - mu[j]) / sd[j] for j in range(3)] for r in Xr]
-    w = [0.0] * 4
-    for _ in range(LOGREG_ITERS):
-        g = [0.0] * 4
-        for z, y in zip(Z, Y):
-            pp = 1.0 / (
-                1.0 + math.exp(-(w[0] + w[1] * z[0] + w[2] * z[1] + w[3] * z[2]))
-            )
-            g[0] += pp - y
-            for j in range(3):
-                g[j + 1] += (pp - y) * z[j]
-        w = [wj - LOGREG_LR * (gj / n + LOGREG_L2 * wj) for wj, gj in zip(w, g)]
-    P = {
-        d: 1.0
-        / (1.0 + math.exp(-(w[0] + w[1] * z[0] + w[2] * z[1] + w[3] * z[2])))
-        for d, z in zip(ids, Z)
-    }
-
-    def half(d):
-        h = int(
-            hashlib.md5(f"{CONFORMAL_SALT}|{d}".encode()).hexdigest()[:15], 16
-        )
-        return h % 2
-
-    nc = {
-        d: round(1.0 - P[d] if y == 1 else P[d], 6)
-        for d, y in zip(ids, Y)
-    }
-    cal = sorted((nc[d], d) for d in ids if half(d) == 0)
-    k = math.ceil((len(cal) + 1) * (1.0 - CONFORMAL_ALPHA))
-    t = cal[k - 1][0]
-    rows = con.execute(QUERIES["conformal"][1]).fetchall()
-    test_ids = [d for d in ids if half(d) == 1]
-    assert len(rows) == len(test_ids)
-    covered = 0
-    sizes = set()
-    for doc_id, y, score, nonconf, ip, ineg, size, cov, thr, n_cal in rows:
-        assert half(doc_id) == 1
-        assert thr == t and n_cal == len(cal)
-        assert score == round(P[doc_id], 6)
-        assert nonconf == nc[doc_id]
-        eip = 1 if round(1.0 - P[doc_id], 6) <= t else 0
-        ein = 1 if round(P[doc_id], 6) <= t else 0
-        assert (ip, ineg, size) == (eip, ein, eip + ein)
-        assert cov == (1 if nc[doc_id] <= t else 0)
-        covered += cov
-        sizes.add(size)
-    cov_rate = covered / len(rows)
-    assert cov_rate >= 1.0 - CONFORMAL_ALPHA - 0.05, cov_rate
-    assert 0 in sizes and 1 in sizes, sizes
-    # size-2 sets require t >= 0.5; with this sharp scorer t < 0.5, so
-    # their absence is the theorem, not a vacuous branch
-    if t < 0.5:
-        assert 2 not in sizes
-    else:
-        assert 2 in sizes
-
-
-def test_bootstrap_ci_pure_python_replay_and_statistics():
-    """Poisson bootstrap (`bootstrap_ci`): a pure-Python replay of the
-    seeded Poisson(1) weights and replicate means must match the DuckDB
-    oracle at sf0.001 exactly (integer weighted sums); the CI must
-    contain the point estimate; the CI width must agree with the CLT
-    prediction 2*z*sd/sqrt(n) within 2x either way (the bootstrap is
-    estimating exactly that); weights must realize values {0,1,2,3+}
-    (the inverse-CDF branches are non-vacuous); replicate weight totals
-    must concentrate near n."""
-    import hashlib
-    import math
-    import re
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        BOOT_ALPHA,
-        BOOT_B,
-        QUERIES,
-        _DP_GRID,
-        _POIS_CDF,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT doc_id, text FROM documents").fetchall()
-    xs = {
-        d: len(re.findall("[a-z0-9]+", t.lower())) for d, t in raw
-    }
-
-    def weight(b, d):
-        h = int(
-            hashlib.md5(f"boot|{b}|{d}".encode()).hexdigest()[:15], 16
-        )
-        u = (h % _DP_GRID + 0.5) / _DP_GRID
-        for k, c in enumerate(_POIS_CDF):
-            if u < c:
-                return k
-        return 8
-
-    seen_w = set()
-    exp = {}
-    for b in range(BOOT_B):
-        swx = sw = 0
-        for d, x in xs.items():
-            w = weight(b, d)
-            seen_w.add(min(w, 3))
-            swx += w * x
-            sw += w
-        exp[b] = (swx, sw, swx / sw)
-    assert seen_w == {0, 1, 2, 3}, seen_w
-    means = sorted(
-        (m, b) for b, (_s, _w, m) in exp.items()
-    )
-    lo = means[math.ceil(BOOT_ALPHA / 2 * BOOT_B) - 1][0]
-    hi = means[math.ceil((1 - BOOT_ALPHA / 2) * BOOT_B) - 1][0]
-    n = len(xs)
-    point = sum(xs.values()) / n
-    rows = con.execute(QUERIES["bootstrap_ci"][1]).fetchall()
-    assert len(rows) == BOOT_B
-    for b, swx, sw, mean_b, pt, ci_lo, ci_hi, nn in rows:
-        es, ew, em = exp[b]
-        assert (swx, sw) == (es, ew), b
-        assert mean_b == round(em, 6)
-        assert pt == round(point, 6) and nn == n
-        assert ci_lo == round(lo, 6) and ci_hi == round(hi, 6)
-        # Poisson(1) totals concentrate: sd = sqrt(n) -> 5 sigma band
-        assert abs(sw - n) < 5 * math.sqrt(n), (b, sw)
-    assert lo <= point <= hi
-    mu = point
-    sd = math.sqrt(sum((x - mu) ** 2 for x in xs.values()) / n)
-    clt_half = 1.959963984540054 * sd / math.sqrt(n)
-    boot_half = (hi - lo) / 2
-    assert clt_half / 2 < boot_half < clt_half * 2, (boot_half, clt_half)
-
-
-def test_cuped_ab_pure_python_replay_and_theorems():
-    """CUPED A/B (`cuped_ab`): a pure-Python replay of the moment-sum
-    pipeline must match the DuckDB oracle at sf0.001; the adjusted
-    estimate must sit closer to the planted +5 lift than the raw one OR
-    within 1 token of it; the variance ratio must equal 1 - rho^2 of the
-    pooled covariate-metric correlation (the CUPED theorem, within the
-    two-arm approximation); t_adj must dwarf t_raw; every rounded value
-    clears its 6dp boundary."""
-    import hashlib
-    import math
-    import re
-
-    import duckdb
-
-    from htep_spark.driver_queries import CUPED_EFFECT, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute(
-        "SELECT doc_id, text, n_chars FROM documents"
-    ).fetchall()
-    arms: dict = {0: [], 1: []}
-    for d, t, nch in raw:
-        h = int(hashlib.md5(f"ab|{d}".encode()).hexdigest()[:15], 16)
-        arm = h % 2
-        y = len(re.findall("[a-z0-9]+", t.lower())) + (
-            CUPED_EFFECT if arm == 1 else 0
-        )
-        arms[arm].append((y, nch))
-    sums = {}
-    for a, rows_ in arms.items():
-        n = len(rows_)
-        sy = sum(y for y, _x in rows_)
-        syy = sum(y * y for y, _x in rows_)
-        sx = sum(x for _y, x in rows_)
-        sxx = sum(x * x for _y, x in rows_)
-        sxy = sum(x * y for y, x in rows_)
-        sums[a] = (n, sy, syy, sx, sxx, sxy)
-    tn = sum(s[0] for s in sums.values())
-    tsy = sum(s[1] for s in sums.values())
-    tsx = sum(s[3] for s in sums.values())
-    tsxx = sum(s[4] for s in sums.values())
-    tsxy = sum(s[5] for s in sums.values())
-    mx = tsx / tn
-    theta = (tsxy - tsx * tsy / tn) / (tsxx - tsx * tsx / tn)
-    stats = {}
-    for a, (n, sy, syy, sx, sxx, sxy) in sums.items():
-        my, mxa = sy / n, sx / n
-        vy = (syy - n * (sy / n) * (sy / n)) / (n - 1.0)
-        vx = (sxx - n * (sx / n) * (sx / n)) / (n - 1.0)
-        cxy = (sxy - n * (sx / n) * (sy / n)) / (n - 1.0)
-        madj = my - theta * (mxa - mx)
-        vadj = vy - 2.0 * theta * cxy + theta * theta * vx
-        stats[a] = (n, my, mxa, vy, madj, vadj)
-    d_raw = stats[1][1] - stats[0][1]
-    t_raw = d_raw / math.sqrt(
-        stats[1][3] / stats[1][0] + stats[0][3] / stats[0][0]
-    )
-    d_adj = stats[1][4] - stats[0][4]
-    t_adj = d_adj / math.sqrt(
-        stats[1][5] / stats[1][0] + stats[0][5] / stats[0][0]
-    )
-    vr = (
-        stats[1][5] / stats[1][0] + stats[0][5] / stats[0][0]
-    ) / (stats[1][3] / stats[1][0] + stats[0][3] / stats[0][0])
-    rows = con.execute(QUERIES["cuped_ab"][1]).fetchall()
-    assert len(rows) == 2
-    for (
-        arm, n, mean_y, mean_x, var_y, mean_adj, var_adj, th,
-        diff_raw, tr, diff_adj, ta, var_ratio,
-    ) in rows:
-        en, emy, emx, evy, ema, eva = stats[arm]
-        for got, exp in (
-            (mean_y, emy), (mean_x, emx), (var_y, evy),
-            (mean_adj, ema), (var_adj, eva), (th, theta),
-            (diff_raw, d_raw), (tr, t_raw), (diff_adj, d_adj),
-            (ta, t_adj), (var_ratio, vr),
-        ):
-            frac = abs(exp * 1e6 - math.floor(exp * 1e6) - 0.5)
-            assert frac > 1e-4, (arm, exp)
-            assert got == round(exp, 6), (arm, got, exp)
-        assert n == en
-    # theorems: adjusted estimate near the planted lift, massive
-    # variance reduction on a near-perfectly-correlated covariate,
-    # var_ratio ~ 1 - rho^2 pooled
-    assert abs(d_adj - CUPED_EFFECT) < 1.0, d_adj
-    assert t_adj > 4 * abs(t_raw), (t_adj, t_raw)
-    rho2 = (tsxy - tsx * tsy / tn) ** 2 / (
-        (tsxx - tsx * tsx / tn) * (sum(s[2] for s in sums.values())
-                                   - tsy * tsy / tn)
-    )
-    assert abs(vr - (1 - rho2)) < 0.05, (vr, 1 - rho2)
-
-
-def test_holt_forecast_pure_python_replay_and_branches():
-    """Holt forecast (`holt_forecast`): a pure-Python double-exponential
-    replay over the same dense hourly grid must match the DuckDB oracle
-    at sf0.001 to 6dp (states, fitted values, SSE, forecast fan); the
-    zero-fill branch fires (sf0.001 has missing hours); forecasts are
-    exactly linear in the horizon; t=1 has NULL fitted/resid."""
-    import datetime as dt
-    import math
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        HOLT_ALPHA,
-        HOLT_BETA,
-        HOLT_H,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    ts = [r[0] for r in con.execute("SELECT ts FROM events").fetchall()]
-    floor = lambda t: t.replace(minute=0, second=0, microsecond=0)
-    h0, h1 = floor(min(ts)), floor(max(ts))
-    grid = []
-    h = h0
-    while h <= h1:
-        grid.append(h)
-        h += dt.timedelta(hours=1)
-    from collections import Counter
-
-    cnt = Counter(floor(t) for t in ts)
-    ys = [float(cnt.get(h, 0)) for h in grid]
-    assert sum(1 for y in ys if y == 0) > 0, "zero-fill branch vacuous"
-    a, b_ = HOLT_ALPHA, HOLT_BETA
-    l, b = ys[0], ys[1] - ys[0]
-    fits = [None]
-    sse = 0.0
-    for y in ys[1:]:
-        fit = l + b
-        fits.append(fit)
-        sse += (y - fit) * (y - fit)
-        nl = a * y + (1 - a) * (l + b)
-        b = b_ * (nl - l) + (1 - b_) * b
-        l = nl
-    rows = con.execute(QUERIES["holt_forecast"][1]).fetchall()
-    assert len(rows) == len(grid)
-    for row in rows:
-        t_idx, epoch, y, fitted, resid, lf, bf, got_sse = row[:8]
-        fcs = row[8:]
-        i = t_idx - 1
-        assert y == int(ys[i])
-        assert epoch == int(grid[i].replace(tzinfo=dt.timezone.utc).timestamp())
-        if i == 0:
-            assert fitted is None and resid is None
-        else:
-            # no margin sweep here: the smoother is pure +/-/* rational
-            # arithmetic executed in pinned order, so both engines (and
-            # this replay) hold bit-identical doubles — equality of the
-            # rounded values is the whole contract, even when a state
-            # lands near a .5e-6 boundary (observed at t=7)
-            for got, exp in ((fitted, fits[i]), (resid, ys[i] - fits[i])):
-                assert got == round(exp, 6), (i, got, exp)
-        for got, exp in ((lf, l), (bf, b), (got_sse, sse)):
-            assert got == round(exp, 6), (got, exp)
-        assert len(fcs) == HOLT_H
-        for hh, fc in enumerate(fcs, start=1):
-            assert fc == round(l + float(hh) * b, 6)
-        # linear fan: second differences vanish
-        for j in range(2, HOLT_H):
-            assert abs((fcs[j] - fcs[j - 1]) - (fcs[1] - fcs[0])) < 1e-5
-
-
-def test_seasonal_mase_pure_python_replay():
-    """Seasonal MASE (`seasonal_mase`): a pure-Python replay of the
-    dense per-type grid, 24h seasonal-naive errors and the train/test
-    split must match the DuckDB oracle at sf0.001; every type's counts
-    are consistent (n_train + n_test = hours - season); MASE is the
-    exact ratio of the integer MAE sums; zero-filled hours exist."""
-    import datetime as dt
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        MASE_SEASON,
-        MASE_TEST_H,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute("SELECT event_type, ts FROM events").fetchall()
-    floor = lambda t: t.replace(minute=0, second=0, microsecond=0)
-    all_ts = [t for _e, t in raw]
-    h0, h1 = floor(min(all_ts)), floor(max(all_ts))
-    grid = []
-    h = h0
-    while h <= h1:
-        grid.append(h)
-        h += dt.timedelta(hours=1)
-    types = sorted({e for e, _t in raw})
-    cnt = Counter((e, floor(t)) for e, t in raw)
-    rows = con.execute(QUERIES["seasonal_mase"][1]).fetchall()
-    assert {r[0] for r in rows} == set(types)
-    zero_seen = False
-    for event_type, n_train, n_test, sae_tr, sae_te, mtr, mte, mase in rows:
-        ys = [cnt.get((event_type, h), 0) for h in grid]
-        zero_seen = zero_seen or any(y == 0 for y in ys)
-        aes = [
-            abs(ys[i] - ys[i - MASE_SEASON])
-            for i in range(MASE_SEASON, len(ys))
-        ]
-        n = len(ys)
-        test_from = n - MASE_TEST_H  # 0-based idx >= this -> test
-        tr = [
-            ae
-            for i, ae in zip(range(MASE_SEASON, n), aes)
-            if i < test_from
-        ]
-        te = [
-            ae
-            for i, ae in zip(range(MASE_SEASON, n), aes)
-            if i >= test_from
-        ]
-        assert (n_train, n_test) == (len(tr), len(te))
-        assert n_train + n_test == len(grid) - MASE_SEASON
-        assert (sae_tr, sae_te) == (sum(tr), sum(te))
-        emtr = sum(tr) / len(tr)
-        emte = sum(te) / len(te)
-        assert mtr == round(emtr, 6) and mte == round(emte, 6)
-        assert mase == round(emte / emtr, 6)
-        assert mase > 0
-    assert zero_seen, "zero-fill branch vacuous"
-
-
-def test_bleu_eval_pure_python_replay_and_branches():
-    """BLEU (`bleu_eval`): an independent pure-Python BLEU-4 — clipping,
-    geometric mean, brevity penalty, per-doc zero rule, pooled corpus
-    aggregation — must match the DuckDB oracle at sf0.001 to 6dp;
-    verbatim docs score exactly 1.0, corrupted docs strictly less with
-    p1 > p2 > p3 > p4 in the pooled precisions; the brevity penalty is
-    active (< 1, deletions shorten candidates); margins on the
-    transcendental-path values."""
-    import math
-    import re
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import BLEU_MAX_N, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT doc_id, text FROM documents").fetchall()
-    per = {}
-    T = {f"tm{n}": 0 for n in range(1, BLEU_MAX_N + 1)}
-    T.update({f"tc{n}": 0 for n in range(1, BLEU_MAX_N + 1)})
-    tc = tr = 0
-    for d, t in raw:
-        r = re.findall("[a-z0-9]+", t.lower())
-        if d % 5 == 0:
-            c = list(r)
-        else:
-            c = []
-            for i, tok in enumerate(r):
-                if i % 7 == 6:
-                    continue
-                c.append(f"xerr{i % 3}" if i % 11 == 10 else tok)
-        ms, cs = [], []
-        for n in range(1, BLEU_MAX_N + 1):
-            cg = Counter(
-                " ".join(c[j : j + n]) for j in range(len(c) - n + 1)
-            )
-            rg = Counter(
-                " ".join(r[j : j + n]) for j in range(len(r) - n + 1)
-            )
-            m = sum(min(cnt, rg.get(g, 0)) for g, cnt in cg.items())
-            ms.append(m)
-            cs.append(sum(cg.values()))
-            T[f"tm{n}"] += m
-            T[f"tc{n}"] += sum(cg.values())
-        tc += len(c)
-        tr += len(r)
-        if any(m == 0 for m in ms):
-            bleu = 0.0
-        else:
-            bp = (
-                1.0
-                if len(c) >= len(r)
-                else math.exp(1.0 - len(r) / len(c))
-            )
-            bleu = bp * math.exp(
-                sum(math.log(m / cc) for m, cc in zip(ms, cs)) / BLEU_MAX_N
-            )
-        per[d] = (len(c), len(r), ms, cs, bleu)
-    bp_c = 1.0 if tc >= tr else math.exp(1.0 - tr / tc)
-    bleu_c = bp_c * math.exp(
-        sum(
-            math.log(T[f"tm{n}"] / T[f"tc{n}"])
-            for n in range(1, BLEU_MAX_N + 1)
-        )
-        / BLEU_MAX_N
-    )
-    ps = [T[f"tm{n}"] / T[f"tc{n}"] for n in range(1, BLEU_MAX_N + 1)]
-    assert ps[0] > ps[1] > ps[2] > ps[3]
-    assert bp_c < 1.0
-    rows = con.execute(QUERIES["bleu_eval"][1]).fetchall()
-    assert len(rows) == len(per)
-    for row in rows:
-        d, cand_len, ref_len = row[0], row[1], row[2]
-        ms = row[3 : 3 + BLEU_MAX_N]
-        cs = row[3 + BLEU_MAX_N : 3 + 2 * BLEU_MAX_N]
-        bleu_doc = row[3 + 2 * BLEU_MAX_N]
-        pvals = row[4 + 2 * BLEU_MAX_N : 4 + 3 * BLEU_MAX_N]
-        bp_corpus, bleu_corpus = row[-2], row[-1]
-        ecl, erl, ems, ecs, ebleu = per[d]
-        assert (cand_len, ref_len) == (ecl, erl)
-        assert list(ms) == ems and list(cs) == ecs
-        for got, exp in [
-            (bleu_doc, ebleu),
-            (bp_corpus, bp_c),
-            (bleu_corpus, bleu_c),
-        ] + list(zip(pvals, ps)):
-            if exp not in (0.0, 1.0):
-                frac = abs(exp * 1e6 - math.floor(exp * 1e6) - 0.5)
-                assert frac > 1e-4, (d, exp)
-            assert got == round(exp, 6), (d, got, exp)
-        if d % 5 == 0:
-            assert bleu_doc == 1.0
-        else:
-            assert bleu_doc < 1.0
-
-
-def test_spearman_corr_pure_python_replay_and_branches():
-    """Spearman (`spearman_corr`): a pure-Python tie-averaged-rank
-    replay (scipy-free) must match the DuckDB oracle at sf0.001 EXACTLY
-    (all arithmetic is sums of exact halves); the monotone pair reads
-    rho > 0.95, the noise pair |rho| < 0.15; ties genuinely exist on
-    every ranked variable (the average-rank branch is non-vacuous)."""
-    import hashlib
-    import math
-    import re
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute(
-        "SELECT doc_id, n_chars, text FROM documents"
-    ).fetchall()
-    data = []
-    for d, nch, t in raw:
-        h = int(hashlib.md5(f"sp|{d}".encode()).hexdigest()[:15], 16)
-        data.append(
-            (nch, h % 1000, len(re.findall("[a-z0-9]+", t.lower())))
-        )
-
-    def avg_ranks(vals):
-        cnt = Counter(vals)
-        cum, start = {}, 0
-        for v in sorted(cnt):
-            cum[v] = start + (cnt[v] + 1) / 2.0
-            start += cnt[v]
-        return [cum[v] for v in vals], max(cnt.values())
-
-    rxc, tie_xc = avg_ranks([r[0] for r in data])
-    rxn, tie_xn = avg_ranks([r[1] for r in data])
-    ry, tie_y = avg_ranks([r[2] for r in data])
-    assert min(tie_xc, tie_xn, tie_y) >= 2, "tie branch vacuous"
-
-    def pearson(xs, ys):
-        n = float(len(xs))
-        sx, sy = sum(xs), sum(ys)
-        sxx = sum(x * x for x in xs)
-        syy = sum(y * y for y in ys)
-        sxy = sum(x * y for x, y in zip(xs, ys))
-        return (sxy - sx * sy / n) / math.sqrt(
-            (sxx - sx * sx / n) * (syy - sy * sy / n)
-        )
-
-    exp = {
-        "chars_tokens": pearson(rxc, ry),
-        "noise_tokens": pearson(rxn, ry),
-    }
-    rows = con.execute(QUERIES["spearman_corr"][1]).fetchall()
-    assert {r[0] for r in rows} == set(exp)
-    for pair, n, rho in rows:
-        assert n == len(data)
-        assert rho == round(exp[pair], 6), (pair, rho, exp[pair])
-    assert exp["chars_tokens"] > 0.95
-    assert abs(exp["noise_tokens"]) < 0.15
-
-
-def test_gini_lorenz_pure_python_replay_and_theorems():
-    """Gini/Lorenz (`gini_lorenz`): a pure-Python replay of the discrete
-    Gini formula and Lorenz prefix shares must match the DuckDB oracle
-    at sf0.001 EXACTLY (all-integer sums); Gini in [0, 1); the Lorenz
-    curve is convex-below-diagonal (cum_share <= pop_share at every
-    rank, with strict inequality somewhere unless uniform); the final
-    cum_share is exactly 1."""
-    import re
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT text FROM documents").fetchall()
-    cnt: Counter = Counter()
-    for (t,) in raw:
-        cnt.update(re.findall("[a-z0-9]+", t.lower()))
-    ordered = sorted(cnt.items(), key=lambda kv: (kv[1], kv[0]))
-    n = len(ordered)
-    tc = sum(c for _t, c in ordered)
-    trc = sum((i + 1) * c for i, (_t, c) in enumerate(ordered))
-    gini = 2.0 * trc / (n * tc) - (n + 1.0) / n
-    rows = con.execute(QUERIES["gini_lorenz"][1]).fetchall()
-    assert len(rows) == n
-    strict = False
-    cum = 0
-    exp_by_rank = {}
-    for i, (tok, c) in enumerate(ordered):
-        cum += c
-        exp_by_rank[i + 1] = (tok, c, cum)
-    for token, c, rank, vocab, cum_share, pop_share, g in rows:
-        et, ec, ecum = exp_by_rank[rank]
-        assert (token, c) == (et, ec)
-        assert vocab == n
-        assert cum_share == round(ecum / tc, 6)
-        assert pop_share == round(rank / n, 6)
-        assert g == round(gini, 6)
-        assert cum_share <= pop_share + 1e-9
-        strict = strict or cum_share < pop_share - 1e-9
-        if rank == n:
-            assert cum_share == 1.0
-    assert 0.0 <= gini < 1.0
-    assert strict, "Lorenz curve degenerate (perfectly uniform corpus)"
-
-
-def test_rbo_topk_pure_python_replay_and_properties():
-    """RBO (`rbo_topk`): a brute-force prefix-overlap replay — actual
-    depth-d set intersections, not the max-rank cumsum trick — must
-    match the DuckDB oracle at sf0.001 (the trick's correctness proof);
-    RBO in [0, 1]; X_d is monotone with X_k = n_matched; on this
-    near-uniform corpus set-Jaccard exceeds top-weighted RBO (the
-    rank-instability signal RBO exists to catch); margins on the
-    geometric-weight path."""
-    import hashlib
-    import math
-    import re
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES, RBO_K, RBO_P
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT doc_id, text FROM documents").fetchall()
-    halves = {0: Counter(), 1: Counter()}
-    for d, t in raw:
-        h = int(hashlib.md5(f"ks|{d}".encode()).hexdigest()[:15], 16) % 2
-        halves[h].update(re.findall("[a-z0-9]+", t.lower()))
-    tops = {
-        b: [
-            tok
-            for tok, _c in sorted(
-                halves[b].items(), key=lambda kv: (-kv[1], kv[0])
-            )[:RBO_K]
-        ]
-        for b in (0, 1)
-    }
-    xs, rbo = {}, 0.0
-    for d in range(1, RBO_K + 1):
-        x = len(set(tops[0][:d]) & set(tops[1][:d]))
-        xs[d] = x
-        rbo += (1 - RBO_P) * RBO_P ** (d - 1) * x / d
-    nm = len(set(tops[0]) & set(tops[1]))
-    jac = nm / (2 * RBO_K - nm)
-    rows = con.execute(QUERIES["rbo_topk"][1]).fetchall()
-    assert len(rows) == RBO_K
-    prev = 0
-    for d, x_d, contrib, got_rbo, got_jac, got_nm in sorted(rows):
-        assert x_d == xs[d], (d, x_d, xs[d])
-        assert x_d >= prev
-        prev = x_d
-        exp_c = (1 - RBO_P) * RBO_P ** (d - 1) * xs[d] / d
-        for got, exp in ((contrib, exp_c), (got_rbo, rbo), (got_jac, jac)):
-            if exp != 0.0:
-                frac = abs(exp * 1e6 - math.floor(exp * 1e6) - 0.5)
-                assert frac > 1e-4, (d, exp)
-            assert got == round(exp, 6), (d, got, exp)
-        assert got_nm == nm
-    assert xs[RBO_K] == nm
-    assert 0.0 <= rbo <= 1.0
-    assert jac > rbo, (jac, rbo)  # rank instability under set stability
-
-
-def test_psi_drift_pure_python_replay_and_verdicts():
-    """PSI (`psi_drift`): a pure-Python replay — expected-side decile
-    edges by exact rank, edge-count binning, add-half smoothing, the
-    banded verdict — must match the DuckDB oracle at sf0.001; the
-    planted shift must dominate the natural half-vs-half noise
-    (psi_shifted > 0.25 > fires 'shifted'); bin counts sum to the half
-    sizes; each scope's verdict equals its band; margins on the ln
-    path."""
-    import hashlib
-    import math
-    import re
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        PSI_BINS,
-        PSI_SHIFT,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT doc_id, text FROM documents").fetchall()
-    halves = {0: [], 1: []}
-    for d, t in raw:
-        h = int(hashlib.md5(f"ks|{d}".encode()).hexdigest()[:15], 16) % 2
-        halves[h].append(len(re.findall("[a-z0-9]+", t.lower())))
-    exp = {}
-    for scope in ("same", "shifted"):
-        va = sorted(halves[0])
-        vb = [
-            v + (PSI_SHIFT if scope == "shifted" else 0) for v in halves[1]
-        ]
-        n0 = len(va)
-        edges = sorted(
-            {va[math.ceil(i * n0 / PSI_BINS) - 1] for i in range(1, PSI_BINS)}
-        )
-        binof = lambda v: sum(1 for e in edges if v > e)
-        ca = Counter(binof(v) for v in va)
-        cb = Counter(binof(v) for v in vb)
-        na, nbn = float(len(va)), float(len(vb))
-        psi = 0.0
-        for i in range(PSI_BINS):
-            p = (ca.get(i, 0) + 0.5) / (na + 5.0)
-            q = (cb.get(i, 0) + 0.5) / (nbn + 5.0)
-            psi += (p - q) * math.log(p / q)
-        verdict = (
-            "stable" if psi < 0.1 else "moderate" if psi < 0.25 else "shifted"
-        )
-        exp[scope] = (ca, cb, na, nbn, psi, verdict)
-    rows = con.execute(QUERIES["psi_drift"][1]).fetchall()
-    assert len(rows) == 2 * PSI_BINS
-    for scope, bin_, cnt_a, cnt_b, p, q, psi, verdict in rows:
-        ca, cb, na, nbn, epsi, ever = exp[scope]
-        assert cnt_a == ca.get(bin_, 0) and cnt_b == cb.get(bin_, 0)
-        ep = (cnt_a + 0.5) / (na + 5.0)
-        eq = (cnt_b + 0.5) / (nbn + 5.0)
-        assert p == round(ep, 6) and q == round(eq, 6)
-        frac = abs(epsi * 1e6 - math.floor(epsi * 1e6) - 0.5)
-        assert frac > 1e-4, (scope, epsi)
-        assert psi == round(epsi, 6), (scope, psi, epsi)
-        assert verdict == ever
-    for scope, (ca, cb, na, nbn, psi, verdict) in exp.items():
-        assert sum(ca.values()) == na and sum(cb.values()) == nbn
-    assert exp["shifted"][4] > 0.25, exp["shifted"][4]
-    assert exp["shifted"][5] == "shifted"
-    assert exp["same"][4] < exp["shifted"][4]
-
-
-def test_doc_cube_pure_python_replay_and_grouping_ids():
-    """OLAP CUBE (`doc_cube`): a pure-Python replay — all four grouping
-    sets rebuilt by brute force — must match the DuckDB oracle at
-    sf0.001; the GROUPING bitmask must follow the SQL standard (first
-    listed column = MSB); per-set totals must reconcile with the grand
-    total (the CUBE consistency theorem); margins on the one rounded
-    double (avg)."""
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, lang, n_chars FROM documents").fetchall()
-    # brute-force the four grouping sets: gid 0 = (source, lang),
-    # 1 = source only (lang aggregated), 2 = lang only, 3 = grand total
-    groups = defaultdict(list)
-    for s, l, n in raw:
-        groups[(s, l, 0)].append(n)
-        groups[(s, "(all)", 1)].append(n)
-        groups[("(all)", l, 2)].append(n)
-        groups[("(all)", "(all)", 3)].append(n)
-    rows = con.execute(QUERIES["doc_cube"][1]).fetchall()
-    assert len(rows) == len(groups)
-    n_total = len(raw)
-    seen_gids = set()
-    for source_g, lang_g, gid, n_docs, chars, mn, mx, avg in rows:
-        vals = groups[(source_g, lang_g, gid)]
-        assert n_docs == len(vals)
-        assert chars == sum(vals)
-        assert mn == min(vals) and mx == max(vals)
-        exp_avg = sum(vals) / len(vals)
-        frac = abs(exp_avg * 1e6 - math.floor(exp_avg * 1e6) - 0.5)
-        assert frac > 1e-4, (source_g, lang_g, exp_avg)
-        assert avg == round(exp_avg, 6)
-        seen_gids.add(gid)
-    assert seen_gids == {0, 1, 2, 3}
-    # CUBE consistency: every grouping set's doc counts sum to the total
-    for g in (0, 1, 2, 3):
-        assert sum(r[3] for r in rows if r[2] == g) == n_total
-
-
-def test_cohort_retention_pure_python_replay_and_triangle():
-    """Cohort retention (`cohort_retention`): a pure-Python replay —
-    per-user first purchase day, distinct active days, offset-bucketed
-    cohort shares — must match the DuckDB oracle at sf0.001; offset-0
-    retention is exactly 1.0 for every cohort (the denominator theorem);
-    cohorts must be non-trivial (>1 acquisition day) and activity sparse
-    (some retention < 1); margins on the rounded share."""
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        QUERIES,
-        RET_EVENT,
-        RET_MAX_OFFSET,
-        _DAY_US,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute(
-        "SELECT user_id, epoch_us(ts) FROM events WHERE event_type = ?",
-        [RET_EVENT],
-    ).fetchall()
-    days = defaultdict(set)
-    for u, us in raw:
-        days[u].add(us // _DAY_US)
-    exp = defaultdict(set)  # (cohort_day, offset) -> users
-    for u, ds in days.items():
-        cd = min(ds)
-        for d in ds:
-            if d - cd <= RET_MAX_OFFSET:
-                exp[(cd, d - cd)].add(u)
-    rows = con.execute(QUERIES["cohort_retention"][1]).fetchall()
-    assert len(rows) == len(exp)
-    cohorts = {cd for cd, off in exp if off == 0}
-    assert len(cohorts) > 1, "degenerate single-cohort corpus"
-    saw_partial = False
-    for cd, off, n_active, n_cohort, retention in rows:
-        assert n_active == len(exp[(cd, off)])
-        assert n_cohort == len(exp[(cd, 0)])
-        e = n_active / n_cohort
-        frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-        assert frac > 1e-4, (cd, off, e)
-        assert retention == round(e, 6)
-        if off == 0:
-            assert retention == 1.0
-        assert exp[(cd, off)] <= exp[(cd, 0)]  # actives are cohort members
-        saw_partial = saw_partial or retention < 1.0
-    assert saw_partial, "retention matrix degenerate (all 1.0)"
-
-
-def test_kmv_intersect_pure_python_replay_and_error_bounds():
-    """KMV sketch (`kmv_intersect`): a pure-Python replay — per-half K
-    smallest 60-bit md5 hashes, union-sketch membership Jaccard, the
-    (K-1)M/h_K estimator — must match the DuckDB oracle at sf0.001; the
-    union-sketch theorem holds (K smallest of sketch-union == K smallest
-    of true union); estimates land within 5 standard errors of exact
-    (sigma ~ |S|/sqrt(K-2)); margins on every rounded double."""
-    import hashlib
-    import math
-    import re
-
-    import duckdb
-
-    from htep_spark.driver_queries import KMV_K, KMV_SHINGLE_N, _KMV_M, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT doc_id, text FROM documents").fetchall()
-    vocab = {0: set(), 1: set()}
-    for d, t in raw:
-        h = int(hashlib.md5(f"ks|{d}".encode()).hexdigest()[:15], 16) % 2
-        toks = re.findall("[a-z0-9]+", t.lower())
-        vocab[h].update(
-            " ".join(toks[i : i + KMV_SHINGLE_N])
-            for i in range(len(toks) - KMV_SHINGLE_N + 1)
-        )
-    hs = {
-        b: sorted(
-            int(hashlib.md5(tok.encode()).hexdigest()[:15], 16)
-            for tok in vocab[b]
-        )
-        for b in (0, 1)
-    }
-    sk = {b: hs[b][:KMV_K] for b in (0, 1)}
-    # union-sketch theorem: K smallest of sketch union == K smallest of
-    # the true union's hash multiset (deduped)
-    union_from_sketches = sorted(set(sk[0]) | set(sk[1]))[:KMV_K]
-    true_union = sorted(set(hs[0]) | set(hs[1]))[:KMV_K]
-    assert union_from_sketches == true_union
-    est = {b: (KMV_K - 1.0) * _KMV_M / sk[b][-1] for b in (0, 1)}
-    est_u = (KMV_K - 1.0) * _KMV_M / union_from_sketches[-1]
-    n_both = sum(
-        1 for u in union_from_sketches if u in set(sk[0]) and u in set(sk[1])
-    )
-    jacc = n_both / KMV_K
-    exact_a, exact_b = len(set(hs[0])), len(set(hs[1]))
-    exact_union = len(set(hs[0]) | set(hs[1]))
-    exact_inter = len(set(hs[0]) & set(hs[1]))
-    # error bounds: KMV relative std err ~ 1/sqrt(K-2)
-    se = 1.0 / math.sqrt(KMV_K - 2)
-    assert abs(est[0] - exact_a) < 5 * se * exact_a
-    assert abs(est[1] - exact_b) < 5 * se * exact_b
-    assert abs(est_u - exact_union) < 5 * se * exact_union
-    assert exact_inter > 0 and exact_inter < min(exact_a, exact_b)
-    rows = con.execute(QUERIES["kmv_intersect"][1]).fetchall()
-    assert len(rows) == KMV_K
-    for (rank, u, in_a, in_b, ea, eb, eu, jk, ei,
-         xa, xb, xu, xi) in rows:
-        assert u == union_from_sketches[rank - 1]
-        assert in_a == (1 if u in set(sk[0]) else 0)
-        assert in_b == (1 if u in set(sk[1]) else 0)
-        for got, exp in (
-            (ea, est[0]),
-            (eb, est[1]),
-            (eu, est_u),
-            (jk, jacc),
-            (ei, jacc * est_u),
-        ):
-            frac = abs(exp * 1e6 - math.floor(exp * 1e6) - 0.5)
-            assert frac > 1e-4, exp
-            assert got == round(exp, 6)
-        assert (xa, xb, xu, xi) == (exact_a, exact_b, exact_union, exact_inter)
-
-
-def test_cusum_changepoint_pure_python_replay_and_alarms():
-    """CUSUM (`cusum_changepoint`): a pure-Python replay — dense hourly
-    grid, first-third baseline, the 2·n0-scaled integer recurrence —
-    must match the DuckDB oracle at sf0.001 EXACTLY (the operator is
-    all-BIGINT: zero rounding surface); the planted post-t0 doubling
-    must alarm and the raw scope must not; the first alarm must come
-    after the changepoint; S is 0-floored everywhere."""
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import CUSUM_H_MULT, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    hrs = con.execute(
-        "SELECT epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(h for (h,) in hrs)
-    h0, h1 = min(c), max(c)
-    grid = list(range(h0, h1 + 1, 3_600_000_000))
-    xs = [c.get(h, 0) for h in grid]
-    n = len(xs)
-    n0, t0 = n // 3, (2 * n) // 3
-    sum0 = sum(xs[:n0])
-    exp = {}
-    for scope in ("same", "shifted"):
-        ys = [
-            (2 * x if scope == "shifted" and t > t0 else x)
-            for t, x in enumerate(xs, 1)
-        ]
-        s, ss = 0, []
-        for y in ys:
-            s = max(0, s + 2 * n0 * y - 3 * sum0)
-            ss.append(s)
-        thr = 2 * CUSUM_H_MULT * sum0
-        alarms = [t for t, sv in enumerate(ss, 1) if sv > thr]
-        exp[scope] = (ys, ss, thr, alarms[0] if alarms else None)
-    assert exp["same"][3] is None, "raw scope false-alarmed"
-    assert exp["shifted"][3] is not None and exp["shifted"][3] > t0
-    rows = con.execute(QUERIES["cusum_changepoint"][1]).fetchall()
-    assert len(rows) == 2 * n
-    for scope, t, epoch, y, resid, s, thr, alarm, sh_t0, fa in rows:
-        ys, ss, ethr, efa = exp[scope]
-        assert y == ys[t - 1]
-        assert resid == 2 * n0 * ys[t - 1] - 3 * sum0
-        assert s == ss[t - 1] and s >= 0
-        assert thr == ethr
-        assert alarm == (1 if ss[t - 1] > ethr else 0)
-        assert sh_t0 == t0 and fa == efa
-        assert epoch == grid[t - 1] // 1_000_000
-
-
-def test_ndcg_eval_pure_python_replay_and_model_dominance():
-    """NDCG (`ndcg_eval`): a pure-Python replay — md5 grades/noise, both
-    scorers, DCG@K with the 2^rel-1 gain, full-group IDCG — must match
-    the DuckDB oracle at sf0.001; NDCG in (0, 1]; the informative scorer
-    must beat the random scorer on the per-scope mean; ideal ranking of
-    a group yields NDCG exactly 1 iff DCG == IDCG; margins on every
-    rounded double."""
-    import hashlib
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import NDCG_K, NDCG_W, QUERIES
-
-    def h(s, mod):
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % mod
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, doc_id FROM documents").fetchall()
-    groups = defaultdict(list)
-    for src, d in raw:
-        rel, u = h(f"rel|{d}", 4), h(f"sc|{d}", 1000)
-        groups[src].append((d, rel, u))
-    exp = {}
-    for scope in ("model", "random"):
-        for src, items in groups.items():
-            scored = [
-                (rel * NDCG_W + u if scope == "model" else u, d, rel)
-                for d, rel, u in items
-            ]
-            by_score = sorted(scored, key=lambda x: (-x[0], x[1]))
-            by_rel = sorted(scored, key=lambda x: (-x[2], x[1]))
-            dcg = sum(
-                (2.0 ** rel - 1.0) / math.log2(i + 2.0)
-                for i, (_s, _d, rel) in enumerate(by_score[:NDCG_K])
-            )
-            idcg = sum(
-                (2.0 ** rel - 1.0) / math.log2(i + 2.0)
-                for i, (_s, _d, rel) in enumerate(by_rel[:NDCG_K])
-            )
-            ndcg = dcg / idcg if idcg > 0 else 0.0
-            exp[(scope, src)] = (len(items), dcg, idcg, ndcg)
-    means = {
-        scope: sum(
-            v[3] for (s, _src), v in exp.items() if s == scope
-        ) / sum(1 for (s, _src) in exp if s == scope)
-        for scope in ("model", "random")
-    }
-    assert means["model"] > means["random"] + 0.05, means
-    rows = con.execute(QUERIES["ndcg_eval"][1]).fetchall()
-    assert len(rows) == len(exp)
-    for scope, src, n_items, dcg, idcg, ndcg, mean_ndcg in rows:
-        en, ed, ei, end = exp[(scope, src)]
-        assert n_items == en
-        for got, e in (
-            (dcg, ed),
-            (idcg, ei),
-            (ndcg, end),
-            (mean_ndcg, means[scope]),
-        ):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4, (scope, src, e)
-            assert got == round(e, 6), (scope, src, got, e)
-        assert 0.0 < ndcg <= 1.0
-        assert (ndcg == 1.0) == (round(ed, 9) == round(ei, 9))
-
-
-def test_cohen_kappa_pure_python_replay_and_bounds():
-    """Cohen's kappa (`cohen_kappa`): a pure-Python replay — rater A from
-    the classify oracle, rater B via the md5 shift rule, exact-integer
-    kappa — must match the DuckDB oracle at sf0.001; every planted
-    disagreement lands on a DIFFERENT label; 0 < kappa < po < 1 (chance
-    correction strictly shrinks agreement); confusion marginals
-    reconcile; margins on the three rounded doubles."""
-    import hashlib
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.dictionaries import DOCUMENT_TYPE_ORDER
-    from htep_spark.driver_queries import (
-        KAPPA_DISAGREE_MOD,
-        KAPPA_TYPES,
-        QUERIES,
-        SQL_CLASSIFY,
-    )
-
-    def h(s, mod):
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % mod
-
-    types = KAPPA_TYPES
-    assert set(types) > set(DOCUMENT_TYPE_ORDER)
-    k = len(types)
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    labels = con.execute(
-        f"SELECT doc_id, document_type FROM ({SQL_CLASSIFY})"
-    ).fetchall()
-    conf = Counter()
-    for d, la in labels:
-        if h(f"rater|{d}", KAPPA_DISAGREE_MOD) == 0:
-            shift = h(f"shift|{d}", k - 1) + 1
-            lb = types[(types.index(la) - 1 + shift + 1) % k]
-            assert lb != la  # shift in 1..k-1 can never be identity
-        else:
-            lb = la
-        conf[(la, lb)] += 1
-    n_total = sum(conf.values())
-    n_agree = sum(v for (a, b), v in conf.items() if a == b)
-    rowm = Counter()
-    colm = Counter()
-    for (a, b), v in conf.items():
-        rowm[a] += v
-        colm[b] += v
-    pe_num = sum(rowm[l] * colm[l] for l in set(rowm) | set(colm))
-    kappa = (n_total * n_agree - pe_num) / (n_total * n_total - pe_num)
-    po = n_agree / n_total
-    pe = pe_num / n_total**2
-    assert 0.0 < kappa < po < 1.0
-    assert n_agree < n_total  # the planted disagreements fired
-    rows = con.execute(QUERIES["cohen_kappa"][1]).fetchall()
-    assert len(rows) == len(conf)
-    for la, lb, n, rn, cn, nt, na, gpo, gpe, gk in rows:
-        assert n == conf[(la, lb)]
-        assert rn == rowm[la] and cn == colm[lb]
-        assert (nt, na) == (n_total, n_agree)
-        for got, e in ((gpo, po), (gpe, pe), (gk, kappa)):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4, e
-            assert got == round(e, 6)
-
-
-def test_tpch_shipping_and_big_orders_pure_python_replay():
-    """TPC-H Q3/Q18 shapes: pure-Python replays over raw tuples — the
-    three-way join + opposing date filters + exact-revenue top-N, and
-    the HAVING-threshold self-semi-join — must match the DuckDB oracles
-    at sf0.001; the top-N boundary is checked to be strict (no revenue
-    tie straddles the cut); every big order genuinely exceeds the
-    threshold."""
-    from collections import defaultdict
-    from decimal import Decimal
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        QUERIES,
-        TPCH_BIGORDER_QTY,
-        TPCH_SHIP_CUTOFF,
-        TPCH_SHIP_SEGMENT,
-        TPCH_SHIP_TOPN,
-    )
-
-    con = duckdb.connect()
-    for t in ("customer", "orders", "lineitem"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    segs = dict(
-        con.execute("SELECT c_custkey, c_mktsegment FROM customer").fetchall()
-    )
-    orders = {
-        ok: (ck, od, op, tp)
-        for ok, ck, od, op, tp in con.execute(
-            "SELECT o_orderkey, o_custkey, epoch(o_orderdate), "
-            "o_orderpriority, o_totalprice FROM orders"
-        ).fetchall()
-    }
-    lis = con.execute(
-        "SELECT l_orderkey, l_extendedprice, l_discount, l_quantity, "
-        "epoch(l_shipdate) FROM lineitem"
-    ).fetchall()
-    cutoff = con.execute(
-        f"SELECT epoch(TIMESTAMP '{TPCH_SHIP_CUTOFF} 00:00:00')"
-    ).fetchone()[0]
-    # --- Q3 replay (exact Decimal revenue) ---
-    rev = defaultdict(Decimal)
-    for ok, price, disc, _q, ship in lis:
-        if ok not in orders or ship <= cutoff:
-            continue
-        ck, od, op, _tp = orders[ok]
-        if od >= cutoff or segs.get(ck) != TPCH_SHIP_SEGMENT:
-            continue
-        p = Decimal(str(price)).quantize(Decimal("0.01"))
-        d = Decimal(str(disc)).quantize(Decimal("0.01"))
-        rev[ok] += p * (1 - d)
-    ranked = sorted(rev.items(), key=lambda kv: (-kv[1], kv[0]))
-    top = ranked[:TPCH_SHIP_TOPN]
-    if len(ranked) > TPCH_SHIP_TOPN:
-        assert top[-1][1] != ranked[TPCH_SHIP_TOPN][1], "tie straddles cut"
-    rows = con.execute(QUERIES["tpch_shipping"][1]).fetchall()
-    assert len(rows) == min(TPCH_SHIP_TOPN, len(ranked))
-    got = {r[0]: r for r in rows}
-    for ok, r in top:
-        _ck, od, op, _tp = orders[ok]
-        assert got[ok][1] == float(round(r, 2))
-        assert got[ok][2] == od and got[ok][3] == op
-    # --- Q18 replay ---
-    qty = defaultdict(Decimal)
-    for ok, _p, _d, q, _s in lis:
-        qty[ok] += Decimal(str(q)).quantize(Decimal("0.01"))
-    big = {ok: s for ok, s in qty.items() if s > TPCH_BIGORDER_QTY}
-    rows = con.execute(QUERIES["tpch_big_orders"][1]).fetchall()
-    assert len(rows) == len(big) > 0
-    for _cn, ck, ok, od, tp, tq in rows:
-        assert ok in big and tq == float(round(big[ok], 2)) > TPCH_BIGORDER_QTY
-        eck, eod, _eop, etp = orders[ok]
-        assert (ck, od) == (eck, eod)
-        assert tp == round(etp, 2)
-
-
-def test_rolling_anomaly_pure_python_replay_and_branches():
-    """Rolling z-score (`rolling_anomaly`): a pure-Python replay — dense
-    hourly grid, trailing-48h integer window sums, the planted 6x+50
-    spike — must match the DuckDB oracle at sf0.001; the spiked scope
-    flags EXACTLY the planted hour; the raw scope stays quiet; the
-    window never contains the scored point (the spike's own z uses
-    pre-spike statistics); z margins clear the threshold and the 6dp
-    boundary."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        ANOM_SPIKE_ADD,
-        ANOM_SPIKE_MULT,
-        ANOM_W,
-        ANOM_Z,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    hrs = con.execute(
-        "SELECT epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(h for (h,) in hrs)
-    grid = list(range(min(c), max(c) + 1, 3_600_000_000))
-    xs = [c.get(h, 0) for h in grid]
-    n = len(xs)
-    t0 = (3 * n) // 4
-    exp = {}
-    for scope in ("same", "spiked"):
-        ys = list(xs)
-        if scope == "spiked":
-            ys[t0 - 1] = ANOM_SPIKE_MULT * ys[t0 - 1] + ANOM_SPIKE_ADD
-        for t in range(ANOM_W + 1, n + 1):
-            win = ys[t - 1 - ANOM_W : t - 1]
-            wc, ws, wss = len(win), sum(win), sum(v * v for v in win)
-            mean = ws / wc
-            var = (wc * wss - ws * ws) / (wc * (wc - 1))
-            z = (ys[t - 1] - mean) / math.sqrt(var)
-            exp[(scope, t)] = (ys[t - 1], wc, ws, wss, mean, var, z)
-    rows = con.execute(QUERIES["rolling_anomaly"][1]).fetchall()
-    assert len(rows) == 2 * (n - ANOM_W)
-    flagged = {"same": [], "spiked": []}
-    for scope, t, epoch, y, wc, ws, wss, mean, std, z, anom, sp_t0 in rows:
-        ey, ewc, ews, ewss, emean, evar, ez = exp[(scope, t)]
-        assert (y, wc, ws, wss) == (ey, ewc, ews, ewss)
-        for got, e in ((mean, emean), (std, math.sqrt(evar)), (z, ez)):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4, (scope, t, e)
-            assert got == round(e, 6)
-        assert abs(ez - ANOM_Z) > 0.01  # threshold margin
-        assert anom == (1 if ez > ANOM_Z else 0)
-        assert sp_t0 == t0
-        assert epoch == grid[t - 1] // 1_000_000
-        if anom:
-            flagged[scope].append(t)
-    assert flagged["same"] == [], flagged
-    assert flagged["spiked"] == [t0], flagged
-    # the spike's own window is pre-spike: its mean equals the same-scope
-    # mean at t0
-    assert exp[("spiked", t0)][4] == exp[("same", t0)][4]
-
-
-def test_ece_calibration_pure_python_replay_and_margins():
-    """ECE (`ece_calibration`): a pure-Python replay — the 6dp
-    fixed-point integerization, capped deciles, BIGINT ECE/Brier
-    numerators — must match the DuckDB oracle at sf0.001; every p·1e6
-    sits clear of the .5 rounding line AND every sp clear of a bin
-    edge (the two discretization hazards); bin counts reconcile; ECE
-    and Brier land in [0, 1]."""
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        ECE_BINS,
-        QUERIES,
-        _ECE_SCALE,
-        _sql_logreg_chain,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    scored = con.execute(
-        f"WITH {_sql_logreg_chain()} SELECT y, p FROM scores"
-    ).fetchall()
-    width = _ECE_SCALE // ECE_BINS
-    bins = defaultdict(lambda: [0, 0, 0, 0])  # n, n_pos, ssp, sq
-    for y, p in scored:
-        raw = p * _ECE_SCALE
-        assert abs(raw - math.floor(raw) - 0.5) > 1e-6, raw  # off .5 line
-        sp = round(raw)
-        assert sp % width != 0 or sp == 0, sp  # off bin edges
-        b = min(sp // width, ECE_BINS - 1)
-        cell = bins[b]
-        cell[0] += 1
-        cell[1] += y
-        cell[2] += sp
-        cell[3] += (sp - _ECE_SCALE * y) ** 2
-    nn = sum(c[0] for c in bins.values())
-    ece_num = sum(abs(_ECE_SCALE * c[1] - c[2]) for c in bins.values())
-    brier_num = sum(c[3] for c in bins.values())
-    ece = ece_num / (nn * _ECE_SCALE)
-    brier = brier_num / (nn * _ECE_SCALE**2)
-    assert 0.0 <= ece <= 1.0 and 0.0 <= brier <= 1.0
-    assert len(scored) == nn
-    rows = con.execute(QUERIES["ece_calibration"][1]).fetchall()
-    assert len(rows) == ECE_BINS
-    assert sum(r[1] for r in rows) == nn
-    for b, n, n_pos, ssp, avg_conf, acc, gap, gece, gbrier in rows:
-        en, ep, es, _sq = bins.get(b, [0, 0, 0, 0])
-        assert (n, n_pos, ssp) == (en, ep, es)
-        ec = es / (en * _ECE_SCALE) if en else 0.0
-        ea = ep / en if en else 0.0
-        for got, e in (
-            (avg_conf, ec),
-            (acc, ea),
-            (gap, abs(ea - ec)),
-            (gece, ece),
-            (gbrier, brier),
-        ):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4, (b, e)
-            assert got == round(e, 6), (b, got, e)
-
-
-def test_triangle_count_pure_python_replay_and_identities():
-    """Triangles (`triangle_count`): a brute-force pure-Python replay —
-    undirected canonical edges, all-(a<b<c) enumeration, per-corner
-    counts, lcc, transitivity — must match the DuckDB oracle at
-    sf0.001; the handshake identities hold (Σ per-node tri = 3·△;
-    wedges ≥ 3·△; transitivity in (0, 1]); the graph is non-trivial
-    (△ > 0 and at least one node with lcc < 1)."""
-    import math
-    from collections import Counter
-    from itertools import combinations
-
-    import duckdb
-
-    from htep_spark.driver_queries import PR_N_NODES, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, doc_id FROM documents").fetchall()
-    edges = set()
-    for src, d in raw:
-        a = int(src[3:]) % PR_N_NODES
-        b = (int(src[3:]) * 7 + d * 13 + 3) % PR_N_NODES
-        if a != b:
-            edges.add((min(a, b), max(a, b)))
-    nodes = sorted({x for e in edges for x in e})
-    deg = Counter()
-    for u, v in edges:
-        deg[u] += 1
-        deg[v] += 1
-    tris = [
-        (a, b, c)
-        for a, b, c in combinations(nodes, 3)
-        if (a, b) in edges and (b, c) in edges and (a, c) in edges
-    ]
-    tri_n = Counter()
-    for a, b, c in tris:
-        tri_n[a] += 1
-        tri_n[b] += 1
-        tri_n[c] += 1
-    n_tri = len(tris)
-    wedges = sum(d * (d - 1) // 2 for d in deg.values())
-    trans = 3 * n_tri / wedges if wedges else 0.0
-    assert n_tri > 0 and wedges >= 3 * n_tri
-    assert sum(tri_n.values()) == 3 * n_tri
-    assert 0.0 < trans <= 1.0
-    rows = con.execute(QUERIES["triangle_count"][1]).fetchall()
-    assert len(rows) == len(nodes)
-    saw_open = False
-    for node, d, tri, lcc, got_ntri, got_wedges, got_trans in rows:
-        assert d == deg[node] and tri == tri_n.get(node, 0)
-        elcc = 2 * tri / (d * (d - 1)) if d >= 2 else 0.0
-        for got, e in ((lcc, elcc), (got_trans, trans)):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4, (node, e)
-            assert got == round(e, 6)
-        assert (got_ntri, got_wedges) == (n_tri, wedges)
-        saw_open = saw_open or (d >= 2 and lcc < 1.0)
-    assert saw_open, "degenerate complete graph"
-
-
-def test_rouge_l_closed_form_theorem_and_replay():
-    """ROUGE-L (`rouge_l`): the oracle's closed form (LCS = #non-xerr
-    candidate tokens) must equal a TEXTBOOK LCS DP for every doc at
-    sf0.001 — the theorem that lets DuckDB skip the DP; the repo's
-    vectorized `_lcs_len` must equal the textbook DP too (it is the
-    Spark kernel); no corpus token starts with 'xerr' (the
-    unmatchability precondition); the DuckDB rows reproduce the
-    integer-ratio P/R/F; verbatim docs score exactly 1."""
-    import math
-    import re
-
-    import duckdb
-
-    from htep_spark.driver_queries import ROUGE_MAX_TOK, QUERIES, _lcs_len
-
-    def lcs_ref(a, b):
-        m = [[0] * (len(b) + 1) for _ in range(len(a) + 1)]
-        for i in range(1, len(a) + 1):
-            for j in range(1, len(b) + 1):
-                m[i][j] = (
-                    m[i - 1][j - 1] + 1
-                    if a[i - 1] == b[j - 1]
-                    else max(m[i - 1][j], m[i][j - 1])
-                )
-        return m[-1][-1]
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT doc_id, text FROM documents").fetchall()
-    exp = {}
-    for d, txt in raw:
-        r = re.findall("[a-z0-9]+", txt.lower())[:ROUGE_MAX_TOK]
-        assert not any(t.startswith("xerr") for t in r)
-        if d % 5 == 0:
-            c = list(r)
-        else:
-            c = [
-                (f"xerr{i % 3}" if i % 11 == 10 else r[i])
-                for i in range(len(r))
-                if i % 7 != 6
-            ]
-        kept = sum(1 for t in c if not t.startswith("xerr"))
-        dp = lcs_ref(c, r)
-        assert dp == kept, (d, dp, kept)  # the closed-form theorem
-        assert _lcs_len(c, r) == dp  # the Spark kernel == textbook DP
-        exp[d] = (kept, len(c), len(r))
-    tl = sum(v[0] for v in exp.values())
-    tc = sum(v[1] for v in exp.values())
-    tr = sum(v[2] for v in exp.values())
-    rows = con.execute(QUERIES["rouge_l"][1]).fetchall()
-    assert len(rows) == len(exp)
-    for d, lcs, cl, rl, p, r_, f, fc in rows:
-        el, ec, er = exp[d]
-        assert (lcs, cl, rl) == (el, ec, er)
-        for got, e in (
-            (p, el / ec),
-            (r_, el / er),
-            (f, 2 * el / (ec + er)),
-            (fc, 2 * tl / (tc + tr)),
-        ):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4, (d, e)
-            assert got == round(e, 6)
-        if d % 5 == 0:
-            assert (p, r_, f) == (1.0, 1.0, 1.0)
-        else:
-            assert f < 1.0
-
-
-def test_data_profile_pure_python_replay():
-    """Profile (`data_profile`): a pure-Python replay — per-column
-    completeness, exact distinct counts, the uniq audit, integer means,
-    (count DESC, value ASC) top values — must match the DuckDB oracle at
-    sf0.001; the id columns profile as unique, bounded-domain string
-    columns don't; every emitted numeric clears the 6dp boundary."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import _PROFILE_SPEC, QUERIES
-
-    con = duckdb.connect()
-    for t in ("documents", "events"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    exp = {}
-    for table, cols in _PROFILE_SPEC:
-        data = con.execute(
-            f"SELECT {', '.join(c for c, _k in cols)} FROM {table}"
-        ).fetchall()
-        for ci, (c, kind) in enumerate(cols):
-            vals = [r[ci] for r in data]
-            nn = sum(1 for v in vals if v is None)
-            pres = [v for v in vals if v is not None]
-            nd = len(set(pres))
-            row = {
-                "n": len(vals),
-                "n_null": nn,
-                "n_distinct": nd,
-                "uniq": 1 if (nd == len(vals) and nn == 0) else 0,
-                "min_num": None,
-                "max_num": None,
-                "mean_num": None,
-                "top_value": None,
-                "top_count": None,
-            }
-            if kind in ("int", "dbl"):
-                row["min_num"] = round(float(min(pres)), 6)
-                row["max_num"] = round(float(max(pres)), 6)
-            if kind == "int":
-                row["mean_num"] = sum(pres) / len(vals)
-            if kind == "top":
-                cnt = Counter(str(v) for v in pres)
-                tv = min(cnt.items(), key=lambda kv: (-kv[1], kv[0]))
-                row["top_value"], row["top_count"] = tv
-            exp[(table, c)] = row
-    rows = con.execute(QUERIES["data_profile"][1]).fetchall()
-    assert len(rows) == sum(len(cols) for _t, cols in _PROFILE_SPEC)
-    for (tname, cname, n, n_null, nd, uniq, mn, mx, mean, tv, tc) in rows:
-        e = exp[(tname, cname)]
-        assert (n, n_null, nd, uniq) == (
-            e["n"], e["n_null"], e["n_distinct"], e["uniq"]
-        ), (tname, cname)
-        assert mn == e["min_num"] and mx == e["max_num"]
-        if e["mean_num"] is None:
-            assert mean is None
-        else:
-            frac = abs(
-                e["mean_num"] * 1e6 - math.floor(e["mean_num"] * 1e6) - 0.5
-            )
-            assert frac > 1e-4
-            assert mean == round(e["mean_num"], 6)
-        assert (tv, tc) == (e["top_value"], e["top_count"])
-    by = {(r[0], r[1]): r for r in rows}
-    assert by[("documents", "doc_id")][5] == 1
-    assert by[("events", "event_id")][5] == 1
-    assert by[("documents", "lang")][5] == 0
-    assert by[("events", "event_type")][5] == 0
-
-
-def test_skyline_pure_python_replay_and_frontier():
-    """Skyline (`skyline`): a brute-force pure-Python dominance replay
-    must match the DuckDB oracle at sf0.001 (which itself runs the
-    literal quadratic NOT EXISTS — the Spark threshold-curve plan is
-    proved equal by the parity hash); the frontier is non-trivial
-    (1 < n_skyline < n); no skyline point strictly dominates another;
-    every dominated point has a strict dominator. All-BIGINT — no
-    rounding assertions needed."""
-    import re
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT doc_id, n_chars, text FROM documents").fetchall()
-    pts = {
-        d: (nc, len(set(re.findall("[a-z0-9]+", t.lower()))))
-        for d, nc, t in raw
-    }
-    dom = {
-        d: any(
-            ox > x and oy > y for od, (ox, oy) in pts.items() if od != d
-        )
-        for d, (x, y) in pts.items()
-    }
-    n_sky = sum(1 for v in dom.values() if not v)
-    assert 1 < n_sky < len(pts)
-    rows = con.execute(QUERIES["skyline"][1]).fetchall()
-    assert len(rows) == len(pts)
-    sky_pts = []
-    for d, x, y, dominated, skyline, got_nsky in rows:
-        assert (x, y) == pts[d]
-        assert dominated == (1 if dom[d] else 0)
-        assert skyline == 1 - dominated
-        assert got_nsky == n_sky
-        if skyline:
-            sky_pts.append((x, y))
-    # antichain property: no skyline point strictly dominates another
-    assert not any(
-        a != b and a[0] > b[0] and a[1] > b[1]
-        for a in sky_pts
-        for b in sky_pts
-    )
-
-
-def test_assoc_rules_pure_python_replay_and_measures():
-    """Association rules (`assoc_rules`): a pure-Python replay — distinct
-    token baskets, directed co-occurrence counts, the Apriori floor,
-    support/confidence/lift — must match the DuckDB oracle at sf0.001;
-    measure identities hold (symmetric lift: lift(a→b) == lift(b→a);
-    confidence(a→b)·n_a == confidence(b→a)·n_b == n_ab); both lift
-    regimes appear (some > 1, some < 1); margins on every rounded
-    double."""
-    import math
-    import re
-    from collections import Counter
-    from itertools import permutations
-
-    import duckdb
-
-    from htep_spark.driver_queries import ASSOC_MIN_COUNT, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT doc_id, text FROM documents").fetchall()
-    baskets = [set(re.findall("[a-z0-9]+", t.lower())) for _d, t in raw]
-    n_docs = len(baskets)
-    marg = Counter()
-    pair = Counter()
-    for b in baskets:
-        for t in b:
-            marg[t] += 1
-        for a, c in permutations(sorted(b), 2):
-            pair[(a, c)] += 1
-    exp = {
-        k: v for k, v in pair.items() if v >= ASSOC_MIN_COUNT
-    }
-    rows = con.execute(QUERIES["assoc_rules"][1]).fetchall()
-    assert len(rows) == len(exp) > 0
-    lifts = {}
-    for ant, cons, n_ab, n_a, n_b, nd, sup, conf, lift in rows:
-        assert n_ab == exp[(ant, cons)]
-        assert n_a == marg[ant] and n_b == marg[cons] and nd == n_docs
-        for got, e in (
-            (sup, n_ab / n_docs),
-            (conf, n_ab / n_a),
-            (lift, n_docs * n_ab / (n_a * n_b)),
-        ):
-            # no .5-margin assertion here: each measure is ONE division
-            # of identical BIGINTs, so both engines hold the bit-identical
-            # double and round it identically even exactly ON the .5 line
-            # (power-of-two marginals land there, e.g. 111/128 — probed:
-            # both engines round half away from zero; parity green at
-            # sf0.001/0.01/0.1). Python's banker's round() diverges on
-            # those, so compare against floor(x·1e6 + 0.5).
-            assert got == math.floor(e * 1e6 + 0.5) / 1e6, (ant, cons, e)
-        lifts[(ant, cons)] = n_docs * n_ab / (n_a * n_b)
-    for (a, c), v in lifts.items():
-        if (c, a) in lifts:
-            assert abs(lifts[(c, a)] - v) < 1e-12
-    assert any(v > 1.0 for v in lifts.values())
-    assert any(v < 1.0 for v in lifts.values())
-
-
-def test_rfm_segments_pure_python_replay_and_quintiles():
-    """RFM (`rfm_segments`): a pure-Python replay — purchase-only
-    recency/frequency/cents, rank-based quintile scores with the
-    (metric, user_id) tie-break — must match the DuckDB oracle at
-    sf0.001; scores span 1..5 with balanced (±1) quintile sizes; the
-    most-recent user scores r=1's complement... i.e. the rank-1 user of
-    each dimension scores 1; segment is the digit concat; zero doubles
-    (everything integer-exact)."""
-    import math
-    from collections import Counter, defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import _DAY_US, QUERIES, RET_EVENT
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute(
-        "SELECT user_id, epoch_us(ts), value FROM events "
-        "WHERE event_type = ?",
-        [RET_EVENT],
-    ).fetchall()
-    per = defaultdict(lambda: [0, 0, 0])  # last_um, freq, cents
-    for u, um, v in raw:
-        c = per[u]
-        c[0] = max(c[0], um)
-        c[1] += 1
-        c[2] += round(v * 100)
-    hz = max(c[0] for c in per.values())
-    base = {
-        u: ((hz - c[0]) // _DAY_US, c[1], c[2]) for u, c in per.items()
-    }
-    n = len(base)
-
-    def scores(key_idx, desc):
-        order = sorted(
-            base.items(),
-            key=lambda kv: (
-                -kv[1][key_idx] if desc else kv[1][key_idx],
-                kv[0],
-            ),
-        )
-        return {
-            u: math.ceil(5 * (i + 1) / n)
-            for i, (u, _v) in enumerate(order)
-        }
-
-    rs, fs, ms = scores(0, False), scores(1, True), scores(2, True)
-    rows = con.execute(QUERIES["rfm_segments"][1]).fetchall()
-    assert len(rows) == n
-    for u, rec, freq, mon, r_s, f_s, m_s, seg in rows:
-        er, ef, em = base[u]
-        assert (rec, freq, mon) == (er, ef, em)
-        assert (r_s, f_s, m_s) == (rs[u], fs[u], ms[u])
-        assert seg == f"{r_s}{f_s}{m_s}"
-        assert 1 <= r_s <= 5 and 1 <= f_s <= 5 and 1 <= m_s <= 5
-    for sc in (rs, fs, ms):
-        sizes = Counter(sc.values())
-        assert set(sizes) == set(range(1, 6))
-        assert max(sizes.values()) - min(sizes.values()) <= 1
-
-
-def test_k_core_pure_python_replay_and_peel_invariants():
-    """k-core (`k_core`): a pure-Python synchronous peel replay over the
-    degree-skewed host graph must match the DuckDB oracle at sf0.001 in
-    BOTH scopes; 'core' (K=6) keeps a non-trivial core, 'cascade' (K=7)
-    unravels over >= 3 onion layers to the EMPTY graph; both converge
-    within the round budget (converged == 1); core members have
-    core_degree >= K; maximality holds (any removed node has < K
-    core-neighbors); all-integer."""
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        KC_ROUNDS,
-        KC_SCOPES,
-        PR_N_NODES,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, doc_id FROM documents").fetchall()
-    edges = set()
-    for src, d in raw:
-        sn = int(src[3:])
-        a = sn % PR_N_NODES
-        b = (sn * 7 + d * 13 + 3) % (a + 1)
-        if a != b:
-            edges.add((min(a, b), max(a, b)))
-    nodes = {x for e in edges for x in e}
-    exp = {}
-    for scope, k in KC_SCOPES:
-        alive = set(nodes)
-        removed_round = {}
-        for i in range(1, KC_ROUNDS + 1):
-            deg = {n: 0 for n in alive}
-            for u, v in edges:
-                if u in alive and v in alive:
-                    deg[u] += 1
-                    deg[v] += 1
-            dead = {n for n in alive if deg[n] < k}
-            for n in dead:
-                removed_round[n] = i
-            alive -= dead
-        core_deg = {n: 0 for n in alive}
-        for u, v in edges:
-            if u in alive and v in alive:
-                core_deg[u] += 1
-                core_deg[v] += 1
-        assert all(d >= k for d in core_deg.values())
-        for n in nodes - alive:  # maximality
-            nb = sum(
-                1
-                for u, v in edges
-                if (u == n and v in alive) or (v == n and u in alive)
-            )
-            assert nb < k, (scope, n)
-        exp[scope] = (alive, removed_round, core_deg, k)
-    core_alive = exp["core"][0]
-    casc_rounds = set(exp["cascade"][1].values())
-    assert 0 < len(core_alive) < len(nodes)
-    assert len(exp["cascade"][0]) == 0
-    assert len(casc_rounds) >= 3, casc_rounds  # real onion layers
-    rows = con.execute(QUERIES["k_core"][1]).fetchall()
-    assert len(rows) == 2 * len(nodes)
-    for scope, node, rr, in_core, cd, k, n_core, conv in rows:
-        alive, removed_round, core_deg, ek = exp[scope]
-        assert k == ek and n_core == len(alive) and conv == 1
-        if node in alive:
-            assert (rr, in_core, cd) == (None, 1, core_deg[node])
-        else:
-            assert (rr, in_core, cd) == (removed_round[node], 0, 0)
-
-
-def test_rrf_fusion_pure_python_replay_and_fusion_properties():
-    """RRF (`rrf_fusion`): a pure-Python replay — both rankings with the
-    doc_id tie-break, the two-term reciprocal sum, the fused ordering
-    with exact-tie awareness — must match the DuckDB oracle at sf0.001;
-    fusion genuinely reorders (fused_rank differs from both inputs
-    somewhere); (r1, r2) permutation ties produce identical rrf and
-    resolve by doc_id; margins on the rounded score."""
-    import math
-    import re
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES, RRF_K
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT doc_id, text FROM documents").fetchall()
-    base = {}
-    for d, t in raw:
-        toks = re.findall("[a-z0-9]+", t.lower())
-        base[d] = (len(toks), len(set(toks)))
-    r1 = {
-        d: i + 1
-        for i, d in enumerate(
-            sorted(base, key=lambda d: (-base[d][0], d))
-        )
-    }
-    r2 = {
-        d: i + 1
-        for i, d in enumerate(
-            sorted(base, key=lambda d: (-base[d][1], d))
-        )
-    }
-    rrf = {
-        d: 1.0 / (RRF_K + r1[d]) + 1.0 / (RRF_K + r2[d]) for d in base
-    }
-    fused = {
-        d: i + 1
-        for i, d in enumerate(sorted(base, key=lambda d: (-rrf[d], d)))
-    }
-    rows = con.execute(QUERIES["rrf_fusion"][1]).fetchall()
-    assert len(rows) == len(base)
-    moved = False
-    for d, ntok, ndis, gr1, gr2, grrf, gfused in rows:
-        assert (ntok, ndis) == base[d]
-        assert (gr1, gr2) == (r1[d], r2[d])
-        e = rrf[d]
-        frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-        assert frac > 1e-4, (d, e)
-        assert grrf == round(e, 6)
-        assert gfused == fused[d]
-        moved = moved or (gfused != gr1 and gfused != gr2)
-    assert moved, "fusion degenerate (never reorders)"
-
-
-def test_attribution_pure_python_replay_and_credit_conservation():
-    """Attribution (`attribution`): a pure-Python replay — trailing-
-    window touch join, first/last by the exact (t, event_id) key,
-    linear 1/k credits — must match the DuckDB oracle at sf0.001;
-    credit is CONSERVED (Σ first_n = Σ last_n = n_attributed and
-    Σ linear ≈ n_attributed to float tolerance); first and last
-    disagree somewhere (multi-touch paths exist); margins on the
-    rounded credit."""
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import ATTR_WINDOW_S, QUERIES
-
-    wu = ATTR_WINDOW_S * 1_000_000
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    ev = con.execute(
-        "SELECT user_id, event_type, event_id, props, epoch_us(ts) "
-        "FROM events"
-    ).fetchall()
-    buys = [(u, eid, t) for u, et, eid, _p, t in ev if et == "purchase"]
-    clicks = defaultdict(list)
-    for u, et, eid, p, t in ev:
-        if et == "click":
-            clicks[u].append((t, eid, p))
-    first_n = defaultdict(int)
-    last_n = defaultdict(int)
-    linear = defaultdict(list)  # channel -> [(conv, click, credit)]
-    touches = defaultdict(int)
-    n_attr = 0
-    for u, conv, tc in buys:
-        cand = [
-            (t, eid, p)
-            for t, eid, p in clicks.get(u, [])
-            if tc - wu < t <= tc
-        ]
-        if not cand:
-            continue
-        n_attr += 1
-        k = len(cand)
-        first_n[min(cand)[2]] += 1
-        last_n[max(cand)[2]] += 1
-        for t, eid, p in cand:
-            linear[p].append((conv, eid, 1.0 / k))
-            touches[p] += 1
-    lin = {
-        ch: sum(c for _conv, _eid, c in sorted(v))
-        for ch, v in linear.items()
-    }
-    rows = con.execute(QUERIES["attribution"][1]).fetchall()
-    assert len(rows) == len(lin) > 0
-    sum_first = sum_last = sum_lin = 0.0
-    for ch, fn, ln_, lc, tch, n_conv, n_at in rows:
-        assert fn == first_n.get(ch, 0)
-        assert ln_ == last_n.get(ch, 0)
-        assert tch == touches[ch]
-        e = lin[ch]
-        frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-        assert frac > 1e-4, (ch, e)
-        assert lc == round(e, 6)
-        assert n_conv == len(buys) and n_at == n_attr
-        sum_first += fn
-        sum_last += ln_
-        sum_lin += e
-    assert sum_first == sum_last == n_attr
-    assert abs(sum_lin - n_attr) < 1e-9  # linear credit conservation
-    assert first_n != last_n, "first/last never disagree (degenerate)"
-
-
-def test_kaplan_meier_pure_python_replay_and_km_invariants():
-    """KM (`kaplan_meier`): a pure-Python replay — purchase spans, the
-    churn-gap rule, risk sets with the censored-after-event tie
-    convention, the pinned survival product — must match the DuckDB
-    oracle at sf0.001; S is strictly decreasing across event times and
-    stays in (0, 1]; both censoring branches are live (0 < n_events <
-    n_subjects); n_risk is non-increasing in t; margins on q and s."""
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        _DAY_US,
-        KM_GAP_DAYS,
-        QUERIES,
-        RET_EVENT,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute(
-        "SELECT user_id, epoch_us(ts) FROM events WHERE event_type = ?",
-        [RET_EVENT],
-    ).fetchall()
-    span = defaultdict(lambda: [None, None])
-    for u, um in raw:
-        d = um // _DAY_US
-        s = span[u]
-        s[0] = d if s[0] is None else min(s[0], d)
-        s[1] = d if s[1] is None else max(s[1], d)
-    h = max(s[1] for s in span.values())
-    subj = []
-    for u, (d0, d1) in span.items():
-        ev = 1 if h - d1 > KM_GAP_DAYS else 0
-        subj.append(((d1 - d0) if ev else (h - d0), ev))
-    n_subjects = len(subj)
-    n_events = sum(e for _d, e in subj)
-    assert 0 < n_events < n_subjects
-    times = sorted({d for d, e in subj if e})
-    s_prod = 1.0
-    exp = {}
-    for t in times:
-        n_risk = sum(1 for d, _e in subj if d >= t)
-        d_t = sum(1 for d, e in subj if d == t and e)
-        q = 1.0 - d_t / n_risk
-        s_prod *= q
-        exp[t] = (n_risk, d_t, q, s_prod)
-    rows = con.execute(QUERIES["kaplan_meier"][1]).fetchall()
-    assert len(rows) == len(times)
-    prev_s, prev_risk, prev_t = 1.0 + 1e-12, None, None
-    for t, n_risk, d, q, s, gns, gne in sorted(rows):
-        en, ed, eq, es = exp[t]
-        assert (n_risk, d) == (en, ed)
-        for got, e in ((q, eq), (s, es)):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4, (t, e)
-            assert got == round(e, 6)
-        assert (gns, gne) == (n_subjects, n_events)
-        assert 0.0 < es <= 1.0 and es < prev_s
-        if prev_risk is not None:
-            assert n_risk <= prev_risk and t > prev_t
-        prev_s, prev_risk, prev_t = es, n_risk, t
-
-
-def test_benford_test_pure_python_replay_and_verdicts():
-    """Benford (`benford_test`): a pure-Python replay — cents-string raw
-    digits, literal-threshold synthetic digits, chi² in digit order —
-    must match the DuckDB oracle at sf0.001; the planted log-uniform
-    scope CONFORMS and the raw scope REJECTS; every u sits clear of a
-    digit threshold (the one discretization hazard); observed counts
-    sum to N per scope; margins on the rounded doubles."""
-    import hashlib
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        _BENFORD_GRID,
-        BENFORD_CRIT,
-        BENFORD_P,
-        BENFORD_T,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute(
-        "SELECT event_id, value FROM events WHERE value > 0"
-    ).fetchall()
-    cnt = {"raw": Counter(), "benford": Counter(), "uniform": Counter()}
-    for eid, v in raw:
-        cnt["raw"][int(str(round(v * 100))[0])] += 1
-        u = (
-            int(hashlib.md5(f"bf|{eid}".encode()).hexdigest()[:15], 16)
-            % _BENFORD_GRID
-        ) / _BENFORD_GRID
-        for d, t in BENFORD_T.items():
-            assert abs(u - t) > 1e-9, (eid, u, t)  # off the threshold
-        digit = 9
-        for d in range(9, 1, -1):
-            if u < BENFORD_T[d]:
-                digit = d - 1
-        cnt["benford"][digit] += 1
-        cnt["uniform"][
-            int(hashlib.md5(f"bu|{eid}".encode()).hexdigest()[:15], 16) % 9
-            + 1
-        ] += 1
-    n = len(raw)
-    exp = {}
-    for scope in ("raw", "benford", "uniform"):
-        chi2 = 0.0
-        for d in range(1, 10):
-            e = n * BENFORD_P[d]
-            o = cnt[scope].get(d, 0)
-            chi2 += (o - e) * (o - e) / e
-        exp[scope] = chi2
-    assert exp["uniform"] > BENFORD_CRIT, exp  # planted reject
-    assert exp["benford"] <= BENFORD_CRIT, exp  # planted conform
-    rows = con.execute(QUERIES["benford_test"][1]).fetchall()
-    assert len(rows) == 27
-    for scope, digit, obs, expd, pb, chi2, verdict in rows:
-        assert obs == cnt[scope].get(digit, 0)
-        for got, e in (
-            (expd, n * BENFORD_P[digit]),
-            (pb, BENFORD_P[digit]),
-            (chi2, exp[scope]),
-        ):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4, (scope, digit, e)
-            assert got == round(e, 6)
-        assert verdict == (
-            "reject" if exp[scope] > BENFORD_CRIT else "conform"
-        )
-    assert sum(cnt["raw"].values()) == sum(cnt["benford"].values()) == n
-
-
-def test_isotonic_calibration_pav_theorem_and_replay():
-    """Isotonic (`isotonic_calibration`): the oracle's minimax fit must
-    equal a REAL stack-based PAV pool loop bin-for-bin in BOTH scopes at
-    sf0.001 (the Ayer minimax identity, checked on data); fits are
-    monotone; the degraded scope's planted high-bin label flips create
-    genuine violators so pooling FIRES, and its weighted calibration
-    error strictly improves (drift_after < ece_before); margins on
-    rounded doubles."""
-    import hashlib
-    import math
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        ECE_BINS,
-        ISO_FLIP_BIN,
-        ISO_FLIP_MOD,
-        QUERIES,
-        _ECE_SCALE,
-        _sql_logreg_chain,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    scored = con.execute(
-        f"WITH {_sql_logreg_chain()} SELECT doc_id, y, p FROM scores"
-    ).fetchall()
-    width = _ECE_SCALE // ECE_BINS
-
-    def pav_fit(agg, bins):
-        stack = []
-        for b in bins:
-            n, ny, _ssp = agg[b]
-            stack.append([ny, n])
-            while (
-                len(stack) >= 2
-                and stack[-2][0] * stack[-1][1]
-                >= stack[-1][0] * stack[-2][1]
-            ):
-                y2, n2 = stack.pop()
-                stack[-1][0] += y2
-                stack[-1][1] += n2
-        out, i = {}, 0
-        for sy, sn in stack:
-            cnt = 0
-            while cnt < sn:
-                out[bins[i]] = sy / sn
-                cnt += agg[bins[i]][0]
-                i += 1
-        return out
-
-    exp = {}
-    for scope in ("model", "degraded"):
-        agg = {}
-        for d, y, p in scored:
-            sp = round(p * _ECE_SCALE)
-            b = min(sp // width, ECE_BINS - 1)
-            ye = y
-            if scope == "degraded":
-                h = (
-                    int(
-                        hashlib.md5(f"iso|{d}".encode()).hexdigest()[:15], 16
-                    )
-                    % ISO_FLIP_MOD
-                )
-                if h == 0 and b >= ISO_FLIP_BIN:
-                    ye = 1 - y
-            n, ny, ssp = agg.get(b, (0, 0, 0))
-            agg[b] = (n + 1, ny + ye, ssp + sp)
-        bins = sorted(agg)
-        pav = pav_fit(agg, bins)
-        tn = sum(agg[b][0] for b in bins)
-        ece_b = sum(
-            agg[b][0]
-            * abs(
-                agg[b][1] / agg[b][0] - agg[b][2] / (agg[b][0] * _ECE_SCALE)
-            )
-            for b in bins
-        ) / tn
-        drift_a = sum(
-            agg[b][0] * abs(pav[b] - agg[b][2] / (agg[b][0] * _ECE_SCALE))
-            for b in bins
-        ) / tn
-        exp[scope] = (agg, pav, ece_b, drift_a)
-    # degraded scope: violators exist, pooling fires, error improves
-    dagg = exp["degraded"][0]
-    dacc = [dagg[b][1] / dagg[b][0] for b in sorted(dagg)]
-    assert any(dacc[i] > dacc[i + 1] for i in range(len(dacc) - 1))
-    assert exp["degraded"][3] < exp["degraded"][2]
-    rows = con.execute(QUERIES["isotonic_calibration"][1]).fetchall()
-    assert len(rows) == sum(len(a) for a, _p, _e, _d in exp.values())
-    prev = {}
-    for scope, b, n, ny, conf, acc, iso, geb, gda in sorted(
-        rows, key=lambda r: (r[0], r[1])
-    ):
-        agg, pav, ece_b, drift_a = exp[scope]
-        en, eny, essp = agg[b]
-        assert (n, ny) == (en, eny)
-        for got, e in (
-            (conf, essp / (en * _ECE_SCALE)),
-            (acc, eny / en),
-            (iso, pav[b]),  # the minimax == PAV theorem
-            (geb, ece_b),
-            (gda, drift_a),
-        ):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4, (scope, b, e)
-            assert got == round(e, 6), (scope, b, got, e)
-        assert iso >= prev.get(scope, -1.0) - 1e-12
-        prev[scope] = iso
-
-
-def test_window_funcs_pure_python_replay():
-    """Window family (`window_funcs`): a pure-Python replay of all
-    eleven ranking/navigation functions with standard tie semantics
-    must match the DuckDB oracle at sf0.001; ties genuinely exist
-    (rank != dense_rank somewhere); lag/lead invert each other; ntile
-    sizes are balanced; margins on the two rounded doubles."""
-    import hashlib
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, doc_id FROM documents").fetchall()
-    groups = defaultdict(list)
-    for src, d in raw:
-        k = int(hashlib.md5(f"wf|{d}".encode()).hexdigest()[:15], 16) % 5
-        groups[src].append((k, d))
-    exp = {}
-    for src, items in groups.items():
-        items.sort()
-        n = len(items)
-        kvals = [k for k, _d in items]
-        for i, (k, d) in enumerate(items):
-            rn = i + 1
-            rnk = kvals.index(k) + 1
-            drnk = len(set(kvals[: kvals.index(k)])) + 1
-            pr = (rnk - 1) / (n - 1) if n > 1 else 0.0
-            cd = (
-                max(j + 1 for j, kv in enumerate(kvals) if kv == k) / n
-            )
-            # ntile over n rows into 4 buckets: first (n % 4) buckets get
-            # ceil(n/4)
-            q, r = divmod(n, 4)
-            boundaries = []
-            pos = 0
-            for b in range(4):
-                size = q + (1 if b < r else 0)
-                boundaries.append((pos, pos + size))
-                pos += size
-            nt = next(
-                b + 1
-                for b, (lo, hi) in enumerate(boundaries)
-                if lo <= i < hi
-            )
-            exp[(src, d)] = {
-                "k": k,
-                "rn": rn,
-                "rnk": rnk,
-                "drnk": drnk,
-                "pr": pr,
-                "cd": cd,
-                "nt": nt,
-                "lag": items[i - 1][1] if i > 0 else None,
-                "lead": items[i + 1][1] if i < n - 1 else None,
-                "nth3": items[2][1] if n >= 3 else None,
-                "first": items[0][1],
-                "last": items[-1][1],
-            }
-    rows = con.execute(QUERIES["window_funcs"][1]).fetchall()
-    assert len(rows) == len(exp)
-    tie_seen = False
-    for (src, d, k, rn, rnk, drnk, pr, cd, nt, lag, lead, nth3,
-         first, last) in rows:
-        e = exp[(src, d)]
-        assert k == e["k"]
-        assert (rn, rnk, drnk, nt) == (e["rn"], e["rnk"], e["drnk"], e["nt"])
-        for got, ev in ((pr, e["pr"]), (cd, e["cd"])):
-            frac = abs(ev * 1e6 - math.floor(ev * 1e6) - 0.5)
-            assert frac > 1e-4 or frac < 1e-12, (src, d, ev)
-            assert got == math.floor(ev * 1e6 + 0.5) / 1e6
-        assert (lag, lead) == (e["lag"], e["lead"])
-        assert (nth3, first, last) == (e["nth3"], e["first"], e["last"])
-        tie_seen = tie_seen or rnk != drnk
-    assert tie_seen, "no ties — rank/dense_rank never diverge"
-
-
-def test_quantile_normalize_pure_python_replay_and_alignment():
-    """Quantile normalization (`quantile_normalize`): a pure-Python
-    replay — within-source (v, doc_id) ranks, across-source per-rank
-    means — must match the DuckDB oracle at sf0.001; the DEFINING
-    property holds: after the transform every source carries the
-    identical normalized multiset; groups are uniform (the total-rank
-    precondition); the transform is monotone within each source."""
-    import math
-    import re
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, doc_id, text FROM documents").fetchall()
-    groups = defaultdict(list)
-    for src, d, t in raw:
-        groups[src].append((len(re.findall("[a-z0-9]+", t.lower())), d))
-    sizes = {len(v) for v in groups.values()}
-    assert len(sizes) == 1  # uniform groups (precondition)
-    ranked = {}
-    ref = defaultdict(lambda: [0, 0])
-    for src, items in groups.items():
-        items.sort()
-        for i, (v, d) in enumerate(items, 1):
-            ranked[(src, d)] = (v, i)
-            ref[i][0] += v
-            ref[i][1] += 1
-    rows = con.execute(QUERIES["quantile_normalize"][1]).fetchall()
-    assert len(rows) == len(ranked)
-    per_source = defaultdict(list)
-    for src, d, v, r, rs, ns, norm in rows:
-        ev, er = ranked[(src, d)]
-        assert (v, r) == (ev, er)
-        assert (rs, ns) == tuple(ref[r])
-        e = rs / ns
-        frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-        assert frac > 1e-4 or frac < 1e-12, (r, e)
-        assert norm == math.floor(e * 1e6 + 0.5) / 1e6
-        per_source[src].append((r, norm))
-    dists = {
-        src: tuple(sorted(v)) for src, v in per_source.items()
-    }
-    assert len(set(dists.values())) == 1, "multisets differ post-transform"
-    for src, v in per_source.items():
-        seq = [norm for _r, norm in sorted(v)]
-        assert all(a <= b for a, b in zip(seq, seq[1:]))
-
-
-def test_seasonal_decompose_pure_python_replay_and_identity():
-    """Decompose (`seasonal_decompose`): a pure-Python replay — dense
-    grid, paired 24-hour window sums (the 2x24 centered MA), integer
-    detrending, per-hour-of-day seasonal means with pinned-order
-    centering — must match the DuckDB oracle at sf0.001; the additive
-    identity y == trend + seasonal + resid holds to float tolerance on
-    every row; centered seasonals sum to ~0; only full-window rows are
-    emitted; margins on rounded doubles."""
-    import math
-    from collections import Counter, defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES, SD_PERIOD
-
-    p = SD_PERIOD
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    hrs = con.execute(
-        "SELECT epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(h for (h,) in hrs)
-    grid = list(range(min(c), max(c) + 1, 3_600_000_000))
-    ys = [c.get(h, 0) for h in grid]
-    n = len(ys)
-    half = p // 2
-    valid = {}
-    for i in range(n):  # 0-based; t = i + 1
-        lo1, hi1 = i - half, i + half - 1
-        lo2, hi2 = i - half + 1, i + half
-        if lo1 < 0 or hi2 >= n:
-            continue
-        strend = sum(ys[lo1 : hi1 + 1]) + sum(ys[lo2 : hi2 + 1])
-        valid[i + 1] = (ys[i], strend, i % p)
-    s_num = defaultdict(int)
-    s_cnt = defaultdict(int)
-    for t, (y, strend, hod) in valid.items():
-        s_num[hod] += 2 * p * y - strend
-        s_cnt[hod] += 1
-    sraw = {h: s_num[h] / (2 * p * s_cnt[h]) for h in s_num}
-    center = sum(sraw[h] for h in sorted(sraw)) / len(sraw)
-    seasonal = {h: sraw[h] - center for h in sraw}
-    assert abs(sum(seasonal.values())) < 1e-9
-    rows = con.execute(QUERIES["seasonal_decompose"][1]).fetchall()
-    assert len(rows) == len(valid)
-    for t, epoch, y, hod, strend, trend, sea, resid in rows:
-        ey, es, eh = valid[t]
-        assert (y, strend, hod) == (ey, es, eh)
-        et = es / (2 * p)
-        for got, e in (
-            (trend, et),
-            (sea, seasonal[eh]),
-            (resid, ey - et - seasonal[eh]),
-        ):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4 or frac < 1e-12, (t, e)
-            # engines round half AWAY FROM ZERO (sign-aware)
-            exp6 = math.copysign(
-                math.floor(abs(e) * 1e6 + 0.5), e
-            ) / 1e6
-            assert got == exp6, (t, got, e)
-        assert abs(y - (et + seasonal[eh] + (ey - et - seasonal[eh]))) < 1e-9
-        assert epoch == grid[t - 1] // 1_000_000
-
-
-def test_active_users_pure_python_replay_and_bounds():
-    """Engagement (`active_users`): a pure-Python replay — (user, day)
-    dedup, trailing-7-day distinct actives via brute force — must match
-    the DuckDB oracle (which uses the contribution-explode; equality IS
-    the explode-trick proof on data) at sf0.001; DAU <= WAU always;
-    stickiness in (0, 1]; only full-window days emit; WAU is genuinely
-    larger than DAU somewhere (the window matters)."""
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import _DAY_US, AU_WINDOW, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute("SELECT user_id, epoch_us(ts) FROM events").fetchall()
-    days = defaultdict(set)
-    for u, um in raw:
-        days[um // _DAY_US].add(u)
-    d0, d1 = min(days), max(days)
-    exp = {}
-    for d in range(d0 + AU_WINDOW - 1, d1 + 1):
-        dau = len(days.get(d, set()))
-        wau = len(set().union(*(days.get(x, set())
-                                for x in range(d - AU_WINDOW + 1, d + 1))))
-        exp[d] = (dau, wau)
-    rows = con.execute(QUERIES["active_users"][1]).fetchall()
-    assert len(rows) == len([d for d in exp if exp[d][0] > 0])
-    widened = False
-    for day, dau, wau, stick in rows:
-        ed, ew = exp[day]
-        assert (dau, wau) == (ed, ew)
-        assert dau <= wau
-        e = dau / wau
-        frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-        assert frac > 1e-4 or frac < 1e-12, (day, e)
-        assert stick == math.floor(e * 1e6 + 0.5) / 1e6
-        assert 0.0 < stick <= 1.0
-        widened = widened or wau > dau
-    assert widened, "window never widens (degenerate)"
-
-
-def test_diff_in_diff_pure_python_replay_and_bias_removal():
-    """DiD (`diff_in_diff`): a pure-Python replay — md5 arms, integer
-    midpoint periods, planted confound+effect, BIGINT moments, the
-    4-cell contrast — must match the DuckDB oracle at sf0.001; DiD
-    recovers the planted effect within 3 SEs while the naive post-only
-    diff is biased by approximately the baseline confound (it must
-    exceed DiD by more than half the confound); t_did is significant;
-    margins on rounded doubles."""
-    import hashlib
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        _DAY_US,
-        DID_BASE,
-        DID_EFFECT,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute("SELECT user_id, epoch_us(ts) FROM events").fetchall()
-    days = [um // _DAY_US for _u, um in raw]
-    mid = (min(days) + max(days)) // 2
-    counts = defaultdict(int)
-    for u, um in raw:
-        d = um // _DAY_US
-        treat = (
-            int(hashlib.md5(f"did|{u}".encode()).hexdigest()[:15], 16) % 2
-        )
-        counts[(u, treat, 1 if d > mid else 0)] += 1
-    cells = defaultdict(lambda: [0, 0, 0])  # n, sy, syy
-    for (u, treat, post), c0 in counts.items():
-        y = c0 + treat * DID_BASE + treat * post * DID_EFFECT
-        cell = cells[(treat, post)]
-        cell[0] += 1
-        cell[1] += y
-        cell[2] += y * y
-    m = {}
-    vn = {}
-    for k, (n, sy, syy) in cells.items():
-        mean = sy / n
-        var = (syy - n * mean * mean) / (n - 1)
-        m[k] = mean
-        vn[k] = var / n
-    did = (m[(1, 1)] - m[(1, 0)]) - (m[(0, 1)] - m[(0, 0)])
-    naive = m[(1, 1)] - m[(0, 1)]
-    se = math.sqrt(vn[(1, 1)] + vn[(1, 0)] + vn[(0, 1)] + vn[(0, 0)])
-    assert abs(did - DID_EFFECT) < 3 * se
-    assert naive - did > DID_BASE / 2  # the bias DiD removes
-    assert did / se > 3  # the effect is detected
-    rows = con.execute(QUERIES["diff_in_diff"][1]).fetchall()
-    assert len(rows) == 4
-    for treat, post, n, mean, var, gdid, gnaive, gse, gt in rows:
-        en, esy, esyy = cells[(treat, post)]
-        assert n == en
-        emean = esy / en
-        evar = (esyy - en * emean * emean) / (en - 1)
-        for got, e in (
-            (mean, emean),
-            (var, evar),
-            (gdid, did),
-            (gnaive, naive),
-            (gse, se),
-            (gt, did / se),
-        ):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4 or frac < 1e-12, (treat, post, e)
-            exp6 = math.copysign(math.floor(abs(e) * 1e6 + 0.5), e) / 1e6
-            assert got == exp6, (treat, post, got, e)
-
-
-def test_json_extract_pure_python_replay_and_null_contract():
-    """JSON (`json_extract`): a pure-Python replay — the planted corrupt
-    slice, $.k extraction, per-key rollups with distinct users — must
-    match the DuckDB oracle at sf0.001; corrupted payloads yield NULL
-    (n_valid + n_corrupt == n_total exactly — the shared parse-failure
-    contract); every k in 0..99; counts reconcile."""
-    import hashlib
-    import json as jsonlib
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import JSON_CORRUPT_MOD, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute(
-        "SELECT event_id, user_id, props FROM events"
-    ).fetchall()
-    per = defaultdict(lambda: [0, set()])
-    n_total, n_valid = 0, 0
-    for eid, u, props in raw:
-        n_total += 1
-        h = (
-            int(hashlib.md5(f"js|{eid}".encode()).hexdigest()[:15], 16)
-            % JSON_CORRUPT_MOD
-        )
-        if h == 0:
-            continue  # corrupted → NULL k
-        k = jsonlib.loads(props)["k"]
-        n_valid += 1
-        cell = per[k]
-        cell[0] += 1
-        cell[1].add(u)
-    assert 0 < n_valid < n_total
-    rows = con.execute(QUERIES["json_extract"][1]).fetchall()
-    assert len(rows) == len(per)
-    for k, n, n_users, gt, gv in rows:
-        assert 0 <= k <= 99
-        assert n == per[k][0] and n_users == len(per[k][1])
-        assert (gt, gv) == (n_total, n_valid)
-    assert sum(r[1] for r in rows) == n_valid
-
-
-def test_mann_kendall_pure_python_replay_and_verdicts():
-    """Mann-Kendall (`mann_kendall`): a brute-force pure-Python pair-sum
-    replay — S, tie-corrected variance numerator, continuity-corrected
-    Z — must match the DuckDB oracle at sf0.001; the planted drift
-    scope reads 'trend' and the raw scope 'no_trend'; S is bounded by
-    n_pairs; every quantity up to Z is integer-exact."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        _MK_CRIT,
-        MK_GRID,
-        MK_RATE,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    hrs = con.execute(
-        "SELECT epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(h for (h,) in hrs)
-    grid = list(range(min(c), max(c) + 1, 3_600_000_000))
-    xs = [c.get(h, 0) for h in grid]
-    exp = {}
-    for scope in ("same", "trended"):
-        ys = [
-            x + ((t * MK_RATE) // MK_GRID if scope == "trended" else 0)
-            for t, x in enumerate(xs, 1)
-        ]
-        n = len(ys)
-        s_stat = sum(
-            (1 if ys[j] > ys[i] else -1 if ys[j] < ys[i] else 0)
-            for i in range(n)
-            for j in range(i + 1, n)
-        )
-        tie = sum(
-            tc * (tc - 1) * (2 * tc + 5) for tc in Counter(ys).values()
-        )
-        var_num = n * (n - 1) * (2 * n + 5) - tie
-        var = var_num / 18.0
-        z = (
-            (s_stat - 1.0) / math.sqrt(var)
-            if s_stat > 0
-            else (s_stat + 1.0) / math.sqrt(var)
-            if s_stat < 0
-            else 0.0
-        )
-        exp[scope] = (s_stat, n * (n - 1) // 2, n, tie, var_num, z)
-    assert abs(exp["same"][5]) <= _MK_CRIT, exp["same"]
-    assert abs(exp["trended"][5]) > _MK_CRIT, exp["trended"]
-    rows = con.execute(QUERIES["mann_kendall"][1]).fetchall()
-    assert len(rows) == 2
-    for scope, s_stat, n_pairs, n, tie, var_num, z, verdict in rows:
-        es, ep, en, et, ev, ez = exp[scope]
-        assert (s_stat, n_pairs, n, tie, var_num) == (es, ep, en, et, ev)
-        assert abs(s_stat) <= n_pairs
-        frac = abs(ez * 1e6 - math.floor(ez * 1e6) - 0.5)
-        assert frac > 1e-4, (scope, ez)
-        exp6 = math.copysign(math.floor(abs(ez) * 1e6 + 0.5), ez) / 1e6
-        assert z == exp6
-        assert verdict == ("trend" if abs(ez) > _MK_CRIT else "no_trend")
-    assert {r[7] for r in rows} == {"trend", "no_trend"}
-
-
-def test_pivot_table_pure_python_replay():
-    """Pivot (`pivot_table`): a pure-Python replay — per-(source, lang)
-    counts and char sums widened over the pinned language list with
-    zero fill — must match the DuckDB oracle at sf0.001; row totals
-    reconcile with the corpus; at least one zero-filled cell exists
-    (the fill path is live); all-BIGINT."""
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import PIVOT_LANGS, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute(
-        "SELECT source, lang, n_chars FROM documents"
-    ).fetchall()
-    cells = defaultdict(lambda: [0, 0])
-    sources = set()
-    for src, lg, nc in raw:
-        assert lg in PIVOT_LANGS
-        sources.add(src)
-        cell = cells[(src, lg)]
-        cell[0] += 1
-        cell[1] += nc
-    rows = con.execute(QUERIES["pivot_table"][1]).fetchall()
-    assert len(rows) == len(sources)
-    zero_seen = False
-    total_n = 0
-    for row in rows:
-        src = row[0]
-        vals = row[1:]
-        for i, lg in enumerate(PIVOT_LANGS):
-            n, chars = vals[2 * i], vals[2 * i + 1]
-            en, ec = cells.get((src, lg), [0, 0])
-            assert (n, chars) == (en, ec), (src, lg)
-            zero_seen = zero_seen or n == 0
-            total_n += n
-    assert total_n == len(raw)
-    assert zero_seen, "no zero cells — fill path untested"
-
-
-def test_rake_keyphrases_pure_python_replay():
-    """RAKE (`rake_keyphrases`): a pure-Python replay — stopword-split
-    runs, the bounded-phrase filter, occurrence-weighted word
-    degree/frequency, position-ordered deg/freq phrase sums, the
-    (score, phrase) top-K — must match the DuckDB oracle at sf0.001;
-    multiword phrases appear in the top-K (the capability the operator
-    exists for); every top score is positive; the K-th boundary has no
-    cross-engine tie hazard (exact doubles + phrase tie-break)."""
-    import math
-    import re
-    from collections import Counter, defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        QUERIES,
-        RAKE_K,
-        RAKE_MAX_LEN,
-        STOPWORDS_EN,
-    )
-
-    stops = set(STOPWORDS_EN)
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT doc_id, text FROM documents").fetchall()
-    occ = []
-    for _d, t in raw:
-        toks = re.findall("[a-z0-9]+", t.lower())
-        run = []
-        for tok in toks + ["|"]:
-            if tok in stops or tok == "|":
-                if 1 <= len(run) <= RAKE_MAX_LEN:
-                    occ.append(tuple(run))
-                run = []
-            else:
-                run.append(tok)
-    freq = Counter()
-    deg = Counter()
-    for ph in occ:
-        for w in ph:
-            freq[w] += 1
-            deg[w] += len(ph)
-    scores = {}
-    counts = Counter(occ)
-    for ph in counts:
-        s = 0.0
-        for w in ph:
-            s += deg[w] / freq[w]
-        scores[ph] = s
-    ranked = sorted(
-        counts, key=lambda p: (-scores[p], " ".join(p))
-    )[:RAKE_K]
-    rows = con.execute(QUERIES["rake_keyphrases"][1]).fetchall()
-    assert len(rows) == min(RAKE_K, len(counts))
-    multi = False
-    for rank, phrase, n_occ, score in sorted(rows):
-        ph = tuple(phrase.split(" "))
-        assert ph == ranked[rank - 1], (rank, phrase)
-        assert n_occ == counts[ph]
-        e = scores[ph]
-        frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-        assert frac > 1e-4 or frac < 1e-12, (phrase, e)
-        assert score == math.floor(e * 1e6 + 0.5) / 1e6
-        assert score > 0
-        multi = multi or len(ph) > 1
-    assert multi, "no multiword keyphrases in top-K"
-
-
-def test_ips_eval_pure_python_replay_and_counterfactual_gap():
-    """IPS (`ips_eval`): a pure-Python replay — md5 logged actions,
-    planted target-arm bonus, both target policies — must match the
-    DuckDB oracle at sf0.001; the estimator recovers the counterfactual
-    structure: V(optimal) - V(shifted) lands within noise of the
-    planted bonus, and the shifted policy's matched rewards NEVER
-    contain the bonus (its matches are never the target arm); match
-    rates are ~1/K; margins on rounded doubles."""
-    import hashlib
-    import math
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        IPS_BASE_MOD,
-        IPS_BONUS,
-        IPS_K,
-        QUERIES,
-    )
-
-    def h(s, mod):
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % mod
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute("SELECT event_id, user_id FROM events").fetchall()
-    logs = []
-    for eid, u in raw:
-        a = h(f"act|{eid}", IPS_K)
-        tgt = h(f"tgt|{u}", IPS_K)
-        r = h(f"rw|{eid}", IPS_BASE_MOD) + (IPS_BONUS if a == tgt else 0)
-        logs.append((a, tgt, r))
-    n = len(logs)
-    exp = {}
-    for policy, shift in (("optimal", 0), ("shifted", 1)):
-        matched = [
-            (a, tgt, r) for a, tgt, r in logs if a == (tgt + shift) % IPS_K
-        ]
-        smr = sum(r for _a, _t, r in matched)
-        exp[policy] = (
-            len(matched),
-            smr,
-            IPS_K * smr / n,
-            sum(r for _a, _t, r in logs) / n,
-        )
-        if policy == "shifted":
-            # shifted matches are never the target arm → no bonus inside
-            assert all(r < IPS_BASE_MOD for _a, _t, r in matched)
-    gap = exp["optimal"][2] - exp["shifted"][2]
-    assert abs(gap - IPS_BONUS) < 4.0, gap  # recovers the planted bonus
-    rows = con.execute(QUERIES["ips_eval"][1]).fetchall()
-    assert len(rows) == 2
-    for policy, gn, n_match, smr, ips, avg in rows:
-        em, esmr, eips, eavg = exp[policy]
-        assert (gn, n_match, smr) == (n, em, esmr)
-        assert abs(em / n - 1.0 / IPS_K) < 0.05  # uniform logging
-        for got, e in ((ips, eips), (avg, eavg)):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4 or frac < 1e-12, (policy, e)
-            assert got == math.floor(e * 1e6 + 0.5) / 1e6
-
-
-def test_pca_power_pure_python_replay_and_quantized_margins():
-    """PCA (`pca_power`): a pure-Python replay — quantized mean
-    centering, 8 quantized-state power rounds, final loadings/
-    eigenvalue/explained share — must match the DuckDB oracle at
-    sf0.001; EVERY quantized component (64 mu + 64x8 loadings) sits
-    >= 1e-4 x 1e-6 away from its rounding boundary (the erasure-safety
-    margin); the loading vector is unit-norm to quantization tolerance;
-    the dominant eigenvalue exceeds the average per-dim variance (it IS
-    the dominant axis); the iteration converged (last two rounds'
-    loadings agree to 1e-3)."""
-    import math
-
-    import duckdb
-
-    from htep_spark.driver_queries import PCA_DIM, PCA_ITERS, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/embeddings.parquet')"
-    )
-    raw = con.execute(
-        "SELECT vec_id, embedding FROM embeddings ORDER BY vec_id"
-    ).fetchall()
-    X = [[float(v) for v in e] for _i, e in raw]
-    n, d = len(X), PCA_DIM
-    assert all(len(r) == d for r in X)
-
-    def q6(x):
-        return math.copysign(math.floor(abs(x) * 1e6 + 0.5), x) / 1e6
-
-    def margin_ok(x):
-        f = abs(abs(x) * 1e6 - math.floor(abs(x) * 1e6) - 0.5)
-        return f > 1e-4
-
-    mu_raw = [sum(r[j] for r in X) / n for j in range(d)]
-    assert all(margin_ok(m) for m in mu_raw)
-    mu = [q6(m) for m in mu_raw]
-    C = [[r[j] - mu[j] for j in range(d)] for r in X]
-    v = [1.0 / math.sqrt(d)] * d
-    moves = []
-    norm = None
-    for _ in range(PCA_ITERS):
-        s = [sum(c[j] * v[j] for j in range(d)) for c in C]
-        w = [sum(C[i][j] * s[i] for i in range(n)) for j in range(d)]
-        norm = math.sqrt(sum(t * t for t in w))
-        raw_v = [t / norm for t in w]
-        assert all(margin_ok(t) for t in raw_v)
-        new_v = [q6(t) for t in raw_v]
-        moves.append(max(abs(a - b) for a, b in zip(new_v, v)))
-        v = new_v
-    unit = sum(t * t for t in v)
-    assert abs(unit - 1.0) < 1e-4
-    # random embeddings have a small eigen-gap, so full convergence in 8
-    # rounds isn't expected — assert the movement DECAYS (power iteration
-    # is working) and is already small
-    assert moves[-1] < moves[0] / 5 and moves[-1] < 0.05, moves
-    ss = sum(c[j] ** 2 for c in C for j in range(d))
-    eigval = norm / (n - 1)
-    avg_var = ss / (n - 1) / d
-    assert eigval > avg_var  # dominant axis beats the average
-    rows = con.execute(QUERIES["pca_power"][1]).fetchall()
-    assert len(rows) == d
-    for dd, gmu, loading, eig_norm, geig, gshare in rows:
-        assert gmu == mu[dd - 1]
-        assert loading == v[dd - 1], (dd, loading, v[dd - 1])
-        for got, e in (
-            (eig_norm, norm),
-            (geig, norm / (n - 1)),
-            (gshare, norm / ss),
-        ):
-            assert margin_ok(e), e
-            assert got == q6(e)
-
-
-def test_mutual_info_pure_python_replay_and_dependence():
-    """MI (`mutual_info`): a pure-Python replay — both scopes'
-    contingency cells, pinned-order MI/entropy folds, normalized MI —
-    must match the DuckDB oracle at sf0.001; the coupled scope's MI
-    clearly exceeds the natural scope's (the planted dependence);
-    0 <= nMI <= 1 + tolerance; marginals reconcile; margins on rounded
-    doubles."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        MI_COUPLE_MOD,
-        PIVOT_LANGS,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute(
-        "SELECT doc_id, lang, source FROM documents"
-    ).fetchall()
-    exp = {}
-    for scope in ("natural", "coupled"):
-        cells = Counter()
-        for d, lg, src in raw:
-            if scope == "coupled" and d % MI_COUPLE_MOD == 0:
-                lg = PIVOT_LANGS[int(src[3:]) % len(PIVOT_LANGS)]
-            cells[(lg, src)] += 1
-        n = sum(cells.values())
-        mx = Counter()
-        my = Counter()
-        for (lg, src), c in cells.items():
-            mx[lg] += c
-            my[src] += c
-        mi = sum(
-            (c / n) * math.log(c * n / (mx[lg] * my[src]))
-            for (lg, src), c in sorted(cells.items())
-        )
-        hx = sum(
-            -(v / n) * math.log(v / n) for _k, v in sorted(mx.items())
-        )
-        hy = sum(
-            -(v / n) * math.log(v / n) for _k, v in sorted(my.items())
-        )
-        exp[scope] = (cells, mx, my, n, mi, mi / min(hx, hy))
-    assert exp["coupled"][4] > exp["natural"][4] + 0.1, (
-        exp["coupled"][4],
-        exp["natural"][4],
-    )
-    rows = con.execute(QUERIES["mutual_info"][1]).fetchall()
-    assert len(rows) == sum(len(v[0]) for v in exp.values())
-    for scope, lg, src, nxy, nx, ny, n, mi, nmi in rows:
-        cells, mx, my, en, emi, enmi = exp[scope]
-        assert nxy == cells[(lg, src)]
-        assert (nx, ny, n) == (mx[lg], my[src], en)
-        for got, e in ((mi, emi), (nmi, enmi)):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4, (scope, e)
-            assert got == math.floor(e * 1e6 + 0.5) / 1e6
-        assert -1e-9 <= nmi <= 1.0 + 1e-9
-
-
-def test_critical_path_pure_python_replay_and_cpm_invariants():
-    """CPM (`critical_path`): a pure-Python longest-path DP replay over
-    the canonically-oriented DAG must match the DuckDB oracle at
-    sf0.001; the fixpoint flag is 1 (|V| rounds suffice); walking pred
-    pointers from the critical sink reproduces crit_len exactly and
-    terminates at a source; dist is edge-consistent (dist(v) >=
-    dist(u) + w for the chosen pred, == for the argmax); all-integer."""
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import CP_ROUNDS, PR_N_NODES, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, doc_id FROM documents").fetchall()
-    w = defaultdict(int)
-    for src, d in raw:
-        sn = int(src[3:])
-        a = sn % PR_N_NODES
-        b = (sn * 7 + d * 13 + 3) % PR_N_NODES
-        if a != b:
-            w[(min(a, b), max(a, b))] += 1
-    nodes = sorted({x for e in w for x in e})
-    in_edges = defaultdict(list)
-    for (u, v), wt in w.items():
-        in_edges[v].append((u, wt))
-    dist = {nd: 0 for nd in nodes}
-    pred = {nd: None for nd in nodes}
-    for _ in range(CP_ROUNDS):
-        nd_new = {}
-        pd_new = {}
-        for nd in nodes:
-            best = None
-            for u, wt in in_edges.get(nd, []):
-                cand = dist[u] + wt
-                key = (-cand, u)
-                if best is None or key < best:
-                    best = key
-            if best is not None and -best[0] > 0:
-                nd_new[nd], pd_new[nd] = -best[0], best[1]
-            else:
-                nd_new[nd], pd_new[nd] = 0, None
-        dist, pred = nd_new, pd_new
-    crit_sink = min(nodes, key=lambda nd: (-dist[nd], nd))
-    crit_len = dist[crit_sink]
-    assert crit_len > 0
-    # walk the path
-    cur, total, seen = crit_sink, 0, set()
-    while pred[cur] is not None:
-        assert cur not in seen
-        seen.add(cur)
-        p = pred[cur]
-        total += w[(min(p, cur), max(p, cur))]
-        cur = p
-    assert total == crit_len
-    assert dist[cur] == 0  # terminates at a source
-    rows = con.execute(QUERIES["critical_path"][1]).fetchall()
-    assert len(rows) == len(nodes)
-    for nd, d, p, cl, cs, is_sink, conv in rows:
-        assert d == dist[nd] and p == pred[nd]
-        assert (cl, cs) == (crit_len, crit_sink)
-        assert is_sink == (1 if nd == crit_sink else 0)
-        assert conv == 1
-        if p is not None:
-            assert d == dist[p] + w[(min(p, nd), max(p, nd))]
-
-
-def test_autocorrelation_pure_python_replay_and_structure():
-    """ACF (`autocorrelation`): a pure-Python replay — n-scaled integer
-    deviations, per-lag products, the biased-estimator normalization —
-    must match the DuckDB oracle at sf0.001 EXACTLY on the BIGINT
-    columns; acf in [-1, 1]; the lag-24 daily seasonality beats the
-    neighboring off-cycle lags (the structure ACF exists to reveal);
-    n_pairs = n - lag; the d values carry 1000x int64 headroom."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import ACF_MAX, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    hrs = con.execute(
-        "SELECT epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(h for (h,) in hrs)
-    grid = list(range(min(c), max(c) + 1, 3_600_000_000))
-    xs = [c.get(h, 0) for h in grid]
-    n, s = len(xs), sum(xs)
-    d = [n * x - s for x in xs]
-    assert max(abs(v) for v in d) < 2**63 / 1000 / max(abs(v) for v in d)
-    num0 = sum(v * v for v in d)
-    exp = {}
-    for lag in range(1, ACF_MAX + 1):
-        numk = sum(d[i] * d[i + lag] for i in range(n - lag))
-        exp[lag] = (numk, n - lag, numk / num0)
-    rows = con.execute(QUERIES["autocorrelation"][1]).fetchall()
-    assert len(rows) == ACF_MAX
-    acfs = {}
-    for lag, numk, gnum0, n_pairs, acf in rows:
-        en, ep, ea = exp[lag]
-        assert (numk, gnum0, n_pairs) == (en, num0, ep)
-        frac = abs(ea * 1e6 - math.floor(ea * 1e6) - 0.5)
-        assert frac > 1e-4, (lag, ea)
-        exp6 = math.copysign(math.floor(abs(ea) * 1e6 + 0.5), ea) / 1e6
-        assert acf == exp6
-        assert -1.0 - 1e-9 <= ea <= 1.0 + 1e-9
-        acfs[lag] = ea
-    # daily seasonality: lag 24 dominates its off-cycle neighbors
-    assert acfs[24] > acfs[20] and acfs[24] > acfs[28], (
-        acfs[20], acfs[24], acfs[28],
-    )
-
-
-def test_ohlc_bars_pure_python_replay_and_bar_invariants():
-    """OHLC (`ohlc_bars`): a pure-Python replay — hourly buckets, exact
-    (ts, event_id) open/close keys, integer-cent extrema, VWAP — must
-    match the DuckDB oracle at sf0.001; every bar satisfies
-    low <= open, close <= high and low <= vwap*100 <= high; bars with
-    one trade have open == close == high == low; multi-trade bars with
-    open != close exist (the keying matters)."""
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES, RET_EVENT
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute(
-        "SELECT event_id, epoch_us(ts), value FROM events "
-        "WHERE event_type = ?",
-        [RET_EVENT],
-    ).fetchall()
-    bars = defaultdict(list)
-    for eid, um, v in raw:
-        bars[um // 3_600_000_000].append((um, eid, round(v * 100)))
-    rows = con.execute(QUERIES["ohlc_bars"][1]).fetchall()
-    assert len(rows) == len(bars)
-    keyed_matters = False
-    for bar, n, o, hi, lo, cl, vwap in rows:
-        trades = bars[bar]
-        assert n == len(trades)
-        assert o == min(trades)[2] and cl == max(trades)[2]
-        cents = [c for _u, _e, c in trades]
-        assert hi == max(cents) and lo == min(cents)
-        e = sum(cents) / n / 100.0
-        frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-        assert frac > 1e-4 or frac < 1e-12, (bar, e)
-        assert vwap == math.floor(e * 1e6 + 0.5) / 1e6
-        assert lo <= o <= hi and lo <= cl <= hi
-        assert lo - 1e-6 <= e * 100 <= hi + 1e-6
-        if n == 1:
-            assert o == cl == hi == lo
-        keyed_matters = keyed_matters or (n > 1 and o != cl)
-    assert keyed_matters, "open always equals close (degenerate)"
-
-
-def test_trimmed_stats_pure_python_replay_and_robustness():
-    """Robust means (`trimmed_stats`): a pure-Python replay — exact rank
-    cuts, boundary-value winsorization, BIGINT sums — must match the
-    DuckDB oracle at sf0.001; the planted outliers move the raw mean by
-    >10 but the trimmed and winsorized means by <1 (the robustness the
-    operator exists for); trimmed n reconciles; margins on the three
-    rounded doubles."""
-    import hashlib
-    import math
-    import re
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        QUERIES,
-        TRIM_FRAC_DEN,
-        TRIM_OUTLIER_ADD,
-        TRIM_OUTLIER_MOD,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT doc_id, text FROM documents").fetchall()
-    exp = {}
-    for scope in ("clean", "polluted"):
-        vals = []
-        for d, t in raw:
-            v = len(re.findall("[a-z0-9]+", t.lower()))
-            h = (
-                int(hashlib.md5(f"tr|{d}".encode()).hexdigest()[:15], 16)
-                % TRIM_OUTLIER_MOD
-            )
-            if scope == "polluted" and h == 0:
-                v += TRIM_OUTLIER_ADD
-            vals.append((v, d))
-        vals.sort()
-        n = len(vals)
-        k = n // TRIM_FRAC_DEN
-        lo_v, hi_v = vals[k][0], vals[n - k - 1][0]
-        sum_all = sum(v for v, _d in vals)
-        sum_trim = sum(v for v, _d in vals[k : n - k])
-        sum_wins = k * lo_v + sum_trim + k * hi_v
-        exp[scope] = (
-            n, k, lo_v, hi_v, sum_all, sum_trim, sum_wins,
-            sum_all / n, sum_trim / (n - 2 * k), sum_wins / n,
-        )
-    mean_shift = exp["polluted"][7] - exp["clean"][7]
-    trim_shift = abs(exp["polluted"][8] - exp["clean"][8])
-    wins_shift = abs(exp["polluted"][9] - exp["clean"][9])
-    assert mean_shift > 10, mean_shift
-    # robust means move an order of magnitude less than the raw mean
-    # (a ~2% outlier mass still nudges which values sit in the trim
-    # window, so they are not perfectly still — but 1/5 of the raw
-    # shift is a conservative robustness bound; measured ~1 vs ~20)
-    assert trim_shift < mean_shift / 5, (trim_shift, mean_shift)
-    assert wins_shift < mean_shift / 5, (wins_shift, mean_shift)
-    rows = con.execute(QUERIES["trimmed_stats"][1]).fetchall()
-    assert len(rows) == 2
-    for scope, n, k, lo, hi, sa, st, sw, m, tm, wm in rows:
-        en, ek, elo, ehi, esa, est, esw, em, etm, ewm = exp[scope]
-        assert (n, k, lo, hi, sa, st, sw) == (
-            en, ek, elo, ehi, esa, est, esw,
-        )
-        for got, e in ((m, em), (tm, etm), (wm, ewm)):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4 or frac < 1e-12, (scope, e)
-            assert got == math.floor(e * 1e6 + 0.5) / 1e6
-
-
-def test_ams_f2_pure_python_replay_and_concentration():
-    """AMS (`ams_f2`): a pure-Python replay — md5 ±1 signs, the 9 signed
-    sums, 3 group sums, the exact-rank median — must match the DuckDB
-    oracle at sf0.001 EXACTLY on every BIGINT column; the median-of-
-    means estimate lands within the order-of-magnitude band the
-    probabilistic guarantee supports on this lumpy 31-token corpus
-    (0.1 < est/F2 < 10; realized ~0.4, documented in the operator
-    header); estimators genuinely disagree."""
-    import hashlib
-    import math
-    import re
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import AMS_GROUPS, AMS_K, QUERIES
-
-    per = AMS_K // AMS_GROUPS
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT text FROM documents").fetchall()
-    cnt = Counter()
-    for (t,) in raw:
-        cnt.update(re.findall("[a-z0-9]+", t.lower()))
-    f2 = sum(c * c for c in cnt.values())
-    ests = {}
-    for j in range(AMS_K):
-        z = sum(
-            (
-                2
-                * (
-                    int(
-                        hashlib.md5(f"{w}|ams{j}".encode()).hexdigest()[:15],
-                        16,
-                    )
-                    % 2
-                )
-                - 1
-            )
-            * c
-            for w, c in cnt.items()
-        )
-        ests[j] = (j // per, z, z * z)
-    gsums = {
-        g: sum(e for gg, _z, e in ests.values() if gg == g)
-        for g in range(AMS_GROUPS)
-    }
-    med = sorted(gsums.values())[(AMS_GROUPS + 1) // 2 - 1]
-    est = med / per
-    assert f2 / 10 < est < f2 * 10, (est, f2)
-    assert len({z for _g, z, _e in ests.values()}) > 1
-    rows = con.execute(QUERIES["ams_f2"][1]).fetchall()
-    assert len(rows) == AMS_K
-    for j, grp, z, e, gsum, gf2, gmed, fest in rows:
-        eg, ez, ee = ests[j]
-        assert (grp, z, e) == (eg, ez, ee)
-        assert gsum == gsums[grp]
-        assert (gf2, gmed) == (f2, med)
-        assert fest == math.floor(est * 1e6 + 0.5) / 1e6
-
-
-def test_assortativity_pure_python_replay_and_symmetry():
-    """Assortativity (`assortativity`): a pure-Python replay — both-
-    orientation endpoint-degree moments, Newman's r — must match the
-    DuckDB oracle at sf0.001 EXACTLY on the BIGINT columns; the
-    both-orientation convention makes sx == sy and sxx == syy
-    (symmetry identities); r in [-1, 1]; m = 2|E|; margins on the
-    rounded r."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import PR_N_NODES, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, doc_id FROM documents").fetchall()
-    edges = set()
-    for src, d in raw:
-        sn = int(src[3:])
-        a = sn % PR_N_NODES
-        b = (sn * 7 + d * 13 + 3) % PR_N_NODES
-        if a != b:
-            edges.add((min(a, b), max(a, b)))
-    deg = Counter()
-    for u, v in edges:
-        deg[u] += 1
-        deg[v] += 1
-    both = [(u, v) for u, v in edges] + [(v, u) for u, v in edges]
-    m = len(both)
-    sx = sum(deg[u] for u, _v in both)
-    sy = sum(deg[v] for _u, v in both)
-    sxy = sum(deg[u] * deg[v] for u, v in both)
-    sxx = sum(deg[u] ** 2 for u, _v in both)
-    syy = sum(deg[v] ** 2 for _u, v in both)
-    assert sx == sy and sxx == syy  # symmetry of the convention
-    assert m == 2 * len(edges)
-    num = sxy - sx * sy / m
-    r = num / math.sqrt((sxx - sx * sx / m) * (syy - sy * sy / m))
-    assert -1.0 - 1e-9 <= r <= 1.0 + 1e-9
-    rows = con.execute(QUERIES["assortativity"][1]).fetchall()
-    assert len(rows) == m
-    seen = Counter()
-    for u, v, du, dv, gm, gsxy, gr in rows:
-        assert (du, dv) == (deg[u], deg[v])
-        assert (gm, gsxy) == (m, sxy)
-        frac = abs(r * 1e6 - math.floor(r * 1e6) - 0.5)
-        assert frac > 1e-4, r
-        assert gr == math.copysign(math.floor(abs(r) * 1e6 + 0.5), r) / 1e6
-        seen[(u, v)] += 1
-    assert all(c == 1 for c in seen.values())
-
-
-def test_interarrival_stats_pure_python_replay_and_bounds():
-    """Burstiness (`interarrival_stats`): a pure-Python replay — per-user
-    sorted gaps in exact integer seconds, BIGINT moments, B and the
-    pinned-order corpus mean — must match the DuckDB oracle at sf0.001;
-    B in (-1, 1); gap counts reconcile with event counts (n_gaps =
-    n_events - 1 for every kept user); margins on rounded doubles."""
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute(
-        "SELECT user_id, epoch_us(ts), event_id FROM events"
-    ).fetchall()
-    times = defaultdict(list)
-    for u, um, eid in raw:
-        times[u].append((um, eid))
-    exp = {}
-    for u, ts in times.items():
-        ts.sort()
-        gaps = [
-            (ts[i + 1][0] - ts[i][0]) // 1_000_000
-            for i in range(len(ts) - 1)
-        ]
-        if len(gaps) < 2:
-            continue
-        n = len(gaps)
-        sg, sgg = sum(gaps), sum(g * g for g in gaps)
-        mu = sg / n
-        sig = math.sqrt((sgg - n * mu * mu) / (n - 1))
-        exp[u] = (n, sg, sgg, mu, sig, (sig - mu) / (sig + mu))
-        assert n == len(ts) - 1
-    mean_b = sum(exp[u][5] for u in sorted(exp)) / len(exp)
-    rows = con.execute(QUERIES["interarrival_stats"][1]).fetchall()
-    assert len(rows) == len(exp)
-    for u, n, sg, sgg, mu, sig, b, mb in rows:
-        en, esg, esgg, emu, esig, eb = exp[u]
-        assert (n, sg, sgg) == (en, esg, esgg)
-        for got, e in ((mu, emu), (sig, esig), (b, eb), (mb, mean_b)):
-            frac = abs(abs(e) * 1e6 - math.floor(abs(e) * 1e6) - 0.5)
-            assert frac > 1e-4 or frac < 1e-12, (u, e)
-            assert got == math.copysign(
-                math.floor(abs(e) * 1e6 + 0.5), e
-            ) / 1e6
-        assert -1.0 < eb < 1.0
-
-
-def test_ref_integrity_pure_python_replay():
-    """RI audit (`ref_integrity`): a pure-Python replay over raw key
-    columns — child counts, distinct keys, nulls, orphans per FK edge —
-    must match the DuckDB oracle at sf0.001; the synthetic star is
-    intact on every edge (all verdicts 1, zero orphans/nulls) and the
-    counts reconcile with table sizes; all-integer."""
-    import duckdb
-
-    from htep_spark.driver_queries import _RI_EDGES, QUERIES
-
-    con = duckdb.connect()
-    tables = {t for c, _ck, p, _pk in _RI_EDGES for t in (c, p)}
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    exp = {}
-    for child, ck, parent, pk in _RI_EDGES:
-        ckeys = [
-            r[0]
-            for r in con.execute(f"SELECT {ck} FROM {child}").fetchall()
-        ]
-        pkeys = {
-            r[0]
-            for r in con.execute(f"SELECT {pk} FROM {parent}").fetchall()
-        }
-        n_child = len(ckeys)
-        n_keys = len(set(ckeys))
-        n_null = sum(1 for k in ckeys if k is None)
-        n_orph = sum(1 for k in ckeys if k is not None and k not in pkeys)
-        exp[f"{child}.{ck}"] = (
-            f"{parent}.{pk}", n_child, n_keys, n_null, n_orph,
-        )
-    rows = con.execute(QUERIES["ref_integrity"][1]).fetchall()
-    assert len(rows) == len(_RI_EDGES)
-    for fk, ref, n_child, n_keys, n_null, n_orph, intact in rows:
-        eref, ec, ek, en, eo = exp[fk]
-        assert ref == eref
-        assert (n_child, n_keys, n_null, n_orph) == (ec, ek, en, eo)
-        assert intact == (1 if eo == 0 else 0)
-        assert intact == 1  # the synthetic star is intact
-
-
-def test_runs_test_pure_python_replay_and_verdicts():
-    """Runs test (`runs_test`): a pure-Python replay — exact-rank
-    median, tie exclusion, run counting, the Wald-Wolfowitz z — must
-    match the DuckDB oracle at sf0.001; the planted 36-hour square wave
-    REJECTS (long runs, z << 0) while the raw series reads random;
-    R <= n1 + n2 and R >= 2 when both signs exist; margins on rounded
-    doubles."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        _MK_CRIT,
-        QUERIES,
-        RUNS_AMP,
-        RUNS_HALF_PERIOD,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    hrs = con.execute(
-        "SELECT epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(h for (h,) in hrs)
-    grid = list(range(min(c), max(c) + 1, 3_600_000_000))
-    xs = [c.get(h, 0) for h in grid]
-    exp = {}
-    for scope in ("same", "clumped"):
-        ys = [
-            x
-            + (
-                RUNS_AMP
-                if scope == "clumped"
-                and ((t - 1) // RUNS_HALF_PERIOD) % 2 == 0
-                else 0
-            )
-            for t, x in enumerate(xs, 1)
-        ]
-        n0 = len(ys)
-        med = sorted(ys)[(n0 + 1) // 2 - 1]
-        kept = [1 if y > med else 0 for y in ys if y != med]
-        r = 1 + sum(
-            1 for a, b in zip(kept, kept[1:]) if a != b
-        )
-        n1, n2 = sum(kept), len(kept) - sum(kept)
-        er = 2.0 * n1 * n2 / (n1 + n2) + 1.0
-        vr = (
-            2.0 * n1 * n2 * (2.0 * n1 * n2 - n1 - n2)
-            / ((n1 + n2) ** 2 * (n1 + n2 - 1))
-        )
-        z = (r - er) / math.sqrt(vr)
-        exp[scope] = (r, n1, n2, med, er, z)
-        assert 2 <= r <= n1 + n2
-    assert abs(exp["same"][5]) <= _MK_CRIT, exp["same"]
-    assert exp["clumped"][5] < -_MK_CRIT, exp["clumped"]
-    rows = con.execute(QUERIES["runs_test"][1]).fetchall()
-    assert len(rows) == 2
-    for scope, r, n1, n2, med, er, z, verdict in rows:
-        e_r, e1, e2, emed, eer, ez = exp[scope]
-        assert (r, n1, n2, med) == (e_r, e1, e2, emed)
-        for got, e in ((er, eer), (z, ez)):
-            frac = abs(abs(e) * 1e6 - math.floor(abs(e) * 1e6) - 0.5)
-            assert frac > 1e-4 or frac < 1e-12, (scope, e)
-            assert got == math.copysign(
-                math.floor(abs(e) * 1e6 + 0.5), e
-            ) / 1e6
-        assert verdict == (
-            "reject" if abs(ez) > _MK_CRIT else "random"
-        )
-    assert {r[7] for r in rows} == {"reject", "random"}
-
-
-def test_bfs_hops_pure_python_replay_and_bfs_invariants():
-    """BFS (`bfs_hops`): a pure-Python BFS replay from the min-id host
-    must match the DuckDB oracle at sf0.001; converged == 1; the root
-    has dist 0; every reachable non-root node has a neighbor exactly
-    one hop closer (the BFS tree property); eccentricity = max finite
-    dist; all-integer."""
-    from collections import defaultdict, deque
-
-    import duckdb
-
-    from htep_spark.driver_queries import PR_N_NODES, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, doc_id FROM documents").fetchall()
-    adj = defaultdict(set)
-    nodes = set()
-    for src, d in raw:
-        sn = int(src[3:])
-        a = sn % PR_N_NODES
-        b = (sn * 7 + d * 13 + 3) % PR_N_NODES
-        if a != b:
-            adj[a].add(b)
-            adj[b].add(a)
-            nodes.update((a, b))
-    root = min(nodes)
-    dist = {root: 0}
-    q = deque([root])
-    while q:
-        u = q.popleft()
-        for v in adj[u]:
-            if v not in dist:
-                dist[v] = dist[u] + 1
-                q.append(v)
-    ecc = max(dist.values())
-    rows = con.execute(QUERIES["bfs_hops"][1]).fetchall()
-    assert len(rows) == len(nodes)
-    for node, d, r, geecc, reachable, conv in rows:
-        assert r == root and geecc == ecc and conv == 1
-        if node in dist:
-            assert (d, reachable) == (dist[node], 1)
-            if node != root:
-                assert any(
-                    dist.get(nb) == dist[node] - 1 for nb in adj[node]
-                )
-        else:
-            assert (d, reachable) == (None, 0)
-    assert ecc >= 1
-
-
-def test_haar_energy_pure_python_replay_and_parseval():
-    """Haar (`haar_energy`): a pure-Python unnormalized Haar cascade
-    must match the DuckDB oracle at sf0.001 EXACTLY (all-BIGINT, zero
-    rounding surface); the exact Parseval accounting holds level by
-    level (2·E_{l-1} = detail_l + approx_l for unnormalized pairs);
-    the daily cycle puts the normalized 16h- or 32h-band detail energy
-    above the 2h band's."""
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import HAAR_LEVELS, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    hrs = con.execute(
-        "SELECT epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(h for (h,) in hrs)
-    grid = list(range(min(c), max(c) + 1, 3_600_000_000))
-    xs = [c.get(h, 0) for h in grid]
-    m = 1 << (len(xs).bit_length() - 1)
-    a = xs[:m]
-    exp = {}
-    prev_energy = sum(v * v for v in a)
-    for lvl in range(1, HAAR_LEVELS + 1):
-        na = [a[2 * i] + a[2 * i + 1] for i in range(len(a) // 2)]
-        d = [a[2 * i] - a[2 * i + 1] for i in range(len(a) // 2)]
-        de = sum(v * v for v in d)
-        ae = sum(v * v for v in na)
-        # unnormalized Parseval: sum over pairs of (x0²+x1²)·2 =
-        # (x0+x1)² + (x0−x1)²
-        assert 2 * prev_energy == de + ae
-        exp[lvl] = (len(na), de, ae)
-        prev_energy = ae
-        a = na
-    rows = con.execute(QUERIES["haar_energy"][1]).fetchall()
-    assert len(rows) == HAAR_LEVELS
-    norm = {}
-    for level, scale, n_coeffs, de, ae, in rows:
-        en, ede, eae = exp[level]
-        assert (n_coeffs, de, ae) == (en, ede, eae)
-        assert scale == 2 ** level
-        # orthonormal per-coefficient detail power: the unnormalized
-        # level-l coefficient is sqrt(2^l) times the orthonormal one
-        norm[scale] = de / (n_coeffs * 2 ** level)
-    assert max(norm[16], norm[32]) > norm[2], norm
-
-
-def test_theil_sen_pure_python_replay_and_recovery():
-    """Theil-Sen (`theil_sen`): a brute-force pairwise-slope replay with
-    the (slope, ti, tj) exact-rank median and the residual-median
-    intercept must match the DuckDB oracle at sf0.001; the trended
-    scope's slope recovers the planted MK_RATE/MK_GRID drift within
-    20% while the raw scope's slope is an order of magnitude smaller;
-    the median pair indices anchor the rank exactly."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import MK_GRID, MK_RATE, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    hrs = con.execute(
-        "SELECT epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(h for (h,) in hrs)
-    grid = list(range(min(c), max(c) + 1, 3_600_000_000))
-    xs = [c.get(h, 0) for h in grid]
-    exp = {}
-    for scope in ("same", "trended"):
-        ys = [
-            x + ((t * MK_RATE) // MK_GRID if scope == "trended" else 0)
-            for t, x in enumerate(xs, 1)
-        ]
-        n = len(ys)
-        pairs = [
-            ((ys[j] - ys[i]) / (j - i), i + 1, j + 1)
-            for i in range(n)
-            for j in range(i + 1, n)
-        ]
-        pairs.sort()
-        np_ = len(pairs)
-        slope, ti, tj = pairs[(np_ + 1) // 2 - 1]
-        resid = sorted(
-            (ys[t - 1] - slope * t, t) for t in range(1, n + 1)
-        )
-        intercept = resid[(n + 1) // 2 - 1][0]
-        exp[scope] = (np_, ti, tj, slope, intercept)
-    drift = MK_RATE / MK_GRID
-    assert abs(exp["trended"][3] - drift) < 0.2 * drift, exp["trended"]
-    assert abs(exp["same"][3]) < drift / 10, exp["same"]
-    rows = con.execute(QUERIES["theil_sen"][1]).fetchall()
-    assert len(rows) == 2
-    for scope, n_pairs, ti, tj, slope, intercept in rows:
-        enp, eti, etj, es, ei = exp[scope]
-        assert (n_pairs, ti, tj) == (enp, eti, etj)
-        for got, e in ((slope, es), (intercept, ei)):
-            frac = abs(abs(e) * 1e6 - math.floor(abs(e) * 1e6) - 0.5)
-            assert frac > 1e-4 or frac < 1e-12, (scope, e)
-            assert got == math.copysign(
-                math.floor(abs(e) * 1e6 + 0.5), e
-            ) / 1e6
-
-
-def test_poisson_dispersion_pure_python_replay_and_verdicts():
-    """Dispersion (`poisson_dispersion`): a pure-Python replay — dense
-    per-type grids, BIGINT moments, Fisher's D and z — must match the
-    DuckDB oracle at sf0.001; the planted burst series reads
-    overdispersed and the planted constant underdispersed (D == 0);
-    all five real types present; margins on rounded doubles."""
-    import math
-    from collections import Counter, defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        _MK_CRIT,
-        PD_BLOCK_H,
-        PD_CONST,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute(
-        "SELECT event_type, epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(raw)
-    hset = [h for (_t, h) in raw]
-    grid = list(range(min(hset), max(hset) + 1, 3_600_000_000))
-    types = sorted({t for t, _h in raw})
-    series = {}
-    for ty in types:
-        series[ty] = [c.get((ty, h), 0) for h in grid]
-    total = [sum(series[ty][i] for ty in types) for i in range(len(grid))]
-    series["planted_burst"] = [
-        2 * x if (t // PD_BLOCK_H) % 2 == 0 else x
-        for t, x in enumerate(total)
-    ]
-    series["planted_const"] = [PD_CONST] * len(grid)
-    exp = {}
-    for name, xs in series.items():
-        n, s, ss = len(xs), sum(xs), sum(x * x for x in xs)
-        mean = s / n
-        var = (ss - n * mean * mean) / (n - 1)
-        d = var / mean
-        z = (d - 1.0) * math.sqrt((n - 1) / 2.0)
-        v = (
-            "overdispersed"
-            if z > _MK_CRIT
-            else "underdispersed"
-            if z < -_MK_CRIT
-            else "poisson"
-        )
-        exp[name] = (n, s, ss, mean, var, d, z, v)
-    assert exp["planted_burst"][7] == "overdispersed"
-    assert exp["planted_const"][7] == "underdispersed"
-    assert exp["planted_const"][5] == 0.0
-    rows = con.execute(QUERIES["poisson_dispersion"][1]).fetchall()
-    assert len(rows) == len(types) + 2
-    for name, n, s, ss, mean, var, d, z, v in rows:
-        en, es, ess, em, ev_, ed, ez, evd = exp[name]
-        assert (n, s, ss) == (en, es, ess)
-        for got, e in ((mean, em), (var, ev_), (d, ed), (z, ez)):
-            frac = abs(abs(e) * 1e6 - math.floor(abs(e) * 1e6) - 0.5)
-            assert frac > 1e-4 or frac < 1e-12, (name, e)
-            assert got == math.copysign(
-                math.floor(abs(e) * 1e6 + 0.5), e
-            ) / 1e6
-        assert v == evd
-
-
-def test_group_quantiles_pure_python_replay():
-    """Grouped quartiles (`group_quantiles`): a pure-Python exact-rank
-    replay (ceil(q*n) lower-quantile convention) must match the DuckDB
-    oracle at sf0.001 EXACTLY (zero doubles); q25 <= q50 <= q75 per
-    source; IQR reconciles; every source present."""
-    import math
-    import re
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, doc_id, text FROM documents").fetchall()
-    groups = defaultdict(list)
-    for src, d, t in raw:
-        groups[src].append((len(re.findall("[a-z0-9]+", t.lower())), d))
-    exp = {}
-    for src, items in groups.items():
-        items.sort()
-        n = len(items)
-        qs = {}
-        for num, den, label in ((1, 4, "q25"), (2, 4, "q50"), (3, 4, "q75")):
-            qs[label] = items[math.ceil(num * n / den) - 1][0]
-        exp[src] = (n, qs["q25"], qs["q50"], qs["q75"])
-    rows = con.execute(QUERIES["group_quantiles"][1]).fetchall()
-    assert len(rows) == len(groups)
-    for src, n, q25, q50, q75, iqr in rows:
-        en, e25, e50, e75 = exp[src]
-        assert (n, q25, q50, q75) == (en, e25, e50, e75)
-        assert q25 <= q50 <= q75
-        assert iqr == q75 - q25
