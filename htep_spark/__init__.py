@@ -10,7 +10,7 @@ checkpoint manifest for exact resume.
 Layout:
     functions/   pure-Python operator kernels (shared by oracle and UDFs)
     operators/   Spark operators: extraction UDFs, column expressions,
-                 dedup, similarity search, text analysis
+                 dedup, similarity search, text analysis, multimodal stubs
     sources/     IO: parquet/Iceberg-style table access, transcript synthesis
     plans/       end-to-end pipeline plan + checkpoint/resume manifest
     streaming/   Structured Streaming variant of the pipeline

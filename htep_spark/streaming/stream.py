@@ -627,8 +627,7 @@ def stream_windowed_jsd(
 ) -> DataFrame:
     """Streaming per-window unigram histogram over a FIXED reference
     support (top-K reference tokens plus one OTHER tail bucket) — the
-    feed half of a windowed
-    distribution-drift monitor. A pure watermarked tumbling-window
+    feed half of a windowed distribution-drift monitor. A pure watermarked tumbling-window
     aggregation: no custom state operator, and the state store holds at
     most |ref_tokens| + 1 rows PER OPEN WINDOW regardless of stream rate
     or vocabulary (the fixed-support property; same bound class as
@@ -735,7 +734,8 @@ def stream_active_users(
     window_duration: str = "1 day",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Streaming per-window distinct active users (DAU), built from the
+    """Streaming per-window distinct active users — the DAU feed of the
+    batch ``active_users`` operator (driver_queries.py), built from the
     two chained stateful operators Structured Streaming supports since
     the multi-stateful-operator lift: a watermark-bounded
     ``dropDuplicates`` on (window, user) followed by a windowed count.

@@ -228,6 +228,57 @@ def test_sentence_spans_invariants(text):
         assert s["content"] == s["content"].strip() != ""
 
 
+# ---------------------------------------------------------------- codecs --
+
+_img_arrays = st.integers(2, 24).flatmap(
+    lambda h: st.integers(2, 24).flatmap(
+        lambda w: st.lists(
+            st.integers(0, 255), min_size=h * w * 3, max_size=h * w * 3
+        ).map(lambda flat: np.array(flat, dtype=np.uint8).reshape(h, w, 3))
+    )
+)
+
+
+@settings(max_examples=60, deadline=None)
+@given(_img_arrays, st.sampled_from(["png", "bmp", "ppm"]))
+def test_image_codec_roundtrip_exact(img, fmt):
+    """encode→decode is the identity for every format on random pixels."""
+    from htep_spark.functions import codecs
+
+    out = codecs.decode_image(codecs.encode_image(img, fmt))
+    assert np.array_equal(out, img)
+    assert codecs.sniff_format(codecs.encode_image(img, fmt)) == fmt
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    st.lists(st.integers(-32768, 32767), min_size=4, max_size=2000),
+    st.sampled_from([8000, 16000, 44100]),
+)
+def test_wav_codec_roundtrip_exact(samples, rate):
+    from htep_spark.functions import codecs
+
+    arr = np.array(samples, dtype=np.int16)
+    out, out_rate = codecs.decode_wav(codecs.encode_wav(arr, rate))
+    assert out_rate == rate
+    assert np.array_equal(out[:, 0], arr)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(_img_arrays, min_size=1, max_size=5))
+def test_rawv_roundtrip_and_seek(frames):
+    from htep_spark.functions import codecs
+
+    payload = codecs.encode_rawv(frames)
+    assert codecs.rawv_frame_count(payload) == len(frames)
+    out = codecs.decode_rawv(payload)
+    assert all(np.array_equal(a, b) for a, b in zip(out, frames))
+    # index-seek decode returns exactly the requested frames
+    picks = list(range(0, len(frames), 2))
+    seek = codecs.decode_rawv(payload, frame_indices=picks)
+    assert all(np.array_equal(seek[j], frames[i]) for j, i in enumerate(picks))
+
+
 def test_asof_join_matches_pandas_merge_asof(spark):
     """Differential: asof_join == pandas.merge_asof (backward, exact
     matches allowed) on a seeded random workload, with and without
@@ -282,6 +333,90 @@ def test_asof_join_matches_pandas_merge_asof(spark):
         assert lhs.equals(rhs), f"tol={tol}: first diff at\n" + str(
             pd.concat([got, want["rid_r"].rename("want")], axis=1)[lhs != rhs].head()
         )
+
+
+_paletted_anim = st.integers(2, 16).flatmap(
+    lambda h: st.integers(2, 16).flatmap(
+        lambda w: st.integers(1, 3).flatmap(
+            lambda nf: st.lists(
+                st.lists(
+                    st.integers(0, 7), min_size=h * w, max_size=h * w
+                ),
+                min_size=nf,
+                max_size=nf,
+            ).map(
+                lambda idxs: [
+                    np.array(
+                        [[i * 31 % 256, i * 57 % 256, i * 13 % 256] for i in row],
+                        dtype=np.uint8,
+                    ).reshape(h, w, 3)
+                    for row in idxs
+                ]
+            )
+        )
+    )
+)
+
+
+@settings(max_examples=30, deadline=None)
+@given(_paletted_anim)
+def test_gif_frames_roundtrip_fuzz(frames):
+    """encode_gif_frames→decode_gif is the identity for any ≤256-color
+    animation of shared canvas size (per-frame local color tables)."""
+    from htep_spark.functions import codecs
+
+    out = codecs.decode_gif(codecs.encode_gif_frames(frames))
+    assert len(out) == len(frames)
+    for got, want in zip(out, frames):
+        assert np.array_equal(got, want)
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    st.lists(_img_arrays, min_size=1, max_size=3),
+    st.sampled_from(["none", "packbits", "lzw"]),
+    st.sampled_from(["<", ">"]),
+    st.sampled_from([0, 3, 7]),
+)
+def test_tiff_pages_roundtrip_fuzz(pages, comp, bo, rps):
+    """encode_tiff_pages→decode_tiff_pages is the identity for any page
+    list across compressions, byte orders, and strip layouts."""
+    from htep_spark.functions import codecs
+
+    payload = codecs.encode_tiff_pages(
+        pages, compression=comp, byteorder=bo, rows_per_strip=rps
+    )
+    assert codecs.sniff_format(payload) == "tiff"
+    out = codecs.decode_tiff_pages(payload)
+    assert len(out) == len(pages)
+    for got, want in zip(out, pages):
+        assert np.array_equal(got, want)
+
+
+@settings(max_examples=250, deadline=None)
+@given(
+    st.sampled_from(
+        [
+            b"GIF89a", b"GIF87a", b"II*\x00", b"MM\x00*", b"BM", b"P6",
+            b"\x89PNG\r\n\x1a\n", b"\xff\xd8\xff", b"RAWV", b"",
+        ]
+    ),
+    st.binary(min_size=0, max_size=120),
+)
+def test_decoders_error_contract_on_garbage(magic, body):
+    """Corrupt payloads must raise ValueError — never hang, never allocate
+    from absurd claimed dimensions (the MAX_DECODE_PIXELS guard), never
+    leak struct.error/IndexError/EOFError (fuzz round 5 found a GIF header
+    claiming a ~2GB canvas and several raw-exception leaks)."""
+    from htep_spark.functions import codecs
+
+    payload = magic + body
+    try:
+        img = codecs.decode_image(payload)
+    except ValueError:
+        return
+    # a decode that SUCCEEDS on random garbage must still be a sane image
+    assert img.size <= codecs.MAX_DECODE_PIXELS * 4
 
 
 @settings(max_examples=200, deadline=None)
