@@ -3953,10 +3953,10 @@ def q_fuzzy_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         matcher = get_matcher(drugs)
         memo: dict = {}
         for series in tokens:
+            unseen = [t for t in dict.fromkeys(series) if t not in memo]
+            memo.update(zip(unseen, matcher.extract_many(unseen, cutoff)))
             rows = []
             for tok in series:
-                if tok not in memo:
-                    memo[tok] = matcher.extract_one(tok, cutoff)
                 hit = memo[tok]
                 rows.append(
                     {"match_term": None, "ratio": None}
@@ -5025,16 +5025,15 @@ def q_dict_correct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     @F.pandas_udf("corrected_text string, corrections string, matched string")
     def dc(texts: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        from htep_spark.functions.textops import dictionary_correct
+        from htep_spark.functions.textops import dictionary_correct_batch
 
         memo: dict = {}
         for series in texts:
             rows = []
-            for text in series:
-                corrected, corrections, matched = dictionary_correct(
-                    text if isinstance(text, str) else "",
-                    drugs, [], dset, FUZZY_RATIO_CUTOFF, "drug", memo,
-                )
+            for corrected, corrections, matched in dictionary_correct_batch(
+                [text if isinstance(text, str) else "" for text in series],
+                drugs, [], dset, FUZZY_RATIO_CUTOFF, "drug", memo,
+            ):
                 rows.append(
                     {
                         "corrected_text": corrected,

@@ -19,8 +19,9 @@ early exit once every cell of a row exceeds ``max_distance``.
 
 from __future__ import annotations
 
-from collections import Counter
-from typing import Iterable, Optional, Sequence, Tuple
+from typing import Dict, Iterable, Iterator, List, Optional, Sequence, Tuple
+
+import numpy as np
 
 __all__ = [
     "indel_ratio",
@@ -32,25 +33,42 @@ __all__ = [
     "close_matches",
 ]
 
+# Size of the (queries × entries × chars) uint8 temporary one bound chunk
+# may build: memory stays flat whatever the batch size.
+CHUNK_BYTES = 1 << 20
+
+
+def _match_masks(s: str) -> Dict[str, int]:
+    """Per character, the bit mask of its positions in ``s``."""
+    masks: Dict[str, int] = {}
+    bit = 1
+    for c in s:
+        masks[c] = masks.get(c, 0) | bit
+        bit <<= 1
+    return masks
+
+
+def _lcs_masks(masks: Dict[str, int], m: int, b: str) -> int:
+    """LCS length of ``b`` and the length-``m`` string whose
+    :func:`_match_masks` are ``masks``: the bit-parallel recurrence of
+    Allison & Dix (1986) in Hyyrö's (2004) form, one word operation per
+    character of ``b``. Bit i of ``v`` is 0 iff row i of the DP steps up;
+    carries only move upward, so bits past ``m`` never disturb the count."""
+    v = full = (1 << m) - 1
+    get = masks.get
+    for c in b:
+        u = v & get(c, 0)
+        v = (v + u) | (v - u)
+    return m - (v & full).bit_count()
+
 
 def _lcs_len(a: str, b: str) -> int:
-    """Length of the longest common subsequence (row-rolling DP)."""
+    """Length of the longest common subsequence (exact, bit-parallel)."""
     if not a or not b:
         return 0
-    if len(a) < len(b):  # keep the inner row short
+    if len(a) < len(b):  # iterate the shorter string
         a, b = b, a
-    prev = [0] * (len(b) + 1)
-    for ca in a:
-        curr = [0]
-        append = curr.append
-        for j, cb in enumerate(b, start=1):
-            if ca == cb:
-                append(prev[j - 1] + 1)
-            else:
-                pj, cj = prev[j], curr[j - 1]
-                append(pj if pj >= cj else cj)
-        prev = curr
-    return prev[-1]
+    return _lcs_masks(_match_masks(a), len(a), b)
 
 
 def indel_ratio(a: str, b: str) -> float:
@@ -61,55 +79,136 @@ def indel_ratio(a: str, b: str) -> float:
     return 200.0 * _lcs_len(a, b) / total
 
 
+def _byte_counts(strings: Sequence[str]) -> np.ndarray:
+    """(len(strings), 256) UTF-8 byte-count matrix in one pass: join with a
+    NUL separator, one encode, one bincount over ``row·256 + byte`` (a
+    string holding a NUL is counted on its own)."""
+    if any("\x00" in s for s in strings):
+        return np.stack([
+            np.bincount(np.frombuffer(s.encode("utf-8", "replace"), np.uint8), minlength=256)
+            for s in strings
+        ])
+    b = np.frombuffer("\x00".join(strings).encode("utf-8", "replace"), dtype=np.uint8)
+    rows = np.cumsum(b == 0)  # row index per byte (separator increments)
+    keep = b != 0
+    flat = np.bincount(rows[keep] * 256 + b[keep], minlength=len(strings) * 256)
+    return flat.reshape(len(strings), 256)
+
+
+class CountBound:
+    """Exact upper bound of ``indel_ratio`` for many (query, entry) pairs
+    at once: ``200·min(common, la, lb)/(la+lb)``, where ``common`` is the
+    size of the UTF-8 byte-multiset intersection. Every LCS character is
+    one or more equal bytes on both sides, so ``LCS <= common``, and
+    ``LCS <= min(la, lb)`` in characters. The float expression is the
+    one ``indel_ratio`` evaluates with ``common`` in place of the LCS, so
+    the bound can only over-include.
+
+    Only byte columns an entry populates are kept, and query counts are
+    clipped at the largest entry count: ``min(e, min(q, M)) = min(e, q)``
+    for every entry count ``e <= M``. That keeps the matrices uint8, and
+    :meth:`chunks` keeps the per-chunk temporary under ``CHUNK_BYTES``.
+    """
+
+    def __init__(self, entries: Sequence[str]):
+        counts = _byte_counts(entries)
+        self.active = np.nonzero(counts.sum(axis=0))[0]
+        counts = counts[:, self.active]
+        self.cap = int(counts.max()) if counts.size else 0
+        dtype = np.uint8 if self.cap < 256 else np.int64
+        self.counts = np.ascontiguousarray(counts.astype(dtype))
+        self.lens = np.array([len(e) for e in entries], dtype=np.int64)
+        self.chunk = max(1, CHUNK_BYTES // max(1, self.counts.nbytes))
+
+    def chunks(self, queries: Sequence[str]) -> Iterator[Tuple[int, np.ndarray]]:
+        """``(start, bounds)`` per chunk of queries, ``bounds`` the
+        (chunk, entries) float64 matrix; both-empty pairs get 100."""
+        lens = self.lens[None, :]
+        for start in range(0, len(queries), self.chunk):
+            chunk = queries[start : start + self.chunk]
+            q = np.minimum(_byte_counts(chunk)[:, self.active], self.cap)
+            common = np.minimum(self.counts[None, :, :], q.astype(self.counts.dtype)[:, None, :])
+            common = common.sum(axis=2, dtype=np.int64)
+            lq = np.array([len(s) for s in chunk], dtype=np.int64)[:, None]
+            total = lq + lens
+            with np.errstate(invalid="ignore", divide="ignore"):
+                bound = 200.0 * np.minimum(common, np.minimum(lq, lens)) / total
+            bound[total == 0] = 100.0
+            yield start, bound
+
+
 class FuzzyMatcher:
     """Precomputed single-dictionary fuzzy matcher.
 
-    Two upper bounds prune before the O(la·lb) DP scorer runs:
-    length bound ``200·min(la,lb)/(la+lb)`` and char-multiset bound
-    ``200·Σ_c min(count_a(c), count_b(c))/(la+lb)`` (both ≥ the true Indel
-    ratio). On realistic corpora this removes >95% of DP calls — the same
+    One :class:`CountBound` call bounds every (query, entry) pair of a
+    chunk of queries; only pairs whose bound reaches the cutoff are
+    scored, best bound first, and a query stops once the next bound falls
+    below its best score. The bit-parallel LCS scores the rest. Same
     exact-semantics-with-a-fast-path pattern as the reference's signature
     buckets (``src/nlp/lexicon_beam_decoder.py:54-58``).
     """
 
     def __init__(self, choices: Sequence[str]):
-        self.entries = [(c, len(c), Counter(c)) for c in choices]
+        self.choices = list(choices)
+        self._bound = CountBound(self.choices)
 
     def extract_one(
         self, query: str, score_cutoff: float = 0.0
     ) -> Optional[Tuple[str, float]]:
-        lq = len(query)
-        cq = Counter(query)
-        best: Optional[Tuple[str, float]] = None
-        best_score = score_cutoff
-        for choice, lc, cc in self.entries:
-            total = lq + lc
-            if total == 0:
-                bound = 100.0
-            else:
-                if 200.0 * min(lq, lc) / total < best_score:
-                    continue
-                common = sum((cq & cc).values())
-                bound = 200.0 * common / total
-            if bound < best_score:
-                continue
-            score = indel_ratio(query, choice)
-            if score >= best_score and (best is None or score > best[1]):
-                best = (choice, score)
-                best_score = score
-        return best
+        """:meth:`extract_many` of one query."""
+        return self.extract_many([query], score_cutoff)[0]
+
+    def extract_many(
+        self, queries: Sequence[str], score_cutoff: float = 0.0
+    ) -> List[Optional[Tuple[str, float]]]:
+        """``extract_one`` of every query: highest score wins, the
+        first-seen choice wins ties, scores below the cutoff are dropped."""
+        choices = self.choices
+        cands: List[list] = [[] for _ in queries]
+        if choices:
+            for start, bound in self._bound.chunks(queries):
+                rows, cols = np.nonzero(bound >= score_cutoff)
+                for r, c, b in zip(
+                    rows.tolist(), cols.tolist(), bound[rows, cols].tolist()
+                ):
+                    cands[start + r].append((-b, c))
+        out: List[Optional[Tuple[str, float]]] = []
+        for query, cand in zip(queries, cands):
+            best = -1
+            best_score = score_cutoff
+            if cand:
+                cand.sort()  # best bound first, lowest index among equals
+                lq = len(query)
+                masks = _match_masks(query)
+                for neg_bound, c in cand:
+                    if -neg_bound < best_score:
+                        break
+                    choice = choices[c]
+                    total = lq + len(choice)
+                    score = (
+                        200.0 * _lcs_masks(masks, lq, choice) / total
+                        if total
+                        else 100.0
+                    )
+                    if score > best_score or (
+                        score == best_score and (best < 0 or c < best)
+                    ):
+                        best, best_score = c, score
+            out.append((choices[best], best_score) if best >= 0 else None)
+        return out
 
 
 _MATCHER_CACHE: dict = {}
 
 
 def get_matcher(choices: Sequence[str]) -> FuzzyMatcher:
-    """Matcher cache; key holds a strong reference to the choice sequence,
-    so identity stays valid for the cache's lifetime."""
-    key = tuple(choices) if len(choices) < 4096 else (id(choices), len(choices))
+    """Matcher cache keyed on the choices' content: a list mutated in
+    place, or a new list at a freed one's address, never meets a stale
+    matcher."""
+    key = tuple(choices)
     hit = _MATCHER_CACHE.get(key)
     if hit is None:
-        hit = FuzzyMatcher(choices)
+        hit = FuzzyMatcher(key)
         if len(_MATCHER_CACHE) < 64:
             _MATCHER_CACHE[key] = hit
     return hit

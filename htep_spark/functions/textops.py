@@ -15,9 +15,12 @@ Whitespace quirks are load-bearing and preserved exactly:
 from __future__ import annotations
 
 import re
-from typing import Dict, List, Optional, Sequence, Tuple
+from itertools import islice
+from typing import Dict, Iterable, List, Optional, Sequence, Tuple
 
-from .fuzzy import CloseMatchIndex, extract_one, indel_ratio
+import numpy as np
+
+from .fuzzy import CloseMatchIndex, CountBound, get_matcher, indel_ratio
 
 __all__ = [
     "fusion_correct",
@@ -26,7 +29,9 @@ __all__ = [
     "correct_token",
     "correct_text_regex",
     "dictionary_correct",
+    "dictionary_correct_batch",
     "postprocess",
+    "postprocess_batch",
 ]
 
 _NUMERIC_RE = re.compile(r"^\d+(\.\d+)?$")
@@ -191,6 +196,12 @@ def correct_text_regex(
     return "".join(corrected_parts), corrections
 
 
+# Key bounds of the per-word memos (the clean, action and caller's fuzzy
+# memos) and of each multi-word matcher's window memo.
+_MEMO_CAP = 1_000_000
+_MULTI_MEMO_CAP = 2_000_000
+
+
 class MultiWordMatcher:
     """N-gram sliding-window detection of multi-word entries.
 
@@ -202,196 +213,163 @@ class MultiWordMatcher:
     matters).
 
     Fast paths (set-identical results): entries grouped by word count so
-    each window string is built once; per-ngram memo of matching entries
-    (template-heavy corpora repeat n-grams massively); char-multiset +
-    length upper bounds prune the DP scorer.
+    each window string is built once; per-window memo of matching entries
+    (template-heavy corpora repeat n-grams massively); the windows no memo
+    holds, over a whole batch of texts, are bounded together against every
+    entry by one :class:`~.fuzzy.CountBound` call per chunk, and only
+    pairs that reach the threshold meet the LCS scorer.
     """
 
     def __init__(self, multi_dict: Sequence[str], threshold: float):
         from collections import defaultdict
 
-        import numpy as np
-
         self.threshold = threshold
         groups = defaultdict(list)
         for entry in multi_dict:
             groups[entry.count(" ") + 1].append(entry)
-        # ONE combined char-count matrix across every word-count group
-        # (round 7): a text's memo misses — regardless of word count — are
-        # scored in a single numpy broadcast instead of one per group,
-        # amortizing the fixed numpy dispatch cost that dominated the miss
-        # path on number-bearing corpora (IDs/dates/vitals make those
-        # windows unique per document, so the memo never converges there).
-        # Per-group row indices are kept CONTIGUOUS so ascending row order
-        # within a group equals the group's entry insertion order — the
-        # order the per-ngram hit tuples must preserve. The multiset upper
-        # bound stays valid since LCS <= multiset intersection size, and
-        # only byte columns the dict side can populate are kept (for any
-        # other byte, min(entry_count=0, x) = 0, so dropping those columns
-        # changes nothing).
-        all_entries: List[str] = []
-        self.by_n: Dict[int, tuple] = {}  # n -> (entries, rows, lmin, lmax)
+        # One bound matrix across every word-count group: a batch's misses,
+        # whatever their word count, are bounded together, and a pair only
+        # counts when window and entry have the same word count (the
+        # per-group form never compared across groups).
+        self._entries: List[str] = []
+        entry_n: List[int] = []
+        self.by_n: Dict[int, Tuple[int, int]] = {}  # n -> (lmin, lmax)
         for n, entries in groups.items():
-            rows = np.arange(
-                len(all_entries), len(all_entries) + len(entries), dtype=np.int64
-            )
             lens = [len(e) for e in entries]
-            self.by_n[n] = (entries, rows, min(lens), max(lens))
-            all_entries.extend(entries)
-        self._entries = all_entries
-        if all_entries:
-            mat = np.stack([self._charvec(e) for e in all_entries])
-            active = np.nonzero(mat.sum(axis=0))[0]
-            self._mat = np.ascontiguousarray(mat[:, active])
-            self._lens = np.array(
-                [len(e) for e in all_entries], dtype=np.int64
-            )
-            self._active = active
+            self.by_n[n] = (min(lens), max(lens))
+            self._entries.extend(entries)
+            entry_n.extend([n] * len(entries))
+        self._bound = CountBound(self._entries)
+        self._entry_n = np.array(entry_n, dtype=np.int64)
         self._memo: Dict[str, Tuple[str, ...]] = {}
 
-    @staticmethod
-    def _charvec(s: str):
-        import numpy as np
-
-        b = np.frombuffer(s.encode("utf-8", "replace"), dtype=np.uint8)
-        return np.bincount(b, minlength=256).astype(np.int64)
-
-    @staticmethod
-    def _charvec_batch(strings):
-        """Char-count matrix for many strings in one pass: join with a
-        NUL separator, one encode, one scatter-add — ~14x faster than
-        per-string bincount, value-identical (separator guarded)."""
-        import numpy as np
-
-        if any("\x00" in s for s in strings):  # corrupt separator — rare
-            return np.stack([MultiWordMatcher._charvec(s) for s in strings])
-        out = np.zeros((len(strings), 256), dtype=np.int64)
-        b = np.frombuffer(
-            "\x00".join(strings).encode("utf-8", "replace"), dtype=np.uint8
-        )
-        rows = np.cumsum(b == 0)  # row index per byte (separator increments)
-        keep = b != 0
-        np.add.at(out, (rows[keep], b[keep]), 1)
-        return out
-
-    def _match_misses(self, misses: Dict[str, int]) -> Dict[str, Tuple[str, ...]]:
-        """Memo-miss path, batched across EVERY word-count group: one numpy
-        broadcast scores all of a text's miss n-grams against the combined
-        entry matrix; hits are then masked to the n-gram's own group rows
-        (cross-group comparisons never happened in the per-group form and
-        must not produce hits here).
+    def _match_misses(self, misses: Iterable[str]) -> Dict[str, List[str]]:
+        """Memo-miss path of a whole batch: scores every window into the
+        memo (while it has room) and returns the windows that match, each
+        with its matching entries.
 
         The length bound ``200·min(L,lg)/(L+lg)`` is maximized at entry
         length L = lg (increasing below, decreasing above), so clamping lg
         into the group's [lmin, lmax] gives an exact upper bound over every
-        group entry — n-grams failing even that skip the charvec work
-        entirely (O(1) python, no numpy dispatch)."""
-        import numpy as np
-
+        group entry — windows failing even that skip the numpy work
+        entirely (O(1) python). The rest are bounded in chunks, and the
+        (window, entry) pairs that survive come out of one ``nonzero`` per
+        chunk for the LCS scorer."""
         threshold = self.threshold
-        out: Dict[str, Tuple[str, ...]] = {}
+        memo = self._memo
+        room = _MULTI_MEMO_CAP - len(memo)
         survivors: List[str] = []
-        s_lgs: List[int] = []
-        s_rows = []
-        for g, n in misses.items():
+        s_ns: List[int] = []
+        for g in misses:
+            n = g.count(" ") + 1  # words never hold whitespace
             lg = len(g)
-            _entries, rows, lmin, lmax = self.by_n[n]
+            lmin, lmax = self.by_n[n]
             best = lmin if lg < lmin else (lmax if lg > lmax else lg)
             if 200.0 * (best if best < lg else lg) / (best + lg) >= threshold:
                 survivors.append(g)
-                s_lgs.append(lg)
-                s_rows.append(rows)
-            else:
-                out[g] = ()
-        if survivors:
-            vecs = self._charvec_batch(survivors)[:, self._active]
-            lgs = np.array(s_lgs, dtype=np.int64)
-            # (M, E) multiset-intersection sizes in one broadcast
-            common = np.minimum(self._mat[None, :, :], vecs[:, None, :]).sum(
-                axis=2
-            )
-            bound = (
-                200.0
-                * np.minimum(
-                    common, np.minimum(self._lens[None, :], lgs[:, None])
-                )
-                / (self._lens[None, :] + lgs[:, None])
-            )
-            hits = bound >= threshold
-            entries_all = self._entries
-            for m, g in enumerate(survivors):
-                rows = s_rows[m]
-                cand = rows[hits[m, rows]]
-                out[g] = tuple(
-                    entries_all[e]
-                    for e in cand.tolist()
-                    if indel_ratio(g, entries_all[e]) >= threshold
-                )
-        if len(self._memo) < 2_000_000:
-            self._memo.update(out)
-        return out
+                s_ns.append(n)
+            elif room > 0:
+                memo[g] = ()
+                room -= 1
+        matching: Dict[str, List[str]] = {}
+        entries = self._entries
+        for start, bound in self._bound.chunks(survivors):
+            ns = np.array(s_ns[start : start + len(bound)], dtype=np.int64)
+            hits = (bound >= threshold) & (self._entry_n[None, :] == ns[:, None])
+            for r, e in zip(*(a.tolist() for a in np.nonzero(hits))):
+                g = survivors[start + r]
+                entry = entries[e]
+                if indel_ratio(g, entry) >= threshold:
+                    matching.setdefault(g, []).append(entry)
+        for g in survivors:
+            if room <= 0:
+                break
+            memo[g] = tuple(matching.get(g, ()))
+            room -= 1
+        return matching
+
+    def find_batch(self, texts: Sequence[str]) -> List[set]:
+        """The matched entry set of every text. Memo hits resolve on the
+        spot; each text keeps only its miss windows, and the misses of
+        the whole batch are scored by one :meth:`_match_misses` call.
+        Equal miss windows of different texts share one string object
+        (``misses`` maps each to itself), so a cold batch holds each
+        distinct window once."""
+        memo = self._memo
+        get = memo.get
+        found: List[set] = []
+        pending: List[List[str]] = []
+        misses: Dict[str, str] = {}
+        intern = misses.setdefault
+        for text in texts:
+            words = text.lower().split()
+            nwords = len(words)
+            hits: set = set()
+            own: List[str] = []
+            for n in self.by_n:
+                if n > nwords:
+                    continue
+                # unrolled concatenation for the common window widths
+                # beats join-over-slice ~2x
+                if n == 2:
+                    ngrams = [a + " " + b for a, b in zip(words, words[1:])]
+                elif n == 3:
+                    ngrams = [
+                        a + " " + b + " " + c
+                        for a, b, c in zip(words, words[1:], words[2:])
+                    ]
+                else:
+                    ngrams = [
+                        " ".join(words[i : i + n]) for i in range(nwords - n + 1)
+                    ]
+                for g in ngrams:
+                    h = get(g)
+                    if h:
+                        hits.update(h)
+                    elif h is None:  # () is a cached no-match
+                        own.append(intern(g, g))
+            found.append(hits)
+            pending.append(own)
+        matching = self._match_misses(misses) if misses else None
+        if matching:
+            for hits, own in zip(found, pending):
+                for g in own:
+                    h = matching.get(g)
+                    if h:
+                        hits.update(h)
+        return found
 
     def find(self, text: str) -> List[str]:
-        words = text.lower().split()
-        nwords = len(words)
-        matched: List[str] = []
-        seen = set()
-        memo = self._memo
-        # phase 1: enumerate windows + memo probe for every group (() misses
-        # are cached too, so None = true miss); unrolled concatenation for
-        # the common window widths beats join-over-slice ~2x
-        staged = []
-        misses: Dict[str, int] = {}
-        for n in self.by_n:
-            if n > nwords:
-                continue
-            if n == 2:
-                ngrams = [a + " " + b for a, b in zip(words, words[1:])]
-            elif n == 3:
-                ngrams = [
-                    a + " " + b + " " + c
-                    for a, b, c in zip(words, words[1:], words[2:])
-                ]
-            else:
-                ngrams = [
-                    " ".join(words[i : i + n]) for i in range(nwords - n + 1)
-                ]
-            hits = [memo.get(g) for g in ngrams]
-            for g, h in zip(ngrams, hits):
-                if h is None:
-                    misses[g] = n
-            staged.append((ngrams, hits))
-        # phase 2: one batched scoring call for all misses of this text
-        extra = self._match_misses(misses) if misses else None
-        # phase 3: assemble in the original (group order, window order,
-        # in-group entry order) first-seen sequence
-        for ngrams, hits in staged:
-            for g, h in zip(ngrams, hits):
-                if h is None:
-                    h = extra[g]
-                for entry in h:
-                    if entry not in seen:
-                        seen.add(entry)
-                        matched.append(entry)
-        return matched
+        """Sorted matched entries of one text."""
+        return sorted(self.find_batch([text])[0])
 
 
 _MW_CACHE: Dict[tuple, MultiWordMatcher] = {}
 
 
-def _find_multi_word_matches(
-    text: str, multi_dict: Sequence[str], threshold: float
-) -> List[str]:
+def _multi_word_matcher(
+    multi_dict: Sequence[str], threshold: float
+) -> MultiWordMatcher:
     key = (tuple(multi_dict), threshold)
     matcher = _MW_CACHE.get(key)
     if matcher is None:
         matcher = MultiWordMatcher(multi_dict, threshold)
         if len(_MW_CACHE) < 64:
             _MW_CACHE[key] = matcher
-    return matcher.find(text)
+    return matcher
+
+
+def _remember(memo: Dict, items: Dict, cap: int) -> None:
+    """Add ``items`` to ``memo`` while it holds fewer than ``cap`` keys."""
+    room = cap - len(memo)
+    if room >= len(items):
+        memo.update(items)
+    elif room > 0:
+        memo.update(islice(items.items(), room))
 
 
 _NON_ALPHA_ALL_RE = re.compile(r"[^A-Za-z]")
+
 
 # word -> stripped-lowercase form. A pure per-string function, memoized at
 # module level like the fuzzy lookup memos (round 7): template corpora
@@ -408,33 +386,30 @@ _CLEAN_MEMO: Dict[str, str] = {}
 # (round 7). Values: (output_word, matched_term_or_None, score_or_None);
 # a non-None score means the word was rewritten and a correction recorded.
 _ACTION_MEMO_KEY: object = object()
-_MISS: object = object()
+
+
+def _clean(word: str) -> str:
+    clean = _CLEAN_MEMO.get(word)
+    if clean is None:
+        clean = _NON_ALPHA_ALL_RE.sub("", word).lower()
+        if len(_CLEAN_MEMO) < _MEMO_CAP:
+            _CLEAN_MEMO[word] = clean
+    return clean
 
 
 def _word_action(
     word: str,
-    single_dict: Sequence[str],
+    clean: str,
     exact_set: frozenset,
-    threshold: float,
-    memo: Dict,
+    result: Optional[Tuple[str, float]],
 ) -> Tuple[str, Optional[str], Optional[int]]:
-    """Uncached per-word decision of ``dictionary_correct`` (semantics of
+    """Per-word decision of ``dictionary_correct`` given the cleaned word
+    and its fuzzy lookup result (semantics of
     ``src/nlp/ocr_postprocessor.py:188-283``, see its docstring)."""
-    clean_memo = _CLEAN_MEMO
-    clean = clean_memo.get(word)
-    if clean is None:
-        clean = _NON_ALPHA_ALL_RE.sub("", word).lower()
-        if len(clean_memo) < 1_000_000:
-            clean_memo[word] = clean
     if len(clean) < 3:
         return (word, None, None)
     if clean in exact_set:
         return (word, clean, None)
-
-    result = memo.get(clean, _MISS)
-    if result is _MISS:
-        result = extract_one(clean, single_dict, score_cutoff=threshold)
-        memo[clean] = result
     if result is None:
         return (word, None, None)
 
@@ -463,6 +438,90 @@ def _word_action(
     return (prefix + corrected + suffix, match_term, int(score))
 
 
+def dictionary_correct_batch(
+    texts: Sequence[str],
+    single_dict: Sequence[str],
+    multi_dict: Sequence[str],
+    exact_set: frozenset,
+    threshold: float,
+    label: str,
+    memo: Optional[Dict[str, Optional[Tuple[str, float]]]] = None,
+) -> List[Tuple[str, List[Dict], List[str]]]:
+    """One dictionary stage of the post-processor (T7) over a batch.
+
+    Semantics of ``OCRPostProcessor._correct_with_dictionary``
+    (``src/nlp/ocr_postprocessor.py:188-283``), per text: per whitespace
+    token, strip non-alpha + lowercase; len<3 passes through; exact-set
+    hit records a match (fast path, no edit); otherwise fuzzy
+    ``extractOne`` vs the single-word dictionary at ``threshold`` — on a
+    differing match the token is rewritten with leading/trailing non-alpha
+    characters peeled and re-attached and the matched term recased (UPPER
+    / Capitalized / as-is). Tokens rejoin with a single space
+    (newline-collapsing quirk, ``:270``). Then the n-gram multi-word
+    detection pass. Returns ``(corrected_text, corrections, sorted-dedup
+    matched terms)`` per text.
+
+    Every memo is a pure cache, so a text's result never depends on the
+    batch it lands in: the batch only decides how many texts' memo misses
+    share one fuzzy scoring call. Words are probed against the action
+    memo first; the cleaned forms of the unseen ones that ``memo`` has not
+    scored go to ``FuzzyMatcher.extract_many`` together.
+    """
+    if memo is None:
+        memo = {}
+    actions = memo.get(_ACTION_MEMO_KEY)
+    if actions is None:
+        actions = memo[_ACTION_MEMO_KEY] = {}
+
+    unseen: Dict[str, str] = {}  # raw word -> cleaned form
+    for text in texts:
+        for word in text.split():
+            if word not in actions and word not in unseen:
+                unseen[word] = _clean(word)
+    queries = [
+        c
+        for c in dict.fromkeys(unseen.values())
+        if len(c) >= 3 and c not in exact_set and c not in memo
+    ]
+    fresh: Dict[str, Optional[Tuple[str, float]]] = {}
+    if queries:
+        fresh = dict(zip(queries, get_matcher(single_dict).extract_many(queries, threshold)))
+        _remember(memo, fresh, _MEMO_CAP)
+    new_actions = {
+        word: _word_action(
+            word,
+            clean,
+            exact_set,
+            fresh[clean] if clean in fresh else memo.get(clean),
+        )
+        for word, clean in unseen.items()
+    }
+    _remember(actions, new_actions, _MEMO_CAP)
+
+    out_texts: List[str] = []
+    per_text: List[Tuple[List[Dict], set]] = []
+    for text in texts:  # split again: the batch's words are never all held
+        corrections: List[Dict] = []
+        matched: set = set()
+        new_words: List[str] = []
+        for word in text.split():
+            full, match_term, score = actions.get(word) or new_actions[word]
+            new_words.append(full)
+            if match_term is not None:
+                matched.add(match_term)
+                if score is not None:
+                    corrections.append(
+                        {"from": word, "to": full, "type": label, "score": score}
+                    )
+        out_texts.append(" ".join(new_words))
+        per_text.append((corrections, matched))
+    multi = _multi_word_matcher(multi_dict, threshold).find_batch(out_texts)
+    return [
+        (out_text, corrections, sorted(matched | found))
+        for out_text, (corrections, matched), found in zip(out_texts, per_text, multi)
+    ]
+
+
 def dictionary_correct(
     text: str,
     single_dict: Sequence[str],
@@ -472,48 +531,60 @@ def dictionary_correct(
     label: str,
     memo: Optional[Dict[str, Optional[Tuple[str, float]]]] = None,
 ) -> Tuple[str, List[Dict], List[str]]:
-    """One dictionary stage of the post-processor (T7).
+    """:func:`dictionary_correct_batch` of one text."""
+    return dictionary_correct_batch(
+        [text], single_dict, multi_dict, exact_set, threshold, label, memo
+    )[0]
 
-    Semantics of ``OCRPostProcessor._correct_with_dictionary``
-    (``src/nlp/ocr_postprocessor.py:188-283``): per whitespace token, strip
-    non-alpha + lowercase; len<3 passes through; exact-set hit records a
-    match (fast path, no edit); otherwise fuzzy ``extractOne`` vs the
-    single-word dictionary at ``threshold`` — on a differing match the token
-    is rewritten with leading/trailing non-alpha characters peeled and
-    re-attached and the matched term recased (UPPER / Capitalized / as-is).
-    Tokens rejoin with a single space (newline-collapsing quirk, ``:270``).
-    Then the n-gram multi-word detection pass. Returns
-    ``(corrected_text, corrections, sorted-dedup matched terms)``.
+
+def postprocess_batch(
+    texts: Sequence[Optional[str]],
+    drugs_single: Sequence[str],
+    drugs_multi: Sequence[str],
+    drug_set: frozenset,
+    diseases_single: Sequence[str],
+    diseases_multi: Sequence[str],
+    disease_set: frozenset,
+    threshold: float = 85.0,
+    drug_memo: Optional[Dict] = None,
+    disease_memo: Optional[Dict] = None,
+) -> List[Dict]:
+    """Full two-stage post-processing pipeline (T7) over a batch.
+
+    ``OCRPostProcessor.process`` (``src/nlp/ocr_postprocessor.py:289-340``)
+    per text: empty/blank input yields the canonical empty struct; stage 1
+    drugs then stage 2 diseases, corrections concatenated, matched lists
+    independent. Each stage runs once over the batch's non-blank texts.
     """
-    corrections: List[Dict] = []
-    matched: List[str] = []
-    new_words: List[str] = []
-    if memo is None:
-        memo = {}
-    actions = memo.get(_ACTION_MEMO_KEY)
-    if actions is None:
-        actions = memo[_ACTION_MEMO_KEY] = {}
-
-    for word in text.split():
-        act = actions.get(word)
-        if act is None:
-            act = _word_action(word, single_dict, exact_set, threshold, memo)
-            if len(actions) < 1_000_000:
-                actions[word] = act
-        full, match_term, score = act
-        new_words.append(full)
-        if match_term is not None:
-            matched.append(match_term)
-            if score is not None:
-                corrections.append(
-                    {"from": word, "to": full, "type": label, "score": score}
-                )
-
-    out_text = " ".join(new_words)
-    for entry in _find_multi_word_matches(out_text, multi_dict, threshold):
-        if entry not in matched:
-            matched.append(entry)
-    return out_text, corrections, sorted(set(matched))
+    live = [i for i, text in enumerate(texts) if text and text.strip()]
+    drugs = dictionary_correct_batch(
+        [texts[i] for i in live],
+        drugs_single, drugs_multi, drug_set, threshold, "drug", drug_memo,
+    )
+    diseases = dictionary_correct_batch(
+        [text for text, _, _ in drugs],
+        diseases_single, diseases_multi, disease_set, threshold, "disease",
+        disease_memo,
+    )
+    out = [
+        {
+            "corrected_text": "",
+            "corrections": [],
+            "matched_drugs": [],
+            "matched_diseases": [],
+        }
+        for _ in texts
+    ]
+    for i, (_, drug_corr, matched_drugs), (text, disease_corr, matched_diseases) in zip(
+        live, drugs, diseases
+    ):
+        out[i] = {
+            "corrected_text": text,
+            "corrections": drug_corr + disease_corr,
+            "matched_drugs": matched_drugs,
+            "matched_diseases": matched_diseases,
+        }
+    return out
 
 
 def postprocess(
@@ -528,32 +599,11 @@ def postprocess(
     drug_memo: Optional[Dict] = None,
     disease_memo: Optional[Dict] = None,
 ) -> Dict:
-    """Full two-stage post-processing pipeline (T7 public API).
-
-    ``OCRPostProcessor.process`` (``src/nlp/ocr_postprocessor.py:289-340``):
-    empty/blank input yields the canonical empty struct; stage 1 drugs then
-    stage 2 diseases, corrections concatenated, matched lists independent.
-    """
-    if not text or not text.strip():
-        return {
-            "corrected_text": "",
-            "corrections": [],
-            "matched_drugs": [],
-            "matched_diseases": [],
-        }
-    corrections: List[Dict] = []
-    text, drug_corr, matched_drugs = dictionary_correct(
-        text, drugs_single, drugs_multi, drug_set, threshold, "drug", drug_memo
-    )
-    corrections.extend(drug_corr)
-    text, disease_corr, matched_diseases = dictionary_correct(
-        text, diseases_single, diseases_multi, disease_set, threshold, "disease",
-        disease_memo,
-    )
-    corrections.extend(disease_corr)
-    return {
-        "corrected_text": text,
-        "corrections": corrections,
-        "matched_drugs": matched_drugs,
-        "matched_diseases": matched_diseases,
-    }
+    """Full two-stage post-processing pipeline (T7 public API):
+    :func:`postprocess_batch` of one text."""
+    return postprocess_batch(
+        [text],
+        drugs_single, drugs_multi, drug_set,
+        diseases_single, diseases_multi, disease_set,
+        threshold, drug_memo, disease_memo,
+    )[0]

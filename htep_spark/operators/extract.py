@@ -10,10 +10,11 @@ anywhere (BASELINE.json ``input_hint``: "no per-row Python").
 One trunk: each stage of ``reference.STAGES`` (core decode + dictionary
 correction, segmentation, field extraction, classification, entity scan,
 de-identification) becomes one pandas UDF through ``_stage_udf``, which
-runs ``reference.run_stage`` — the same kernel call and the same per-stage
-fallback ``reference.extract_turn`` uses — and takes its return type from
-``schema.EXTRACTION_RESULT_TYPE``. This module calls no kernel and defines
-no fallback value of its own.
+runs ``reference.run_batch`` over the whole Arrow batch — the same batch
+kernel and the same per-stage fallback ``reference.extract_turn`` uses —
+and takes its return type from ``schema.EXTRACTION_RESULT_TYPE``. The core
+kernel scores the T7 memo misses of every turn in the batch together.
+This module calls no kernel and defines no fallback value of its own.
 
 ``extract_transcripts`` recomposes the stage outputs into the
 ``EXTRACTION_RESULT_TYPE`` struct with plain column references (optimization
@@ -43,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..reference import STAGES, Stage, extract_turn, run_stage
+from ..reference import STAGES, Stage, extract_turns, run_batch
 from ..schema import EXTRACTION_RESULT_TYPE, METRICS_TYPE
 
 __all__ = [
@@ -61,7 +62,7 @@ __all__ = [
 @F.pandas_udf(EXTRACTION_RESULT_TYPE)
 def extract_turn_udf(texts: pd.Series) -> pd.DataFrame:
     """The SQL function ``htep_extract``: the whole trunk in one crossing."""
-    return pd.DataFrame([extract_turn(t) for t in texts])
+    return pd.DataFrame(extract_turns(texts.tolist()))
 
 
 _RESULT_FIELDS = {f.name: f for f in EXTRACTION_RESULT_TYPE.fields + METRICS_TYPE.fields}
@@ -75,7 +76,7 @@ def _stage_udf(stage: Stage, name: str):
     full-struct path (BENCH/r07 notes)."""
 
     def udf(values: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame([run_stage(stage, v) for v in values])
+        return pd.DataFrame(run_batch(stage, values.tolist()))
 
     udf.__name__ = udf.__qualname__ = name  # the name the plan shows
     if isinstance(stage.fields, str):

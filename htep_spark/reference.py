@@ -21,18 +21,26 @@ canonical semantics; every per-operator behavior is reference-faithful.
 
 The chain is written once, as the stage table ``STAGES``: core (decode +
 T7 correction), segments, fields, classify (+ urgency), entities and deid,
-each with its input field, kernel call and default output.
-``extract_turn`` composes the table in-process; the Spark stage UDFs
+each with its input field, batch kernel and default output.
+``extract_turns`` composes the table in-process; the Spark stage UDFs
 (``htep_spark/operators/extract.py``) are built from the same table —
-equality by construction, then tested anyway. One failure model on every
-path (``app/api.py:215-293`` stage isolation): a raising stage yields its
-own default and the other stages run as usual; only a core failure sets
-``metrics.failed``/``metrics.error``. A turn is never lost.
+equality by construction, then tested anyway. Every stage kernel maps a
+batch of values (an Arrow batch in Spark) to one output per value; the
+core stage scores the T7 memo misses of the whole batch together, the
+reference's own batching fix (``BlockICREngine._batch_predict_chars``,
+``src/recognition/icr_block_engine.py:162-195``). A turn's result never
+depends on the batch it lands in; ``extract_turn`` is the batch of one.
+
+One failure model on every path (``app/api.py:215-293`` stage
+isolation): a raising stage yields its own default and the other stages
+run as usual; only a core failure sets ``metrics.failed``/``metrics.error``.
+A raising batch is re-run value by value, so only the raising turn takes
+the default. A turn is never lost.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Dict, NamedTuple, Optional, Sequence, Tuple, Union
+from typing import Callable, Dict, List, NamedTuple, Optional, Sequence, Tuple, Union
 
 from .dictionaries import (
     DISEASES_MULTI,
@@ -57,7 +65,7 @@ from .functions.html_extract import (
 from .functions.chat_json import looks_like_chat_json, parse_chat_json
 from .functions.pdf_layout import looks_like_pdf_layout, parse_pdf_layout
 from .functions.segments import segment_document
-from .functions.textops import fusion_correct, postprocess
+from .functions.textops import fusion_correct, postprocess_batch
 
 __all__ = [
     "STAGES",
@@ -65,7 +73,9 @@ __all__ = [
     "assemble",
     "decode_payload",
     "extract_turn",
+    "extract_turns",
     "fusion_correct",
+    "run_batch",
     "run_stage",
 ]
 
@@ -102,14 +112,14 @@ def decode_payload(text: Optional[str]) -> Tuple[str, str, int, int]:
     return text, "plain", 0, 0
 
 
-def _core(text: str) -> Dict:
+def _core(texts: List[str]) -> List[Dict]:
     """Payload decode (S1-S3 routing) + T7 dictionary post-processing: the
     trunk every later stage reads."""
-    content, payload_kind, kept, dropped = decode_payload(text)
+    decoded = [decode_payload(text) for text in texts]
     # app/api.py:233 — the canonical text is the decoded content, stripped.
-    final_text = content.strip()
-    post = postprocess(
-        final_text,
+    finals = [content.strip() for content, _, _, _ in decoded]
+    posts = postprocess_batch(
+        finals,
         DRUGS_SINGLE,
         DRUGS_MULTI,
         DRUG_SET,
@@ -120,29 +130,34 @@ def _core(text: str) -> Dict:
         _DRUG_MEMO,
         _DISEASE_MEMO,
     )
-    return {
-        "payload_kind": payload_kind,
-        "content": content,
-        "final_text": final_text,
-        "corrected_text": post["corrected_text"] if final_text else "",
-        "corrections": [
-            {
-                "from": c["from"],
-                "to": c["to"],
-                "type": c["type"],
-                "score": int(c["score"]),
-            }
-            for c in post["corrections"]
-        ],
-        "matched_drugs": post["matched_drugs"],
-        "matched_diseases": post["matched_diseases"],
-        "blocks_kept": kept,
-        "blocks_dropped": dropped,
-        "n_corrections": len(post["corrections"]),
-        "content_chars": len(content),
-        "failed": False,
-        "error": None,
-    }
+    return [
+        {
+            "payload_kind": payload_kind,
+            "content": content,
+            "final_text": final_text,
+            "corrected_text": post["corrected_text"] if final_text else "",
+            "corrections": [
+                {
+                    "from": c["from"],
+                    "to": c["to"],
+                    "type": c["type"],
+                    "score": int(c["score"]),
+                }
+                for c in post["corrections"]
+            ],
+            "matched_drugs": post["matched_drugs"],
+            "matched_diseases": post["matched_diseases"],
+            "blocks_kept": kept,
+            "blocks_dropped": dropped,
+            "n_corrections": len(post["corrections"]),
+            "content_chars": len(content),
+            "failed": False,
+            "error": None,
+        }
+        for (content, payload_kind, kept, dropped), final_text, post in zip(
+            decoded, finals, posts
+        )
+    ]
 
 
 def _core_default(text: str, exc: Exception) -> Dict:
@@ -248,12 +263,23 @@ def _deid_default(final_text: str, _exc: Exception) -> Dict:
     return {"masked_text": final_text, "spans": []}
 
 
+def _each(kernel: Callable[[str], Dict]) -> Callable[[List[str]], List[Dict]]:
+    """A per-value stage kernel as a batch kernel."""
+
+    def run(values: List[str]) -> List[Dict]:
+        return [kernel(value) for value in values]
+
+    run.__name__ = kernel.__name__
+    return run
+
+
 class Stage(NamedTuple):
     """One stage of the per-turn chain.
 
-    ``run`` maps the ``source`` value (the turn text for core, else the
-    named core output) to the stage's output; ``default(value, exc)`` is the
-    output when ``run`` raises. ``fields`` says where the output lands in
+    ``run`` maps a batch of ``source`` values (the turn texts for core,
+    else the named core output) to the stage's outputs, one per value;
+    ``default(value, exc)`` is a value's output when its batch of one
+    raises. ``fields`` says where the output lands in
     the result: a tuple names the result or ``metrics`` leaves the output
     dict carries; a string names the one result field the whole output
     fills.
@@ -262,7 +288,7 @@ class Stage(NamedTuple):
     name: str
     source: str
     fields: Union[str, Tuple[str, ...]]
-    run: Callable[[str], Dict]
+    run: Callable[[List[str]], List[Dict]]
     default: Callable[[str, Exception], Dict]
 
 
@@ -292,10 +318,10 @@ STAGES = (
         "segments",
         "content",
         ("segments", "n_segments"),
-        _segments,
+        _each(_segments),
         _segments_default,
     ),
-    Stage("fields", "final_text", "extracted", _fields, _fields_default),
+    Stage("fields", "final_text", "extracted", _each(_fields), _fields_default),
     Stage(
         "classify",
         "corrected_text",
@@ -307,11 +333,13 @@ STAGES = (
             "urgency",
             "urgency_confidence",
         ),
-        _classify,
+        _each(_classify),
         _classify_default,
     ),
-    Stage("entities", "corrected_text", "entities", _entities, _entities_default),
-    Stage("deid", "final_text", "deid", _deid, _deid_default),
+    Stage(
+        "entities", "corrected_text", "entities", _each(_entities), _entities_default
+    ),
+    Stage("deid", "final_text", "deid", _each(_deid), _deid_default),
 )
 
 METRIC_FIELDS = (
@@ -330,9 +358,20 @@ def run_stage(stage: Stage, value: Optional[str]) -> Dict:
     default and the turn is never lost (``app/api.py:215-293``)."""
     value = value if isinstance(value, str) else ""
     try:
-        return stage.run(value)
+        return stage.run([value])[0]
     except Exception as exc:
         return stage.default(value, exc)
+
+
+def run_batch(stage: Stage, values: Sequence[Optional[str]]) -> List[Dict]:
+    """One stage over a batch of values, one output per value. If the
+    batch raises, it is re-run value by value through :func:`run_stage`,
+    so only the raising value takes the default."""
+    values = [v if isinstance(v, str) else "" for v in values]
+    try:
+        return stage.run(values)
+    except Exception:
+        return [run_stage(stage, v) for v in values]
 
 
 def assemble(outputs: Sequence[Dict]) -> Dict:
@@ -347,8 +386,14 @@ def assemble(outputs: Sequence[Dict]) -> Dict:
     return row
 
 
+def extract_turns(texts: Sequence[Optional[str]]) -> List[Dict]:
+    """Full canonical extraction of a batch of turns, one dict of
+    ``schema.EXTRACTION_RESULT_TYPE`` per turn."""
+    core = run_batch(STAGES[0], texts)
+    later = [run_batch(s, [c[s.source] for c in core]) for s in STAGES[1:]]
+    return [assemble(outputs) for outputs in zip(core, *later)]
+
+
 def extract_turn(text: Optional[str]) -> Dict:
-    """Full canonical per-turn extraction. Returns the dict form of
-    ``schema.EXTRACTION_RESULT_TYPE``."""
-    core = run_stage(STAGES[0], text)
-    return assemble([core] + [run_stage(s, core[s.source]) for s in STAGES[1:]])
+    """Full canonical per-turn extraction: the batch of one."""
+    return extract_turns([text])[0]

@@ -48,6 +48,15 @@ def test_extract_one_prefers_first_on_tie():
     assert extract_one("zzz", ["abc"], 85) is None
 
 
+def test_get_matcher_sees_in_place_mutation():
+    """The matcher cache is keyed on content: a large choice list mutated
+    in place must not meet the matcher built for its old entries."""
+    choices = [f"term{i:05d}x" for i in range(5000)]
+    assert extract_one("zyxwvutsrq", choices, 90) is None
+    choices[1234] = "zyxwvutsrq"
+    assert extract_one("zyxwvutsrq", choices, 90) == ("zyxwvutsrq", 100.0)
+
+
 def test_banded_edit_distance():
     assert banded_edit_distance("HELLD", "HELLO", 2) == 1
     assert banded_edit_distance("ABCDE", "VWXYZ", 2) == 3  # max+1 early exit
@@ -209,6 +218,24 @@ def test_postprocess_multiword_detection():
     )
     assert "heart failure" in result["matched_diseases"]
     assert "acute kidney injury" in result["matched_diseases"]
+
+
+def test_fuzzy_memo_is_capped(monkeypatch):
+    """A caller's fuzzy memo at the cap is not grown, and the results are
+    those of an unbounded memo."""
+    from htep_spark.functions import textops
+
+    dicts = (DRUGS_SINGLE, DRUGS_MULTI, DRUG_SET, DISEASES_SINGLE, DISEASES_MULTI, DISEASE_SET)
+    text = "Gave (Asprin). and metforminn 500mg for diabetis; h3art failur noted"
+    want = postprocess(text, *dicts, 85.0, {}, {})
+    monkeypatch.setattr(textops, "_MEMO_CAP", 6)
+    drug_memo: dict = {}
+    disease_memo: dict = {}
+    postprocess("lisinoprl warfarn atorvastatn amoxicilin hypertensoin asthmaa",
+                *dicts, 85.0, drug_memo, disease_memo)
+    assert len(drug_memo) == len(disease_memo) == 6  # filled to the cap
+    assert postprocess(text, *dicts, 85.0, drug_memo, disease_memo) == want
+    assert len(drug_memo) == len(disease_memo) == 6
 
 
 def test_postprocess_empty():

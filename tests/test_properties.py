@@ -13,6 +13,7 @@ from hypothesis import strategies as st
 
 from htep_spark.functions.fuzzy import (
     FuzzyMatcher,
+    _lcs_len,
     banded_edit_distance,
     indel_ratio,
 )
@@ -26,23 +27,75 @@ from htep_spark.functions.textops import (
 
 words = st.text(alphabet="abcdefgh ", min_size=0, max_size=24)
 tokens = st.text(alphabet="abcdefgh", min_size=0, max_size=12)
+# uppercase, digits and non-ASCII: multi-byte UTF-8 chars make the byte
+# counts of the fuzzy bound differ from the char counts
+WIDE = "abcdefghABCDXYZ0189éüß中文\u0130"
+wide_tokens = st.text(alphabet=WIDE, min_size=0, max_size=12)
+
+
+def lcs_dp(a, b):
+    """Row-rolling LCS DP: the oracle of the bit-parallel ``_lcs_len``."""
+    if not a or not b:
+        return 0
+    if len(a) < len(b):  # keep the inner row short
+        a, b = b, a
+    prev = [0] * (len(b) + 1)
+    for ca in a:
+        curr = [0]
+        append = curr.append
+        for j, cb in enumerate(b, start=1):
+            if ca == cb:
+                append(prev[j - 1] + 1)
+            else:
+                pj, cj = prev[j], curr[j - 1]
+                append(pj if pj >= cj else cj)
+        prev = curr
+    return prev[-1]
+
+
+def naive_ratio(a, b):
+    total = len(a) + len(b)
+    return 100.0 if total == 0 else 200.0 * lcs_dp(a, b) / total
+
+
+@settings(max_examples=400, deadline=None)
+@given(
+    st.text(alphabet=WIDE, min_size=0, max_size=150),
+    st.text(alphabet=WIDE, min_size=0, max_size=150),
+)
+def test_bit_parallel_lcs_equals_dp(a, b):
+    """Past 64 characters the bit vector spans several machine words."""
+    assert _lcs_len(a, b) == lcs_dp(a, b)
+    assert _lcs_len(a, a) == len(a)
 
 
 def naive_extract_one(query, choices, cutoff):
     best, best_score = None, cutoff
     for c in choices:
-        s = indel_ratio(query, c)
+        s = naive_ratio(query, c)
         if s >= best_score and (best is None or s > best[1]):
             best, best_score = (c, s), s
     return best
 
 
 @settings(max_examples=300, deadline=None)
-@given(tokens, st.lists(tokens, min_size=1, max_size=12), st.floats(0, 100))
+@given(wide_tokens, st.lists(wide_tokens, min_size=1, max_size=12), st.floats(0, 100))
 def test_fuzzy_matcher_equals_naive(query, choices, cutoff):
     assert FuzzyMatcher(choices).extract_one(query, cutoff) == naive_extract_one(
         query, choices, cutoff
     )
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.lists(wide_tokens, min_size=0, max_size=8),
+    st.lists(wide_tokens, min_size=1, max_size=12),
+    st.sampled_from([0.0, 50.0, 85.0]),
+)
+def test_fuzzy_matcher_batch_equals_naive(queries, choices, cutoff):
+    assert FuzzyMatcher(choices).extract_many(queries, cutoff) == [
+        naive_extract_one(q, choices, cutoff) for q in queries
+    ]
 
 
 def naive_multiword(text, multi_dict, threshold):
@@ -53,7 +106,7 @@ def naive_multiword(text, multi_dict, threshold):
         if n > len(ws):
             continue
         for i in range(len(ws) - n + 1):
-            if indel_ratio(" ".join(ws[i : i + n]), entry) >= threshold:
+            if naive_ratio(" ".join(ws[i : i + n]), entry) >= threshold:
                 matched.append(entry)
                 break
     return set(matched)
@@ -72,6 +125,22 @@ def naive_multiword(text, multi_dict, threshold):
 def test_multiword_matcher_equals_naive(text, multi_dict, threshold):
     got = set(MultiWordMatcher(multi_dict, threshold).find(text))
     assert got == naive_multiword(text, multi_dict, threshold)
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.lists(st.text(alphabet="abcdeé中 ", min_size=0, max_size=24), max_size=6),
+    st.lists(
+        st.tuples(tokens.filter(bool), tokens.filter(bool)).map(" ".join),
+        min_size=0,
+        max_size=8,
+    ),
+    st.sampled_from([60.0, 75.0, 85.0]),
+)
+def test_multiword_matcher_batch_equals_naive(texts, multi_dict, threshold):
+    """Several texts scored in one batch: each gets its own matched set."""
+    got = MultiWordMatcher(multi_dict, threshold).find_batch(texts)
+    assert got == [naive_multiword(t, multi_dict, threshold) for t in texts]
 
 
 def test_multiword_matcher_empty_dict():
@@ -178,6 +247,68 @@ def test_extract_turn_total(raw):
     result = extract_turn(raw)
     assert isinstance(result["corrected_text"], str)
     assert result["metrics"]["content_chars"] >= 0
+
+
+def _batch_strategies():
+    from htep_spark.dictionaries import (
+        DISEASES_MULTI,
+        DISEASES_SINGLE,
+        DRUGS_MULTI,
+        DRUGS_SINGLE,
+    )
+
+    ocr = str.maketrans("olesgb", "013568")  # look-alike digits
+    terms = st.sampled_from(
+        sorted(set(DRUGS_SINGLE) | set(DISEASES_SINGLE) | set(DRUGS_MULTI) | set(DISEASES_MULTI))
+    )
+    token = st.one_of(
+        terms,
+        terms.map(lambda t: t.translate(ocr)),
+        terms.map(lambda t: t[:-1] + "1"),
+        terms.map(str.upper),
+        terms.map(lambda t: "(" + t.capitalize() + ")."),
+        st.sampled_from(["é", "naïve", "中文", "İstanbul", "Ｍｅｔ", "120/80", "BP:", "mg"]),
+        st.text(alphabet="abdeilos013é ", min_size=1, max_size=9),
+    )
+    text = st.lists(token, min_size=0, max_size=14).map(" ".join)
+    return st.one_of(text, text, st.sampled_from(["", "   ", "\n\t", None]))
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.lists(_batch_strategies(), min_size=1, max_size=12), st.randoms())
+def test_turn_result_is_batch_independent(texts, rnd):
+    """A turn's result never depends on the batch it lands in: split the
+    texts into random batches, and each turn's core output equals its
+    batch-of-one result, and each full row equals ``extract_turn``. Cold
+    memos on both sides, so the batched miss path really runs."""
+    from contextlib import ExitStack
+    from unittest import mock
+
+    from htep_spark import reference
+    from htep_spark.functions import textops
+
+    batches, i = [], 0
+    while i < len(texts):
+        k = rnd.randint(1, len(texts) - i)
+        batches.append(texts[i : i + k])
+        i += k
+
+    def cold_memos():
+        stack = ExitStack()
+        stack.enter_context(
+            mock.patch.multiple(reference, _DRUG_MEMO={}, _DISEASE_MEMO={})
+        )
+        stack.enter_context(mock.patch.dict(textops._MW_CACHE, clear=True))
+        return stack
+
+    core = reference.STAGES[0]
+    with cold_memos():
+        batched = [out for batch in batches for out in reference.run_batch(core, batch)]
+        rows = [row for batch in batches for row in reference.extract_turns(batch)]
+    with cold_memos():
+        single = [reference.run_stage(core, t) for t in texts]
+    assert batched == single
+    assert rows == [reference.extract_turn(t) for t in texts]
 
 
 @settings(max_examples=200, deadline=None)

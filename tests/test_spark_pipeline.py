@@ -294,7 +294,7 @@ def test_checkpoint_crash_between_data_and_manifest(spark, transcripts_pdf, tmp_
 
 # stage → the kernel its ``run`` calls through the ``reference`` module
 _STAGE_KERNELS = {
-    "core": "postprocess",
+    "core": "postprocess_batch",
     "segments": "segment_document",
     "fields": "extract_record",
     "classify": "classify_document",
@@ -305,11 +305,14 @@ _STAGE_KERNELS = {
 
 @pytest.mark.parametrize("failing", list(_STAGE_KERNELS))
 def test_stage_failure_parity(monkeypatch, failing):
-    """One failure model: with one stage's kernel raising, ``extract_turn``
-    equals the row assembled from the stage UDFs (their Python functions,
-    called in-process the way ``extract_transcripts`` chains them); the
-    failed stage alone takes its default, and only a core failure sets
-    ``metrics.failed``."""
+    """One failure model: with one stage's kernel raising on one turn of a
+    three-turn batch, ``extract_turns`` over the batch equals the rows
+    assembled from the stage UDFs run over the same batch (their Python
+    functions, called in-process the way ``extract_transcripts`` chains
+    them) and equals ``extract_turn`` per turn. The raising turn's failed
+    stage alone takes its default, only a core failure sets
+    ``metrics.failed``, and the neighbouring turns equal their clean
+    rows."""
     import json
 
     import pandas as pd
@@ -317,18 +320,36 @@ def test_stage_failure_parity(monkeypatch, failing):
     from htep_spark import reference
     from htep_spark.operators import extract as ops
 
-    golden = json.load(
-        open(os.path.join(os.path.dirname(__file__), "fixtures", "golden.json"))
-    )
-    # a discharge summary every stage has work on: fields, entities, PII
-    text = next(g["text"] for g in golden if g["case_id"] == "gt-0")
-    clean = reference.extract_turn(text)
+    golden = {
+        g["case_id"]: g["text"]
+        for g in json.load(
+            open(os.path.join(os.path.dirname(__file__), "fixtures", "golden.json"))
+        )
+    }
+    # a discharge summary every stage has work on (fields, entities, PII),
+    # between two other notes
+    text = golden["gt-0"]
+    batch = [golden["gt-1"], text, golden["gt-2"]]
+    clean_rows = [reference.extract_turn(t) for t in batch]
+    clean = clean_rows[1]
 
-    def boom(*_args, **_kwargs):
-        raise RuntimeError("injected")
+    stage = next(s for s in reference.STAGES if s.name == failing)
+    # the value the kernel sees for the failing turn: the core kernel gets
+    # the batch of stripped decoded texts, the others one stage input each
+    bad = clean["final_text"] if failing == "core" else clean[stage.source]
+    kernel = getattr(reference, _STAGE_KERNELS[failing])
+
+    def boom(arg, *args, **kwargs):
+        if (bad in arg) if isinstance(arg, list) else (arg == bad):
+            raise RuntimeError("injected")
+        return kernel(arg, *args, **kwargs)
 
     monkeypatch.setattr(reference, _STAGE_KERNELS[failing], boom)
-    got = reference.extract_turn(text)
+    got_rows = reference.extract_turns(batch)
+    assert [_normalize(r) for r in got_rows] == [
+        _normalize(reference.extract_turn(t)) for t in batch
+    ]
+    got = got_rows[1]
 
     udfs = {
         "core": ops.extract_core_udf,
@@ -339,12 +360,17 @@ def test_stage_failure_parity(monkeypatch, failing):
         "deid": ops.deid_udf,
     }
 
-    def stage_row(stage, value):
-        return udfs[stage.name].func(pd.Series([value])).iloc[0].to_dict()
+    def stage_rows(stage, values):
+        frame = udfs[stage.name].func(pd.Series(values))
+        return [frame.iloc[i].to_dict() for i in range(len(values))]
 
-    core = stage_row(reference.STAGES[0], text)
-    outputs = [core] + [stage_row(s, core[s.source]) for s in reference.STAGES[1:]]
-    assert _normalize(reference.assemble(outputs)) == _normalize(got)
+    core = stage_rows(reference.STAGES[0], batch)
+    later = [
+        stage_rows(s, [c[s.source] for c in core]) for s in reference.STAGES[1:]
+    ]
+    assert [_normalize(reference.assemble(o)) for o in zip(core, *later)] == [
+        _normalize(r) for r in got_rows
+    ]
 
     def flat(row):
         return {**{k: v for k, v in row.items() if k != "metrics"}, **row["metrics"]}
@@ -354,7 +380,6 @@ def test_stage_failure_parity(monkeypatch, failing):
             return row[stage.fields]
         return {name: flat(row)[name] for name in stage.fields}
 
-    stage = next(s for s in reference.STAGES if s.name == failing)
     value = text if failing == "core" else clean[stage.source]
     default = stage.default(value, RuntimeError("injected"))
     assert owned(stage, got) == default
@@ -367,3 +392,6 @@ def test_stage_failure_parity(monkeypatch, failing):
         for other in reference.STAGES:
             if other is not stage:
                 assert owned(other, got) == owned(other, clean), other.name
+    # the neighbours in the batch are untouched
+    assert _normalize(got_rows[0]) == _normalize(clean_rows[0])
+    assert _normalize(got_rows[2]) == _normalize(clean_rows[2])
