@@ -104,7 +104,7 @@ DRIVER_CAP_OVERFLOW = (
     "semdedup",  # SemDeDup semantic dedup keep-or-drop
     "domain_quota",  # per-domain quota cap in the web funnel
     "block_correct",  # full T2-T6 block correction waterfall, kernel vs SQL
-    "conv_rollup_merge",  # conversation_rollup merge rules, applyInPandas vs SQL
+    "conv_rollup_merge",  # conversation_rollup merge rules, Spark aggregates vs SQL
     "gumbel_sample",  # Gumbel-top-k sampling for sampled DSIR
     "novelty",  # per-doc k-gram novelty vs earlier documents
     "dict_correct",  # T7 dictionary-correction application, kernel vs SQL
@@ -224,26 +224,27 @@ def _deid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _conv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rows-only: per-conversation applyInPandas rollup, viewing each
+    """Rows-only: per-conversation rollup aggregation, viewing each
     ``source`` as a conversation of its documents in doc_id order."""
     from htep_spark.driver_queries import _clinical_col
     from htep_spark.operators.conversation import conversation_rollup
     from htep_spark.plans.pipeline import run_extraction
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # ``turn_idx`` is only ever an ORDER key inside the grouped-map rollup
-    # (``_rollup`` sorts by it and emits n_turns/first-non-null — never the
-    # index values themselves), and within a source ``doc_id`` induces the
-    # identical order as ``row_number() - 1`` over it. Passing the 64-bit
-    # doc_id as is (never narrowed to int: under ANSI mode an id >= 2^31
-    # would raise CAST_OVERFLOW) therefore yields byte-identical rollup
-    # rows while deleting the row_number window — and with it a whole exchange + two sorts
-    # (guide §2.4): the old plan shuffled the raw docs by source for the
-    # window, ran extraction mid-stream, then re-shuffled the extracted
-    # light columns for the grouped map (EvalPython nodes drop the
-    # partitioning info, so the planner could not reuse the first
-    # exchange). Now extraction runs over the UNSHUFFLED scan
-    # (embarrassingly parallel) and the single exchange moves only the
+    # ``turn_idx`` is only ever an ORDER key inside the rollup (its
+    # ``min(struct(turn_idx, …))`` aggregates pick the earliest turn, and it
+    # emits n_turns/first-non-empty — never the index values themselves),
+    # and within a source ``doc_id`` induces the identical order as
+    # ``row_number() - 1`` over it. Passing the 64-bit doc_id as is (never
+    # narrowed to int: under ANSI mode an id >= 2^31 would raise
+    # CAST_OVERFLOW) therefore yields byte-identical rollup rows while
+    # deleting the row_number window — and with it a whole exchange + two
+    # sorts (guide §2.4): the old plan shuffled the raw docs by source for
+    # the window, ran extraction mid-stream, then re-shuffled the extracted
+    # light columns for the rollup (EvalPython nodes drop the partitioning
+    # info, so the planner could not reuse the first exchange). Now
+    # extraction runs over the UNSHUFFLED scan (embarrassingly parallel)
+    # and the single exchange moves only the partial aggregates of the
     # projected light columns.
     transcripts = docs.select(
         F.col("source").alias("conv_id"),

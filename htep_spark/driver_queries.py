@@ -5448,8 +5448,8 @@ FROM ranked
 
 # --------------------------------------------------------------------------
 # Conversation-rollup merge semantics (`conv_rollup_merge`): the REAL
-# ``conversation_rollup`` grouped-map operator (the applyInPandas behind
-# the rows-only `conv_rollup` query) run over SYNTHETIC per-turn result
+# ``conversation_rollup`` operator (the built-in aggregation behind the
+# rows-only `conv_rollup` query) run over SYNTHETIC per-turn result
 # structs planted from md5 constants, vs a DuckDB re-derivation of every
 # merge rule: first non-null non-EMPTY string per name field in turn
 # order (empty strings are planted and must be skipped), drug/disease

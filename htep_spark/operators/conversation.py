@@ -1,82 +1,45 @@
-"""Per-conversation grouped-map rollup (``applyInPandas``).
+"""Per-conversation rollup as one aggregation of built-in expressions.
 
-The cross-turn operator of SURVEY.md §1.3 ("``applyInPandas`` grouped by
-conv_id where cross-turn order matters"): assemble one clinical record per
-conversation from its turns in ``turn_idx`` order — first non-null patient
+The cross-turn operator of SURVEY.md §1.3: assemble one clinical record per
+conversation from its turns in ``turn_idx`` order — first non-empty patient
 fields win (earliest mention), drug/disease mentions union across turns,
-urgency escalates to the maximum level seen.
+urgency escalates to the maximum level seen (ties to the earliest turn).
+Every rule is associative, so turn order travels inside the aggregated
+values (``min(struct(turn_idx, v))``) instead of sorting rows, and no
+Python worker runs.
 
-Scale note: a grouped map must see the whole conversation on one task, so
-this stage shuffles by ``conv_id`` (eliminated when the table is bucketed
-by conv_id, see ``sources/io.write_bucketed_transcripts``). Output is one
-small row per conversation; memory per task is bounded by the largest
-conversation's *extracted fields*, not its full text — the projection below
-drops text columns before the shuffle.
+Scale note: every aggregate is partial-aggregable, so Catalyst plans a
+map-side partial aggregate → one ``Exchange`` on conv_id → the final
+aggregate. A mega-conversation reaches its final task as at most one
+pre-reduced row per input partition, so no salt stage is needed. The
+exchange is eliminated when the rollup reads an extraction table bucketed
+by conv_id (see ``sources/io.write_bucketed_transcripts``), but not over
+``run_extraction`` of a bucketed transcript table: its ArrowEvalPython
+nodes drop the scan's partitioning. The projection below drops the text
+columns before the exchange.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
-__all__ = ["conversation_rollup", "CONVERSATION_RECORD_TYPE"]
-
-CONVERSATION_RECORD_TYPE = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("n_turns", IntegerType(), True),
-        StructField("patient_name", StringType(), True),
-        StructField("doctor_name", StringType(), True),
-        StructField("hospital", StringType(), True),
-        StructField("all_drugs", ArrayType(StringType()), True),
-        StructField("all_diseases", ArrayType(StringType()), True),
-        StructField("max_urgency", StringType(), True),
-        StructField("document_types", ArrayType(StringType()), True),
-    ]
-)
-
-_URGENCY_RANK = {"routine": 0, "high": 1, "urgent": 2}
+__all__ = ["conversation_rollup"]
 
 
-def _rollup(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("turn_idx")
-    first = lambda col: next((v for v in pdf[col] if isinstance(v, str) and v), None)
-    # array columns arrive as numpy arrays — no truthiness, check None
-    drugs = sorted(
-        {t for lst in pdf["matched_drugs"] if lst is not None for t in lst}
-    )
-    diseases = sorted(
-        {t for lst in pdf["matched_diseases"] if lst is not None for t in lst}
-    )
-    max_urg = max(pdf["urgency"], key=lambda u: _URGENCY_RANK.get(u, -1), default=None)
-    return pd.DataFrame(
-        [
-            {
-                "conv_id": pdf["conv_id"].iloc[0],
-                "n_turns": len(pdf),
-                "patient_name": first("patient_name"),
-                "doctor_name": first("doctor_name"),
-                "hospital": first("hospital"),
-                "all_drugs": drugs,
-                "all_diseases": diseases,
-                "max_urgency": max_urg,
-                "document_types": sorted(set(pdf["document_type"])),
-            }
-        ],
-        columns=[f.name for f in CONVERSATION_RECORD_TYPE],
-    )
+def _first_non_empty(col: str) -> Column:
+    """The value of ``col`` at the earliest turn where it is a non-empty
+    string (NULL fails the ``!=`` test and is skipped like "")."""
+    return F.min(F.when(F.col(col) != "", F.struct("turn_idx", col)))[col]
+
+
+def _sorted_union(col: str) -> Column:
+    """Sorted distinct union of the turns' arrays; NULL arrays are skipped."""
+    return F.array_sort(F.array_distinct(F.flatten(F.collect_set(col))))
 
 
 def conversation_rollup(extracted: DataFrame) -> DataFrame:
-    """extraction output → one record per conversation (ordered grouped map).
+    """extraction output → one record per conversation.
 
     Projects to the light columns *before* the conv_id shuffle — the text
     payloads never move."""
@@ -91,6 +54,23 @@ def conversation_rollup(extracted: DataFrame) -> DataFrame:
         F.col("result.urgency").alias("urgency"),
         F.col("result.document_type").alias("document_type"),
     )
-    return light.groupBy("conv_id").applyInPandas(
-        _rollup, schema=CONVERSATION_RECORD_TYPE
+    # routine < high < urgent; anything else (NULL included) ranks -1
+    urgency = F.col("urgency")
+    rank = (
+        F.when(urgency == "urgent", 2)
+        .when(urgency == "high", 1)
+        .when(urgency == "routine", 0)
+        .otherwise(-1)
+    )
+    return light.groupBy("conv_id").agg(
+        F.count("*").cast("int").alias("n_turns"),
+        _first_non_empty("patient_name").alias("patient_name"),
+        _first_non_empty("doctor_name").alias("doctor_name"),
+        _first_non_empty("hospital").alias("hospital"),
+        _sorted_union("matched_drugs").alias("all_drugs"),
+        _sorted_union("matched_diseases").alias("all_diseases"),
+        F.min(F.struct((-rank).alias("neg_rank"), "turn_idx", "urgency"))[
+            "urgency"
+        ].alias("max_urgency"),
+        F.array_sort(F.collect_set("document_type")).alias("document_types"),
     )

@@ -5,10 +5,14 @@ Physical design for 10^12 turns (SURVEY.md §4):
 - The per-turn hot path is **narrow**: scan → one Arrow-vectorized
   projection → sink. No shuffle, no driver collection; Catalyst prunes the
   scan to the referenced columns.
-- The only shuffle in the job is the per-conversation metrics/validation
-  pass — and conversation skew (one conversation with 10^6 turns) is a
-  *group* skew AQE's skew-join splitting does not fix. It is handled
-  explicitly by **salting**: first aggregate by ``(conv_id, salt)`` where
+- The shuffles in the job are the per-conversation stages: this module's
+  metrics/validation pass and ``operators/conversation.conversation_rollup``.
+  Conversation skew (one conversation with 10^6 turns) is a *group* skew
+  AQE's skew-join splitting does not fix. The rollup's aggregates are all
+  partial-aggregable, so a mega-conversation reaches its final task as one
+  pre-reduced row per input partition. The metrics pass also counts
+  *distinct* turn indices; it bounds its groups explicitly by **salting**:
+  first aggregate by ``(conv_id, salt)`` where
   ``salt = turn_idx div bucket_size`` (bounding any single group), then a
   second lightweight merge by ``conv_id``. Because salt buckets partition
   the turn-index range, per-bucket distinct counts add up exactly — the

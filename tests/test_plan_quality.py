@@ -535,6 +535,48 @@ def test_stage_udf_pruning(spark):
     }, full
 
 
+def test_conversation_rollup_plan_is_jvm_aggregation(spark):
+    """The per-conversation rollup is one aggregation of built-in
+    expressions: no grouped-map Python node, no Python node besides the
+    extraction's own ArrowEvalPython stages (pruned to the fields the
+    rollup reads), and a map-side partial aggregate below its one
+    exchange, so a mega-conversation reaches its final task pre-reduced."""
+    import re
+
+    from htep_spark.operators.conversation import conversation_rollup
+    from htep_spark.plans.pipeline import run_extraction
+    from htep_spark.schema import TRANSCRIPT_SCHEMA
+    from htep_spark.sources.io import synthesize_transcripts_pdf
+
+    # a local source, so every Python node in the plan is the rollup's own
+    tr = spark.createDataFrame(synthesize_transcripts_pdf(200, n_convs=4), TRANSCRIPT_SCHEMA)
+    plan = (
+        conversation_rollup(run_extraction(tr))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    python_nodes = {
+        m for m in re.findall(r"\b(\w*(?:Python|Pandas)\w*)\b", plan)
+        if not m.startswith("pythonUDF")
+    }
+    assert python_nodes == {"ArrowEvalPython"}, python_nodes
+    assert set(re.findall(r"(\w+_udf)", plan)) == {
+        "extract_core_udf",
+        "fields_udf",
+        "classify_udf",
+    }, plan
+
+    lines = plan.splitlines()
+    exchanges = [i for i, l in enumerate(lines) if "Exchange " in l]
+    assert len(exchanges) == 1, plan
+    below = "\n".join(lines[exchanges[0] + 1 :])
+    above = "\n".join(lines[: exchanges[0]])
+    assert "partial_count" in below and "partial_min" in below, plan
+    assert "partial_" not in above, plan
+
+
 def test_bm25_no_single_partition_window(spark):
     """VERDICT r06 #2: bm25's global top-K must be a distributed
     TakeOrderedAndProject, never an unpartitioned row_number window that
