@@ -1507,7 +1507,8 @@ SELECT doc_a, doc_b, jaccard FROM jpairs
 # --------------------------------------------------------------------------
 # Dedup canonicalization: near-dup pairs → connected components → keepers.
 # The driver query feeds the SAME distributed ``connected_components``
-# operator (operators/dedup.py, pointer-jumping label propagation) from the
+# operator (operators/dedup.py: per-partition union-find stars, then
+# min-label rounds until a round's second hop moves no label) from the
 # exact n-gram Jaccard pairs above, so the cluster/keeper logic is
 # hash-verified against a DuckDB recursive-CTE transitive closure. The
 # MinHash-LSH pair source (the at-scale candidate generator; xxhash64 is not

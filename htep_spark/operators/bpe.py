@@ -26,7 +26,7 @@ is ONE distributed hash aggregation:
 Scale design (10^12 tokens): per step = one shuffle (pair count) + one
 narrow map (fold). ``k`` supersteps chain lineage linearly; callers at
 real scale should ``localCheckpoint`` the symbol frame every few steps
-(same pattern as ``connected_components``, operators/dedup.py:338). The
+(the pattern ``operators.dedup.connected_components`` uses per round). The
 driver never holds row data — only the k winning pairs.
 
 The DuckDB oracle reproduces the whole loop as a generated k-step CTE

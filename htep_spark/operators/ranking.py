@@ -13,7 +13,8 @@ scale. The scale-honest exact construction used here:
    range boundaries come from SAMPLING, so the two downstream jobs must
    read ONE materialization — re-executing the exchange per job could
    re-sample different boundaries and mis-rank boundary rows (review-r04
-   finding; same lineage-pinning pattern as ``connected_components``);
+   finding). The returned frame reads that pin, so it stays held, like
+   the one pin a ``dedup_keepers`` call returns behind its result;
 2. ``monotonically_increasing_id`` over the materialized sorted
    partitions encodes (partition, local position); one tiny aggregation
    collects per-partition ``(count, min_id)`` — #partitions scalars to

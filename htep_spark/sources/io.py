@@ -67,9 +67,12 @@ def load_table(spark, sf_dir: str, name: str):
 def write_bucketed_transcripts(df, table_name: str, n_buckets: int = 32) -> None:
     """Persist transcripts bucketed by ``conv_id`` (the parquet analogue of
     the Iceberg partition transform ``bucket(N, conv_id)`` from SURVEY.md
-    §4). Reading this table back lets every per-conversation groupBy/join
-    reuse the layout — Catalyst elides the shuffle entirely (asserted in
-    ``tests/test_bucketing.py``)."""
+    §4). A per-conversation groupBy or join over a frame read straight
+    from this table reuses the layout and plans no shuffle (asserted in
+    ``tests/test_bucketing.py``). Over ``run_extraction`` of the table it
+    does not: the ArrowEvalPython nodes of the stage UDFs drop the scan's
+    partitioning, so ``conversation_rollup`` of the extraction still plans
+    one ``Exchange``; to skip it, bucket the extraction output instead."""
     (
         df.write.mode("overwrite")
         .bucketBy(n_buckets, "conv_id")
