@@ -10701,7 +10701,7 @@ FROM stats s CROSS JOIN piv p
 # 1-in-11 slice exercises the NULL-on-parse-failure contract both
 # engines share), and a per-key rollup with distinct-user counts.
 # Completes the source-format story: parquet (everything), text
-# (corpus), binary (multimodal), JSON (this).
+# (corpus), JSON (this).
 #
 # Scale shape: one scan; JSON parsing is per-row JVM-side (no Python);
 # the rollup is map-side combinable; output is |keys|-sized.

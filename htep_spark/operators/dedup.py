@@ -499,8 +499,10 @@ def connected_components(pairs: DataFrame, max_iterations: int = 20) -> DataFram
     The fixed point is unique — every label is a node of its component,
     never below the component minimum, and constant along each edge — so
     the result does not depend on how the pairs are partitioned.
-    ``max_iterations`` bounds the rounds. The star pin and each superseded
-    round's pin are released; the returned frame reads one pin.
+    A call whose last round still lowers a label after ``max_iterations``
+    rounds raises ``RuntimeError`` and releases its pins: unconverged
+    labels are never returned. The star pin and each superseded round's
+    pin are released; the returned frame reads one pin.
     """
     return _components(pairs, _Pins(), max_iterations)
 
@@ -530,8 +532,13 @@ def _components(pairs: DataFrame, pins: _Pins, max_iterations: int = 20) -> Data
         pins.release(stars, labels)
         if moved.get["n"] == 0:
             break
-    # a round's pin reads nothing upstream; the seed labels read the stars
-    pins.release(labels if max_iterations > 0 else stars)
+    else:
+        pins.release()
+        raise RuntimeError(
+            f"connected components did not converge in {max_iterations} rounds"
+        )
+    # a round's pin reads nothing upstream
+    pins.release(labels)
     return labels
 
 

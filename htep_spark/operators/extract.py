@@ -1,4 +1,4 @@
-"""Arrow-vectorized extraction operators (the UDF surface).
+"""Arrow-vectorized extraction operators: the one extraction UDF surface.
 
 Design (SURVEY.md §2.7 "UDF/UDAF/UDTF surface"): every per-turn operator is
 a pandas UDF — the Arrow batch is the unit of vectorization, generalizing
@@ -44,11 +44,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..reference import STAGES, Stage, extract_turns, run_batch
+from ..reference import STAGES, Stage, run_batch
 from ..schema import EXTRACTION_RESULT_TYPE, METRICS_TYPE
 
 __all__ = [
-    "extract_turn_udf",
     "extract_transcripts",
     "extract_core_udf",
     "segments_udf",
@@ -57,12 +56,6 @@ __all__ = [
     "entities_udf",
     "deid_udf",
 ]
-
-
-@F.pandas_udf(EXTRACTION_RESULT_TYPE)
-def extract_turn_udf(texts: pd.Series) -> pd.DataFrame:
-    """The SQL function ``htep_extract``: the whole trunk in one crossing."""
-    return pd.DataFrame(extract_turns(texts.tolist()))
 
 
 _RESULT_FIELDS = {f.name: f for f in EXTRACTION_RESULT_TYPE.fields + METRICS_TYPE.fields}

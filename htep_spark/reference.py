@@ -22,12 +22,13 @@ canonical semantics; every per-operator behavior is reference-faithful.
 The chain is written once, as the stage table ``STAGES``: core (decode +
 T7 correction), segments, fields, classify (+ urgency), entities and deid,
 each with its input field, batch kernel and default output.
-``extract_turns`` composes the table in-process; the Spark stage UDFs
-(``htep_spark/operators/extract.py``) are built from the same table —
-equality by construction, then tested anyway. Every stage kernel maps a
-batch of values (an Arrow batch in Spark) to one output per value; the
-core stage scores the T7 memo misses of the whole batch together, the
-reference's own batching fix (``BlockICREngine._batch_predict_chars``,
+``extract_turns`` composes the table in-process; the six Spark stage UDFs
+(``htep_spark/operators/extract.py``), the only Spark extraction surface,
+are built from the same table — equality by construction, then tested
+anyway. Every stage kernel maps a batch of values (an Arrow batch in
+Spark) to one output per value; the core stage scores the T7 memo misses
+of the whole batch together, the reference's own batching fix
+(``BlockICREngine._batch_predict_chars``,
 ``src/recognition/icr_block_engine.py:162-195``). A turn's result never
 depends on the batch it lands in; ``extract_turn`` is the batch of one.
 

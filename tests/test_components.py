@@ -1,10 +1,12 @@
 """``operators.dedup.connected_components``: labels equal a union-find
-reference on graphs spread over several partitions, and one call stays
-within its Spark job and pin budget."""
+reference on graphs spread over several partitions, one call stays within
+its Spark job and pin budget, and a call that runs out of rounds raises."""
 
 from __future__ import annotations
 
 import random
+
+import pytest
 
 
 N_PARTS = 4
@@ -74,6 +76,17 @@ def test_connected_components_equal_union_find(spark):
         want = _min_label_components(g)
         assert {n: got.get(n) for n in want} == want, name
     assert len(got) == len({n for e in edges for n in e})
+
+
+def test_connected_components_raises_when_rounds_run_out(spark):
+    """A random-id chain over every partition needs several rounds; with
+    one allowed, the call raises instead of returning unconverged labels."""
+    from htep_spark.operators.dedup import connected_components
+
+    ids = _random_ids(random.Random(20261019), 200, 0)
+    pairs = _edges_frame(spark, list(zip(ids, ids[1:])))
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(pairs, max_iterations=1)
 
 
 def _fixed_graph(spark):

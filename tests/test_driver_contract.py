@@ -279,3 +279,68 @@ def test_bench_headline_names_resolve():
     assert len(names) == 16, names
     missing = [n for n in names if n not in extra_names and n not in QUERIES]
     assert not missing, f"bench.py headline names missing from QUERIES: {missing}"
+
+
+# htep_spark modules that no entry point imports, each kept on purpose
+_KEPT_WITHOUT_CONSUMER = {
+    "htep_spark.streaming.stream": "the streaming path of the batch/streaming parity",
+    "htep_spark.plans.compact": "the small-files stage for checkpointed output",
+    "htep_spark.functions.evaluation": "the reference's offline metrics (SURVEY §3.3)",
+}
+
+
+def test_every_module_has_a_consumer():
+    """Every htep_spark module is imported, directly or through other
+    modules, from a non-test entry point: ``__spark_entry__.py``,
+    ``bench.py``, ``perfbench/*.py`` or ``tools/*.py``. The walk reads
+    every ``import`` statement through ``ast``, function-local ones
+    included, so a module only tests reach fails here."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    files = {}  # dotted module name -> source file
+    for path in root.glob("htep_spark/**/*.py"):
+        parts = path.relative_to(root).with_suffix("").parts
+        files[".".join(parts[:-1] if parts[-1] == "__init__" else parts)] = path
+    # scripts import root modules and their own siblings by bare name
+    scripts = [*root.glob("perfbench/*.py"), *root.glob("tools/*.py")]
+    for path in [*root.glob("*.py"), *scripts]:
+        files.setdefault(path.stem, path)
+    entries = ["__spark_entry__", "bench", *(p.stem for p in scripts)]
+
+    def imports(name):
+        path = files[name]
+        is_package = path.name == "__init__.py"
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                yield from (a.name for a in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:
+                    package = name.split(".")
+                    package = package[: len(package) - node.level + is_package]
+                    base = ".".join(package + ([base] if base else []))
+                yield base
+                yield from (f"{base}.{a.name}" for a in node.names)
+
+    def reach(starts):
+        reached, todo = set(), list(starts)
+        while todo:
+            name = todo.pop()
+            if name in reached:
+                continue
+            reached.add(name)
+            parts = name.split(".")
+            # importing a module runs its parent packages too
+            parents = [".".join(parts[:i]) for i in range(1, len(parts))]
+            todo += [n for n in [*parents, *imports(name)] if n in files]
+        return reached
+
+    kept = list(_KEPT_WITHOUT_CONSUMER)
+    modules = {n for n in files if n.startswith("htep_spark")}
+    assert modules - reach(entries + kept) == set(), (
+        "htep_spark modules no entry point imports: give each a consumer or delete it"
+    )
+    # the allowlist names only modules that still lack a consumer
+    assert reach(entries) & set(kept) == set()

@@ -57,14 +57,6 @@ def test_payload_variants_extract_same_fields():
         }
 
 
-def _via_extract_turn_udf(df):
-    from pyspark.sql import functions as F
-
-    from htep_spark.operators.extract import extract_turn_udf
-
-    return df.select("case_id", extract_turn_udf(F.col("text")).alias("result"))
-
-
 def _via_run_extraction(df):
     from pyspark.sql import functions as F
 
@@ -84,13 +76,13 @@ def _via_run_extraction(df):
 
 @pytest.mark.parametrize(
     "path",
-    [_via_extract_turn_udf, _via_run_extraction],
-    ids=["extract_turn_udf", "run_extraction"],
+    [_via_run_extraction],
+    ids=["run_extraction"],
 )
 def test_golden_corpus_through_spark(spark, path):
     """Every golden case must round-trip identically through Spark (not
-    just the oracle function) — payload variants included — on both the
-    one-crossing SQL UDF and the stage-split production path."""
+    just the oracle function) — payload variants included — on the
+    stage-split production path."""
     df = spark.createDataFrame(
         [(g["case_id"], g["text"]) for g in _GOLDEN], ["case_id", "text"]
     )

@@ -1,5 +1,5 @@
 """Tests for the scale-path operators: dedup (MinHash/SimHash), similarity
-search (brute-force + LSH), multimodal plumbing, streaming pipeline."""
+search (brute-force + LSH), streaming pipeline."""
 
 from __future__ import annotations
 
@@ -256,423 +256,6 @@ def test_ann_lsh_agrees_with_bruteforce_on_top1(spark):
         scores = [r["cosine"] for r in ranked]
         assert scores == sorted(scores, reverse=True)
     assert len(exact) == 12  # 4 queries x 3
-
-
-def test_multimodal_decode_plumbing(spark):
-    """Real codecs: strict=True passes on the golden media table (PNG/BMP/
-    PPM/WAV/RAWV), dimensions are the true encoded ones, not hash fakes."""
-    from htep_spark.operators.multimodal import decode_media, make_media_table
-
-    media = make_media_table(spark, n=12)
-    out = decode_media(media, strict=True).collect()
-    assert len(out) == 12
-    assert all(r["error"] is None for r in out), [r["error"] for r in out]
-    by_id = {r["media_id"]: r for r in out}
-    img = by_id["m-0000"]
-    assert img["kind"] == "image" and img["n_frames"] == 1
-    # _synth_image default is 48x32 — real decode must report exactly that
-    assert (img["width"], img["height"]) == (48, 32)
-    assert img["format"] == "png" and len(img["feature"]) == 8
-    assert abs(sum(img["feature"]) - 1.0) < 1e-5  # histogram fractions
-    aud = by_id["m-0001"]
-    assert aud["format"] == "wav" and aud["n_frames"] == 12000
-    assert aud["duration_sec"] == 0.75  # 12000 frames @ 16 kHz
-    vid = by_id["m-0002"]
-    assert vid["format"] == "rawv" and vid["n_frames"] == 32
-    assert (vid["width"], vid["height"]) == (32, 24)
-    # image i=9 cycles to the baseline JPEG codec — true dims, real decode
-    jpg = by_id["m-0009"]
-    assert jpg["format"] == "jpeg" and (jpg["width"], jpg["height"]) == (48, 32)
-    # deterministic across runs
-    out2 = decode_media(media, strict=True).collect()
-    assert sorted(map(str, out)) == sorted(map(str, out2))
-
-
-def test_multimodal_pixel_roundtrip(spark):
-    """Pixel-level: decode(payload) of every image format reproduces the
-    exact synthetic source array."""
-    import numpy as np
-
-    from htep_spark.functions import codecs
-    from htep_spark.operators.multimodal import _synth_image
-
-    src = _synth_image(5)
-    for fmt in ("png", "bmp", "ppm"):
-        out = codecs.decode_image(codecs.encode_image(src, fmt))
-        assert np.array_equal(out, src), fmt
-    # JPEG is lossy: near-lossless at the flat default quant, deterministic
-    jout = codecs.decode_image(codecs.encode_image(src, "jpeg"))
-    assert jout.shape == src.shape
-    assert np.abs(jout.astype(int) - src.astype(int)).max() <= 3
-    assert codecs.encode_image(src, "jpeg") == codecs.encode_image(src, "jpeg")
-    # PNG filters 1-4 decode: round-trip a real-world-filtered image by
-    # re-encoding rows with each filter type manually is overkill here;
-    # instead verify RGBA + grayscale channel counts survive
-    rgba = np.dstack([src, np.full(src.shape[:2], 7, np.uint8)])
-    assert codecs.decode_png(codecs.encode_png(rgba)).shape == rgba.shape
-    gray = src[:, :, 0]
-    assert codecs.decode_png(codecs.encode_png(gray)).shape == (32, 48, 1)
-
-
-def test_gif_codec_roundtrip():
-    """GIF87a/89a: exact-palette round-trip across shapes/palette sizes/
-    interlace, dictionary growth past the 12-bit reset, multi-frame
-    compositing with GCE transparency, and clean truncation errors."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from htep_spark.functions import codecs as C
-
-    def palimg(h, w, ncol, seed):
-        r = np.random.default_rng(seed)
-        pal = r.integers(0, 256, (ncol, 3), dtype=np.uint8)
-        return pal[r.integers(0, ncol, (h, w))]
-
-    for (h, w, ncol) in [(17, 23, 5), (8, 5, 2), (1, 1, 1), (40, 60, 256)]:
-        img = palimg(h, w, ncol, h * 100 + w)
-        for il in (False, True):
-            b = C.encode_gif(img, interlace=il)
-            assert C.sniff_format(b) == "gif"
-            frames = C.decode_gif(b)
-            assert len(frames) == 1 and np.array_equal(frames[0], img)
-    # dictionary reset at 4096 entries exercised by a large repetitive image
-    big = palimg(200, 300, 17, 5)
-    assert np.array_equal(C.decode_gif(C.encode_gif(big))[0], big)
-    assert C.encode_gif(big) == C.encode_gif(big)  # deterministic
-    with pytest.raises(ValueError, match="256"):
-        C.encode_gif(
-            np.random.default_rng(0).integers(0, 256, (64, 64, 3), np.uint8)
-        )
-    # decode_image dispatch returns the first frame
-    img = palimg(6, 9, 4, 3)
-    assert np.array_equal(C.decode_image(C.encode_gif(img)), img)
-    # multi-frame with transparency: splice a second 2x2 frame at (1,1)
-    # whose index 0 is transparent — composite keeps underlying pixels
-    base = np.zeros((4, 4, 3), dtype=np.uint8)
-    base[:] = [10, 20, 30]
-    b = bytearray(C.encode_gif(base))
-    assert b[-1] == 0x3B
-    # second frame: local color table of 2 colors, indices [[0,1],[1,0]]
-    lct = bytes([0, 0, 0, 200, 100, 50])
-    lzw = C._gif_lzw_encode(2, bytes([0, 1, 1, 0]))
-    gce = bytes([0x21, 0xF9, 4, 0x01, 0, 0, 0, 0])  # transparent idx 0
-    frame2 = (
-        gce
-        + bytes([0x2C])
-        + struct.pack("<HHHHB", 1, 1, 2, 2, 0x80)  # LCT flag, size bits 0
-        + lct
-        + bytes([2])
-        + bytes([len(lzw)])
-        + lzw
-        + b"\x00"
-    )
-    multi = bytes(b[:-1]) + frame2 + b"\x3b"
-    frames = C.decode_gif(multi)
-    assert len(frames) == 2
-    assert np.array_equal(frames[0], base)
-    want = base.copy()
-    want[1, 2] = [200, 100, 50]  # idx 1 painted
-    want[2, 1] = [200, 100, 50]
-    # idx 0 positions (1,1) and (2,2) stay the underlying color
-    assert np.array_equal(frames[1], want)
-    # truncated LZW data errors cleanly
-    good = C.encode_gif(palimg(12, 12, 6, 9))
-    with pytest.raises(ValueError):
-        C.decode_gif(good[: len(good) // 2])
-
-
-def test_gif_disposal_methods():
-    """GIF89a GCE disposal semantics (ADVICE r04): 2 restores the frame
-    region to the background color before the next frame, 3 restores the
-    pre-frame canvas, undefined codes 4-7 raise; plus encode_gif_frames
-    (animated writer, per-frame local tables) round-trips canvas states
-    exactly through decode_gif."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from htep_spark.functions import codecs as C
-
-    def frame_block(x0, y0, fw, fh, colors, indices, disposal, transparent=None):
-        packed = (disposal & 0x07) << 2
-        tidx = 0
-        if transparent is not None:
-            packed |= 0x01
-            tidx = transparent
-        gce = bytes([0x21, 0xF9, 4, packed, 0, 0, tidx, 0])
-        bits = max(1, (len(colors) - 1).bit_length())
-        lct = bytearray()
-        for c in colors:
-            lct += bytes(c)
-        lct += b"\x00" * (3 * ((1 << bits) - len(colors)))
-        mcs = max(2, bits)
-        lzw = C._gif_lzw_encode(mcs, bytes(indices))
-        return (
-            gce
-            + bytes([0x2C])
-            + struct.pack("<HHHHB", x0, y0, fw, fh, 0x80 | (bits - 1))
-            + bytes(lct)
-            + bytes([mcs])
-            + bytes([len(lzw)])
-            + lzw
-            + b"\x00"
-        )
-
-    # canvas 4x4, GCT = [background red, blue]; frame 1 paints a 2x2 blue
-    # square at (1,1) with disposal 2 → frame 2 (full-canvas, transparent)
-    # must see the region RESTORED TO RED, not blue
-    header = b"GIF89a" + struct.pack("<HHBBB", 4, 4, 0x80, 0, 0)
-    gct = bytes([200, 0, 0, 0, 0, 200])  # red bg (idx 0), blue (idx 1)
-    f1 = frame_block(1, 1, 2, 2, [(0, 0, 200)], [0, 0, 0, 0], disposal=2)
-    # frame 2: full canvas, single transparent color → pure canvas probe
-    f2 = frame_block(0, 0, 4, 4, [(9, 9, 9)], [0] * 16, disposal=0, transparent=0)
-    gif = header + gct + f1 + f2 + b"\x3b"
-    frames = C.decode_gif(gif)
-    assert len(frames) == 2
-    assert np.array_equal(frames[0][1, 1], [0, 0, 200])  # painted blue
-    assert np.array_equal(frames[1][1, 1], [200, 0, 0])  # restored to bg
-    assert np.array_equal(frames[1][0, 0], [200, 0, 0])
-    # disposal 3: same shape but region must restore the PRE-frame canvas
-    # (green base painted by an initial full-canvas frame, not background)
-    f0 = frame_block(0, 0, 4, 4, [(0, 150, 0)], [0] * 16, disposal=1)
-    f1b = frame_block(1, 1, 2, 2, [(0, 0, 200)], [0, 0, 0, 0], disposal=3)
-    gif3 = header + gct + f0 + f1b + f2 + b"\x3b"
-    frames3 = C.decode_gif(gif3)
-    assert np.array_equal(frames3[1][1, 1], [0, 0, 200])  # shown blue
-    assert np.array_equal(frames3[2][1, 1], [0, 150, 0])  # restored green
-    # undefined disposal codes error instead of silently compositing
-    bad = frame_block(0, 0, 4, 4, [(1, 2, 3)], [0] * 16, disposal=5)
-    with pytest.raises(ValueError, match="disposal"):
-        C.decode_gif(header + gct + bad + b"\x3b")
-    # animated writer round-trip: canvas states come back exactly
-    rng = np.random.default_rng(7)
-    pal = rng.integers(0, 256, (6, 3), dtype=np.uint8)
-    fs = [pal[rng.integers(0, 6, (5, 7))] for _ in range(3)]
-    out = C.decode_gif(C.encode_gif_frames(fs))
-    assert len(out) == 3
-    for got, want in zip(out, fs):
-        assert np.array_equal(got, want)
-    with pytest.raises(ValueError, match="canvas size"):
-        C.encode_gif_frames([fs[0], fs[0][:3]])
-
-
-def test_png_adam7_interlace():
-    """Adam7 interlaced PNGs decode pixel-identically to the source:
-    encoder round-trip across shapes (incl. degenerate passes), a
-    hand-built stream using non-zero filters INSIDE passes (each pass
-    unfilters as an independent image, per spec §8.2), and clean
-    rejection of truncated pass data."""
-    import struct
-    import zlib
-
-    import numpy as np
-    import pytest
-
-    from htep_spark.functions import codecs as C
-
-    rng = np.random.default_rng(9)
-    for shape in [(17, 23, 3), (8, 5, 1), (1, 1, 1), (7, 1, 3), (1, 9, 3), (9, 9, 4)]:
-        img = rng.integers(0, 256, shape, dtype=np.uint8)
-        assert np.array_equal(C.decode_png(C.encode_png(img, interlace=True)), img)
-    # hand-built interlaced stream with Sub(1) and Up(2) filters per pass
-    img = rng.integers(0, 256, (10, 12, 3), dtype=np.uint8)
-    parts = []
-    for x0, y0, dx, dy in C._ADAM7:
-        sub = img[y0::dy, x0::dx]
-        if sub.shape[0] == 0 or sub.shape[1] == 0:
-            continue
-        flat = sub.reshape(sub.shape[0], -1).astype(np.int32)
-        for y in range(flat.shape[0]):
-            if y == 0:  # Sub filter
-                line = flat[y].copy()
-                line[3:] = (line[3:] - flat[y][:-3]) % 256
-                parts.append(b"\x01" + line.astype(np.uint8).tobytes())
-            else:  # Up filter
-                line = (flat[y] - flat[y - 1]) % 256
-                parts.append(b"\x02" + line.astype(np.uint8).tobytes())
-    ihdr = struct.pack(">IIBBBBB", 12, 10, 8, 2, 0, 0, 1)
-    payload = (
-        C._PNG_SIG
-        + C._png_chunk(b"IHDR", ihdr)
-        + C._png_chunk(b"IDAT", zlib.compress(b"".join(parts)))
-        + C._png_chunk(b"IEND", b"")
-    )
-    assert np.array_equal(C.decode_png(payload), img)
-    # truncated interlaced data rejects with a clear error
-    short = (
-        C._PNG_SIG
-        + C._png_chunk(b"IHDR", ihdr)
-        + C._png_chunk(b"IDAT", zlib.compress(b"".join(parts)[:-40]))
-        + C._png_chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="interlaced"):
-        C.decode_png(short)
-
-
-def test_tiff_codec_roundtrip():
-    """TIFF 6.0 writer/reader: lossless round-trip across byte orders
-    (II/MM), compression (none/PackBits), strip layouts, gray/RGB; plus
-    WhiteIsZero inversion, decode_image dispatch, and the multimodal
-    decode path."""
-    import struct
-
-    import numpy as np
-
-    from htep_spark.functions import codecs as C
-
-    rng = np.random.default_rng(5)
-    imgs = [
-        rng.integers(0, 256, (17, 23, 3), dtype=np.uint8),
-        rng.integers(0, 256, (8, 5, 1), dtype=np.uint8),
-        np.tile(np.arange(16, dtype=np.uint8), (10, 4)).reshape(10, 64, 1),
-    ]
-    for img in imgs:
-        for comp in ("none", "packbits", "lzw"):
-            for bo in ("<", ">"):
-                for rps in (0, 3):
-                    b = C.encode_tiff(
-                        img, compression=comp, byteorder=bo, rows_per_strip=rps
-                    )
-                    assert C.sniff_format(b) == "tiff"
-                    assert np.array_equal(C.decode_tiff(b), img), (
-                        img.shape, comp, bo, rps,
-                    )
-    # LZW width transitions + 4094 dictionary resets (TIFF §13 EarlyChange)
-    big = np.random.default_rng(4).integers(0, 256, (120, 300, 3), np.uint8)
-    assert np.array_equal(
-        C.decode_tiff(C.encode_tiff(big, compression="lzw")), big
-    )
-    assert C._tiff_lzw_decode(C._tiff_lzw_encode(b""), 0) == b""
-    b = C.encode_tiff(imgs[0])
-    assert np.array_equal(C.decode_image(b), imgs[0])
-    assert C.encode_tiff(imgs[0]) == b  # deterministic bytes
-    # PhotometricInterpretation 0 (WhiteIsZero) inverts on decode
-    b2 = bytearray(C.encode_tiff(imgs[1]))
-    n = struct.unpack("<H", b2[8:10])[0]
-    for i in range(n):
-        off = 10 + 12 * i
-        if struct.unpack("<H", b2[off : off + 2])[0] == 262:
-            b2[off + 8] = 0
-    assert np.array_equal(C.decode_tiff(bytes(b2)), 255 - imgs[1])
-    # truncated strip rejects cleanly
-    import pytest
-
-    with pytest.raises(ValueError):
-        C.decode_tiff(C.encode_tiff(imgs[0])[:-20])
-    # PackBits literal-overshoot regression: 127 non-repeating bytes then a
-    # 2-run used to emit a 129-byte "literal" with control byte 128 (noop)
-    wide = np.zeros((3, 129, 1), dtype=np.uint8)
-    wide[:, :127, 0] = (np.arange(127) % 251).astype(np.uint8)
-    wide[:, 127:, 0] = 7
-    wide[:, 126, 0] = 9  # ensure ...x, 7, 7 tail (2-run after 127 literals)
-    pb = C.encode_tiff(wide, compression="packbits")
-    assert np.array_equal(C.decode_tiff(pb), wide)
-    # missing StripByteCounts: derivable for uncompressed (single- AND
-    # multi-strip), hard error for compressed
-    for rps in (0, 2):
-        raw = bytearray(C.encode_tiff(imgs[0], rows_per_strip=rps))
-        n = struct.unpack("<H", raw[8:10])[0]
-        for i in range(n):
-            off = 10 + 12 * i
-            if struct.unpack("<H", raw[off : off + 2])[0] == 279:
-                raw[off : off + 2] = struct.pack("<H", 32768)  # unknown tag
-        assert np.array_equal(C.decode_tiff(bytes(raw)), imgs[0]), rps
-    raw = bytearray(C.encode_tiff(imgs[0], compression="packbits"))
-    n = struct.unpack("<H", raw[8:10])[0]
-    for i in range(n):
-        off = 10 + 12 * i
-        if struct.unpack("<H", raw[off : off + 2])[0] == 279:
-            raw[off : off + 2] = struct.pack("<H", 32768)
-    with pytest.raises(ValueError, match="StripByteCounts"):
-        C.decode_tiff(bytes(raw))
-    # multimodal metadata path sees tiff as a real image format
-    from htep_spark.operators.multimodal import _real_decode
-
-    meta = _real_decode(C.encode_tiff(imgs[0]), "image")
-    assert meta["format"] == "tiff" and meta["width"] == 23
-    assert meta["height"] == 17
-
-
-def test_tiff_through_spark_media_operators(spark):
-    """A TIFF payload flows through the real decode_media and resize_media
-    stages: correct metadata, resized payload re-encoded AS tiff and
-    pixel-exact vs the numpy resample."""
-    import numpy as np
-
-    from htep_spark.functions import codecs as C
-    from htep_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        _synth_image,
-        decode_media,
-        resize_media,
-    )
-
-    img = _synth_image(3)
-    media = spark.createDataFrame(
-        [("m-tiff", "image", bytearray(C.encode_tiff(img)), "image/tiff")],
-        MEDIA_SCHEMA,
-    )
-    meta = decode_media(media).collect()[0]
-    assert meta["format"] == "tiff" and meta["error"] is None
-    assert (meta["width"], meta["height"]) == (48, 32)
-    resized = resize_media(media, 16, 12).collect()[0]
-    assert resized["error"] is None
-    out = C.decode_tiff(bytes(resized["payload"]))
-    assert np.array_equal(out, C.resize_nearest(img, 16, 12))
-
-
-def test_jpeg_codec_roundtrip():
-    """Baseline JPEG codec: 4:4:4 and 4:2:0, grayscale, odd dimensions,
-    restart markers — all decode within the lossy tolerance and
-    deterministically (ITU T.81 sequential DCT, pure Python)."""
-    import numpy as np
-
-    from htep_spark.functions.jpeg import decode_jpeg, encode_jpeg
-    from htep_spark.operators.multimodal import _synth_image
-
-    src = _synth_image(3)
-    # near-lossless at quant=1, 4:4:4
-    out = decode_jpeg(encode_jpeg(src, quant=1))
-    assert out.shape == src.shape
-    assert np.abs(out.astype(int) - src.astype(int)).max() <= 2
-    # 4:2:0 subsampling: chroma box-averaged, still close
-    out420 = decode_jpeg(encode_jpeg(src, quant=1, subsampling="420"))
-    assert np.abs(out420.astype(int) - src.astype(int)).max() <= 16
-    assert np.abs(out420.astype(int) - src.astype(int)).mean() <= 4
-    # restart markers decode identically to the unrestarted stream
-    rst = decode_jpeg(encode_jpeg(src, quant=1, restart_interval=2))
-    assert np.array_equal(rst, out)
-    # grayscale is exact at quant=1 (no chroma conversion rounding)
-    g = src[:, :, 0]
-    gout = decode_jpeg(encode_jpeg(g, quant=1))
-    assert gout.shape == (*g.shape, 1)
-    assert np.array_equal(gout[..., 0], g)
-    # odd (non-multiple-of-8/16) dimensions crop correctly
-    odd = src[:29, :45]
-    assert decode_jpeg(encode_jpeg(odd, quant=1, subsampling="420")).shape == (29, 45, 3)
-    # determinism
-    assert encode_jpeg(src, quant=2) == encode_jpeg(src, quant=2)
-
-
-def test_multimodal_strict_stub_errors(spark):
-    """Undecodable payloads (no codec available) must error per-item under
-    the strict DEFAULT — metadata stays null, nothing is fabricated; the
-    deterministic fake decoder is an explicit strict=False opt-in."""
-    from htep_spark.operators.multimodal import MEDIA_SCHEMA, decode_media
-
-    rows = [
-        (f"x-{i}", "image", bytearray(b"\x00\x01 junk unknown" * (i + 1)), "application/octet-stream")
-        for i in range(3)
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = decode_media(media).collect()  # default IS strict
-    assert all(r["error"] and "NotImplementedError" in r["error"] for r in out)
-    assert all(r["width"] is None and r["feature"] is None for r in out)
-    relaxed = decode_media(media, strict=False).collect()
-    assert all(r["error"] is None and r["format"] == "fake" for r in relaxed)
 
 
 def test_streaming_extraction(spark, tmp_path):
@@ -1002,46 +585,6 @@ def test_merge_heavy_hitters_multi_generation_atomic(spark):
     assert rows["other"]["est_count"] == 10 and rows["other"]["max_err"] == 0
 
 
-def test_decode_wav_rejects_stereo_ima_adpcm():
-    """A stereo (nChannels=2) format-0x11 WAV must raise instead of being
-    decoded through the mono reconstruction (ADVICE r06)."""
-    import struct as _struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from htep_spark.functions import codecs
-
-    mono = codecs.encode_wav_ima(
-        np.zeros(64, dtype=np.int16).reshape(-1, 1), 8000
-    )
-    # flip the fmt chunk's channel count to 2 (fmt body starts at 20)
-    idx = mono.index(b"fmt ") + 8
-    stereo = mono[: idx + 2] + _struct.pack("<H", 2) + mono[idx + 4 :]
-    with _pytest.raises(ValueError, match="channel count"):
-        codecs.decode_wav(stereo)
-    codecs.decode_wav(mono)  # the mono original still decodes
-
-
-def test_apng_over_on_transparent_is_source():
-    """OVER onto a fully transparent region must behave as SOURCE (the
-    spec's compositing operator with destination alpha; also the spec's
-    first-frame rule — ADVICE r06)."""
-    import numpy as np
-
-    from htep_spark.functions import codecs
-
-    base = np.zeros((4, 4, 4), np.uint8)  # fully transparent canvas
-    f1 = np.full((2, 2, 4), 200, np.uint8)
-    f1[:, :, 3] = 100  # semi-transparent src over dst alpha 0
-    pay = codecs.encode_apng(
-        [base, f1], offsets=[(0, 0), (1, 1)], dispose_ops=[0, 0],
-        blend_ops=[0, 1],
-    )
-    frames = codecs.decode_png_frames(pay)
-    assert np.array_equal(frames[1][1:3, 1:3], f1)  # OVER == SOURCE here
-
-
 def test_dedup_keepers_connected_components(spark):
     from htep_spark.operators.dedup import connected_components, dedup_keepers
 
@@ -1188,295 +731,6 @@ def test_ann_ivf_topk(spark):
     # deterministic across invocations
     again = sorted(map(str, ann_ivf_topk(emb, queries, k=3).collect()))
     assert again == sorted(map(str, rows))
-
-
-def test_multimodal_resize_and_frame_sample(spark):
-    from htep_spark.operators.multimodal import (
-        make_media_table,
-        resize_media,
-        sample_frames,
-    )
-
-    import numpy as np
-
-    from htep_spark.functions import codecs
-    from htep_spark.operators.multimodal import _synth_image
-
-    media = make_media_table(spark, n=9)
-    resized = {r["media_id"]: r for r in resize_media(media, 16, 12).collect()}
-    assert len(resized) == 9
-    assert all(r["target_w"] == 16 for r in resized.values())
-    # images + videos resize for real; audio (WAV) errors per-item under the
-    # strict default instead of fabricating a payload
-    for r in resized.values():
-        if r["kind"] in ("image", "video"):
-            assert r["error"] is None and r["payload"] is not None
-        else:
-            assert r["payload"] is None and "NotImplementedError" in r["error"]
-    # pixel-level: the resized image payload decodes to exactly the
-    # nearest-neighbor resample of the synthetic source
-    out = codecs.decode_image(bytes(resized["m-0000"]["payload"]))
-    expect = codecs.resize_nearest(_synth_image(0), 16, 12)
-    assert out.shape == (12, 16, 3)
-    assert np.array_equal(out, expect)
-    # resized RAWV video: every frame resized
-    vid = codecs.decode_rawv(bytes(resized["m-0002"]["payload"]))
-    assert len(vid) == 32 and vid[0].shape == (12, 16, 3)
-    # deterministic payloads (audio rows carry null payloads — skip them)
-    again = resize_media(media, 16, 12).collect()
-    assert sorted(
-        bytes(r["payload"]) for r in resized.values() if r["payload"] is not None
-    ) == sorted(bytes(r["payload"]) for r in again if r["payload"] is not None)
-
-    frames = sample_frames(media, every_n=24, max_frames=3).collect()
-    assert frames, "no frames sampled"
-    by_media = {}
-    for f in frames:
-        by_media.setdefault(f["media_id"], []).append(f["frame_idx"])
-    for idxs in by_media.values():
-        assert len(idxs) <= 3
-        assert sorted(idxs) == idxs or len(set(idxs)) == len(idxs)
-    # pixel-level: sampled frame 24 of m-0002 equals the synthetic source
-    f24 = next(
-        f for f in frames if f["media_id"] == "m-0002" and f["frame_idx"] == 24
-    )
-    assert np.array_equal(
-        codecs.decode_ppm(bytes(f24["frame_payload"])),
-        _synth_image(2 * 100 + 24, w=32, h=24),
-    )
-    # animated GIF videos demux for real: strided composited frames out
-    from htep_spark.operators.multimodal import MEDIA_SCHEMA
-
-    C2 = codecs
-    pal = np.array([[0, 0, 0], [200, 40, 10], [5, 250, 90]], dtype=np.uint8)
-    base_img = pal[np.zeros((6, 8), dtype=np.int64)]
-    gif = bytearray(C2.encode_gif(base_img))
-    # append 5 more full-canvas frames cycling colors → 6 frames total
-    import struct as _struct
-
-    tail = b""
-    for fi in range(1, 6):
-        idx = np.full((6, 8), fi % 3, dtype=np.uint8)
-        lct = pal.tobytes() + b"\x00" * 3  # 4-entry table (size bits 1)
-        lzw = C2._gif_lzw_encode(2, idx.tobytes())
-        tail += (
-            bytes([0x2C])
-            + _struct.pack("<HHHHB", 0, 0, 8, 6, 0x81)
-            + lct
-            + bytes([2, len(lzw)])
-            + lzw
-            + b"\x00"
-        )
-    gif = bytes(gif[:-1]) + tail + b"\x3b"
-    assert len(C2.decode_gif(gif)) == 6
-    gmedia = spark.createDataFrame(
-        [("m-gif", "video", bytearray(gif), "image/gif")], MEDIA_SCHEMA
-    )
-    gframes = sample_frames(gmedia, every_n=2, max_frames=3).collect()
-    assert sorted(f["frame_idx"] for f in gframes) == [0, 2, 4]
-    for f in gframes:
-        decoded = C2.decode_ppm(bytes(f["frame_payload"]))
-        assert np.array_equal(decoded, pal[np.full((6, 8), f["frame_idx"] % 3)])
-    # strict mode: an undecodable video yields ONE visible error row (null
-    # frame_idx/payload), not a silent drop (ADVICE r03)
-    bad = spark.createDataFrame(
-        [("m-bad", "video", bytearray(b"not-a-rawv-container"), "video/mp4")],
-        MEDIA_SCHEMA,
-    )
-    bad_rows = sample_frames(bad, every_n=24, max_frames=3).collect()
-    assert len(bad_rows) == 1
-    assert bad_rows[0]["frame_idx"] is None
-    assert bad_rows[0]["frame_payload"] is None
-    assert "NotImplementedError" in bad_rows[0]["error"]
-    # a corrupt RAWV container (magic ok, body truncated) also errors
-    # per-item instead of killing the task (review r04)
-    crawv = spark.createDataFrame(
-        [("m-crawv", "video", bytearray(b"RAWV\x00\x00"), "video/x-rawv")],
-        MEDIA_SCHEMA,
-    )
-    crow = sample_frames(crawv).collect()
-    assert len(crow) == 1 and crow[0]["frame_payload"] is None
-    assert crow[0]["error"] is not None
-    # good frames carry a null error column
-    assert all(f["error"] is None for f in frames)
-
-
-def test_tiff_multipage_roundtrip():
-    """TIFF 6.0 multi-image files: encode_tiff_pages chains one IFD per
-    page (pages may differ in size/channels/compression round-trips) and
-    decode_tiff_pages walks the chain exactly; decode_tiff keeps returning
-    the first page; corrupt chains (out-of-range / cyclic next-IFD offsets)
-    raise ValueError instead of looping or crashing."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from htep_spark.functions import codecs as C
-
-    rng = np.random.default_rng(11)
-    pages = [
-        rng.integers(0, 256, (9, 13, 3), np.uint8),
-        rng.integers(0, 256, (5, 7), np.uint8),  # grayscale page
-        rng.integers(0, 256, (20, 4, 3), np.uint8),
-    ]
-    for comp in ("none", "packbits", "lzw"):
-        for bo in ("<", ">"):
-            b = C.encode_tiff_pages(
-                pages, compression=comp, byteorder=bo, rows_per_strip=4
-            )
-            assert C.sniff_format(b) == "tiff"
-            out = C.decode_tiff_pages(b)
-            assert len(out) == 3, (comp, bo)
-            for got, src in zip(out, pages):
-                src3 = src[..., None] if src.ndim == 2 else src
-                assert np.array_equal(got, src3), (comp, bo)
-            assert np.array_equal(C.decode_tiff(b), pages[0])
-    # single-page writer is the 1-page chain
-    img = pages[0]
-    assert C.encode_tiff(img) == C.encode_tiff_pages([img])
-    assert len(C.decode_tiff_pages(C.encode_tiff(img))) == 1
-    # corrupt chain: next-IFD pointer past EOF → ValueError (the pointer of
-    # page 0 sits at the end of its IFD: header(8) + 2 + 12*n_entries)
-    b = bytearray(C.encode_tiff_pages(pages[:2]))
-    n_entries = struct.unpack("<H", b[8:10])[0]
-    ptr_pos = 10 + 12 * n_entries
-    b[ptr_pos : ptr_pos + 4] = struct.pack("<I", len(b) + 100)
-    with pytest.raises(ValueError, match="out of range"):
-        C.decode_tiff_pages(bytes(b))
-    # cyclic chain: pointer back to the first IFD → ValueError, no hang
-    b[ptr_pos : ptr_pos + 4] = struct.pack("<I", 8)
-    with pytest.raises(ValueError, match="cyclic"):
-        C.decode_tiff_pages(bytes(b))
-
-
-def test_sample_frames_multipage_tiff(spark):
-    """Multi-page TIFFs demux through sample_frames like animated GIFs:
-    strided page indices come out as PPM frames pixel-identical to the
-    source pages; decode_media reports n_frames = page count; resize_media
-    resizes every page; a corrupt IFD chain yields ONE visible error row."""
-    import struct
-
-    import numpy as np
-
-    from htep_spark.functions import codecs
-    from htep_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media,
-        resize_media,
-        sample_frames,
-    )
-
-    rng = np.random.default_rng(21)
-    pages = [rng.integers(0, 256, (6, 8, 3), np.uint8) for _ in range(5)]
-    payload = codecs.encode_tiff_pages(pages)
-    media = spark.createDataFrame(
-        [("m-tif", "video", bytearray(payload), "image/tiff")], MEDIA_SCHEMA
-    )
-    frames = sample_frames(media, every_n=2, max_frames=3).collect()
-    assert sorted(f["frame_idx"] for f in frames) == [0, 2, 4]
-    for f in frames:
-        got = codecs.decode_ppm(bytes(f["frame_payload"]))
-        assert np.array_equal(got, pages[f["frame_idx"]])
-    # decode_media: n_frames = page count (kind-agnostic payload sniffing)
-    imedia = spark.createDataFrame(
-        [("m-tif", "image", bytearray(payload), "image/tiff")], MEDIA_SCHEMA
-    )
-    meta = decode_media(imedia).collect()[0]
-    assert meta["n_frames"] == 5 and meta["error"] is None
-    # resize keeps all pages
-    rz = resize_media(imedia, 16, 12).collect()[0]
-    assert rz["error"] is None
-    rpages = codecs.decode_tiff_pages(bytes(rz["payload"]))
-    assert len(rpages) == 5
-    for got, src in zip(rpages, pages):
-        assert np.array_equal(got, codecs.resize_nearest(src, 16, 12))
-    # corrupt chain → one error row, not a task crash
-    bad = bytearray(payload)
-    n_entries = struct.unpack("<H", bad[8:10])[0]
-    ptr_pos = 10 + 12 * n_entries
-    bad[ptr_pos : ptr_pos + 4] = struct.pack("<I", len(bad) + 9)
-    bmedia = spark.createDataFrame(
-        [("m-bad", "video", bad, "image/tiff")], MEDIA_SCHEMA
-    )
-    rows = sample_frames(bmedia).collect()
-    assert len(rows) == 1 and rows[0]["frame_payload"] is None
-    assert "out of range" in rows[0]["error"]
-
-
-def test_resize_media_animated_gif(spark):
-    """Animated GIFs resize EVERY frame (ADVICE r04): n_frames survives
-    the resize round trip (decode_media parity before vs after) and each
-    resized frame equals the nearest-neighbor resample of the source
-    canvas state."""
-    import numpy as np
-
-    from htep_spark.functions import codecs
-    from htep_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media,
-        resize_media,
-    )
-
-    pal = np.array([[0, 0, 0], [200, 40, 10], [5, 250, 90]], dtype=np.uint8)
-    src_frames = [pal[np.full((6, 8), i % 3)] for i in range(4)]
-    payload = codecs.encode_gif_frames(src_frames)
-    media = spark.createDataFrame(
-        [("m-agif", "image", bytearray(payload), "image/gif")], MEDIA_SCHEMA
-    )
-    before = decode_media(media).collect()[0]
-    assert before["n_frames"] == 4
-    out = resize_media(media, 16, 12).collect()[0]
-    assert out["error"] is None
-    resized_frames = codecs.decode_gif(bytes(out["payload"]))
-    assert len(resized_frames) == 4  # no silent single-frame collapse
-    for got, src in zip(resized_frames, src_frames):
-        assert np.array_equal(got, codecs.resize_nearest(src, 16, 12))
-    media_resized = spark.createDataFrame(
-        [("m-agif", "image", bytearray(bytes(out["payload"])), "image/gif")],
-        MEDIA_SCHEMA,
-    )
-    after = decode_media(media_resized).collect()[0]
-    assert after["n_frames"] == 4 and after["width"] == 16
-    # a multi-palette animation whose composited canvas exceeds 256 colors
-    # cannot round-trip GIF faithfully → VISIBLE per-item error, never a
-    # quantized or frame-dropped payload (review r05): build one from two
-    # 256-color frames where frame 2's transparency keeps half of frame 1
-    import struct as _st
-
-    palA = np.array(
-        [[i, 0, 0] for i in range(256)], dtype=np.uint8
-    )  # 256 reds
-    # 16x32 canvas: every red appears twice (top and bottom half)
-    f1 = palA[np.arange(512).reshape(32, 16) % 256]
-    b = bytearray(codecs.encode_gif(f1))
-    # frame 2: TOP-HALF sub-region painted with a local table of 256
-    # greens → composited state = 256 greens + 256 reds (bottom half
-    # untouched) ≈ 511 distinct colors, unencodable per-frame
-    palB = bytes(b"".join(bytes([0, g, 0]) for g in range(256)))
-    idx2 = (np.arange(256).reshape(16, 16) % 256).astype(np.uint8)
-    lzw2 = codecs._gif_lzw_encode(8, idx2.tobytes())
-    gce = bytes([0x21, 0xF9, 4, 0x04, 0, 0, 0, 0])  # disposal 1, no transp
-    frame2 = (
-        gce
-        + bytes([0x2C])
-        + _st.pack("<HHHHB", 0, 0, 16, 16, 0x87)
-        + palB
-        + bytes([8])
-    )
-    for i in range(0, len(lzw2), 255):
-        chunk = lzw2[i : i + 255]
-        frame2 += bytes([len(chunk)]) + chunk
-    frame2 += b"\x00"
-    rich = bytes(b[:-1]) + frame2 + b"\x3b"
-    states = codecs.decode_gif(rich)
-    n_colors = len(np.unique(states[1].reshape(-1, 3), axis=0))
-    assert n_colors > 256  # the fixture really is unencodable
-    rmedia = spark.createDataFrame(
-        [("m-rich", "image", bytearray(rich), "image/gif")], MEDIA_SCHEMA
-    )
-    rrow = resize_media(rmedia, 16, 32).collect()[0]
-    assert rrow["payload"] is None and "256" in rrow["error"]
 
 
 def test_difflib_match_query_nonvacuous(spark):
@@ -1905,53 +1159,6 @@ def test_sample_hash_is_stratified_and_deterministic(spark):
     assert sorted(map(str, rows)) == sorted(map(str, again))
 
 
-def test_audio_features_spectral(spark):
-    """Real DSP check: a pure sine's spectral centroid lands on its
-    frequency; features match a direct numpy computation on the known
-    synthetic samples; non-WAV audio rows carry the error column."""
-    import numpy as np
-
-    from htep_spark.functions import codecs
-    from htep_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        _audio_spectral,
-        audio_features,
-        make_media_table,
-    )
-
-    # audio sits at i % 3 == 1 → every synthetic tone is 440·(1+1) = 880 Hz
-    media = make_media_table(spark, n=9)
-    rows = {r["media_id"]: r for r in audio_features(media).collect()}
-    assert set(rows) == {"m-0001", "m-0004", "m-0007"}
-    for mid, r in rows.items():
-        assert r["error"] is None and r["sample_rate"] == 16000
-        # pure tone → centroid within a few Hz of the fundamental
-        assert abs(r["spectral_centroid_hz"] - 880.0) < 20.0, (
-            mid, r["spectral_centroid_hz"],
-        )
-        assert abs(r["spectral_rolloff_hz"] - 880.0) < 20.0
-        assert 0.4 < r["rms"] * np.sqrt(2) * 32768.0 / 12000.0 < 1.1
-    # differential vs direct computation on the exact synthetic signal
-    t = np.arange(8000 + (7 % 3) * 4000)
-    samples = (np.sin(2 * np.pi * 880.0 * t / 16000.0) * 12000).astype(np.int16)
-    want = _audio_spectral(samples, 16000)
-    got = rows["m-0007"]
-    for k, v in want.items():
-        assert got[k] == v, (k, got[k], v)
-    # non-WAV audio payload errors per item
-    bad = spark.createDataFrame(
-        [("m-bad", "audio", bytearray(b"mp3-ish-bytes"), "audio/mpeg")],
-        MEDIA_SCHEMA,
-    )
-    brow = audio_features(bad).collect()[0]
-    assert brow["rms"] is None and "NotImplementedError" in brow["error"]
-    # decode_wav sanity: codec round-trips the samples the test recomputes
-    assert np.array_equal(
-        codecs.decode_wav(codecs.encode_wav(samples, rate=16000))[0][:, 0],
-        samples,
-    )
-
-
 def test_connected_components_long_chain(spark):
     """A 60-node chain must converge (pointer jumping: O(log n) rounds)."""
     from htep_spark.operators.dedup import connected_components
@@ -2048,192 +1255,6 @@ def test_range_join_semantics(spark):
         ).collect()
     }
     assert out == {("P1", "I1"), ("P2", "I2"), ("P5", "I1"), ("P6", "I1")}
-
-
-def test_jpeg_decoder_rejects_corrupt_input():
-    """Decoder robustness: corrupt/truncated payloads raise clean Python
-    exceptions (never hang, never return garbage silently); the multimodal
-    operator surfaces them in the error column."""
-    import numpy as np
-    import pytest
-
-    from htep_spark.functions.jpeg import decode_jpeg, encode_jpeg
-    from htep_spark.operators.multimodal import _synth_image
-
-    good = encode_jpeg(_synth_image(1), quant=1)
-    rng = np.random.default_rng(7)
-    # not a JPEG at all
-    with pytest.raises(Exception):
-        decode_jpeg(b"definitely not a jpeg payload")
-    # truncations at varied points
-    for cut in (2, 20, len(good) // 2, len(good) - 3):
-        with pytest.raises(Exception):
-            decode_jpeg(good[:cut])
-    # random byte corruption in the entropy segment (post-headers): must
-    # either decode to a same-shape image or raise — never hang/crash hard
-    for _ in range(20):
-        b = bytearray(good)
-        idx = int(rng.integers(len(good) // 2, len(good) - 4))
-        b[idx] = int(rng.integers(0, 256))
-        try:
-            out = decode_jpeg(bytes(b))
-            assert out.shape == (32, 48, 3)
-        except Exception:
-            pass  # clean rejection is acceptable
-    # flipping a baseline stream's marker to SOF2 yields an invalid
-    # progressive scan script — rejected cleanly
-    prog = bytearray(good)
-    sof = prog.find(b"\xff\xc0")
-    prog[sof + 1] = 0xC2
-    with pytest.raises(ValueError):
-        decode_jpeg(bytes(prog))
-
-
-def test_jpeg_progressive_matches_baseline():
-    """Spectral-selection progressive streams decode to EXACTLY the pixels
-    of the baseline encoding of the same image at the same quant (identical
-    coefficient pipeline) — across subsampling modes, grayscale, odd
-    dimensions, and an all-flat image that exercises EOB-run coding."""
-    import numpy as np
-
-    from htep_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-    from htep_spark.operators.multimodal import _synth_image
-
-    src = _synth_image(4)
-    for sub in ("444", "420"):
-        for q in (1, 4):
-            prog = decode_jpeg(encode_jpeg_progressive(src, quant=q, subsampling=sub))
-            base = decode_jpeg(encode_jpeg(src, quant=q, subsampling=sub))
-            assert np.array_equal(prog, base), (sub, q)
-    flat = np.full((40, 56, 3), 130, np.uint8)  # all-zero AC bands -> EOBRUN
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg_progressive(flat, quant=2)),
-        decode_jpeg(encode_jpeg(flat, quant=2)),
-    )
-    gray = src[:29, :45, 0]
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg_progressive(gray, quant=1)),
-        decode_jpeg(encode_jpeg(gray, quant=1)),
-    )
-    # determinism
-    assert encode_jpeg_progressive(src) == encode_jpeg_progressive(src)
-
-
-def test_jpeg_successive_approximation_matches_baseline():
-    """Successive-approximation progressive streams (Ah>0 DC and AC
-    refinement scans with correction-bit coding, T.81 G.1.2.3 — the shape
-    libjpeg's default progressive scan scripts use) decode to EXACTLY the
-    baseline pixels, across refinement depths, subsampling, grayscale,
-    odd dimensions, and random content (VERDICT r03 #2)."""
-    import numpy as np
-
-    from htep_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-    from htep_spark.operators.multimodal import _synth_image
-
-    rng = np.random.default_rng(11)
-    cases = [
-        (_synth_image(4), "444", 2),
-        (_synth_image(5), "420", 2),
-        (rng.integers(0, 256, (33, 47, 3), dtype=np.uint8), "420", 1),
-        (rng.integers(0, 256, (24, 40, 3), dtype=np.uint8), "444", 4),
-    ]
-    for img, sub, q in cases:
-        base = decode_jpeg(encode_jpeg(img, quant=q, subsampling=sub))
-        for levels in (1, 2, 3):
-            prog = decode_jpeg(
-                encode_jpeg_progressive(
-                    img, quant=q, subsampling=sub, levels=levels
-                )
-            )
-            assert np.array_equal(prog, base), (sub, q, levels)
-    # grayscale + flat image (all-EOB refinement scans: correction bits only)
-    gray = _synth_image(6)[:29, :45, 0]
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg_progressive(gray, quant=1, levels=2)),
-        decode_jpeg(encode_jpeg(gray, quant=1)),
-    )
-    flat = np.full((40, 56, 3), 130, np.uint8)
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg_progressive(flat, quant=2, levels=2)),
-        decode_jpeg(encode_jpeg(flat, quant=2)),
-    )
-    # determinism of the SA stream
-    assert encode_jpeg_progressive(cases[0][0], levels=2) == (
-        encode_jpeg_progressive(cases[0][0], levels=2)
-    )
-
-
-def test_jpeg_advice_r03_edge_cases():
-    """ADVICE r03 lows: (a) quant=1 full-amplitude checkerboard produces
-    AC magnitude 1024 — must clamp to the T.81 +/-1023 range, not
-    KeyError; (b) a baseline stream whose scans cover component subsets
-    must never silently return a Y-only image — single-component
-    sequential scans now DECODE (multiscan accumulation), and the exotic
-    strict-subset multi-component scan raises."""
-    import numpy as np
-    import pytest
-
-    from htep_spark.functions.jpeg import decode_jpeg, encode_jpeg
-
-    # full-amplitude alternating pattern maximizes one AC coefficient
-    xs = np.indices((16, 16)).sum(axis=0) % 2
-    checker = (xs * 255).astype(np.uint8)
-    payload = encode_jpeg(checker, quant=1)  # used to KeyError (cat 11)
-    out = decode_jpeg(payload)
-    assert out.shape == (16, 16, 1)
-    # non-interleaved baseline (one full scan per component) decodes
-    # pixel-identically to the interleaved encoding of the same image
-    rng = np.random.default_rng(13)
-    for shape, sub in [((32, 48, 3), "444"), ((33, 47, 3), "420")]:
-        img = rng.integers(0, 256, shape, dtype=np.uint8)
-        inter = decode_jpeg(encode_jpeg(img, quant=2, subsampling=sub))
-        multi = decode_jpeg(
-            encode_jpeg(img, quant=2, subsampling=sub, interleaved=False)
-        )
-        assert np.array_equal(inter, multi), (shape, sub)
-    # a strict-subset MULTI-component scan (2 of 3) is the one remaining
-    # unsupported layout — hand-craft its SOS header and expect a raise
-    good = bytearray(
-        encode_jpeg(np.zeros((16, 16, 3), np.uint8), quant=2, interleaved=False)
-    )
-    sos = good.find(b"\xff\xda")
-    assert sos > 0
-    partial = (
-        bytes(good[:sos])
-        + b"\xff\xda" + (10).to_bytes(2, "big")
-        + bytes([2, 1, 0, 2, 0x11])
-        + b"\x00\x3f\x00"
-        + bytes(good[sos + 10 :])
-    )
-    with pytest.raises(NotImplementedError, match="subset"):
-        decode_jpeg(partial)
-    # restart markers are an interleaved-only writer feature
-    with pytest.raises(ValueError, match="interleaved"):
-        encode_jpeg(
-            np.zeros((16, 16, 3), np.uint8), restart_interval=2, interleaved=False
-        )
-    # T.81 B.1.1.2 fill bytes before a between-scan marker, and a DQT
-    # segment arriving between scans, must both decode (review r04 finds)
-    import struct
-
-    b = encode_jpeg(
-        rng.integers(0, 256, (16, 24, 3), np.uint8), quant=2, interleaved=False
-    )
-    pos = b.find(b"\xff\xda", b.find(b"\xff\xda") + 2)
-    assert pos > 0
-    with_fill = b[:pos] + b"\xff" + b[pos:]
-    assert np.array_equal(decode_jpeg(with_fill), decode_jpeg(b))
-    dqt = b"\xff\xdb" + struct.pack(">H", 67) + bytes([1]) + bytes([2] * 64)
-    with_dqt = b[:pos] + dqt + b[pos:]
-    assert np.array_equal(decode_jpeg(with_dqt), decode_jpeg(b))
 
 
 def test_exact_global_rank_semantics(spark):
@@ -2622,349 +1643,6 @@ def test_stream_windowed_jsd(spark, tmp_path):
     # branch proofs: OTHER carries mass in A; delta is a p=0 term in B
     assert truth[wa][JSD_STREAM_OTHER] > 0
     assert "delta" not in truth[wb] and fin[wb]["n_present"] < len(ref_counts)
-
-
-def test_apng_codec_roundtrip():
-    """APNG codec: sub-rectangle frames with dispose 0/1/2 and blend 0/1
-    composite exactly like a reference simulation; the default image
-    keeps the file a valid still PNG for decode_png; sequence-number
-    corruption and oversize frames raise ValueError."""
-    import numpy as np
-    import pytest as _pytest
-
-    from htep_spark.functions import codecs
-
-    rng = np.random.default_rng(11)
-    base = rng.integers(0, 256, (16, 20, 4), np.uint8)
-    f1 = rng.integers(0, 256, (6, 8, 4), np.uint8)
-    f2 = rng.integers(0, 256, (5, 7, 4), np.uint8)
-    pay = codecs.encode_apng(
-        [base, f1, f2],
-        offsets=[(0, 0), (3, 2), (9, 8)],
-        dispose_ops=[0, 1, 2],
-        blend_ops=[0, 0, 1],
-    )
-    frames = codecs.decode_png_frames(pay)
-    assert len(frames) == 3
-    assert np.array_equal(frames[0], base)
-    exp1 = base.copy()
-    exp1[2:8, 3:11] = f1
-    assert np.array_equal(frames[1], exp1)
-    # dispose 1 cleared f1's region to zero, then f2 blends OVER with the
-    # spec compositing operator (dst alpha respected; over the cleared
-    # dst-alpha-0 pixels OVER degenerates to SOURCE — ADVICE r06)
-    canvas = base.copy()
-    canvas[2:8, 3:11] = 0
-    dst = canvas[8:13, 9:16].astype(np.uint32)
-    sa = f2[:, :, 3:4].astype(np.uint32)
-    da = dst[:, :, 3:4]
-    num_a = sa * 255 + da * (255 - sa)
-    num_rgb = f2.astype(np.uint32)[:, :, :3] * sa * 255 + dst[:, :, :3] * da * (
-        255 - sa
-    )
-    safe = np.maximum(num_a, 1)
-    comp = np.zeros_like(f2)
-    comp[:, :, :3] = np.where(num_a > 0, (num_rgb + safe // 2) // safe, 0)
-    comp[:, :, 3:4] = (num_a + 127) // 255
-    exp2 = canvas.copy()
-    exp2[8:13, 9:16] = comp
-    assert np.array_equal(frames[2], exp2)
-    # still-PNG compatibility: default image == frame 0
-    assert np.array_equal(codecs.decode_png(pay), base)
-    assert len(codecs.decode_png_frames(codecs.encode_png(base))) == 1
-    # corrupt the fcTL sequence number of frame 2 (rebuild chunk CRC)
-    import struct as _struct
-    import zlib as _zlib
-
-    idx = pay.index(b"fcTL", pay.index(b"fcTL") + 4) - 4
-    (ln,) = _struct.unpack(">I", pay[idx : idx + 4])
-    body = bytearray(pay[idx + 8 : idx + 8 + ln])
-    body[:4] = _struct.pack(">I", 99)
-    crc = _zlib.crc32(b"fcTL" + bytes(body)) & 0xFFFFFFFF
-    bad = (
-        pay[: idx + 8] + bytes(body) + _struct.pack(">I", crc)
-        + pay[idx + 8 + ln + 4 :]
-    )
-    with _pytest.raises(ValueError, match="sequence"):
-        codecs.decode_png_frames(bad)
-    with _pytest.raises(ValueError, match="exceeds canvas"):
-        codecs.encode_apng([base, f1], offsets=[(0, 0), (15, 14)])
-
-
-def test_apng_through_spark_media_operators(spark):
-    """APNG flows through the media operators with the GIF/TIFF
-    no-silent-collapse contract: decode_media reports the animation's
-    frame count, resize_media resizes every composited frame, and
-    sample_frames strides over the composited sequence."""
-    import numpy as np
-
-    from htep_spark.functions import codecs
-    from htep_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media,
-        resize_media,
-        sample_frames,
-    )
-
-    rng = np.random.default_rng(31)
-    canvas = [rng.integers(0, 256, (10, 12, 3), np.uint8) for _ in range(4)]
-    payload = codecs.encode_apng(canvas)
-    media = spark.createDataFrame(
-        [("m-apng", "image", bytearray(payload), "image/png")], MEDIA_SCHEMA
-    )
-    meta = decode_media(media).collect()[0]
-    assert meta["n_frames"] == 4 and meta["error"] is None
-    assert meta["format"] == "png"
-    rz = resize_media(media, 24, 20).collect()[0]
-    assert rz["error"] is None
-    rframes = codecs.decode_png_frames(bytes(rz["payload"]))
-    assert len(rframes) == 4
-    for got, src in zip(rframes, canvas):
-        assert np.array_equal(got, codecs.resize_nearest(src, 24, 20))
-    vmedia = spark.createDataFrame(
-        [("m-apng", "video", bytearray(payload), "image/png")], MEDIA_SCHEMA
-    )
-    frames = sample_frames(vmedia, every_n=2, max_frames=3).collect()
-    assert sorted(f["frame_idx"] for f in frames) == [0, 2]
-    for f in frames:
-        got = codecs.decode_ppm(bytes(f["frame_payload"]))
-        assert np.array_equal(got, canvas[f["frame_idx"]])
-    # a still PNG keeps its single-image behavior end to end
-    still = spark.createDataFrame(
-        [("m-png", "image", bytearray(codecs.encode_png(canvas[0])),
-          "image/png")],
-        MEDIA_SCHEMA,
-    )
-    smeta = decode_media(still).collect()[0]
-    assert smeta["n_frames"] == 1 and smeta["error"] is None
-
-
-def test_ima_adpcm_codec_and_media_flow(spark):
-    """IMA ADPCM WAV (format 0x0011): decode(encode(x)) must be
-    bit-identical to an independent pure-Python reference simulation of
-    the IMA spec reconstruction; SNR on a sine must exceed 20 dB (4-bit
-    ADPCM quality bound); PCM WAVs are unaffected; decode_media /
-    audio_features accept ADPCM payloads transparently; truncated blocks
-    and bad step indices raise ValueError."""
-    import struct as _struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from htep_spark.functions import codecs
-    from htep_spark.functions.codecs import _IMA_INDEX, _IMA_STEPS
-    from htep_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        audio_features,
-        decode_media,
-    )
-
-    t = np.arange(3000) / 16000.0
-    sine = (np.sin(2 * np.pi * 440 * t) * 12000).astype(np.int16)
-    pay = codecs.encode_wav_ima(sine, 16000)
-    dec, rate = codecs.decode_wav(pay)
-    assert rate == 16000 and dec.shape == (3000, 1)
-    err = dec[:, 0].astype(float) - sine.astype(float)
-    snr = 10 * np.log10(
-        (sine.astype(float) ** 2).mean() / (err**2).mean()
-    )
-    assert snr > 20, snr
-
-    # independent reference simulation, bit-for-bit
-    def ref_decode(payload):
-        pos = 12
-        data = n = ba = None
-        while pos + 8 <= len(payload):
-            tag = payload[pos : pos + 4]
-            (ln,) = _struct.unpack("<I", payload[pos + 4 : pos + 8])
-            body = payload[pos + 8 : pos + 8 + ln]
-            if tag == b"fmt ":
-                ba = _struct.unpack("<H", body[12:14])[0]
-            elif tag == b"fact":
-                (n,) = _struct.unpack("<I", body[:4])
-            elif tag == b"data":
-                data = body
-            pos += 8 + ln + (ln & 1)
-        out = []
-        for b0 in range(0, len(data), ba):
-            blk = data[b0 : b0 + ba]
-            pred, index, _r = _struct.unpack("<hBB", blk[:4])
-            out.append(pred)
-            for byte in blk[4:]:
-                for nib in (byte & 0xF, byte >> 4):
-                    step = _IMA_STEPS[index]
-                    delta = step >> 3
-                    if nib & 4:
-                        delta += step
-                    if nib & 2:
-                        delta += step >> 1
-                    if nib & 1:
-                        delta += step >> 2
-                    pred = pred - delta if nib & 8 else pred + delta
-                    pred = max(-32768, min(32767, pred))
-                    index = max(0, min(88, index + _IMA_INDEX[nib & 7]))
-                    out.append(pred)
-        return np.asarray(out[:n], dtype=np.int16)
-
-    assert np.array_equal(ref_decode(pay), dec[:, 0])
-    # PCM path untouched
-    d2, r2 = codecs.decode_wav(codecs.encode_wav(sine, 16000))
-    assert np.array_equal(d2[:, 0], sine) and r2 == 16000
-    # media operators accept ADPCM transparently
-    media = spark.createDataFrame(
-        [("m-adpcm", "audio", bytearray(pay), "audio/wav")], MEDIA_SCHEMA
-    )
-    meta = decode_media(media).collect()[0]
-    assert meta["error"] is None and meta["n_frames"] == 3000
-    feats = audio_features(media).collect()[0]
-    assert feats["error"] is None
-    # the decoded tone's DOMINANT bin is still 440 Hz (the magnitude-
-    # weighted centroid itself sits higher — ADPCM's quantization noise
-    # floor spreads across the band at ~28 dB SNR, which is expected)
-    spec = np.abs(np.fft.rfft(dec[:, 0].astype(float)))
-    peak_hz = np.fft.rfftfreq(dec.shape[0], 1 / 16000.0)[int(spec.argmax())]
-    assert abs(peak_hz - 440.0) < 10.0, peak_hz
-    assert feats["spectral_centroid_hz"] > 0
-    # corrupt stream: truncated final block header
-    data_at = pay.rindex(b"data")
-    bad = pay[: data_at + 8 + 2]
-    with _pytest.raises(ValueError):
-        codecs.decode_wav(
-            b"RIFF" + _struct.pack("<I", len(bad) - 4) + bad[8:]
-        ) if False else codecs._ima_decode(bad[data_at + 8 :], 256, 10)
-    # bad step index in a block header
-    blk = bytearray(16)
-    blk[2] = 99
-    with _pytest.raises(ValueError, match="out of range"):
-        codecs._ima_decode(bytes(blk), 16, 5)
-    # stereo input refused (flattening would interleave channels)
-    with _pytest.raises(ValueError, match="mono-only"):
-        codecs.encode_wav_ima(np.zeros((100, 2), dtype=np.int16))
-
-
-def test_image_dhash_near_dup(spark):
-    """Perceptual image dedup: a PNG master, its JPEG re-encode and a
-    +4-brightness variant must land within Hamming 7 of each other and
-    group as near-dup pairs via the 8x8-band join; unrelated images must
-    NOT pair; the banding is provably candidate-generating (pair count
-    from bands == brute-force pairs under the threshold); a corrupt
-    payload surfaces as an error row."""
-    import numpy as np
-
-    from htep_spark.functions import codecs
-    from htep_spark.functions.jpeg import encode_jpeg
-    from htep_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        image_dhash,
-        media_near_dup,
-    )
-
-    rng = np.random.default_rng(41)
-    # smooth gradient-rich base (pure noise would be JPEG-fragile)
-    yy, xx = np.mgrid[0:32, 0:48]
-    base = np.stack(
-        [
-            (xx * 5 + yy * 2) % 256,
-            (xx * 3 + 40) % 256,
-            (yy * 6 + 10) % 256,
-        ],
-        axis=-1,
-    ).astype(np.uint8)
-    other = rng.integers(0, 256, (32, 48, 3), np.uint8)
-    bright = np.clip(base.astype(np.int16) + 4, 0, 255).astype(np.uint8)
-    rows = [
-        ("png-master", "image", bytearray(codecs.encode_png(base)), "image/png"),
-        ("jpeg-copy", "image", bytearray(encode_jpeg(base)), "image/jpeg"),
-        ("bright-var", "image", bytearray(codecs.encode_png(bright)), "image/png"),
-        ("unrelated", "image", bytearray(codecs.encode_png(other)), "image/png"),
-        ("corrupt", "image", bytearray(b"\x89PNG\r\n\x1a\njunk"), "image/png"),
-        ("audio-row", "audio", bytearray(b""), "audio/wav"),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    hashes = image_dhash(media)
-    got = {r["media_id"]: r for r in hashes.collect()}
-    assert set(got) == {
-        "png-master", "jpeg-copy", "bright-var", "unrelated", "corrupt"
-    }
-    assert got["corrupt"]["error"] is not None
-    assert got["corrupt"]["dhash"] is None
-    for mid in ("png-master", "jpeg-copy", "bright-var", "unrelated"):
-        assert got[mid]["error"] is None
-        assert got[mid]["width"] == 48 and got[mid]["height"] == 32
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in media_near_dup(hashes).collect()
-    }
-    trio = {"png-master", "jpeg-copy", "bright-var"}
-    exp_pairs = {tuple(sorted(p)) for p in
-                 [("png-master", "jpeg-copy"), ("png-master", "bright-var"),
-                  ("jpeg-copy", "bright-var")]}
-    # brute-force check: banding found exactly the <=7-hamming pairs
-    import itertools
-
-    vals = {m: got[m]["dhash"] for m in got if got[m]["dhash"] is not None}
-    brute = {
-        tuple(sorted((a, b))): bin((va ^ vb) & ((1 << 64) - 1)).count("1")
-        for (a, va), (b, vb) in itertools.combinations(vals.items(), 2)
-        if bin((va ^ vb) & ((1 << 64) - 1)).count("1") <= 7
-    }
-    assert set(pairs) == set(brute), (pairs, brute)
-    assert exp_pairs <= set(pairs), pairs
-    for (a, b), d in pairs.items():
-        assert {a, b} <= trio, "unrelated image paired"
-        assert d == brute[(a, b)]
-
-
-def test_scene_cuts_rawv_and_apng(spark):
-    """Scene-cut detection: planted scene boundaries (big frame jumps)
-    are detected exactly — through RAWV and through an APNG animation —
-    with within-scene jitter staying below threshold; scene ids are the
-    running cut count; a corrupt payload yields one error row."""
-    import numpy as np
-
-    from htep_spark.functions import codecs
-    from htep_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        scene_cuts,
-    )
-
-    rng = np.random.default_rng(51)
-
-    def scene_frames(base_val, n):
-        out = []
-        for _ in range(n):
-            f = np.full((12, 16, 3), base_val, np.uint8)
-            jitter = rng.integers(0, 3, (12, 16, 3), np.uint8)
-            out.append(np.clip(f.astype(np.int16) + jitter, 0, 255).astype(np.uint8))
-        return out
-
-    frames = scene_frames(30, 4) + scene_frames(140, 3) + scene_frames(220, 5)
-    exp_cut_idx = {4, 7}
-    rows = [
-        ("v-rawv", "video", bytearray(codecs.encode_rawv(frames)), "video/raw"),
-        ("v-apng", "video", bytearray(codecs.encode_apng(frames)), "image/png"),
-        ("v-bad", "video", bytearray(b"RAWVjunk"), "video/raw"),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = scene_cuts(media).collect()
-    by_id: dict = {}
-    for r in got:
-        by_id.setdefault(r["media_id"], []).append(r)
-    for mid in ("v-rawv", "v-apng"):
-        rs = sorted(by_id[mid], key=lambda r: r["frame_idx"])
-        assert len(rs) == len(frames)
-        cuts = {r["frame_idx"] for r in rs if r["is_cut"] == 1}
-        assert cuts == exp_cut_idx, (mid, cuts)
-        # scene id = running cut count; 3 scenes of sizes 4/3/5
-        scenes: dict = {}
-        for r in rs:
-            scenes.setdefault(r["scene_id"], []).append(r["frame_idx"])
-        assert {k: len(v) for k, v in scenes.items()} == {0: 4, 1: 3, 2: 5}
-        for r in rs:
-            if r["frame_idx"] not in exp_cut_idx and r["frame_idx"] > 0:
-                assert r["diff"] <= 12.0, r
-    bad = by_id["v-bad"]
-    assert len(bad) == 1 and bad[0]["error"] is not None
 
 
 def test_stream_active_users(spark, tmp_path):

@@ -241,22 +241,6 @@ def test_conversation_rollup(spark, transcripts):
     }
 
 
-def test_sql_function_registration(spark, transcripts):
-    from htep_spark.functions.register import register_all
-
-    register_all(spark)
-    transcripts.createOrReplaceTempView("transcripts_v")
-    row = spark.sql(
-        "SELECT htep_fusion('he 0K l1') AS f, "
-        "htep_extract(text).document_type AS dt, "
-        "htep_simhash(text) AS sh "
-        "FROM transcripts_v WHERE turn_idx = 0 LIMIT 1"
-    ).collect()[0]
-    assert row["f"] == "he OK ll"
-    assert row["dt"] is not None
-    assert isinstance(row["sh"], int)
-
-
 def test_checkpoint_crash_between_data_and_manifest(spark, transcripts_pdf, tmp_path):
     """Crash simulation: a unit whose output was written but whose manifest
     row never committed must be re-processed idempotently on resume."""
