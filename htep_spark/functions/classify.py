@@ -8,7 +8,7 @@ precompiled at module import (the reference compiles at init,
 from __future__ import annotations
 
 import re
-from typing import Dict, List, Tuple
+from typing import Dict, List, Optional, Tuple
 
 from ..dictionaries import (
     DOCUMENT_PATTERNS,
@@ -16,6 +16,7 @@ from ..dictionaries import (
     HIGH_KEYWORDS,
     URGENT_KEYWORDS,
 )
+from . import batch_regex
 
 __all__ = [
     "classify_document",
@@ -69,9 +70,22 @@ _COMPILED_ENTITY = {
     key: [re.compile(p, re.IGNORECASE if key != "measurements" else 0) for p in pats]
     for key, pats in ENTITY_PATTERNS.items()
 }
+# RE2 gates of both pattern families, keyed (doc type or entity family,
+# position), run once per batch by ``batch_regex.gates``; built and checked
+# at import. Every pattern here has an RE2 form.
+DOCUMENT_RE2 = batch_regex.table(
+    {(t, i): p for t, pats in _COMPILED_PATTERNS.items() for i, p in enumerate(pats)},
+    extract=False,
+    python_only={},
+)
+ENTITY_RE2 = batch_regex.table(
+    {(k, i): p for k, pats in _COMPILED_ENTITY.items() for i, p in enumerate(pats)},
+    extract=False,
+    python_only={},
+)
 
 
-def classify_document(text: str) -> Dict:
+def classify_document(text: str, fires: Optional[Dict[Tuple[str, int], bool]] = None) -> Dict:
     """Rule-based document-type classification (C1).
 
     ``MedicalDocumentClassifier.classify_document``
@@ -81,6 +95,10 @@ def classify_document(text: str) -> Dict:
     confidence = best/total capped at 0.95; top-2 nonzero runner-ups as
     secondary types; keywords dedup via ``set`` (order not guaranteed —
     consumers must treat as a set; we sort for determinism).
+
+    ``fires`` is this turn's answer from ``batch_regex.gates`` over
+    ``DOCUMENT_RE2``: the patterns it marks ``False`` cannot match. ``None``:
+    the literal gates decide.
     """
     if not text or not text.strip():
         return {
@@ -99,9 +117,14 @@ def classify_document(text: str) -> Dict:
             if keyword in text_lower:
                 score += 1
                 all_keywords.append(keyword)
-        for pattern, gates in zip(_COMPILED_PATTERNS[doc_type], _PATTERN_GATES[doc_type]):
-            if not any(g in text_lower for g in gates):
-                continue  # mandatory literal absent — findall cannot match
+        for i, (pattern, gates) in enumerate(
+            zip(_COMPILED_PATTERNS[doc_type], _PATTERN_GATES[doc_type])
+        ):
+            if fires is None:
+                if not any(g in text_lower for g in gates):
+                    continue  # mandatory literal absent — findall cannot match
+            elif not fires[doc_type, i]:
+                continue
             matches = pattern.findall(text)
             score += len(matches) * 2
             all_keywords.extend(matches)
@@ -188,17 +211,24 @@ assert set(_ENTITY_GATES) == set(ENTITY_PATTERNS) and all(
 ), "entity gate table out of sync with ENTITY_PATTERNS"
 
 
-def extract_medical_entities(text: str) -> Dict[str, List[str]]:
+def extract_medical_entities(
+    text: str, fires: Optional[Dict[Tuple[str, int], bool]] = None
+) -> Dict[str, List[str]]:
     """C4 (``src/nlp/classifier.py:259-320``): four entity regex families,
     set-dedup (sorted here for determinism; measurement patterns are
-    case-sensitive in the reference — ``re.findall`` without flags at :314)."""
+    case-sensitive in the reference — ``re.findall`` without flags at :314).
+    ``fires``: the turn's RE2 gates over ``ENTITY_RE2``, as in
+    :func:`classify_document`."""
     low = text.lower()
     entities: Dict[str, List[str]] = {}
     for key, patterns in _COMPILED_ENTITY.items():
         found: List[str] = []
-        for pattern, gates in zip(patterns, _ENTITY_GATES[key]):
-            if not any(g in low for g in gates):
-                continue  # mandatory literal absent — findall cannot match
+        for i, (pattern, gates) in enumerate(zip(patterns, _ENTITY_GATES[key])):
+            if fires is None:
+                if not any(g in low for g in gates):
+                    continue  # mandatory literal absent — findall cannot match
+            elif not fires[key, i]:
+                continue
             found.extend(pattern.findall(text))
         entities[key] = sorted(set(found))
     return entities

@@ -23,7 +23,9 @@ DuckDB oracle forms (`driver_queries.q_sentences`) share it exactly.
 from __future__ import annotations
 
 import re
-from typing import Dict, List
+from typing import Dict, List, Optional
+
+from . import batch_regex
 
 __all__ = [
     "PII_PATTERNS",
@@ -78,12 +80,24 @@ PII_PATTERNS = [
 ]
 
 
-def deidentify(text: str) -> Dict:
+# RE2 gates of the detectors, keyed by position in PII_PATTERNS, run once
+# per batch by ``batch_regex.gates``; built and checked at import. The two
+# name detectors end in a lookahead, so they run in Python on every turn.
+PII_RE2 = batch_regex.table(
+    dict(enumerate(pattern for _, pattern in PII_PATTERNS)),
+    extract=False,
+    python_only={0: "lookahead", 1: "lookahead"},
+)
+
+
+def deidentify(text: str, fires: Optional[Dict[int, bool]] = None) -> Dict:
     """→ ``{masked_text, spans: [{start_char, end_char, kind}]}``.
 
     Spans reference the original text, are non-overlapping (first detector
     wins), and sorted by start offset. Masking replaces each span with
-    ``[KIND]``.
+    ``[KIND]``. ``fires`` is this turn's answer from ``batch_regex.gates``
+    over ``PII_RE2``: the detectors it marks ``False`` cannot match; the
+    others (and all of them, when ``None``) pass the literal gates below.
     """
     if not text:
         return {"masked_text": "", "spans": []}
@@ -99,6 +113,8 @@ def deidentify(text: str) -> Dict:
         has_digit,  # PHONE
         has_digit and "age" in lower,
     ]
+    if fires is not None:
+        gates = [fires.get(i, gate) for i, gate in enumerate(gates)]
     taken: List[tuple] = []
 
     def overlaps(s: int, e: int) -> bool:

@@ -7,8 +7,12 @@ parse (:149-174), dictionary entity scan (:226-251) and their merge
 and excluded from the canonical deterministic output (SURVEY.md §2.5 E3/E4).
 
 The regexes use lookaheads / DOTALL / IGNORECASE — Python ``re`` is the
-normative engine; they deliberately stay inside pandas UDFs on the Spark
-side rather than being translated to Java regex.
+normative engine; on the Spark side they run inside the fields stage's
+Arrow UDF rather than being translated to Java regex. The batch kernel
+(``reference.STAGES``) answers the ten lookaround-free search patterns in
+one RE2 pass per Arrow batch (``FIELD_RE2``, ``batch_regex.extracts``) on
+the turns where RE2 and ``re`` provably agree; every other turn, and the
+two lookahead-bounded name patterns, run here in Python.
 """
 
 from __future__ import annotations
@@ -17,6 +21,7 @@ import re
 from typing import Dict, List, Optional
 
 from ..dictionaries import DISEASE_SET, DRUG_SET
+from . import batch_regex
 
 __all__ = ["extract_regex_fields", "parse_medicine_line", "scan_dictionaries", "extract_record"]
 
@@ -99,12 +104,38 @@ def parse_medicine_line(line: str) -> Optional[Dict]:
 
 _FIELD_DIGIT_RE = re.compile(r"\d")
 
-# Cheap literal gates: each detector regex below can only match when at
-# least one listed lowercase literal occurs in the lowercased text (every
-# alternation branch of its mandatory prefix contains one). A failed `in`
-# scan skips the regex with provably identical results — differentially
-# tested (`test_field_gates_are_sound`) and byte-gated by the golden
-# corpus + the vitals_fields / extract_fields_scalar driver oracles.
+# The search-then-group(1) field patterns, by the key the kernel reads.
+_SEARCH_FIELDS = {
+    "date": _DATE_RE,
+    "name": _NAME_RE,
+    "doctor": _DOCTOR_RE,
+    "hospital": _HOSPITAL_RE,
+    "age": _AGE_RE,
+    "gender": _GENDER_RE,
+    "bp": _BP_RE,
+    "temp": _TEMP_RE,
+    "pulse": _PULSE_RE,
+    "diag": _DIAG_RE,
+    "rx": _RX_RE,
+    "inst": _INST_RE,
+}
+# Their RE2 forms, run once per batch by ``batch_regex.extracts``; built and
+# checked at import. The two name patterns end in a lookahead, so they run
+# in Python on every turn.
+FIELD_RE2 = batch_regex.table(
+    _SEARCH_FIELDS,
+    extract=True,
+    python_only={"name": "lookahead", "doctor": "lookahead"},
+)
+
+# Cheap gates of the Python path: each detector regex can only match when
+# the text has a digit (``_DIGIT_GATED``) and at least one listed lowercase
+# literal occurs in the lowercased text (every alternation branch of its
+# mandatory prefix contains one). A failed gate skips the regex with
+# provably identical results — differentially tested
+# (`test_field_gates_are_sound`) and byte-gated by the golden corpus + the
+# vitals_fields / extract_fields_scalar driver oracles.
+_DIGIT_GATED = frozenset({"date", "age", "bp", "temp", "pulse"})
 _FIELD_GATES = {
     "name": ("patient", "name"),
     "doctor": ("dr", "doctor", "physician"),  # 'doctor' !⊃ 'dr'
@@ -118,10 +149,17 @@ _FIELD_GATES = {
     "rx": ("rx", "medication", "medicine", "prescription"),
     "inst": ("instruction", "advice", "plan", "follow up"),
 }
+_DIAG_SPLIT_RE = re.compile(r",| and |\n")
 
 
-def extract_regex_fields(text: str) -> Dict:
-    """E1 (``src/nlp/medical_extractor.py:62-147``)."""
+def extract_regex_fields(
+    text: str, found: Optional[Dict[str, Optional[str]]] = None
+) -> Dict:
+    """E1 (``src/nlp/medical_extractor.py:62-147``).
+
+    ``found`` is this turn's answer from ``batch_regex.extracts`` over
+    ``FIELD_RE2`` — each RE2 pattern's group(1), ``None`` where it does not
+    match — or ``None``, and then every pattern runs here in Python."""
     data: Dict = {
         "patient_name": None,
         "age": None,
@@ -135,59 +173,66 @@ def extract_regex_fields(text: str) -> Dict:
         "instructions": [],
     }
     low = text.lower()
-
-    def gated(key) -> bool:
-        return any(g in low for g in _FIELD_GATES[key])
-
     has_digit = _FIELD_DIGIT_RE.search(text) is not None
-    m = _DATE_RE.search(text) if has_digit else None
-    if m:
-        data["date"] = m.group(1)
-    m = _NAME_RE.search(text) if gated("name") else None
-    if m:
-        data["patient_name"] = m.group(1).strip()
-    m = _DOCTOR_RE.search(text) if gated("doctor") else None
-    if m:
-        head = "" if m.group(1).strip().lower().startswith("dr") else "Dr. "
-        data["doctor_name"] = head + m.group(1).strip()
-    m = _HOSPITAL_RE.search(text) if gated("hospital") else None
-    if m:
-        data["hospital"] = m.group(1).strip()
-    m = _AGE_RE.search(text) if (has_digit and gated("age")) else None
-    if m:
-        data["age"] = m.group(1)
-    m = _GENDER_RE.search(text) if gated("gender") else None
-    if m:
-        val = m.group(1).upper()
+
+    def group1(key: str) -> Optional[str]:
+        """group(1) of the key's first match; ``None`` if it does not match."""
+        if found is not None and key in found:
+            return found[key]
+        if key in _DIGIT_GATED and not has_digit:
+            return None
+        gates = _FIELD_GATES.get(key, ())
+        if gates and not any(g in low for g in gates):
+            return None
+        m = _SEARCH_FIELDS[key].search(text)
+        return m.group(1) if m else None
+
+    g = group1("date")
+    if g is not None:
+        data["date"] = g
+    g = group1("name")
+    if g is not None:
+        data["patient_name"] = g.strip()
+    g = group1("doctor")
+    if g is not None:
+        head = "" if g.strip().lower().startswith("dr") else "Dr. "
+        data["doctor_name"] = head + g.strip()
+    g = group1("hospital")
+    if g is not None:
+        data["hospital"] = g.strip()
+    g = group1("age")
+    if g is not None:
+        data["age"] = g
+    g = group1("gender")
+    if g is not None:
+        val = g.upper()
         data["gender"] = (
             "Male" if val in ("MALE", "M") else ("Female" if val in ("FEMALE", "F") else val)
         )
-    m = _BP_RE.search(text) if (has_digit and gated("bp")) else None
-    if m:
-        data["vitals"]["bp"] = m.group(1).replace(" ", "")
-    m = _TEMP_RE.search(text) if (has_digit and gated("temp")) else None
-    if m:
-        data["vitals"]["temp"] = m.group(1).replace(" ", "")
-    m = _PULSE_RE.search(text) if (has_digit and gated("pulse")) else None
-    if m:
-        data["vitals"]["pulse"] = m.group(1)
-    m = _DIAG_RE.search(text) if gated("diag") else None
-    if m:
-        for item in re.split(r",| and |\n", m.group(1)):
+    g = group1("bp")
+    if g is not None:
+        data["vitals"]["bp"] = g.replace(" ", "")
+    g = group1("temp")
+    if g is not None:
+        data["vitals"]["temp"] = g.replace(" ", "")
+    g = group1("pulse")
+    if g is not None:
+        data["vitals"]["pulse"] = g
+    g = group1("diag")
+    if g is not None:
+        for item in _DIAG_SPLIT_RE.split(g):
             clean = _BULLET_RE.sub("", item).strip()
             if clean and clean.lower() not in ("diagnosis:", "assessment:", "impression:"):
                 data["diagnosis"].append(clean)
-    m = _RX_RE.search(text) if gated("rx") else None
-    if m:
-        for line in (l.strip() for l in m.group(1).split("\n") if l.strip()):
+    g = group1("rx")
+    if g is not None:
+        for line in (l.strip() for l in g.split("\n") if l.strip()):
             med = parse_medicine_line(line)
             if med:
                 data["medicines"].append(med)
-    m = _INST_RE.search(text) if gated("inst") else None
-    if m:
-        data["instructions"].extend(
-            l.strip() for l in m.group(1).split("\n") if l.strip()
-        )
+    g = group1("inst")
+    if g is not None:
+        data["instructions"].extend(l.strip() for l in g.split("\n") if l.strip())
     return data
 
 
@@ -213,6 +258,10 @@ def _split_terms(terms):
 
 _DRUG_SIMPLE, _DRUG_MULTI, _DRUG_RX = _split_terms(DRUG_SET)
 _DISEASE_SIMPLE, _DISEASE_MULTI, _DISEASE_RX = _split_terms(DISEASE_SET)
+# the ±30-char context window after each dictionary drug (extract_record)
+_DRUG_WINDOW = {
+    t: re.compile(r"\b" + re.escape(t) + r"\b(.{0,30})", re.IGNORECASE) for t in DRUG_SET
+}
 
 
 def _scan_terms(text_lower, word_runs, simple_set, multi, rx) -> List[str]:
@@ -243,9 +292,10 @@ def scan_dictionaries(text: str) -> Dict[str, List[str]]:
     }
 
 
-def extract_record(text: str) -> Dict:
+def extract_record(text: str, found: Optional[Dict[str, Optional[str]]] = None) -> Dict:
     """Full deterministic extract + merge (``medical_extractor.py:253-336``
-    minus the spaCy layers).
+    minus the spaCy layers). ``found``: the turn's RE2 answers, as in
+    :func:`extract_regex_fields`.
 
     Empty/blank input returns ``{}`` (:257-258). Dictionary diseases merge
     into ``diagnosis`` Title-cased unless a bidirectional-substring
@@ -256,7 +306,7 @@ def extract_record(text: str) -> Dict:
     """
     if not text or not text.strip():
         return {}
-    final = extract_regex_fields(text)
+    final = extract_regex_fields(text, found)
     dict_data = scan_dictionaries(text)
 
     diag_set = set(d.lower() for d in final["diagnosis"])
@@ -274,7 +324,7 @@ def extract_record(text: str) -> Dict:
         ml = med_name.lower()
         if any(ml in e for e in existing):
             continue
-        window_m = re.search(r"\b" + re.escape(med_name) + r"\b(.{0,30})", text, re.IGNORECASE)
+        window_m = _DRUG_WINDOW[med_name].search(text)
         dosage = None
         freq = None
         if window_m:

@@ -1,19 +1,25 @@
 """Arrow-vectorized extraction operators: the one extraction UDF surface.
 
 Design (SURVEY.md §2.7 "UDF/UDAF/UDTF surface"): every per-turn operator is
-a pandas UDF — the Arrow batch is the unit of vectorization, generalizing
-the reference's own batching fix (``BlockICREngine._batch_predict_chars``,
+a scalar Arrow UDF (``F.arrow_udf``) — the Arrow batch is the unit of
+vectorization, generalizing the reference's own batching fix
+(``BlockICREngine._batch_predict_chars``,
 ``src/recognition/icr_block_engine.py:162-195``, which exists precisely
 because per-item dispatch was too slow). No row-at-a-time Python UDF
-anywhere (BASELINE.json ``input_hint``: "no per-row Python").
+anywhere (BASELINE.json ``input_hint``: "no per-row Python"). An Arrow UDF
+takes a ``pa.Array`` and returns one built straight from the kernel's
+output dicts (``pa.array(outputs, type=to_arrow_type(return_type))``), so
+no pandas frame stands between the kernel and the Arrow batch Spark ships.
 
 One trunk: each stage of ``reference.STAGES`` (core decode + dictionary
 correction, segmentation, field extraction, classification, entity scan,
-de-identification) becomes one pandas UDF through ``_stage_udf``, which
+de-identification) becomes one Arrow UDF through ``_stage_udf``, which
 runs ``reference.run_batch`` over the whole Arrow batch — the same batch
 kernel and the same per-stage fallback ``reference.extract_turn`` uses —
 and takes its return type from ``schema.EXTRACTION_RESULT_TYPE``. The core
-kernel scores the T7 memo misses of every turn in the batch together.
+kernel scores the T7 memo misses of every turn in the batch together; the
+fields, classify, entities and deid kernels run each lookaround-free
+regex once over the batch in RE2 (``functions/batch_regex.py``).
 This module calls no kernel and defines no fallback value of its own.
 
 ``extract_transcripts`` recomposes the stage outputs into the
@@ -40,8 +46,10 @@ shuffle in the hot path.
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
 
 from ..reference import STAGES, Stage, run_batch
@@ -62,21 +70,26 @@ _RESULT_FIELDS = {f.name: f for f in EXTRACTION_RESULT_TYPE.fields + METRICS_TYP
 
 
 def _stage_udf(stage: Stage, name: str):
-    """The scalar pandas UDF of one stage. Scalar (non-iterator) form:
-    independent scalar pandas UDFs combine into ONE ArrowEvalPython node
-    (one Python worker, one row queue per task) — iterator-form UDFs each
-    get their own node, and six chained nodes cost ~45% extra wall on the
-    full-struct path (BENCH/r07 notes)."""
-
-    def udf(values: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame(run_batch(stage, values.tolist()))
-
-    udf.__name__ = udf.__qualname__ = name  # the name the plan shows
+    """The scalar Arrow UDF of one stage: an Arrow array of stage inputs in,
+    an Arrow array of stage outputs out, built straight from the kernel's
+    dicts with no pandas frame between. Scalar (non-iterator) form:
+    independent scalar UDFs combine into ONE ArrowEvalPython node (one
+    Python worker, one row queue per task) — iterator-form UDFs each get
+    their own node, and six chained nodes cost ~45% extra wall on the
+    full-struct path (BENCH/r07 notes). Called in-process with a pandas
+    Series, it returns the same rows as a frame of Python values."""
     if isinstance(stage.fields, str):
         return_type = _RESULT_FIELDS[stage.fields].dataType
     else:
         return_type = StructType([_RESULT_FIELDS[f] for f in stage.fields])
-    return F.pandas_udf(udf, return_type)
+    arrow_type = to_arrow_type(return_type)
+
+    def udf(values: pa.Array) -> pa.Array:
+        out = pa.array(run_batch(stage, values.tolist()), type=arrow_type)
+        return out if isinstance(values, pa.Array) else pd.DataFrame(out.to_pylist())
+
+    udf.__name__ = udf.__qualname__ = name  # the name the plan shows
+    return F.arrow_udf(udf, return_type)
 
 
 _STAGE_UDFS = [

@@ -29,8 +29,11 @@ anyway. Every stage kernel maps a batch of values (an Arrow batch in
 Spark) to one output per value; the core stage scores the T7 memo misses
 of the whole batch together, the reference's own batching fix
 (``BlockICREngine._batch_predict_chars``,
-``src/recognition/icr_block_engine.py:162-195``). A turn's result never
-depends on the batch it lands in; ``extract_turn`` is the batch of one.
+``src/recognition/icr_block_engine.py:162-195``), and the fields,
+classify, entities and deid stages answer each lookaround-free regex in
+one RE2 pass over the batch (``functions/batch_regex.py``) before their
+per-value kernels run. A turn's result never depends on the batch it
+lands in; ``extract_turn`` is the batch of one.
 
 One failure model on every path (``app/api.py:215-293`` stage
 isolation): a raising stage yields its own default and the other stages
@@ -51,13 +54,16 @@ from .dictionaries import (
     DRUGS_SINGLE,
     DRUG_SET,
 )
-from .functions.deid import deidentify
+from .functions import batch_regex
+from .functions.deid import PII_RE2, deidentify
 from .functions.classify import (
+    DOCUMENT_RE2,
+    ENTITY_RE2,
     classify_document,
     document_urgency,
     extract_medical_entities,
 )
-from .functions.extract_fields import extract_record
+from .functions.extract_fields import FIELD_RE2, extract_record
 from .functions.html_extract import (
     extract_main_content,
     looks_like_html,
@@ -182,28 +188,35 @@ def _core_default(text: str, exc: Exception) -> Dict:
     }
 
 
-def _segments(content: str) -> Dict:
+def _segments(contents: List[str]) -> List[Dict]:
     # segments on multi-line content (documented deviation, module docstring)
-    segments = segment_document(content)
-    return {"segments": segments, "n_segments": len(segments)}
+    out = []
+    for content in contents:
+        segments = segment_document(content)
+        out.append({"segments": segments, "n_segments": len(segments)})
+    return out
 
 
 def _segments_default(_content: str, _exc: Exception) -> Dict:
     return {"segments": [], "n_segments": 0}
 
 
-def _fields(final_text: str) -> Dict:
+def _fields(final_texts: List[str]) -> List[Dict]:
     # eval-harness DAG: field extraction on the newline-intact final text
-    extracted = extract_record(final_text) if final_text else {}
-    if not extracted:
-        return _fields_default(final_text, None)
-    vit = extracted.get("vitals") or {}
-    extracted["vitals"] = {
-        "bp": vit.get("bp"),
-        "temp": vit.get("temp"),
-        "pulse": vit.get("pulse"),
-    }
-    return extracted
+    out = []
+    for final_text, found in zip(final_texts, batch_regex.extracts(final_texts, FIELD_RE2)):
+        extracted = extract_record(final_text, found) if final_text else {}
+        if not extracted:
+            out.append(_fields_default(final_text, None))
+            continue
+        vit = extracted.get("vitals") or {}
+        extracted["vitals"] = {
+            "bp": vit.get("bp"),
+            "temp": vit.get("temp"),
+            "pulse": vit.get("pulse"),
+        }
+        out.append(extracted)
+    return out
 
 
 def _fields_default(_final_text: str, _exc: Optional[Exception]) -> Dict:
@@ -221,18 +234,23 @@ def _fields_default(_final_text: str, _exc: Optional[Exception]) -> Dict:
     }
 
 
-def _classify(corrected: str) -> Dict:
-    # reference chain order: classify, then urgency
-    cls = classify_document(corrected)
-    urgency, urgency_conf = document_urgency(corrected)
-    return {
-        "document_type": cls["document_type"],
-        "doc_confidence": float(cls["confidence"]),
-        "keywords_found": cls["keywords_found"],
-        "secondary_types": cls["secondary_types"],
-        "urgency": urgency,
-        "urgency_confidence": float(urgency_conf),
-    }
+def _classify(correcteds: List[str]) -> List[Dict]:
+    out = []
+    for corrected, fires in zip(correcteds, batch_regex.gates(correcteds, DOCUMENT_RE2)):
+        # reference chain order: classify, then urgency
+        cls = classify_document(corrected, fires)
+        urgency, urgency_conf = document_urgency(corrected)
+        out.append(
+            {
+                "document_type": cls["document_type"],
+                "doc_confidence": float(cls["confidence"]),
+                "keywords_found": cls["keywords_found"],
+                "secondary_types": cls["secondary_types"],
+                "urgency": urgency,
+                "urgency_confidence": float(urgency_conf),
+            }
+        )
+    return out
 
 
 def _classify_default(_corrected: str, _exc: Exception) -> Dict:
@@ -246,32 +264,28 @@ def _classify_default(_corrected: str, _exc: Exception) -> Dict:
     }
 
 
-def _entities(corrected: str) -> Dict:
-    return extract_medical_entities(corrected)
+def _entities(correcteds: List[str]) -> List[Dict]:
+    return [
+        extract_medical_entities(corrected, fires)
+        for corrected, fires in zip(correcteds, batch_regex.gates(correcteds, ENTITY_RE2))
+    ]
 
 
 def _entities_default(_corrected: str, _exc: Exception) -> Dict:
     return {"medications": [], "conditions": [], "procedures": [], "measurements": []}
 
 
-def _deid(final_text: str) -> Dict:
+def _deid(final_texts: List[str]) -> List[Dict]:
     # north_star de-identification: masked text + PII spans against the
     # newline-intact final text (same reference frame as the extractor)
-    return deidentify(final_text)
+    return [
+        deidentify(final_text, fires)
+        for final_text, fires in zip(final_texts, batch_regex.gates(final_texts, PII_RE2))
+    ]
 
 
 def _deid_default(final_text: str, _exc: Exception) -> Dict:
     return {"masked_text": final_text, "spans": []}
-
-
-def _each(kernel: Callable[[str], Dict]) -> Callable[[List[str]], List[Dict]]:
-    """A per-value stage kernel as a batch kernel."""
-
-    def run(values: List[str]) -> List[Dict]:
-        return [kernel(value) for value in values]
-
-    run.__name__ = kernel.__name__
-    return run
 
 
 class Stage(NamedTuple):
@@ -319,10 +333,10 @@ STAGES = (
         "segments",
         "content",
         ("segments", "n_segments"),
-        _each(_segments),
+        _segments,
         _segments_default,
     ),
-    Stage("fields", "final_text", "extracted", _each(_fields), _fields_default),
+    Stage("fields", "final_text", "extracted", _fields, _fields_default),
     Stage(
         "classify",
         "corrected_text",
@@ -334,13 +348,11 @@ STAGES = (
             "urgency",
             "urgency_confidence",
         ),
-        _each(_classify),
+        _classify,
         _classify_default,
     ),
-    Stage(
-        "entities", "corrected_text", "entities", _each(_entities), _entities_default
-    ),
-    Stage("deid", "final_text", "deid", _each(_deid), _deid_default),
+    Stage("entities", "corrected_text", "entities", _entities, _entities_default),
+    Stage("deid", "final_text", "deid", _deid, _deid_default),
 )
 
 METRIC_FIELDS = (

@@ -816,6 +816,37 @@ def test_classify_pattern_gates_are_sound():
             assert got["keywords_found"] == want[1] or not any(want[0].values())
 
 
+def test_re2_tables_are_checked():
+    """The RE2 forms come from the Python patterns themselves, and the
+    import-time table check refuses a pattern that lost its form without
+    being listed, a listed pattern that has one, and a wrong reason."""
+    import re
+
+    from htep_spark.functions import batch_regex
+    from htep_spark.functions.deid import PII_PATTERNS, PII_RE2
+    from htep_spark.functions.extract_fields import FIELD_RE2
+
+    assert batch_regex.form(re.compile(r"(a)(b|c)$", re.I | re.S), extract=True) == (
+        r"(?is)(?P<g>a)(?:b|c)(?:\n?\z)"
+    )
+    assert batch_regex.form(re.compile(r"[(]x[$]$", re.M), extract=False) == r"(?m)[(]x[$]$"
+    ahead, behind = re.compile(r"a(?=b)"), re.compile(r"(?<!a)b")
+    with pytest.raises(AssertionError):
+        batch_regex.table({"a": ahead}, extract=False, python_only={})
+    with pytest.raises(AssertionError):
+        batch_regex.table({"a": behind}, extract=False, python_only={"a": "lookahead"})
+    with pytest.raises(AssertionError):
+        batch_regex.table({"b": re.compile("ab")}, extract=False, python_only={"b": "lookahead"})
+    assert batch_regex.table(
+        {"a": ahead, "b": re.compile("(a)b")}, extract=False, python_only={"a": "lookahead"}
+    ) == {"b": "(?:a)b"}
+    # the name patterns are the only ones without a form
+    assert set(FIELD_RE2) == {
+        "date", "hospital", "age", "gender", "bp", "temp", "pulse", "diag", "rx", "inst"
+    }
+    assert set(PII_RE2) == set(range(len(PII_PATTERNS))) - {0, 1}
+
+
 def test_field_gates_are_sound():
     """E1/C4 literal gates: gated extraction must equal the ungated form on
     a corpus engineered to fire every detector and every near-miss."""

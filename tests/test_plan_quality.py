@@ -535,6 +535,24 @@ def test_stage_udf_pruning(spark):
     }, full
 
 
+def test_stage_udfs_are_arrow_udfs_in_two_nodes(spark):
+    """The six stage UDFs are scalar Arrow UDFs (Arrow array in, Arrow
+    array out, no pandas frame), and the full-struct extraction still
+    fuses them into exactly two ArrowEvalPython nodes: core, then the five
+    stages that read its output."""
+    from pyspark.util import PythonEvalType
+
+    from htep_spark.operators import extract as ops
+    from htep_spark.plans.pipeline import run_extraction
+    from htep_spark.sources.io import synthesize_transcripts
+
+    assert {u.evalType for u in ops._STAGE_UDFS} == {PythonEvalType.SQL_SCALAR_ARROW_UDF}
+    tr = synthesize_transcripts(spark, 200, partitions=2)
+    plan = run_extraction(tr)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 2, plan
+    assert "BatchEvalPython" not in plan, plan
+
+
 def test_conversation_rollup_plan_is_jvm_aggregation(spark):
     """The per-conversation rollup is one aggregation of built-in
     expressions: no grouped-map Python node, no Python node besides the

@@ -248,6 +248,59 @@ def test_extract_turn_total(raw):
     assert result["metrics"]["content_chars"] >= 0
 
 
+# Clinical field lines every downstream stage has work on: the field
+# extractor, the classifier and entity patterns, and the PII detectors.
+_FIELD_LINES = [
+    "Patient Name : Jane Doe",
+    "Patient Name: John Smith, Age: 42",
+    "Patient ID : CH-3021",
+    "Age: 42",
+    "Gender : Female",
+    "BP: 120/80, Temp: 98.6 F, Pulse: 72 bpm",
+    "Date : 05/03/2025",
+    "seen on 12th Jan 2024 and 2024-01-05",
+    "call 555-123-4567 or 555.123.4567",
+    "Consultant: Dr. Meera Rao",
+    "Hospital : City General",
+    "Diagnosis: Diabetes, Hypertension and asthma\n- Fever",
+    "Rx: Metformin 500mg twice daily\nAspirin 75 mg once daily",
+    "Plan: rest\nFollow up in 2 weeks",
+    "Discharge summary, lab results 5.5 mmol/l, BP 120/80 mmHg",
+    "take 2 tablet at bedtime; x-ray and CT scan report; amoxicillin 250 mg",
+]
+# What RE2 and Python ``re`` read differently: non-ASCII digits, letters
+# that case-fold onto ASCII ones (Kelvin K, long s, dotted I), ``\s``
+# characters RE2 lacks (``\x0b``, ``\x1c``) and a non-ASCII space.
+_RE2_TRAPS = ["٤٢", "４２", "\u212a", "ſ", "İ", "\x0b", "\x1c", "\xa0"]
+
+
+def _clinical_texts():
+    r"""Clinical lines, some with a trap character spliced into a field
+    (``Age:\x0b42``, ``BP: ٤٢/80``, ``E\u212aG``), with or without a
+    trailing newline before ``$``; plus empty and ``None`` values."""
+
+    def splice(parts):
+        line, trap, at = parts
+        return line[:at] + trap + line[at:]
+
+    spliced = st.tuples(
+        st.sampled_from(_FIELD_LINES), st.sampled_from(_RE2_TRAPS), st.integers(0, 12)
+    ).map(splice)
+    fields = st.one_of(
+        st.tuples(
+            st.sampled_from(["Age", "BP", "Pulse", "Patient ID", "Temp"]),
+            st.sampled_from([":", " : ", ":\x0b", "\x1c:", ":\xa0"]),
+            st.sampled_from(["42", "٤٢", "４２", "120/80", "CH-3021", "98.6 F"]),
+        ).map("".join),
+        st.sampled_from(["E\u212aG and ſurgery", "İnsulin 10 units", "diabetes\xa0ecg"]),
+    )
+    line = st.one_of(st.sampled_from(_FIELD_LINES), spliced, fields)
+    text = st.tuples(
+        st.lists(line, min_size=1, max_size=6).map("\n".join), st.sampled_from(["", "\n"])
+    ).map("".join)
+    return st.one_of(text, text, text, st.sampled_from(["", "\n", None]))
+
+
 def _batch_strategies():
     from htep_spark.dictionaries import (
         DISEASES_MULTI,
@@ -268,9 +321,32 @@ def _batch_strategies():
         terms.map(lambda t: "(" + t.capitalize() + ")."),
         st.sampled_from(["é", "naïve", "中文", "İstanbul", "Ｍｅｔ", "120/80", "BP:", "mg"]),
         st.text(alphabet="abdeilos013é ", min_size=1, max_size=9),
+        st.sampled_from(_FIELD_LINES),
     )
     text = st.lists(token, min_size=0, max_size=14).map(" ".join)
-    return st.one_of(text, text, st.sampled_from(["", "   ", "\n\t", None]))
+    return st.one_of(text, text, _clinical_texts(), st.sampled_from(["", "   ", "\n\t", None]))
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(_clinical_texts(), min_size=1, max_size=16))
+def test_re2_batch_kernels_equal_python_kernels(texts):
+    """The fields, classify, entities and deid batch kernels, with RE2
+    answering every pattern it can on every turn it may, equal the
+    per-value Python kernels turn by turn — on batches that mix plain
+    ASCII clinical lines with the turns RE2 would misread."""
+    from unittest import mock
+
+    from htep_spark import reference
+    from htep_spark.functions import batch_regex
+
+    for stage in reference.STAGES[2:]:
+        assert stage.name in ("fields", "classify", "entities", "deid")
+        with mock.patch.object(batch_regex, "_MIN_BATCH", 1):
+            batched = reference.run_batch(stage, texts)
+        with mock.patch.object(batch_regex, "_MIN_BATCH", 2):  # a batch of one: Python
+            single = [reference.run_stage(stage, t) for t in texts]
+        for text, got, want in zip(texts, batched, single):
+            assert got == want, (stage.name, text)
 
 
 @settings(max_examples=80, deadline=None)
@@ -279,12 +355,14 @@ def test_turn_result_is_batch_independent(texts, rnd):
     """A turn's result never depends on the batch it lands in: split the
     texts into random batches, and each turn's core output equals its
     batch-of-one result, and each full row equals ``extract_turn``. Cold
-    memos on both sides, so the batched miss path really runs."""
+    memos on both sides, so the batched miss path really runs. Batches of
+    two or more RE2-safe turns answer the regexes in RE2 and a batch of
+    one in Python, so the random splits run both."""
     from contextlib import ExitStack
     from unittest import mock
 
     from htep_spark import reference
-    from htep_spark.functions import textops
+    from htep_spark.functions import batch_regex, textops
 
     batches, i = [], 0
     while i < len(texts):
@@ -301,7 +379,7 @@ def test_turn_result_is_batch_independent(texts, rnd):
         return stack
 
     core = reference.STAGES[0]
-    with cold_memos():
+    with cold_memos(), mock.patch.object(batch_regex, "_MIN_BATCH", 2):
         batched = [out for batch in batches for out in reference.run_batch(core, batch)]
         rows = [row for batch in batches for row in reference.extract_turns(batch)]
     with cold_memos():

@@ -276,6 +276,28 @@ def test_checkpoint_crash_between_data_and_manifest(spark, transcripts_pdf, tmp_
     )
 
 
+def test_null_turn_inside_arrow_batch(spark, transcripts_pdf):
+    """A null text inside one Arrow batch takes the empty turn's row, and
+    its neighbours in the batch — enough ASCII turns for the RE2 pass to
+    run — equal ``extract_turn``."""
+    pdf = transcripts_pdf.head(100).copy()
+    pdf.loc[[3, 67], "text"] = None
+    df = spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA).coalesce(1)
+    rows = run_extraction(df).orderBy("conv_id", "turn_idx").collect()
+    expected = pdf.sort_values(["conv_id", "turn_idx"])["text"].tolist()
+    assert len(rows) == len(expected) == 100
+    assert sum(t is None for t in expected) == 2
+    for row, text in zip(rows, expected):
+        assert _normalize(row["result"]) == _normalize(extract_turn(text))
+    assert _normalize(extract_turn(None)) == _normalize(extract_turn(""))
+    # the batch the fields stage sees is one the RE2 pass answers
+    from htep_spark.functions import batch_regex
+    from htep_spark.functions.extract_fields import FIELD_RE2
+
+    finals = [row["result"]["final_text"] for row in rows]
+    assert all(a is not None for a in batch_regex.extracts(finals, FIELD_RE2))
+
+
 # stage → the kernel its ``run`` calls through the ``reference`` module
 _STAGE_KERNELS = {
     "core": "postprocess_batch",
