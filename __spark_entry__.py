@@ -119,42 +119,8 @@ DRIVER_CAP_OVERFLOW = (
     "template_lines",  # per-domain boilerplate line removal
     "nfc_normalize",  # Unicode NFC canonicalization before dedup
     "lm_kneser_ney",  # Kneser-Ney LM perplexity filter
-    # Generic analytics with no extraction, conversation or curation
+    # Graph analytics with no extraction, conversation or curation
     # consumer, held here until they are cut from the inventory:
-    "tpch_pricing",  # TPC-H Q1-shape pricing summary
-    "tpch_regional_revenue",  # TPC-H Q5-shape regional revenue
-    "tpch_shipping",  # TPC-H Q3-shape shipping priority
-    "tpch_big_orders",  # TPC-H Q18-shape large-quantity orders
-    "ref_integrity",  # foreign-key orphan audit over the TPC-H star
-    "doc_cube",  # CUBE rollup with grouping ids
-    "pivot_table",  # per-source counts pivoted across languages
-    "window_funcs",  # ranking and frame window functions
-    "data_profile",  # per-column profile
-    "skyline",  # Pareto frontier
-    "event_transitions",  # per-user event Markov transitions
-    "event_funnel",  # per-user ordered conversion funnel
-    "cohort_retention",  # cohort retention triangle
-    "rfm_segments",  # recency/frequency/monetary segments
-    "attribution",  # multi-touch credit attribution
-    "active_users",  # daily and weekly active users
-    "json_extract",  # JSON path extraction over events.props
-    "ohlc_bars",  # hourly OHLC bars with VWAP
-    "interarrival_stats",  # per-user inter-arrival statistics
-    "kaplan_meier",  # survival curve
-    "benford_test",  # first-digit law test
-    "diff_in_diff",  # difference-in-differences estimate
-    "ips_eval",  # inverse-propensity off-policy evaluation
-    "holt_forecast",  # Holt linear-trend forecast
-    "seasonal_mase",  # seasonal-naive MASE
-    "cusum_changepoint",  # CUSUM change-point alarms
-    "rolling_anomaly",  # rolling z-score anomalies
-    "seasonal_decompose",  # additive seasonal decomposition
-    "mann_kendall",  # Mann-Kendall trend test
-    "autocorrelation",  # ACF by lag
-    "runs_test",  # Wald-Wolfowitz runs test
-    "haar_energy",  # Haar wavelet energy
-    "theil_sen",  # Theil-Sen slope
-    "poisson_dispersion",  # Poisson dispersion test
     "pagerank",  # domain link-graph PageRank
     "hits",  # HITS hubs and authorities
     "lpa_communities",  # label-propagation communities

@@ -40,6 +40,7 @@ from .dictionaries import (
     SECTION_KEYWORDS,
     URGENT_KEYWORDS,
 )
+from .operators.dedup import _TOKEN_PATTERN, token_barrier
 
 # --------------------------------------------------------------------------
 # Shared constants (single source for both engines)
@@ -57,8 +58,6 @@ CLINICAL_SNIPPETS = [
 ]
 
 STOPWORDS_EN = ["the", "and", "of", "to", "a", "in", "is", "it", "that", "for"]
-
-_TOKEN_PATTERN = "[a-z0-9]+"
 
 # RE2-safe de-id detector bodies — single source in functions/deid.py,
 # shared by the Python kernel, the deid_dates/deid_spans oracles, and the
@@ -135,26 +134,6 @@ def _pii_col():
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def token_barrier(df: DataFrame, toks_expr, keep_cols=(), alias: str = "t"):
-    """Materialize a token-array expression behind a cheap round-robin
-    exchange and return the projected frame — THE load-bearing idiom for
-    every windowed/shingled construction in this module.
-
-    Why it exists (single source for the trap, review r05): Spark performs
-    no loop-invariant hoisting inside higher-order-function lambdas, and
-    CollapseProject inlines a tokenizing regexp projection into any lambda
-    that references it — so a shingle/window lambda over the raw
-    expression re-tokenizes the document once PER WINDOW (measured 6x the
-    whole operator cost at sf0.1, round-5 profiling). After the exchange
-    the lambda reads a plain attribute. If a Spark upgrade ever hoists
-    lambda-invariant subexpressions, delete THIS helper and every call
-    site reverts together."""
-    spark = df.sparkSession
-    return df.select(*keep_cols, toks_expr.alias(alias)).repartition(
-        spark.sparkContext.defaultParallelism
-    )
 
 
 def _pii_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5994,64 +5973,6 @@ FROM documents d LEFT JOIN per p USING (doc_id)
 
 
 # --------------------------------------------------------------------------
-# Event-type Markov transition matrix (`event_transitions`): classic
-# behavioral analytics over the events stream — per-user event sequences
-# ordered by (ts, event_id), adjacent (src -> dst) transition counts, and
-# row-normalized transition probabilities. Complements `sessionize` /
-# `events_hourly` (volume surfaces) with the SEQUENCE structure.
-#
-# Scale shape: one hash exchange on user_id for the lead() window (a
-# PARTITIONED window — per-user sequences, never single-partition), one
-# map-side-combinable (src, dst) count, per-src totals re-aggregated from
-# the count table (|types|^2 rows — never a second corpus pass) and
-# broadcast back. Probability = round(cnt/total, 6) — identical integer
-# inputs both engines; the pytest asserts every value clears the 6dp
-# rounding boundary (a power-of-two denominator CAN land exactly on .5e-6,
-# where engines' rounding modes could diverge).
-# --------------------------------------------------------------------------
-
-
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir).select("user_id", "event_type", "ts", "event_id")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = (
-        ev.withColumn("dst", F.lead("event_type").over(w))
-        .filter(F.col("dst").isNotNull())
-        .select(F.col("event_type").alias("src"), "dst")
-    )
-    cnt = trans.groupBy("src", "dst").agg(F.count("*").alias("n"))
-    totals = cnt.groupBy("src").agg(F.sum("n").alias("total"))
-    return (
-        cnt.join(F.broadcast(totals), "src")
-        .select(
-            "src",
-            "dst",
-            F.col("n").cast("long").alias("n"),
-            F.round(F.col("n") / F.col("total"), 6).alias("p"),
-        )
-    )
-
-
-def _sql_event_transitions() -> str:
-    return """
-WITH trans AS (
-  SELECT event_type AS src,
-         lead(event_type) OVER (
-             PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM events
-), cnt AS (
-  SELECT src, dst, CAST(count(*) AS BIGINT) AS n
-  FROM trans WHERE dst IS NOT NULL GROUP BY src, dst
-), totals AS (
-  SELECT src, sum(n) AS total FROM cnt GROUP BY src
-)
-SELECT c.src, c.dst, c.n,
-       round(CAST(c.n AS DOUBLE) / CAST(t.total AS DOUBLE), 6) AS p
-FROM cnt c JOIN totals t USING (src)
-"""
-
-
-# --------------------------------------------------------------------------
 # Train/val/test split leakage audit (`split_leakage`): the pre-training
 # hygiene check a pipeline runs AFTER splitting — deterministic md5-bucket
 # split (8/1/1), then for every held-out doc: how many of its distinct
@@ -6759,118 +6680,6 @@ FROM rep
 
 
 # --------------------------------------------------------------------------
-# Ordered conversion funnel (`event_funnel`): the classic product-analytics
-# sequence query over the events stream — per user, the first signup, then
-# the first click STRICTLY AFTER it within a conversion window, then the
-# first purchase strictly after that click within the same window
-# (MATCH_RECOGNIZE-lite; the sequential-dependency shape `sessionize` /
-# `event_transitions` don't cover). Stage = deepest step reached; step
-# latencies in exact integer microseconds. Every stage 1/2/3 fires at
-# sf0.001 with the 3-day window (probed; stage 0 is structurally absent —
-# step 1 is the unconditional first signup and every user signs up).
-#
-# Scale shape: three filtered scans aggregated per user (map-side
-# combinable min), each step an equi-join on user_id against the
-# MONOTONICALLY SHRINKING previous-step frame with the window predicate
-# applied at the join — never a per-user window function, never an
-# unbounded self-join (the time bound prunes candidate events before the
-# min). All arithmetic in BIGINT epoch-microseconds: exact cross-engine
-# parity, no timestamp-formatting surface.
-# --------------------------------------------------------------------------
-
-FUNNEL_STEPS = ("signup", "click", "purchase")
-FUNNEL_WINDOW_S = 3 * 86400  # per-step conversion window (probed: all
-# three stages populated at sf0.001 AND sf0.01)
-
-
-def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wu = FUNNEL_WINDOW_S * 1_000_000
-    # ts is TIMESTAMP_NTZ: unix_micros() rejects it and a cast to TIMESTAMP
-    # would inject the session timezone — timestampdiff from the NTZ epoch
-    # is the timezone-free exact-integer conversion (DuckDB epoch_us treats
-    # naive timestamps identically)
-    um = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-    )
-    ev = _events(spark, sf_dir).select("user_id", "event_type", um.alias("um"))
-    users = ev.select("user_id").distinct()
-    s1 = (
-        ev.filter(F.col("event_type") == FUNNEL_STEPS[0])
-        .groupBy("user_id")
-        .agg(F.min("um").alias("t1"))
-    )
-    s2 = (
-        ev.filter(F.col("event_type") == FUNNEL_STEPS[1])
-        .join(s1, "user_id")
-        .filter((F.col("um") > F.col("t1")) & (F.col("um") <= F.col("t1") + wu))
-        .groupBy("user_id")
-        .agg(F.min("um").alias("t2"))
-    )
-    s3 = (
-        ev.filter(F.col("event_type") == FUNNEL_STEPS[2])
-        .join(s2, "user_id")
-        .filter((F.col("um") > F.col("t2")) & (F.col("um") <= F.col("t2") + wu))
-        .groupBy("user_id")
-        .agg(F.min("um").alias("t3"))
-    )
-    stage = (
-        F.when(F.col("t3").isNotNull(), 3)
-        .when(F.col("t2").isNotNull(), 2)
-        .when(F.col("t1").isNotNull(), 1)
-        .otherwise(0)
-    )
-    return (
-        users.join(s1, "user_id", "left")
-        .join(s2, "user_id", "left")
-        .join(s3, "user_id", "left")
-        .select(
-            "user_id",
-            stage.cast("long").alias("stage"),
-            F.col("t1").cast("long").alias("t1_us"),
-            F.col("t2").cast("long").alias("t2_us"),
-            F.col("t3").cast("long").alias("t3_us"),
-            (F.col("t2") - F.col("t1")).cast("long").alias("micros_1_2"),
-            (F.col("t3") - F.col("t2")).cast("long").alias("micros_2_3"),
-        )
-    )
-
-
-def _sql_event_funnel() -> str:
-    wu = FUNNEL_WINDOW_S * 1_000_000
-    a, b, c = (_sql_quote(s) for s in FUNNEL_STEPS)
-    return f"""
-WITH s1 AS (
-  SELECT user_id, min(epoch_us(ts)) AS t1
-  FROM events WHERE event_type = {a} GROUP BY user_id
-), s2 AS (
-  SELECT e.user_id, min(epoch_us(e.ts)) AS t2
-  FROM events e JOIN s1 USING (user_id)
-  WHERE e.event_type = {b}
-    AND epoch_us(e.ts) > s1.t1 AND epoch_us(e.ts) <= s1.t1 + {wu}
-  GROUP BY e.user_id
-), s3 AS (
-  SELECT e.user_id, min(epoch_us(e.ts)) AS t3
-  FROM events e JOIN s2 USING (user_id)
-  WHERE e.event_type = {c}
-    AND epoch_us(e.ts) > s2.t2 AND epoch_us(e.ts) <= s2.t2 + {wu}
-  GROUP BY e.user_id
-)
-SELECT u.user_id,
-       CAST(CASE WHEN t3 IS NOT NULL THEN 3 WHEN t2 IS NOT NULL THEN 2
-                 WHEN t1 IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS stage,
-       CAST(t1 AS BIGINT) AS t1_us,
-       CAST(t2 AS BIGINT) AS t2_us,
-       CAST(t3 AS BIGINT) AS t3_us,
-       CAST(t2 - t1 AS BIGINT) AS micros_1_2,
-       CAST(t3 - t2 AS BIGINT) AS micros_2_3
-FROM (SELECT DISTINCT user_id FROM events) u
-LEFT JOIN s1 USING (user_id)
-LEFT JOIN s2 USING (user_id)
-LEFT JOIN s3 USING (user_id)
-"""
-
-
-# --------------------------------------------------------------------------
 # Domain link-graph PageRank (`pagerank`): the crawl-prioritization /
 # spam-demotion score every web-scale curation pipeline computes over its
 # host graph (Page et al. 1999; the CommonCrawl host-level ranking that
@@ -6902,7 +6711,7 @@ LEFT JOIN s3 USING (user_id)
 # the damping factor contracts accumulated float drift (error_{i+1} <=
 # d * error_i + eps), so ranks agree to ~1e-14 — far below the 6dp
 # boundary (pytest asserts every value clears the .5e-6 boundary by a
-# wide margin, the event_transitions discipline).
+# wide margin).
 # --------------------------------------------------------------------------
 
 PR_N_NODES = 24  # bounded node universe at any SF (src_num % 24)
@@ -7824,1145 +7633,6 @@ WHERE NOT d.is_train
 
 
 # --------------------------------------------------------------------------
-# Classic warehouse OLAP shapes (`tpch_pricing`, `tpch_regional_revenue`):
-# the relational half of the testdata (region/nation/customer/supplier/
-# orders/lineitem — the TPC-H star) was previously untouched; these two
-# queries certify the bread-and-butter shapes a 100 TB warehouse runs all
-# day. `tpch_pricing` is the Q1 shape (scan-heavy filtered aggregation
-# with map-side partial aggs); `tpch_regional_revenue` is the Q5 shape
-# (fact-fact equi-join lineitem⋈orders with pushed-down date pruning,
-# then a chain of BROADCAST dimension joins customer/supplier/nation/
-# region with the c_nationkey = s_nationkey locality predicate). A plan
-# gate asserts the dims actually broadcast, the date filter reaches the
-# orders scan as a PushedFilter, and ReadSchema pruning holds.
-#
-# Cross-engine determinism: money math runs in bounded DECIMALs —
-# doubles cast to DECIMAL(12,2)/(4,2) at the scan, products stay within
-# exact precision ((12,2)x(5,2)x(5,2) -> scale 6 << 38), sums are exact
-# integer arithmetic in BOTH engines, and doubles only appear casting
-# the exact sums at the output boundary. No reduce-order surface at all.
-# --------------------------------------------------------------------------
-
-TPCH_PRICING_CUTOFF = "1998-09-01"
-TPCH_REVENUE_REGION = "ASIA"
-TPCH_REVENUE_LO, TPCH_REVENUE_HI = "1996-01-01", "1998-01-01"
-
-
-def _tpch(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def q_tpch_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _tpch(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") < F.lit(TPCH_PRICING_CUTOFF).cast("timestamp")
-    )
-    qty = F.col("l_quantity").cast("decimal(12,2)")
-    price = F.col("l_extendedprice").cast("decimal(12,2)")
-    disc = F.col("l_discount").cast("decimal(4,2)")
-    tax = F.col("l_tax").cast("decimal(4,2)")
-    one = F.lit(1).cast("decimal(3,2)")
-    agg = (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(qty).alias("sq"),
-            F.sum(price).alias("sb"),
-            F.sum(price * (one - disc)).alias("sd"),
-            F.sum(price * (one - disc) * (one + tax)).alias("sc"),
-            F.sum(disc).alias("sdisc"),
-            F.count("*").cast("long").alias("count_order"),
-        )
-    )
-    n = F.col("count_order").cast("double")
-    return agg.select(
-        "l_returnflag",
-        "l_linestatus",
-        F.round(F.col("sq").cast("double"), 2).alias("sum_qty"),
-        F.round(F.col("sb").cast("double"), 2).alias("sum_base_price"),
-        F.round(F.col("sd").cast("double"), 2).alias("sum_disc_price"),
-        F.round(F.col("sc").cast("double"), 2).alias("sum_charge"),
-        F.round(F.col("sq").cast("double") / n, 6).alias("avg_qty"),
-        F.round(F.col("sb").cast("double") / n, 6).alias("avg_price"),
-        F.round(F.col("sdisc").cast("double") / n, 6).alias("avg_disc"),
-        "count_order",
-    )
-
-
-def _sql_tpch_pricing() -> str:
-    return f"""
-SELECT l_returnflag, l_linestatus,
-       round(CAST(sq AS DOUBLE), 2) AS sum_qty,
-       round(CAST(sb AS DOUBLE), 2) AS sum_base_price,
-       round(CAST(sd AS DOUBLE), 2) AS sum_disc_price,
-       round(CAST(sc AS DOUBLE), 2) AS sum_charge,
-       round(CAST(sq AS DOUBLE) / CAST(count_order AS DOUBLE), 6)
-         AS avg_qty,
-       round(CAST(sb AS DOUBLE) / CAST(count_order AS DOUBLE), 6)
-         AS avg_price,
-       round(CAST(sdisc AS DOUBLE) / CAST(count_order AS DOUBLE), 6)
-         AS avg_disc,
-       count_order
-FROM (
-  SELECT l_returnflag, l_linestatus,
-         sum(CAST(l_quantity AS DECIMAL(12,2))) AS sq,
-         sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS sb,
-         sum(CAST(l_extendedprice AS DECIMAL(12,2))
-             * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))))
-           AS sd,
-         sum(CAST(l_extendedprice AS DECIMAL(12,2))
-             * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))
-             * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(4,2))))
-           AS sc,
-         sum(CAST(l_discount AS DECIMAL(4,2))) AS sdisc,
-         CAST(count(*) AS BIGINT) AS count_order
-  FROM lineitem
-  WHERE l_shipdate < TIMESTAMP '{TPCH_PRICING_CUTOFF} 00:00:00'
-  GROUP BY l_returnflag, l_linestatus
-)
-"""
-
-
-def q_tpch_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _tpch(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_suppkey",
-        (
-            F.col("l_extendedprice").cast("decimal(12,2)")
-            * (
-                F.lit(1).cast("decimal(3,2)")
-                - F.col("l_discount").cast("decimal(4,2)")
-            )
-        ).alias("rev"),
-    )
-    orders = _tpch(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit(TPCH_REVENUE_LO).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(TPCH_REVENUE_HI).cast("timestamp"))
-    ).select("o_orderkey", "o_custkey")
-    cust = _tpch(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = _tpch(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nat = _tpch(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name", "n_regionkey"
-    )
-    reg = _tpch(spark, sf_dir, "region").filter(
-        F.col("r_name") == TPCH_REVENUE_REGION
-    ).select("r_regionkey")
-    joined = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(
-            F.broadcast(supp),
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(reg), F.col("n_regionkey") == F.col("r_regionkey"))
-    )
-    return (
-        joined.groupBy("n_name")
-        .agg(
-            F.sum("rev").alias("srev"),
-            F.count("*").cast("long").alias("n_lineitems"),
-        )
-        .select(
-            "n_name",
-            F.round(F.col("srev").cast("double"), 2).alias("revenue"),
-            "n_lineitems",
-        )
-    )
-
-
-def _sql_tpch_regional_revenue() -> str:
-    return f"""
-SELECT n_name,
-       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
-                      * (CAST(1 AS DECIMAL(3,2))
-                         - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE), 2)
-         AS revenue,
-       CAST(count(*) AS BIGINT) AS n_lineitems
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE o_orderdate >= TIMESTAMP '{TPCH_REVENUE_LO} 00:00:00'
-  AND o_orderdate < TIMESTAMP '{TPCH_REVENUE_HI} 00:00:00'
-  AND r_name = '{TPCH_REVENUE_REGION}'
-GROUP BY n_name
-"""
-
-
-# --------------------------------------------------------------------------
-# Holt's linear-trend forecast (`holt_forecast`): the classic
-# double-exponential smoother (Holt 1957; Hyndman & Athanasopoulos
-# fpp3 §8.2) — the capacity-planning forecast an event pipeline runs over
-# its hourly volume series. The series is the DENSE hourly grid between
-# the first and last event (missing hours zero-filled — both engines
-# generate the identical grid), smoothed with l_t = α·y_t +
-# (1-α)(l_{t-1}+b_{t-1}), b_t = β(l_t - l_{t-1}) + (1-β)b_{t-1}; one-
-# step-ahead fitted values, in-sample SSE, and an h-step forecast fan
-# l_T + h·b_T ride along every row.
-#
-# Scale shape: one map-side-combinable hourly count agg; the recursion
-# runs over the BOUNDED series (|hours| rows — qdigest's bounded-
-# histogram class, collected as one sorted array), never over events.
-# Cross-engine determinism: the smoother is a pinned-order fold
-# (char_entropy discipline) mirrored by an ordered recursive CTE — both
-# execute the identical per-step formulas in the identical order, so
-# states agree to the last ulp; margin pytest.
-# --------------------------------------------------------------------------
-
-HOLT_ALPHA = 0.5
-HOLT_BETA = 0.3
-HOLT_H = 6  # forecast horizon (hours)
-
-
-def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(
-            F.sequence("h0", "h1", F.expr("interval 1 hour"))
-        ).alias("h")
-    )
-    cnt = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count("*").alias("c")
-    )
-    ser = (
-        grid.join(cnt, "h", "left")
-        .select(
-            "h", F.coalesce("c", F.lit(0)).cast("double").alias("y")
-        )
-    )
-    arr_df = ser.agg(
-        F.sort_array(F.collect_list(F.struct("h", "y"))).alias("a")
-    )
-    a, b_ = float(HOLT_ALPHA), float(HOLT_BETA)
-    y1 = F.element_at("a", 1)["y"]
-    y2 = F.element_at("a", 2)["y"]
-    acc0 = F.named_struct(
-        F.lit("l"), y1,
-        F.lit("b"), y2 - y1,
-        F.lit("fits"), F.array().cast("array<double>"),
-        F.lit("sse"), F.lit(0.0),
-    )
-    new_l = (
-        lambda acc, x: F.lit(a) * x["y"]
-        + F.lit(1.0 - a) * (acc["l"] + acc["b"])
-    )
-    folded = arr_df.select(
-        "a",
-        F.aggregate(
-            F.slice(F.col("a"), 2, F.size("a") - 1),
-            acc0,
-            lambda acc, x: F.named_struct(
-                F.lit("l"), new_l(acc, x),
-                F.lit("b"),
-                F.lit(b_) * (new_l(acc, x) - acc["l"])
-                + F.lit(1.0 - b_) * acc["b"],
-                F.lit("fits"),
-                F.concat(acc["fits"], F.array(acc["l"] + acc["b"])),
-                F.lit("sse"),
-                acc["sse"]
-                + (x["y"] - (acc["l"] + acc["b"]))
-                * (x["y"] - (acc["l"] + acc["b"])),
-            ),
-        ).alias("st"),
-    )
-    rows = folded.select(
-        F.posexplode("a").alias("i0", "e"),
-        F.col("st.l").alias("lf"),
-        F.col("st.b").alias("bf"),
-        F.col("st.fits").alias("fits"),
-        F.col("st.sse").alias("sse"),
-    ).select(
-        (F.col("i0") + 1).cast("long").alias("t"),
-        F.unix_timestamp(F.col("e.h")).alias("epoch"),
-        F.col("e.y").cast("long").alias("y"),
-        # t = 1 has no one-step-ahead prediction (i0 = 0 would be an
-        # invalid 0 index anyway — Spark arrays are 1-based)
-        F.round(
-            F.when(
-                F.col("i0") >= 1, F.element_at("fits", F.col("i0"))
-            ),
-            6,
-        ).alias("fitted"),
-        F.round(
-            F.when(
-                F.col("i0") >= 1,
-                F.col("e.y") - F.element_at("fits", F.col("i0")),
-            ),
-            6,
-        ).alias("resid"),
-        F.round("lf", 6).alias("level_fin"),
-        F.round("bf", 6).alias("trend_fin"),
-        F.round("sse", 6).alias("sse"),
-        *[
-            F.round(
-                F.col("lf") + F.lit(float(h)) * F.col("bf"), 6
-            ).alias(f"fc{h}")
-            for h in range(1, HOLT_H + 1)
-        ],
-    )
-    return rows
-
-
-def _sql_holt_forecast() -> str:
-    a, b_ = float(HOLT_ALPHA), float(HOLT_BETA)
-    fcs = ",\n       ".join(
-        f"round(f.l + {float(h)} * f.b, 6) AS fc{h}"
-        for h in range(1, HOLT_H + 1)
-    )
-    nl = f"({a} * s.y + {1.0 - a} * (hw.l + hw.b))"
-    return f"""
-WITH RECURSIVE bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser AS MATERIALIZED (
-  SELECT row_number() OVER (ORDER BY g.h) AS i, g.h,
-         CAST(coalesce(c.c, 0) AS DOUBLE) AS y
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), nn AS (
-  SELECT CAST(max(i) AS BIGINT) AS n FROM ser
-), hw AS (
-  SELECT CAST(1 AS BIGINT) AS i,
-         (SELECT y FROM ser WHERE i = 1) AS l,
-         (SELECT y FROM ser WHERE i = 2)
-           - (SELECT y FROM ser WHERE i = 1) AS b,
-         CAST(NULL AS DOUBLE) AS fit,
-         CAST(0.0 AS DOUBLE) AS sse
-  UNION ALL
-  SELECT s.i,
-         {nl} AS l,
-         {b_} * ({nl} - hw.l) + {1.0 - b_} * hw.b AS b,
-         hw.l + hw.b AS fit,
-         hw.sse + (s.y - (hw.l + hw.b)) * (s.y - (hw.l + hw.b)) AS sse
-  FROM hw JOIN ser s ON s.i = hw.i + 1
-), fin AS (
-  SELECT hw.l, hw.b, hw.sse FROM hw CROSS JOIN nn WHERE hw.i = nn.n
-)
-SELECT CAST(s.i AS BIGINT) AS t,
-       CAST(epoch(s.h) AS BIGINT) AS epoch,
-       CAST(s.y AS BIGINT) AS y,
-       round(hw.fit, 6) AS fitted,
-       round(s.y - hw.fit, 6) AS resid,
-       round(f.l, 6) AS level_fin,
-       round(f.b, 6) AS trend_fin,
-       round(f.sse, 6) AS sse,
-       {fcs}
-FROM ser s
-JOIN hw ON hw.i = s.i
-CROSS JOIN fin f
-"""
-
-
-# --------------------------------------------------------------------------
-# Seasonal-naive MASE evaluation (`seasonal_mase`): the scale-free
-# forecast-accuracy metric (Hyndman & Koehler 2006) every monitoring
-# stack reports — per event type, the dense hourly series splits into
-# train and a MASE_TEST_H-hour holdout; the seasonal-naive forecast
-# y_{t-24} is scored on the holdout, scaled by the same forecaster's
-# in-train MAE (MASE < 1 = beats the naive seasonal repeat). Completes
-# the time-series pair: `holt_forecast` fits, this evaluates.
-#
-# Scale shape: dense grid = hour-sequence × distinct types (both tiny,
-# broadcast); counts one map-side agg; lags via windows PARTITIONED by
-# event type (never single-partition); absolute errors are integers so
-# the MAE sums are exact — MASE is one division of exact integers per
-# type (bit-identical in both engines).
-# --------------------------------------------------------------------------
-
-MASE_SEASON = 24  # hours
-MASE_TEST_H = 48  # holdout length (hours)
-
-
-def q_seasonal_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias(
-            "h"
-        )
-    )
-    types = ev.select("event_type").distinct()
-    cnt = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("h"), "event_type"
-    ).agg(F.count("*").alias("c"))
-    ser = (
-        grid.crossJoin(F.broadcast(types))
-        .join(cnt, ["h", "event_type"], "left")
-        .select(
-            "event_type",
-            "h",
-            F.coalesce("c", F.lit(0)).cast("long").alias("y"),
-        )
-    )
-    w = Window.partitionBy("event_type").orderBy("h")
-    lagged = (
-        ser.withColumn("y_lag", F.lag("y", MASE_SEASON).over(w))
-        .withColumn("idx", F.row_number().over(w))
-        .withColumn("n_tot", F.count("*").over(Window.partitionBy("event_type")))
-    )
-    flagged = lagged.filter(F.col("y_lag").isNotNull()).select(
-        "event_type",
-        (F.col("idx") > F.col("n_tot") - MASE_TEST_H).cast("long").alias(
-            "is_test"
-        ),
-        F.abs(F.col("y") - F.col("y_lag")).alias("ae"),
-    )
-    per = flagged.groupBy("event_type").agg(
-        F.sum(F.when(F.col("is_test") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_train"),
-        F.sum(F.when(F.col("is_test") == 1, 1).otherwise(0))
-        .cast("long")
-        .alias("n_test"),
-        F.sum(F.when(F.col("is_test") == 0, F.col("ae")).otherwise(0))
-        .cast("long")
-        .alias("sae_train"),
-        F.sum(F.when(F.col("is_test") == 1, F.col("ae")).otherwise(0))
-        .cast("long")
-        .alias("sae_test"),
-    )
-    mae_tr = F.col("sae_train").cast("double") / F.col("n_train").cast(
-        "double"
-    )
-    mae_te = F.col("sae_test").cast("double") / F.col("n_test").cast("double")
-    return per.select(
-        "event_type",
-        "n_train",
-        "n_test",
-        "sae_train",
-        "sae_test",
-        F.round(mae_tr, 6).alias("mae_naive_train"),
-        F.round(mae_te, 6).alias("mae_test"),
-        F.round(mae_te / mae_tr, 6).alias("mase"),
-    )
-
-
-def _sql_seasonal_mase() -> str:
-    m, th = MASE_SEASON, MASE_TEST_H
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), types AS (
-  SELECT DISTINCT event_type FROM events
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, event_type, count(*) AS c
-  FROM events GROUP BY 1, 2
-), ser AS (
-  SELECT t.event_type, g.h, CAST(coalesce(c.c, 0) AS BIGINT) AS y
-  FROM grid g CROSS JOIN types t
-  LEFT JOIN cnt c ON c.h = g.h AND c.event_type = t.event_type
-), lagged AS (
-  SELECT event_type, y,
-         lag(y, {m}) OVER (PARTITION BY event_type ORDER BY h) AS y_lag,
-         row_number() OVER (PARTITION BY event_type ORDER BY h) AS idx,
-         count(*) OVER (PARTITION BY event_type) AS n_tot
-  FROM ser
-), flagged AS (
-  SELECT event_type,
-         CAST(CASE WHEN idx > n_tot - {th} THEN 1 ELSE 0 END AS BIGINT)
-           AS is_test,
-         abs(y - y_lag) AS ae
-  FROM lagged WHERE y_lag IS NOT NULL
-), per AS (
-  SELECT event_type,
-         CAST(sum(CASE WHEN is_test = 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_train,
-         CAST(sum(CASE WHEN is_test = 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_test,
-         CAST(sum(CASE WHEN is_test = 0 THEN ae ELSE 0 END) AS BIGINT)
-           AS sae_train,
-         CAST(sum(CASE WHEN is_test = 1 THEN ae ELSE 0 END) AS BIGINT)
-           AS sae_test
-  FROM flagged GROUP BY event_type
-)
-SELECT event_type, n_train, n_test, sae_train, sae_test,
-       round(CAST(sae_train AS DOUBLE) / CAST(n_train AS DOUBLE), 6)
-         AS mae_naive_train,
-       round(CAST(sae_test AS DOUBLE) / CAST(n_test AS DOUBLE), 6)
-         AS mae_test,
-       round((CAST(sae_test AS DOUBLE) / CAST(n_test AS DOUBLE))
-             / (CAST(sae_train AS DOUBLE) / CAST(n_train AS DOUBLE)), 6)
-         AS mase
-FROM per
-"""
-
-
-# --------------------------------------------------------------------------
-# OLAP CUBE rollup (`doc_cube`): the multi-granularity aggregation surface
-# every BI/warehouse layer sits on — one pass emits ALL four granularities
-# of (source, lang) — per-pair, per-source, per-lang, grand total — with
-# the SQL-standard GROUPING() bitmask distinguishing real keys from
-# aggregated-away placeholders (Spark `df.cube` + `grouping_id` vs DuckDB
-# `GROUP BY CUBE` + `GROUPING`; first listed column = most significant
-# bit, both engines follow the standard). Measures are exact integers
-# (count / sum / min / max of n_chars) plus one derived double (avg,
-# 6dp). NULL group keys are coalesced to '(all)' AFTER the grouping id is
-# computed, so a hypothetical real-NULL key could never collide with a
-# placeholder.
-#
-# Scale shape: CUBE over G grouping sets is ONE scan with map-side
-# combinable partial aggs expanded G-fold before the single exchange —
-# at 100 TB this is strictly cheaper than G separate groupBy passes and
-# never materializes the fact table twice. Output is |sources| x |langs|
-# sized — summary-scale.
-# --------------------------------------------------------------------------
-
-
-def q_doc_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    return (
-        d.cube("source", "lang")
-        .agg(
-            F.grouping_id("source", "lang").cast("long").alias("gid"),
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("chars"),
-            F.min("n_chars").cast("long").alias("min_chars"),
-            F.max("n_chars").cast("long").alias("max_chars"),
-        )
-        .select(
-            F.coalesce("source", F.lit("(all)")).alias("source_g"),
-            F.coalesce("lang", F.lit("(all)")).alias("lang_g"),
-            "gid",
-            "n_docs",
-            "chars",
-            "min_chars",
-            "max_chars",
-            F.round(
-                F.col("chars").cast("double") / F.col("n_docs").cast("double"),
-                6,
-            ).alias("avg_chars"),
-        )
-    )
-
-
-def _sql_doc_cube() -> str:
-    return """
-SELECT coalesce(source, '(all)') AS source_g,
-       coalesce(lang, '(all)') AS lang_g,
-       CAST(GROUPING(source, lang) AS BIGINT) AS gid,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS chars,
-       CAST(min(n_chars) AS BIGINT) AS min_chars,
-       CAST(max(n_chars) AS BIGINT) AS max_chars,
-       round(CAST(sum(n_chars) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-         AS avg_chars
-FROM documents
-GROUP BY CUBE(source, lang)
-"""
-
-
-# --------------------------------------------------------------------------
-# Cohort retention matrix (`cohort_retention`): THE product-analytics
-# table — users grouped by their acquisition day (first RET_EVENT), then
-# for each day-offset the share of the cohort still active. Day index is
-# exact integer epoch-microseconds // 86_400_000_000 (timezone-free, the
-# event_funnel discipline — no date-formatting surface); activity =
-# distinct (user, day) pairs of the same event type, so the matrix is the
-# classic triangle (purchase days are sparse: ~1/3 of user-days fire at
-# sf0.001, cohorts split over 5 acquisition days). retention(c, 0) = 1 by
-# construction (the min day has an event), which is what makes the
-# offset-0 row the cohort-size denominator.
-#
-# Scale shape: one filtered scan → per-user min (map-side combinable) +
-# distinct (user, day) (one exchange each); the user-sized cohort join
-# co-partitions on user_id under AQE (never broadcast — |users| grows
-# with the corpus); the per-cohort denominator frame is |cohorts|-sized
-# and broadcast. Output is |cohorts| x RET_MAX_OFFSET — summary-scale.
-# --------------------------------------------------------------------------
-
-RET_EVENT = "purchase"
-RET_MAX_OFFSET = 14  # matrix width cap (events span ~30 days at any SF)
-_DAY_US = 86_400_000_000
-
-
-def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    day = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-        f" div {_DAY_US}"
-    )
-    ev = (
-        _events(spark, sf_dir)
-        .filter(F.col("event_type") == RET_EVENT)
-        .select("user_id", day.alias("d"))
-    )
-    act = ev.distinct()
-    coh = ev.groupBy("user_id").agg(F.min("d").alias("cd"))
-    m = (
-        act.join(coh, "user_id")
-        .select("cd", (F.col("d") - F.col("cd")).alias("off"), "user_id")
-        .filter(F.col("off") <= RET_MAX_OFFSET)
-        .groupBy("cd", "off")
-        .agg(F.count("*").cast("long").alias("n_active"))
-    )
-    base = m.filter(F.col("off") == 0).select(
-        "cd", F.col("n_active").alias("n_cohort")
-    )
-    return m.join(F.broadcast(base), "cd").select(
-        F.col("cd").cast("long").alias("cohort_day"),
-        F.col("off").cast("long").alias("day_offset"),
-        "n_active",
-        "n_cohort",
-        F.round(
-            F.col("n_active").cast("double") / F.col("n_cohort").cast("double"),
-            6,
-        ).alias("retention"),
-    )
-
-
-def _sql_cohort_retention() -> str:
-    return f"""
-WITH ev AS (
-  SELECT user_id, epoch_us(ts) // {_DAY_US} AS d
-  FROM events WHERE event_type = {_sql_quote(RET_EVENT)}
-), act AS (
-  SELECT DISTINCT user_id, d FROM ev
-), coh AS (
-  SELECT user_id, min(d) AS cd FROM ev GROUP BY user_id
-), m AS MATERIALIZED (
-  SELECT c.cd, a.d - c.cd AS off, CAST(count(*) AS BIGINT) AS n_active
-  FROM act a JOIN coh c USING (user_id)
-  WHERE a.d - c.cd <= {RET_MAX_OFFSET}
-  GROUP BY c.cd, a.d - c.cd
-)
-SELECT CAST(m.cd AS BIGINT) AS cohort_day,
-       CAST(m.off AS BIGINT) AS day_offset,
-       m.n_active,
-       b.n_active AS n_cohort,
-       round(CAST(m.n_active AS DOUBLE) / CAST(b.n_active AS DOUBLE), 6)
-         AS retention
-FROM m JOIN (SELECT cd, n_active FROM m WHERE off = 0) b USING (cd)
-"""
-
-
-# --------------------------------------------------------------------------
-# CUSUM changepoint detection (`cusum_changepoint`): Page's 1954
-# cumulative-sum control chart — the sequential mean-shift detector SRE /
-# data-quality monitors run over ingestion rates — on the dense hourly
-# event-count series. S_t = max(0, S_{t-1} + (x_t − μ0 − k)) with
-# allowance k = μ0/2 and alarm threshold h = CUSUM_H_MULT·μ0, where μ0 is
-# the first-third baseline mean. EVERYTHING is exact BIGINT: scaling the
-# recurrence by 2·n0 turns (x_t − μ0 − μ0/2) into 2·n0·x_t − 3·sum0 and
-# the threshold into 2·CUSUM_H_MULT·sum0 — no float enters the operator,
-# so the fold is bit-identical across engines with no rounding surface
-# at all (the exact-reduction design rule from PLANS.md). Two scopes:
-# 'same' (raw series, no alarm) and 'shifted' (counts double after
-# t0 = 2n/3 — the planted changepoint), so both verdict branches fire.
-#
-# Scale shape: one corpus pass to hourly counts (map-side combinable);
-# the series is |hours|-sized (bounded, summary-scale) — the pinned-order
-# fold and the recursive-CTE twin both run over that summary, never the
-# corpus. first_alarm_t is a per-scope min over the alarm flags (no
-# window function).
-# --------------------------------------------------------------------------
-
-CUSUM_H_MULT = 12  # alarm threshold in baseline-means (h = 12·μ0)
-
-
-def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias("h")
-    )
-    cnt = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count("*").alias("c")
-    )
-    ser = grid.join(cnt, "h", "left").select(
-        "h", F.coalesce("c", F.lit(0)).cast("long").alias("x")
-    )
-    arr = (
-        ser.agg(F.sort_array(F.collect_list(F.struct("h", "x"))).alias("a"))
-        .select(
-            "a",
-            F.expr("cast(size(a) div 3 as bigint)").alias("n0"),
-            F.expr("cast((2 * size(a)) div 3 as bigint)").alias("t0"),
-            F.expr(
-                "aggregate(slice(a, 1, size(a) div 3),"
-                " cast(0 as bigint), (acc, e) -> acc + e.x)"
-            ).alias("sum0"),
-        )
-    )
-    scopes = None
-    for scope in ("same", "shifted"):
-        eff = F.transform(
-            F.col("a"),
-            lambda e, i: F.struct(
-                e["h"].alias("h"),
-                F.when(
-                    (F.lit(scope) == "shifted")
-                    & ((i + 1).cast("long") > F.col("t0")),
-                    2 * e["x"],
-                )
-                .otherwise(e["x"])
-                .alias("y"),
-            ),
-        )
-        part = arr.select(
-            F.lit(scope).alias("scope"), eff.alias("a"), "n0", "t0", "sum0"
-        )
-        scopes = part if scopes is None else scopes.unionByName(part)
-    new_s = lambda acc, e: F.greatest(  # noqa: E731
-        F.lit(0).cast("long"),
-        acc["s"] + 2 * F.col("n0") * e["y"] - 3 * F.col("sum0"),
-    )
-    folded = scopes.select(
-        "scope",
-        "a",
-        "n0",
-        "t0",
-        "sum0",
-        F.aggregate(
-            F.col("a"),
-            F.named_struct(
-                F.lit("s"),
-                F.lit(0).cast("long"),
-                F.lit("ss"),
-                F.array().cast("array<bigint>"),
-            ),
-            lambda acc, e: F.named_struct(
-                F.lit("s"),
-                new_s(acc, e),
-                F.lit("ss"),
-                F.concat(acc["ss"], F.array(new_s(acc, e))),
-            ),
-        )["ss"].alias("ss"),
-    )
-    thresh = 2 * CUSUM_H_MULT * F.col("sum0")
-    rows = folded.select(
-        "scope",
-        F.posexplode("a").alias("i0", "e"),
-        "n0",
-        "t0",
-        "sum0",
-        "ss",
-    ).select(
-        "scope",
-        (F.col("i0") + 1).cast("long").alias("t"),
-        F.unix_timestamp(F.col("e.h")).alias("epoch"),
-        F.col("e.y").cast("long").alias("y"),
-        (2 * F.col("n0") * F.col("e.y") - 3 * F.col("sum0")).alias("resid"),
-        F.element_at("ss", F.col("i0") + 1).alias("s"),
-        thresh.cast("long").alias("threshold"),
-        (F.element_at("ss", F.col("i0") + 1) > thresh)
-        .cast("long")
-        .alias("alarm"),
-        F.col("t0").alias("shift_t0"),
-    )
-    fa = rows.groupBy("scope").agg(
-        F.min(F.when(F.col("alarm") == 1, F.col("t"))).alias("first_alarm_t")
-    )
-    return rows.join(F.broadcast(fa), "scope").select(
-        "scope",
-        "t",
-        "epoch",
-        "y",
-        "resid",
-        "s",
-        "threshold",
-        "alarm",
-        "shift_t0",
-        F.col("first_alarm_t").cast("long").alias("first_alarm_t"),
-    )
-
-
-def _sql_cusum_changepoint() -> str:
-    h = CUSUM_H_MULT
-    return f"""
-WITH RECURSIVE bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser AS MATERIALIZED (
-  SELECT row_number() OVER (ORDER BY g.h) AS t, g.h,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS x
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), nn AS (
-  SELECT CAST(max(t) // 3 AS BIGINT) AS n0,
-         CAST((2 * max(t)) // 3 AS BIGINT) AS t0
-  FROM ser
-), base AS (
-  SELECT CAST(sum(s.x) AS BIGINT) AS sum0 FROM ser s, nn WHERE s.t <= nn.n0
-), eff AS MATERIALIZED (
-  SELECT sc.scope, s.t, s.h,
-         CASE WHEN sc.scope = 'shifted' AND s.t > nn.t0
-              THEN 2 * s.x ELSE s.x END AS y
-  FROM ser s
-  CROSS JOIN nn
-  CROSS JOIN (SELECT unnest(['same', 'shifted']) AS scope) sc
-), cu AS (
-  SELECT e.scope, e.t,
-         greatest(0, 2 * nn.n0 * e.y - 3 * b.sum0) AS s
-  FROM eff e, nn, base b WHERE e.t = 1
-  UNION ALL
-  SELECT e.scope, e.t,
-         greatest(0, cu.s + 2 * nn.n0 * e.y - 3 * b.sum0) AS s
-  FROM cu JOIN eff e ON e.scope = cu.scope AND e.t = cu.t + 1, nn, base b
-), rows_ AS MATERIALIZED (
-  SELECT e.scope, CAST(e.t AS BIGINT) AS t,
-         CAST(epoch(e.h) AS BIGINT) AS epoch,
-         CAST(e.y AS BIGINT) AS y,
-         CAST(2 * nn.n0 * e.y - 3 * b.sum0 AS BIGINT) AS resid,
-         CAST(cu.s AS BIGINT) AS s,
-         CAST(2 * {h} * b.sum0 AS BIGINT) AS threshold,
-         CAST(CASE WHEN cu.s > 2 * {h} * b.sum0 THEN 1 ELSE 0 END
-              AS BIGINT) AS alarm,
-         nn.t0 AS shift_t0
-  FROM eff e
-  JOIN cu ON cu.scope = e.scope AND cu.t = e.t, nn, base b
-), fa AS (
-  SELECT scope, CAST(min(CASE WHEN alarm = 1 THEN t END) AS BIGINT)
-           AS first_alarm_t
-  FROM rows_ GROUP BY scope
-)
-SELECT r.*, fa.first_alarm_t
-FROM rows_ r JOIN fa USING (scope)
-"""
-
-
-# --------------------------------------------------------------------------
-# TPC-H Q3 shape (`tpch_shipping`): the unshipped-orders shipping-
-# priority query — the warehouse's three-way fact join with OPPOSING
-# date predicates (orders placed before the cutoff, lineitems shipped
-# after it) and a global top-N by exact DECIMAL revenue. Completes the
-# star-schema trio: Q1 (tpch_pricing) scans, Q5 (tpch_regional_revenue)
-# joins the dim chain, Q3 adds selective fact-fact pruning + top-N.
-#
-# Scale shape: both date filters push to the parquet scans; the
-# customer-segment dim broadcasts; the fact-fact join shuffles on
-# orderkey (AQE); the top-N is orderBy+limit → TakeOrderedAndProject
-# (distributed per-partition heads merged on the driver — never a
-# single-partition window). DECIMAL revenue makes the ordering exact, so
-# the N-th boundary cannot drift between engines; orderkey tie-break.
-# --------------------------------------------------------------------------
-
-TPCH_SHIP_SEGMENT = "BUILDING"
-TPCH_SHIP_CUTOFF = "1998-07-01"
-TPCH_SHIP_TOPN = 10
-
-
-def q_tpch_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = (
-        _tpch(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == TPCH_SHIP_SEGMENT)
-        .select("c_custkey")
-    )
-    orders = (
-        _tpch(spark, sf_dir, "orders")
-        .filter(
-            F.col("o_orderdate") < F.lit(TPCH_SHIP_CUTOFF).cast("timestamp")
-        )
-        .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-    )
-    li = (
-        _tpch(spark, sf_dir, "lineitem")
-        .filter(
-            F.col("l_shipdate") > F.lit(TPCH_SHIP_CUTOFF).cast("timestamp")
-        )
-        .select(
-            "l_orderkey",
-            (
-                F.col("l_extendedprice").cast("decimal(12,2)")
-                * (
-                    F.lit(1).cast("decimal(3,2)")
-                    - F.col("l_discount").cast("decimal(4,2)")
-                )
-            ).alias("rev"),
-        )
-    )
-    agg = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum("rev").alias("srev"))
-    )
-    return (
-        agg.orderBy(F.desc("srev"), "l_orderkey")
-        .limit(TPCH_SHIP_TOPN)
-        .select(
-            "l_orderkey",
-            F.round(F.col("srev").cast("double"), 2).alias("revenue"),
-            F.unix_timestamp("o_orderdate").alias("orderdate_epoch"),
-            "o_orderpriority",
-        )
-    )
-
-
-def _sql_tpch_shipping() -> str:
-    return f"""
-SELECT l_orderkey,
-       round(CAST(srev AS DOUBLE), 2) AS revenue,
-       CAST(epoch(o_orderdate) AS BIGINT) AS orderdate_epoch,
-       o_orderpriority
-FROM (
-  SELECT l.l_orderkey, o.o_orderdate, o.o_orderpriority,
-         sum(CAST(l.l_extendedprice AS DECIMAL(12,2))
-             * (CAST(1 AS DECIMAL(3,2))
-                - CAST(l.l_discount AS DECIMAL(4,2)))) AS srev
-  FROM customer c
-  JOIN orders o ON o.o_custkey = c.c_custkey
-  JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-  WHERE c.c_mktsegment = {_sql_quote(TPCH_SHIP_SEGMENT)}
-    AND o.o_orderdate < TIMESTAMP '{TPCH_SHIP_CUTOFF} 00:00:00'
-    AND l.l_shipdate > TIMESTAMP '{TPCH_SHIP_CUTOFF} 00:00:00'
-  GROUP BY 1, 2, 3
-)
-ORDER BY srev DESC, l_orderkey
-LIMIT {TPCH_SHIP_TOPN}
-"""
-
-
-# --------------------------------------------------------------------------
-# TPC-H Q18 shape (`tpch_big_orders`): the large-volume-customer query —
-# a HAVING-threshold semi-join back onto the same fact table (orders
-# whose total quantity exceeds the threshold, with their customer).
-# The shape Q1/Q3/Q5 don't cover: a grouped predicate on the fact
-# becomes the driving filter of a second pass over itself.
-#
-# Scale shape: the qualifying-order set is one map-side-combinable
-# groupBy + filter (summary-sized — the >threshold tail); it joins back
-# to lineitem/orders as an equi-join Spark plans as a broadcast once AQE
-# sees the tiny side, exactly how a warehouse executes Q18. DECIMAL
-# quantity sums are exact, so the threshold boundary cannot drift.
-# --------------------------------------------------------------------------
-
-TPCH_BIGORDER_QTY = 250
-
-
-def q_tpch_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _tpch(spark, sf_dir, "lineitem").select(
-        "l_orderkey", F.col("l_quantity").cast("decimal(12,2)").alias("qty")
-    )
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("qty").alias("total_qty"))
-        .filter(F.col("total_qty") > TPCH_BIGORDER_QTY)
-    )
-    orders = _tpch(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    cust = _tpch(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    return (
-        big.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            "c_name",
-            "c_custkey",
-            F.col("l_orderkey").alias("o_orderkey"),
-            F.unix_timestamp("o_orderdate").alias("orderdate_epoch"),
-            F.round(F.col("o_totalprice").cast("double"), 2).alias(
-                "o_totalprice"
-            ),
-            F.round(F.col("total_qty").cast("double"), 2).alias("total_qty"),
-        )
-    )
-
-
-def _sql_tpch_big_orders() -> str:
-    return f"""
-WITH big AS (
-  SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(12,2))) AS total_qty
-  FROM lineitem GROUP BY l_orderkey
-  HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > {TPCH_BIGORDER_QTY}
-)
-SELECT c.c_name, c.c_custkey, b.l_orderkey AS o_orderkey,
-       CAST(epoch(o.o_orderdate) AS BIGINT) AS orderdate_epoch,
-       round(CAST(o.o_totalprice AS DOUBLE), 2) AS o_totalprice,
-       round(CAST(b.total_qty AS DOUBLE), 2) AS total_qty
-FROM big b
-JOIN orders o ON o.o_orderkey = b.l_orderkey
-JOIN customer c ON c.c_custkey = o.o_custkey
-"""
-
-
-# --------------------------------------------------------------------------
-# Rolling-window anomaly detection (`rolling_anomaly`): the trailing
-# z-score monitor every ingestion/ops dashboard runs — for each hour,
-# mean/std over the PREVIOUS ANOM_W hours (ROWS BETWEEN W PRECEDING AND
-# 1 PRECEDING — the frame never includes the scored point, so a spike
-# cannot mask itself) and the standardized residual z = (x − μ)/σ.
-# Complements `cusum_changepoint` (persistent level shifts) with the
-# point-anomaly face. Two scopes: 'same' (raw series — must stay quiet
-# at Z=ANOM_Z) and 'spiked' (one planted hour at t0 = 3n/4 gets
-# x' = 6x + 50 — multiplicative+floor, so the spike scales with any SF's
-# rate and always clears the threshold).
-#
-# Exactness: the window aggregates are BIGINT sums (cnt, Σx, Σx²); the
-# variance numerator cnt·Σx² − (Σx)² stays integer, so only the final
-# σ/z doubles exist (identical expression order both engines, 6dp).
-#
-# Scale shape: one map-side hourly count agg; the window runs over the
-# BOUNDED dense series (|hours| rows — the holt/qdigest summary class),
-# partitioned by scope, never over raw events.
-# --------------------------------------------------------------------------
-
-ANOM_W = 48  # trailing window (hours)
-ANOM_Z = 6.0  # anomaly threshold (probed quiet on the raw series)
-ANOM_SPIKE_MULT = 6
-ANOM_SPIKE_ADD = 50
-
-
-def q_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias("h")
-    )
-    cnt = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count("*").alias("c")
-    )
-    ser = grid.join(cnt, "h", "left").select(
-        "h", F.coalesce("c", F.lit(0)).cast("long").alias("x")
-    )
-    n1 = ser.agg(F.count("*").alias("n"))
-    base = ser.crossJoin(F.broadcast(n1)).select(
-        "h",
-        "x",
-        F.expr("cast((3 * n) div 4 as bigint)").alias("t0"),
-    )
-    scoped = None
-    for scope in ("same", "spiked"):
-        part = base.select(F.lit(scope).alias("scope"), "h", "x", "t0")
-        scoped = part if scoped is None else scoped.unionByName(part)
-    wq = Window.partitionBy("scope").orderBy("h")
-    idx = scoped.select(
-        "scope",
-        "h",
-        "t0",
-        F.row_number().over(wq).cast("long").alias("t"),
-        "x",
-    ).select(
-        "scope",
-        "h",
-        "t",
-        "t0",
-        F.when(
-            (F.col("scope") == "spiked") & (F.col("t") == F.col("t0")),
-            ANOM_SPIKE_MULT * F.col("x") + ANOM_SPIKE_ADD,
-        )
-        .otherwise(F.col("x"))
-        .alias("y"),
-    )
-    fr = (
-        Window.partitionBy("scope")
-        .orderBy("t")
-        .rowsBetween(-ANOM_W, -1)
-    )
-    stats = idx.select(
-        "scope",
-        "t",
-        "t0",
-        F.unix_timestamp("h").alias("epoch"),
-        "y",
-        F.count("y").over(fr).cast("long").alias("wc"),
-        F.sum("y").over(fr).cast("long").alias("ws"),
-        F.sum(F.col("y") * F.col("y")).over(fr).cast("long").alias("wss"),
-    ).filter(F.col("t") > ANOM_W)
-    mean = F.col("ws").cast("double") / F.col("wc").cast("double")
-    varn = (
-        F.col("wc") * F.col("wss") - F.col("ws") * F.col("ws")
-    ).cast("double") / (F.col("wc") * (F.col("wc") - 1)).cast("double")
-    z = (F.col("y").cast("double") - mean) / F.sqrt(varn)
-    return stats.select(
-        "scope",
-        "t",
-        "epoch",
-        "y",
-        "wc",
-        "ws",
-        "wss",
-        F.round(mean, 6).alias("mean"),
-        F.round(F.sqrt(varn), 6).alias("std"),
-        F.round(z, 6).alias("z"),
-        (z > ANOM_Z).cast("long").alias("anomaly"),
-        F.col("t0").alias("spike_t0"),
-    )
-
-
-def _sql_rolling_anomaly() -> str:
-    w, zt = ANOM_W, ANOM_Z
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser AS MATERIALIZED (
-  SELECT row_number() OVER (ORDER BY g.h) AS t, g.h,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS x
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), nn AS (
-  SELECT CAST((3 * max(t)) // 4 AS BIGINT) AS t0 FROM ser
-), eff AS (
-  SELECT sc.scope, s.t, s.h, nn.t0,
-         CASE WHEN sc.scope = 'spiked' AND s.t = nn.t0
-              THEN {ANOM_SPIKE_MULT} * s.x + {ANOM_SPIKE_ADD}
-              ELSE s.x END AS y
-  FROM ser s
-  CROSS JOIN nn
-  CROSS JOIN (SELECT unnest(['same', 'spiked']) AS scope) sc
-), stats AS MATERIALIZED (
-  SELECT scope, CAST(t AS BIGINT) AS t, t0,
-         CAST(epoch(h) AS BIGINT) AS epoch,
-         CAST(y AS BIGINT) AS y,
-         CAST(count(y) OVER win AS BIGINT) AS wc,
-         CAST(sum(y) OVER win AS BIGINT) AS ws,
-         CAST(sum(y * y) OVER win AS BIGINT) AS wss
-  FROM eff
-  WINDOW win AS (PARTITION BY scope ORDER BY t
-                 ROWS BETWEEN {w} PRECEDING AND 1 PRECEDING)
-)
-SELECT scope, t, epoch, y, wc, ws, wss,
-       round(CAST(ws AS DOUBLE) / CAST(wc AS DOUBLE), 6) AS mean,
-       round(sqrt(CAST(wc * wss - ws * ws AS DOUBLE)
-                  / CAST(wc * (wc - 1) AS DOUBLE)), 6) AS std,
-       round((CAST(y AS DOUBLE) - CAST(ws AS DOUBLE) / CAST(wc AS DOUBLE))
-             / sqrt(CAST(wc * wss - ws * ws AS DOUBLE)
-                    / CAST(wc * (wc - 1) AS DOUBLE)), 6) AS z,
-       CAST(CASE WHEN (CAST(y AS DOUBLE)
-                       - CAST(ws AS DOUBLE) / CAST(wc AS DOUBLE))
-                      / sqrt(CAST(wc * wss - ws * ws AS DOUBLE)
-                             / CAST(wc * (wc - 1) AS DOUBLE)) > {zt}
-                 THEN 1 ELSE 0 END AS BIGINT) AS anomaly,
-       t0 AS spike_t0
-FROM stats
-WHERE t > {w}
-"""
-
-
-# --------------------------------------------------------------------------
 # Triangle counting + clustering coefficients (`triangle_count`): the
 # graph-structure primitive the spectral family (pagerank/hits/lpa)
 # doesn't touch — community density. Over the SAME pinned host graph,
@@ -9113,391 +7783,6 @@ FROM nodes
 JOIN deg d USING (node)
 LEFT JOIN tri_n tn USING (node)
 CROSS JOIN tot CROSS JOIN wedges w
-"""
-
-
-# --------------------------------------------------------------------------
-# Data-quality profile (`data_profile`): the Deequ/dbt-tests capability —
-# per-column completeness (null counts), cardinality (exact distinct),
-# the primary-key audit (uniq = distinct==n AND no nulls), numeric
-# min/max, exact integer means, and deterministic top values for
-# bounded-domain string columns ((count DESC, value ASC) argmin so ties
-# cannot drift). Profiles BOTH the documents and events tables in one
-# operator — the pre-flight audit every ingestion run gates on.
-# Column kinds: 'int' (exact mean = Σ/n of BIGINTs), 'dbl' (min/max
-# only — a double mean would have a reduce-order surface), 'top'
-# (bounded string domain), 'skip' (text — counts only).
-#
-# Scale shape: one aggregate pass per table carries every scalar stat
-# (count_distinct included — Catalyst plans the multi-distinct via
-# expand, still a single logical pass); top values are per-column
-# groupBys over bounded domains; output is |columns|-sized.
-# --------------------------------------------------------------------------
-
-_PROFILE_SPEC = (
-    (
-        "documents",
-        (
-            ("doc_id", "int"),
-            ("text", "skip"),
-            ("lang", "top"),
-            ("source", "top"),
-            ("n_chars", "int"),
-        ),
-    ),
-    (
-        "events",
-        (
-            ("event_id", "int"),
-            ("user_id", "int"),
-            ("event_type", "top"),
-            ("value", "dbl"),
-            ("props", "top"),
-        ),
-    ),
-)
-
-
-def q_data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    frames = []
-    for table, cols in _PROFILE_SPEC:
-        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-        aggs = [F.count(F.lit(1)).cast("long").alias("n")]
-        for c, kind in cols:
-            aggs.append(
-                F.sum(F.col(c).isNull().cast("long"))
-                .cast("long")
-                .alias(f"null_{c}")
-            )
-            aggs.append(
-                F.count_distinct(F.col(c)).cast("long").alias(f"nd_{c}")
-            )
-            if kind in ("int", "dbl"):
-                aggs.append(F.min(c).cast("double").alias(f"mn_{c}"))
-                aggs.append(F.max(c).cast("double").alias(f"mx_{c}"))
-            if kind == "int":
-                aggs.append(F.sum(c).cast("long").alias(f"sum_{c}"))
-        stats = df.agg(*aggs).localCheckpoint(eager=True)
-        for c, kind in cols:
-            num_null = F.lit(None).cast("double")
-            row = stats.select(
-                F.lit(table).alias("table_name"),
-                F.lit(c).alias("column_name"),
-                F.col("n"),
-                F.col(f"null_{c}").alias("n_null"),
-                F.col(f"nd_{c}").alias("n_distinct"),
-                (
-                    (F.col(f"nd_{c}") == F.col("n"))
-                    & (F.col(f"null_{c}") == 0)
-                )
-                .cast("long")
-                .alias("uniq"),
-                (
-                    F.round(F.col(f"mn_{c}"), 6)
-                    if kind in ("int", "dbl")
-                    else num_null
-                ).alias("min_num"),
-                (
-                    F.round(F.col(f"mx_{c}"), 6)
-                    if kind in ("int", "dbl")
-                    else num_null
-                ).alias("max_num"),
-                (
-                    F.round(
-                        F.col(f"sum_{c}").cast("double")
-                        / F.col("n").cast("double"),
-                        6,
-                    )
-                    if kind == "int"
-                    else num_null
-                ).alias("mean_num"),
-            )
-            if kind == "top":
-                top = (
-                    df.groupBy(F.col(c).cast("string").alias("v"))
-                    .agg(F.count("*").cast("long").alias("cnt"))
-                    .agg(
-                        F.min(
-                            F.struct(
-                                (-F.col("cnt")).alias("negc"),
-                                F.col("v").alias("v"),
-                            )
-                        ).alias("s")
-                    )
-                    .select(
-                        F.col("s.v").alias("top_value"),
-                        (-F.col("s.negc")).cast("long").alias("top_count"),
-                    )
-                )
-                row = row.crossJoin(F.broadcast(top))
-            else:
-                row = row.select(
-                    "*",
-                    F.lit(None).cast("string").alias("top_value"),
-                    F.lit(None).cast("long").alias("top_count"),
-                )
-            frames.append(row)
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
-
-
-def _sql_data_profile() -> str:
-    selects = []
-    for table, cols in _PROFILE_SPEC:
-        for c, kind in cols:
-            if kind in ("int", "dbl"):
-                mn = f"round(CAST(min({c}) AS DOUBLE), 6)"
-                mx = f"round(CAST(max({c}) AS DOUBLE), 6)"
-            else:
-                mn = mx = "CAST(NULL AS DOUBLE)"
-            mean = (
-                f"round(CAST(sum({c}) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)"
-                if kind == "int"
-                else "CAST(NULL AS DOUBLE)"
-            )
-            if kind == "top":
-                top_v = (
-                    f"(SELECT v FROM (SELECT CAST({c} AS VARCHAR) AS v,"
-                    f" count(*) AS cnt FROM {table} GROUP BY 1"
-                    f" ORDER BY cnt DESC, v LIMIT 1))"
-                )
-                top_c = (
-                    f"(SELECT CAST(cnt AS BIGINT) FROM (SELECT"
-                    f" CAST({c} AS VARCHAR) AS v, count(*) AS cnt"
-                    f" FROM {table} GROUP BY 1 ORDER BY cnt DESC, v LIMIT 1))"
-                )
-            else:
-                top_v = "CAST(NULL AS VARCHAR)"
-                top_c = "CAST(NULL AS BIGINT)"
-            selects.append(
-                f"""SELECT '{table}' AS table_name, '{c}' AS column_name,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_null,
-       CAST(count(DISTINCT {c}) AS BIGINT) AS n_distinct,
-       CAST(CASE WHEN count(DISTINCT {c}) = count(*)
-                  AND sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) = 0
-                 THEN 1 ELSE 0 END AS BIGINT) AS uniq,
-       {mn} AS min_num,
-       {mx} AS max_num,
-       {mean} AS mean_num,
-       {top_v} AS top_value,
-       {top_c} AS top_count
-FROM {table}"""
-            )
-    return "\nUNION ALL\n".join(selects)
-
-
-# --------------------------------------------------------------------------
-# Skyline / Pareto frontier (`skyline`): the classic database operator
-# (Börzsönyi et al. ICDE 2001) — the set of documents not strictly
-# dominated on (x = n_chars, y = distinct-token count): a point is
-# dominated iff some other point beats it on BOTH dimensions. The
-# textbook formulation is a quadratic NOT EXISTS self-join; the
-# scale-honest plan used here exploits the bounded y-domain (≤ 31 for
-# this corpus; any discretized dimension works the same way at 100 TB):
-# per-y maxima M₀(y) = max{x : points at y} fold into the threshold
-# curve M(y) = max{x' : y' > y} over the ≤|Y|² level table, and a point
-# is dominated iff x < M(y) — one map-side agg + one broadcast join,
-# never a self-join of the corpus. All-BIGINT (zero rounding surface).
-#
-# The DuckDB oracle runs the literal quadratic NOT EXISTS definition —
-# so the hash equality PROVES the threshold-curve plan computes the
-# textbook skyline on data.
-# --------------------------------------------------------------------------
-
-
-def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = F.regexp_extract_all(
-        F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0
-    )
-    p = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.col("n_chars").cast("long").alias("x"),
-        F.size(F.array_distinct(toks)).cast("long").alias("y"),
-    )
-    per_y = p.groupBy("y").agg(F.max("x").alias("mx"))
-    thresh = (
-        per_y.alias("a")
-        .join(per_y.alias("b"), F.col("b.y") > F.col("a.y"), "left")
-        .groupBy(F.col("a.y").alias("y"))
-        .agg(F.max(F.col("b.mx")).alias("m"))
-    )
-    out = p.join(F.broadcast(thresh), "y")
-    dominated = F.when(
-        F.col("m").isNotNull() & (F.col("x") < F.col("m")), F.lit(1)
-    ).otherwise(F.lit(0))
-    flagged = out.select(
-        "doc_id", "x", "y", dominated.cast("long").alias("dominated")
-    )
-    nsky = flagged.agg(
-        F.sum(1 - F.col("dominated")).cast("long").alias("n_skyline")
-    )
-    return flagged.crossJoin(F.broadcast(nsky)).select(
-        "doc_id",
-        "x",
-        "y",
-        "dominated",
-        (1 - F.col("dominated")).cast("long").alias("skyline"),
-        "n_skyline",
-    )
-
-
-def _sql_skyline() -> str:
-    return f"""
-WITH p AS MATERIALIZED (
-  SELECT doc_id, CAST(n_chars AS BIGINT) AS x,
-         CAST(len(list_distinct(
-             regexp_extract_all(lower(text), '{_TOKEN_PATTERN}')))
-           AS BIGINT) AS y
-  FROM documents
-), flagged AS MATERIALIZED (
-  -- the literal quadratic definition: dominated iff a strictly-better
-  -- point exists on BOTH dims (the Spark side uses the bounded-domain
-  -- threshold curve; hash equality proves the equivalence on data)
-  SELECT a.doc_id, a.x, a.y,
-         CAST(CASE WHEN EXISTS (
-             SELECT 1 FROM p b WHERE b.x > a.x AND b.y > a.y)
-           THEN 1 ELSE 0 END AS BIGINT) AS dominated
-  FROM p a
-)
-SELECT doc_id, x, y, dominated,
-       CAST(1 - dominated AS BIGINT) AS skyline,
-       (SELECT CAST(sum(1 - dominated) AS BIGINT) FROM flagged)
-         AS n_skyline
-FROM flagged
-"""
-
-
-# --------------------------------------------------------------------------
-# RFM segmentation (`rfm_segments`): the classic customer-value
-# segmentation (Hughes 1994) — per user over purchase events: Recency =
-# exact integer days from last purchase to the corpus horizon, Frequency
-# = purchase count, Monetary = Σ round(value·100) in exact BIGINT cents.
-# Each dimension quintile-scores 1..5 by EXACT global rank (score =
-# ceil(5·rank/n); R ranks ascending — 5 = most recent; F and M rank
-# descending via negation — 5 = highest), and the three digits
-# concatenate into the segment label. ZERO doubles anywhere — ranks,
-# ceil-division and labels are all integer/string (the cusum exactness
-# class).
-#
-# Scale shape: one filtered scan → per-user min/max/count/sum (map-side
-# combinable); three range-partitioned exact_global_rank passes over the
-# |users| frame (the audited no-single-partition-window path); the
-# horizon rides a broadcast 1-row agg.
-# --------------------------------------------------------------------------
-
-
-def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import exact_global_rank
-
-    um = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-    )
-    ev = (
-        _events(spark, sf_dir)
-        .filter(F.col("event_type") == RET_EVENT)
-        .select(
-            "user_id",
-            um.alias("um"),
-            F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
-        )
-    )
-    per = ev.groupBy("user_id").agg(
-        F.max("um").alias("last_um"),
-        F.count("*").cast("long").alias("freq"),
-        F.sum("cents").cast("long").alias("monetary"),
-    )
-    horizon = ev.agg(F.max("um").alias("hz"))
-    # pinned (round 7): base feeds the three score rank calls AND the
-    # output join — each re-ran the per-user aggregation corpus chain
-    # without the pin (4 corpus scans -> 1); four numeric columns
-    base = (
-        per.crossJoin(F.broadcast(horizon))
-        .select(
-            "user_id",
-            F.expr(f"cast((hz - last_um) div {_DAY_US} as bigint)").alias(
-                "recency_days"
-            ),
-            "freq",
-            "monetary",
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    def score(df: DataFrame, col: str, desc: bool, out: str) -> DataFrame:
-        src = df.withColumn("_k", -F.col(col) if desc else F.col(col))
-        r = exact_global_rank(src, "_k", ("user_id",))
-        return r.select(
-            "user_id",
-            F.ceil(5 * F.col("global_rank") / F.col("global_count"))
-            .cast("long")
-            .alias(out),
-        )
-
-    rs = score(base, "recency_days", False, "r_score")
-    fs = score(base, "freq", True, "f_score")
-    ms = score(base, "monetary", True, "m_score")
-    return (
-        base.join(rs, "user_id")
-        .join(fs, "user_id")
-        .join(ms, "user_id")
-        .select(
-            "user_id",
-            "recency_days",
-            "freq",
-            "monetary",
-            "r_score",
-            "f_score",
-            "m_score",
-            F.concat(
-                F.col("r_score").cast("string"),
-                F.col("f_score").cast("string"),
-                F.col("m_score").cast("string"),
-            ).alias("segment"),
-        )
-    )
-
-
-def _sql_rfm_segments() -> str:
-    return f"""
-WITH ev AS (
-  SELECT user_id, epoch_us(ts) AS um,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events WHERE event_type = {_sql_quote(RET_EVENT)}
-), per AS MATERIALIZED (
-  SELECT user_id, max(um) AS last_um,
-         CAST(count(*) AS BIGINT) AS freq,
-         CAST(sum(cents) AS BIGINT) AS monetary
-  FROM ev GROUP BY user_id
-), hz AS (
-  SELECT max(um) AS hz FROM ev
-), base AS MATERIALIZED (
-  SELECT user_id,
-         CAST((hz.hz - per.last_um) // {_DAY_US} AS BIGINT)
-           AS recency_days,
-         freq, monetary
-  FROM per CROSS JOIN hz
-), scored AS (
-  SELECT user_id, recency_days, freq, monetary,
-         CAST(ceil(5.0 * row_number()
-                     OVER (ORDER BY recency_days, user_id)
-                   / count(*) OVER ()) AS BIGINT) AS r_score,
-         CAST(ceil(5.0 * row_number()
-                     OVER (ORDER BY -freq, user_id)
-                   / count(*) OVER ()) AS BIGINT) AS f_score,
-         CAST(ceil(5.0 * row_number()
-                     OVER (ORDER BY -monetary, user_id)
-                   / count(*) OVER ()) AS BIGINT) AS m_score
-  FROM base
-)
-SELECT user_id, recency_days, freq, monetary,
-       r_score, f_score, m_score,
-       CAST(r_score AS VARCHAR) || CAST(f_score AS VARCHAR)
-         || CAST(m_score AS VARCHAR) AS segment
-FROM scored
 """
 
 
@@ -9689,1449 +7974,6 @@ JOIN nprev np ON np.scope = a0.scope
 
 
 # --------------------------------------------------------------------------
-# Multi-touch attribution (`attribution`): the martech credit-assignment
-# triple — for each purchase, the user's clicks in the trailing
-# ATTR_WINDOW get credit under three models: first-touch (earliest
-# click), last-touch (latest click at-or-before the purchase), and
-# linear (1/k to each of the k touchpoints). Channel = the click's
-# props payload (a 100-value domain). The sequential-causality shape
-# `event_funnel` (fixed step order) and `asof_events` (single nearest
-# match) don't cover: ALL touchpoints in a window share credit.
-#
-# Exactness: first/last resolve by the exact (t_click, event_id) key
-# (Spark struct-min/max == DuckDB row_number on the same key); linear
-# credits are 1/k doubles folded in pinned (conv, click) order
-# (list_sum ORDER BY twin). Counts BIGINT.
-#
-# Scale shape: the touch join is a user-keyed equi-join with the window
-# predicate applied AT the join (the asof_events discipline — time
-# bounds prune before any per-conversion work); per-conversion k is a
-# map-side-combinable count; per-channel rollups are summary-sized.
-# --------------------------------------------------------------------------
-
-ATTR_WINDOW_S = 7 * 86400
-
-
-def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wu = ATTR_WINDOW_S * 1_000_000
-    um = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-    )
-    ev = _events(spark, sf_dir).select(
-        "user_id", "event_type", "event_id", "props", um.alias("um")
-    )
-    buys = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("event_id").alias("conv_id"),
-        F.col("um").alias("t_conv"),
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.col("um").alias("t_click"),
-        F.col("props").alias("channel"),
-    )
-    touch = (
-        buys.join(clicks, "user_id")
-        .filter(
-            (F.col("t_click") <= F.col("t_conv"))
-            & (F.col("t_click") > F.col("t_conv") - wu)
-        )
-        .localCheckpoint(eager=True)
-    )
-    kf = touch.groupBy("conv_id").agg(F.count("*").cast("long").alias("k"))
-    ends = touch.groupBy("conv_id").agg(
-        F.min(F.struct("t_click", "click_id", "channel")).alias("fs"),
-        F.max(F.struct("t_click", "click_id", "channel")).alias("ls"),
-    )
-    first_n = (
-        ends.select(F.col("fs.channel").alias("channel"))
-        .groupBy("channel")
-        .agg(F.count("*").cast("long").alias("first_n"))
-    )
-    last_n = (
-        ends.select(F.col("ls.channel").alias("channel"))
-        .groupBy("channel")
-        .agg(F.count("*").cast("long").alias("last_n"))
-    )
-    linear = (
-        # no broadcast hint: kf is |conversions|-sized (grows with the
-        # corpus) — the conv_id equi-join co-partitions under AQE
-        touch.join(kf, "conv_id")
-        .select(
-            "channel",
-            "conv_id",
-            "click_id",
-            (F.lit(1.0) / F.col("k").cast("double")).alias("credit"),
-        )
-        .groupBy("channel")
-        .agg(
-            F.aggregate(
-                F.sort_array(
-                    F.collect_list(F.struct("conv_id", "click_id", "credit"))
-                ),
-                F.lit(0.0),
-                lambda acc, e: acc + e["credit"],
-            ).alias("linear_credit"),
-            F.count("*").cast("long").alias("touches"),
-        )
-    )
-    tot = buys.agg(
-        F.count("*").cast("long").alias("n_conversions")
-    ).crossJoin(
-        F.broadcast(
-            touch.agg(
-                F.count_distinct("conv_id").cast("long").alias("n_attributed")
-            )
-        )
-    )
-    return (
-        linear.join(first_n, "channel", "left")
-        .join(last_n, "channel", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "channel",
-            F.coalesce("first_n", F.lit(0)).cast("long").alias("first_n"),
-            F.coalesce("last_n", F.lit(0)).cast("long").alias("last_n"),
-            F.round("linear_credit", 6).alias("linear_credit"),
-            "touches",
-            "n_conversions",
-            "n_attributed",
-        )
-    )
-
-
-def _sql_attribution() -> str:
-    wu = ATTR_WINDOW_S * 1_000_000
-    return f"""
-WITH buys AS (
-  SELECT user_id, event_id AS conv_id, epoch_us(ts) AS t_conv
-  FROM events WHERE event_type = 'purchase'
-), clicks AS (
-  SELECT user_id, event_id AS click_id, epoch_us(ts) AS t_click,
-         props AS channel
-  FROM events WHERE event_type = 'click'
-), touch AS MATERIALIZED (
-  SELECT b.conv_id, c.click_id, c.t_click, c.channel
-  FROM buys b JOIN clicks c USING (user_id)
-  WHERE c.t_click <= b.t_conv AND c.t_click > b.t_conv - {wu}
-), kf AS (
-  SELECT conv_id, CAST(count(*) AS BIGINT) AS k FROM touch GROUP BY conv_id
-), ordered AS (
-  SELECT conv_id, channel,
-         row_number() OVER (PARTITION BY conv_id
-                            ORDER BY t_click, click_id) AS rn_first,
-         row_number() OVER (PARTITION BY conv_id
-                            ORDER BY t_click DESC, click_id DESC)
-           AS rn_last
-  FROM touch
-), first_n AS (
-  SELECT channel, CAST(count(*) AS BIGINT) AS first_n
-  FROM ordered WHERE rn_first = 1 GROUP BY channel
-), last_n AS (
-  SELECT channel, CAST(count(*) AS BIGINT) AS last_n
-  FROM ordered WHERE rn_last = 1 GROUP BY channel
-), linear AS MATERIALIZED (
-  SELECT t.channel,
-         list_sum(list(1.0 / CAST(k.k AS DOUBLE)
-                       ORDER BY t.conv_id, t.click_id)) AS linear_credit,
-         CAST(count(*) AS BIGINT) AS touches
-  FROM touch t JOIN kf k USING (conv_id)
-  GROUP BY t.channel
-), tot AS (
-  SELECT (SELECT CAST(count(*) AS BIGINT) FROM buys) AS n_conversions,
-         (SELECT CAST(count(DISTINCT conv_id) AS BIGINT) FROM touch)
-           AS n_attributed
-)
-SELECT l.channel,
-       CAST(coalesce(f.first_n, 0) AS BIGINT) AS first_n,
-       CAST(coalesce(ln.last_n, 0) AS BIGINT) AS last_n,
-       round(l.linear_credit, 6) AS linear_credit,
-       l.touches,
-       tot.n_conversions, tot.n_attributed
-FROM linear l
-LEFT JOIN first_n f ON f.channel = l.channel
-LEFT JOIN last_n ln ON ln.channel = l.channel
-CROSS JOIN tot
-"""
-
-
-# --------------------------------------------------------------------------
-# Kaplan-Meier survival estimator (`kaplan_meier`): the right-censored
-# time-to-event curve (Kaplan & Meier 1958) — the churn/retention-
-# duration analysis the cohort_retention matrix doesn't give (KM handles
-# CENSORING: users still active at the horizon contribute risk time
-# without biasing the curve). Subjects = users with ≥1 purchase; t0/t1 =
-# first/last purchase day; a user CHURNS iff the horizon is more than
-# KM_GAP_DAYS past their last purchase (duration t1−t0), else is
-# censored at H−t0 (probed: 3/31/256 churners at sf0.001/0.01/0.1 — both
-# branches live everywhere). S(t) = Π_{t_i ≤ t} (1 − d_i/n_i) over
-# distinct churn times; at-risk counts n_i follow the standard
-# censored-after-event tie convention (duration ≥ t_i).
-#
-# Exactness: n/d are BIGINT; each q_i = 1 − d_i/n_i is one division of
-# identical integers (bit-identical), and the survival product folds in
-# pinned time order (Spark sorted-array fold == DuckDB recursive CTE —
-# the holt discipline), so S agrees to the last ulp; 6dp margins pytest.
-#
-# Scale shape: per-user spans are one map-side-combinable agg; the
-# event-time table is bounded (≤ |days| rows, broadcast against the
-# subject frame for at-risk counts); the fold runs over that summary.
-# --------------------------------------------------------------------------
-
-KM_GAP_DAYS = 3
-
-
-def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    day = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-        f" div {_DAY_US}"
-    )
-    per = (
-        _events(spark, sf_dir)
-        .filter(F.col("event_type") == RET_EVENT)
-        .select("user_id", day.alias("d"))
-        .groupBy("user_id")
-        .agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
-    )
-    hz = per.agg(F.max("d1").alias("h"))
-    subj = per.crossJoin(F.broadcast(hz)).select(
-        "user_id",
-        F.when(
-            F.col("h") - F.col("d1") > KM_GAP_DAYS, F.col("d1") - F.col("d0")
-        )
-        .otherwise(F.col("h") - F.col("d0"))
-        .alias("dur"),
-        (F.col("h") - F.col("d1") > KM_GAP_DAYS).cast("long").alias("ev"),
-    ).localCheckpoint(eager=True)
-    times = (
-        subj.filter(F.col("ev") == 1)
-        .select(F.col("dur").alias("t"))
-        .distinct()
-    )
-    stats = (
-        subj.crossJoin(F.broadcast(times))
-        .groupBy("t")
-        .agg(
-            F.sum((F.col("dur") >= F.col("t")).cast("long"))
-            .cast("long")
-            .alias("n_risk"),
-            F.sum(
-                ((F.col("dur") == F.col("t")) & (F.col("ev") == 1)).cast(
-                    "long"
-                )
-            )
-            .cast("long")
-            .alias("d"),
-        )
-    )
-    folded = stats.agg(
-        F.sort_array(F.collect_list(F.struct("t", "n_risk", "d"))).alias("a")
-    ).select(
-        "a",
-        F.aggregate(
-            F.col("a"),
-            F.named_struct(
-                F.lit("s"),
-                F.lit(1.0),
-                F.lit("ss"),
-                F.array().cast("array<double>"),
-            ),
-            lambda acc, e: F.named_struct(
-                F.lit("s"),
-                acc["s"]
-                * (
-                    F.lit(1.0)
-                    - e["d"].cast("double") / e["n_risk"].cast("double")
-                ),
-                F.lit("ss"),
-                F.concat(
-                    acc["ss"],
-                    F.array(
-                        acc["s"]
-                        * (
-                            F.lit(1.0)
-                            - e["d"].cast("double")
-                            / e["n_risk"].cast("double")
-                        )
-                    ),
-                ),
-            ),
-        )["ss"].alias("ss"),
-    )
-    n_subj = subj.agg(
-        F.count("*").cast("long").alias("n_subjects"),
-        F.sum("ev").cast("long").alias("n_events"),
-    )
-    return (
-        folded.select(F.posexplode("a").alias("i0", "e"), "ss")
-        .select(
-            F.col("e.t").cast("long").alias("t"),
-            F.col("e.n_risk").alias("n_risk"),
-            F.col("e.d").alias("d"),
-            F.round(
-                F.lit(1.0)
-                - F.col("e.d").cast("double")
-                / F.col("e.n_risk").cast("double"),
-                6,
-            ).alias("q"),
-            F.round(F.element_at("ss", F.col("i0") + 1), 6).alias("s"),
-        )
-        .crossJoin(F.broadcast(n_subj))
-    )
-
-
-def _sql_kaplan_meier() -> str:
-    g = KM_GAP_DAYS
-    return f"""
-WITH RECURSIVE per AS (
-  SELECT user_id,
-         min(epoch_us(ts) // {_DAY_US}) AS d0,
-         max(epoch_us(ts) // {_DAY_US}) AS d1
-  FROM events WHERE event_type = {_sql_quote(RET_EVENT)}
-  GROUP BY user_id
-), hz AS (
-  SELECT max(d1) AS h FROM per
-), subj AS MATERIALIZED (
-  SELECT user_id,
-         CASE WHEN hz.h - d1 > {g} THEN d1 - d0 ELSE hz.h - d0 END AS dur,
-         CAST(CASE WHEN hz.h - d1 > {g} THEN 1 ELSE 0 END AS BIGINT) AS ev
-  FROM per CROSS JOIN hz
-), times AS (
-  SELECT DISTINCT dur AS t FROM subj WHERE ev = 1
-), stats AS MATERIALIZED (
-  SELECT t.t,
-         CAST(sum(CASE WHEN s.dur >= t.t THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_risk,
-         CAST(sum(CASE WHEN s.dur = t.t AND s.ev = 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS d
-  FROM times t CROSS JOIN subj s
-  GROUP BY t.t
-), ordered AS MATERIALIZED (
-  SELECT t, n_risk, d,
-         row_number() OVER (ORDER BY t) AS i,
-         count(*) OVER () AS ni
-  FROM stats
-), km AS (
-  SELECT i, t, n_risk, d,
-         1.0 * (1.0 - CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE)) AS s
-  FROM ordered WHERE i = 1
-  UNION ALL
-  SELECT o.i, o.t, o.n_risk, o.d,
-         km.s * (1.0 - CAST(o.d AS DOUBLE) / CAST(o.n_risk AS DOUBLE))
-  FROM km JOIN ordered o ON o.i = km.i + 1
-), nsub AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_subjects,
-         CAST(sum(ev) AS BIGINT) AS n_events
-  FROM subj
-)
-SELECT CAST(km.t AS BIGINT) AS t, km.n_risk, km.d,
-       round(1.0 - CAST(km.d AS DOUBLE) / CAST(km.n_risk AS DOUBLE), 6)
-         AS q,
-       round(km.s, 6) AS s,
-       nsub.n_subjects, nsub.n_events
-FROM km CROSS JOIN nsub
-"""
-
-
-# --------------------------------------------------------------------------
-# Benford first-digit test (`benford_test`): the forensic-accounting /
-# data-fabrication screen (Benford 1938; Nigrini's audit standard) —
-# does a value column's first significant digit follow
-# P(d) = log10(1 + 1/d)? Two scopes prove both verdicts: 'raw' (first
-# digit of the events value column — synthetic near-uniform magnitudes,
-# REJECTS) and 'benford' (a planted log-uniform sample: u =
-# md5(event_id) % 1e6 / 1e6, digit decided by comparing the EXACT
-# rational u against literal log10(d) thresholds — no pow/log at
-# runtime, so the digit is integer-decided and exactly
-# Benford-distributed up to grid resolution; CONFORMS). The raw digit
-# comes from the cents-integer's decimal string (first significant
-# digit of value — no float log10 boundary). Chi² vs expected N·p_d in
-# a generated digit-order 9-term sum; verdict at the df=8, α=0.05
-# critical value 15.507.
-#
-# Scale shape: one scan → per-(scope, digit) counts (map-side
-# combinable); everything downstream is 18 rows. Digits, counts and
-# verdicts are integer-decided; chi² uses shared literal constants.
-# --------------------------------------------------------------------------
-
-import math as _math
-
-BENFORD_P = {d: _math.log10(1 + 1 / d) for d in range(1, 10)}
-BENFORD_T = {d: _math.log10(d) for d in range(2, 10)}
-BENFORD_CRIT = 15.507  # chi2 df=8, alpha=0.05
-_BENFORD_GRID = 1_000_000
-
-
-def q_benford_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cents = F.round(F.col("value") * 100, 0).cast("long")
-    raw_digit = F.substring(cents.cast("string"), 1, 1).cast("long")
-    u = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("bf"), F.col("event_id")), _BENFORD_GRID
-    ).cast("double") / F.lit(float(_BENFORD_GRID))
-    syn_digit = F.lit(9)
-    for d in range(9, 1, -1):
-        syn_digit = F.when(u < F.lit(BENFORD_T[d]), F.lit(d - 1)).otherwise(
-            syn_digit
-        )
-    uni_digit = (
-        _md5_bucket_spark(
-            F.concat_ws("|", F.lit("bu"), F.col("event_id")), 9
-        )
-        + 1
-    )
-    ev = _events(spark, sf_dir).filter(F.col("value") > 0)
-    # ONE corpus scan (round 7, guide §2.4): the three scope projections
-    # become one inline-exploded array of (scope, digit) structs — the
-    # exact row multiset of the 3-way union they replace
-    rows = ev.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("raw").alias("scope"), raw_digit.alias("digit")
-                ),
-                F.struct(
-                    F.lit("benford").alias("scope"),
-                    syn_digit.cast("long").alias("digit"),
-                ),
-                F.struct(
-                    F.lit("uniform").alias("scope"),
-                    uni_digit.cast("long").alias("digit"),
-                ),
-            )
-        ).alias("t")
-    ).select(F.col("t.scope").alias("scope"), F.col("t.digit").alias("digit"))
-    cnt = rows.groupBy("scope", "digit").agg(
-        F.count("*").cast("long").alias("observed")
-    )
-    grid = spark.createDataFrame(
-        [(s, d) for s in ("raw", "benford", "uniform") for d in range(1, 10)],
-        "scope string, digit long",
-    )
-    filled = grid.join(cnt, ["scope", "digit"], "left").select(
-        "scope",
-        "digit",
-        F.coalesce("observed", F.lit(0)).cast("long").alias("observed"),
-    )
-    tot = filled.groupBy("scope").agg(
-        F.sum("observed").cast("long").alias("n")
-    )
-    pmap = F.element_at(
-        F.array(*[F.lit(BENFORD_P[d]) for d in range(1, 10)]),
-        F.col("digit").cast("int"),
-    )
-    base = filled.join(F.broadcast(tot), "scope").select(
-        "scope",
-        "digit",
-        "observed",
-        "n",
-        pmap.alias("p_benford"),
-        (F.col("n").cast("double") * pmap).alias("expected"),
-    )
-    chi2 = base.groupBy("scope").agg(
-        F.aggregate(
-            F.sort_array(
-                F.collect_list(F.struct("digit", "observed", "expected"))
-            ),
-            F.lit(0.0),
-            lambda acc, e: acc
-            + (e["observed"].cast("double") - e["expected"])
-            * (e["observed"].cast("double") - e["expected"])
-            / e["expected"],
-        ).alias("chi2")
-    )
-    return base.join(F.broadcast(chi2), "scope").select(
-        "scope",
-        "digit",
-        "observed",
-        F.round("expected", 6).alias("expected"),
-        F.round("p_benford", 6).alias("p_benford"),
-        F.round("chi2", 6).alias("chi2"),
-        F.when(F.col("chi2") > BENFORD_CRIT, F.lit("reject"))
-        .otherwise(F.lit("conform"))
-        .alias("verdict"),
-    )
-
-
-def _sql_benford_test() -> str:
-    u = _md5_bucket_sql(
-        "'bf' || '|' || CAST(event_id AS VARCHAR)", _BENFORD_GRID
-    )
-    uni = _md5_bucket_sql("'bu' || '|' || CAST(event_id AS VARCHAR)", 9)
-    syn = "9"
-    for d in range(9, 1, -1):
-        syn = (
-            f"CASE WHEN uu < {BENFORD_T[d]!r} THEN {d - 1} ELSE {syn} END"
-        )
-    parr = ", ".join(repr(BENFORD_P[d]) for d in range(1, 10))
-    return f"""
-WITH ev AS (
-  SELECT event_id, value FROM events WHERE value > 0
-), rows_ AS (
-  SELECT 'raw' AS scope,
-         CAST(substr(CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR),
-                     1, 1) AS BIGINT) AS digit
-  FROM ev
-  UNION ALL
-  SELECT 'benford' AS scope, CAST(({syn}) AS BIGINT) AS digit
-  FROM (SELECT CAST({u} AS DOUBLE) / {float(_BENFORD_GRID)} AS uu FROM ev)
-  UNION ALL
-  SELECT 'uniform' AS scope, CAST({uni} + 1 AS BIGINT) AS digit FROM ev
-), cnt AS (
-  SELECT scope, digit, CAST(count(*) AS BIGINT) AS observed
-  FROM rows_ GROUP BY scope, digit
-), grid AS (
-  SELECT s.scope, CAST(d.d AS BIGINT) AS digit
-  FROM (SELECT unnest(['raw', 'benford', 'uniform']) AS scope) s
-  CROSS JOIN (SELECT unnest(range(1, 10)) AS d) d
-), filled AS (
-  SELECT g.scope, g.digit,
-         CAST(coalesce(c.observed, 0) AS BIGINT) AS observed
-  FROM grid g LEFT JOIN cnt c ON c.scope = g.scope AND c.digit = g.digit
-), tot AS (
-  SELECT scope, CAST(sum(observed) AS BIGINT) AS n FROM filled GROUP BY scope
-), base AS MATERIALIZED (
-  SELECT f.scope, f.digit, f.observed, t.n,
-         CAST(([{parr}])[CAST(f.digit AS INTEGER)] AS DOUBLE) AS p_benford,
-         CAST(t.n AS DOUBLE)
-           * CAST(([{parr}])[CAST(f.digit AS INTEGER)] AS DOUBLE)
-           AS expected
-  FROM filled f JOIN tot t USING (scope)
-), chi2 AS (
-  SELECT scope,
-         list_sum(list(
-           (CAST(observed AS DOUBLE) - expected)
-           * (CAST(observed AS DOUBLE) - expected) / expected
-           ORDER BY digit)) AS chi2
-  FROM base GROUP BY scope
-)
-SELECT b.scope, b.digit, b.observed,
-       round(b.expected, 6) AS expected,
-       round(b.p_benford, 6) AS p_benford,
-       round(c.chi2, 6) AS chi2,
-       CASE WHEN c.chi2 > {BENFORD_CRIT} THEN 'reject'
-            ELSE 'conform' END AS verdict
-FROM base b JOIN chi2 c USING (scope)
-"""
-
-
-# --------------------------------------------------------------------------
-# Window-function family parity (`window_funcs`): the full ANSI ranking/
-# navigation toolbox in one operator — row_number, rank, dense_rank,
-# percent_rank, cume_dist, ntile, lag/lead, nth_value, first/last_value
-# — over tie-RICH partitions (order key = md5 grade 0..4, so rank vs
-# dense_rank genuinely diverge and percent_rank/cume_dist exercise tie
-# semantics). Ranking functions order by the tying key alone (standard
-# tie semantics, identical in both engines); navigation functions order
-# by (k, doc_id) with an explicit unbounded frame so every value is
-# deterministic. percent_rank/cume_dist are single divisions of exact
-# integers.
-#
-# Scale shape: one window pass PARTITIONED by source (bounded 25-doc
-# groups — never a single-partition window); at 100 TB this is the
-# WindowExec-per-partition shape every BI layer emits.
-# --------------------------------------------------------------------------
-
-
-def q_window_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    k = _md5_bucket_spark(F.concat_ws("|", F.lit("wf"), F.col("doc_id")), 5)
-    base = _docs(spark, sf_dir).select("source", "doc_id", k.alias("k"))
-    wt = Window.partitionBy("source").orderBy("k")  # ties allowed
-    wd = Window.partitionBy("source").orderBy("k", "doc_id")
-    wf = wd.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    return base.select(
-        "source",
-        "doc_id",
-        "k",
-        F.row_number().over(wd).cast("long").alias("rn"),
-        F.rank().over(wt).cast("long").alias("rnk"),
-        F.dense_rank().over(wt).cast("long").alias("drnk"),
-        F.round(F.percent_rank().over(wt), 6).alias("pr"),
-        F.round(F.cume_dist().over(wt), 6).alias("cd"),
-        F.ntile(4).over(wd).cast("long").alias("nt"),
-        F.lag("doc_id", 1).over(wd).cast("long").alias("lag_id"),
-        F.lead("doc_id", 1).over(wd).cast("long").alias("lead_id"),
-        F.nth_value("doc_id", 3).over(wf).cast("long").alias("nth3"),
-        F.first("doc_id").over(wf).cast("long").alias("first_id"),
-        F.last("doc_id").over(wf).cast("long").alias("last_id"),
-    )
-
-
-def _sql_window_funcs() -> str:
-    k = _md5_bucket_sql("'wf' || '|' || CAST(doc_id AS VARCHAR)", 5)
-    return f"""
-WITH base AS (
-  SELECT source, doc_id, {k} AS k FROM documents
-)
-SELECT source, doc_id, k,
-       CAST(row_number() OVER wd AS BIGINT) AS rn,
-       CAST(rank() OVER wt AS BIGINT) AS rnk,
-       CAST(dense_rank() OVER wt AS BIGINT) AS drnk,
-       round(percent_rank() OVER wt, 6) AS pr,
-       round(cume_dist() OVER wt, 6) AS cd,
-       CAST(ntile(4) OVER wd AS BIGINT) AS nt,
-       CAST(lag(doc_id, 1) OVER wd AS BIGINT) AS lag_id,
-       CAST(lead(doc_id, 1) OVER wd AS BIGINT) AS lead_id,
-       CAST(nth_value(doc_id, 3) OVER wf AS BIGINT) AS nth3,
-       CAST(first_value(doc_id) OVER wf AS BIGINT) AS first_id,
-       CAST(last_value(doc_id) OVER wf AS BIGINT) AS last_id
-FROM base
-WINDOW wt AS (PARTITION BY source ORDER BY k),
-       wd AS (PARTITION BY source ORDER BY k, doc_id),
-       wf AS (PARTITION BY source ORDER BY k, doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-"""
-
-
-# --------------------------------------------------------------------------
-# Classical seasonal decomposition (`seasonal_decompose`): the additive
-# moving-average decompose (Macaulay 1931; statsmodels' `seasonal_
-# decompose`) — y = trend + seasonal + residual over the dense hourly
-# series with period 24. Completes the time-series suite: holt forecasts,
-# seasonal_mase evaluates, cusum/rolling_anomaly detect, THIS explains.
-# The even period uses the standard 2×24 centered MA — computed as the
-# SUM of two offset 24-hour BIGINT window sums (trend = strend/48, one
-# division); detrended values stay integer as d48 = 48·y − strend;
-# per-hour-of-day seasonal means are BIGINT ratios; only the seasonal
-# CENTERING (mean of the 24 raw seasonals) is a genuine float sum — it
-# folds in pinned hour order (list_sum ORDER BY twin). Residual = y −
-# trend − seasonal in fixed expression order.
-#
-# Scale shape: one hourly agg; window sums over the bounded series; the
-# hour-of-day aggregation is 24 groups; everything downstream is
-# summary-sized.
-# --------------------------------------------------------------------------
-
-SD_PERIOD = 24
-
-
-def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = SD_PERIOD
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias("h")
-    )
-    cnt = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count("*").alias("c")
-    )
-    w = Window.orderBy("h")
-    ser = (
-        grid.join(cnt, "h", "left")
-        .select("h", F.coalesce("c", F.lit(0)).cast("long").alias("y"))
-        .select(
-            "h", "y", F.row_number().over(w).cast("long").alias("t")
-        )
-    )
-    # single-partition windows are safe ONLY because they sit ABOVE the
-    # hourly-count aggregation — the frame is the bounded |hours| series,
-    # never the corpus (the mixture_plan/ADVICE-r05 discipline)
-    wt = Window.orderBy("t")
-    half = p // 2
-    s1 = F.sum("y").over(wt.rowsBetween(-half, half - 1))
-    s2 = F.sum("y").over(wt.rowsBetween(-(half - 1), half))
-    c1 = F.count("y").over(wt.rowsBetween(-half, half - 1))
-    c2 = F.count("y").over(wt.rowsBetween(-(half - 1), half))
-    wins = ser.select(
-        "h",
-        "t",
-        "y",
-        (s1 + s2).cast("long").alias("strend"),
-        (c1 + c2).cast("long").alias("wcnt"),
-        ((F.col("t") - 1) % p).cast("long").alias("hod"),
-    ).filter(F.col("wcnt") == 2 * p)
-    valid = wins.localCheckpoint(eager=True)
-    sea = valid.groupBy("hod").agg(
-        F.sum(2 * p * F.col("y") - F.col("strend"))
-        .cast("long")
-        .alias("s_num"),
-        F.count("*").cast("long").alias("s_cnt"),
-    )
-    raw_seasonal = F.col("s_num").cast("double") / (
-        F.lit(float(2 * p)) * F.col("s_cnt").cast("double")
-    )
-    sea2 = sea.select("hod", "s_num", "s_cnt", raw_seasonal.alias("sraw"))
-    center = sea2.agg(
-        (
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("hod", "sraw"))),
-                F.lit(0.0),
-                lambda a, e: a + e["sraw"],
-            )
-            / F.count("*").cast("double")
-        ).alias("center")
-    )
-    sea3 = sea2.crossJoin(F.broadcast(center)).select(
-        "hod",
-        "s_num",
-        "s_cnt",
-        (F.col("sraw") - F.col("center")).alias("seasonal"),
-    )
-    trend = F.col("strend").cast("double") / F.lit(float(2 * p))
-    return valid.join(F.broadcast(sea3), "hod").select(
-        "t",
-        F.unix_timestamp("h").alias("epoch"),
-        "y",
-        "hod",
-        "strend",
-        F.round(trend, 6).alias("trend"),
-        F.round("seasonal", 6).alias("seasonal"),
-        F.round(
-            F.col("y").cast("double") - trend - F.col("seasonal"), 6
-        ).alias("resid"),
-    )
-
-
-def _sql_seasonal_decompose() -> str:
-    p = SD_PERIOD
-    half = p // 2
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser AS MATERIALIZED (
-  SELECT row_number() OVER (ORDER BY g.h) AS t, g.h,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS y
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), wins AS MATERIALIZED (
-  SELECT t, h, y,
-         CAST(sum(y) OVER w1 + sum(y) OVER w2 AS BIGINT) AS strend,
-         CAST(count(y) OVER w1 + count(y) OVER w2 AS BIGINT) AS wcnt,
-         CAST((t - 1) % {p} AS BIGINT) AS hod
-  FROM ser
-  WINDOW w1 AS (ORDER BY t ROWS BETWEEN {half} PRECEDING
-                AND {half - 1} FOLLOWING),
-         w2 AS (ORDER BY t ROWS BETWEEN {half - 1} PRECEDING
-                AND {half} FOLLOWING)
-), valid AS MATERIALIZED (
-  SELECT * FROM wins WHERE wcnt = {2 * p}
-), sea AS MATERIALIZED (
-  SELECT hod,
-         CAST(sum({2 * p} * y - strend) AS BIGINT) AS s_num,
-         CAST(count(*) AS BIGINT) AS s_cnt
-  FROM valid GROUP BY hod
-), sea2 AS MATERIALIZED (
-  SELECT hod, s_num, s_cnt,
-         CAST(s_num AS DOUBLE) / ({float(2 * p)} * CAST(s_cnt AS DOUBLE))
-           AS sraw
-  FROM sea
-), center AS (
-  SELECT list_sum(list(sraw ORDER BY hod)) / CAST(count(*) AS DOUBLE)
-           AS center
-  FROM sea2
-), sea3 AS (
-  SELECT hod, s_num, s_cnt, sraw - center.center AS seasonal
-  FROM sea2 CROSS JOIN center
-)
-SELECT v.t, CAST(epoch(v.h) AS BIGINT) AS epoch, v.y, v.hod, v.strend,
-       round(CAST(v.strend AS DOUBLE) / {float(2 * p)}, 6) AS trend,
-       round(s.seasonal, 6) AS seasonal,
-       round(CAST(v.y AS DOUBLE)
-             - CAST(v.strend AS DOUBLE) / {float(2 * p)}
-             - s.seasonal, 6) AS resid
-FROM valid v JOIN sea3 s USING (hod)
-"""
-
-
-# --------------------------------------------------------------------------
-# Active-user engagement (`active_users`): the DAU/WAU/stickiness board
-# metric — per day: distinct daily actives, trailing-7-day distinct
-# actives, and the DAU/WAU engagement ratio. Distinct-over-sliding-
-# window is NOT a window function (COUNT(DISTINCT) OVER a frame is
-# unsupported and would be wrong anyway); the scale-honest plan is the
-# CONTRIBUTION-EXPLODE: dedupe to (user, day), explode each user-day to
-# the ≤AU_WINDOW target days it contributes to, dedupe (user, target),
-# count — a bounded ×W blowup of the already-deduped user-day frame,
-# never a per-day scan. Exact integers; the ratio is one division.
-#
-# Scale shape: (user, day) dedup is one exchange; the explode is
-# W-bounded; the second dedup + count is map-side combinable. Only
-# days with a FULL trailing window emit (partial-window edges excluded,
-# same discipline as rolling_anomaly).
-# --------------------------------------------------------------------------
-
-AU_WINDOW = 7  # trailing days for WAU
-
-
-def q_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    day = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-        f" div {_DAY_US}"
-    )
-    ud = (
-        _events(spark, sf_dir)
-        .select("user_id", day.alias("d"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    bounds = ud.agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
-    dau = ud.groupBy("d").agg(F.count("*").cast("long").alias("dau"))
-    contrib = ud.select(
-        "user_id",
-        F.explode(
-            F.sequence(F.col("d"), F.col("d") + AU_WINDOW - 1)
-        ).alias("d"),
-    ).distinct()
-    wau = contrib.groupBy("d").agg(F.count("*").cast("long").alias("wau"))
-    return (
-        dau.join(wau, "d")
-        .crossJoin(F.broadcast(bounds))
-        .filter(
-            (F.col("d") >= F.col("d0") + AU_WINDOW - 1)
-            & (F.col("d") <= F.col("d1"))
-        )
-        .select(
-            F.col("d").cast("long").alias("day"),
-            "dau",
-            "wau",
-            F.round(
-                F.col("dau").cast("double") / F.col("wau").cast("double"), 6
-            ).alias("stickiness"),
-        )
-    )
-
-
-def _sql_active_users() -> str:
-    w = AU_WINDOW
-    return f"""
-WITH ud AS MATERIALIZED (
-  SELECT DISTINCT user_id, epoch_us(ts) // {_DAY_US} AS d FROM events
-), bounds AS (
-  SELECT min(d) AS d0, max(d) AS d1 FROM ud
-), dau AS (
-  SELECT d, CAST(count(*) AS BIGINT) AS dau FROM ud GROUP BY d
-), contrib AS (
-  SELECT DISTINCT user_id, d + g.i AS d
-  FROM ud, LATERAL (SELECT unnest(range({w})) AS i) g
-), wau AS (
-  SELECT d, CAST(count(*) AS BIGINT) AS wau FROM contrib GROUP BY d
-)
-SELECT CAST(dau.d AS BIGINT) AS day, dau.dau, wau.wau,
-       round(CAST(dau.dau AS DOUBLE) / CAST(wau.wau AS DOUBLE), 6)
-         AS stickiness
-FROM dau JOIN wau USING (d) CROSS JOIN bounds
-WHERE dau.d >= bounds.d0 + {w} - 1 AND dau.d <= bounds.d1
-"""
-
-
-# --------------------------------------------------------------------------
-# Difference-in-differences (`diff_in_diff`): the panel causal estimator
-# (Card & Krueger 1994) — identifies an effect under a CONFOUNDED
-# baseline. Users split into md5 arms; days split at the
-# integer midpoint into pre/post; outcome = per-(user, period) event
-# count with a PLANTED structure: treated users get +DID_BASE in BOTH
-# periods (the baseline confound) and +DID_EFFECT only post. The naive
-# post-only comparison reads BASE+EFFECT; the DiD contrast
-# (Δtreat − Δcontrol) recovers EXACTLY EFFECT up to noise — both
-# estimates ride the output so the bias the method removes is visible
-# (and asserted in pytest). All moments are exact BIGINT sums;
-# means/variances/t are fixed-order expressions.
-#
-# Scale shape: one scan → per-(user, period) counts → 4-cell moment agg
-# (map-side combinable); everything downstream is 4 rows.
-# --------------------------------------------------------------------------
-
-DID_BASE = 20  # planted always-on treated-arm baseline confound
-DID_EFFECT = 12  # planted treatment effect (post-period only)
-
-
-def q_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    day = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-        f" div {_DAY_US}"
-    )
-    ev = _events(spark, sf_dir).select("user_id", day.alias("d"))
-    bounds = ev.agg(
-        F.expr("cast((min(d) + max(d)) div 2 as bigint)").alias("mid")
-    )
-    arm = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("did"), F.col("user_id")), 2
-    )
-    per = (
-        ev.crossJoin(F.broadcast(bounds))
-        .select(
-            "user_id",
-            arm.alias("treat"),
-            (F.col("d") > F.col("mid")).cast("long").alias("post"),
-        )
-        .groupBy("user_id", "treat", "post")
-        .agg(F.count("*").cast("long").alias("c0"))
-        .select(
-            "user_id",
-            "treat",
-            "post",
-            (
-                F.col("c0")
-                + F.col("treat") * DID_BASE
-                + F.col("treat") * F.col("post") * DID_EFFECT
-            ).alias("y"),
-        )
-    )
-    cells = per.groupBy("treat", "post").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-    )
-    nd = F.col("n").cast("double")
-    mean = F.col("sy").cast("double") / nd
-    var = (F.col("syy").cast("double") - nd * mean * mean) / (nd - F.lit(1.0))
-    stats = cells.select(
-        "treat", "post", "n", "sy", "syy", mean.alias("mean"),
-        var.alias("var"), (var / nd).alias("vn"),
-    )
-    piv = stats.agg(
-        F.sum(F.when((F.col("treat") == 1) & (F.col("post") == 1),
-                     F.col("mean"))).alias("m11"),
-        F.sum(F.when((F.col("treat") == 1) & (F.col("post") == 0),
-                     F.col("mean"))).alias("m10"),
-        F.sum(F.when((F.col("treat") == 0) & (F.col("post") == 1),
-                     F.col("mean"))).alias("m01"),
-        F.sum(F.when((F.col("treat") == 0) & (F.col("post") == 0),
-                     F.col("mean"))).alias("m00"),
-        # each conditional sum touches exactly ONE row; the four-term
-        # addition below is a FIXED-order expression (a bare sum(vn)
-        # would have a nondeterministic reduce order)
-        F.sum(F.when((F.col("treat") == 1) & (F.col("post") == 1),
-                     F.col("vn"))).alias("v11"),
-        F.sum(F.when((F.col("treat") == 1) & (F.col("post") == 0),
-                     F.col("vn"))).alias("v10"),
-        F.sum(F.when((F.col("treat") == 0) & (F.col("post") == 1),
-                     F.col("vn"))).alias("v01"),
-        F.sum(F.when((F.col("treat") == 0) & (F.col("post") == 0),
-                     F.col("vn"))).alias("v00"),
-    ).select(
-        ((F.col("m11") - F.col("m10")) - (F.col("m01") - F.col("m00"))).alias(
-            "did"
-        ),
-        (F.col("m11") - F.col("m01")).alias("naive_post_diff"),
-        F.sqrt(
-            F.col("v11") + F.col("v10") + F.col("v01") + F.col("v00")
-        ).alias("se"),
-    )
-    return stats.crossJoin(F.broadcast(piv)).select(
-        "treat",
-        "post",
-        "n",
-        F.round("mean", 6).alias("mean"),
-        F.round("var", 6).alias("var"),
-        F.round("did", 6).alias("did"),
-        F.round("naive_post_diff", 6).alias("naive_post_diff"),
-        F.round("se", 6).alias("se"),
-        F.round(F.col("did") / F.col("se"), 6).alias("t_did"),
-    )
-
-
-def _sql_diff_in_diff() -> str:
-    arm = _md5_bucket_sql("'did' || '|' || CAST(user_id AS VARCHAR)", 2)
-    return f"""
-WITH ev AS (
-  SELECT user_id, epoch_us(ts) // {_DAY_US} AS d FROM events
-), bounds AS (
-  SELECT CAST((min(d) + max(d)) // 2 AS BIGINT) AS mid FROM ev
-), per AS MATERIALIZED (
-  SELECT user_id, treat, post,
-         c0 + treat * {DID_BASE} + treat * post * {DID_EFFECT} AS y
-  FROM (
-    SELECT user_id, {arm} AS treat,
-           CAST(CASE WHEN d > bounds.mid THEN 1 ELSE 0 END AS BIGINT)
-             AS post,
-           CAST(count(*) AS BIGINT) AS c0
-    FROM ev CROSS JOIN bounds
-    GROUP BY user_id, treat, post, bounds.mid
-  )
-), cells AS MATERIALIZED (
-  SELECT treat, post, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(y * y) AS BIGINT) AS syy
-  FROM per GROUP BY treat, post
-), stats AS MATERIALIZED (
-  SELECT treat, post, n, sy, syy,
-         CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) AS mean,
-         (CAST(syy AS DOUBLE)
-            - CAST(n AS DOUBLE) * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-              * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))
-           / (CAST(n AS DOUBLE) - 1.0) AS var,
-         ((CAST(syy AS DOUBLE)
-            - CAST(n AS DOUBLE) * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-              * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))
-           / (CAST(n AS DOUBLE) - 1.0)) / CAST(n AS DOUBLE) AS vn
-  FROM cells
-), piv AS (
-  SELECT (sum(CASE WHEN treat = 1 AND post = 1 THEN mean END)
-            - sum(CASE WHEN treat = 1 AND post = 0 THEN mean END))
-         - (sum(CASE WHEN treat = 0 AND post = 1 THEN mean END)
-            - sum(CASE WHEN treat = 0 AND post = 0 THEN mean END)) AS did,
-         sum(CASE WHEN treat = 1 AND post = 1 THEN mean END)
-           - sum(CASE WHEN treat = 0 AND post = 1 THEN mean END)
-           AS naive_post_diff,
-         sqrt(sum(CASE WHEN treat = 1 AND post = 1 THEN vn END)
-              + sum(CASE WHEN treat = 1 AND post = 0 THEN vn END)
-              + sum(CASE WHEN treat = 0 AND post = 1 THEN vn END)
-              + sum(CASE WHEN treat = 0 AND post = 0 THEN vn END)) AS se
-  FROM stats
-)
-SELECT s.treat, s.post, s.n,
-       round(s.mean, 6) AS mean,
-       round(s.var, 6) AS var,
-       round(p.did, 6) AS did,
-       round(p.naive_post_diff, 6) AS naive_post_diff,
-       round(p.se, 6) AS se,
-       round(p.did / p.se, 6) AS t_did
-FROM stats s CROSS JOIN piv p
-"""
-
-
-# --------------------------------------------------------------------------
-# JSON path extraction (`json_extract`): the semi-structured surface —
-# schema-on-read over the events `props` JSON column (the ubiquitous
-# "properties bag" of every event pipeline). Typed path extraction
-# (Spark get_json_object vs DuckDB json_extract_string — both return
-# the unquoted scalar), validity accounting (a deliberately-corrupted
-# 1-in-11 slice exercises the NULL-on-parse-failure contract both
-# engines share), and a per-key rollup with distinct-user counts.
-# Completes the source-format story: parquet (everything), text
-# (corpus), JSON (this).
-#
-# Scale shape: one scan; JSON parsing is per-row JVM-side (no Python);
-# the rollup is map-side combinable; output is |keys|-sized.
-# --------------------------------------------------------------------------
-
-JSON_CORRUPT_MOD = 11  # 1-in-11 events get an unparseable props payload
-
-
-def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corrupt = (
-        _md5_bucket_spark(
-            F.concat_ws("|", F.lit("js"), F.col("event_id")),
-            JSON_CORRUPT_MOD,
-        )
-        == 0
-    )
-    payload = F.when(
-        corrupt, F.concat(F.lit("{broken"), F.col("props"))
-    ).otherwise(F.col("props"))
-    ev = _events(spark, sf_dir).select(
-        "event_id", "user_id", payload.alias("j")
-    )
-    k = F.get_json_object(F.col("j"), "$.k").cast("long")
-    parsed = ev.select("event_id", "user_id", k.alias("k"))
-    tot = parsed.agg(
-        F.count("*").cast("long").alias("n_total"),
-        F.sum(F.col("k").isNotNull().cast("long"))
-        .cast("long")
-        .alias("n_valid"),
-    )
-    per = (
-        parsed.filter(F.col("k").isNotNull())
-        .groupBy("k")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.count_distinct("user_id").cast("long").alias("n_users"),
-        )
-    )
-    return per.crossJoin(F.broadcast(tot)).select(
-        "k", "n", "n_users", "n_total", "n_valid"
-    )
-
-
-def _sql_json_extract() -> str:
-    corrupt = _md5_bucket_sql(
-        "'js' || '|' || CAST(event_id AS VARCHAR)", JSON_CORRUPT_MOD
-    )
-    return f"""
-WITH ev AS (
-  SELECT event_id, user_id,
-         CASE WHEN {corrupt} = 0 THEN '{{broken' || props
-              ELSE props END AS j
-  FROM events
-), parsed AS MATERIALIZED (
-  SELECT event_id, user_id,
-         CAST(CASE WHEN json_valid(j)
-                   THEN json_extract_string(j, '$.k') END AS BIGINT) AS k
-  FROM ev
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_total,
-         CAST(sum(CASE WHEN k IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_valid
-  FROM parsed
-)
-SELECT p.k, CAST(count(*) AS BIGINT) AS n,
-       CAST(count(DISTINCT p.user_id) AS BIGINT) AS n_users,
-       tot.n_total, tot.n_valid
-FROM parsed p CROSS JOIN tot
-WHERE p.k IS NOT NULL
-GROUP BY p.k, tot.n_total, tot.n_valid
-"""
-
-
-# --------------------------------------------------------------------------
-# Mann-Kendall trend test (`mann_kendall`): the nonparametric monotone-
-# trend detector (Mann 1945; Kendall 1975 — the hydrology/climate
-# standard, and the right test for "is ingestion volume drifting?"
-# because it assumes no distribution). S = Σ_{i<j} sign(x_j − x_i) over
-# the hourly series — EXACT integer via the rank identity: S computed
-# from concordant/discordant pair counts with tie correction
-# Var(S) = [n(n−1)(2n+5) − Σ_t t(t−1)(2t+5)]/18 (exact integer
-# numerator). Two scopes: 'same' (raw series — no trend at α=0.05) and
-# 'trended' (planted +t·RATE/GRID drift — detects). Z uses the
-# continuity correction; verdict at |Z| > 1.959964.
-#
-# Scale shape: the O(n²) pair sum runs over the BOUNDED hourly summary
-# (720 points → 259k pairs — still summary-sized; at unbounded n the
-# identity S = Σ sign folds to rank statistics computable by sort, the
-# same exact_global_rank machinery). Pairs via a self-join of the
-# bounded series; everything integer until the final z division.
-# --------------------------------------------------------------------------
-
-MK_RATE = 2  # planted drift: x_t += (t * MK_RATE) div MK_GRID
-MK_GRID = 48
-_MK_CRIT = 1.959964  # two-sided alpha = 0.05
-
-
-def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias("h")
-    )
-    cnt = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count("*").alias("c")
-    )
-    w = Window.orderBy("h")  # bounded hourly summary (decompose rule)
-    ser = (
-        grid.join(cnt, "h", "left")
-        .select("h", F.coalesce("c", F.lit(0)).cast("long").alias("x"))
-        .select("x", F.row_number().over(w).cast("long").alias("t"))
-        .localCheckpoint(eager=True)
-    )
-    out = None
-    for scope in ("same", "trended"):
-        y = (
-            F.col("x")
-            + F.expr(f"cast((t * {MK_RATE}) div {MK_GRID} as bigint)")
-            if scope == "trended"
-            else F.col("x")
-        )
-        s = ser.select(F.lit(scope).alias("scope"), "t", y.alias("y"))
-        pairs = (
-            s.alias("a")
-            .join(
-                s.alias("b"),
-                (F.col("b.scope") == F.col("a.scope"))
-                & (F.col("b.t") > F.col("a.t")),
-            )
-            .agg(
-                F.sum(
-                    F.signum(
-                        (F.col("b.y") - F.col("a.y")).cast("double")
-                    ).cast("long")
-                )
-                .cast("long")
-                .alias("s_stat"),
-                F.count("*").cast("long").alias("n_pairs"),
-            )
-        )
-        ties = (
-            s.groupBy("y")
-            .agg(F.count("*").cast("long").alias("tc"))
-            .agg(
-                F.sum(
-                    F.col("tc") * (F.col("tc") - 1) * (2 * F.col("tc") + 5)
-                )
-                .cast("long")
-                .alias("tie_term"),
-                F.sum("tc").cast("long").alias("n"),
-            )
-        )
-        part = pairs.crossJoin(F.broadcast(ties)).select(
-            F.lit(scope).alias("scope"), "s_stat", "n_pairs", "n", "tie_term"
-        )
-        out = part if out is None else out.unionByName(part)
-    var_num = (
-        F.col("n") * (F.col("n") - 1) * (2 * F.col("n") + 5)
-        - F.col("tie_term")
-    ).cast("long")
-    var_d = var_num.cast("double") / F.lit(18.0)
-    z = (
-        F.when(
-            F.col("s_stat") > 0,
-            (F.col("s_stat").cast("double") - F.lit(1.0)) / F.sqrt(var_d),
-        )
-        .when(
-            F.col("s_stat") < 0,
-            (F.col("s_stat").cast("double") + F.lit(1.0)) / F.sqrt(var_d),
-        )
-        .otherwise(F.lit(0.0))
-    )
-    return out.select(
-        "scope",
-        "s_stat",
-        "n_pairs",
-        "n",
-        "tie_term",
-        var_num.alias("var_num"),
-        F.round(z, 6).alias("z"),
-        F.when(F.abs(z) > _MK_CRIT, F.lit("trend"))
-        .otherwise(F.lit("no_trend"))
-        .alias("verdict"),
-    )
-
-
-def _sql_mann_kendall() -> str:
-    crit = _MK_CRIT
-    scopes = []
-    for scope in ("same", "trended"):
-        yexpr = (
-            f"x + CAST((t * {MK_RATE}) // {MK_GRID} AS BIGINT)"
-            if scope == "trended"
-            else "x"
-        )
-        scopes.append(
-            f"SELECT '{scope}' AS scope, t, {yexpr} AS y FROM ser"
-        )
-    scoped_union = "\n  UNION ALL\n  ".join(scopes)
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser AS MATERIALIZED (
-  SELECT CAST(row_number() OVER (ORDER BY g.h) AS BIGINT) AS t,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS x
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), scoped AS MATERIALIZED (
-  {scoped_union}
-), pairs AS (
-  SELECT a.scope,
-         CAST(sum(CASE WHEN b.y > a.y THEN 1
-                       WHEN b.y < a.y THEN -1 ELSE 0 END) AS BIGINT)
-           AS s_stat,
-         CAST(count(*) AS BIGINT) AS n_pairs
-  FROM scoped a JOIN scoped b ON b.scope = a.scope AND b.t > a.t
-  GROUP BY a.scope
-), ties AS (
-  SELECT scope,
-         CAST(sum(tc * (tc - 1) * (2 * tc + 5)) AS BIGINT) AS tie_term,
-         CAST(sum(tc) AS BIGINT) AS n
-  FROM (SELECT scope, y, CAST(count(*) AS BIGINT) AS tc
-        FROM scoped GROUP BY scope, y)
-  GROUP BY scope
-), base AS MATERIALIZED (
-  SELECT p.scope, p.s_stat, p.n_pairs, t.n, t.tie_term,
-         CAST(t.n * (t.n - 1) * (2 * t.n + 5) - t.tie_term AS BIGINT)
-           AS var_num
-  FROM pairs p JOIN ties t USING (scope)
-)
-SELECT scope, s_stat, n_pairs, n, tie_term, var_num,
-       round(CASE WHEN s_stat > 0
-                  THEN (CAST(s_stat AS DOUBLE) - 1.0)
-                       / sqrt(CAST(var_num AS DOUBLE) / 18.0)
-                  WHEN s_stat < 0
-                  THEN (CAST(s_stat AS DOUBLE) + 1.0)
-                       / sqrt(CAST(var_num AS DOUBLE) / 18.0)
-                  ELSE 0.0 END, 6) AS z,
-       CASE WHEN abs(CASE WHEN s_stat > 0
-                          THEN (CAST(s_stat AS DOUBLE) - 1.0)
-                               / sqrt(CAST(var_num AS DOUBLE) / 18.0)
-                          WHEN s_stat < 0
-                          THEN (CAST(s_stat AS DOUBLE) + 1.0)
-                               / sqrt(CAST(var_num AS DOUBLE) / 18.0)
-                          ELSE 0.0 END) > {crit}
-            THEN 'trend' ELSE 'no_trend' END AS verdict
-FROM base
-"""
-
-
-# --------------------------------------------------------------------------
-# Pivot table (`pivot_table`): the wide-format BI surface — per-source
-# doc counts and char sums pivoted across the bounded language domain
-# (Spark's `groupBy().pivot(values=...)` with an EXPLICIT pinned value
-# list — never the value-discovering two-pass form — vs DuckDB
-# conditional aggregation producing the identical column set). Missing
-# cells are zero-filled so the wide schema is total. All-BIGINT.
-#
-# Scale shape: a pivot with pinned values is ONE map-side-combinable
-# aggregation whose row width is |languages| — the groupBy shuffle is on
-# source alone; no second pass, no distinct-values driver action.
-# --------------------------------------------------------------------------
-
-PIVOT_LANGS = ("de", "en", "es", "fr", "zh")
-
-
-def q_pivot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    piv = (
-        _docs(spark, sf_dir)
-        .groupBy("source")
-        .pivot("lang", list(PIVOT_LANGS))
-        .agg(
-            # count(*) is rejected inside Pivot (INVALID_USAGE_OF_STAR)
-            F.count(F.lit(1)).alias("n"),
-            F.sum("n_chars").alias("chars"),
-        )
-    )
-    cols = [F.col("source")]
-    for lg in PIVOT_LANGS:
-        cols.append(
-            F.coalesce(F.col(f"{lg}_n"), F.lit(0))
-            .cast("long")
-            .alias(f"{lg}_n")
-        )
-        cols.append(
-            F.coalesce(F.col(f"{lg}_chars"), F.lit(0))
-            .cast("long")
-            .alias(f"{lg}_chars")
-        )
-    return piv.select(*cols)
-
-
-def _sql_pivot_table() -> str:
-    cells = ",\n       ".join(
-        f"CAST(coalesce(sum(CASE WHEN lang = '{lg}' THEN 1 END), 0)"
-        f" AS BIGINT) AS {lg}_n,\n       "
-        f"CAST(coalesce(sum(CASE WHEN lang = '{lg}' THEN n_chars END), 0)"
-        f" AS BIGINT) AS {lg}_chars"
-        for lg in PIVOT_LANGS
-    )
-    return f"""
-SELECT source,
-       {cells}
-FROM documents
-GROUP BY source
-"""
-
-
-# --------------------------------------------------------------------------
-# Off-policy evaluation (`ips_eval`): the inverse-propensity-scoring
-# counterfactual estimator (Horvitz-Thompson 1952; Li et al. WWW 2011 —
-# how recommenders evaluate a NEW policy on OLD logs without deploying
-# it). Logged data: uniform random actions over IPS_K arms (known
-# propensity 1/K) with an integer reward that pays IPS_BONUS when the
-# logged action hits the user's md5-planted target arm. Two target
-# policies are evaluated on the same logs: 'optimal' (π = the target
-# arm) and 'shifted' (π = target+1 — never right). IPS value =
-# K·Σ_{a==π(u)} r / n — exact BIGINT numerator, one division; the
-# estimated optimal-vs-shifted gap must recover the planted bonus
-# (pytest, within sampling noise). The logged average rides along as
-# the behavior-policy baseline.
-#
-# Scale shape: one scan, two map-side-combinable conditional aggs —
-# the estimator is embarrassingly parallel by construction.
-# --------------------------------------------------------------------------
-
-IPS_K = 4
-IPS_BONUS = 15
-IPS_BASE_MOD = 10
-
-
-def q_ips_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    a = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("act"), F.col("event_id")), IPS_K
-    )
-    base_r = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("rw"), F.col("event_id")), IPS_BASE_MOD
-    )
-    tgt = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("tgt"), F.col("user_id")), IPS_K
-    )
-    logs = _events(spark, sf_dir).select(
-        a.alias("a"),
-        tgt.alias("tgt"),
-        (
-            base_r
-            + F.when(a == tgt, IPS_BONUS).otherwise(0)
-        )
-        .cast("long")
-        .alias("r"),
-    )
-    out = None
-    for policy, shift in (("optimal", 0), ("shifted", 1)):
-        pi = F.pmod(F.col("tgt") + shift, F.lit(IPS_K))
-        part = logs.agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum((F.col("a") == pi).cast("long"))
-            .cast("long")
-            .alias("n_match"),
-            F.sum(F.when(F.col("a") == pi, F.col("r")).otherwise(0))
-            .cast("long")
-            .alias("sum_matched_r"),
-            F.sum("r").cast("long").alias("sum_logged_r"),
-        ).select(
-            F.lit(policy).alias("policy"),
-            "n",
-            "n_match",
-            "sum_matched_r",
-            F.round(
-                F.lit(float(IPS_K))
-                * F.col("sum_matched_r").cast("double")
-                / F.col("n").cast("double"),
-                6,
-            ).alias("ips_value"),
-            F.round(
-                F.col("sum_logged_r").cast("double")
-                / F.col("n").cast("double"),
-                6,
-            ).alias("logged_avg_r"),
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def _sql_ips_eval() -> str:
-    a = _md5_bucket_sql("'act' || '|' || CAST(event_id AS VARCHAR)", IPS_K)
-    base_r = _md5_bucket_sql(
-        "'rw' || '|' || CAST(event_id AS VARCHAR)", IPS_BASE_MOD
-    )
-    tgt = _md5_bucket_sql("'tgt' || '|' || CAST(user_id AS VARCHAR)", IPS_K)
-    parts = []
-    for policy, shift in (("optimal", 0), ("shifted", 1)):
-        parts.append(
-            f"""SELECT '{policy}' AS policy,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CASE WHEN a = (tgt + {shift}) % {IPS_K} THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_match,
-       CAST(sum(CASE WHEN a = (tgt + {shift}) % {IPS_K} THEN r ELSE 0 END)
-            AS BIGINT) AS sum_matched_r,
-       round({float(IPS_K)}
-             * CAST(sum(CASE WHEN a = (tgt + {shift}) % {IPS_K}
-                            THEN r ELSE 0 END) AS DOUBLE)
-             / CAST(count(*) AS DOUBLE), 6) AS ips_value,
-       round(CAST(sum(r) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-         AS logged_avg_r
-FROM logs"""
-        )
-    body = "\nUNION ALL\n".join(parts)
-    return f"""
-WITH logs AS MATERIALIZED (
-  SELECT {a} AS a, {tgt} AS tgt,
-         CAST({base_r}
-              + CASE WHEN {a} = {tgt} THEN {IPS_BONUS} ELSE 0 END
-              AS BIGINT) AS r
-  FROM events
-)
-{body}
-"""
-
-
-# --------------------------------------------------------------------------
 # DAG critical path (`critical_path`): longest weighted path in a DAG —
 # the scheduling primitive (CPM, Kelley & Walker 1959) every pipeline /
 # build-graph analyzer computes. The canonical u<v orientation of the
@@ -11274,203 +8116,6 @@ FROM d{CP_ROUNDS} d CROSS JOIN crit CROSS JOIN conv
 
 
 # --------------------------------------------------------------------------
-# Autocorrelation function (`autocorrelation`): ACF at lags 1..ACF_MAX
-# over the dense hourly series — the diagnostics face completing the
-# time-series suite (decompose explains, holt forecasts, mase evaluates,
-# cusum/rolling detect, mann_kendall tests trend; ACF reveals the
-# memory/seasonality structure practitioners read FIRST). The n-scaled
-# deviations keep everything BIGINT: d_t = n·x_t − S (S = Σx), num_k =
-# Σ_t d_t·d_{t+k}, acf_k = num_k/num_0 — one exact-integer division per
-# lag (the cusum exactness class). Overflow headroom: even at sf1
-# (n = 720 hours, x ≤ ~1.4e4/hour) |d| ≤ 1e7, d² ≤ 1e14, and the ≤720-
-# term sums stay ≤ ~7e16 — far inside int64.
-#
-# Scale shape: lag pairs via a self-join of the BOUNDED series on
-# t + k (≤ ACF_MAX·|hours| rows — summary-scale, never the corpus);
-# sums map-side combinable. Pairs use only t where both endpoints
-# exist; the denominator num_0 runs over all n (the standard biased
-# estimator).
-# --------------------------------------------------------------------------
-
-ACF_MAX = 48
-
-
-def q_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias("h")
-    )
-    cnt = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count("*").alias("c")
-    )
-    w = Window.orderBy("h")  # bounded hourly summary
-    ser = (
-        grid.join(cnt, "h", "left")
-        .select("h", F.coalesce("c", F.lit(0)).cast("long").alias("x"))
-        .select("x", F.row_number().over(w).cast("long").alias("t"))
-        .localCheckpoint(eager=True)
-    )
-    tot = ser.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("x").cast("long").alias("s"),
-    )
-    dev = ser.crossJoin(F.broadcast(tot)).select(
-        "t", (F.col("n") * F.col("x") - F.col("s")).alias("d"), "n"
-    ).localCheckpoint(eager=True)
-    num0 = dev.agg(
-        F.sum(F.col("d") * F.col("d")).cast("long").alias("num0")
-    )
-    lags = spark.range(1, ACF_MAX + 1).select(F.col("id").alias("lag"))
-    pairs = (
-        dev.alias("a")
-        .crossJoin(F.broadcast(lags))
-        .join(
-            dev.alias("b").select(
-                F.col("t").alias("tb"), F.col("d").alias("db")
-            ),
-            F.col("tb") == F.col("a.t") + F.col("lag"),
-        )
-        .groupBy("lag")
-        .agg(
-            F.sum(F.col("a.d") * F.col("db")).cast("long").alias("numk"),
-            F.count("*").cast("long").alias("n_pairs"),
-        )
-    )
-    return pairs.crossJoin(F.broadcast(num0)).select(
-        F.col("lag").cast("long").alias("lag"),
-        "numk",
-        "num0",
-        "n_pairs",
-        F.round(
-            F.col("numk").cast("double") / F.col("num0").cast("double"), 6
-        ).alias("acf"),
-    )
-
-
-def _sql_autocorrelation() -> str:
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser AS MATERIALIZED (
-  SELECT CAST(row_number() OVER (ORDER BY g.h) AS BIGINT) AS t,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS x
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS s
-  FROM ser
-), dev AS MATERIALIZED (
-  SELECT t, CAST(tot.n * x - tot.s AS BIGINT) AS d
-  FROM ser CROSS JOIN tot
-), num0 AS (
-  SELECT CAST(sum(d * d) AS BIGINT) AS num0 FROM dev
-), lags AS (
-  SELECT CAST(unnest(range(1, {ACF_MAX} + 1)) AS BIGINT) AS lag
-), pairs AS MATERIALIZED (
-  SELECT l.lag,
-         CAST(sum(a.d * b.d) AS BIGINT) AS numk,
-         CAST(count(*) AS BIGINT) AS n_pairs
-  FROM lags l
-  JOIN dev a ON TRUE
-  JOIN dev b ON b.t = a.t + l.lag
-  GROUP BY l.lag
-)
-SELECT p.lag, p.numk, num0.num0, p.n_pairs,
-       round(CAST(p.numk AS DOUBLE) / CAST(num0.num0 AS DOUBLE), 6) AS acf
-FROM pairs p CROSS JOIN num0
-"""
-
-
-# --------------------------------------------------------------------------
-# OHLC time bars + VWAP (`ohlc_bars`): the financial/metrics bar
-# aggregation — per hourly bar over purchase events: open/close by the
-# exact (ts_us, event_id) key (Spark struct-min/max == DuckDB arg-style
-# struct mins — the attribution first/last discipline), high/low as
-# plain extrema, volume counts, and VWAP in exact integer cents
-# (Σ cents / n — one division). The bar shape every monitoring and
-# market-data stack emits; min_by/max_by-class parity in both engines.
-#
-# Scale shape: one filtered scan → per-bar map-side-combinable
-# aggregates keyed by the hour bucket; output is |bars|-sized.
-# --------------------------------------------------------------------------
-
-
-def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    um = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-    )
-    ev = (
-        _events(spark, sf_dir)
-        .filter(F.col("event_type") == RET_EVENT)
-        .select(
-            "event_id",
-            um.alias("um"),
-            F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
-        )
-        .select(
-            "event_id",
-            "um",
-            "cents",
-            F.expr("um div 3600000000").cast("long").alias("bar"),
-        )
-    )
-    agg = ev.groupBy("bar").agg(
-        F.count("*").cast("long").alias("n_trades"),
-        F.sum("cents").cast("long").alias("sum_cents"),
-        F.min(F.struct("um", "event_id", "cents")).alias("o"),
-        F.max(F.struct("um", "event_id", "cents")).alias("c"),
-        F.max("cents").cast("long").alias("high"),
-        F.min("cents").cast("long").alias("low"),
-    )
-    return agg.select(
-        "bar",
-        "n_trades",
-        F.col("o.cents").alias("open"),
-        "high",
-        "low",
-        F.col("c.cents").alias("close"),
-        F.round(
-            F.col("sum_cents").cast("double")
-            / F.col("n_trades").cast("double")
-            / 100.0,
-            6,
-        ).alias("vwap"),
-    )
-
-
-def _sql_ohlc_bars() -> str:
-    return f"""
-WITH ev AS (
-  SELECT event_id, epoch_us(ts) AS um,
-         CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(epoch_us(ts) // 3600000000 AS BIGINT) AS bar
-  FROM events WHERE event_type = {_sql_quote(RET_EVENT)}
-)
-SELECT bar,
-       CAST(count(*) AS BIGINT) AS n_trades,
-       CAST((min(struct_pack(um := um, eid := event_id, c := cents))).c
-            AS BIGINT) AS open,
-       CAST(max(cents) AS BIGINT) AS high,
-       CAST(min(cents) AS BIGINT) AS low,
-       CAST((max(struct_pack(um := um, eid := event_id, c := cents))).c
-            AS BIGINT) AS close,
-       round(CAST(sum(cents) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-             / 100.0, 6) AS vwap
-FROM ev GROUP BY bar
-"""
-
-
-# --------------------------------------------------------------------------
 # Degree assortativity (`assortativity`): Newman's degree-correlation
 # coefficient (PRL 2002) — do high-degree hosts link to high-degree
 # hosts? The structural summary the iterative family (pagerank/hits/
@@ -11593,418 +8238,6 @@ SELECT p.u, p.v, p.du, p.dv, mm.m, mm.sxy,
                        - CAST(mm.sy AS DOUBLE) * CAST(mm.sy AS DOUBLE)
                          / CAST(mm.m AS DOUBLE))), 6) AS assortativity
 FROM pairs p CROSS JOIN mm
-"""
-
-
-# --------------------------------------------------------------------------
-# Inter-arrival burstiness (`interarrival_stats`): the Goh-Barabási
-# burstiness coefficient B = (σ−μ)/(σ+μ) over each user's inter-event
-# gaps — the temporal-texture diagnostic (B→−1 periodic, ≈0 Poisson,
-# →1 bursty) that sessionize/event_funnel don't measure. Gaps are
-# EXACT integer SECONDS (µs div 1e6 — µs² would overflow int64 on
-# month-long gaps; seconds² has 1000× headroom); per-user moment sums
-# stay BIGINT; σ/μ/B are fixed-order doubles. Users need ≥ 2 gaps. The
-# corpus-level mean B folds in pinned user order.
-#
-# Scale shape: gaps via lag windows PARTITIONED by user (bounded
-# per-user groups, the seasonal_mase discipline); per-user moments
-# map-side combinable; the summary is a pinned fold over the |users|
-# frame.
-# --------------------------------------------------------------------------
-
-
-def q_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    um = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-    )
-    ev = _events(spark, sf_dir).select(
-        "user_id", "event_id", um.alias("um")
-    )
-    w = Window.partitionBy("user_id").orderBy("um", "event_id")
-    gaps = (
-        ev.select(
-            "user_id",
-            (F.col("um") - F.lag("um", 1).over(w)).alias("dus"),
-        )
-        .filter(F.col("dus").isNotNull())
-        .select(
-            "user_id", F.expr("cast(dus div 1000000 as bigint)").alias("g")
-        )
-    )
-    per = (
-        gaps.groupBy("user_id")
-        .agg(
-            F.count("*").cast("long").alias("n_gaps"),
-            F.sum("g").cast("long").alias("sg"),
-            F.sum(F.col("g") * F.col("g")).cast("long").alias("sgg"),
-        )
-        .filter(F.col("n_gaps") >= 2)
-    )
-    nd = F.col("n_gaps").cast("double")
-    mu = F.col("sg").cast("double") / nd
-    var = (F.col("sgg").cast("double") - nd * mu * mu) / (nd - F.lit(1.0))
-    sig = F.sqrt(var)
-    stats = per.select(
-        "user_id",
-        "n_gaps",
-        "sg",
-        "sgg",
-        mu.alias("mu"),
-        sig.alias("sig"),
-        ((sig - mu) / (sig + mu)).alias("b"),
-    )
-    summary = stats.agg(
-        (
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("user_id", "b"))),
-                F.lit(0.0),
-                lambda a, e: a + e["b"],
-            )
-            / F.count("*").cast("double")
-        ).alias("mean_b")
-    )
-    return stats.crossJoin(F.broadcast(summary)).select(
-        "user_id",
-        "n_gaps",
-        "sg",
-        "sgg",
-        F.round("mu", 6).alias("mean_gap_s"),
-        F.round("sig", 6).alias("std_gap_s"),
-        F.round("b", 6).alias("burstiness"),
-        F.round("mean_b", 6).alias("mean_burstiness"),
-    )
-
-
-def _sql_interarrival_stats() -> str:
-    return """
-WITH ev AS (
-  SELECT user_id, event_id, epoch_us(ts) AS um FROM events
-), gaps AS (
-  SELECT user_id,
-         CAST((um - lag(um, 1) OVER (PARTITION BY user_id
-                                     ORDER BY um, event_id))
-              // 1000000 AS BIGINT) AS g
-  FROM ev
-  QUALIFY lag(um, 1) OVER (PARTITION BY user_id
-                           ORDER BY um, event_id) IS NOT NULL
-), per AS MATERIALIZED (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n_gaps,
-         CAST(sum(g) AS BIGINT) AS sg,
-         CAST(sum(g * g) AS BIGINT) AS sgg
-  FROM gaps GROUP BY user_id
-  HAVING count(*) >= 2
-), stats AS MATERIALIZED (
-  SELECT user_id, n_gaps, sg, sgg,
-         CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE) AS mu,
-         sqrt((CAST(sgg AS DOUBLE)
-               - CAST(n_gaps AS DOUBLE)
-                 * (CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE))
-                 * (CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE)))
-              / (CAST(n_gaps AS DOUBLE) - 1.0)) AS sig
-  FROM per
-), summary AS (
-  SELECT list_sum(list((sig - mu) / (sig + mu) ORDER BY user_id))
-           / CAST(count(*) AS DOUBLE) AS mean_b
-  FROM stats
-)
-SELECT s.user_id, s.n_gaps, s.sg, s.sgg,
-       round(s.mu, 6) AS mean_gap_s,
-       round(s.sig, 6) AS std_gap_s,
-       round((s.sig - s.mu) / (s.sig + s.mu), 6) AS burstiness,
-       round(summary.mean_b, 6) AS mean_burstiness
-FROM stats s CROSS JOIN summary
-"""
-
-
-# --------------------------------------------------------------------------
-# Referential-integrity audit (`ref_integrity`): the dbt `relationships`
-# test — for every foreign-key edge of the star schema (lineitem→orders,
-# lineitem→part, lineitem→supplier, orders→customer, customer→nation,
-# supplier→nation, nation→region), count child rows, distinct child
-# keys, orphan rows (no parent), and null keys. Complements
-# `data_profile` (single-column audits) with the CROSS-TABLE contract
-# every warehouse load gates on. All-BIGINT.
-#
-# Scale shape: each edge is one left-anti-style aggregate — child keys
-# grouped map-side, then ONE join against the parent key set (parent
-# sides here are dimension-sized and broadcast; the fact-fact edge
-# co-partitions under AQE). Output is |edges|-sized.
-# --------------------------------------------------------------------------
-
-_RI_EDGES = (
-    ("lineitem", "l_orderkey", "orders", "o_orderkey"),
-    ("lineitem", "l_partkey", "part", "p_partkey"),
-    ("lineitem", "l_suppkey", "supplier", "s_suppkey"),
-    ("orders", "o_custkey", "customer", "c_custkey"),
-    ("customer", "c_nationkey", "nation", "n_nationkey"),
-    ("supplier", "s_nationkey", "nation", "n_nationkey"),
-    ("nation", "n_regionkey", "region", "r_regionkey"),
-)
-
-
-def q_ref_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = None
-    for child, ck, parent, pk in _RI_EDGES:
-        c = spark.read.parquet(f"{sf_dir}/{child}.parquet").select(
-            F.col(ck).alias("k")
-        )
-        p = (
-            spark.read.parquet(f"{sf_dir}/{parent}.parquet")
-            .select(F.col(pk).alias("k"))
-            .distinct()
-        )
-        keys = c.groupBy("k").agg(F.count("*").cast("long").alias("cnt"))
-        joined = keys.join(
-            p.select("k", F.lit(1).alias("hit")), "k", "left"
-        )
-        stats = joined.agg(
-            F.sum("cnt").cast("long").alias("n_child"),
-            F.count("*").cast("long").alias("n_child_keys"),
-            F.sum(F.when(F.col("k").isNull(), F.col("cnt")).otherwise(0))
-            .cast("long")
-            .alias("n_null"),
-            F.sum(
-                F.when(
-                    F.col("hit").isNull() & F.col("k").isNotNull(),
-                    F.col("cnt"),
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_orphans"),
-        ).select(
-            F.lit(f"{child}.{ck}").alias("fk"),
-            F.lit(f"{parent}.{pk}").alias("references"),
-            "n_child",
-            "n_child_keys",
-            "n_null",
-            "n_orphans",
-            (F.col("n_orphans") == 0).cast("long").alias("intact"),
-        )
-        out = stats if out is None else out.unionByName(stats)
-    return out
-
-
-def _sql_ref_integrity() -> str:
-    parts = []
-    for child, ck, parent, pk in _RI_EDGES:
-        parts.append(
-            f"""SELECT '{child}.{ck}' AS fk,
-       '{parent}.{pk}' AS "references",
-       CAST(sum(cnt) AS BIGINT) AS n_child,
-       CAST(count(*) AS BIGINT) AS n_child_keys,
-       CAST(sum(CASE WHEN k IS NULL THEN cnt ELSE 0 END) AS BIGINT)
-         AS n_null,
-       CAST(sum(CASE WHEN hit IS NULL AND k IS NOT NULL
-                     THEN cnt ELSE 0 END) AS BIGINT) AS n_orphans,
-       CAST(CASE WHEN sum(CASE WHEN hit IS NULL AND k IS NOT NULL
-                               THEN cnt ELSE 0 END) = 0
-                 THEN 1 ELSE 0 END AS BIGINT) AS intact
-FROM (
-  SELECT c.k, c.cnt, p.hit FROM (
-    SELECT {ck} AS k, CAST(count(*) AS BIGINT) AS cnt
-    FROM {child} GROUP BY {ck}
-  ) c LEFT JOIN (
-    SELECT DISTINCT {pk} AS k, 1 AS hit FROM {parent}
-  ) p ON p.k = c.k
-)"""
-        )
-    return "\nUNION ALL\n".join(parts)
-
-
-# --------------------------------------------------------------------------
-# Wald-Wolfowitz runs test (`runs_test`): the classic randomness test —
-# binarize the hourly series above/below its exact median (median-ties
-# excluded, the standard convention), count sign runs, compare against
-# E[R] = 2n₁n₂/n + 1 with the exact variance formula. Completes the
-# hypothesis-test family (mann_kendall: trend, benford: categorical
-# fit; THIS: serial randomness). Two scopes:
-# 'same' (raw series — fails to reject) and 'clumped' (a planted
-# 36-hour square wave forces long runs → z strongly negative, rejects).
-# R, n₁, n₂ and the median are exact integers; E/Var/z are fixed-order
-# doubles (6dp + verdict at |z| > 1.959964).
-#
-# Scale shape: the median is an exact rank over the bounded hourly
-# summary; runs count via one lag window over the same summary.
-# --------------------------------------------------------------------------
-
-RUNS_AMP = 40  # planted square-wave amplitude (clumped scope)
-RUNS_HALF_PERIOD = 36  # hours
-
-
-def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias("h")
-    )
-    cnt = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count("*").alias("c")
-    )
-    w = Window.orderBy("h")  # bounded hourly summary
-    ser = (
-        grid.join(cnt, "h", "left")
-        .select("h", F.coalesce("c", F.lit(0)).cast("long").alias("x"))
-        .select("x", F.row_number().over(w).cast("long").alias("t"))
-        .localCheckpoint(eager=True)
-    )
-    out = None
-    for scope in ("same", "clumped"):
-        y = (
-            F.col("x")
-            + F.when(
-                F.expr(f"((t - 1) div {RUNS_HALF_PERIOD}) % 2 = 0")
-                & F.lit(scope == "clumped"),
-                RUNS_AMP,
-            ).otherwise(0)
-        )
-        s = ser.select("t", y.alias("y"))
-        med = (
-            s.select(
-                "y",
-                F.row_number()
-                .over(Window.orderBy("y", "t"))
-                .alias("rk"),
-            )
-            .crossJoin(
-                F.broadcast(s.agg(F.count("*").alias("n0")))
-            )
-            .filter(F.col("rk") == F.expr("cast((n0 + 1) div 2 as int)"))
-            .select(F.col("y").alias("med"))
-        )
-        kept = (
-            s.crossJoin(F.broadcast(med))
-            .filter(F.col("y") != F.col("med"))
-            .select("t", (F.col("y") > F.col("med")).cast("long").alias("s"))
-        )
-        wk = Window.orderBy("t")
-        runs = kept.select(
-            "s", F.lag("s", 1).over(wk).alias("prev")
-        ).agg(
-            (
-                F.lit(1)
-                + F.sum(
-                    F.when(
-                        F.col("prev").isNotNull()
-                        & (F.col("s") != F.col("prev")),
-                        1,
-                    ).otherwise(0)
-                )
-            )
-            .cast("long")
-            .alias("r"),
-            F.sum("s").cast("long").alias("n1"),
-            F.sum(1 - F.col("s")).cast("long").alias("n2"),
-        )
-        part = runs.crossJoin(F.broadcast(med)).select(
-            F.lit(scope).alias("scope"), "r", "n1", "n2", "med"
-        )
-        out = part if out is None else out.unionByName(part)
-    n1d = F.col("n1").cast("double")
-    n2d = F.col("n2").cast("double")
-    nd = n1d + n2d
-    er = 2.0 * n1d * n2d / nd + 1.0
-    vr = (
-        2.0
-        * n1d
-        * n2d
-        * (2.0 * n1d * n2d - n1d - n2d)
-        / (nd * nd * (nd - 1.0))
-    )
-    z = (F.col("r").cast("double") - er) / F.sqrt(vr)
-    return out.select(
-        "scope",
-        "r",
-        "n1",
-        "n2",
-        "med",
-        F.round(er, 6).alias("expected_r"),
-        F.round(z, 6).alias("z"),
-        F.when(F.abs(z) > _MK_CRIT, F.lit("reject"))
-        .otherwise(F.lit("random"))
-        .alias("verdict"),
-    )
-
-
-def _sql_runs_test() -> str:
-    scopes = []
-    for scope in ("same", "clumped"):
-        add = (
-            f"CASE WHEN ((t - 1) // {RUNS_HALF_PERIOD}) % 2 = 0"
-            f" THEN {RUNS_AMP} ELSE 0 END"
-            if scope == "clumped"
-            else "0"
-        )
-        scopes.append(f"SELECT '{scope}' AS scope, t, x + {add} AS y FROM ser")
-    scoped_union = "\n  UNION ALL\n  ".join(scopes)
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser AS MATERIALIZED (
-  SELECT CAST(row_number() OVER (ORDER BY g.h) AS BIGINT) AS t,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS x
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), scoped AS MATERIALIZED (
-  {scoped_union}
-), med AS MATERIALIZED (
-  SELECT scope, y AS med FROM (
-    SELECT scope, y,
-           row_number() OVER (PARTITION BY scope ORDER BY y, t) AS rk,
-           count(*) OVER (PARTITION BY scope) AS n0
-    FROM scoped)
-  WHERE rk = CAST((n0 + 1) // 2 AS BIGINT)
-), kept AS MATERIALIZED (
-  SELECT s.scope, s.t,
-         CAST(CASE WHEN s.y > m.med THEN 1 ELSE 0 END AS BIGINT) AS s
-  FROM scoped s JOIN med m USING (scope)
-  WHERE s.y <> m.med
-), runs AS (
-  SELECT scope,
-         CAST(1 + sum(CASE WHEN prev IS NOT NULL AND s <> prev
-                           THEN 1 ELSE 0 END) AS BIGINT) AS r,
-         CAST(sum(s) AS BIGINT) AS n1,
-         CAST(sum(1 - s) AS BIGINT) AS n2
-  FROM (
-    SELECT scope, s,
-           lag(s, 1) OVER (PARTITION BY scope ORDER BY t) AS prev
-    FROM kept)
-  GROUP BY scope
-)
-SELECT r.scope, r.r, r.n1, r.n2, m.med,
-       round(2.0 * CAST(r.n1 AS DOUBLE) * CAST(r.n2 AS DOUBLE)
-             / (CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE)) + 1.0, 6)
-         AS expected_r,
-       round((CAST(r.r AS DOUBLE)
-              - (2.0 * CAST(r.n1 AS DOUBLE) * CAST(r.n2 AS DOUBLE)
-                 / (CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE)) + 1.0))
-             / sqrt(2.0 * CAST(r.n1 AS DOUBLE) * CAST(r.n2 AS DOUBLE)
-                    * (2.0 * CAST(r.n1 AS DOUBLE) * CAST(r.n2 AS DOUBLE)
-                       - CAST(r.n1 AS DOUBLE) - CAST(r.n2 AS DOUBLE))
-                    / ((CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE))
-                       * (CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE))
-                       * (CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE)
-                          - 1.0))), 6) AS z,
-       CASE WHEN abs((CAST(r.r AS DOUBLE)
-              - (2.0 * CAST(r.n1 AS DOUBLE) * CAST(r.n2 AS DOUBLE)
-                 / (CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE)) + 1.0))
-             / sqrt(2.0 * CAST(r.n1 AS DOUBLE) * CAST(r.n2 AS DOUBLE)
-                    * (2.0 * CAST(r.n1 AS DOUBLE) * CAST(r.n2 AS DOUBLE)
-                       - CAST(r.n1 AS DOUBLE) - CAST(r.n2 AS DOUBLE))
-                    / ((CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE))
-                       * (CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE))
-                       * (CAST(r.n1 AS DOUBLE) + CAST(r.n2 AS DOUBLE)
-                          - 1.0)))) > {_MK_CRIT}
-            THEN 'reject' ELSE 'random' END AS verdict
-FROM runs r JOIN med m USING (scope)
 """
 
 
@@ -12150,449 +8383,6 @@ FROM d{BFS_ROUNDS} d CROSS JOIN root CROSS JOIN ecc CROSS JOIN conv
 """
 
 
-# --------------------------------------------------------------------------
-# Haar wavelet energy (`haar_energy`): the multiresolution decomposition
-# of the hourly series — UNNORMALIZED Haar (pairwise sums and
-# differences), so every coefficient at every level is an exact BIGINT
-# and the per-level detail energies Σd² are integer-exact (the
-# time-frequency face: autocorrelation sees periodicity, seasonal_
-# decompose a fixed period; wavelet energies localize WHICH scale the
-# variance lives at — the 16-32h band dominates on this daily-cycled
-# corpus, asserted). The series truncates to the largest power of two
-# (512 of ~720 hours) for clean dyadic levels; HAAR_LEVELS levels of
-# (approx, detail) via pair aggregation; Parseval-style accounting is
-# exact because nothing is normalized.
-#
-# Scale shape: each level is one (t div 2) groupBy over the bounded
-# series (pairs = map-side combinable min/max-position sums); L levels
-# of summary-sized frames.
-# --------------------------------------------------------------------------
-
-HAAR_LEVELS = 5
-
-
-def q_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias("h")
-    )
-    cnt = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count("*").alias("c")
-    )
-    w = Window.orderBy("h")  # bounded hourly summary
-    ser0 = (
-        grid.join(cnt, "h", "left")
-        .select("h", F.coalesce("c", F.lit(0)).cast("long").alias("a"))
-        .select("a", (F.row_number().over(w) - 1).cast("long").alias("t"))
-    )
-    n2 = ser0.agg(
-        F.expr(
-            "cast(pow(2, floor(log2(count(*)))) as bigint)"
-        ).alias("m")
-    )
-    approx = (
-        ser0.crossJoin(F.broadcast(n2))
-        .filter(F.col("t") < F.col("m"))
-        .select("t", "a")
-        .localCheckpoint(eager=True)
-    )
-    out = None
-    for lvl in range(1, HAAR_LEVELS + 1):
-        paired = approx.groupBy(
-            F.expr("cast(t div 2 as bigint)").alias("t")
-        ).agg(
-            F.sum(
-                F.when(F.col("t") % 2 == 0, F.col("a")).otherwise(0)
-            ).alias("x0"),
-            F.sum(
-                F.when(F.col("t") % 2 == 1, F.col("a")).otherwise(0)
-            ).alias("x1"),
-        )
-        level = paired.select(
-            "t",
-            (F.col("x0") + F.col("x1")).cast("long").alias("a"),
-            (F.col("x0") - F.col("x1")).cast("long").alias("d"),
-        ).localCheckpoint(eager=True)
-        stats = level.agg(
-            F.count("*").cast("long").alias("n_coeffs"),
-            F.sum(F.col("d") * F.col("d")).cast("long").alias("detail_energy"),
-            F.sum(F.col("a") * F.col("a")).cast("long").alias("approx_energy"),
-        ).select(
-            F.lit(lvl).cast("long").alias("level"),
-            F.lit(2 ** lvl).cast("long").alias("scale_hours"),
-            "n_coeffs",
-            "detail_energy",
-            "approx_energy",
-        )
-        out = stats if out is None else out.unionByName(stats)
-        approx = level.select("t", "a")
-    return out
-
-
-def _sql_haar_energy() -> str:
-    levels = []
-    for lvl in range(1, HAAR_LEVELS + 1):
-        p = f"l{lvl - 1}"
-        levels.append(
-            f"""l{lvl} AS MATERIALIZED (
-  SELECT CAST(t // 2 AS BIGINT) AS t,
-         CAST(sum(CASE WHEN t % 2 = 0 THEN a ELSE 0 END)
-              + sum(CASE WHEN t % 2 = 1 THEN a ELSE 0 END) AS BIGINT) AS a,
-         CAST(sum(CASE WHEN t % 2 = 0 THEN a ELSE 0 END)
-              - sum(CASE WHEN t % 2 = 1 THEN a ELSE 0 END) AS BIGINT) AS d
-  FROM {p} GROUP BY t // 2
-), s{lvl} AS (
-  SELECT CAST({lvl} AS BIGINT) AS level,
-         CAST({2 ** lvl} AS BIGINT) AS scale_hours,
-         CAST(count(*) AS BIGINT) AS n_coeffs,
-         CAST(sum(d * d) AS BIGINT) AS detail_energy,
-         CAST(sum(a * a) AS BIGINT) AS approx_energy
-  FROM l{lvl}
-)"""
-        )
-    chain = ", ".join(levels)
-    sel = "\nUNION ALL\n".join(
-        f"SELECT * FROM s{lvl}" for lvl in range(1, HAAR_LEVELS + 1)
-    )
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser0 AS MATERIALIZED (
-  SELECT CAST(row_number() OVER (ORDER BY g.h) - 1 AS BIGINT) AS t,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS a
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), n2 AS (
-  SELECT CAST(pow(2, floor(log2(count(*)))) AS BIGINT) AS m FROM ser0
-), l0 AS MATERIALIZED (
-  SELECT t, a FROM ser0 CROSS JOIN n2 WHERE t < n2.m
-), {chain}
-{sel}
-"""
-
-
-# --------------------------------------------------------------------------
-# Theil-Sen slope (`theil_sen`): the robust trend ESTIMATOR companion to
-# mann_kendall's trend TEST (Sen 1968) — the median of all pairwise
-# slopes, immune to the outliers that wreck OLS. Shares mann_kendall's
-# scopes: 'same' (slope ≈ 0) and 'trended' (the planted +t·MK_RATE/
-# MK_GRID staircase drift — the estimate must recover ≈ MK_RATE/MK_GRID,
-# asserted within 20%). Every pairwise slope is ONE division of exact
-# integers (bit-identical doubles), the median is an exact rank with the
-# (t_i, t_j) tie-break, and the intercept is the exact-rank median of
-# y − slope·t. The median pair's (t_i, t_j) ride along as the integer
-# parity anchor.
-#
-# Scale shape: the O(n²) pair join runs over the BOUNDED hourly summary
-# (mann_kendall's class); medians via exact_global_rank
-# (range-partitioned) on Spark, row_number in DuckDB.
-# --------------------------------------------------------------------------
-
-
-def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    # ONE corpus pass (round 7, guide §2.4/§5 — the pagerank discipline):
-    # the hourly count table is bounded by the fixed 720-hour event window
-    # at any SF (verified 719h span at sf0.001/0.01/0.1), and the grid
-    # bounds are its own min/max keys, so a single map-side-aggregated
-    # groupBy carries everything. The O(|hours|^2) pairwise slopes and
-    # both exact-rank medians (identical (slope, ti, tj) / (r, t)
-    # orderings, rank (n+1) div 2) then run on the driver — replacing 4
-    # localCheckpoints and ~10 shuffle/rank jobs per call.
-    cnt = {
-        r["h"]: r["c"]
-        for r in ev.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("h")
-        )
-        .agg(F.count("*").alias("c"))
-        .collect()
-    }
-    import datetime as _dt
-
-    hours = sorted(cnt)
-    rows = []
-    if hours:
-        h0, h1 = hours[0], hours[-1]
-        grid = []
-        h = h0
-        while h <= h1:
-            grid.append(h)
-            h = h + _dt.timedelta(hours=1)
-        xs = [cnt.get(h, 0) for h in grid]
-        ts = list(range(1, len(grid) + 1))
-        for scope in ("same", "trended"):
-            if scope == "trended":
-                ys = [x + (t * MK_RATE) // MK_GRID for x, t in zip(xs, ts)]
-            else:
-                ys = xs
-            pairs = [
-                ((ys[j] - ys[i]) / (ts[j] - ts[i]), ts[i], ts[j])
-                for i in range(len(ts))
-                for j in range(i + 1, len(ts))
-            ]
-            pairs.sort()
-            n_pairs = len(pairs)
-            if n_pairs == 0:  # single-hour grid: no median row (as before)
-                continue
-            med_slope, med_ti, med_tj = pairs[(n_pairs + 1) // 2 - 1]
-            resid = sorted(
-                (y - med_slope * t, t) for t, y in zip(ts, ys)
-            )
-            intercept = resid[(len(resid) + 1) // 2 - 1][0]
-            rows.append(
-                (scope, n_pairs, med_ti, med_tj, med_slope, intercept)
-            )
-    return spark.createDataFrame(
-        rows,
-        "scope string, n_pairs long, med_ti long, med_tj long, "
-        "med_slope double, intercept double",
-    ).select(
-        "scope",
-        "n_pairs",
-        "med_ti",
-        "med_tj",
-        F.round("med_slope", 6).alias("slope"),
-        F.round("intercept", 6).alias("intercept"),
-    )
-
-
-def _sql_theil_sen() -> str:
-    scopes = []
-    for scope in ("same", "trended"):
-        yexpr = (
-            f"x + CAST((t * {MK_RATE}) // {MK_GRID} AS BIGINT)"
-            if scope == "trended"
-            else "x"
-        )
-        scopes.append(f"SELECT '{scope}' AS scope, t, {yexpr} AS y FROM ser")
-    scoped_union = "\n  UNION ALL\n  ".join(scopes)
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, count(*) AS c
-  FROM events GROUP BY 1
-), ser AS MATERIALIZED (
-  SELECT CAST(row_number() OVER (ORDER BY g.h) AS BIGINT) AS t,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS x
-  FROM grid g LEFT JOIN cnt c ON c.h = g.h
-), scoped AS MATERIALIZED (
-  {scoped_union}
-), pairs AS MATERIALIZED (
-  SELECT a.scope, a.t AS ti, b.t AS tj,
-         CAST(b.y - a.y AS DOUBLE) / CAST(b.t - a.t AS DOUBLE) AS slope
-  FROM scoped a JOIN scoped b ON b.scope = a.scope AND b.t > a.t
-), med AS MATERIALIZED (
-  SELECT scope, slope AS med_slope, ti AS med_ti, tj AS med_tj,
-         n AS n_pairs
-  FROM (
-    SELECT scope, slope, ti, tj,
-           row_number() OVER (PARTITION BY scope
-                              ORDER BY slope, ti, tj) AS rk,
-           count(*) OVER (PARTITION BY scope) AS n
-    FROM pairs)
-  WHERE rk = CAST((n + 1) // 2 AS BIGINT)
-), inter AS MATERIALIZED (
-  SELECT scope, r AS intercept FROM (
-    SELECT s.scope,
-           CAST(s.y AS DOUBLE) - m.med_slope * CAST(s.t AS DOUBLE) AS r,
-           row_number() OVER (PARTITION BY s.scope
-                              ORDER BY CAST(s.y AS DOUBLE)
-                                       - m.med_slope
-                                         * CAST(s.t AS DOUBLE), s.t)
-             AS rk,
-           count(*) OVER (PARTITION BY s.scope) AS n
-    FROM scoped s JOIN med m USING (scope))
-  WHERE rk = CAST((n + 1) // 2 AS BIGINT)
-)
-SELECT m.scope, CAST(m.n_pairs AS BIGINT) AS n_pairs,
-       m.med_ti, m.med_tj,
-       round(m.med_slope, 6) AS slope,
-       round(i.intercept, 6) AS intercept
-FROM med m JOIN inter i USING (scope)
-"""
-
-
-# --------------------------------------------------------------------------
-# Poisson dispersion test (`poisson_dispersion`): the count-model
-# diagnostic — is a per-type hourly arrival series consistent with a
-# Poisson process (D = s²/x̄ ≈ 1), overdispersed (bursty/clustered,
-# D > 1) or underdispersed (regularized, D < 1)? Fisher's index with
-# the normal approximation z = (D−1)·√((n−1)/2) at |z| > 1.959964.
-# The five real event types ride alongside two PLANTED series that pin
-# both verdict branches: 'planted_burst' (the corpus series doubled on
-# alternating 12-hour blocks — strongly overdispersed) and
-# 'planted_const' (a constant series — D = 0, underdispersed). Moments
-# are BIGINT over the dense per-type grid; D/z are fixed-order doubles.
-#
-# Scale shape: the dense grid is hour-sequence × types (broadcast);
-# counts one map-side agg; everything downstream is |types|-sized.
-# --------------------------------------------------------------------------
-
-PD_BLOCK_H = 12  # planted burst: counts double on alternating blocks
-PD_CONST = 5
-
-
-def q_poisson_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour"))).alias("h")
-    )
-    types = ev.select("event_type").distinct()
-    cnt = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("h"), "event_type"
-    ).agg(F.count("*").alias("c"))
-    w = Window.orderBy("h")
-    idx = grid.select("h", (F.row_number().over(w) - 1).cast("long").alias("t"))
-    ser = (
-        idx.crossJoin(F.broadcast(types))
-        .join(cnt, ["h", "event_type"], "left")
-        .select(
-            F.col("event_type").alias("series"),
-            "t",
-            F.coalesce("c", F.lit(0)).cast("long").alias("x"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    total = ser.groupBy("t").agg(F.sum("x").cast("long").alias("x"))
-    burst = total.select(
-        F.lit("planted_burst").alias("series"),
-        "t",
-        F.when(
-            F.expr(f"(t div {PD_BLOCK_H}) % 2 = 0"), 2 * F.col("x")
-        )
-        .otherwise(F.col("x"))
-        .cast("long")
-        .alias("x"),
-    )
-    const = idx.select(
-        F.lit("planted_const").alias("series"),
-        "t",
-        F.lit(PD_CONST).cast("long").alias("x"),
-    )
-    allser = ser.unionByName(burst).unionByName(const)
-    per = allser.groupBy("series").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("x").cast("long").alias("s"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("ss"),
-    )
-    nd = F.col("n").cast("double")
-    mean = F.col("s").cast("double") / nd
-    var = (F.col("ss").cast("double") - nd * mean * mean) / (nd - F.lit(1.0))
-    disp = var / mean
-    z = (disp - F.lit(1.0)) * F.sqrt((nd - F.lit(1.0)) / F.lit(2.0))
-    verdict = (
-        F.when(z > _MK_CRIT, F.lit("overdispersed"))
-        .when(z < -_MK_CRIT, F.lit("underdispersed"))
-        .otherwise(F.lit("poisson"))
-    )
-    return per.select(
-        "series",
-        "n",
-        "s",
-        "ss",
-        F.round(mean, 6).alias("mean"),
-        F.round(var, 6).alias("var"),
-        F.round(disp, 6).alias("dispersion"),
-        F.round(z, 6).alias("z"),
-        verdict.alias("verdict"),
-    )
-
-
-def _sql_poisson_dispersion() -> str:
-    crit = _MK_CRIT
-    return f"""
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS h0,
-         date_trunc('hour', max(ts)) AS h1
-  FROM events
-), grid AS (
-  SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM bounds
-), idx AS MATERIALIZED (
-  SELECT h, CAST(row_number() OVER (ORDER BY h) - 1 AS BIGINT) AS t
-  FROM grid
-), types AS (
-  SELECT DISTINCT event_type FROM events
-), cnt AS (
-  SELECT date_trunc('hour', ts) AS h, event_type, count(*) AS c
-  FROM events GROUP BY 1, 2
-), ser AS MATERIALIZED (
-  SELECT ty.event_type AS series, i.t,
-         CAST(coalesce(c.c, 0) AS BIGINT) AS x
-  FROM idx i
-  CROSS JOIN types ty
-  LEFT JOIN cnt c ON c.h = i.h AND c.event_type = ty.event_type
-), total AS (
-  SELECT t, CAST(sum(x) AS BIGINT) AS x FROM ser GROUP BY t
-), allser AS MATERIALIZED (
-  SELECT series, t, x FROM ser
-  UNION ALL
-  SELECT 'planted_burst', t,
-         CAST(CASE WHEN (t // {PD_BLOCK_H}) % 2 = 0
-                   THEN 2 * x ELSE x END AS BIGINT)
-  FROM total
-  UNION ALL
-  SELECT 'planted_const', t, CAST({PD_CONST} AS BIGINT) FROM idx
-), per AS MATERIALIZED (
-  SELECT series, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS s,
-         CAST(sum(x * x) AS BIGINT) AS ss
-  FROM allser GROUP BY series
-)
-SELECT series, n, s, ss,
-       round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean,
-       round((CAST(ss AS DOUBLE)
-              - CAST(n AS DOUBLE) * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)))
-             / (CAST(n AS DOUBLE) - 1.0), 6) AS var,
-       round(((CAST(ss AS DOUBLE)
-               - CAST(n AS DOUBLE) * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                 * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)))
-              / (CAST(n AS DOUBLE) - 1.0))
-             / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)), 6) AS dispersion,
-       round((((CAST(ss AS DOUBLE)
-                - CAST(n AS DOUBLE) * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                  * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)))
-               / (CAST(n AS DOUBLE) - 1.0))
-              / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) - 1.0)
-             * sqrt((CAST(n AS DOUBLE) - 1.0) / 2.0), 6) AS z,
-       CASE WHEN (((CAST(ss AS DOUBLE)
-                - CAST(n AS DOUBLE) * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                  * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)))
-               / (CAST(n AS DOUBLE) - 1.0))
-              / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) - 1.0)
-             * sqrt((CAST(n AS DOUBLE) - 1.0) / 2.0) > {crit}
-              THEN 'overdispersed'
-            WHEN (((CAST(ss AS DOUBLE)
-                - CAST(n AS DOUBLE) * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                  * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)))
-               / (CAST(n AS DOUBLE) - 1.0))
-              / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) - 1.0)
-             * sqrt((CAST(n AS DOUBLE) - 1.0) / 2.0) < -{crit}
-              THEN 'underdispersed'
-            ELSE 'poisson' END AS verdict
-FROM per
-"""
-
-
 QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]]] = {
     "fusion": (q_fusion, SQL_FUSION),
     "fusion_events": (q_fusion_events, SQL_FUSION_EVENTS),
@@ -12677,9 +8467,7 @@ QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]
     "dup_longest": (q_dup_longest, _sql_dup_longest()),
     "span_scrub": (q_span_scrub, _sql_span_scrub()),
     "split_leakage": (q_split_leakage, _sql_split_leakage()),
-    "event_transitions": (q_event_transitions, _sql_event_transitions()),
     "pagerank": (q_pagerank, _sql_pagerank()),
-    "event_funnel": (q_event_funnel, _sql_event_funnel()),
     "mojibake_fix": (q_mojibake_fix, _sql_mojibake_fix()),
     "crawl_frontier": (q_crawl_frontier, _sql_crawl_frontier()),
     "robots_filter": (q_robots_filter, _sql_robots_filter()),
@@ -12688,41 +8476,9 @@ QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]
     "nfc_normalize": (q_nfc_normalize, _sql_nfc_normalize()),
     "lpa_communities": (q_lpa_communities, _sql_lpa_communities()),
     "lm_kneser_ney": (q_lm_kneser_ney, _sql_lm_kneser_ney()),
-    "tpch_pricing": (q_tpch_pricing, _sql_tpch_pricing()),
-    "tpch_regional_revenue": (q_tpch_regional_revenue, _sql_tpch_regional_revenue()),
-    "holt_forecast": (q_holt_forecast, _sql_holt_forecast()),
-    "seasonal_mase": (q_seasonal_mase, _sql_seasonal_mase()),
-    "doc_cube": (q_doc_cube, _sql_doc_cube()),
-    "cohort_retention": (q_cohort_retention, _sql_cohort_retention()),
-    "cusum_changepoint": (q_cusum_changepoint, _sql_cusum_changepoint()),
-    "tpch_shipping": (q_tpch_shipping, _sql_tpch_shipping()),
-    "tpch_big_orders": (q_tpch_big_orders, _sql_tpch_big_orders()),
-    "rolling_anomaly": (q_rolling_anomaly, _sql_rolling_anomaly()),
     "triangle_count": (q_triangle_count, _sql_triangle_count()),
-    "data_profile": (q_data_profile, _sql_data_profile()),
-    "skyline": (q_skyline, _sql_skyline()),
-    "rfm_segments": (q_rfm_segments, _sql_rfm_segments()),
     "k_core": (q_k_core, _sql_k_core()),
-    "attribution": (q_attribution, _sql_attribution()),
-    "kaplan_meier": (q_kaplan_meier, _sql_kaplan_meier()),
-    "benford_test": (q_benford_test, _sql_benford_test()),
-    "window_funcs": (q_window_funcs, _sql_window_funcs()),
-    "seasonal_decompose": (q_seasonal_decompose, _sql_seasonal_decompose()),
-    "active_users": (q_active_users, _sql_active_users()),
-    "diff_in_diff": (q_diff_in_diff, _sql_diff_in_diff()),
-    "json_extract": (q_json_extract, _sql_json_extract()),
-    "mann_kendall": (q_mann_kendall, _sql_mann_kendall()),
-    "pivot_table": (q_pivot_table, _sql_pivot_table()),
-    "ips_eval": (q_ips_eval, _sql_ips_eval()),
     "critical_path": (q_critical_path, _sql_critical_path()),
-    "autocorrelation": (q_autocorrelation, _sql_autocorrelation()),
-    "ohlc_bars": (q_ohlc_bars, _sql_ohlc_bars()),
     "assortativity": (q_assortativity, _sql_assortativity()),
-    "interarrival_stats": (q_interarrival_stats, _sql_interarrival_stats()),
-    "ref_integrity": (q_ref_integrity, _sql_ref_integrity()),
-    "runs_test": (q_runs_test, _sql_runs_test()),
     "bfs_hops": (q_bfs_hops, _sql_bfs_hops()),
-    "haar_energy": (q_haar_energy, _sql_haar_energy()),
-    "theil_sen": (q_theil_sen, _sql_theil_sen()),
-    "poisson_dispersion": (q_poisson_dispersion, _sql_poisson_dispersion()),
 }

@@ -48,18 +48,6 @@ DECODE_RESULT_TYPE = StructType(
     ]
 )
 
-# input: per word, an array of per-position candidate lists
-CANDIDATES_TYPE = ArrayType(
-    ArrayType(
-        StructType(
-            [
-                StructField("character", StringType(), True),
-                StructField("confidence", DoubleType(), True),
-            ]
-        )
-    )
-)
-
 PARSE_RESULT_TYPE = StructType(
     [
         StructField("corrected_text", StringType(), True),
@@ -334,24 +322,6 @@ def q_paragraph_decode(spark, sf_dir: str):
     return staged.select("doc_id", decode(F.col("pjson")).alias("p")).select(
         "doc_id", F.col("p.text").alias("text"), F.col("p.n_lines").alias("n_lines")
     )
-
-
-def q_beam_decode(spark, sf_dir: str):
-    """Rows-only driver query: deterministic synthetic candidate matrices
-    from document tokens (confidence = stable per-char hash), decoded
-    against the drug lexicon with diseases as broad lexicon."""
-    from ..dictionaries import DISEASES_SINGLE, DRUGS_SINGLE
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = F.slice(
-        F.regexp_extract_all(F.upper(F.col("text")), F.lit("[A-Z]+"), 0), 1, 5
-    )
-    words = docs.select("doc_id", F.posexplode(toks).alias("word_idx", "word"))
-    cands = _word_candidates_col(F.col("word"))
-    decode = make_beam_decode_udf(DRUGS_SINGLE + DISEASES_SINGLE, DRUGS_SINGLE)
-    return words.select(
-        "doc_id", "word_idx", decode(cands).alias("decoded")
-    ).select("doc_id", "word_idx", "decoded.*")
 
 
 def q_parse(spark, sf_dir: str):

@@ -57,6 +57,28 @@ SHINGLE_N = 3
 NUM_HASHES = 32
 BANDS = 8  # 8 bands x 4 rows → catches jaccard ≳ 0.6 reliably
 
+
+def token_barrier(df: DataFrame, toks_expr, keep_cols=(), alias: str = "t"):
+    """Materialize a token-array expression behind a cheap round-robin
+    exchange and return the projected frame — THE load-bearing idiom for
+    every windowed/shingled construction over token arrays (MinHash
+    shingles here, and the n-gram queries in ``driver_queries``).
+
+    Why it exists (single source for the trap): Spark performs no
+    loop-invariant hoisting inside higher-order-function lambdas, and
+    CollapseProject inlines a tokenizing regexp projection into any lambda
+    that references it — so a shingle/window lambda over the raw
+    expression re-tokenizes the document once PER WINDOW (measured 6x the
+    whole operator cost at sf0.1). After the exchange the lambda reads a
+    plain attribute. If a Spark upgrade ever hoists lambda-invariant
+    subexpressions, delete THIS helper and every call site reverts
+    together."""
+    spark = df.sparkSession
+    return df.select(*keep_cols, toks_expr.alias(alias)).repartition(
+        spark.sparkContext.defaultParallelism
+    )
+
+
 # FNV-1a 64-bit constants — shared by the SimHash UDF and its DuckDB oracle
 _FNV_OFFSET = 0xCBF29CE484222325
 _FNV_PRIME = 0x100000001B3
@@ -122,10 +144,7 @@ def minhash_signatures(
         raise ValueError(f"unknown base_hash {base_hash!r}")
     # tokenize ONCE per doc and pin it behind a cheap round-robin exchange
     # (CollapseProject would otherwise inline the regexp into the shingle
-    # lambda → re-tokenize per window; single source for the trap:
-    # driver_queries.token_barrier)
-    from ..driver_queries import token_barrier
-
+    # lambda → re-tokenize per window; see token_barrier)
     toked = token_barrier(
         df.select(F.col(id_col).alias("doc_id"), F.col(text_col)),
         F.regexp_extract_all(

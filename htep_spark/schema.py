@@ -154,12 +154,3 @@ EXTRACTION_RESULT_TYPE = StructType(
         StructField("metrics", METRICS_TYPE, True),
     ]
 )
-
-# Full output row schema: input keys + result struct flattened alongside.
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("turn_idx", IntegerType(), False),
-        StructField("result", EXTRACTION_RESULT_TYPE, True),
-    ]
-)

@@ -27,11 +27,6 @@ import pandas as pd
 
 from ..dictionaries import DISEASES_SINGLE, DRUGS_SINGLE
 
-TESTDATA_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
 
 def get_spark(app_name: str = "htep-spark", cores: Optional[int] = None,
               shuffle_partitions: Optional[int] = None, extra_conf: Optional[dict] = None):
@@ -58,10 +53,6 @@ def get_spark(app_name: str = "htep-spark", cores: Optional[int] = None,
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_table(spark, sf_dir: str, name: str):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def write_bucketed_transcripts(df, table_name: str, n_buckets: int = 32) -> None:

@@ -734,11 +734,11 @@ def stream_active_users(
     window_duration: str = "1 day",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Streaming per-window distinct active users — the DAU feed of the
-    batch ``active_users`` operator (driver_queries.py), built from the
-    two chained stateful operators Structured Streaming supports since
-    the multi-stateful-operator lift: a watermark-bounded
-    ``dropDuplicates`` on (window, user) followed by a windowed count.
+    """Streaming per-window distinct active users (daily actives at the
+    default one-day window), built from the two chained stateful
+    operators Structured Streaming supports since the
+    multi-stateful-operator lift: a watermark-bounded ``dropDuplicates``
+    on (window, user) followed by a windowed count.
 
     State is O(distinct users per open window) for the dedup plus one
     counter per window; the watermark bounds open windows, so state is

@@ -281,6 +281,35 @@ def test_bench_headline_names_resolve():
     assert not missing, f"bench.py headline names missing from QUERIES: {missing}"
 
 
+def test_bench_extras_names_resolve():
+    """Every name in bench.py's extras loop is in ``QUERIES``: the loop
+    indexes ``QUERIES[name]`` with no skip, so a query cut from the
+    inventory must leave the tuple with it. Read through ``ast`` so
+    bench.py is never run."""
+    import ast
+    from pathlib import Path
+
+    from htep_spark.driver_queries import QUERIES
+
+    tree = ast.parse((Path(__file__).resolve().parents[1] / "bench.py").read_text())
+    # the extras loop is the one that stores into `extra_timings`
+    (extras,) = [
+        node.iter
+        for node in ast.walk(tree)
+        if isinstance(node, ast.For)
+        and any(
+            isinstance(n, ast.Subscript)
+            and isinstance(n.ctx, ast.Store)
+            and getattr(n.value, "id", None) == "extra_timings"
+            for n in ast.walk(node)
+        )
+    ]
+    names = [e.value for e in extras.elts]
+    assert names, "bench.py extras loop is empty"
+    missing = [n for n in names if n not in QUERIES]
+    assert not missing, f"bench.py extras names missing from QUERIES: {missing}"
+
+
 # htep_spark modules that no entry point imports, each kept on purpose
 _KEPT_WITHOUT_CONSUMER = {
     "htep_spark.streaming.stream": "the streaming path of the batch/streaming parity",

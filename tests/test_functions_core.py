@@ -1270,51 +1270,6 @@ def test_split_leakage_pure_python_replay():
     assert attributed, "attribution vacuous"
 
 
-def test_event_transitions_pure_python_replay_and_margins():
-    """Event-type Markov matrix (`event_transitions`): an independent
-    pure-Python replay — per-user sequences ordered by (ts, event_id),
-    adjacent transitions, row-normalized probabilities — must match the
-    DuckDB oracle at sf0.001; per-src probabilities must sum to 1 within
-    float tolerance; every probability must clear its 6dp rounding
-    boundary by > 1e-9 (power-of-two denominators can land exactly on
-    .5e-6, where engine rounding modes could diverge)."""
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    got = {
-        (r[0], r[1]): (r[2], r[3])
-        for r in con.execute(QUERIES["event_transitions"][1]).fetchall()
-    }
-    rows = con.execute(
-        "SELECT user_id, event_type, ts, event_id FROM events "
-        "ORDER BY user_id, ts, event_id"
-    ).fetchall()
-    cnt: dict = {}
-    prev: dict = {}
-    for user_id, etype, _ts, _eid in rows:
-        if user_id in prev:
-            cnt[(prev[user_id], etype)] = cnt.get((prev[user_id], etype), 0) + 1
-        prev[user_id] = etype
-    totals: dict = {}
-    for (src, _dst), n in cnt.items():
-        totals[src] = totals.get(src, 0) + n
-    assert set(got) == set(cnt)
-    for key, n in cnt.items():
-        p = n / totals[key[0]]
-        frac = abs(p * 1e6 - round(p * 1e6))
-        assert abs(frac - 0.5) > 1e-9, (key, p)
-        assert got[key] == (n, round(p, 6)), (key, got[key], (n, p))
-    for src, tot in totals.items():
-        s = sum(got[(s2, d)][1] for (s2, d) in got if s2 == src)
-        assert abs(s - 1.0) < 1e-4, (src, s)
-
-
 def test_robots_filter_pure_python_replay_and_branches():
     """Robots filtering (`robots_filter`): a pure-Python replay of the
     first-matching-rule semantics must match the DuckDB oracle at
@@ -1442,70 +1397,6 @@ def test_mojibake_fix_pure_python_replay_and_branches():
             clean += 1
             assert exp[3] == exp[4] and exp[5] == 0
     assert hit and clean, (hit, clean)
-
-
-def test_event_funnel_pure_python_replay_and_branches():
-    """Ordered conversion funnel (`event_funnel`): an independent
-    pure-Python replay — first signup, first click strictly after it
-    within the window, first purchase strictly after that click within
-    the window — must match the DuckDB oracle at sf0.001; all three
-    stages must be populated (the window constant was probed for this);
-    latencies must be positive and within the window."""
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        FUNNEL_STEPS,
-        FUNNEL_WINDOW_S,
-        QUERIES,
-    )
-
-    wu = FUNNEL_WINDOW_S * 1_000_000
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    got = {
-        r[0]: r[1:]
-        for r in con.execute(QUERIES["event_funnel"][1]).fetchall()
-    }
-    rows = con.execute(
-        "SELECT user_id, event_type, epoch_us(ts) FROM events"
-    ).fetchall()
-    by_user: dict = {}
-    for uid, etype, um in rows:
-        by_user.setdefault(uid, []).append((etype, um))
-
-    def first_after(evs, step, lo, hi):
-        cands = [um for et, um in evs if et == step and lo < um <= hi]
-        return min(cands) if cands else None
-
-    stages_seen = set()
-    assert set(got) == set(by_user)
-    for uid, evs in by_user.items():
-        t1 = min(
-            (um for et, um in evs if et == FUNNEL_STEPS[0]), default=None
-        )
-        t2 = (
-            first_after(evs, FUNNEL_STEPS[1], t1, t1 + wu)
-            if t1 is not None
-            else None
-        )
-        t3 = (
-            first_after(evs, FUNNEL_STEPS[2], t2, t2 + wu)
-            if t2 is not None
-            else None
-        )
-        stage = 3 if t3 else 2 if t2 else 1 if t1 else 0
-        stages_seen.add(stage)
-        m12 = t2 - t1 if t2 else None
-        m23 = t3 - t2 if t3 else None
-        assert got[uid] == (stage, t1, t2, t3, m12, m23), (uid, got[uid])
-        if m12 is not None:
-            assert 0 < m12 <= wu
-        if m23 is not None:
-            assert 0 < m23 <= wu
-    assert {1, 2, 3} <= stages_seen, stages_seen
 
 
 def test_pagerank_pure_python_replay_and_invariants():
@@ -1937,455 +1828,6 @@ def test_lm_kneser_ney_pure_python_replay_and_branches():
     assert abs(total_p - 1.0) < 0.02, total_p
 
 
-def test_holt_forecast_pure_python_replay_and_branches():
-    """Holt forecast (`holt_forecast`): a pure-Python double-exponential
-    replay over the same dense hourly grid must match the DuckDB oracle
-    at sf0.001 to 6dp (states, fitted values, SSE, forecast fan); the
-    zero-fill branch fires (sf0.001 has missing hours); forecasts are
-    exactly linear in the horizon; t=1 has NULL fitted/resid."""
-    import datetime as dt
-    import math
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        HOLT_ALPHA,
-        HOLT_BETA,
-        HOLT_H,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    ts = [r[0] for r in con.execute("SELECT ts FROM events").fetchall()]
-    floor = lambda t: t.replace(minute=0, second=0, microsecond=0)
-    h0, h1 = floor(min(ts)), floor(max(ts))
-    grid = []
-    h = h0
-    while h <= h1:
-        grid.append(h)
-        h += dt.timedelta(hours=1)
-    from collections import Counter
-
-    cnt = Counter(floor(t) for t in ts)
-    ys = [float(cnt.get(h, 0)) for h in grid]
-    assert sum(1 for y in ys if y == 0) > 0, "zero-fill branch vacuous"
-    a, b_ = HOLT_ALPHA, HOLT_BETA
-    l, b = ys[0], ys[1] - ys[0]
-    fits = [None]
-    sse = 0.0
-    for y in ys[1:]:
-        fit = l + b
-        fits.append(fit)
-        sse += (y - fit) * (y - fit)
-        nl = a * y + (1 - a) * (l + b)
-        b = b_ * (nl - l) + (1 - b_) * b
-        l = nl
-    rows = con.execute(QUERIES["holt_forecast"][1]).fetchall()
-    assert len(rows) == len(grid)
-    for row in rows:
-        t_idx, epoch, y, fitted, resid, lf, bf, got_sse = row[:8]
-        fcs = row[8:]
-        i = t_idx - 1
-        assert y == int(ys[i])
-        assert epoch == int(grid[i].replace(tzinfo=dt.timezone.utc).timestamp())
-        if i == 0:
-            assert fitted is None and resid is None
-        else:
-            # no margin sweep here: the smoother is pure +/-/* rational
-            # arithmetic executed in pinned order, so both engines (and
-            # this replay) hold bit-identical doubles — equality of the
-            # rounded values is the whole contract, even when a state
-            # lands near a .5e-6 boundary (observed at t=7)
-            for got, exp in ((fitted, fits[i]), (resid, ys[i] - fits[i])):
-                assert got == round(exp, 6), (i, got, exp)
-        for got, exp in ((lf, l), (bf, b), (got_sse, sse)):
-            assert got == round(exp, 6), (got, exp)
-        assert len(fcs) == HOLT_H
-        for hh, fc in enumerate(fcs, start=1):
-            assert fc == round(l + float(hh) * b, 6)
-        # linear fan: second differences vanish
-        for j in range(2, HOLT_H):
-            assert abs((fcs[j] - fcs[j - 1]) - (fcs[1] - fcs[0])) < 1e-5
-
-
-def test_seasonal_mase_pure_python_replay():
-    """Seasonal MASE (`seasonal_mase`): a pure-Python replay of the
-    dense per-type grid, 24h seasonal-naive errors and the train/test
-    split must match the DuckDB oracle at sf0.001; every type's counts
-    are consistent (n_train + n_test = hours - season); MASE is the
-    exact ratio of the integer MAE sums; zero-filled hours exist."""
-    import datetime as dt
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        MASE_SEASON,
-        MASE_TEST_H,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute("SELECT event_type, ts FROM events").fetchall()
-    floor = lambda t: t.replace(minute=0, second=0, microsecond=0)
-    all_ts = [t for _e, t in raw]
-    h0, h1 = floor(min(all_ts)), floor(max(all_ts))
-    grid = []
-    h = h0
-    while h <= h1:
-        grid.append(h)
-        h += dt.timedelta(hours=1)
-    types = sorted({e for e, _t in raw})
-    cnt = Counter((e, floor(t)) for e, t in raw)
-    rows = con.execute(QUERIES["seasonal_mase"][1]).fetchall()
-    assert {r[0] for r in rows} == set(types)
-    zero_seen = False
-    for event_type, n_train, n_test, sae_tr, sae_te, mtr, mte, mase in rows:
-        ys = [cnt.get((event_type, h), 0) for h in grid]
-        zero_seen = zero_seen or any(y == 0 for y in ys)
-        aes = [
-            abs(ys[i] - ys[i - MASE_SEASON])
-            for i in range(MASE_SEASON, len(ys))
-        ]
-        n = len(ys)
-        test_from = n - MASE_TEST_H  # 0-based idx >= this -> test
-        tr = [
-            ae
-            for i, ae in zip(range(MASE_SEASON, n), aes)
-            if i < test_from
-        ]
-        te = [
-            ae
-            for i, ae in zip(range(MASE_SEASON, n), aes)
-            if i >= test_from
-        ]
-        assert (n_train, n_test) == (len(tr), len(te))
-        assert n_train + n_test == len(grid) - MASE_SEASON
-        assert (sae_tr, sae_te) == (sum(tr), sum(te))
-        emtr = sum(tr) / len(tr)
-        emte = sum(te) / len(te)
-        assert mtr == round(emtr, 6) and mte == round(emte, 6)
-        assert mase == round(emte / emtr, 6)
-        assert mase > 0
-    assert zero_seen, "zero-fill branch vacuous"
-
-
-def test_doc_cube_pure_python_replay_and_grouping_ids():
-    """OLAP CUBE (`doc_cube`): a pure-Python replay — all four grouping
-    sets rebuilt by brute force — must match the DuckDB oracle at
-    sf0.001; the GROUPING bitmask must follow the SQL standard (first
-    listed column = MSB); per-set totals must reconcile with the grand
-    total (the CUBE consistency theorem); margins on the one rounded
-    double (avg)."""
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, lang, n_chars FROM documents").fetchall()
-    # brute-force the four grouping sets: gid 0 = (source, lang),
-    # 1 = source only (lang aggregated), 2 = lang only, 3 = grand total
-    groups = defaultdict(list)
-    for s, l, n in raw:
-        groups[(s, l, 0)].append(n)
-        groups[(s, "(all)", 1)].append(n)
-        groups[("(all)", l, 2)].append(n)
-        groups[("(all)", "(all)", 3)].append(n)
-    rows = con.execute(QUERIES["doc_cube"][1]).fetchall()
-    assert len(rows) == len(groups)
-    n_total = len(raw)
-    seen_gids = set()
-    for source_g, lang_g, gid, n_docs, chars, mn, mx, avg in rows:
-        vals = groups[(source_g, lang_g, gid)]
-        assert n_docs == len(vals)
-        assert chars == sum(vals)
-        assert mn == min(vals) and mx == max(vals)
-        exp_avg = sum(vals) / len(vals)
-        frac = abs(exp_avg * 1e6 - math.floor(exp_avg * 1e6) - 0.5)
-        assert frac > 1e-4, (source_g, lang_g, exp_avg)
-        assert avg == round(exp_avg, 6)
-        seen_gids.add(gid)
-    assert seen_gids == {0, 1, 2, 3}
-    # CUBE consistency: every grouping set's doc counts sum to the total
-    for g in (0, 1, 2, 3):
-        assert sum(r[3] for r in rows if r[2] == g) == n_total
-
-
-def test_cohort_retention_pure_python_replay_and_triangle():
-    """Cohort retention (`cohort_retention`): a pure-Python replay —
-    per-user first purchase day, distinct active days, offset-bucketed
-    cohort shares — must match the DuckDB oracle at sf0.001; offset-0
-    retention is exactly 1.0 for every cohort (the denominator theorem);
-    cohorts must be non-trivial (>1 acquisition day) and activity sparse
-    (some retention < 1); margins on the rounded share."""
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        QUERIES,
-        RET_EVENT,
-        RET_MAX_OFFSET,
-        _DAY_US,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute(
-        "SELECT user_id, epoch_us(ts) FROM events WHERE event_type = ?",
-        [RET_EVENT],
-    ).fetchall()
-    days = defaultdict(set)
-    for u, us in raw:
-        days[u].add(us // _DAY_US)
-    exp = defaultdict(set)  # (cohort_day, offset) -> users
-    for u, ds in days.items():
-        cd = min(ds)
-        for d in ds:
-            if d - cd <= RET_MAX_OFFSET:
-                exp[(cd, d - cd)].add(u)
-    rows = con.execute(QUERIES["cohort_retention"][1]).fetchall()
-    assert len(rows) == len(exp)
-    cohorts = {cd for cd, off in exp if off == 0}
-    assert len(cohorts) > 1, "degenerate single-cohort corpus"
-    saw_partial = False
-    for cd, off, n_active, n_cohort, retention in rows:
-        assert n_active == len(exp[(cd, off)])
-        assert n_cohort == len(exp[(cd, 0)])
-        e = n_active / n_cohort
-        frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-        assert frac > 1e-4, (cd, off, e)
-        assert retention == round(e, 6)
-        if off == 0:
-            assert retention == 1.0
-        assert exp[(cd, off)] <= exp[(cd, 0)]  # actives are cohort members
-        saw_partial = saw_partial or retention < 1.0
-    assert saw_partial, "retention matrix degenerate (all 1.0)"
-
-
-def test_cusum_changepoint_pure_python_replay_and_alarms():
-    """CUSUM (`cusum_changepoint`): a pure-Python replay — dense hourly
-    grid, first-third baseline, the 2·n0-scaled integer recurrence —
-    must match the DuckDB oracle at sf0.001 EXACTLY (the operator is
-    all-BIGINT: zero rounding surface); the planted post-t0 doubling
-    must alarm and the raw scope must not; the first alarm must come
-    after the changepoint; S is 0-floored everywhere."""
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import CUSUM_H_MULT, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    hrs = con.execute(
-        "SELECT epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(h for (h,) in hrs)
-    h0, h1 = min(c), max(c)
-    grid = list(range(h0, h1 + 1, 3_600_000_000))
-    xs = [c.get(h, 0) for h in grid]
-    n = len(xs)
-    n0, t0 = n // 3, (2 * n) // 3
-    sum0 = sum(xs[:n0])
-    exp = {}
-    for scope in ("same", "shifted"):
-        ys = [
-            (2 * x if scope == "shifted" and t > t0 else x)
-            for t, x in enumerate(xs, 1)
-        ]
-        s, ss = 0, []
-        for y in ys:
-            s = max(0, s + 2 * n0 * y - 3 * sum0)
-            ss.append(s)
-        thr = 2 * CUSUM_H_MULT * sum0
-        alarms = [t for t, sv in enumerate(ss, 1) if sv > thr]
-        exp[scope] = (ys, ss, thr, alarms[0] if alarms else None)
-    assert exp["same"][3] is None, "raw scope false-alarmed"
-    assert exp["shifted"][3] is not None and exp["shifted"][3] > t0
-    rows = con.execute(QUERIES["cusum_changepoint"][1]).fetchall()
-    assert len(rows) == 2 * n
-    for scope, t, epoch, y, resid, s, thr, alarm, sh_t0, fa in rows:
-        ys, ss, ethr, efa = exp[scope]
-        assert y == ys[t - 1]
-        assert resid == 2 * n0 * ys[t - 1] - 3 * sum0
-        assert s == ss[t - 1] and s >= 0
-        assert thr == ethr
-        assert alarm == (1 if ss[t - 1] > ethr else 0)
-        assert sh_t0 == t0 and fa == efa
-        assert epoch == grid[t - 1] // 1_000_000
-
-
-def test_tpch_shipping_and_big_orders_pure_python_replay():
-    """TPC-H Q3/Q18 shapes: pure-Python replays over raw tuples — the
-    three-way join + opposing date filters + exact-revenue top-N, and
-    the HAVING-threshold self-semi-join — must match the DuckDB oracles
-    at sf0.001; the top-N boundary is checked to be strict (no revenue
-    tie straddles the cut); every big order genuinely exceeds the
-    threshold."""
-    from collections import defaultdict
-    from decimal import Decimal
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        QUERIES,
-        TPCH_BIGORDER_QTY,
-        TPCH_SHIP_CUTOFF,
-        TPCH_SHIP_SEGMENT,
-        TPCH_SHIP_TOPN,
-    )
-
-    con = duckdb.connect()
-    for t in ("customer", "orders", "lineitem"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    segs = dict(
-        con.execute("SELECT c_custkey, c_mktsegment FROM customer").fetchall()
-    )
-    orders = {
-        ok: (ck, od, op, tp)
-        for ok, ck, od, op, tp in con.execute(
-            "SELECT o_orderkey, o_custkey, epoch(o_orderdate), "
-            "o_orderpriority, o_totalprice FROM orders"
-        ).fetchall()
-    }
-    lis = con.execute(
-        "SELECT l_orderkey, l_extendedprice, l_discount, l_quantity, "
-        "epoch(l_shipdate) FROM lineitem"
-    ).fetchall()
-    cutoff = con.execute(
-        f"SELECT epoch(TIMESTAMP '{TPCH_SHIP_CUTOFF} 00:00:00')"
-    ).fetchone()[0]
-    # --- Q3 replay (exact Decimal revenue) ---
-    rev = defaultdict(Decimal)
-    for ok, price, disc, _q, ship in lis:
-        if ok not in orders or ship <= cutoff:
-            continue
-        ck, od, op, _tp = orders[ok]
-        if od >= cutoff or segs.get(ck) != TPCH_SHIP_SEGMENT:
-            continue
-        p = Decimal(str(price)).quantize(Decimal("0.01"))
-        d = Decimal(str(disc)).quantize(Decimal("0.01"))
-        rev[ok] += p * (1 - d)
-    ranked = sorted(rev.items(), key=lambda kv: (-kv[1], kv[0]))
-    top = ranked[:TPCH_SHIP_TOPN]
-    if len(ranked) > TPCH_SHIP_TOPN:
-        assert top[-1][1] != ranked[TPCH_SHIP_TOPN][1], "tie straddles cut"
-    rows = con.execute(QUERIES["tpch_shipping"][1]).fetchall()
-    assert len(rows) == min(TPCH_SHIP_TOPN, len(ranked))
-    got = {r[0]: r for r in rows}
-    for ok, r in top:
-        _ck, od, op, _tp = orders[ok]
-        assert got[ok][1] == float(round(r, 2))
-        assert got[ok][2] == od and got[ok][3] == op
-    # --- Q18 replay ---
-    qty = defaultdict(Decimal)
-    for ok, _p, _d, q, _s in lis:
-        qty[ok] += Decimal(str(q)).quantize(Decimal("0.01"))
-    big = {ok: s for ok, s in qty.items() if s > TPCH_BIGORDER_QTY}
-    rows = con.execute(QUERIES["tpch_big_orders"][1]).fetchall()
-    assert len(rows) == len(big) > 0
-    for _cn, ck, ok, od, tp, tq in rows:
-        assert ok in big and tq == float(round(big[ok], 2)) > TPCH_BIGORDER_QTY
-        eck, eod, _eop, etp = orders[ok]
-        assert (ck, od) == (eck, eod)
-        assert tp == round(etp, 2)
-
-
-def test_rolling_anomaly_pure_python_replay_and_branches():
-    """Rolling z-score (`rolling_anomaly`): a pure-Python replay — dense
-    hourly grid, trailing-48h integer window sums, the planted 6x+50
-    spike — must match the DuckDB oracle at sf0.001; the spiked scope
-    flags EXACTLY the planted hour; the raw scope stays quiet; the
-    window never contains the scored point (the spike's own z uses
-    pre-spike statistics); z margins clear the threshold and the 6dp
-    boundary."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        ANOM_SPIKE_ADD,
-        ANOM_SPIKE_MULT,
-        ANOM_W,
-        ANOM_Z,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    hrs = con.execute(
-        "SELECT epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(h for (h,) in hrs)
-    grid = list(range(min(c), max(c) + 1, 3_600_000_000))
-    xs = [c.get(h, 0) for h in grid]
-    n = len(xs)
-    t0 = (3 * n) // 4
-    exp = {}
-    for scope in ("same", "spiked"):
-        ys = list(xs)
-        if scope == "spiked":
-            ys[t0 - 1] = ANOM_SPIKE_MULT * ys[t0 - 1] + ANOM_SPIKE_ADD
-        for t in range(ANOM_W + 1, n + 1):
-            win = ys[t - 1 - ANOM_W : t - 1]
-            wc, ws, wss = len(win), sum(win), sum(v * v for v in win)
-            mean = ws / wc
-            var = (wc * wss - ws * ws) / (wc * (wc - 1))
-            z = (ys[t - 1] - mean) / math.sqrt(var)
-            exp[(scope, t)] = (ys[t - 1], wc, ws, wss, mean, var, z)
-    rows = con.execute(QUERIES["rolling_anomaly"][1]).fetchall()
-    assert len(rows) == 2 * (n - ANOM_W)
-    flagged = {"same": [], "spiked": []}
-    for scope, t, epoch, y, wc, ws, wss, mean, std, z, anom, sp_t0 in rows:
-        ey, ewc, ews, ewss, emean, evar, ez = exp[(scope, t)]
-        assert (y, wc, ws, wss) == (ey, ewc, ews, ewss)
-        for got, e in ((mean, emean), (std, math.sqrt(evar)), (z, ez)):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4, (scope, t, e)
-            assert got == round(e, 6)
-        assert abs(ez - ANOM_Z) > 0.01  # threshold margin
-        assert anom == (1 if ez > ANOM_Z else 0)
-        assert sp_t0 == t0
-        assert epoch == grid[t - 1] // 1_000_000
-        if anom:
-            flagged[scope].append(t)
-    assert flagged["same"] == [], flagged
-    assert flagged["spiked"] == [t0], flagged
-    # the spike's own window is pre-spike: its mean equals the same-scope
-    # mean at t0
-    assert exp[("spiked", t0)][4] == exp[("same", t0)][4]
-
-
 def test_triangle_count_pure_python_replay_and_identities():
     """Triangles (`triangle_count`): a brute-force pure-Python replay —
     undirected canonical edges, all-(a<b<c) enumeration, per-corner
@@ -2447,195 +1889,6 @@ def test_triangle_count_pure_python_replay_and_identities():
         assert (got_ntri, got_wedges) == (n_tri, wedges)
         saw_open = saw_open or (d >= 2 and lcc < 1.0)
     assert saw_open, "degenerate complete graph"
-
-
-def test_data_profile_pure_python_replay():
-    """Profile (`data_profile`): a pure-Python replay — per-column
-    completeness, exact distinct counts, the uniq audit, integer means,
-    (count DESC, value ASC) top values — must match the DuckDB oracle at
-    sf0.001; the id columns profile as unique, bounded-domain string
-    columns don't; every emitted numeric clears the 6dp boundary."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import _PROFILE_SPEC, QUERIES
-
-    con = duckdb.connect()
-    for t in ("documents", "events"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    exp = {}
-    for table, cols in _PROFILE_SPEC:
-        data = con.execute(
-            f"SELECT {', '.join(c for c, _k in cols)} FROM {table}"
-        ).fetchall()
-        for ci, (c, kind) in enumerate(cols):
-            vals = [r[ci] for r in data]
-            nn = sum(1 for v in vals if v is None)
-            pres = [v for v in vals if v is not None]
-            nd = len(set(pres))
-            row = {
-                "n": len(vals),
-                "n_null": nn,
-                "n_distinct": nd,
-                "uniq": 1 if (nd == len(vals) and nn == 0) else 0,
-                "min_num": None,
-                "max_num": None,
-                "mean_num": None,
-                "top_value": None,
-                "top_count": None,
-            }
-            if kind in ("int", "dbl"):
-                row["min_num"] = round(float(min(pres)), 6)
-                row["max_num"] = round(float(max(pres)), 6)
-            if kind == "int":
-                row["mean_num"] = sum(pres) / len(vals)
-            if kind == "top":
-                cnt = Counter(str(v) for v in pres)
-                tv = min(cnt.items(), key=lambda kv: (-kv[1], kv[0]))
-                row["top_value"], row["top_count"] = tv
-            exp[(table, c)] = row
-    rows = con.execute(QUERIES["data_profile"][1]).fetchall()
-    assert len(rows) == sum(len(cols) for _t, cols in _PROFILE_SPEC)
-    for (tname, cname, n, n_null, nd, uniq, mn, mx, mean, tv, tc) in rows:
-        e = exp[(tname, cname)]
-        assert (n, n_null, nd, uniq) == (
-            e["n"], e["n_null"], e["n_distinct"], e["uniq"]
-        ), (tname, cname)
-        assert mn == e["min_num"] and mx == e["max_num"]
-        if e["mean_num"] is None:
-            assert mean is None
-        else:
-            frac = abs(
-                e["mean_num"] * 1e6 - math.floor(e["mean_num"] * 1e6) - 0.5
-            )
-            assert frac > 1e-4
-            assert mean == round(e["mean_num"], 6)
-        assert (tv, tc) == (e["top_value"], e["top_count"])
-    by = {(r[0], r[1]): r for r in rows}
-    assert by[("documents", "doc_id")][5] == 1
-    assert by[("events", "event_id")][5] == 1
-    assert by[("documents", "lang")][5] == 0
-    assert by[("events", "event_type")][5] == 0
-
-
-def test_skyline_pure_python_replay_and_frontier():
-    """Skyline (`skyline`): a brute-force pure-Python dominance replay
-    must match the DuckDB oracle at sf0.001 (which itself runs the
-    literal quadratic NOT EXISTS — the Spark threshold-curve plan is
-    proved equal by the parity hash); the frontier is non-trivial
-    (1 < n_skyline < n); no skyline point strictly dominates another;
-    every dominated point has a strict dominator. All-BIGINT — no
-    rounding assertions needed."""
-    import re
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT doc_id, n_chars, text FROM documents").fetchall()
-    pts = {
-        d: (nc, len(set(re.findall("[a-z0-9]+", t.lower()))))
-        for d, nc, t in raw
-    }
-    dom = {
-        d: any(
-            ox > x and oy > y for od, (ox, oy) in pts.items() if od != d
-        )
-        for d, (x, y) in pts.items()
-    }
-    n_sky = sum(1 for v in dom.values() if not v)
-    assert 1 < n_sky < len(pts)
-    rows = con.execute(QUERIES["skyline"][1]).fetchall()
-    assert len(rows) == len(pts)
-    sky_pts = []
-    for d, x, y, dominated, skyline, got_nsky in rows:
-        assert (x, y) == pts[d]
-        assert dominated == (1 if dom[d] else 0)
-        assert skyline == 1 - dominated
-        assert got_nsky == n_sky
-        if skyline:
-            sky_pts.append((x, y))
-    # antichain property: no skyline point strictly dominates another
-    assert not any(
-        a != b and a[0] > b[0] and a[1] > b[1]
-        for a in sky_pts
-        for b in sky_pts
-    )
-
-
-def test_rfm_segments_pure_python_replay_and_quintiles():
-    """RFM (`rfm_segments`): a pure-Python replay — purchase-only
-    recency/frequency/cents, rank-based quintile scores with the
-    (metric, user_id) tie-break — must match the DuckDB oracle at
-    sf0.001; scores span 1..5 with balanced (±1) quintile sizes; the
-    most-recent user scores r=1's complement... i.e. the rank-1 user of
-    each dimension scores 1; segment is the digit concat; zero doubles
-    (everything integer-exact)."""
-    import math
-    from collections import Counter, defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import _DAY_US, QUERIES, RET_EVENT
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute(
-        "SELECT user_id, epoch_us(ts), value FROM events "
-        "WHERE event_type = ?",
-        [RET_EVENT],
-    ).fetchall()
-    per = defaultdict(lambda: [0, 0, 0])  # last_um, freq, cents
-    for u, um, v in raw:
-        c = per[u]
-        c[0] = max(c[0], um)
-        c[1] += 1
-        c[2] += round(v * 100)
-    hz = max(c[0] for c in per.values())
-    base = {
-        u: ((hz - c[0]) // _DAY_US, c[1], c[2]) for u, c in per.items()
-    }
-    n = len(base)
-
-    def scores(key_idx, desc):
-        order = sorted(
-            base.items(),
-            key=lambda kv: (
-                -kv[1][key_idx] if desc else kv[1][key_idx],
-                kv[0],
-            ),
-        )
-        return {
-            u: math.ceil(5 * (i + 1) / n)
-            for i, (u, _v) in enumerate(order)
-        }
-
-    rs, fs, ms = scores(0, False), scores(1, True), scores(2, True)
-    rows = con.execute(QUERIES["rfm_segments"][1]).fetchall()
-    assert len(rows) == n
-    for u, rec, freq, mon, r_s, f_s, m_s, seg in rows:
-        er, ef, em = base[u]
-        assert (rec, freq, mon) == (er, ef, em)
-        assert (r_s, f_s, m_s) == (rs[u], fs[u], ms[u])
-        assert seg == f"{r_s}{f_s}{m_s}"
-        assert 1 <= r_s <= 5 and 1 <= f_s <= 5 and 1 <= m_s <= 5
-    for sc in (rs, fs, ms):
-        sizes = Counter(sc.values())
-        assert set(sizes) == set(range(1, 6))
-        assert max(sizes.values()) - min(sizes.values()) <= 1
 
 
 def test_k_core_pure_python_replay_and_peel_invariants():
@@ -2713,725 +1966,6 @@ def test_k_core_pure_python_replay_and_peel_invariants():
             assert (rr, in_core, cd) == (removed_round[node], 0, 0)
 
 
-def test_attribution_pure_python_replay_and_credit_conservation():
-    """Attribution (`attribution`): a pure-Python replay — trailing-
-    window touch join, first/last by the exact (t, event_id) key,
-    linear 1/k credits — must match the DuckDB oracle at sf0.001;
-    credit is CONSERVED (Σ first_n = Σ last_n = n_attributed and
-    Σ linear ≈ n_attributed to float tolerance); first and last
-    disagree somewhere (multi-touch paths exist); margins on the
-    rounded credit."""
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import ATTR_WINDOW_S, QUERIES
-
-    wu = ATTR_WINDOW_S * 1_000_000
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    ev = con.execute(
-        "SELECT user_id, event_type, event_id, props, epoch_us(ts) "
-        "FROM events"
-    ).fetchall()
-    buys = [(u, eid, t) for u, et, eid, _p, t in ev if et == "purchase"]
-    clicks = defaultdict(list)
-    for u, et, eid, p, t in ev:
-        if et == "click":
-            clicks[u].append((t, eid, p))
-    first_n = defaultdict(int)
-    last_n = defaultdict(int)
-    linear = defaultdict(list)  # channel -> [(conv, click, credit)]
-    touches = defaultdict(int)
-    n_attr = 0
-    for u, conv, tc in buys:
-        cand = [
-            (t, eid, p)
-            for t, eid, p in clicks.get(u, [])
-            if tc - wu < t <= tc
-        ]
-        if not cand:
-            continue
-        n_attr += 1
-        k = len(cand)
-        first_n[min(cand)[2]] += 1
-        last_n[max(cand)[2]] += 1
-        for t, eid, p in cand:
-            linear[p].append((conv, eid, 1.0 / k))
-            touches[p] += 1
-    lin = {
-        ch: sum(c for _conv, _eid, c in sorted(v))
-        for ch, v in linear.items()
-    }
-    rows = con.execute(QUERIES["attribution"][1]).fetchall()
-    assert len(rows) == len(lin) > 0
-    sum_first = sum_last = sum_lin = 0.0
-    for ch, fn, ln_, lc, tch, n_conv, n_at in rows:
-        assert fn == first_n.get(ch, 0)
-        assert ln_ == last_n.get(ch, 0)
-        assert tch == touches[ch]
-        e = lin[ch]
-        frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-        assert frac > 1e-4, (ch, e)
-        assert lc == round(e, 6)
-        assert n_conv == len(buys) and n_at == n_attr
-        sum_first += fn
-        sum_last += ln_
-        sum_lin += e
-    assert sum_first == sum_last == n_attr
-    assert abs(sum_lin - n_attr) < 1e-9  # linear credit conservation
-    assert first_n != last_n, "first/last never disagree (degenerate)"
-
-
-def test_kaplan_meier_pure_python_replay_and_km_invariants():
-    """KM (`kaplan_meier`): a pure-Python replay — purchase spans, the
-    churn-gap rule, risk sets with the censored-after-event tie
-    convention, the pinned survival product — must match the DuckDB
-    oracle at sf0.001; S is strictly decreasing across event times and
-    stays in (0, 1]; both censoring branches are live (0 < n_events <
-    n_subjects); n_risk is non-increasing in t; margins on q and s."""
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        _DAY_US,
-        KM_GAP_DAYS,
-        QUERIES,
-        RET_EVENT,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute(
-        "SELECT user_id, epoch_us(ts) FROM events WHERE event_type = ?",
-        [RET_EVENT],
-    ).fetchall()
-    span = defaultdict(lambda: [None, None])
-    for u, um in raw:
-        d = um // _DAY_US
-        s = span[u]
-        s[0] = d if s[0] is None else min(s[0], d)
-        s[1] = d if s[1] is None else max(s[1], d)
-    h = max(s[1] for s in span.values())
-    subj = []
-    for u, (d0, d1) in span.items():
-        ev = 1 if h - d1 > KM_GAP_DAYS else 0
-        subj.append(((d1 - d0) if ev else (h - d0), ev))
-    n_subjects = len(subj)
-    n_events = sum(e for _d, e in subj)
-    assert 0 < n_events < n_subjects
-    times = sorted({d for d, e in subj if e})
-    s_prod = 1.0
-    exp = {}
-    for t in times:
-        n_risk = sum(1 for d, _e in subj if d >= t)
-        d_t = sum(1 for d, e in subj if d == t and e)
-        q = 1.0 - d_t / n_risk
-        s_prod *= q
-        exp[t] = (n_risk, d_t, q, s_prod)
-    rows = con.execute(QUERIES["kaplan_meier"][1]).fetchall()
-    assert len(rows) == len(times)
-    prev_s, prev_risk, prev_t = 1.0 + 1e-12, None, None
-    for t, n_risk, d, q, s, gns, gne in sorted(rows):
-        en, ed, eq, es = exp[t]
-        assert (n_risk, d) == (en, ed)
-        for got, e in ((q, eq), (s, es)):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4, (t, e)
-            assert got == round(e, 6)
-        assert (gns, gne) == (n_subjects, n_events)
-        assert 0.0 < es <= 1.0 and es < prev_s
-        if prev_risk is not None:
-            assert n_risk <= prev_risk and t > prev_t
-        prev_s, prev_risk, prev_t = es, n_risk, t
-
-
-def test_benford_test_pure_python_replay_and_verdicts():
-    """Benford (`benford_test`): a pure-Python replay — cents-string raw
-    digits, literal-threshold synthetic digits, chi² in digit order —
-    must match the DuckDB oracle at sf0.001; the planted log-uniform
-    scope CONFORMS and the raw scope REJECTS; every u sits clear of a
-    digit threshold (the one discretization hazard); observed counts
-    sum to N per scope; margins on the rounded doubles."""
-    import hashlib
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        _BENFORD_GRID,
-        BENFORD_CRIT,
-        BENFORD_P,
-        BENFORD_T,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute(
-        "SELECT event_id, value FROM events WHERE value > 0"
-    ).fetchall()
-    cnt = {"raw": Counter(), "benford": Counter(), "uniform": Counter()}
-    for eid, v in raw:
-        cnt["raw"][int(str(round(v * 100))[0])] += 1
-        u = (
-            int(hashlib.md5(f"bf|{eid}".encode()).hexdigest()[:15], 16)
-            % _BENFORD_GRID
-        ) / _BENFORD_GRID
-        for d, t in BENFORD_T.items():
-            assert abs(u - t) > 1e-9, (eid, u, t)  # off the threshold
-        digit = 9
-        for d in range(9, 1, -1):
-            if u < BENFORD_T[d]:
-                digit = d - 1
-        cnt["benford"][digit] += 1
-        cnt["uniform"][
-            int(hashlib.md5(f"bu|{eid}".encode()).hexdigest()[:15], 16) % 9
-            + 1
-        ] += 1
-    n = len(raw)
-    exp = {}
-    for scope in ("raw", "benford", "uniform"):
-        chi2 = 0.0
-        for d in range(1, 10):
-            e = n * BENFORD_P[d]
-            o = cnt[scope].get(d, 0)
-            chi2 += (o - e) * (o - e) / e
-        exp[scope] = chi2
-    assert exp["uniform"] > BENFORD_CRIT, exp  # planted reject
-    assert exp["benford"] <= BENFORD_CRIT, exp  # planted conform
-    rows = con.execute(QUERIES["benford_test"][1]).fetchall()
-    assert len(rows) == 27
-    for scope, digit, obs, expd, pb, chi2, verdict in rows:
-        assert obs == cnt[scope].get(digit, 0)
-        for got, e in (
-            (expd, n * BENFORD_P[digit]),
-            (pb, BENFORD_P[digit]),
-            (chi2, exp[scope]),
-        ):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4, (scope, digit, e)
-            assert got == round(e, 6)
-        assert verdict == (
-            "reject" if exp[scope] > BENFORD_CRIT else "conform"
-        )
-    assert sum(cnt["raw"].values()) == sum(cnt["benford"].values()) == n
-
-
-def test_window_funcs_pure_python_replay():
-    """Window family (`window_funcs`): a pure-Python replay of all
-    eleven ranking/navigation functions with standard tie semantics
-    must match the DuckDB oracle at sf0.001; ties genuinely exist
-    (rank != dense_rank somewhere); lag/lead invert each other; ntile
-    sizes are balanced; margins on the two rounded doubles."""
-    import hashlib
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, doc_id FROM documents").fetchall()
-    groups = defaultdict(list)
-    for src, d in raw:
-        k = int(hashlib.md5(f"wf|{d}".encode()).hexdigest()[:15], 16) % 5
-        groups[src].append((k, d))
-    exp = {}
-    for src, items in groups.items():
-        items.sort()
-        n = len(items)
-        kvals = [k for k, _d in items]
-        for i, (k, d) in enumerate(items):
-            rn = i + 1
-            rnk = kvals.index(k) + 1
-            drnk = len(set(kvals[: kvals.index(k)])) + 1
-            pr = (rnk - 1) / (n - 1) if n > 1 else 0.0
-            cd = (
-                max(j + 1 for j, kv in enumerate(kvals) if kv == k) / n
-            )
-            # ntile over n rows into 4 buckets: first (n % 4) buckets get
-            # ceil(n/4)
-            q, r = divmod(n, 4)
-            boundaries = []
-            pos = 0
-            for b in range(4):
-                size = q + (1 if b < r else 0)
-                boundaries.append((pos, pos + size))
-                pos += size
-            nt = next(
-                b + 1
-                for b, (lo, hi) in enumerate(boundaries)
-                if lo <= i < hi
-            )
-            exp[(src, d)] = {
-                "k": k,
-                "rn": rn,
-                "rnk": rnk,
-                "drnk": drnk,
-                "pr": pr,
-                "cd": cd,
-                "nt": nt,
-                "lag": items[i - 1][1] if i > 0 else None,
-                "lead": items[i + 1][1] if i < n - 1 else None,
-                "nth3": items[2][1] if n >= 3 else None,
-                "first": items[0][1],
-                "last": items[-1][1],
-            }
-    rows = con.execute(QUERIES["window_funcs"][1]).fetchall()
-    assert len(rows) == len(exp)
-    tie_seen = False
-    for (src, d, k, rn, rnk, drnk, pr, cd, nt, lag, lead, nth3,
-         first, last) in rows:
-        e = exp[(src, d)]
-        assert k == e["k"]
-        assert (rn, rnk, drnk, nt) == (e["rn"], e["rnk"], e["drnk"], e["nt"])
-        for got, ev in ((pr, e["pr"]), (cd, e["cd"])):
-            frac = abs(ev * 1e6 - math.floor(ev * 1e6) - 0.5)
-            assert frac > 1e-4 or frac < 1e-12, (src, d, ev)
-            assert got == math.floor(ev * 1e6 + 0.5) / 1e6
-        assert (lag, lead) == (e["lag"], e["lead"])
-        assert (nth3, first, last) == (e["nth3"], e["first"], e["last"])
-        tie_seen = tie_seen or rnk != drnk
-    assert tie_seen, "no ties — rank/dense_rank never diverge"
-
-
-def test_seasonal_decompose_pure_python_replay_and_identity():
-    """Decompose (`seasonal_decompose`): a pure-Python replay — dense
-    grid, paired 24-hour window sums (the 2x24 centered MA), integer
-    detrending, per-hour-of-day seasonal means with pinned-order
-    centering — must match the DuckDB oracle at sf0.001; the additive
-    identity y == trend + seasonal + resid holds to float tolerance on
-    every row; centered seasonals sum to ~0; only full-window rows are
-    emitted; margins on rounded doubles."""
-    import math
-    from collections import Counter, defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES, SD_PERIOD
-
-    p = SD_PERIOD
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    hrs = con.execute(
-        "SELECT epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(h for (h,) in hrs)
-    grid = list(range(min(c), max(c) + 1, 3_600_000_000))
-    ys = [c.get(h, 0) for h in grid]
-    n = len(ys)
-    half = p // 2
-    valid = {}
-    for i in range(n):  # 0-based; t = i + 1
-        lo1, hi1 = i - half, i + half - 1
-        lo2, hi2 = i - half + 1, i + half
-        if lo1 < 0 or hi2 >= n:
-            continue
-        strend = sum(ys[lo1 : hi1 + 1]) + sum(ys[lo2 : hi2 + 1])
-        valid[i + 1] = (ys[i], strend, i % p)
-    s_num = defaultdict(int)
-    s_cnt = defaultdict(int)
-    for t, (y, strend, hod) in valid.items():
-        s_num[hod] += 2 * p * y - strend
-        s_cnt[hod] += 1
-    sraw = {h: s_num[h] / (2 * p * s_cnt[h]) for h in s_num}
-    center = sum(sraw[h] for h in sorted(sraw)) / len(sraw)
-    seasonal = {h: sraw[h] - center for h in sraw}
-    assert abs(sum(seasonal.values())) < 1e-9
-    rows = con.execute(QUERIES["seasonal_decompose"][1]).fetchall()
-    assert len(rows) == len(valid)
-    for t, epoch, y, hod, strend, trend, sea, resid in rows:
-        ey, es, eh = valid[t]
-        assert (y, strend, hod) == (ey, es, eh)
-        et = es / (2 * p)
-        for got, e in (
-            (trend, et),
-            (sea, seasonal[eh]),
-            (resid, ey - et - seasonal[eh]),
-        ):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4 or frac < 1e-12, (t, e)
-            # engines round half AWAY FROM ZERO (sign-aware)
-            exp6 = math.copysign(
-                math.floor(abs(e) * 1e6 + 0.5), e
-            ) / 1e6
-            assert got == exp6, (t, got, e)
-        assert abs(y - (et + seasonal[eh] + (ey - et - seasonal[eh]))) < 1e-9
-        assert epoch == grid[t - 1] // 1_000_000
-
-
-def test_active_users_pure_python_replay_and_bounds():
-    """Engagement (`active_users`): a pure-Python replay — (user, day)
-    dedup, trailing-7-day distinct actives via brute force — must match
-    the DuckDB oracle (which uses the contribution-explode; equality IS
-    the explode-trick proof on data) at sf0.001; DAU <= WAU always;
-    stickiness in (0, 1]; only full-window days emit; WAU is genuinely
-    larger than DAU somewhere (the window matters)."""
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import _DAY_US, AU_WINDOW, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute("SELECT user_id, epoch_us(ts) FROM events").fetchall()
-    days = defaultdict(set)
-    for u, um in raw:
-        days[um // _DAY_US].add(u)
-    d0, d1 = min(days), max(days)
-    exp = {}
-    for d in range(d0 + AU_WINDOW - 1, d1 + 1):
-        dau = len(days.get(d, set()))
-        wau = len(set().union(*(days.get(x, set())
-                                for x in range(d - AU_WINDOW + 1, d + 1))))
-        exp[d] = (dau, wau)
-    rows = con.execute(QUERIES["active_users"][1]).fetchall()
-    assert len(rows) == len([d for d in exp if exp[d][0] > 0])
-    widened = False
-    for day, dau, wau, stick in rows:
-        ed, ew = exp[day]
-        assert (dau, wau) == (ed, ew)
-        assert dau <= wau
-        e = dau / wau
-        frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-        assert frac > 1e-4 or frac < 1e-12, (day, e)
-        assert stick == math.floor(e * 1e6 + 0.5) / 1e6
-        assert 0.0 < stick <= 1.0
-        widened = widened or wau > dau
-    assert widened, "window never widens (degenerate)"
-
-
-def test_diff_in_diff_pure_python_replay_and_bias_removal():
-    """DiD (`diff_in_diff`): a pure-Python replay — md5 arms, integer
-    midpoint periods, planted confound+effect, BIGINT moments, the
-    4-cell contrast — must match the DuckDB oracle at sf0.001; DiD
-    recovers the planted effect within 3 SEs while the naive post-only
-    diff is biased by approximately the baseline confound (it must
-    exceed DiD by more than half the confound); t_did is significant;
-    margins on rounded doubles."""
-    import hashlib
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        _DAY_US,
-        DID_BASE,
-        DID_EFFECT,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute("SELECT user_id, epoch_us(ts) FROM events").fetchall()
-    days = [um // _DAY_US for _u, um in raw]
-    mid = (min(days) + max(days)) // 2
-    counts = defaultdict(int)
-    for u, um in raw:
-        d = um // _DAY_US
-        treat = (
-            int(hashlib.md5(f"did|{u}".encode()).hexdigest()[:15], 16) % 2
-        )
-        counts[(u, treat, 1 if d > mid else 0)] += 1
-    cells = defaultdict(lambda: [0, 0, 0])  # n, sy, syy
-    for (u, treat, post), c0 in counts.items():
-        y = c0 + treat * DID_BASE + treat * post * DID_EFFECT
-        cell = cells[(treat, post)]
-        cell[0] += 1
-        cell[1] += y
-        cell[2] += y * y
-    m = {}
-    vn = {}
-    for k, (n, sy, syy) in cells.items():
-        mean = sy / n
-        var = (syy - n * mean * mean) / (n - 1)
-        m[k] = mean
-        vn[k] = var / n
-    did = (m[(1, 1)] - m[(1, 0)]) - (m[(0, 1)] - m[(0, 0)])
-    naive = m[(1, 1)] - m[(0, 1)]
-    se = math.sqrt(vn[(1, 1)] + vn[(1, 0)] + vn[(0, 1)] + vn[(0, 0)])
-    assert abs(did - DID_EFFECT) < 3 * se
-    assert naive - did > DID_BASE / 2  # the bias DiD removes
-    assert did / se > 3  # the effect is detected
-    rows = con.execute(QUERIES["diff_in_diff"][1]).fetchall()
-    assert len(rows) == 4
-    for treat, post, n, mean, var, gdid, gnaive, gse, gt in rows:
-        en, esy, esyy = cells[(treat, post)]
-        assert n == en
-        emean = esy / en
-        evar = (esyy - en * emean * emean) / (en - 1)
-        for got, e in (
-            (mean, emean),
-            (var, evar),
-            (gdid, did),
-            (gnaive, naive),
-            (gse, se),
-            (gt, did / se),
-        ):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4 or frac < 1e-12, (treat, post, e)
-            exp6 = math.copysign(math.floor(abs(e) * 1e6 + 0.5), e) / 1e6
-            assert got == exp6, (treat, post, got, e)
-
-
-def test_json_extract_pure_python_replay_and_null_contract():
-    """JSON (`json_extract`): a pure-Python replay — the planted corrupt
-    slice, $.k extraction, per-key rollups with distinct users — must
-    match the DuckDB oracle at sf0.001; corrupted payloads yield NULL
-    (n_valid + n_corrupt == n_total exactly — the shared parse-failure
-    contract); every k in 0..99; counts reconcile."""
-    import hashlib
-    import json as jsonlib
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import JSON_CORRUPT_MOD, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute(
-        "SELECT event_id, user_id, props FROM events"
-    ).fetchall()
-    per = defaultdict(lambda: [0, set()])
-    n_total, n_valid = 0, 0
-    for eid, u, props in raw:
-        n_total += 1
-        h = (
-            int(hashlib.md5(f"js|{eid}".encode()).hexdigest()[:15], 16)
-            % JSON_CORRUPT_MOD
-        )
-        if h == 0:
-            continue  # corrupted → NULL k
-        k = jsonlib.loads(props)["k"]
-        n_valid += 1
-        cell = per[k]
-        cell[0] += 1
-        cell[1].add(u)
-    assert 0 < n_valid < n_total
-    rows = con.execute(QUERIES["json_extract"][1]).fetchall()
-    assert len(rows) == len(per)
-    for k, n, n_users, gt, gv in rows:
-        assert 0 <= k <= 99
-        assert n == per[k][0] and n_users == len(per[k][1])
-        assert (gt, gv) == (n_total, n_valid)
-    assert sum(r[1] for r in rows) == n_valid
-
-
-def test_mann_kendall_pure_python_replay_and_verdicts():
-    """Mann-Kendall (`mann_kendall`): a brute-force pure-Python pair-sum
-    replay — S, tie-corrected variance numerator, continuity-corrected
-    Z — must match the DuckDB oracle at sf0.001; the planted drift
-    scope reads 'trend' and the raw scope 'no_trend'; S is bounded by
-    n_pairs; every quantity up to Z is integer-exact."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        _MK_CRIT,
-        MK_GRID,
-        MK_RATE,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    hrs = con.execute(
-        "SELECT epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(h for (h,) in hrs)
-    grid = list(range(min(c), max(c) + 1, 3_600_000_000))
-    xs = [c.get(h, 0) for h in grid]
-    exp = {}
-    for scope in ("same", "trended"):
-        ys = [
-            x + ((t * MK_RATE) // MK_GRID if scope == "trended" else 0)
-            for t, x in enumerate(xs, 1)
-        ]
-        n = len(ys)
-        s_stat = sum(
-            (1 if ys[j] > ys[i] else -1 if ys[j] < ys[i] else 0)
-            for i in range(n)
-            for j in range(i + 1, n)
-        )
-        tie = sum(
-            tc * (tc - 1) * (2 * tc + 5) for tc in Counter(ys).values()
-        )
-        var_num = n * (n - 1) * (2 * n + 5) - tie
-        var = var_num / 18.0
-        z = (
-            (s_stat - 1.0) / math.sqrt(var)
-            if s_stat > 0
-            else (s_stat + 1.0) / math.sqrt(var)
-            if s_stat < 0
-            else 0.0
-        )
-        exp[scope] = (s_stat, n * (n - 1) // 2, n, tie, var_num, z)
-    assert abs(exp["same"][5]) <= _MK_CRIT, exp["same"]
-    assert abs(exp["trended"][5]) > _MK_CRIT, exp["trended"]
-    rows = con.execute(QUERIES["mann_kendall"][1]).fetchall()
-    assert len(rows) == 2
-    for scope, s_stat, n_pairs, n, tie, var_num, z, verdict in rows:
-        es, ep, en, et, ev, ez = exp[scope]
-        assert (s_stat, n_pairs, n, tie, var_num) == (es, ep, en, et, ev)
-        assert abs(s_stat) <= n_pairs
-        frac = abs(ez * 1e6 - math.floor(ez * 1e6) - 0.5)
-        assert frac > 1e-4, (scope, ez)
-        exp6 = math.copysign(math.floor(abs(ez) * 1e6 + 0.5), ez) / 1e6
-        assert z == exp6
-        assert verdict == ("trend" if abs(ez) > _MK_CRIT else "no_trend")
-    assert {r[7] for r in rows} == {"trend", "no_trend"}
-
-
-def test_pivot_table_pure_python_replay():
-    """Pivot (`pivot_table`): a pure-Python replay — per-(source, lang)
-    counts and char sums widened over the pinned language list with
-    zero fill — must match the DuckDB oracle at sf0.001; row totals
-    reconcile with the corpus; at least one zero-filled cell exists
-    (the fill path is live); all-BIGINT."""
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import PIVOT_LANGS, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute(
-        "SELECT source, lang, n_chars FROM documents"
-    ).fetchall()
-    cells = defaultdict(lambda: [0, 0])
-    sources = set()
-    for src, lg, nc in raw:
-        assert lg in PIVOT_LANGS
-        sources.add(src)
-        cell = cells[(src, lg)]
-        cell[0] += 1
-        cell[1] += nc
-    rows = con.execute(QUERIES["pivot_table"][1]).fetchall()
-    assert len(rows) == len(sources)
-    zero_seen = False
-    total_n = 0
-    for row in rows:
-        src = row[0]
-        vals = row[1:]
-        for i, lg in enumerate(PIVOT_LANGS):
-            n, chars = vals[2 * i], vals[2 * i + 1]
-            en, ec = cells.get((src, lg), [0, 0])
-            assert (n, chars) == (en, ec), (src, lg)
-            zero_seen = zero_seen or n == 0
-            total_n += n
-    assert total_n == len(raw)
-    assert zero_seen, "no zero cells — fill path untested"
-
-
-def test_ips_eval_pure_python_replay_and_counterfactual_gap():
-    """IPS (`ips_eval`): a pure-Python replay — md5 logged actions,
-    planted target-arm bonus, both target policies — must match the
-    DuckDB oracle at sf0.001; the estimator recovers the counterfactual
-    structure: V(optimal) - V(shifted) lands within noise of the
-    planted bonus, and the shifted policy's matched rewards NEVER
-    contain the bonus (its matches are never the target arm); match
-    rates are ~1/K; margins on rounded doubles."""
-    import hashlib
-    import math
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        IPS_BASE_MOD,
-        IPS_BONUS,
-        IPS_K,
-        QUERIES,
-    )
-
-    def h(s, mod):
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % mod
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute("SELECT event_id, user_id FROM events").fetchall()
-    logs = []
-    for eid, u in raw:
-        a = h(f"act|{eid}", IPS_K)
-        tgt = h(f"tgt|{u}", IPS_K)
-        r = h(f"rw|{eid}", IPS_BASE_MOD) + (IPS_BONUS if a == tgt else 0)
-        logs.append((a, tgt, r))
-    n = len(logs)
-    exp = {}
-    for policy, shift in (("optimal", 0), ("shifted", 1)):
-        matched = [
-            (a, tgt, r) for a, tgt, r in logs if a == (tgt + shift) % IPS_K
-        ]
-        smr = sum(r for _a, _t, r in matched)
-        exp[policy] = (
-            len(matched),
-            smr,
-            IPS_K * smr / n,
-            sum(r for _a, _t, r in logs) / n,
-        )
-        if policy == "shifted":
-            # shifted matches are never the target arm → no bonus inside
-            assert all(r < IPS_BASE_MOD for _a, _t, r in matched)
-    gap = exp["optimal"][2] - exp["shifted"][2]
-    assert abs(gap - IPS_BONUS) < 4.0, gap  # recovers the planted bonus
-    rows = con.execute(QUERIES["ips_eval"][1]).fetchall()
-    assert len(rows) == 2
-    for policy, gn, n_match, smr, ips, avg in rows:
-        em, esmr, eips, eavg = exp[policy]
-        assert (gn, n_match, smr) == (n, em, esmr)
-        assert abs(em / n - 1.0 / IPS_K) < 0.05  # uniform logging
-        for got, e in ((ips, eips), (avg, eavg)):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4 or frac < 1e-12, (policy, e)
-            assert got == math.floor(e * 1e6 + 0.5) / 1e6
-
-
 def test_critical_path_pure_python_replay_and_cpm_invariants():
     """CPM (`critical_path`): a pure-Python longest-path DP replay over
     the canonically-oriented DAG must match the DuckDB oracle at
@@ -3503,105 +2037,6 @@ def test_critical_path_pure_python_replay_and_cpm_invariants():
             assert d == dist[p] + w[(min(p, nd), max(p, nd))]
 
 
-def test_autocorrelation_pure_python_replay_and_structure():
-    """ACF (`autocorrelation`): a pure-Python replay — n-scaled integer
-    deviations, per-lag products, the biased-estimator normalization —
-    must match the DuckDB oracle at sf0.001 EXACTLY on the BIGINT
-    columns; acf in [-1, 1]; the lag-24 daily seasonality beats the
-    neighboring off-cycle lags (the structure ACF exists to reveal);
-    n_pairs = n - lag; the d values carry 1000x int64 headroom."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import ACF_MAX, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    hrs = con.execute(
-        "SELECT epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(h for (h,) in hrs)
-    grid = list(range(min(c), max(c) + 1, 3_600_000_000))
-    xs = [c.get(h, 0) for h in grid]
-    n, s = len(xs), sum(xs)
-    d = [n * x - s for x in xs]
-    assert max(abs(v) for v in d) < 2**63 / 1000 / max(abs(v) for v in d)
-    num0 = sum(v * v for v in d)
-    exp = {}
-    for lag in range(1, ACF_MAX + 1):
-        numk = sum(d[i] * d[i + lag] for i in range(n - lag))
-        exp[lag] = (numk, n - lag, numk / num0)
-    rows = con.execute(QUERIES["autocorrelation"][1]).fetchall()
-    assert len(rows) == ACF_MAX
-    acfs = {}
-    for lag, numk, gnum0, n_pairs, acf in rows:
-        en, ep, ea = exp[lag]
-        assert (numk, gnum0, n_pairs) == (en, num0, ep)
-        frac = abs(ea * 1e6 - math.floor(ea * 1e6) - 0.5)
-        assert frac > 1e-4, (lag, ea)
-        exp6 = math.copysign(math.floor(abs(ea) * 1e6 + 0.5), ea) / 1e6
-        assert acf == exp6
-        assert -1.0 - 1e-9 <= ea <= 1.0 + 1e-9
-        acfs[lag] = ea
-    # daily seasonality: lag 24 dominates its off-cycle neighbors
-    assert acfs[24] > acfs[20] and acfs[24] > acfs[28], (
-        acfs[20], acfs[24], acfs[28],
-    )
-
-
-def test_ohlc_bars_pure_python_replay_and_bar_invariants():
-    """OHLC (`ohlc_bars`): a pure-Python replay — hourly buckets, exact
-    (ts, event_id) open/close keys, integer-cent extrema, VWAP — must
-    match the DuckDB oracle at sf0.001; every bar satisfies
-    low <= open, close <= high and low <= vwap*100 <= high; bars with
-    one trade have open == close == high == low; multi-trade bars with
-    open != close exist (the keying matters)."""
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES, RET_EVENT
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute(
-        "SELECT event_id, epoch_us(ts), value FROM events "
-        "WHERE event_type = ?",
-        [RET_EVENT],
-    ).fetchall()
-    bars = defaultdict(list)
-    for eid, um, v in raw:
-        bars[um // 3_600_000_000].append((um, eid, round(v * 100)))
-    rows = con.execute(QUERIES["ohlc_bars"][1]).fetchall()
-    assert len(rows) == len(bars)
-    keyed_matters = False
-    for bar, n, o, hi, lo, cl, vwap in rows:
-        trades = bars[bar]
-        assert n == len(trades)
-        assert o == min(trades)[2] and cl == max(trades)[2]
-        cents = [c for _u, _e, c in trades]
-        assert hi == max(cents) and lo == min(cents)
-        e = sum(cents) / n / 100.0
-        frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-        assert frac > 1e-4 or frac < 1e-12, (bar, e)
-        assert vwap == math.floor(e * 1e6 + 0.5) / 1e6
-        assert lo <= o <= hi and lo <= cl <= hi
-        assert lo - 1e-6 <= e * 100 <= hi + 1e-6
-        if n == 1:
-            assert o == cl == hi == lo
-        keyed_matters = keyed_matters or (n > 1 and o != cl)
-    assert keyed_matters, "open always equals close (degenerate)"
-
-
 def test_assortativity_pure_python_replay_and_symmetry():
     """Assortativity (`assortativity`): a pure-Python replay — both-
     orientation endpoint-degree moments, Newman's r — must match the
@@ -3658,180 +2093,6 @@ def test_assortativity_pure_python_replay_and_symmetry():
     assert all(c == 1 for c in seen.values())
 
 
-def test_interarrival_stats_pure_python_replay_and_bounds():
-    """Burstiness (`interarrival_stats`): a pure-Python replay — per-user
-    sorted gaps in exact integer seconds, BIGINT moments, B and the
-    pinned-order corpus mean — must match the DuckDB oracle at sf0.001;
-    B in (-1, 1); gap counts reconcile with event counts (n_gaps =
-    n_events - 1 for every kept user); margins on rounded doubles."""
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute(
-        "SELECT user_id, epoch_us(ts), event_id FROM events"
-    ).fetchall()
-    times = defaultdict(list)
-    for u, um, eid in raw:
-        times[u].append((um, eid))
-    exp = {}
-    for u, ts in times.items():
-        ts.sort()
-        gaps = [
-            (ts[i + 1][0] - ts[i][0]) // 1_000_000
-            for i in range(len(ts) - 1)
-        ]
-        if len(gaps) < 2:
-            continue
-        n = len(gaps)
-        sg, sgg = sum(gaps), sum(g * g for g in gaps)
-        mu = sg / n
-        sig = math.sqrt((sgg - n * mu * mu) / (n - 1))
-        exp[u] = (n, sg, sgg, mu, sig, (sig - mu) / (sig + mu))
-        assert n == len(ts) - 1
-    mean_b = sum(exp[u][5] for u in sorted(exp)) / len(exp)
-    rows = con.execute(QUERIES["interarrival_stats"][1]).fetchall()
-    assert len(rows) == len(exp)
-    for u, n, sg, sgg, mu, sig, b, mb in rows:
-        en, esg, esgg, emu, esig, eb = exp[u]
-        assert (n, sg, sgg) == (en, esg, esgg)
-        for got, e in ((mu, emu), (sig, esig), (b, eb), (mb, mean_b)):
-            frac = abs(abs(e) * 1e6 - math.floor(abs(e) * 1e6) - 0.5)
-            assert frac > 1e-4 or frac < 1e-12, (u, e)
-            assert got == math.copysign(
-                math.floor(abs(e) * 1e6 + 0.5), e
-            ) / 1e6
-        assert -1.0 < eb < 1.0
-
-
-def test_ref_integrity_pure_python_replay():
-    """RI audit (`ref_integrity`): a pure-Python replay over raw key
-    columns — child counts, distinct keys, nulls, orphans per FK edge —
-    must match the DuckDB oracle at sf0.001; the synthetic star is
-    intact on every edge (all verdicts 1, zero orphans/nulls) and the
-    counts reconcile with table sizes; all-integer."""
-    import duckdb
-
-    from htep_spark.driver_queries import _RI_EDGES, QUERIES
-
-    con = duckdb.connect()
-    tables = {t for c, _ck, p, _pk in _RI_EDGES for t in (c, p)}
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    exp = {}
-    for child, ck, parent, pk in _RI_EDGES:
-        ckeys = [
-            r[0]
-            for r in con.execute(f"SELECT {ck} FROM {child}").fetchall()
-        ]
-        pkeys = {
-            r[0]
-            for r in con.execute(f"SELECT {pk} FROM {parent}").fetchall()
-        }
-        n_child = len(ckeys)
-        n_keys = len(set(ckeys))
-        n_null = sum(1 for k in ckeys if k is None)
-        n_orph = sum(1 for k in ckeys if k is not None and k not in pkeys)
-        exp[f"{child}.{ck}"] = (
-            f"{parent}.{pk}", n_child, n_keys, n_null, n_orph,
-        )
-    rows = con.execute(QUERIES["ref_integrity"][1]).fetchall()
-    assert len(rows) == len(_RI_EDGES)
-    for fk, ref, n_child, n_keys, n_null, n_orph, intact in rows:
-        eref, ec, ek, en, eo = exp[fk]
-        assert ref == eref
-        assert (n_child, n_keys, n_null, n_orph) == (ec, ek, en, eo)
-        assert intact == (1 if eo == 0 else 0)
-        assert intact == 1  # the synthetic star is intact
-
-
-def test_runs_test_pure_python_replay_and_verdicts():
-    """Runs test (`runs_test`): a pure-Python replay — exact-rank
-    median, tie exclusion, run counting, the Wald-Wolfowitz z — must
-    match the DuckDB oracle at sf0.001; the planted 36-hour square wave
-    REJECTS (long runs, z << 0) while the raw series reads random;
-    R <= n1 + n2 and R >= 2 when both signs exist; margins on rounded
-    doubles."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        _MK_CRIT,
-        QUERIES,
-        RUNS_AMP,
-        RUNS_HALF_PERIOD,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    hrs = con.execute(
-        "SELECT epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(h for (h,) in hrs)
-    grid = list(range(min(c), max(c) + 1, 3_600_000_000))
-    xs = [c.get(h, 0) for h in grid]
-    exp = {}
-    for scope in ("same", "clumped"):
-        ys = [
-            x
-            + (
-                RUNS_AMP
-                if scope == "clumped"
-                and ((t - 1) // RUNS_HALF_PERIOD) % 2 == 0
-                else 0
-            )
-            for t, x in enumerate(xs, 1)
-        ]
-        n0 = len(ys)
-        med = sorted(ys)[(n0 + 1) // 2 - 1]
-        kept = [1 if y > med else 0 for y in ys if y != med]
-        r = 1 + sum(
-            1 for a, b in zip(kept, kept[1:]) if a != b
-        )
-        n1, n2 = sum(kept), len(kept) - sum(kept)
-        er = 2.0 * n1 * n2 / (n1 + n2) + 1.0
-        vr = (
-            2.0 * n1 * n2 * (2.0 * n1 * n2 - n1 - n2)
-            / ((n1 + n2) ** 2 * (n1 + n2 - 1))
-        )
-        z = (r - er) / math.sqrt(vr)
-        exp[scope] = (r, n1, n2, med, er, z)
-        assert 2 <= r <= n1 + n2
-    assert abs(exp["same"][5]) <= _MK_CRIT, exp["same"]
-    assert exp["clumped"][5] < -_MK_CRIT, exp["clumped"]
-    rows = con.execute(QUERIES["runs_test"][1]).fetchall()
-    assert len(rows) == 2
-    for scope, r, n1, n2, med, er, z, verdict in rows:
-        e_r, e1, e2, emed, eer, ez = exp[scope]
-        assert (r, n1, n2, med) == (e_r, e1, e2, emed)
-        for got, e in ((er, eer), (z, ez)):
-            frac = abs(abs(e) * 1e6 - math.floor(abs(e) * 1e6) - 0.5)
-            assert frac > 1e-4 or frac < 1e-12, (scope, e)
-            assert got == math.copysign(
-                math.floor(abs(e) * 1e6 + 0.5), e
-            ) / 1e6
-        assert verdict == (
-            "reject" if abs(ez) > _MK_CRIT else "random"
-        )
-    assert {r[7] for r in rows} == {"reject", "random"}
-
-
 def test_bfs_hops_pure_python_replay_and_bfs_invariants():
     """BFS (`bfs_hops`): a pure-Python BFS replay from the min-id host
     must match the DuckDB oracle at sf0.001; converged == 1; the root
@@ -3883,187 +2144,3 @@ def test_bfs_hops_pure_python_replay_and_bfs_invariants():
         else:
             assert (d, reachable) == (None, 0)
     assert ecc >= 1
-
-
-def test_haar_energy_pure_python_replay_and_parseval():
-    """Haar (`haar_energy`): a pure-Python unnormalized Haar cascade
-    must match the DuckDB oracle at sf0.001 EXACTLY (all-BIGINT, zero
-    rounding surface); the exact Parseval accounting holds level by
-    level (2·E_{l-1} = detail_l + approx_l for unnormalized pairs);
-    the daily cycle puts the normalized 16h- or 32h-band detail energy
-    above the 2h band's."""
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import HAAR_LEVELS, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    hrs = con.execute(
-        "SELECT epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(h for (h,) in hrs)
-    grid = list(range(min(c), max(c) + 1, 3_600_000_000))
-    xs = [c.get(h, 0) for h in grid]
-    m = 1 << (len(xs).bit_length() - 1)
-    a = xs[:m]
-    exp = {}
-    prev_energy = sum(v * v for v in a)
-    for lvl in range(1, HAAR_LEVELS + 1):
-        na = [a[2 * i] + a[2 * i + 1] for i in range(len(a) // 2)]
-        d = [a[2 * i] - a[2 * i + 1] for i in range(len(a) // 2)]
-        de = sum(v * v for v in d)
-        ae = sum(v * v for v in na)
-        # unnormalized Parseval: sum over pairs of (x0²+x1²)·2 =
-        # (x0+x1)² + (x0−x1)²
-        assert 2 * prev_energy == de + ae
-        exp[lvl] = (len(na), de, ae)
-        prev_energy = ae
-        a = na
-    rows = con.execute(QUERIES["haar_energy"][1]).fetchall()
-    assert len(rows) == HAAR_LEVELS
-    norm = {}
-    for level, scale, n_coeffs, de, ae, in rows:
-        en, ede, eae = exp[level]
-        assert (n_coeffs, de, ae) == (en, ede, eae)
-        assert scale == 2 ** level
-        # orthonormal per-coefficient detail power: the unnormalized
-        # level-l coefficient is sqrt(2^l) times the orthonormal one
-        norm[scale] = de / (n_coeffs * 2 ** level)
-    assert max(norm[16], norm[32]) > norm[2], norm
-
-
-def test_theil_sen_pure_python_replay_and_recovery():
-    """Theil-Sen (`theil_sen`): a brute-force pairwise-slope replay with
-    the (slope, ti, tj) exact-rank median and the residual-median
-    intercept must match the DuckDB oracle at sf0.001; the trended
-    scope's slope recovers the planted MK_RATE/MK_GRID drift within
-    20% while the raw scope's slope is an order of magnitude smaller;
-    the median pair indices anchor the rank exactly."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import MK_GRID, MK_RATE, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    hrs = con.execute(
-        "SELECT epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(h for (h,) in hrs)
-    grid = list(range(min(c), max(c) + 1, 3_600_000_000))
-    xs = [c.get(h, 0) for h in grid]
-    exp = {}
-    for scope in ("same", "trended"):
-        ys = [
-            x + ((t * MK_RATE) // MK_GRID if scope == "trended" else 0)
-            for t, x in enumerate(xs, 1)
-        ]
-        n = len(ys)
-        pairs = [
-            ((ys[j] - ys[i]) / (j - i), i + 1, j + 1)
-            for i in range(n)
-            for j in range(i + 1, n)
-        ]
-        pairs.sort()
-        np_ = len(pairs)
-        slope, ti, tj = pairs[(np_ + 1) // 2 - 1]
-        resid = sorted(
-            (ys[t - 1] - slope * t, t) for t in range(1, n + 1)
-        )
-        intercept = resid[(n + 1) // 2 - 1][0]
-        exp[scope] = (np_, ti, tj, slope, intercept)
-    drift = MK_RATE / MK_GRID
-    assert abs(exp["trended"][3] - drift) < 0.2 * drift, exp["trended"]
-    assert abs(exp["same"][3]) < drift / 10, exp["same"]
-    rows = con.execute(QUERIES["theil_sen"][1]).fetchall()
-    assert len(rows) == 2
-    for scope, n_pairs, ti, tj, slope, intercept in rows:
-        enp, eti, etj, es, ei = exp[scope]
-        assert (n_pairs, ti, tj) == (enp, eti, etj)
-        for got, e in ((slope, es), (intercept, ei)):
-            frac = abs(abs(e) * 1e6 - math.floor(abs(e) * 1e6) - 0.5)
-            assert frac > 1e-4 or frac < 1e-12, (scope, e)
-            assert got == math.copysign(
-                math.floor(abs(e) * 1e6 + 0.5), e
-            ) / 1e6
-
-
-def test_poisson_dispersion_pure_python_replay_and_verdicts():
-    """Dispersion (`poisson_dispersion`): a pure-Python replay — dense
-    per-type grids, BIGINT moments, Fisher's D and z — must match the
-    DuckDB oracle at sf0.001; the planted burst series reads
-    overdispersed and the planted constant underdispersed (D == 0);
-    all five real types present; margins on rounded doubles."""
-    import math
-    from collections import Counter, defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        _MK_CRIT,
-        PD_BLOCK_H,
-        PD_CONST,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute(
-        "SELECT event_type, epoch_us(date_trunc('hour', ts)) FROM events"
-    ).fetchall()
-    c = Counter(raw)
-    hset = [h for (_t, h) in raw]
-    grid = list(range(min(hset), max(hset) + 1, 3_600_000_000))
-    types = sorted({t for t, _h in raw})
-    series = {}
-    for ty in types:
-        series[ty] = [c.get((ty, h), 0) for h in grid]
-    total = [sum(series[ty][i] for ty in types) for i in range(len(grid))]
-    series["planted_burst"] = [
-        2 * x if (t // PD_BLOCK_H) % 2 == 0 else x
-        for t, x in enumerate(total)
-    ]
-    series["planted_const"] = [PD_CONST] * len(grid)
-    exp = {}
-    for name, xs in series.items():
-        n, s, ss = len(xs), sum(xs), sum(x * x for x in xs)
-        mean = s / n
-        var = (ss - n * mean * mean) / (n - 1)
-        d = var / mean
-        z = (d - 1.0) * math.sqrt((n - 1) / 2.0)
-        v = (
-            "overdispersed"
-            if z > _MK_CRIT
-            else "underdispersed"
-            if z < -_MK_CRIT
-            else "poisson"
-        )
-        exp[name] = (n, s, ss, mean, var, d, z, v)
-    assert exp["planted_burst"][7] == "overdispersed"
-    assert exp["planted_const"][7] == "underdispersed"
-    assert exp["planted_const"][5] == 0.0
-    rows = con.execute(QUERIES["poisson_dispersion"][1]).fetchall()
-    assert len(rows) == len(types) + 2
-    for name, n, s, ss, mean, var, d, z, v in rows:
-        en, es, ess, em, ev_, ed, ez, evd = exp[name]
-        assert (n, s, ss) == (en, es, ess)
-        for got, e in ((mean, em), (var, ev_), (d, ed), (z, ez)):
-            frac = abs(abs(e) * 1e6 - math.floor(abs(e) * 1e6) - 0.5)
-            assert frac > 1e-4 or frac < 1e-12, (name, e)
-            assert got == math.copysign(
-                math.floor(abs(e) * 1e6 + 0.5), e
-            ) / 1e6
-        assert v == evd
