@@ -119,8 +119,13 @@ DRIVER_CAP_OVERFLOW = (
     "template_lines",  # per-domain boilerplate line removal
     "nfc_normalize",  # Unicode NFC canonicalization before dedup
     "lm_kneser_ney",  # Kneser-Ney LM perplexity filter
-    # Graph analytics with no extraction, conversation or curation
+    # Generic analytics with no extraction, conversation or curation
     # consumer, held here until they are cut from the inventory:
+    "tpch_pricing",  # TPC-H Q1-shape pricing summary
+    "tpch_regional_revenue",  # TPC-H Q5-shape regional revenue
+    "tpch_shipping",  # TPC-H Q3-shape shipping priority
+    "tpch_big_orders",  # TPC-H Q18-shape large-quantity orders
+    "active_users",  # daily and weekly active users
     "pagerank",  # domain link-graph PageRank
     "hits",  # HITS hubs and authorities
     "lpa_communities",  # label-propagation communities

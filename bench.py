@@ -237,8 +237,13 @@ def main() -> None:
         "nfc_normalize",
         "lpa_communities",
         "lm_kneser_ney",
+        "tpch_pricing",
+        "tpch_regional_revenue",
         "triangle_count",
+        "tpch_shipping",
+        "tpch_big_orders",
         "k_core",
+        "active_users",
         "critical_path",
         "assortativity",
         "bfs_hops",

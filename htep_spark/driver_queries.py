@@ -7633,6 +7633,329 @@ WHERE NOT d.is_train
 
 
 # --------------------------------------------------------------------------
+# Classic warehouse OLAP shapes (`tpch_pricing`, `tpch_regional_revenue`):
+# the relational half of the testdata (region/nation/customer/supplier/
+# orders/lineitem — the TPC-H star) was previously untouched; these two
+# queries certify the bread-and-butter shapes a 100 TB warehouse runs all
+# day. `tpch_pricing` is the Q1 shape (scan-heavy filtered aggregation
+# with map-side partial aggs); `tpch_regional_revenue` is the Q5 shape
+# (fact-fact equi-join lineitem⋈orders with pushed-down date pruning,
+# then a chain of BROADCAST dimension joins customer/supplier/nation/
+# region with the c_nationkey = s_nationkey locality predicate). A plan
+# gate asserts the dims actually broadcast, the date filter reaches the
+# orders scan as a PushedFilter, and ReadSchema pruning holds.
+#
+# Cross-engine determinism: money math runs in bounded DECIMALs —
+# doubles cast to DECIMAL(12,2)/(4,2) at the scan, products stay within
+# exact precision ((12,2)x(5,2)x(5,2) -> scale 6 << 38), sums are exact
+# integer arithmetic in BOTH engines, and doubles only appear casting
+# the exact sums at the output boundary. No reduce-order surface at all.
+# --------------------------------------------------------------------------
+
+TPCH_PRICING_CUTOFF = "1998-09-01"
+TPCH_REVENUE_REGION = "ASIA"
+TPCH_REVENUE_LO, TPCH_REVENUE_HI = "1996-01-01", "1998-01-01"
+
+
+def _tpch(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def q_tpch_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _tpch(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") < F.lit(TPCH_PRICING_CUTOFF).cast("timestamp")
+    )
+    qty = F.col("l_quantity").cast("decimal(12,2)")
+    price = F.col("l_extendedprice").cast("decimal(12,2)")
+    disc = F.col("l_discount").cast("decimal(4,2)")
+    tax = F.col("l_tax").cast("decimal(4,2)")
+    one = F.lit(1).cast("decimal(3,2)")
+    agg = (
+        li.groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            F.sum(qty).alias("sq"),
+            F.sum(price).alias("sb"),
+            F.sum(price * (one - disc)).alias("sd"),
+            F.sum(price * (one - disc) * (one + tax)).alias("sc"),
+            F.sum(disc).alias("sdisc"),
+            F.count("*").cast("long").alias("count_order"),
+        )
+    )
+    n = F.col("count_order").cast("double")
+    return agg.select(
+        "l_returnflag",
+        "l_linestatus",
+        F.round(F.col("sq").cast("double"), 2).alias("sum_qty"),
+        F.round(F.col("sb").cast("double"), 2).alias("sum_base_price"),
+        F.round(F.col("sd").cast("double"), 2).alias("sum_disc_price"),
+        F.round(F.col("sc").cast("double"), 2).alias("sum_charge"),
+        F.round(F.col("sq").cast("double") / n, 6).alias("avg_qty"),
+        F.round(F.col("sb").cast("double") / n, 6).alias("avg_price"),
+        F.round(F.col("sdisc").cast("double") / n, 6).alias("avg_disc"),
+        "count_order",
+    )
+
+
+def _sql_tpch_pricing() -> str:
+    return f"""
+SELECT l_returnflag, l_linestatus,
+       round(CAST(sq AS DOUBLE), 2) AS sum_qty,
+       round(CAST(sb AS DOUBLE), 2) AS sum_base_price,
+       round(CAST(sd AS DOUBLE), 2) AS sum_disc_price,
+       round(CAST(sc AS DOUBLE), 2) AS sum_charge,
+       round(CAST(sq AS DOUBLE) / CAST(count_order AS DOUBLE), 6)
+         AS avg_qty,
+       round(CAST(sb AS DOUBLE) / CAST(count_order AS DOUBLE), 6)
+         AS avg_price,
+       round(CAST(sdisc AS DOUBLE) / CAST(count_order AS DOUBLE), 6)
+         AS avg_disc,
+       count_order
+FROM (
+  SELECT l_returnflag, l_linestatus,
+         sum(CAST(l_quantity AS DECIMAL(12,2))) AS sq,
+         sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS sb,
+         sum(CAST(l_extendedprice AS DECIMAL(12,2))
+             * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))))
+           AS sd,
+         sum(CAST(l_extendedprice AS DECIMAL(12,2))
+             * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))
+             * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(4,2))))
+           AS sc,
+         sum(CAST(l_discount AS DECIMAL(4,2))) AS sdisc,
+         CAST(count(*) AS BIGINT) AS count_order
+  FROM lineitem
+  WHERE l_shipdate < TIMESTAMP '{TPCH_PRICING_CUTOFF} 00:00:00'
+  GROUP BY l_returnflag, l_linestatus
+)
+"""
+
+
+def q_tpch_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _tpch(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        "l_suppkey",
+        (
+            F.col("l_extendedprice").cast("decimal(12,2)")
+            * (
+                F.lit(1).cast("decimal(3,2)")
+                - F.col("l_discount").cast("decimal(4,2)")
+            )
+        ).alias("rev"),
+    )
+    orders = _tpch(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= F.lit(TPCH_REVENUE_LO).cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit(TPCH_REVENUE_HI).cast("timestamp"))
+    ).select("o_orderkey", "o_custkey")
+    cust = _tpch(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    supp = _tpch(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    nat = _tpch(spark, sf_dir, "nation").select(
+        "n_nationkey", "n_name", "n_regionkey"
+    )
+    reg = _tpch(spark, sf_dir, "region").filter(
+        F.col("r_name") == TPCH_REVENUE_REGION
+    ).select("r_regionkey")
+    joined = (
+        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
+        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
+        .join(
+            F.broadcast(supp),
+            (F.col("l_suppkey") == F.col("s_suppkey"))
+            & (F.col("c_nationkey") == F.col("s_nationkey")),
+        )
+        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(F.broadcast(reg), F.col("n_regionkey") == F.col("r_regionkey"))
+    )
+    return (
+        joined.groupBy("n_name")
+        .agg(
+            F.sum("rev").alias("srev"),
+            F.count("*").cast("long").alias("n_lineitems"),
+        )
+        .select(
+            "n_name",
+            F.round(F.col("srev").cast("double"), 2).alias("revenue"),
+            "n_lineitems",
+        )
+    )
+
+
+def _sql_tpch_regional_revenue() -> str:
+    return f"""
+SELECT n_name,
+       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
+                      * (CAST(1 AS DECIMAL(3,2))
+                         - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE), 2)
+         AS revenue,
+       CAST(count(*) AS BIGINT) AS n_lineitems
+FROM lineitem
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+JOIN nation ON s_nationkey = n_nationkey
+JOIN region ON n_regionkey = r_regionkey
+WHERE o_orderdate >= TIMESTAMP '{TPCH_REVENUE_LO} 00:00:00'
+  AND o_orderdate < TIMESTAMP '{TPCH_REVENUE_HI} 00:00:00'
+  AND r_name = '{TPCH_REVENUE_REGION}'
+GROUP BY n_name
+"""
+
+
+# --------------------------------------------------------------------------
+# TPC-H Q3 shape (`tpch_shipping`): the unshipped-orders shipping-
+# priority query — the warehouse's three-way fact join with OPPOSING
+# date predicates (orders placed before the cutoff, lineitems shipped
+# after it) and a global top-N by exact DECIMAL revenue. Completes the
+# star-schema trio: Q1 (tpch_pricing) scans, Q5 (tpch_regional_revenue)
+# joins the dim chain, Q3 adds selective fact-fact pruning + top-N.
+#
+# Scale shape: both date filters push to the parquet scans; the
+# customer-segment dim broadcasts; the fact-fact join shuffles on
+# orderkey (AQE); the top-N is orderBy+limit → TakeOrderedAndProject
+# (distributed per-partition heads merged on the driver — never a
+# single-partition window). DECIMAL revenue makes the ordering exact, so
+# the N-th boundary cannot drift between engines; orderkey tie-break.
+# --------------------------------------------------------------------------
+
+TPCH_SHIP_SEGMENT = "BUILDING"
+TPCH_SHIP_CUTOFF = "1998-07-01"
+TPCH_SHIP_TOPN = 10
+
+
+def q_tpch_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cust = (
+        _tpch(spark, sf_dir, "customer")
+        .filter(F.col("c_mktsegment") == TPCH_SHIP_SEGMENT)
+        .select("c_custkey")
+    )
+    orders = (
+        _tpch(spark, sf_dir, "orders")
+        .filter(
+            F.col("o_orderdate") < F.lit(TPCH_SHIP_CUTOFF).cast("timestamp")
+        )
+        .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
+    )
+    li = (
+        _tpch(spark, sf_dir, "lineitem")
+        .filter(
+            F.col("l_shipdate") > F.lit(TPCH_SHIP_CUTOFF).cast("timestamp")
+        )
+        .select(
+            "l_orderkey",
+            (
+                F.col("l_extendedprice").cast("decimal(12,2)")
+                * (
+                    F.lit(1).cast("decimal(3,2)")
+                    - F.col("l_discount").cast("decimal(4,2)")
+                )
+            ).alias("rev"),
+        )
+    )
+    agg = (
+        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
+        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
+        .agg(F.sum("rev").alias("srev"))
+    )
+    return (
+        agg.orderBy(F.desc("srev"), "l_orderkey")
+        .limit(TPCH_SHIP_TOPN)
+        .select(
+            "l_orderkey",
+            F.round(F.col("srev").cast("double"), 2).alias("revenue"),
+            F.unix_timestamp("o_orderdate").alias("orderdate_epoch"),
+            "o_orderpriority",
+        )
+    )
+
+
+def _sql_tpch_shipping() -> str:
+    return f"""
+SELECT l_orderkey,
+       round(CAST(srev AS DOUBLE), 2) AS revenue,
+       CAST(epoch(o_orderdate) AS BIGINT) AS orderdate_epoch,
+       o_orderpriority
+FROM (
+  SELECT l.l_orderkey, o.o_orderdate, o.o_orderpriority,
+         sum(CAST(l.l_extendedprice AS DECIMAL(12,2))
+             * (CAST(1 AS DECIMAL(3,2))
+                - CAST(l.l_discount AS DECIMAL(4,2)))) AS srev
+  FROM customer c
+  JOIN orders o ON o.o_custkey = c.c_custkey
+  JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+  WHERE c.c_mktsegment = {_sql_quote(TPCH_SHIP_SEGMENT)}
+    AND o.o_orderdate < TIMESTAMP '{TPCH_SHIP_CUTOFF} 00:00:00'
+    AND l.l_shipdate > TIMESTAMP '{TPCH_SHIP_CUTOFF} 00:00:00'
+  GROUP BY 1, 2, 3
+)
+ORDER BY srev DESC, l_orderkey
+LIMIT {TPCH_SHIP_TOPN}
+"""
+
+
+# --------------------------------------------------------------------------
+# TPC-H Q18 shape (`tpch_big_orders`): the large-volume-customer query —
+# a HAVING-threshold semi-join back onto the same fact table (orders
+# whose total quantity exceeds the threshold, with their customer).
+# The shape Q1/Q3/Q5 don't cover: a grouped predicate on the fact
+# becomes the driving filter of a second pass over itself.
+#
+# Scale shape: the qualifying-order set is one map-side-combinable
+# groupBy + filter (summary-sized — the >threshold tail); it joins back
+# to lineitem/orders as an equi-join Spark plans as a broadcast once AQE
+# sees the tiny side, exactly how a warehouse executes Q18. DECIMAL
+# quantity sums are exact, so the threshold boundary cannot drift.
+# --------------------------------------------------------------------------
+
+TPCH_BIGORDER_QTY = 250
+
+
+def q_tpch_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _tpch(spark, sf_dir, "lineitem").select(
+        "l_orderkey", F.col("l_quantity").cast("decimal(12,2)").alias("qty")
+    )
+    big = (
+        li.groupBy("l_orderkey")
+        .agg(F.sum("qty").alias("total_qty"))
+        .filter(F.col("total_qty") > TPCH_BIGORDER_QTY)
+    )
+    orders = _tpch(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
+    )
+    cust = _tpch(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    return (
+        big.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
+        .select(
+            "c_name",
+            "c_custkey",
+            F.col("l_orderkey").alias("o_orderkey"),
+            F.unix_timestamp("o_orderdate").alias("orderdate_epoch"),
+            F.round(F.col("o_totalprice").cast("double"), 2).alias(
+                "o_totalprice"
+            ),
+            F.round(F.col("total_qty").cast("double"), 2).alias("total_qty"),
+        )
+    )
+
+
+def _sql_tpch_big_orders() -> str:
+    return f"""
+WITH big AS (
+  SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(12,2))) AS total_qty
+  FROM lineitem GROUP BY l_orderkey
+  HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > {TPCH_BIGORDER_QTY}
+)
+SELECT c.c_name, c.c_custkey, b.l_orderkey AS o_orderkey,
+       CAST(epoch(o.o_orderdate) AS BIGINT) AS orderdate_epoch,
+       round(CAST(o.o_totalprice AS DOUBLE), 2) AS o_totalprice,
+       round(CAST(b.total_qty AS DOUBLE), 2) AS total_qty
+FROM big b
+JOIN orders o ON o.o_orderkey = b.l_orderkey
+JOIN customer c ON c.c_custkey = o.o_custkey
+"""
+
+
+# --------------------------------------------------------------------------
 # Triangle counting + clustering coefficients (`triangle_count`): the
 # graph-structure primitive the spectral family (pagerank/hits/lpa)
 # doesn't touch — community density. Over the SAME pinned host graph,
@@ -7970,6 +8293,87 @@ LEFT JOIN core c ON c.scope = a0.scope AND c.node = a0.node
 LEFT JOIN core_deg cd ON cd.scope = a0.scope AND cd.node = a0.node
 JOIN ncore nc ON nc.scope = a0.scope
 JOIN nprev np ON np.scope = a0.scope
+"""
+
+
+# --------------------------------------------------------------------------
+# Active-user engagement (`active_users`): the DAU/WAU/stickiness board
+# metric — per day: distinct daily actives, trailing-7-day distinct
+# actives, and the DAU/WAU engagement ratio. Distinct-over-sliding-
+# window is NOT a window function (COUNT(DISTINCT) OVER a frame is
+# unsupported and would be wrong anyway); the scale-honest plan is the
+# CONTRIBUTION-EXPLODE: dedupe to (user, day), explode each user-day to
+# the ≤AU_WINDOW target days it contributes to, dedupe (user, target),
+# count — a bounded ×W blowup of the already-deduped user-day frame,
+# never a per-day scan. Exact integers; the ratio is one division.
+#
+# Scale shape: (user, day) dedup is one exchange; the explode is
+# W-bounded; the second dedup + count is map-side combinable. Only
+# days with a FULL trailing window emit (partial-window edges excluded).
+# --------------------------------------------------------------------------
+
+AU_WINDOW = 7  # trailing days for WAU
+_DAY_US = 86_400_000_000
+
+
+def q_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    day = F.expr(
+        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
+        f" div {_DAY_US}"
+    )
+    ud = (
+        _events(spark, sf_dir)
+        .select("user_id", day.alias("d"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    bounds = ud.agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
+    dau = ud.groupBy("d").agg(F.count("*").cast("long").alias("dau"))
+    contrib = ud.select(
+        "user_id",
+        F.explode(
+            F.sequence(F.col("d"), F.col("d") + AU_WINDOW - 1)
+        ).alias("d"),
+    ).distinct()
+    wau = contrib.groupBy("d").agg(F.count("*").cast("long").alias("wau"))
+    return (
+        dau.join(wau, "d")
+        .crossJoin(F.broadcast(bounds))
+        .filter(
+            (F.col("d") >= F.col("d0") + AU_WINDOW - 1)
+            & (F.col("d") <= F.col("d1"))
+        )
+        .select(
+            F.col("d").cast("long").alias("day"),
+            "dau",
+            "wau",
+            F.round(
+                F.col("dau").cast("double") / F.col("wau").cast("double"), 6
+            ).alias("stickiness"),
+        )
+    )
+
+
+def _sql_active_users() -> str:
+    w = AU_WINDOW
+    return f"""
+WITH ud AS MATERIALIZED (
+  SELECT DISTINCT user_id, epoch_us(ts) // {_DAY_US} AS d FROM events
+), bounds AS (
+  SELECT min(d) AS d0, max(d) AS d1 FROM ud
+), dau AS (
+  SELECT d, CAST(count(*) AS BIGINT) AS dau FROM ud GROUP BY d
+), contrib AS (
+  SELECT DISTINCT user_id, d + g.i AS d
+  FROM ud, LATERAL (SELECT unnest(range({w})) AS i) g
+), wau AS (
+  SELECT d, CAST(count(*) AS BIGINT) AS wau FROM contrib GROUP BY d
+)
+SELECT CAST(dau.d AS BIGINT) AS day, dau.dau, wau.wau,
+       round(CAST(dau.dau AS DOUBLE) / CAST(wau.wau AS DOUBLE), 6)
+         AS stickiness
+FROM dau JOIN wau USING (d) CROSS JOIN bounds
+WHERE dau.d >= bounds.d0 + {w} - 1 AND dau.d <= bounds.d1
 """
 
 
@@ -8476,8 +8880,13 @@ QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]
     "nfc_normalize": (q_nfc_normalize, _sql_nfc_normalize()),
     "lpa_communities": (q_lpa_communities, _sql_lpa_communities()),
     "lm_kneser_ney": (q_lm_kneser_ney, _sql_lm_kneser_ney()),
+    "tpch_pricing": (q_tpch_pricing, _sql_tpch_pricing()),
+    "tpch_regional_revenue": (q_tpch_regional_revenue, _sql_tpch_regional_revenue()),
+    "tpch_shipping": (q_tpch_shipping, _sql_tpch_shipping()),
+    "tpch_big_orders": (q_tpch_big_orders, _sql_tpch_big_orders()),
     "triangle_count": (q_triangle_count, _sql_triangle_count()),
     "k_core": (q_k_core, _sql_k_core()),
+    "active_users": (q_active_users, _sql_active_users()),
     "critical_path": (q_critical_path, _sql_critical_path()),
     "assortativity": (q_assortativity, _sql_assortativity()),
     "bfs_hops": (q_bfs_hops, _sql_bfs_hops()),

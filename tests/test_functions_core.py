@@ -1828,6 +1828,85 @@ def test_lm_kneser_ney_pure_python_replay_and_branches():
     assert abs(total_p - 1.0) < 0.02, total_p
 
 
+def test_tpch_shipping_and_big_orders_pure_python_replay():
+    """TPC-H Q3/Q18 shapes: pure-Python replays over raw tuples — the
+    three-way join + opposing date filters + exact-revenue top-N, and
+    the HAVING-threshold self-semi-join — must match the DuckDB oracles
+    at sf0.001; the top-N boundary is checked to be strict (no revenue
+    tie straddles the cut); every big order genuinely exceeds the
+    threshold."""
+    from collections import defaultdict
+    from decimal import Decimal
+
+    import duckdb
+
+    from htep_spark.driver_queries import (
+        QUERIES,
+        TPCH_BIGORDER_QTY,
+        TPCH_SHIP_CUTOFF,
+        TPCH_SHIP_SEGMENT,
+        TPCH_SHIP_TOPN,
+    )
+
+    con = duckdb.connect()
+    for t in ("customer", "orders", "lineitem"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
+        )
+    segs = dict(
+        con.execute("SELECT c_custkey, c_mktsegment FROM customer").fetchall()
+    )
+    orders = {
+        ok: (ck, od, op, tp)
+        for ok, ck, od, op, tp in con.execute(
+            "SELECT o_orderkey, o_custkey, epoch(o_orderdate), "
+            "o_orderpriority, o_totalprice FROM orders"
+        ).fetchall()
+    }
+    lis = con.execute(
+        "SELECT l_orderkey, l_extendedprice, l_discount, l_quantity, "
+        "epoch(l_shipdate) FROM lineitem"
+    ).fetchall()
+    cutoff = con.execute(
+        f"SELECT epoch(TIMESTAMP '{TPCH_SHIP_CUTOFF} 00:00:00')"
+    ).fetchone()[0]
+    # --- Q3 replay (exact Decimal revenue) ---
+    rev = defaultdict(Decimal)
+    for ok, price, disc, _q, ship in lis:
+        if ok not in orders or ship <= cutoff:
+            continue
+        ck, od, op, _tp = orders[ok]
+        if od >= cutoff or segs.get(ck) != TPCH_SHIP_SEGMENT:
+            continue
+        p = Decimal(str(price)).quantize(Decimal("0.01"))
+        d = Decimal(str(disc)).quantize(Decimal("0.01"))
+        rev[ok] += p * (1 - d)
+    ranked = sorted(rev.items(), key=lambda kv: (-kv[1], kv[0]))
+    top = ranked[:TPCH_SHIP_TOPN]
+    if len(ranked) > TPCH_SHIP_TOPN:
+        assert top[-1][1] != ranked[TPCH_SHIP_TOPN][1], "tie straddles cut"
+    rows = con.execute(QUERIES["tpch_shipping"][1]).fetchall()
+    assert len(rows) == min(TPCH_SHIP_TOPN, len(ranked))
+    got = {r[0]: r for r in rows}
+    for ok, r in top:
+        _ck, od, op, _tp = orders[ok]
+        assert got[ok][1] == float(round(r, 2))
+        assert got[ok][2] == od and got[ok][3] == op
+    # --- Q18 replay ---
+    qty = defaultdict(Decimal)
+    for ok, _p, _d, q, _s in lis:
+        qty[ok] += Decimal(str(q)).quantize(Decimal("0.01"))
+    big = {ok: s for ok, s in qty.items() if s > TPCH_BIGORDER_QTY}
+    rows = con.execute(QUERIES["tpch_big_orders"][1]).fetchall()
+    assert len(rows) == len(big) > 0
+    for _cn, ck, ok, od, tp, tq in rows:
+        assert ok in big and tq == float(round(big[ok], 2)) > TPCH_BIGORDER_QTY
+        eck, eod, _eop, etp = orders[ok]
+        assert (ck, od) == (eck, eod)
+        assert tp == round(etp, 2)
+
+
 def test_triangle_count_pure_python_replay_and_identities():
     """Triangles (`triangle_count`): a brute-force pure-Python replay —
     undirected canonical edges, all-(a<b<c) enumeration, per-corner
@@ -1964,6 +2043,52 @@ def test_k_core_pure_python_replay_and_peel_invariants():
             assert (rr, in_core, cd) == (None, 1, core_deg[node])
         else:
             assert (rr, in_core, cd) == (removed_round[node], 0, 0)
+
+
+def test_active_users_pure_python_replay_and_bounds():
+    """Engagement (`active_users`): a pure-Python replay — (user, day)
+    dedup, trailing-7-day distinct actives via brute force — must match
+    the DuckDB oracle (which uses the contribution-explode; equality IS
+    the explode-trick proof on data) at sf0.001; DAU <= WAU always;
+    stickiness in (0, 1]; only full-window days emit; WAU is genuinely
+    larger than DAU somewhere (the window matters)."""
+    import math
+    from collections import defaultdict
+
+    import duckdb
+
+    from htep_spark.driver_queries import _DAY_US, AU_WINDOW, QUERIES
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        "read_parquet('/root/testdata/sf0.001/events.parquet')"
+    )
+    raw = con.execute("SELECT user_id, epoch_us(ts) FROM events").fetchall()
+    days = defaultdict(set)
+    for u, um in raw:
+        days[um // _DAY_US].add(u)
+    d0, d1 = min(days), max(days)
+    exp = {}
+    for d in range(d0 + AU_WINDOW - 1, d1 + 1):
+        dau = len(days.get(d, set()))
+        wau = len(set().union(*(days.get(x, set())
+                                for x in range(d - AU_WINDOW + 1, d + 1))))
+        exp[d] = (dau, wau)
+    rows = con.execute(QUERIES["active_users"][1]).fetchall()
+    assert len(rows) == len([d for d in exp if exp[d][0] > 0])
+    widened = False
+    for day, dau, wau, stick in rows:
+        ed, ew = exp[day]
+        assert (dau, wau) == (ed, ew)
+        assert dau <= wau
+        e = dau / wau
+        frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
+        assert frac > 1e-4 or frac < 1e-12, (day, e)
+        assert stick == math.floor(e * 1e6 + 0.5) / 1e6
+        assert 0.0 < stick <= 1.0
+        widened = widened or wau > dau
+    assert widened, "window never widens (degenerate)"
 
 
 def test_critical_path_pure_python_replay_and_cpm_invariants():

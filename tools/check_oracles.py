@@ -19,7 +19,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 
-TABLES = ("events", "documents", "embeddings")
+TABLES = (
+    "region nation customer supplier orders lineitem events documents embeddings"
+).split()
 
 
 def canon(df: pd.DataFrame) -> tuple:
