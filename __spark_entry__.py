@@ -97,7 +97,7 @@ DRIVER_CAP_OVERFLOW = (
     "lm_tercile",  # tercile machinery; lm_heldout covers it on the held-out split
     "block_keep",  # O3 block keep/drop rule over the HTML parser's block features
     "strategy_best",  # R12 keep-best strategy loop over three segmentation variants
-    "qdigest",  # q-digest batch query; shares its kernel with the streaming sketch
+    "qdigest",  # q-digest sketch; token_quantiles holds the exact-quantile row
     "url_domains",  # URL normalization + registrable domains for the web funnel
     "seq_pack",  # concat-and-chunk sequence packing of curated documents
     "dsir_select",  # DSIR importance weights for curation
@@ -119,22 +119,6 @@ DRIVER_CAP_OVERFLOW = (
     "template_lines",  # per-domain boilerplate line removal
     "nfc_normalize",  # Unicode NFC canonicalization before dedup
     "lm_kneser_ney",  # Kneser-Ney LM perplexity filter
-    # Generic analytics with no extraction, conversation or curation
-    # consumer, held here until they are cut from the inventory:
-    "tpch_pricing",  # TPC-H Q1-shape pricing summary
-    "tpch_regional_revenue",  # TPC-H Q5-shape regional revenue
-    "tpch_shipping",  # TPC-H Q3-shape shipping priority
-    "tpch_big_orders",  # TPC-H Q18-shape large-quantity orders
-    "active_users",  # daily and weekly active users
-    "pagerank",  # domain link-graph PageRank
-    "hits",  # HITS hubs and authorities
-    "lpa_communities",  # label-propagation communities
-    "triangle_count",  # graph triangle counts
-    "k_core",  # k-core peeling
-    "bfs_hops",  # BFS hop distances
-    "critical_path",  # critical-path method over a task DAG
-    "assortativity",  # degree assortativity
-    "crawl_frontier",  # pagerank-priority crawl scheduling
 )
 
 

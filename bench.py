@@ -103,7 +103,7 @@ def main() -> None:
     # on record (8.5-13s for identical code, round 5) — one more sample
     # tightens the minimum without changing the frozen query set.
     # Round 6 (VERDICT r05 #6): the kernel (Arrow extraction UDF) and the
-    # aggregation (salted two-stage rollup) phases are timed separately so
+    # aggregation (per-conversation rollup) phases are timed separately so
     # the ±20% swing is attributable — the extraction output is pinned with
     # localCheckpoint and the rollup timed over the pinned frame; the
     # headline number stays the full-pipeline best-of-3 as before.
@@ -228,25 +228,11 @@ def main() -> None:
         "dup_longest",
         "span_scrub",
         "split_leakage",
-        "pagerank",
         "mojibake_fix",
-        "crawl_frontier",
         "robots_filter",
         "template_lines",
-        "hits",
         "nfc_normalize",
-        "lpa_communities",
         "lm_kneser_ney",
-        "tpch_pricing",
-        "tpch_regional_revenue",
-        "triangle_count",
-        "tpch_shipping",
-        "tpch_big_orders",
-        "k_core",
-        "active_users",
-        "critical_path",
-        "assortativity",
-        "bfs_hops",
     ):
         _run(QUERIES[name][0](spark, SF_DIR))  # untimed warm pass
         best = float("inf")

@@ -4,8 +4,8 @@ A from-scratch rebuild of the query/data-processing capabilities of the
 reference HTEP platform (healthcare OCR/ICR text extraction), re-expressed
 Spark-first: DataFrame plans over transcript tables, Arrow-vectorized pandas
 UDFs for every per-turn operator, broadcast dictionaries, explicit
-conv_id-hash partitioning with salting for skew, and a per-partition
-checkpoint manifest for exact resume.
+conv_id-hash partitioning over partial (map-side) aggregates, and a
+per-partition checkpoint manifest for exact resume.
 
 Layout:
     functions/   pure-Python operator kernels (shared by oracle and UDFs)

@@ -2598,7 +2598,7 @@ def _sql_ann_ivf() -> str:
 
 
 def _q_conv_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rows-only: salted two-stage per-conversation metrics over the full
+    """Rows-only: one-``groupBy`` per-conversation metrics over the full
     extraction output (the bench headline's grouped pass)."""
     from pyspark.sql.window import Window
 
@@ -2654,7 +2654,7 @@ FROM c JOIN u USING (doc_id)
 def _q_conv_metrics_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HASH-CHECKED: the kernel-free ordering/contiguity slice of
     ``conv_metrics`` — the north_star stable-turn-ordering invariant
-    (``ordered_ok``) computed by the same salted two-stage plan
+    (``ordered_ok``) computed by the same one-``groupBy`` plan
     (``plans/pipeline.py::per_conversation_order``), oracled in DuckDB with
     window aggregates over raw ``(conv_id, turn_idx)``."""
     from pyspark.sql.window import Window
@@ -6498,81 +6498,6 @@ FROM verdict v JOIN dom d USING (domain)
 
 
 # --------------------------------------------------------------------------
-# Crawl frontier scheduling (`crawl_frontier`): what a crawler actually
-# DOES with `pagerank` and `url_domains` — order the fetch queue by host
-# authority while respecting per-host politeness (one request per
-# POLITENESS_DELAY_S per registrable domain; the Mercator/Heritrix
-# frontier discipline). Each URL gets its in-domain slot (row_number in a
-# PARTITIONED window ordered by doc_id — per-domain queues, never a
-# global sort), a scheduled fetch offset slot * delay, and the domain's
-# makespan rides along from the already-audited per-domain rollup. The
-# host score joins in from the pagerank table via the domain -> node map
-# (both composed operators are independently hash-verified; this checks
-# their COMPOSITION, the web_funnel discipline).
-#
-# Scale shape: url normalization is a projection; pagerank's node table
-# is tiny and broadcast; the only corpus-width work is one hash exchange
-# on domain for the per-domain window — exactly the partitioning a real
-# frontier shards by (host), so the skew story is the crawl's own skew
-# story (domain_quota is the cap for that).
-# --------------------------------------------------------------------------
-
-POLITENESS_DELAY_S = 5  # per-domain fetch spacing
-
-
-def q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    u = q_url_domains(spark, sf_dir).select(
-        "doc_id", "domain", "domain_docs"
-    )
-    p = q_pagerank(spark, sf_dir).select("node", "pr")
-    node = (
-        F.regexp_extract(F.col("domain"), r"^site([0-9]+)\.", 1).cast("long")
-        % PR_N_NODES
-    )
-    w = Window.partitionBy("domain").orderBy("doc_id")
-    return (
-        u.withColumn("node", node)
-        .join(F.broadcast(p), "node")
-        .withColumn("slot", (F.row_number().over(w) - 1).cast("long"))
-        .select(
-            "doc_id",
-            "domain",
-            "node",
-            "pr",
-            "slot",
-            (F.col("slot") * POLITENESS_DELAY_S).cast("long").alias("sched_s"),
-            F.col("domain_docs").cast("long").alias("dom_docs"),
-            ((F.col("domain_docs") - 1) * POLITENESS_DELAY_S)
-            .cast("long")
-            .alias("makespan_s"),
-        )
-    )
-
-
-def _sql_crawl_frontier() -> str:
-    return f"""
-WITH u AS ({_sql_url_domains()}), p AS ({_sql_pagerank()}),
-j AS (
-  SELECT u.doc_id, u.domain, u.domain_docs,
-         (CAST(regexp_extract(u.domain, '^site([0-9]+)\\.', 1) AS BIGINT)
-          % {PR_N_NODES}) AS node
-  FROM u
-), sl AS (
-  SELECT j.*, p.pr,
-         CAST(row_number() OVER (PARTITION BY j.domain ORDER BY j.doc_id)
-              - 1 AS BIGINT) AS slot
-  FROM j JOIN p USING (node)
-)
-SELECT doc_id, domain, node, pr, slot,
-       CAST(slot * {POLITENESS_DELAY_S} AS BIGINT) AS sched_s,
-       CAST(domain_docs AS BIGINT) AS dom_docs,
-       CAST((domain_docs - 1) * {POLITENESS_DELAY_S} AS BIGINT)
-         AS makespan_s
-FROM sl
-"""
-
-
-# --------------------------------------------------------------------------
 # Mojibake repair (`mojibake_fix`): the encoding-hygiene pass every web
 # corpus needs before tokenization — UTF-8 text that was decoded as
 # Latin-1 and re-encoded ("CafÃ©" for "Café", "â€™" for "'") is the most
@@ -6676,160 +6601,6 @@ SELECT doc_id, n_moji,
        CAST(CASE WHEN md5(fixed) <> md5(ctext) THEN 1 ELSE 0 END
             AS BIGINT) AS changed
 FROM rep
-"""
-
-
-# --------------------------------------------------------------------------
-# Domain link-graph PageRank (`pagerank`): the crawl-prioritization /
-# spam-demotion score every web-scale curation pipeline computes over its
-# host graph (Page et al. 1999; the CommonCrawl host-level ranking that
-# feeds URL frontier ordering and RefinedWeb-style source weighting —
-# complements `url_domains` (node hygiene) and `domain_quota` (per-node
-# caps) with the GRAPH structure between domains). The testdata has no
-# link column, so a deterministic host graph is synthesized from
-# (source, doc_id): node = src_num % PR_N_NODES, each doc emits one
-# directed edge node -> (src_num*7 + doc_id*13 + 3) % PR_N_NODES, edge
-# weight = number of emitting docs. Self-loops are dropped, and every
-# out-edge of nodes with node % 7 == PR_DANGLE_MOD is removed so the
-# dangling-mass branch (nodes with no out-edges redistribute their rank
-# uniformly) provably fires. PR_ITERS damped power iterations with
-# weighted out-degree normalization, teleport (1-d)/N.
-#
-# Scale shape: the graph tables (nodes / edges / out-weights) are derived
-# from ONE corpus scan, aggregated to at most PR_N_NODES^2 rows, and
-# pinned with eager localCheckpoint (the connected-components lineage
-# pattern) — the K iterations then join only the tiny checkpointed
-# frames, never re-scanning the corpus (plan-gated: zero FileScans in
-# the returned DataFrame). At real scale nodes/edges are |hosts|-sized,
-# each iteration is one broadcast-or-shuffle join + map-side-combinable
-# agg keyed by dst — the standard distributed PageRank shape. The
-# dangling mass and N ride 1-row cross-joined aggregates, never a
-# driver-side loop over rows.
-#
-# Cross-engine determinism: per-term arithmetic is identical; only the
-# reduce order of the <= PR_N_NODES-term contribution sums differs, and
-# the damping factor contracts accumulated float drift (error_{i+1} <=
-# d * error_i + eps), so ranks agree to ~1e-14 — far below the 6dp
-# boundary (pytest asserts every value clears the .5e-6 boundary by a
-# wide margin).
-# --------------------------------------------------------------------------
-
-PR_N_NODES = 24  # bounded node universe at any SF (src_num % 24)
-PR_DAMPING = 0.85
-PR_ITERS = 8
-PR_DANGLE_MOD = 3  # nodes with node % 7 == 3 lose all out-edges (dangle)
-
-
-def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    s = (src_num % PR_N_NODES).alias("src")
-    t = ((src_num * 7 + F.col("doc_id") * 13 + 3) % PR_N_NODES).alias("dst")
-    # ONE corpus pass (round 7, guide §2.4/§5): the (src, dst) universe is
-    # bounded at N^2 = 576 rows at ANY scale factor, so a single map-side-
-    # aggregated groupBy carries everything downstream (node universe,
-    # filtered edge weights). The bounded collect is the sanctioned
-    # dimension-sized class (cf. the 4096-row IVF sample / 1-row argmaxes);
-    # the 8 damped power-iteration rounds then run on the driver over <= 24
-    # values with the exact same expressions — replacing 2 extra corpus
-    # scans, 9 localCheckpoints and ~25 tiny shuffle jobs per call.
-    pairs = (
-        docs.select(s, t).groupBy("src", "dst").agg(F.count("*").alias("w"))
-    ).collect()
-    nodes = sorted({r["src"] for r in pairs} | {r["dst"] for r in pairs})
-    ew = {
-        (r["src"], r["dst"]): r["w"]
-        for r in pairs
-        if r["src"] != r["dst"] and r["src"] % 7 != PR_DANGLE_MOD
-    }
-    outw: Dict[int, int] = {}
-    n_in: Dict[int, int] = {}
-    for (u, v), w in sorted(ew.items()):
-        outw[u] = outw.get(u, 0) + w
-        n_in[v] = n_in.get(v, 0) + 1
-    frac = {(u, v): w / outw[u] for (u, v), w in ew.items()}
-    n = float(len(nodes))
-    d = PR_DAMPING
-    ranks = {nd: 1.0 / n for nd in nodes}
-    for _ in range(PR_ITERS):
-        contrib: Dict[int, float] = {}
-        for (u, v), fr in sorted(frac.items()):
-            contrib[v] = contrib.get(v, 0.0) + fr * ranks[u]
-        dm = sum(ranks[nd] for nd in nodes if nd not in outw)
-        ranks = {
-            nd: (1.0 - d) / n
-            + d * (contrib.get(nd, 0.0) + dm / n)
-            for nd in nodes
-        }
-    rows = [
-        (nd, outw.get(nd), n_in.get(nd), ranks[nd]) for nd in nodes
-    ]
-    return spark.createDataFrame(
-        rows, "node long, ow long, n_in long, r double"
-    ).select(
-        "node",
-        F.coalesce(F.col("ow"), F.lit(0)).cast("long").alias("out_weight"),
-        F.coalesce(F.col("n_in"), F.lit(0)).cast("long").alias("n_in"),
-        F.when(F.col("ow").isNull(), 1).otherwise(0).cast("long").alias(
-            "dangling"
-        ),
-        F.round(F.col("r"), 6).alias("pr"),
-    )
-
-
-def _sql_pagerank() -> str:
-    n, d = PR_N_NODES, PR_DAMPING
-    iters = []
-    for i in range(1, PR_ITERS + 1):
-        p = f"r{i - 1}"
-        iters.append(
-            f"""d{i} AS (
-  SELECT coalesce(sum(r), 0.0) AS dm FROM {p}
-  WHERE node NOT IN (SELECT src FROM outw)
-), c{i} AS (
-  SELECT e.dst AS node, sum(e.frac * p.r) AS c
-  FROM e JOIN {p} p ON p.node = e.src GROUP BY e.dst
-), r{i} AS (
-  SELECT nd.node,
-         {1.0 - d} / n + {d} * (coalesce(c.c, 0.0) + dm.dm / n) AS r
-  FROM nodes nd CROSS JOIN ncnt CROSS JOIN d{i} dm
-  LEFT JOIN c{i} c ON c.node = nd.node
-)"""
-        )
-    chain = ", ".join(iters)
-    return f"""
-WITH raw AS (
-  SELECT (CAST(substr(source, 4) AS BIGINT) % {n}) AS src,
-         ((CAST(substr(source, 4) AS BIGINT) * 7 + doc_id * 13 + 3) % {n})
-           AS dst
-  FROM documents
-), nodes AS (
-  SELECT src AS node FROM raw UNION SELECT dst FROM raw
-), ncnt AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes
-), edges AS (
-  SELECT src, dst, CAST(count(*) AS BIGINT) AS w
-  FROM raw WHERE src <> dst AND (src % 7) <> {PR_DANGLE_MOD}
-  GROUP BY src, dst
-), outw AS (
-  SELECT src, CAST(sum(w) AS BIGINT) AS ow FROM edges GROUP BY src
-), inw AS (
-  SELECT dst, CAST(count(*) AS BIGINT) AS n_in FROM edges GROUP BY dst
-), e AS (
-  SELECT src, dst, CAST(w AS DOUBLE) / ow AS frac
-  FROM edges JOIN outw USING (src)
-), r0 AS (
-  SELECT node, 1.0 / n AS r FROM nodes CROSS JOIN ncnt
-), {chain}
-SELECT nd.node,
-       CAST(coalesce(ow.ow, 0) AS BIGINT) AS out_weight,
-       CAST(coalesce(inw.n_in, 0) AS BIGINT) AS n_in,
-       CAST(CASE WHEN ow.ow IS NULL THEN 1 ELSE 0 END AS BIGINT) AS dangling,
-       round(rk.r, 6) AS pr
-FROM nodes nd
-JOIN r{PR_ITERS} rk ON rk.node = nd.node
-LEFT JOIN outw ow ON ow.src = nd.node
-LEFT JOIN inw ON inw.dst = nd.node
 """
 
 
@@ -7031,181 +6802,6 @@ FROM per p LEFT JOIN dtpl d USING (src)
 
 
 # --------------------------------------------------------------------------
-# HITS hubs & authorities (`hits`): Kleinberg 1999 — the other classical
-# host-graph score next to `pagerank`, separating nodes that LINK to good
-# content (hubs) from nodes that ARE good content (authorities); real
-# crawl pipelines use the pair to seed frontier and spam heuristics. Runs
-# over the SAME synthesized host graph as `pagerank` (identical node/edge
-# derivation incl. the dangle pruning), so the two scores are directly
-# joinable. HITS_ITERS alternating weighted updates with L1
-# normalization: h = E·a / ||E·a||_1, a = Eᵀ·h / ||Eᵀ·h||_1.
-#
-# Scale shape: the pagerank discipline verbatim — graph tables derived
-# from ONE corpus scan, aggregated to <= N² rows, pinned with eager
-# localCheckpoint; each iteration joins only the tiny pinned frames
-# (plan-gated: zero FileScans); the normalizer is a 1-row aggregate
-# broadcast back. At |hosts| scale each half-iteration is one
-# broadcast-or-shuffle join + map-side-combinable agg keyed by node.
-#
-# Cross-engine determinism: per-term arithmetic identical; only the
-# <= N-term reduce orders differ (contribution sums + the normalizer),
-# and L1 normalization keeps values in [0,1] so absolute drift stays
-# ~1e-15 per iteration — far under the 6dp boundary (margin pytest, the
-# pagerank discipline).
-# --------------------------------------------------------------------------
-
-HITS_ITERS = 8
-
-
-def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    # ONE corpus pass (round 7, guide §2.4/§5 — the pagerank discipline):
-    # (src, dst) is bounded at N^2 = 576 rows at any SF; the unfiltered
-    # groupBy carries both the node universe and (after the edge filter)
-    # the weighted edges. The 2*HITS_ITERS normalize/propagate half-steps
-    # then run on the driver over <= 24 values with the exact same
-    # expressions — replacing 3 corpus scans, 18 localCheckpoints and ~50
-    # tiny shuffle jobs per call.
-    pairs = (
-        docs.select(
-            (src_num % PR_N_NODES).alias("src"),
-            ((src_num * 7 + F.col("doc_id") * 13 + 3) % PR_N_NODES).alias(
-                "dst"
-            ),
-        )
-        .groupBy("src", "dst")
-        .agg(F.count("*").cast("double").alias("w"))
-    ).collect()
-    nodes = sorted({r["src"] for r in pairs} | {r["dst"] for r in pairs})
-    ew = {
-        (r["src"], r["dst"]): r["w"]
-        for r in pairs
-        if r["src"] != r["dst"] and r["src"] % 7 != PR_DANGLE_MOD
-    }
-    edges = sorted(ew.items())
-    n = float(len(nodes))
-    auth = {nd: 1.0 / n for nd in nodes}
-    hub: Dict[int, float] = {}
-    for _ in range(HITS_ITERS):
-        hv = {nd: 0.0 for nd in nodes}
-        for (u, v), w in edges:
-            if v in auth:
-                hv[u] += w * auth[v]
-        hs = sum(hv[nd] for nd in nodes)
-        hub = {nd: hv[nd] / hs for nd in nodes}
-        av = {nd: 0.0 for nd in nodes}
-        for (u, v), w in edges:
-            av[v] += w * hub[u]
-        asum = sum(av[nd] for nd in nodes)
-        auth = {nd: av[nd] / asum for nd in nodes}
-    outd: Dict[int, Tuple[int, float]] = {}
-    ind: Dict[int, Tuple[int, float]] = {}
-    for (u, v), w in edges:
-        c, sw = outd.get(u, (0, 0.0))
-        outd[u] = (c + 1, sw + w)
-        c, sw = ind.get(v, (0, 0.0))
-        ind[v] = (c + 1, sw + w)
-    rows = [
-        (
-            nd,
-            outd[nd][0] if nd in outd else None,
-            int(outd[nd][1]) if nd in outd else None,
-            ind[nd][0] if nd in ind else None,
-            int(ind[nd][1]) if nd in ind else None,
-            hub[nd],
-            auth[nd],
-        )
-        for nd in nodes
-    ]
-    return spark.createDataFrame(
-        rows,
-        "node long, n_out long, out_w long, n_in long, in_w long, "
-        "h double, a double",
-    ).select(
-        "node",
-        F.coalesce("n_out", F.lit(0)).cast("long").alias("n_out"),
-        F.coalesce("out_w", F.lit(0)).cast("long").alias("out_w"),
-        F.coalesce("n_in", F.lit(0)).cast("long").alias("n_in"),
-        F.coalesce("in_w", F.lit(0)).cast("long").alias("in_w"),
-        F.round("h", 6).alias("hub"),
-        F.round("a", 6).alias("auth"),
-    )
-
-
-def _sql_hits() -> str:
-    n = PR_N_NODES
-    iters = []
-    for i in range(1, HITS_ITERS + 1):
-        p = f"a{i - 1}"
-        # AS MATERIALIZED: DuckDB inlines CTEs by default, and the doubly-
-        # referenced per-half-step frames would re-open the parquet
-        # exponentially across 2*HITS_ITERS levels (observed: fd
-        # exhaustion) — the SQL mirror of the Spark-side localCheckpoint
-        iters.append(
-            f"""h{i}r AS MATERIALIZED (
-  SELECT nd.node, coalesce(x.hv, 0.0) AS hv
-  FROM nodes nd LEFT JOIN (
-    SELECT e.src AS node, sum(e.w * p.a) AS hv
-    FROM e JOIN {p} p ON p.node = e.dst GROUP BY e.src) x
-  ON x.node = nd.node
-), h{i}s AS (
-  SELECT sum(hv) AS s FROM h{i}r
-), h{i} AS MATERIALIZED (
-  SELECT node, hv / s AS h FROM h{i}r CROSS JOIN h{i}s
-), a{i}r AS MATERIALIZED (
-  SELECT nd.node, coalesce(x.av, 0.0) AS av
-  FROM nodes nd LEFT JOIN (
-    SELECT e.dst AS node, sum(e.w * p.h) AS av
-    FROM e JOIN h{i} p ON p.node = e.src GROUP BY e.dst) x
-  ON x.node = nd.node
-), a{i}s AS (
-  SELECT sum(av) AS s FROM a{i}r
-), a{i} AS MATERIALIZED (
-  SELECT node, av / s AS a FROM a{i}r CROSS JOIN a{i}s
-)"""
-        )
-    chain = ", ".join(iters)
-    return f"""
-WITH raw AS MATERIALIZED (
-  SELECT (CAST(substr(source, 4) AS BIGINT) % {n}) AS src,
-         ((CAST(substr(source, 4) AS BIGINT) * 7 + doc_id * 13 + 3) % {n})
-           AS dst
-  FROM documents
-), nodes AS MATERIALIZED (
-  SELECT src AS node FROM raw UNION SELECT dst FROM raw
-), ncnt AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes
-), e AS MATERIALIZED (
-  SELECT src, dst, CAST(count(*) AS DOUBLE) AS w
-  FROM raw WHERE src <> dst AND (src % 7) <> {PR_DANGLE_MOD}
-  GROUP BY src, dst
-), outd AS (
-  SELECT src, CAST(count(*) AS BIGINT) AS n_out,
-         CAST(sum(w) AS BIGINT) AS out_w
-  FROM e GROUP BY src
-), ind AS (
-  SELECT dst, CAST(count(*) AS BIGINT) AS n_in,
-         CAST(sum(w) AS BIGINT) AS in_w
-  FROM e GROUP BY dst
-), a0 AS (
-  SELECT node, 1.0 / n AS a FROM nodes CROSS JOIN ncnt
-), {chain}
-SELECT h.node,
-       CAST(coalesce(o.n_out, 0) AS BIGINT) AS n_out,
-       CAST(coalesce(o.out_w, 0) AS BIGINT) AS out_w,
-       CAST(coalesce(i.n_in, 0) AS BIGINT) AS n_in,
-       CAST(coalesce(i.in_w, 0) AS BIGINT) AS in_w,
-       round(h.h, 6) AS hub,
-       round(a.a, 6) AS auth
-FROM h{HITS_ITERS} h
-JOIN a{HITS_ITERS} a ON a.node = h.node
-LEFT JOIN outd o ON o.src = h.node
-LEFT JOIN ind i ON i.dst = h.node
-"""
-
-
-# --------------------------------------------------------------------------
 # Unicode NFC normalization (`nfc_normalize`): the canonical-form pass a
 # corpus needs before dedup/hashing — visually identical strings with
 # different code-point sequences ("e" + COMBINING ACUTE vs precomposed
@@ -7292,142 +6888,6 @@ SELECT doc_id,
        CAST(CASE WHEN md5(norm) <> md5(ctext) THEN 1 ELSE 0 END AS BIGINT)
          AS changed
 FROM rep
-"""
-
-
-# --------------------------------------------------------------------------
-# Label-propagation communities (`lpa_communities`): Raghavan et al. 2007
-# — the linear-time community detector crawl/curation pipelines run over
-# the host graph to group mirror farms and site families (the
-# community-level sibling of `dedup_keepers`' connected components, which
-# it generalizes: CC = LPA where any shared edge merges; LPA weighs
-# neighbor votes). SYNCHRONOUS updates with a deterministic tie-break
-# (max weighted vote, then smallest label) over the UNDIRECTED view of
-# the same pinned host graph as `pagerank`/`hits`; LPA_ITERS rounds
-# (convergence by round 2 on this graph — verified stable in pytest).
-# The dominant community plus singleton nodes prove both the vote branch
-# and the keep-own-label fallback fire.
-#
-# Scale shape: pagerank discipline — graph pinned once, per-round work is
-# one join + two map-side-combinable aggs keyed by node; the vote argmax
-# is the PACKED-ARGMIN idiom ((BIG - weight)*100 + label, then min) — no
-# window function, no sort, cluster-size invariant, and EXACT integer
-# arithmetic end to end (unlike pagerank/hits there is no float surface
-# at all: both engines must agree bit-for-bit, not just to 6dp).
-# --------------------------------------------------------------------------
-
-LPA_ITERS = 6
-_LPA_PACK = 10**12  # vote weights stay far below this at any plausible SF
-
-
-def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    raw = docs.select(
-        (src_num % PR_N_NODES).alias("src"),
-        ((src_num * 7 + F.col("doc_id") * 13 + 3) % PR_N_NODES).alias("dst"),
-    )
-    # ONE corpus pass (round 7, guide §2.4/§5 — the pagerank discipline):
-    # the unfiltered (src, dst) groupBy is bounded at N^2 = 576 rows at
-    # any SF and carries both the node universe and (after the edge
-    # filter) the weighted edges; the LPA_ITERS synchronous vote rounds
-    # then run on the driver with the exact same packed-argmin integer
-    # arithmetic — replacing 2 extra corpus scans and ~8 localCheckpoints
-    # / ~25 tiny shuffle jobs per call.
-    pairs = (
-        raw.groupBy("src", "dst").agg(F.count("*").cast("long").alias("w"))
-    ).collect()
-    nodes = sorted({r["src"] for r in pairs} | {r["dst"] for r in pairs})
-    und: Dict[Tuple[int, int], int] = {}
-    for r in pairs:
-        u, v, w = r["src"], r["dst"], r["w"]
-        if u != v and u % 7 != PR_DANGLE_MOD:
-            und[(u, v)] = und.get((u, v), 0) + w
-            und[(v, u)] = und.get((v, u), 0) + w
-    und_edges = sorted(und.items())
-    labels = {nd: nd for nd in nodes}
-    for _ in range(LPA_ITERS):
-        votes: Dict[Tuple[int, int], int] = {}
-        for (node, nbr), w in und_edges:
-            key = (node, labels[nbr])
-            votes[key] = votes.get(key, 0) + w
-        pick: Dict[int, int] = {}
-        for (node, lab), ws in sorted(votes.items()):
-            pk = (_LPA_PACK - ws) * 100 + lab
-            if node not in pick or pk < pick[node]:
-                pick[node] = pk
-        labels = {
-            nd: (pick[nd] % 100 if nd in pick else nd) for nd in nodes
-        }
-    sizes: Dict[int, int] = {}
-    for nd in nodes:
-        sizes[labels[nd]] = sizes.get(labels[nd], 0) + 1
-    n_comms = len(sizes)
-    rows = [
-        (
-            nd,
-            labels[nd],
-            sizes[labels[nd]],
-            n_comms,
-            1 if labels[nd] == nd else 0,
-        )
-        for nd in nodes
-    ]
-    return spark.createDataFrame(
-        rows,
-        "node long, community long, csize long, n_comms long, "
-        "own_label long",
-    )
-
-
-def _sql_lpa_communities() -> str:
-    n = PR_N_NODES
-    iters = []
-    for i in range(1, LPA_ITERS + 1):
-        p = f"l{i - 1}"
-        iters.append(
-            f"""v{i} AS (
-  SELECT u.node, l.lab, CAST(sum(u.w) AS BIGINT) AS ws
-  FROM und u JOIN {p} l ON l.node = u.nbr GROUP BY u.node, l.lab
-), p{i} AS (
-  SELECT node, min(({_LPA_PACK} - ws) * 100 + lab) AS mp
-  FROM v{i} GROUP BY node
-), l{i} AS MATERIALIZED (
-  SELECT nd.node, coalesce(p.mp % 100, nd.node) AS lab
-  FROM nodes nd LEFT JOIN p{i} p ON p.node = nd.node
-)"""
-        )
-    chain = ", ".join(iters)
-    return f"""
-WITH raw AS MATERIALIZED (
-  SELECT (CAST(substr(source, 4) AS BIGINT) % {n}) AS src,
-         ((CAST(substr(source, 4) AS BIGINT) * 7 + doc_id * 13 + 3) % {n})
-           AS dst
-  FROM documents
-), nodes AS MATERIALIZED (
-  SELECT src AS node FROM raw UNION SELECT dst FROM raw
-), w AS (
-  SELECT src, dst, CAST(count(*) AS BIGINT) AS w
-  FROM raw WHERE src <> dst AND (src % 7) <> {PR_DANGLE_MOD}
-  GROUP BY src, dst
-), und AS MATERIALIZED (
-  SELECT node, nbr, CAST(sum(w) AS BIGINT) AS w FROM (
-    SELECT src AS node, dst AS nbr, w FROM w
-    UNION ALL
-    SELECT dst AS node, src AS nbr, w FROM w
-  ) GROUP BY node, nbr
-), l0 AS MATERIALIZED (
-  SELECT node, node AS lab FROM nodes
-), {chain}, sizes AS (
-  SELECT lab, CAST(count(*) AS BIGINT) AS csize
-  FROM l{LPA_ITERS} GROUP BY lab
-), ncomm AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_comms FROM sizes
-)
-SELECT l.node, l.lab AS community, s.csize, ncomm.n_comms,
-       CAST(CASE WHEN l.lab = l.node THEN 1 ELSE 0 END AS BIGINT)
-         AS own_label
-FROM l{LPA_ITERS} l JOIN sizes s ON s.lab = l.lab CROSS JOIN ncomm
 """
 
 
@@ -7632,1161 +7092,6 @@ WHERE NOT d.is_train
 """
 
 
-# --------------------------------------------------------------------------
-# Classic warehouse OLAP shapes (`tpch_pricing`, `tpch_regional_revenue`):
-# the relational half of the testdata (region/nation/customer/supplier/
-# orders/lineitem — the TPC-H star) was previously untouched; these two
-# queries certify the bread-and-butter shapes a 100 TB warehouse runs all
-# day. `tpch_pricing` is the Q1 shape (scan-heavy filtered aggregation
-# with map-side partial aggs); `tpch_regional_revenue` is the Q5 shape
-# (fact-fact equi-join lineitem⋈orders with pushed-down date pruning,
-# then a chain of BROADCAST dimension joins customer/supplier/nation/
-# region with the c_nationkey = s_nationkey locality predicate). A plan
-# gate asserts the dims actually broadcast, the date filter reaches the
-# orders scan as a PushedFilter, and ReadSchema pruning holds.
-#
-# Cross-engine determinism: money math runs in bounded DECIMALs —
-# doubles cast to DECIMAL(12,2)/(4,2) at the scan, products stay within
-# exact precision ((12,2)x(5,2)x(5,2) -> scale 6 << 38), sums are exact
-# integer arithmetic in BOTH engines, and doubles only appear casting
-# the exact sums at the output boundary. No reduce-order surface at all.
-# --------------------------------------------------------------------------
-
-TPCH_PRICING_CUTOFF = "1998-09-01"
-TPCH_REVENUE_REGION = "ASIA"
-TPCH_REVENUE_LO, TPCH_REVENUE_HI = "1996-01-01", "1998-01-01"
-
-
-def _tpch(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def q_tpch_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _tpch(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") < F.lit(TPCH_PRICING_CUTOFF).cast("timestamp")
-    )
-    qty = F.col("l_quantity").cast("decimal(12,2)")
-    price = F.col("l_extendedprice").cast("decimal(12,2)")
-    disc = F.col("l_discount").cast("decimal(4,2)")
-    tax = F.col("l_tax").cast("decimal(4,2)")
-    one = F.lit(1).cast("decimal(3,2)")
-    agg = (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(qty).alias("sq"),
-            F.sum(price).alias("sb"),
-            F.sum(price * (one - disc)).alias("sd"),
-            F.sum(price * (one - disc) * (one + tax)).alias("sc"),
-            F.sum(disc).alias("sdisc"),
-            F.count("*").cast("long").alias("count_order"),
-        )
-    )
-    n = F.col("count_order").cast("double")
-    return agg.select(
-        "l_returnflag",
-        "l_linestatus",
-        F.round(F.col("sq").cast("double"), 2).alias("sum_qty"),
-        F.round(F.col("sb").cast("double"), 2).alias("sum_base_price"),
-        F.round(F.col("sd").cast("double"), 2).alias("sum_disc_price"),
-        F.round(F.col("sc").cast("double"), 2).alias("sum_charge"),
-        F.round(F.col("sq").cast("double") / n, 6).alias("avg_qty"),
-        F.round(F.col("sb").cast("double") / n, 6).alias("avg_price"),
-        F.round(F.col("sdisc").cast("double") / n, 6).alias("avg_disc"),
-        "count_order",
-    )
-
-
-def _sql_tpch_pricing() -> str:
-    return f"""
-SELECT l_returnflag, l_linestatus,
-       round(CAST(sq AS DOUBLE), 2) AS sum_qty,
-       round(CAST(sb AS DOUBLE), 2) AS sum_base_price,
-       round(CAST(sd AS DOUBLE), 2) AS sum_disc_price,
-       round(CAST(sc AS DOUBLE), 2) AS sum_charge,
-       round(CAST(sq AS DOUBLE) / CAST(count_order AS DOUBLE), 6)
-         AS avg_qty,
-       round(CAST(sb AS DOUBLE) / CAST(count_order AS DOUBLE), 6)
-         AS avg_price,
-       round(CAST(sdisc AS DOUBLE) / CAST(count_order AS DOUBLE), 6)
-         AS avg_disc,
-       count_order
-FROM (
-  SELECT l_returnflag, l_linestatus,
-         sum(CAST(l_quantity AS DECIMAL(12,2))) AS sq,
-         sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS sb,
-         sum(CAST(l_extendedprice AS DECIMAL(12,2))
-             * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))))
-           AS sd,
-         sum(CAST(l_extendedprice AS DECIMAL(12,2))
-             * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))
-             * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(4,2))))
-           AS sc,
-         sum(CAST(l_discount AS DECIMAL(4,2))) AS sdisc,
-         CAST(count(*) AS BIGINT) AS count_order
-  FROM lineitem
-  WHERE l_shipdate < TIMESTAMP '{TPCH_PRICING_CUTOFF} 00:00:00'
-  GROUP BY l_returnflag, l_linestatus
-)
-"""
-
-
-def q_tpch_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _tpch(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_suppkey",
-        (
-            F.col("l_extendedprice").cast("decimal(12,2)")
-            * (
-                F.lit(1).cast("decimal(3,2)")
-                - F.col("l_discount").cast("decimal(4,2)")
-            )
-        ).alias("rev"),
-    )
-    orders = _tpch(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit(TPCH_REVENUE_LO).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(TPCH_REVENUE_HI).cast("timestamp"))
-    ).select("o_orderkey", "o_custkey")
-    cust = _tpch(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = _tpch(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nat = _tpch(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name", "n_regionkey"
-    )
-    reg = _tpch(spark, sf_dir, "region").filter(
-        F.col("r_name") == TPCH_REVENUE_REGION
-    ).select("r_regionkey")
-    joined = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(
-            F.broadcast(supp),
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(reg), F.col("n_regionkey") == F.col("r_regionkey"))
-    )
-    return (
-        joined.groupBy("n_name")
-        .agg(
-            F.sum("rev").alias("srev"),
-            F.count("*").cast("long").alias("n_lineitems"),
-        )
-        .select(
-            "n_name",
-            F.round(F.col("srev").cast("double"), 2).alias("revenue"),
-            "n_lineitems",
-        )
-    )
-
-
-def _sql_tpch_regional_revenue() -> str:
-    return f"""
-SELECT n_name,
-       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
-                      * (CAST(1 AS DECIMAL(3,2))
-                         - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE), 2)
-         AS revenue,
-       CAST(count(*) AS BIGINT) AS n_lineitems
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE o_orderdate >= TIMESTAMP '{TPCH_REVENUE_LO} 00:00:00'
-  AND o_orderdate < TIMESTAMP '{TPCH_REVENUE_HI} 00:00:00'
-  AND r_name = '{TPCH_REVENUE_REGION}'
-GROUP BY n_name
-"""
-
-
-# --------------------------------------------------------------------------
-# TPC-H Q3 shape (`tpch_shipping`): the unshipped-orders shipping-
-# priority query — the warehouse's three-way fact join with OPPOSING
-# date predicates (orders placed before the cutoff, lineitems shipped
-# after it) and a global top-N by exact DECIMAL revenue. Completes the
-# star-schema trio: Q1 (tpch_pricing) scans, Q5 (tpch_regional_revenue)
-# joins the dim chain, Q3 adds selective fact-fact pruning + top-N.
-#
-# Scale shape: both date filters push to the parquet scans; the
-# customer-segment dim broadcasts; the fact-fact join shuffles on
-# orderkey (AQE); the top-N is orderBy+limit → TakeOrderedAndProject
-# (distributed per-partition heads merged on the driver — never a
-# single-partition window). DECIMAL revenue makes the ordering exact, so
-# the N-th boundary cannot drift between engines; orderkey tie-break.
-# --------------------------------------------------------------------------
-
-TPCH_SHIP_SEGMENT = "BUILDING"
-TPCH_SHIP_CUTOFF = "1998-07-01"
-TPCH_SHIP_TOPN = 10
-
-
-def q_tpch_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = (
-        _tpch(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == TPCH_SHIP_SEGMENT)
-        .select("c_custkey")
-    )
-    orders = (
-        _tpch(spark, sf_dir, "orders")
-        .filter(
-            F.col("o_orderdate") < F.lit(TPCH_SHIP_CUTOFF).cast("timestamp")
-        )
-        .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-    )
-    li = (
-        _tpch(spark, sf_dir, "lineitem")
-        .filter(
-            F.col("l_shipdate") > F.lit(TPCH_SHIP_CUTOFF).cast("timestamp")
-        )
-        .select(
-            "l_orderkey",
-            (
-                F.col("l_extendedprice").cast("decimal(12,2)")
-                * (
-                    F.lit(1).cast("decimal(3,2)")
-                    - F.col("l_discount").cast("decimal(4,2)")
-                )
-            ).alias("rev"),
-        )
-    )
-    agg = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum("rev").alias("srev"))
-    )
-    return (
-        agg.orderBy(F.desc("srev"), "l_orderkey")
-        .limit(TPCH_SHIP_TOPN)
-        .select(
-            "l_orderkey",
-            F.round(F.col("srev").cast("double"), 2).alias("revenue"),
-            F.unix_timestamp("o_orderdate").alias("orderdate_epoch"),
-            "o_orderpriority",
-        )
-    )
-
-
-def _sql_tpch_shipping() -> str:
-    return f"""
-SELECT l_orderkey,
-       round(CAST(srev AS DOUBLE), 2) AS revenue,
-       CAST(epoch(o_orderdate) AS BIGINT) AS orderdate_epoch,
-       o_orderpriority
-FROM (
-  SELECT l.l_orderkey, o.o_orderdate, o.o_orderpriority,
-         sum(CAST(l.l_extendedprice AS DECIMAL(12,2))
-             * (CAST(1 AS DECIMAL(3,2))
-                - CAST(l.l_discount AS DECIMAL(4,2)))) AS srev
-  FROM customer c
-  JOIN orders o ON o.o_custkey = c.c_custkey
-  JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-  WHERE c.c_mktsegment = {_sql_quote(TPCH_SHIP_SEGMENT)}
-    AND o.o_orderdate < TIMESTAMP '{TPCH_SHIP_CUTOFF} 00:00:00'
-    AND l.l_shipdate > TIMESTAMP '{TPCH_SHIP_CUTOFF} 00:00:00'
-  GROUP BY 1, 2, 3
-)
-ORDER BY srev DESC, l_orderkey
-LIMIT {TPCH_SHIP_TOPN}
-"""
-
-
-# --------------------------------------------------------------------------
-# TPC-H Q18 shape (`tpch_big_orders`): the large-volume-customer query —
-# a HAVING-threshold semi-join back onto the same fact table (orders
-# whose total quantity exceeds the threshold, with their customer).
-# The shape Q1/Q3/Q5 don't cover: a grouped predicate on the fact
-# becomes the driving filter of a second pass over itself.
-#
-# Scale shape: the qualifying-order set is one map-side-combinable
-# groupBy + filter (summary-sized — the >threshold tail); it joins back
-# to lineitem/orders as an equi-join Spark plans as a broadcast once AQE
-# sees the tiny side, exactly how a warehouse executes Q18. DECIMAL
-# quantity sums are exact, so the threshold boundary cannot drift.
-# --------------------------------------------------------------------------
-
-TPCH_BIGORDER_QTY = 250
-
-
-def q_tpch_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _tpch(spark, sf_dir, "lineitem").select(
-        "l_orderkey", F.col("l_quantity").cast("decimal(12,2)").alias("qty")
-    )
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("qty").alias("total_qty"))
-        .filter(F.col("total_qty") > TPCH_BIGORDER_QTY)
-    )
-    orders = _tpch(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    cust = _tpch(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    return (
-        big.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            "c_name",
-            "c_custkey",
-            F.col("l_orderkey").alias("o_orderkey"),
-            F.unix_timestamp("o_orderdate").alias("orderdate_epoch"),
-            F.round(F.col("o_totalprice").cast("double"), 2).alias(
-                "o_totalprice"
-            ),
-            F.round(F.col("total_qty").cast("double"), 2).alias("total_qty"),
-        )
-    )
-
-
-def _sql_tpch_big_orders() -> str:
-    return f"""
-WITH big AS (
-  SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(12,2))) AS total_qty
-  FROM lineitem GROUP BY l_orderkey
-  HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > {TPCH_BIGORDER_QTY}
-)
-SELECT c.c_name, c.c_custkey, b.l_orderkey AS o_orderkey,
-       CAST(epoch(o.o_orderdate) AS BIGINT) AS orderdate_epoch,
-       round(CAST(o.o_totalprice AS DOUBLE), 2) AS o_totalprice,
-       round(CAST(b.total_qty AS DOUBLE), 2) AS total_qty
-FROM big b
-JOIN orders o ON o.o_orderkey = b.l_orderkey
-JOIN customer c ON c.c_custkey = o.o_custkey
-"""
-
-
-# --------------------------------------------------------------------------
-# Triangle counting + clustering coefficients (`triangle_count`): the
-# graph-structure primitive the spectral family (pagerank/hits/lpa)
-# doesn't touch — community density. Over the SAME pinned host graph,
-# undirected (canonical a<b edges): triangles enumerate once each via
-# the ordered edge-iterator join a<b<c (the Cohen 2009 / GraphX shape),
-# per-node counts by exploding each triangle to its three corners,
-# local clustering coefficient 2·tri/(deg·(deg−1)), and global
-# transitivity 3·△/#wedges with wedges = Σ deg(deg−1)/2 — all counts
-# BIGINT-exact, coefficients one division each (6dp).
-#
-# Scale shape: the canonical-edge table derives from one corpus scan and
-# is pinned; the two-hop join shuffles on edge endpoints (at real scale
-# the standard mitigation — iterate each triangle from its LOWEST-DEGREE
-# vertex — drops straight into the same plan by replacing the id
-# ordering with a (degree, id) ordering; the id ordering is kept here
-# because the 24-node universe makes skew moot and DuckDB mirrors it
-# verbatim).
-# --------------------------------------------------------------------------
-
-
-def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    s = (src_num % PR_N_NODES).alias("src")
-    t = ((src_num * 7 + F.col("doc_id") * 13 + 3) % PR_N_NODES).alias("dst")
-    raw = docs.select(s, t).filter(F.col("src") != F.col("dst"))
-    und = (
-        raw.select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        und.select(F.col("u").alias("node"))
-        .union(und.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .union(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("deg"))
-    )
-    tri = (
-        und.alias("e1")
-        .join(und.alias("e2"), F.col("e1.v") == F.col("e2.u"))
-        .join(
-            und.alias("e3"),
-            (F.col("e3.u") == F.col("e1.u"))
-            & (F.col("e3.v") == F.col("e2.v")),
-        )
-        .select(
-            F.col("e1.u").alias("a"),
-            F.col("e1.v").alias("b"),
-            F.col("e2.v").alias("c"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    tri_n = (
-        tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("tri"))
-    )
-    tot = tri.agg(F.count("*").cast("long").alias("n_tri"))
-    wedges = deg.agg(
-        F.sum(F.expr("(deg * (deg - 1)) div 2")).cast("long").alias("wedges")
-    )
-    lcc = F.when(
-        F.col("deg") >= 2,
-        (2 * F.col("tri")).cast("double")
-        / (F.col("deg") * (F.col("deg") - 1)).cast("double"),
-    ).otherwise(F.lit(0.0))
-    return (
-        nodes.join(deg, "node")
-        .join(tri_n, "node", "left")
-        .select(
-            "node", "deg", F.coalesce("tri", F.lit(0)).cast("long").alias("tri")
-        )
-        .crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(wedges))
-        .select(
-            "node",
-            "deg",
-            "tri",
-            F.round(lcc, 6).alias("lcc"),
-            "n_tri",
-            "wedges",
-            F.round(
-                F.when(
-                    F.col("wedges") > 0,
-                    (3 * F.col("n_tri")).cast("double")
-                    / F.col("wedges").cast("double"),
-                ).otherwise(F.lit(0.0)),
-                6,
-            ).alias("transitivity"),
-        )
-    )
-
-
-def _sql_triangle_count() -> str:
-    n = PR_N_NODES
-    return f"""
-WITH raw AS (
-  SELECT CAST(substr(source, 4, 10) AS BIGINT) % {n} AS src,
-         (CAST(substr(source, 4, 10) AS BIGINT) * 7 + doc_id * 13 + 3)
-           % {n} AS dst
-  FROM documents
-), und AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM raw WHERE src <> dst
-), nodes AS (
-  SELECT DISTINCT node FROM (
-    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-), deg AS MATERIALIZED (
-  SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-  GROUP BY node
-), tri AS MATERIALIZED (
-  SELECT e1.u AS a, e1.v AS b, e2.v AS c
-  FROM und e1
-  JOIN und e2 ON e2.u = e1.v
-  JOIN und e3 ON e3.u = e1.u AND e3.v = e2.v
-), tri_n AS (
-  SELECT node, CAST(count(*) AS BIGINT) AS tri FROM (
-    SELECT a AS node FROM tri
-    UNION ALL SELECT b FROM tri
-    UNION ALL SELECT c FROM tri)
-  GROUP BY node
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_tri FROM tri
-), wedges AS (
-  SELECT CAST(sum((deg * (deg - 1)) // 2) AS BIGINT) AS wedges FROM deg
-)
-SELECT nodes.node, d.deg,
-       CAST(coalesce(tn.tri, 0) AS BIGINT) AS tri,
-       round(CASE WHEN d.deg >= 2
-                  THEN CAST(2 * coalesce(tn.tri, 0) AS DOUBLE)
-                       / CAST(d.deg * (d.deg - 1) AS DOUBLE)
-                  ELSE 0.0 END, 6) AS lcc,
-       tot.n_tri, w.wedges,
-       round(CASE WHEN w.wedges > 0
-                  THEN CAST(3 * tot.n_tri AS DOUBLE)
-                       / CAST(w.wedges AS DOUBLE)
-                  ELSE 0.0 END, 6) AS transitivity
-FROM nodes
-JOIN deg d USING (node)
-LEFT JOIN tri_n tn USING (node)
-CROSS JOIN tot CROSS JOIN wedges w
-"""
-
-
-# --------------------------------------------------------------------------
-# k-core decomposition (`k_core`): the degeneracy peel (Seidman 1983) —
-# iteratively delete nodes of degree < K until fixpoint; the surviving
-# K-core is the graph's cohesive backbone (spam-farm / community-seed
-# detection on host graphs). Completes the graph quartet: pagerank
-# (centrality), hits (dual centrality), lpa (communities),
-# triangle_count (density), k_core (cohesion). The pagerank edge rule is
-# near-REGULAR (probed: every k peels all-or-nothing), so this operator
-# synthesizes a degree-SKEWED host graph from the same corpus columns:
-# src = src_num % N, dst = (src_num·7 + doc_id·13 + 3) % (src + 1) — a
-# preferential-attachment-style rule where low-index hosts accumulate
-# degree. Two scopes prove both peel regimes at every SF (probed at
-# sf0.001/0.01/0.1): 'core' (K=6) converges in one round to a 17-node
-# core; 'cascade' (K=7) unravels over SIX onion layers to the empty
-# graph — the multi-round removal path. KC_ROUNDS = 12 synchronous
-# peels; the converged flag certifies fixpoint (size of the last two
-# rounds equal) in the output itself. ALL-integer.
-#
-# Scale shape: each peel is one endpoint-join degree count + one filter
-# over the (pinned, |hosts|-sized) alive set — the standard distributed
-# k-core; iterations never re-scan the corpus (the pagerank per-round
-# pin discipline). DuckDB unrolls the same rounds as generated CTEs
-# (the lpa_communities pattern), both scopes in one chain via a scope
-# column.
-# --------------------------------------------------------------------------
-
-KC_SCOPES = (("core", 6), ("cascade", 7))
-KC_ROUNDS = 12  # ≥ the 6-layer cascade depth; fixpoint certified in-output
-
-
-def q_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    a = (src_num % PR_N_NODES).alias("src")
-    b = ((src_num * 7 + F.col("doc_id") * 13 + 3) % (src_num % PR_N_NODES + 1)).alias("dst")
-    # ONE corpus pass (round 7, guide §2.4/§5 — the pagerank discipline):
-    # the undirected edge universe is bounded at N^2/2 rows at any SF; the
-    # KC_ROUNDS peel rounds over both scopes then run on the driver with
-    # the exact same integer arithmetic — replacing 2 corpus scans and
-    # ~15 localCheckpoints / ~60 tiny shuffle jobs per call.
-    und = sorted(
-        (r["u"], r["v"])
-        for r in docs.select(a, b)
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-        .collect()
-    )
-    nodes0 = sorted({u for u, _ in und} | {v for _, v in und})
-    rows = []
-    for scope, k in KC_SCOPES:
-        alive = set(nodes0)
-        removed_round: Dict[int, int] = {}
-        prev = set(alive)
-        for i in range(1, KC_ROUNDS + 1):
-            deg: Dict[int, int] = {}
-            for u, v in und:
-                if u in alive and v in alive:
-                    deg[u] = deg.get(u, 0) + 1
-                    deg[v] = deg.get(v, 0) + 1
-            keep = {nd for nd in alive if deg.get(nd, 0) >= k}
-            for nd in alive - keep:
-                removed_round[nd] = i
-            prev = alive
-            alive = keep
-        core_deg: Dict[int, int] = {}
-        for u, v in und:
-            if u in alive and v in alive:
-                core_deg[u] = core_deg.get(u, 0) + 1
-                core_deg[v] = core_deg.get(v, 0) + 1
-        n_core, n_prev = len(alive), len(prev)
-        for nd in nodes0:
-            rows.append(
-                (
-                    scope,
-                    nd,
-                    removed_round.get(nd),
-                    1 if nd in alive else 0,
-                    core_deg.get(nd, 0),
-                    k,
-                    n_core,
-                    1 if n_core == n_prev else 0,
-                )
-            )
-    return spark.createDataFrame(
-        rows,
-        "scope string, node long, removed_round long, in_core long, "
-        "core_degree long, k long, n_core long, converged long",
-    )
-
-
-def _sql_k_core() -> str:
-    n = PR_N_NODES
-    iters = []
-    for i in range(1, KC_ROUNDS + 1):
-        p = f"a{i - 1}"
-        iters.append(
-            f"""d{i} AS (
-  SELECT scope, node, CAST(count(*) AS BIGINT) AS deg FROM (
-    SELECT x.scope, e.u AS node FROM und e
-    JOIN {p} x ON x.node = e.u
-    JOIN {p} y ON y.scope = x.scope AND y.node = e.v
-    UNION ALL
-    SELECT x.scope, e.v FROM und e
-    JOIN {p} x ON x.node = e.u
-    JOIN {p} y ON y.scope = x.scope AND y.node = e.v
-  ) GROUP BY scope, node
-), a{i} AS MATERIALIZED (
-  SELECT a.scope, a.node, a.k FROM {p} a
-  JOIN d{i} d ON d.scope = a.scope AND d.node = a.node
-  WHERE d.deg >= a.k
-), r{i} AS (
-  SELECT a.scope, a.node, {i} AS removed_round FROM {p} a
-  WHERE NOT EXISTS (
-    SELECT 1 FROM a{i} s WHERE s.scope = a.scope AND s.node = a.node)
-)"""
-        )
-    chain = ", ".join(iters)
-    removed_union = "\n    UNION ALL\n    ".join(
-        f"SELECT scope, node, removed_round FROM r{i}"
-        for i in range(1, KC_ROUNDS + 1)
-    )
-    scope_rows = ", ".join(
-        f"('{sc}', {k})" for sc, k in KC_SCOPES
-    )
-    return f"""
-WITH raw AS MATERIALIZED (
-  SELECT (CAST(substr(source, 4, 10) AS BIGINT) % {n}) AS src,
-         ((CAST(substr(source, 4, 10) AS BIGINT) * 7 + doc_id * 13 + 3)
-           % ((CAST(substr(source, 4, 10) AS BIGINT) % {n}) + 1)) AS dst
-  FROM documents
-), und AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM raw WHERE src <> dst
-), nodes0 AS MATERIALIZED (
-  SELECT DISTINCT u AS node FROM und UNION SELECT v FROM und
-), scopes(scope, k) AS (
-  SELECT * FROM (VALUES {scope_rows}) t(scope, k)
-), a0 AS MATERIALIZED (
-  SELECT s.scope, nd.node, CAST(s.k AS BIGINT) AS k
-  FROM nodes0 nd CROSS JOIN scopes s
-), {chain}, removed AS MATERIALIZED (
-  SELECT scope, node, CAST(min(removed_round) AS BIGINT) AS removed_round
-  FROM ({removed_union}) GROUP BY scope, node
-), core AS MATERIALIZED (
-  SELECT scope, node FROM a{KC_ROUNDS}
-), ce AS (
-  SELECT x.scope, e.u, e.v FROM und e
-  JOIN core x ON x.node = e.u
-  JOIN core y ON y.scope = x.scope AND y.node = e.v
-), core_deg AS (
-  SELECT scope, node, CAST(count(*) AS BIGINT) AS core_degree FROM (
-    SELECT scope, u AS node FROM ce
-    UNION ALL SELECT scope, v FROM ce
-  ) GROUP BY scope, node
-), ncore AS (
-  SELECT s.scope,
-         CAST(coalesce(c.cnt, 0) AS BIGINT) AS n_core
-  FROM scopes s LEFT JOIN (
-    SELECT scope, count(*) AS cnt FROM core GROUP BY scope) c
-    ON c.scope = s.scope
-), nprev AS (
-  SELECT s.scope,
-         CAST(coalesce(c.cnt, 0) AS BIGINT) AS n_prev
-  FROM scopes s LEFT JOIN (
-    SELECT scope, count(*) AS cnt FROM a{KC_ROUNDS - 1} GROUP BY scope) c
-    ON c.scope = s.scope
-)
-SELECT a0.scope, a0.node, r.removed_round,
-       CAST(CASE WHEN c.node IS NULL THEN 0 ELSE 1 END AS BIGINT)
-         AS in_core,
-       CAST(coalesce(cd.core_degree, 0) AS BIGINT) AS core_degree,
-       a0.k, nc.n_core,
-       CAST(CASE WHEN nc.n_core = np.n_prev THEN 1 ELSE 0 END AS BIGINT)
-         AS converged
-FROM a0
-LEFT JOIN removed r ON r.scope = a0.scope AND r.node = a0.node
-LEFT JOIN core c ON c.scope = a0.scope AND c.node = a0.node
-LEFT JOIN core_deg cd ON cd.scope = a0.scope AND cd.node = a0.node
-JOIN ncore nc ON nc.scope = a0.scope
-JOIN nprev np ON np.scope = a0.scope
-"""
-
-
-# --------------------------------------------------------------------------
-# Active-user engagement (`active_users`): the DAU/WAU/stickiness board
-# metric — per day: distinct daily actives, trailing-7-day distinct
-# actives, and the DAU/WAU engagement ratio. Distinct-over-sliding-
-# window is NOT a window function (COUNT(DISTINCT) OVER a frame is
-# unsupported and would be wrong anyway); the scale-honest plan is the
-# CONTRIBUTION-EXPLODE: dedupe to (user, day), explode each user-day to
-# the ≤AU_WINDOW target days it contributes to, dedupe (user, target),
-# count — a bounded ×W blowup of the already-deduped user-day frame,
-# never a per-day scan. Exact integers; the ratio is one division.
-#
-# Scale shape: (user, day) dedup is one exchange; the explode is
-# W-bounded; the second dedup + count is map-side combinable. Only
-# days with a FULL trailing window emit (partial-window edges excluded).
-# --------------------------------------------------------------------------
-
-AU_WINDOW = 7  # trailing days for WAU
-_DAY_US = 86_400_000_000
-
-
-def q_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    day = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-        f" div {_DAY_US}"
-    )
-    ud = (
-        _events(spark, sf_dir)
-        .select("user_id", day.alias("d"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    bounds = ud.agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
-    dau = ud.groupBy("d").agg(F.count("*").cast("long").alias("dau"))
-    contrib = ud.select(
-        "user_id",
-        F.explode(
-            F.sequence(F.col("d"), F.col("d") + AU_WINDOW - 1)
-        ).alias("d"),
-    ).distinct()
-    wau = contrib.groupBy("d").agg(F.count("*").cast("long").alias("wau"))
-    return (
-        dau.join(wau, "d")
-        .crossJoin(F.broadcast(bounds))
-        .filter(
-            (F.col("d") >= F.col("d0") + AU_WINDOW - 1)
-            & (F.col("d") <= F.col("d1"))
-        )
-        .select(
-            F.col("d").cast("long").alias("day"),
-            "dau",
-            "wau",
-            F.round(
-                F.col("dau").cast("double") / F.col("wau").cast("double"), 6
-            ).alias("stickiness"),
-        )
-    )
-
-
-def _sql_active_users() -> str:
-    w = AU_WINDOW
-    return f"""
-WITH ud AS MATERIALIZED (
-  SELECT DISTINCT user_id, epoch_us(ts) // {_DAY_US} AS d FROM events
-), bounds AS (
-  SELECT min(d) AS d0, max(d) AS d1 FROM ud
-), dau AS (
-  SELECT d, CAST(count(*) AS BIGINT) AS dau FROM ud GROUP BY d
-), contrib AS (
-  SELECT DISTINCT user_id, d + g.i AS d
-  FROM ud, LATERAL (SELECT unnest(range({w})) AS i) g
-), wau AS (
-  SELECT d, CAST(count(*) AS BIGINT) AS wau FROM contrib GROUP BY d
-)
-SELECT CAST(dau.d AS BIGINT) AS day, dau.dau, wau.wau,
-       round(CAST(dau.dau AS DOUBLE) / CAST(wau.wau AS DOUBLE), 6)
-         AS stickiness
-FROM dau JOIN wau USING (d) CROSS JOIN bounds
-WHERE dau.d >= bounds.d0 + {w} - 1 AND dau.d <= bounds.d1
-"""
-
-
-# --------------------------------------------------------------------------
-# DAG critical path (`critical_path`): longest weighted path in a DAG —
-# the scheduling primitive (CPM, Kelley & Walker 1959) every pipeline /
-# build-graph analyzer computes. The canonical u<v orientation of the
-# host graph IS a DAG by construction (edges only point to higher ids);
-# weights = emitting-doc counts (BIGINT). Value iteration dist(v) =
-# max(0, max_{(u,v)} dist(u) + w) over |V| rounds (longest chain < |V|
-# proves fixpoint — certified in-output like k_core); predecessors
-# resolve deterministically by the packed (max dist+w, min u) struct
-# argmin, so the critical path is reconstructible. ALL-integer.
-#
-# Scale shape: the edge table derives from one corpus scan and is
-# pinned; each round is one equi-join + map-side max per dst over the
-# |hosts|-sized frame (never the corpus; the pagerank pin discipline).
-# --------------------------------------------------------------------------
-
-CP_ROUNDS = 14  # probed fixpoint depth: 7/7/9 rounds at sf0.001/0.01/0.1;
-# 14 leaves >50% headroom and the in-output converged flag certifies it
-# at runtime (a deeper graph would read converged = 0, never silently
-# wrong)
-
-
-def q_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    s = (src_num % PR_N_NODES).alias("src")
-    t = ((src_num * 7 + F.col("doc_id") * 13 + 3) % PR_N_NODES).alias("dst")
-    # ONE corpus pass (round 7, guide §2.4/§5 — the pagerank discipline):
-    # the u<v DAG edge table is bounded at N^2/2 rows at any SF; the
-    # CP_ROUNDS value-iteration rounds then run on the driver with the
-    # exact same packed-argmin integer arithmetic — replacing a second
-    # corpus scan and ~16 localCheckpoints / ~45 tiny shuffle jobs per
-    # call.
-    edges = sorted(
-        ((r["u"], r["v"]), r["w"])
-        for r in docs.select(s, t)
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .groupBy("u", "v")
-        .agg(F.count("*").cast("long").alias("w"))
-        .collect()
-    )
-    nodes = sorted({u for (u, _), _ in edges} | {v for (_, v), _ in edges})
-    dist = {nd: 0 for nd in nodes}
-    pred: Dict[int, Optional[int]] = {nd: None for nd in nodes}
-    prev = dict(dist)
-    for _ in range(CP_ROUNDS):
-        cand: Dict[int, Tuple[int, int]] = {}  # v -> (negd, u) struct-min
-        for (u, v), w in edges:
-            b = (-(dist[u] + w), u)
-            if v not in cand or b < cand[v]:
-                cand[v] = b
-        prev = dist
-        new_dist: Dict[int, int] = {}
-        for nd in nodes:
-            c = cand.get(nd)
-            cd = -c[0] if c is not None else 0
-            new_dist[nd] = max(cd, 0)
-            pred[nd] = c[1] if cd > 0 else None
-        dist = new_dist
-    crit_len, crit_sink = (
-        min((-dist[nd], nd) for nd in nodes) if nodes else (0, None)
-    )
-    crit_len = -crit_len
-    n_changed = sum(1 for nd in nodes if dist[nd] != prev[nd])
-    rows = [
-        (
-            nd,
-            dist[nd],
-            pred[nd],
-            crit_len,
-            crit_sink,
-            1 if nd == crit_sink else 0,
-            1 if n_changed == 0 else 0,
-        )
-        for nd in nodes
-    ]
-    return spark.createDataFrame(
-        rows,
-        "node long, dist long, pred long, crit_len long, crit_sink long, "
-        "is_sink long, converged long",
-    )
-
-
-def _sql_critical_path() -> str:
-    n = PR_N_NODES
-    iters = []
-    for i in range(1, CP_ROUNDS + 1):
-        p = f"d{i - 1}"
-        iters.append(
-            f"""c{i} AS (
-  SELECT e.v AS node,
-         min(struct_pack(negd := -(dd.dist + e.w), u := e.u)) AS b
-  FROM edges e JOIN {p} dd ON dd.node = e.u
-  GROUP BY e.v
-), d{i} AS MATERIALIZED (
-  SELECT nd.node,
-         CAST(greatest(coalesce(-(c.b).negd, 0), 0) AS BIGINT) AS dist,
-         CAST(CASE WHEN coalesce(-(c.b).negd, 0) > 0
-                   THEN (c.b).u END AS BIGINT) AS pred
-  FROM nodes nd LEFT JOIN c{i} c ON c.node = nd.node
-)"""
-        )
-    chain = ", ".join(iters)
-    return f"""
-WITH raw AS MATERIALIZED (
-  SELECT (CAST(substr(source, 4, 10) AS BIGINT) % {n}) AS src,
-         ((CAST(substr(source, 4, 10) AS BIGINT) * 7 + doc_id * 13 + 3)
-           % {n}) AS dst
-  FROM documents
-), edges AS MATERIALIZED (
-  SELECT least(src, dst) AS u, greatest(src, dst) AS v,
-         CAST(count(*) AS BIGINT) AS w
-  FROM raw WHERE src <> dst GROUP BY 1, 2
-), nodes AS MATERIALIZED (
-  SELECT DISTINCT u AS node FROM edges UNION SELECT v FROM edges
-), d0 AS MATERIALIZED (
-  SELECT node, CAST(0 AS BIGINT) AS dist, CAST(NULL AS BIGINT) AS pred
-  FROM nodes
-), {chain}, crit AS (
-  SELECT CAST(-(min(struct_pack(negd := -dist, n2 := node))).negd
-              AS BIGINT) AS crit_len,
-         CAST((min(struct_pack(negd := -dist, n2 := node))).n2
-              AS BIGINT) AS crit_sink
-  FROM d{CP_ROUNDS}
-), conv AS (
-  SELECT CAST(sum(CASE WHEN a.dist <> b.dist THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_changed
-  FROM d{CP_ROUNDS} a JOIN d{CP_ROUNDS - 1} b USING (node)
-)
-SELECT d.node, d.dist, d.pred, crit.crit_len, crit.crit_sink,
-       CAST(CASE WHEN d.node = crit.crit_sink THEN 1 ELSE 0 END AS BIGINT)
-         AS is_sink,
-       CAST(CASE WHEN conv.n_changed = 0 THEN 1 ELSE 0 END AS BIGINT)
-         AS converged
-FROM d{CP_ROUNDS} d CROSS JOIN crit CROSS JOIN conv
-"""
-
-
-# --------------------------------------------------------------------------
-# Degree assortativity (`assortativity`): Newman's degree-correlation
-# coefficient (PRL 2002) — do high-degree hosts link to high-degree
-# hosts? The structural summary the iterative family (pagerank/hits/
-# lpa/k_core/triangles/critical_path) doesn't give. r = Pearson
-# correlation of endpoint degrees over the edge list with BOTH
-# orientations counted (the standard undirected convention). EXACT
-# integer moment sums (degrees ≤ |V|, ≤2|E| terms); r is one fixed-order
-# expression of six BIGINTs. Emitted per
-# edge with the endpoint degrees so the joint distribution is visible.
-#
-# Scale shape: degrees = one map-side agg; the moment pass is one scan
-# of the |E|-sized edge list with two broadcast degree joins.
-# --------------------------------------------------------------------------
-
-
-def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    a = (src_num % PR_N_NODES).alias("src")
-    b = ((src_num * 7 + F.col("doc_id") * 13 + 3) % PR_N_NODES).alias("dst")
-    raw = docs.select(a, b).filter(F.col("src") != F.col("dst"))
-    und = (
-        raw.select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .union(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("deg"))
-    )
-    both = und.unionByName(
-        und.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    pairs = (
-        both.join(
-            F.broadcast(deg.select(F.col("node").alias("u"),
-                                   F.col("deg").alias("du"))),
-            "u",
-        )
-        .join(
-            F.broadcast(deg.select(F.col("node").alias("v"),
-                                   F.col("deg").alias("dv"))),
-            "v",
-        )
-    )
-    m = pairs.agg(
-        F.count("*").cast("long").alias("m"),
-        F.sum("du").cast("long").alias("sx"),
-        F.sum("dv").cast("long").alias("sy"),
-        F.sum(F.col("du") * F.col("dv")).cast("long").alias("sxy"),
-        F.sum(F.col("du") * F.col("du")).cast("long").alias("sxx"),
-        F.sum(F.col("dv") * F.col("dv")).cast("long").alias("syy"),
-    )
-    md = F.col("m").cast("double")
-    num = F.col("sxy").cast("double") - (
-        F.col("sx").cast("double") * F.col("sy").cast("double") / md
-    )
-    denx = F.col("sxx").cast("double") - (
-        F.col("sx").cast("double") * F.col("sx").cast("double") / md
-    )
-    deny = F.col("syy").cast("double") - (
-        F.col("sy").cast("double") * F.col("sy").cast("double") / md
-    )
-    r = num / F.sqrt(denx * deny)
-    return pairs.crossJoin(F.broadcast(m)).select(
-        "u",
-        "v",
-        "du",
-        "dv",
-        "m",
-        "sxy",
-        F.round(r, 6).alias("assortativity"),
-    )
-
-
-def _sql_assortativity() -> str:
-    n = PR_N_NODES
-    return f"""
-WITH raw AS MATERIALIZED (
-  SELECT (CAST(substr(source, 4, 10) AS BIGINT) % {n}) AS src,
-         ((CAST(substr(source, 4, 10) AS BIGINT) * 7 + doc_id * 13 + 3)
-           % {n}) AS dst
-  FROM documents
-), und AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM raw WHERE src <> dst
-), deg AS MATERIALIZED (
-  SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-  GROUP BY node
-), both_ AS (
-  SELECT u, v FROM und UNION ALL SELECT v AS u, u AS v FROM und
-), pairs AS MATERIALIZED (
-  SELECT b.u, b.v, x.deg AS du, y.deg AS dv
-  FROM both_ b
-  JOIN deg x ON x.node = b.u
-  JOIN deg y ON y.node = b.v
-), mm AS (
-  SELECT CAST(count(*) AS BIGINT) AS m,
-         CAST(sum(du) AS BIGINT) AS sx,
-         CAST(sum(dv) AS BIGINT) AS sy,
-         CAST(sum(du * dv) AS BIGINT) AS sxy,
-         CAST(sum(du * du) AS BIGINT) AS sxx,
-         CAST(sum(dv * dv) AS BIGINT) AS syy
-  FROM pairs
-)
-SELECT p.u, p.v, p.du, p.dv, mm.m, mm.sxy,
-       round((CAST(mm.sxy AS DOUBLE)
-              - CAST(mm.sx AS DOUBLE) * CAST(mm.sy AS DOUBLE)
-                / CAST(mm.m AS DOUBLE))
-             / sqrt((CAST(mm.sxx AS DOUBLE)
-                     - CAST(mm.sx AS DOUBLE) * CAST(mm.sx AS DOUBLE)
-                       / CAST(mm.m AS DOUBLE))
-                    * (CAST(mm.syy AS DOUBLE)
-                       - CAST(mm.sy AS DOUBLE) * CAST(mm.sy AS DOUBLE)
-                         / CAST(mm.m AS DOUBLE))), 6) AS assortativity
-FROM pairs p CROSS JOIN mm
-"""
-
-
-# --------------------------------------------------------------------------
-# BFS hop distances (`bfs_hops`): unweighted shortest paths from the
-# minimum-id host — the Pregel hello-world and the distance metric the
-# graph family still lacked (critical_path = longest weighted,
-# triangle/k_core = local structure; THIS = global reachability).
-# Synchronous relaxation dist(v) = min(dist(v), min_{(u,v)} dist(u)+1)
-# over BFS_ROUNDS rounds with per-round pins; converged certified
-# in-output (last two rounds equal — the k_core discipline); source
-# eccentricity = max finite distance; unreachable nodes stay NULL.
-# ALL-integer.
-#
-# Scale shape: each round is one undirected-edge join + map-side min
-# over the pinned |hosts| frame — the Pregel superstep; iterations
-# never re-scan the corpus.
-# --------------------------------------------------------------------------
-
-BFS_ROUNDS = 12  # graph diameter is tiny (probed ≤ 3); headroom + flag
-
-
-def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    a = (src_num % PR_N_NODES).alias("src")
-    b = ((src_num * 7 + F.col("doc_id") * 13 + 3) % PR_N_NODES).alias("dst")
-    # ONE corpus pass (round 7, guide §2.4/§5 — the pagerank discipline):
-    # the distinct undirected edge set is bounded at N^2/2 rows at any SF;
-    # the BFS_ROUNDS synchronous relaxations then run on the driver with
-    # the exact same integer arithmetic — replacing a second corpus scan
-    # and ~15 localCheckpoints / ~40 tiny shuffle jobs per call.
-    und0 = sorted(
-        (r["u"], r["v"])
-        for r in docs.select(a, b)
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-        .collect()
-    )
-    und = und0 + [(v, u) for u, v in und0]
-    nodes = sorted({u for u, _ in und})
-    root = min(nodes) if nodes else None
-    dist: Dict[int, Optional[int]] = {
-        nd: (0 if nd == root else None) for nd in nodes
-    }
-    prev = dict(dist)
-    for _ in range(BFS_ROUNDS):
-        cand: Dict[int, int] = {}
-        for u, v in und:
-            du = dist[u]
-            if du is not None and (v not in cand or du + 1 < cand[v]):
-                cand[v] = du + 1
-        prev = dist
-        new_dist: Dict[int, Optional[int]] = {}
-        for nd in nodes:
-            d, c = dist[nd], cand.get(nd)
-            new_dist[nd] = d if c is None else (c if d is None else min(d, c))
-        dist = new_dist
-    finite = [d for d in dist.values() if d is not None]
-    ecc = max(finite) if finite else None
-    # mirrors the SQL/Spark null semantics: a null<->value flip yields a
-    # NULL comparison that sum() skips, so only non-null != non-null counts
-    n_changed = sum(
-        1
-        for nd in nodes
-        if dist[nd] is not None
-        and prev[nd] is not None
-        and dist[nd] != prev[nd]
-    )
-    rows = [
-        (
-            nd,
-            dist[nd],
-            root,
-            ecc,
-            1 if dist[nd] is not None else 0,
-            1 if n_changed == 0 else 0,
-        )
-        for nd in nodes
-    ]
-    return spark.createDataFrame(
-        rows,
-        "node long, dist long, root long, eccentricity long, "
-        "reachable long, converged long",
-    )
-
-
-def _sql_bfs_hops() -> str:
-    n = PR_N_NODES
-    iters = []
-    for i in range(1, BFS_ROUNDS + 1):
-        p = f"d{i - 1}"
-        iters.append(
-            f"""c{i} AS (
-  SELECT e.v AS node, CAST(min(dd.dist) + 1 AS BIGINT) AS nd
-  FROM und e JOIN {p} dd ON dd.node = e.u
-  WHERE dd.dist IS NOT NULL
-  GROUP BY e.v
-), d{i} AS MATERIALIZED (
-  SELECT dd.node,
-         CAST(least(coalesce(dd.dist, c.nd), coalesce(c.nd, dd.dist))
-              AS BIGINT) AS dist
-  FROM {p} dd LEFT JOIN c{i} c ON c.node = dd.node
-)"""
-        )
-    chain = ", ".join(iters)
-    return f"""
-WITH raw AS MATERIALIZED (
-  SELECT (CAST(substr(source, 4, 10) AS BIGINT) % {n}) AS src,
-         ((CAST(substr(source, 4, 10) AS BIGINT) * 7 + doc_id * 13 + 3)
-           % {n}) AS dst
-  FROM documents
-), und0 AS (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM raw WHERE src <> dst
-), und AS MATERIALIZED (
-  SELECT u, v FROM und0 UNION ALL SELECT v AS u, u AS v FROM und0
-), nodes AS MATERIALIZED (
-  SELECT DISTINCT u AS node FROM und
-), root AS (
-  SELECT CAST(min(node) AS BIGINT) AS r FROM nodes
-), d0 AS MATERIALIZED (
-  SELECT node,
-         CAST(CASE WHEN node = root.r THEN 0 END AS BIGINT) AS dist
-  FROM nodes CROSS JOIN root
-), {chain}, ecc AS (
-  SELECT CAST(max(dist) AS BIGINT) AS eccentricity FROM d{BFS_ROUNDS}
-), conv AS (
-  SELECT CAST(sum(CASE WHEN a.dist IS DISTINCT FROM b.dist
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_changed
-  FROM d{BFS_ROUNDS} a JOIN d{BFS_ROUNDS - 1} b USING (node)
-)
-SELECT d.node, d.dist, root.r AS root, ecc.eccentricity,
-       CAST(CASE WHEN d.dist IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-         AS reachable,
-       CAST(CASE WHEN conv.n_changed = 0 THEN 1 ELSE 0 END AS BIGINT)
-         AS converged
-FROM d{BFS_ROUNDS} d CROSS JOIN root CROSS JOIN ecc CROSS JOIN conv
-"""
-
-
 QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]]] = {
     "fusion": (q_fusion, SQL_FUSION),
     "fusion_events": (q_fusion_events, SQL_FUSION_EVENTS),
@@ -8871,23 +7176,9 @@ QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]
     "dup_longest": (q_dup_longest, _sql_dup_longest()),
     "span_scrub": (q_span_scrub, _sql_span_scrub()),
     "split_leakage": (q_split_leakage, _sql_split_leakage()),
-    "pagerank": (q_pagerank, _sql_pagerank()),
     "mojibake_fix": (q_mojibake_fix, _sql_mojibake_fix()),
-    "crawl_frontier": (q_crawl_frontier, _sql_crawl_frontier()),
     "robots_filter": (q_robots_filter, _sql_robots_filter()),
     "template_lines": (q_template_lines, _sql_template_lines()),
-    "hits": (q_hits, _sql_hits()),
     "nfc_normalize": (q_nfc_normalize, _sql_nfc_normalize()),
-    "lpa_communities": (q_lpa_communities, _sql_lpa_communities()),
     "lm_kneser_ney": (q_lm_kneser_ney, _sql_lm_kneser_ney()),
-    "tpch_pricing": (q_tpch_pricing, _sql_tpch_pricing()),
-    "tpch_regional_revenue": (q_tpch_regional_revenue, _sql_tpch_regional_revenue()),
-    "tpch_shipping": (q_tpch_shipping, _sql_tpch_shipping()),
-    "tpch_big_orders": (q_tpch_big_orders, _sql_tpch_big_orders()),
-    "triangle_count": (q_triangle_count, _sql_triangle_count()),
-    "k_core": (q_k_core, _sql_k_core()),
-    "active_users": (q_active_users, _sql_active_users()),
-    "critical_path": (q_critical_path, _sql_critical_path()),
-    "assortativity": (q_assortativity, _sql_assortativity()),
-    "bfs_hops": (q_bfs_hops, _sql_bfs_hops()),
 }

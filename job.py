@@ -12,7 +12,7 @@ Cluster usage (north_rule deployment shape):
 With ``--no-checkpoint`` the job runs as a single narrow pass (scan →
 vectorized extraction → sink). Default mode checkpoints per input file via
 the manifest (``htep_spark.plans.checkpoint``) so a re-submit resumes
-exactly where it stopped. Per-conversation metrics (salted rollup) are
+exactly where it stopped. Per-conversation metrics (one groupBy rollup) are
 written next to the output when --conv-metrics is set.
 
 In the sandbox this runs on ``local[N]``; on a real cluster the master and

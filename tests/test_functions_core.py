@@ -1315,42 +1315,6 @@ def test_robots_filter_pure_python_replay_and_branches():
         assert [db, dt] == dom_counts[domain], (domain, db, dt)
 
 
-def test_crawl_frontier_politeness_invariants():
-    """Crawl frontier (`crawl_frontier`): per-domain slots must be dense
-    0..n-1 in doc_id order, scheduled offsets spaced exactly one
-    politeness delay apart, the last slot's offset must equal the
-    domain's makespan, and every row's pr must equal the pagerank
-    table's value for the domain's node (the composition contract)."""
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        POLITENESS_DELAY_S,
-        PR_N_NODES,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    pr = {r[0]: r[4] for r in con.execute(QUERIES["pagerank"][1]).fetchall()}
-    rows = con.execute(QUERIES["crawl_frontier"][1]).fetchall()
-    assert rows
-    by_dom: dict = {}
-    for doc_id, domain, node, p, slot, sched, dom_docs, makespan in rows:
-        assert p == pr[node], (domain, node)
-        assert sched == slot * POLITENESS_DELAY_S
-        assert makespan == (dom_docs - 1) * POLITENESS_DELAY_S
-        assert node == int(domain.split(".")[0][4:]) % PR_N_NODES
-        by_dom.setdefault(domain, []).append((doc_id, slot, dom_docs))
-    for domain, entries in by_dom.items():
-        entries.sort()
-        n = entries[0][2]
-        assert len(entries) == n, (domain, len(entries), n)
-        assert [s for _d, s, _n in entries] == list(range(n)), domain
-
-
 def test_mojibake_fix_pure_python_replay_and_branches():
     """Mojibake repair (`mojibake_fix`): a pure-Python replay — the same
     pair table applied with str.replace in pinned order over the same
@@ -1397,76 +1361,6 @@ def test_mojibake_fix_pure_python_replay_and_branches():
             clean += 1
             assert exp[3] == exp[4] and exp[5] == 0
     assert hit and clean, (hit, clean)
-
-
-def test_pagerank_pure_python_replay_and_invariants():
-    """Domain link-graph PageRank (`pagerank`): an independent pure-Python
-    power iteration — same synthesized graph, same damping/teleport/
-    dangling-mass rules — must match the DuckDB oracle at sf0.001 to 6dp;
-    ranks must sum to 1; the dangling branch must provably fire (every
-    node % 7 == PR_DANGLE_MOD present in the graph has out_weight 0 and
-    dangling = 1); every rank clears its 6dp rounding boundary (the
-    cross-engine float-sum-order guard)."""
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        PR_DAMPING,
-        PR_DANGLE_MOD,
-        PR_ITERS,
-        PR_N_NODES,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    got = {
-        r[0]: (r[1], r[2], r[3], r[4])
-        for r in con.execute(QUERIES["pagerank"][1]).fetchall()
-    }
-
-    pairs = con.execute(
-        f"SELECT (CAST(substr(source, 4) AS BIGINT) % {PR_N_NODES}),"
-        f" ((CAST(substr(source, 4) AS BIGINT) * 7 + doc_id * 13 + 3)"
-        f" % {PR_N_NODES}) FROM documents"
-    ).fetchall()
-    nodes = sorted({s for s, _ in pairs} | {t for _, t in pairs})
-    w: dict = {}
-    for s, t in pairs:
-        if s != t and s % 7 != PR_DANGLE_MOD:
-            w[(s, t)] = w.get((s, t), 0) + 1
-    ow: dict = {}
-    for (s, _t), c in w.items():
-        ow[s] = ow.get(s, 0) + c
-    n = len(nodes)
-    r = {v: 1.0 / n for v in nodes}
-    for _ in range(PR_ITERS):
-        dm = sum(r[v] for v in nodes if v not in ow)
-        contrib = {v: 0.0 for v in nodes}
-        for (s, t), c in w.items():
-            contrib[t] += (c / ow[s]) * r[s]
-        r = {
-            v: (1.0 - PR_DAMPING) / n
-            + PR_DAMPING * (contrib[v] + dm / n)
-            for v in nodes
-        }
-    assert set(got) == set(nodes)
-    dangled = 0
-    for v in nodes:
-        out_weight, n_in, dangling, pr = got[v]
-        frac = abs(r[v] * 1e6 - round(r[v] * 1e6))
-        assert abs(frac - 0.5) > 1e-9, (v, r[v])
-        assert pr == round(r[v], 6), (v, pr, r[v])
-        assert out_weight == ow.get(v, 0), (v, out_weight)
-        assert dangling == (0 if v in ow else 1), (v, dangling)
-        if v % 7 == PR_DANGLE_MOD:
-            assert dangling == 1 and out_weight == 0, (v, got[v])
-            dangled += 1
-    assert dangled >= 2, "dangling branch vacuous: no planted dangler in graph"
-    assert abs(sum(r.values()) - 1.0) < 1e-9
-    assert abs(sum(p for _, _, _, p in got.values()) - 1.0) < 1e-4
 
 
 def test_template_lines_pure_python_replay_and_branches():
@@ -1553,74 +1447,6 @@ def test_template_lines_pure_python_replay_and_branches():
     assert set(per_dom.values()) == {2}, per_dom
 
 
-def test_hits_pure_python_replay_and_invariants():
-    """HITS (`hits`): an independent pure-Python alternating-update
-    replay — same synthesized graph as pagerank, L1 normalization — must
-    match the DuckDB oracle at sf0.001 to 6dp; hub and auth vectors each
-    sum to 1; pruned-out-edge (dangle-rule) nodes have hub 0 but can
-    still hold authority; every value clears its 6dp rounding boundary
-    (the cross-engine float-sum-order guard)."""
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        HITS_ITERS,
-        PR_DANGLE_MOD,
-        PR_N_NODES,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    got = {
-        r[0]: r[1:] for r in con.execute(QUERIES["hits"][1]).fetchall()
-    }
-    pairs = con.execute(
-        f"SELECT (CAST(substr(source, 4) AS BIGINT) % {PR_N_NODES}),"
-        f" ((CAST(substr(source, 4) AS BIGINT) * 7 + doc_id * 13 + 3)"
-        f" % {PR_N_NODES}) FROM documents"
-    ).fetchall()
-    nodes = sorted({s for s, _ in pairs} | {t for _, t in pairs})
-    w: dict = {}
-    for s, t in pairs:
-        if s != t and s % 7 != PR_DANGLE_MOD:
-            w[(s, t)] = w.get((s, t), 0) + 1
-    n = len(nodes)
-    a = {v: 1.0 / n for v in nodes}
-    h: dict = {}
-    for _ in range(HITS_ITERS):
-        h = {v: 0.0 for v in nodes}
-        for (s, t), c in w.items():
-            h[s] += float(c) * a[t]
-        hs = sum(h.values())
-        h = {v: x / hs for v, x in h.items()}
-        a = {v: 0.0 for v in nodes}
-        for (s, t), c in w.items():
-            a[t] += float(c) * h[s]
-        asum = sum(a.values())
-        a = {v: x / asum for v, x in a.items()}
-    assert set(got) == set(nodes)
-    pruned_with_auth = 0
-    for v in nodes:
-        n_out, out_w, n_in, in_w, hub, auth = got[v]
-        for val, exp in ((hub, h[v]), (auth, a[v])):
-            frac = abs(exp * 1e6 - round(exp * 1e6))
-            assert abs(frac - 0.5) > 1e-9, (v, exp)
-            assert val == round(exp, 6), (v, val, exp)
-        assert n_out == sum(1 for (s, _t) in w if s == v)
-        assert out_w == sum(c for (s, _t), c in w.items() if s == v)
-        assert in_w == sum(c for (_s, t), c in w.items() if t == v)
-        if v % 7 == PR_DANGLE_MOD:
-            assert hub == 0.0 and n_out == 0, (v, got[v])
-            if auth > 0:
-                pruned_with_auth += 1
-    assert pruned_with_auth >= 1, "hub/auth separation vacuous"
-    assert abs(sum(h.values()) - 1.0) < 1e-9
-    assert abs(sum(a.values()) - 1.0) < 1e-9
-
-
 def test_nfc_normalize_pure_python_replay_and_branches():
     """NFC normalization (`nfc_normalize`): a pure-Python unicodedata
     replay must match the DuckDB (utf8proc) oracle at sf0.001 — two
@@ -1666,75 +1492,6 @@ def test_nfc_normalize_pure_python_replay_and_branches():
     # the ogonek+acute case exercises canonical REORDERING, not just
     # composition: the raw mark order is non-canonical
     assert unicodedata.normalize("NFC", NFC_SNIPPETS[4]) != NFC_SNIPPETS[4]
-
-
-def test_lpa_communities_pure_python_replay_and_invariants():
-    """LPA (`lpa_communities`): an independent pure-Python synchronous
-    label propagation — same undirected weighted graph, same
-    max-vote/min-label tie-break — must match the DuckDB oracle at
-    sf0.001 EXACTLY (integer arithmetic end to end); labels must be
-    stable for one extra round (converged, not truncated mid-flight);
-    community sizes must sum to |nodes|; both the dominant community and
-    singleton self-label nodes must exist."""
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        LPA_ITERS,
-        PR_DANGLE_MOD,
-        PR_N_NODES,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    pairs = con.execute(
-        f"SELECT (CAST(substr(source, 4) AS BIGINT) % {PR_N_NODES}),"
-        f" ((CAST(substr(source, 4) AS BIGINT) * 7 + doc_id * 13 + 3)"
-        f" % {PR_N_NODES}) FROM documents"
-    ).fetchall()
-    nodes = sorted({s for s, _ in pairs} | {t for _, t in pairs})
-    w: dict = defaultdict(int)
-    for s, t in pairs:
-        if s != t and s % 7 != PR_DANGLE_MOD:
-            w[(s, t)] += 1
-    und: dict = defaultdict(int)
-    for (s, t), c in w.items():
-        und[(s, t)] += c
-        und[(t, s)] += c
-
-    def step(lab):
-        ws: dict = defaultdict(int)
-        for (u, v), c in und.items():
-            ws[(u, lab[v])] += c
-        new = {}
-        for nd in nodes:
-            cands = [(l, x) for (u, l), x in ws.items() if u == nd]
-            new[nd] = (
-                min(cands, key=lambda p: (-p[1], p[0]))[0] if cands else lab[nd]
-            )
-        return new
-
-    lab = {v: v for v in nodes}
-    for _ in range(LPA_ITERS):
-        lab = step(lab)
-    assert step(lab) == lab, "labels not converged after LPA_ITERS rounds"
-    sizes: dict = defaultdict(int)
-    for v in lab.values():
-        sizes[v] += 1
-    rows = con.execute(QUERIES["lpa_communities"][1]).fetchall()
-    assert len(rows) == len(nodes)
-    for node, community, csize, n_comms, own in rows:
-        assert community == lab[node], (node, community, lab[node])
-        assert csize == sizes[community]
-        assert n_comms == len(sizes)
-        assert own == (1 if community == node else 0)
-    assert sum(sizes.values()) == len(nodes)
-    assert max(sizes.values()) > 1 and min(sizes.values()) == 1, sizes
 
 
 def test_lm_kneser_ney_pure_python_replay_and_branches():
@@ -1826,446 +1583,3 @@ def test_lm_kneser_ney_pure_python_replay_and_branches():
         for w2 in vocab
     )
     assert abs(total_p - 1.0) < 0.02, total_p
-
-
-def test_tpch_shipping_and_big_orders_pure_python_replay():
-    """TPC-H Q3/Q18 shapes: pure-Python replays over raw tuples — the
-    three-way join + opposing date filters + exact-revenue top-N, and
-    the HAVING-threshold self-semi-join — must match the DuckDB oracles
-    at sf0.001; the top-N boundary is checked to be strict (no revenue
-    tie straddles the cut); every big order genuinely exceeds the
-    threshold."""
-    from collections import defaultdict
-    from decimal import Decimal
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        QUERIES,
-        TPCH_BIGORDER_QTY,
-        TPCH_SHIP_CUTOFF,
-        TPCH_SHIP_SEGMENT,
-        TPCH_SHIP_TOPN,
-    )
-
-    con = duckdb.connect()
-    for t in ("customer", "orders", "lineitem"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    segs = dict(
-        con.execute("SELECT c_custkey, c_mktsegment FROM customer").fetchall()
-    )
-    orders = {
-        ok: (ck, od, op, tp)
-        for ok, ck, od, op, tp in con.execute(
-            "SELECT o_orderkey, o_custkey, epoch(o_orderdate), "
-            "o_orderpriority, o_totalprice FROM orders"
-        ).fetchall()
-    }
-    lis = con.execute(
-        "SELECT l_orderkey, l_extendedprice, l_discount, l_quantity, "
-        "epoch(l_shipdate) FROM lineitem"
-    ).fetchall()
-    cutoff = con.execute(
-        f"SELECT epoch(TIMESTAMP '{TPCH_SHIP_CUTOFF} 00:00:00')"
-    ).fetchone()[0]
-    # --- Q3 replay (exact Decimal revenue) ---
-    rev = defaultdict(Decimal)
-    for ok, price, disc, _q, ship in lis:
-        if ok not in orders or ship <= cutoff:
-            continue
-        ck, od, op, _tp = orders[ok]
-        if od >= cutoff or segs.get(ck) != TPCH_SHIP_SEGMENT:
-            continue
-        p = Decimal(str(price)).quantize(Decimal("0.01"))
-        d = Decimal(str(disc)).quantize(Decimal("0.01"))
-        rev[ok] += p * (1 - d)
-    ranked = sorted(rev.items(), key=lambda kv: (-kv[1], kv[0]))
-    top = ranked[:TPCH_SHIP_TOPN]
-    if len(ranked) > TPCH_SHIP_TOPN:
-        assert top[-1][1] != ranked[TPCH_SHIP_TOPN][1], "tie straddles cut"
-    rows = con.execute(QUERIES["tpch_shipping"][1]).fetchall()
-    assert len(rows) == min(TPCH_SHIP_TOPN, len(ranked))
-    got = {r[0]: r for r in rows}
-    for ok, r in top:
-        _ck, od, op, _tp = orders[ok]
-        assert got[ok][1] == float(round(r, 2))
-        assert got[ok][2] == od and got[ok][3] == op
-    # --- Q18 replay ---
-    qty = defaultdict(Decimal)
-    for ok, _p, _d, q, _s in lis:
-        qty[ok] += Decimal(str(q)).quantize(Decimal("0.01"))
-    big = {ok: s for ok, s in qty.items() if s > TPCH_BIGORDER_QTY}
-    rows = con.execute(QUERIES["tpch_big_orders"][1]).fetchall()
-    assert len(rows) == len(big) > 0
-    for _cn, ck, ok, od, tp, tq in rows:
-        assert ok in big and tq == float(round(big[ok], 2)) > TPCH_BIGORDER_QTY
-        eck, eod, _eop, etp = orders[ok]
-        assert (ck, od) == (eck, eod)
-        assert tp == round(etp, 2)
-
-
-def test_triangle_count_pure_python_replay_and_identities():
-    """Triangles (`triangle_count`): a brute-force pure-Python replay —
-    undirected canonical edges, all-(a<b<c) enumeration, per-corner
-    counts, lcc, transitivity — must match the DuckDB oracle at
-    sf0.001; the handshake identities hold (Σ per-node tri = 3·△;
-    wedges ≥ 3·△; transitivity in (0, 1]); the graph is non-trivial
-    (△ > 0 and at least one node with lcc < 1)."""
-    import math
-    from collections import Counter
-    from itertools import combinations
-
-    import duckdb
-
-    from htep_spark.driver_queries import PR_N_NODES, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, doc_id FROM documents").fetchall()
-    edges = set()
-    for src, d in raw:
-        a = int(src[3:]) % PR_N_NODES
-        b = (int(src[3:]) * 7 + d * 13 + 3) % PR_N_NODES
-        if a != b:
-            edges.add((min(a, b), max(a, b)))
-    nodes = sorted({x for e in edges for x in e})
-    deg = Counter()
-    for u, v in edges:
-        deg[u] += 1
-        deg[v] += 1
-    tris = [
-        (a, b, c)
-        for a, b, c in combinations(nodes, 3)
-        if (a, b) in edges and (b, c) in edges and (a, c) in edges
-    ]
-    tri_n = Counter()
-    for a, b, c in tris:
-        tri_n[a] += 1
-        tri_n[b] += 1
-        tri_n[c] += 1
-    n_tri = len(tris)
-    wedges = sum(d * (d - 1) // 2 for d in deg.values())
-    trans = 3 * n_tri / wedges if wedges else 0.0
-    assert n_tri > 0 and wedges >= 3 * n_tri
-    assert sum(tri_n.values()) == 3 * n_tri
-    assert 0.0 < trans <= 1.0
-    rows = con.execute(QUERIES["triangle_count"][1]).fetchall()
-    assert len(rows) == len(nodes)
-    saw_open = False
-    for node, d, tri, lcc, got_ntri, got_wedges, got_trans in rows:
-        assert d == deg[node] and tri == tri_n.get(node, 0)
-        elcc = 2 * tri / (d * (d - 1)) if d >= 2 else 0.0
-        for got, e in ((lcc, elcc), (got_trans, trans)):
-            frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-            assert frac > 1e-4, (node, e)
-            assert got == round(e, 6)
-        assert (got_ntri, got_wedges) == (n_tri, wedges)
-        saw_open = saw_open or (d >= 2 and lcc < 1.0)
-    assert saw_open, "degenerate complete graph"
-
-
-def test_k_core_pure_python_replay_and_peel_invariants():
-    """k-core (`k_core`): a pure-Python synchronous peel replay over the
-    degree-skewed host graph must match the DuckDB oracle at sf0.001 in
-    BOTH scopes; 'core' (K=6) keeps a non-trivial core, 'cascade' (K=7)
-    unravels over >= 3 onion layers to the EMPTY graph; both converge
-    within the round budget (converged == 1); core members have
-    core_degree >= K; maximality holds (any removed node has < K
-    core-neighbors); all-integer."""
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        KC_ROUNDS,
-        KC_SCOPES,
-        PR_N_NODES,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, doc_id FROM documents").fetchall()
-    edges = set()
-    for src, d in raw:
-        sn = int(src[3:])
-        a = sn % PR_N_NODES
-        b = (sn * 7 + d * 13 + 3) % (a + 1)
-        if a != b:
-            edges.add((min(a, b), max(a, b)))
-    nodes = {x for e in edges for x in e}
-    exp = {}
-    for scope, k in KC_SCOPES:
-        alive = set(nodes)
-        removed_round = {}
-        for i in range(1, KC_ROUNDS + 1):
-            deg = {n: 0 for n in alive}
-            for u, v in edges:
-                if u in alive and v in alive:
-                    deg[u] += 1
-                    deg[v] += 1
-            dead = {n for n in alive if deg[n] < k}
-            for n in dead:
-                removed_round[n] = i
-            alive -= dead
-        core_deg = {n: 0 for n in alive}
-        for u, v in edges:
-            if u in alive and v in alive:
-                core_deg[u] += 1
-                core_deg[v] += 1
-        assert all(d >= k for d in core_deg.values())
-        for n in nodes - alive:  # maximality
-            nb = sum(
-                1
-                for u, v in edges
-                if (u == n and v in alive) or (v == n and u in alive)
-            )
-            assert nb < k, (scope, n)
-        exp[scope] = (alive, removed_round, core_deg, k)
-    core_alive = exp["core"][0]
-    casc_rounds = set(exp["cascade"][1].values())
-    assert 0 < len(core_alive) < len(nodes)
-    assert len(exp["cascade"][0]) == 0
-    assert len(casc_rounds) >= 3, casc_rounds  # real onion layers
-    rows = con.execute(QUERIES["k_core"][1]).fetchall()
-    assert len(rows) == 2 * len(nodes)
-    for scope, node, rr, in_core, cd, k, n_core, conv in rows:
-        alive, removed_round, core_deg, ek = exp[scope]
-        assert k == ek and n_core == len(alive) and conv == 1
-        if node in alive:
-            assert (rr, in_core, cd) == (None, 1, core_deg[node])
-        else:
-            assert (rr, in_core, cd) == (removed_round[node], 0, 0)
-
-
-def test_active_users_pure_python_replay_and_bounds():
-    """Engagement (`active_users`): a pure-Python replay — (user, day)
-    dedup, trailing-7-day distinct actives via brute force — must match
-    the DuckDB oracle (which uses the contribution-explode; equality IS
-    the explode-trick proof on data) at sf0.001; DAU <= WAU always;
-    stickiness in (0, 1]; only full-window days emit; WAU is genuinely
-    larger than DAU somewhere (the window matters)."""
-    import math
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import _DAY_US, AU_WINDOW, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/events.parquet')"
-    )
-    raw = con.execute("SELECT user_id, epoch_us(ts) FROM events").fetchall()
-    days = defaultdict(set)
-    for u, um in raw:
-        days[um // _DAY_US].add(u)
-    d0, d1 = min(days), max(days)
-    exp = {}
-    for d in range(d0 + AU_WINDOW - 1, d1 + 1):
-        dau = len(days.get(d, set()))
-        wau = len(set().union(*(days.get(x, set())
-                                for x in range(d - AU_WINDOW + 1, d + 1))))
-        exp[d] = (dau, wau)
-    rows = con.execute(QUERIES["active_users"][1]).fetchall()
-    assert len(rows) == len([d for d in exp if exp[d][0] > 0])
-    widened = False
-    for day, dau, wau, stick in rows:
-        ed, ew = exp[day]
-        assert (dau, wau) == (ed, ew)
-        assert dau <= wau
-        e = dau / wau
-        frac = abs(e * 1e6 - math.floor(e * 1e6) - 0.5)
-        assert frac > 1e-4 or frac < 1e-12, (day, e)
-        assert stick == math.floor(e * 1e6 + 0.5) / 1e6
-        assert 0.0 < stick <= 1.0
-        widened = widened or wau > dau
-    assert widened, "window never widens (degenerate)"
-
-
-def test_critical_path_pure_python_replay_and_cpm_invariants():
-    """CPM (`critical_path`): a pure-Python longest-path DP replay over
-    the canonically-oriented DAG must match the DuckDB oracle at
-    sf0.001; the fixpoint flag is 1 (|V| rounds suffice); walking pred
-    pointers from the critical sink reproduces crit_len exactly and
-    terminates at a source; dist is edge-consistent (dist(v) >=
-    dist(u) + w for the chosen pred, == for the argmax); all-integer."""
-    from collections import defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import CP_ROUNDS, PR_N_NODES, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, doc_id FROM documents").fetchall()
-    w = defaultdict(int)
-    for src, d in raw:
-        sn = int(src[3:])
-        a = sn % PR_N_NODES
-        b = (sn * 7 + d * 13 + 3) % PR_N_NODES
-        if a != b:
-            w[(min(a, b), max(a, b))] += 1
-    nodes = sorted({x for e in w for x in e})
-    in_edges = defaultdict(list)
-    for (u, v), wt in w.items():
-        in_edges[v].append((u, wt))
-    dist = {nd: 0 for nd in nodes}
-    pred = {nd: None for nd in nodes}
-    for _ in range(CP_ROUNDS):
-        nd_new = {}
-        pd_new = {}
-        for nd in nodes:
-            best = None
-            for u, wt in in_edges.get(nd, []):
-                cand = dist[u] + wt
-                key = (-cand, u)
-                if best is None or key < best:
-                    best = key
-            if best is not None and -best[0] > 0:
-                nd_new[nd], pd_new[nd] = -best[0], best[1]
-            else:
-                nd_new[nd], pd_new[nd] = 0, None
-        dist, pred = nd_new, pd_new
-    crit_sink = min(nodes, key=lambda nd: (-dist[nd], nd))
-    crit_len = dist[crit_sink]
-    assert crit_len > 0
-    # walk the path
-    cur, total, seen = crit_sink, 0, set()
-    while pred[cur] is not None:
-        assert cur not in seen
-        seen.add(cur)
-        p = pred[cur]
-        total += w[(min(p, cur), max(p, cur))]
-        cur = p
-    assert total == crit_len
-    assert dist[cur] == 0  # terminates at a source
-    rows = con.execute(QUERIES["critical_path"][1]).fetchall()
-    assert len(rows) == len(nodes)
-    for nd, d, p, cl, cs, is_sink, conv in rows:
-        assert d == dist[nd] and p == pred[nd]
-        assert (cl, cs) == (crit_len, crit_sink)
-        assert is_sink == (1 if nd == crit_sink else 0)
-        assert conv == 1
-        if p is not None:
-            assert d == dist[p] + w[(min(p, nd), max(p, nd))]
-
-
-def test_assortativity_pure_python_replay_and_symmetry():
-    """Assortativity (`assortativity`): a pure-Python replay — both-
-    orientation endpoint-degree moments, Newman's r — must match the
-    DuckDB oracle at sf0.001 EXACTLY on the BIGINT columns; the
-    both-orientation convention makes sx == sy and sxx == syy
-    (symmetry identities); r in [-1, 1]; m = 2|E|; margins on the
-    rounded r."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from htep_spark.driver_queries import PR_N_NODES, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, doc_id FROM documents").fetchall()
-    edges = set()
-    for src, d in raw:
-        sn = int(src[3:])
-        a = sn % PR_N_NODES
-        b = (sn * 7 + d * 13 + 3) % PR_N_NODES
-        if a != b:
-            edges.add((min(a, b), max(a, b)))
-    deg = Counter()
-    for u, v in edges:
-        deg[u] += 1
-        deg[v] += 1
-    both = [(u, v) for u, v in edges] + [(v, u) for u, v in edges]
-    m = len(both)
-    sx = sum(deg[u] for u, _v in both)
-    sy = sum(deg[v] for _u, v in both)
-    sxy = sum(deg[u] * deg[v] for u, v in both)
-    sxx = sum(deg[u] ** 2 for u, _v in both)
-    syy = sum(deg[v] ** 2 for _u, v in both)
-    assert sx == sy and sxx == syy  # symmetry of the convention
-    assert m == 2 * len(edges)
-    num = sxy - sx * sy / m
-    r = num / math.sqrt((sxx - sx * sx / m) * (syy - sy * sy / m))
-    assert -1.0 - 1e-9 <= r <= 1.0 + 1e-9
-    rows = con.execute(QUERIES["assortativity"][1]).fetchall()
-    assert len(rows) == m
-    seen = Counter()
-    for u, v, du, dv, gm, gsxy, gr in rows:
-        assert (du, dv) == (deg[u], deg[v])
-        assert (gm, gsxy) == (m, sxy)
-        frac = abs(r * 1e6 - math.floor(r * 1e6) - 0.5)
-        assert frac > 1e-4, r
-        assert gr == math.copysign(math.floor(abs(r) * 1e6 + 0.5), r) / 1e6
-        seen[(u, v)] += 1
-    assert all(c == 1 for c in seen.values())
-
-
-def test_bfs_hops_pure_python_replay_and_bfs_invariants():
-    """BFS (`bfs_hops`): a pure-Python BFS replay from the min-id host
-    must match the DuckDB oracle at sf0.001; converged == 1; the root
-    has dist 0; every reachable non-root node has a neighbor exactly
-    one hop closer (the BFS tree property); eccentricity = max finite
-    dist; all-integer."""
-    from collections import defaultdict, deque
-
-    import duckdb
-
-    from htep_spark.driver_queries import PR_N_NODES, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT source, doc_id FROM documents").fetchall()
-    adj = defaultdict(set)
-    nodes = set()
-    for src, d in raw:
-        sn = int(src[3:])
-        a = sn % PR_N_NODES
-        b = (sn * 7 + d * 13 + 3) % PR_N_NODES
-        if a != b:
-            adj[a].add(b)
-            adj[b].add(a)
-            nodes.update((a, b))
-    root = min(nodes)
-    dist = {root: 0}
-    q = deque([root])
-    while q:
-        u = q.popleft()
-        for v in adj[u]:
-            if v not in dist:
-                dist[v] = dist[u] + 1
-                q.append(v)
-    ecc = max(dist.values())
-    rows = con.execute(QUERIES["bfs_hops"][1]).fetchall()
-    assert len(rows) == len(nodes)
-    for node, d, r, geecc, reachable, conv in rows:
-        assert r == root and geecc == ecc and conv == 1
-        if node in dist:
-            assert (d, reachable) == (dist[node], 1)
-            if node != root:
-                assert any(
-                    dist.get(nb) == dist[node] - 1 for nb in adj[node]
-                )
-        else:
-            assert (d, reachable) == (None, 0)
-    assert ecc >= 1

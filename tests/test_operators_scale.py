@@ -288,69 +288,6 @@ def test_streaming_extraction(spark, tmp_path):
     assert all(r["dt"] is not None for r in sample)
 
 
-def test_stream_interval_join(spark, tmp_path):
-    """Stream-stream interval join: each turn picks up exactly the
-    same-conversation events inside [turn_ts, turn_ts + lag]; state is
-    evictable because both sides are watermarked and the condition is
-    time-bounded. Expected pairs computed by a pandas replay."""
-    from datetime import datetime, timedelta
-
-    from htep_spark.streaming.stream import stream_interval_join
-
-    T0 = datetime(2024, 1, 1, 12, 0, 0)
-    turns = [
-        ("c1", 0, T0),
-        ("c1", 1, T0 + timedelta(minutes=10)),
-        ("c2", 0, T0),
-    ]
-    events = [
-        ("c1", 100, "search", T0 + timedelta(seconds=30)),   # -> c1/t0
-        ("c1", 101, "code", T0 + timedelta(seconds=400)),    # beyond 300s lag
-        ("c1", 102, "search", T0 + timedelta(minutes=10, seconds=5)),  # -> c1/t1
-        ("c2", 103, "fetch", T0 + timedelta(seconds=299)),   # -> c2/t0 (edge)
-        ("c3", 104, "fetch", T0),                            # no turn
-    ]
-    tsrc = str(tmp_path / "turns_src")
-    esrc = str(tmp_path / "events_src")
-    spark.createDataFrame(
-        turns, "conv_id string, turn_idx int, ts timestamp"
-    ).write.parquet(tsrc)
-    spark.createDataFrame(
-        events, "conv_id string, event_id long, kind string, ts timestamp"
-    ).write.parquet(esrc)
-
-    tstream = spark.readStream.schema(
-        "conv_id string, turn_idx int, ts timestamp"
-    ).parquet(tsrc)
-    estream = spark.readStream.schema(
-        "conv_id string, event_id long, kind string, ts timestamp"
-    ).parquet(esrc)
-    out = stream_interval_join(tstream, estream, max_lag_sec=300)
-    assert out.isStreaming
-    query = (
-        out.writeStream.format("memory")
-        .queryName("interval_join_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(120)
-    got = {
-        (r["conv_id"], r["turn_idx"], r["event_id"])
-        for r in spark.sql("select * from interval_join_stream").collect()
-    }
-    # pandas replay of the interval rule
-    want = {
-        (tc, ti, eid)
-        for tc, ti, tts in turns
-        for ec, eid, _k, ets in events
-        if tc == ec and tts <= ets <= tts + timedelta(seconds=300)
-    }
-    assert got == want
-    assert ("c1", 0, 101) not in got  # lag bound respected
-    assert ("c2", 0, 103) in got  # inclusive edge
-
-
 def test_streaming_dedup_turns(spark, tmp_path):
     """dropDuplicatesWithinWatermark ingestion guard: replayed
     (conv_id, turn_idx) rows collapse to one, state bounded by watermark."""
@@ -415,174 +352,6 @@ def test_stateful_conversation_stream(spark, tmp_path):
         assert rows[conv_id]["n_turns"] == n
         assert rows[conv_id]["max_turn"] == n - 1
         assert rows[conv_id]["contiguous"] is True
-
-
-def test_stream_sessionized_counts(spark, tmp_path):
-    """Native session_window streaming sessionization must reproduce a
-    pandas gap-rule replay exactly: same per-user session event counts and
-    session spans (start = first event; end = last event + gap), including
-    the boundary case — an event at exactly prev + gap MERGES into the
-    session (session_window's interval is closed on the right; only
-    ts > prev + gap opens a new session), pinned by the exact-gap steps
-    in the fixture."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from htep_spark.streaming.stream import stream_sessionized_counts
-
-    base = dt.datetime(2024, 3, 1)
-    gap = dt.timedelta(minutes=30)
-    rows = []
-    for uid in range(4):
-        t = base + dt.timedelta(minutes=uid)
-        for j in range(20):
-            # deterministic mixture of intra-session steps, an exact-gap
-            # boundary step, and clear session breaks
-            step = [5, 29, 30, 61][(uid + j) % 4]
-            t = t + dt.timedelta(minutes=step)
-            rows.append((uid, t))
-    pdf = pd.DataFrame(rows, columns=["user_id", "ts"])
-    src = str(tmp_path / "sess_src")
-    spark.createDataFrame(pdf, "user_id long, ts timestamp").write.parquet(src)
-    stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
-    out = stream_sessionized_counts(stream, gap="30 minutes", watermark="0 seconds")
-    assert out.isStreaming
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sess_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["user_id"], r["session_start"], r["session_end"]): r["n_events"]
-        for r in spark.sql("select * from sess_stream").collect()
-    }
-    # pandas replay: new session only when ts > prev + gap (closed edge)
-    want = {}
-    for uid, grp in pdf.groupby("user_id"):
-        ts = sorted(grp["ts"])
-        start, prev, n = ts[0], ts[0], 1
-        for t in ts[1:]:
-            if t > prev + gap:
-                want[(uid, start, prev + gap)] = n
-                start, n = t, 0
-            n += 1
-            prev = t
-        want[(uid, start, prev + gap)] = n
-    # append mode emits only watermark-finalized sessions; with the corpus
-    # fully replayed and watermark 0, every session but possibly each
-    # user's LAST may be emitted — require all finalized ones to match
-    assert got, "no sessions emitted"
-    for k, n in got.items():
-        assert want.get(k) == n, (k, n, want.get(k))
-    # the big majority of sessions finalize (each user has ~5 breaks)
-    assert len(got) >= len(want) - 4
-
-
-def test_stream_heavy_hitters(spark, tmp_path):
-    """Distributed SpaceSaving over a skewed token stream: in the
-    exact regime (capacity >= per-shard vocabulary) the summaries equal
-    the batch counts exactly; in the tight regime the standard guarantees
-    hold — true <= est <= true + err for every summarized token, and every
-    token with true count > shard_len/capacity is present. State is
-    per-token-shard, so a token's count never splits across shards."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from htep_spark.streaming.stream import stream_heavy_hitters
-
-    # deterministic Zipf-ish corpus: token_i appears ~N/(i+1) times
-    base = dt.datetime(2024, 1, 1)
-    rows = []
-    for i in range(40):
-        for j in range(200 // (i + 1)):
-            rows.append((f"tok{i:02d}", base + dt.timedelta(seconds=len(rows))))
-    pdf = pd.DataFrame(rows, columns=["token", "ts"])
-    truth = pdf["token"].value_counts().to_dict()
-    src = str(tmp_path / "hh_src")
-    spark.createDataFrame(pdf, "token string, ts timestamp").write.parquet(src)
-
-    def run(capacity, name):
-        stream = spark.readStream.schema("token string, ts timestamp").parquet(src)
-        out = stream_heavy_hitters(stream, capacity=capacity, n_shards=4)
-        assert out.isStreaming
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        # latest emission per (shard, token)
-        return spark.sql(
-            f"select * from (select *, row_number() over (partition by shard, token "
-            f"order by est_count desc) rn from {name}) where rn = 1"
-        ).collect()
-
-    exact = run(capacity=64, name="hh_exact")
-    got = {r["token"]: r for r in exact}
-    assert {t: r["est_count"] for t, r in got.items()} == truth
-    assert all(r["max_err"] == 0 for r in exact)
-
-    tight = run(capacity=6, name="hh_tight")
-    by_shard: dict = {}
-    for r in tight:
-        by_shard.setdefault(r["shard"], []).append(r)
-    shard_of = {r["token"]: r["shard"] for r in exact}
-    for shard, rs in by_shard.items():
-        assert len(rs) <= 6
-        shard_len = sum(c for t, c in truth.items() if shard_of[t] == shard)
-        for r in rs:
-            true = truth.get(r["token"], 0)
-            assert true <= r["est_count"] <= true + r["max_err"], r
-        # guarantee: frequent-in-shard tokens must be present
-        present = {r["token"] for r in rs}
-        for t, c in truth.items():
-            if shard_of[t] == shard and c > shard_len / 6:
-                assert t in present, (t, c, shard_len)
-    # the global top-3 by true count survive the tight summaries
-    top_true = sorted(truth, key=lambda t: -truth[t])[:3]
-    merged = {r["token"] for r in tight}
-    assert set(top_true) <= merged
-    # merge_heavy_hitters finalize: in the exact regime the global top-k
-    # over the sink equals the true top-k exactly (counts and order)
-    from htep_spark.streaming.stream import merge_heavy_hitters
-
-    topk = merge_heavy_hitters(spark.table("hh_exact"), k=5).collect()
-    want_top = sorted(truth.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
-    assert [(r["token"], r["est_count"]) for r in topk] == want_top
-    assert [r["rank"] for r in topk] == [1, 2, 3, 4, 5]
-    # tight regime: the merged top-k still satisfies the SpaceSaving bound
-    ttop = merge_heavy_hitters(spark.table("hh_tight"), k=5).collect()
-    for r in ttop:
-        true = truth.get(r["token"], 0)
-        assert true <= r["est_count"] <= true + r["max_err"], r
-
-
-def test_merge_heavy_hitters_multi_generation_atomic(spark):
-    """A token evicted and re-inserted between micro-batches leaves TWO
-    sink generations: (est=1, err=0) then (est=51, err=50). The merge must
-    take the latest generation atomically — pairing max(est) with min(err)
-    across generations would fabricate (51, 0), violating
-    true <= est <= true + err (ADVICE r06)."""
-    from htep_spark.streaming.stream import merge_heavy_hitters
-
-    sink = spark.createDataFrame(
-        [
-            (0, "tok", 1, 0),
-            (0, "tok", 51, 50),
-            (0, "other", 10, 0),
-        ],
-        "shard int, token string, est_count long, max_err long",
-    )
-    rows = {r["token"]: r for r in merge_heavy_hitters(sink, k=5).collect()}
-    assert rows["tok"]["est_count"] == 51 and rows["tok"]["max_err"] == 50
-    assert rows["other"]["est_count"] == 10 and rows["other"]["max_err"] == 0
 
 
 def test_dedup_keepers_connected_components(spark):
@@ -1281,421 +1050,3 @@ def test_exact_global_rank_semantics(spark):
         assert got == want, n_parts
     out = exact_global_rank(df, "score", tie_cols=("id",)).collect()
     assert all(r["global_count"] == 200 for r in out)
-
-
-def test_stream_windowed_count_min(spark, tmp_path):
-    """Streaming per-window Count-Min: the emitted (window, row, col, cnt)
-    counters must equal a batch replay of the same md5 cell positions over
-    the same data, window by window — i.e. the streaming sketch is exactly
-    the batch `count_min` counter table computed per tumbling window. Every
-    emitted counter must also satisfy the CM guarantee (cnt >= any single
-    token's true in-window count hashing there)."""
-    import datetime as dt
-    import hashlib
-
-    import pandas as pd
-
-    from htep_spark.driver_queries import CM_D, CM_W
-    from htep_spark.streaming.stream import stream_windowed_count_min
-
-    def cm_pos(token, j):
-        h = int(
-            hashlib.md5(f"{token}|cm{j}".encode()).hexdigest()[:15], 16
-        )
-        return h % CM_W
-
-    base = dt.datetime(2024, 5, 1)
-    rows = []
-    for i in range(600):
-        tok = f"tok{i % 17:02d}"
-        # three 10-minute windows, one event per second
-        rows.append((tok, base + dt.timedelta(seconds=i * 3)))
-    pdf = pd.DataFrame(rows, columns=["token", "ts"])
-    src = str(tmp_path / "cm_src")
-    spark.createDataFrame(pdf, "token string, ts timestamp").write.parquet(src)
-    stream = spark.readStream.schema("token string, ts timestamp").parquet(src)
-    out = stream_windowed_count_min(
-        stream, window_duration="10 minutes", watermark="0 seconds"
-    )
-    assert out.isStreaming
-    q = (
-        out.writeStream.format("memory")
-        .queryName("cm_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["window_start"], r["row"], r["col"]): r["cnt"]
-        for r in spark.sql("select * from cm_stream").collect()
-    }
-    assert got, "no counters emitted"
-    # batch replay: same cells per window
-    want: dict = {}
-    win = dt.timedelta(minutes=10)
-    for tok, ts in rows:
-        wstart = base + ((ts - base) // win) * win
-        for j in range(CM_D):
-            k = (wstart, j, cm_pos(tok, j))
-            want[k] = want.get(k, 0) + 1
-    emitted_windows = {k[0] for k in got}
-    assert len(emitted_windows) >= 2  # last window may await the watermark
-    for k, cnt in got.items():
-        assert want.get(k) == cnt, (k, cnt, want.get(k))
-    # all counters of an emitted window are present (the full d x w slice
-    # that has any mass) -> per-window point estimates are computable
-    for k, cnt in want.items():
-        if k[0] in emitted_windows:
-            assert got.get(k) == cnt, (k, cnt)
-    # CM guarantee inside each emitted window: estimate >= true count
-    truth: dict = {}
-    for tok, ts in rows:
-        wstart = base + ((ts - base) // win) * win
-        truth[(wstart, tok)] = truth.get((wstart, tok), 0) + 1
-    for (wstart, tok), true_cnt in truth.items():
-        if wstart in emitted_windows:
-            est = min(
-                got[(wstart, j, cm_pos(tok, j))] for j in range(CM_D)
-            )
-            assert est >= true_cnt
-
-
-def test_stream_windowed_qdigest(spark, tmp_path):
-    """Streaming q-digest: the per-window histogram emitted by the stream,
-    fed through the SHARED deterministic compaction, must produce exactly
-    the digest and quantile estimates a batch q-digest computes over the
-    same window's values — the feed/finalize split is lossless."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from htep_spark.operators.qdigest import (
-        QDIGEST_D,
-        exact_quantile,
-        qdigest_compact,
-        qdigest_rank_query,
-    )
-    from htep_spark.streaming.stream import stream_windowed_qdigest_histogram
-
-    base = dt.datetime(2024, 6, 1)
-    rows = []
-    for i in range(900):
-        # three 10-minute windows, skewed values
-        rows.append(((i * 37) % 256 + (i % 3) * 100, base + dt.timedelta(seconds=i * 2)))
-    pdf = pd.DataFrame(rows, columns=["value", "ts"])
-    src = str(tmp_path / "qd_src")
-    spark.createDataFrame(pdf, "value long, ts timestamp").write.parquet(src)
-    stream = spark.readStream.schema("value long, ts timestamp").parquet(src)
-    out = stream_windowed_qdigest_histogram(
-        stream, window_duration="10 minutes", watermark="0 seconds"
-    )
-    assert out.isStreaming
-    q = (
-        out.writeStream.format("memory")
-        .queryName("qd_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select * from qd_stream").collect()
-    assert got, "no histogram rows emitted"
-    wins: dict = {}
-    for r in got:
-        wins.setdefault(r["window_start"], {})[r["v"]] = r["cnt"]
-    assert len(wins) >= 2
-    win = dt.timedelta(minutes=10)
-    for wstart, hist in wins.items():
-        # batch replay of the same window
-        want: dict = {}
-        for v, ts in rows:
-            if base + ((ts - base) // win) * win == wstart:
-                want[v] = want.get(v, 0) + 1
-        assert hist == want, wstart
-        n = sum(hist.values())
-        sigma = n // 64
-        digest = qdigest_compact(hist, QDIGEST_D, sigma)
-        assert sum(c for _, _, c in digest) == n
-        r_mid = (n + 1) // 2
-        est = min(qdigest_rank_query(digest, r_mid), max(hist))
-        exact = exact_quantile(hist, r_mid)
-        # the digest answers within the proven rank bound for the median
-        cum = sum(c for v, c in hist.items() if v <= est)
-        assert abs(cum - r_mid) <= QDIGEST_D * sigma + max(hist.values())
-        assert est >= exact  # q-digest answers never under-shoot the rank
-
-
-def test_stream_windowed_topk(spark, tmp_path):
-    """Per-window distributed SpaceSaving with event-time-timeout close:
-    each (window, shard) summary is emitted exactly once when the
-    watermark passes the window end. Exact regime (capacity >= per-shard
-    in-window vocabulary): emitted counts equal the batch per-window
-    counts, err 0, and `merge_windowed_topk` equals the true per-window
-    top-k (counts AND order). Tight regime: per-(window, shard) bounds
-    hold (true <= est <= true + err; frequent-in-shard tokens present).
-    The final window stays open (watermark never passes its end)."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from htep_spark.streaming.stream import (
-        merge_windowed_topk,
-        stream_windowed_topk,
-    )
-
-    # three 10-minute windows of a Zipf-ish stream whose head token
-    # DIFFERS per window (tok00/tok01/tok02) so per-window ranking is
-    # actually window-dependent
-    base = dt.datetime(2024, 7, 1)
-    rows = []
-    for w in range(3):
-        for i in range(20):
-            tok = f"tok{(i + w) % 20:02d}"
-            for j in range(120 // (i + 1)):
-                rows.append(
-                    (tok, base + dt.timedelta(minutes=10 * w, seconds=len(rows) % 500))
-                )
-    pdf = pd.DataFrame(rows, columns=["token", "ts"])
-    win = dt.timedelta(minutes=10)
-    pdf["win_start"] = pdf["ts"].apply(lambda t: base + ((t - base) // win) * win)
-    truth = (
-        pdf.groupby(["win_start", "token"]).size().to_dict()
-    )  # (window_start, token) -> true in-window count
-    src = str(tmp_path / "wtopk_src")
-    spark.createDataFrame(
-        pdf[["token", "ts"]], "token string, ts timestamp"
-    ).write.parquet(src)
-
-    def run(capacity, name):
-        stream = spark.readStream.schema("token string, ts timestamp").parquet(src)
-        out = stream_windowed_topk(
-            stream,
-            window_duration="10 minutes",
-            watermark="0 seconds",
-            capacity=capacity,
-            n_shards=4,
-        )
-        assert out.isStreaming
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return spark.table(name).collect()
-
-    exact = run(capacity=64, name="wtopk_exact")
-    assert exact, "no windows closed"
-    emitted = {r["window_start"] for r in exact}
-    # watermark = max event time -> the last window's end is never passed
-    assert emitted == {base, base + win}, emitted
-    got = {(r["window_start"], r["token"]): r for r in exact}
-    assert len(got) == len(exact), "duplicate (window, token) emission"
-    for (ws, tok), r in got.items():
-        assert r["est_count"] == truth[(ws, tok)], (ws, tok)
-        assert r["max_err"] == 0
-        assert r["window_end"] == ws + win
-    for (ws, tok), cnt in truth.items():
-        if ws in emitted:
-            assert (ws, tok) in got, (ws, tok, cnt)
-
-    # finalize: per-window global top-5 equals the true per-window top-5
-    topk = merge_windowed_topk(spark.table("wtopk_exact"), k=5).collect()
-    for ws in emitted:
-        want = sorted(
-            ((t, c) for (w, t), c in truth.items() if w == ws),
-            key=lambda kv: (-kv[1], kv[0]),
-        )[:5]
-        rs = sorted(
-            (r for r in topk if r["window_start"] == ws), key=lambda r: r["rank"]
-        )
-        assert [(r["token"], r["est_count"]) for r in rs] == want
-        assert [r["rank"] for r in rs] == [1, 2, 3, 4, 5]
-    # the two emitted windows rank DIFFERENT heads (window-dependence)
-    heads = {
-        r["window_start"]: r["token"] for r in topk if r["rank"] == 1
-    }
-    assert len(set(heads.values())) == 2, heads
-
-    # tight regime: capacity 6 < 20-token vocabulary
-    tight = run(capacity=6, name="wtopk_tight")
-    shard_of = {}
-    for r in spark.sql(
-        "select distinct token, pmod(xxhash64(token), 4) as shard from wtopk_exact"
-    ).collect():
-        shard_of[r["token"]] = r["shard"]
-    by_ws_shard: dict = {}
-    for r in tight:
-        assert r["window_start"] in emitted  # same close rule
-        by_ws_shard.setdefault((r["window_start"], r["shard"]), []).append(r)
-    for (ws, shard), rs in by_ws_shard.items():
-        assert len(rs) <= 6
-        shard_len = sum(
-            c for (w, t), c in truth.items() if w == ws and shard_of[t] == shard
-        )
-        present = {r["token"] for r in rs}
-        for r in rs:
-            true = truth.get((ws, r["token"]), 0)
-            assert true <= r["est_count"] <= true + r["max_err"], r
-        for (w, t), c in truth.items():
-            if w == ws and shard_of[t] == shard and c > shard_len / 6:
-                assert t in present, (t, c, shard_len)
-
-
-def test_stream_windowed_jsd(spark, tmp_path):
-    """Streaming windowed JSD: the per-window histograms emitted by the
-    stream, finalized with merge_windowed_jsd against a fixed reference,
-    must equal a pure-Python JSD computed over the same windows — and the
-    planted drift must show: window A is sampled ref-like (low JSD),
-    window B is skewed toward one token (high JSD). Zero-count support
-    terms (p = 0) and the OTHER bucket must both be exercised."""
-    import datetime as dt
-    import math
-
-    import pandas as pd
-
-    from htep_spark.streaming.stream import (
-        JSD_STREAM_OTHER,
-        merge_windowed_jsd,
-        stream_windowed_jsd,
-    )
-
-    support = ["alpha", "beta", "gamma", "delta"]
-    ref_counts = {"alpha": 40, "beta": 30, "gamma": 20, "delta": 10,
-                  JSD_STREAM_OTHER: 20}
-    base = dt.datetime(2024, 7, 1)
-    rows = []
-    # window A (minute 0-10): ref-like mix incl. out-of-support tokens
-    mix_a = (["alpha"] * 4 + ["beta"] * 3 + ["gamma"] * 2 + ["delta"]
-             + ["misc1", "misc2"])
-    for i in range(240):
-        rows.append((mix_a[i % len(mix_a)], base + dt.timedelta(seconds=i * 2)))
-    # window B (minute 10-20): heavy alpha skew, delta never occurs (p=0)
-    mix_b = ["alpha"] * 9 + ["beta"]
-    for i in range(240):
-        rows.append(
-            (mix_b[i % len(mix_b)],
-             base + dt.timedelta(minutes=10, seconds=i * 2))
-        )
-    # window C exists only to push the watermark past A and B
-    for i in range(30):
-        rows.append(("alpha", base + dt.timedelta(minutes=25, seconds=i)))
-    pdf = pd.DataFrame(rows, columns=["token", "ts"])
-    src = str(tmp_path / "jsd_src")
-    spark.createDataFrame(pdf, "token string, ts timestamp").write.parquet(src)
-    stream = spark.readStream.schema("token string, ts timestamp").parquet(src)
-    out = stream_windowed_jsd(
-        stream, support, window_duration="10 minutes", watermark="0 seconds"
-    )
-    assert out.isStreaming
-    q = (
-        out.writeStream.format("memory")
-        .queryName("jsd_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    sink = spark.sql("select * from jsd_stream")
-    got = {
-        (r["window_start"], r["window_end"]): dict()
-        for r in sink.collect()
-    }
-    for r in sink.collect():
-        got[(r["window_start"], r["window_end"])][r["term"]] = r["cnt"]
-    assert len(got) >= 2, "windows A and B must have closed"
-    fin = {
-        (r["window_start"]): r
-        for r in merge_windowed_jsd(sink, ref_counts).collect()
-    }
-    qtot = sum(ref_counts.values())
-    win = dt.timedelta(minutes=10)
-    truth: dict = {}
-    for tok, ts in rows:
-        wstart = base + ((ts - base) // win) * win
-        term = tok if tok in support else JSD_STREAM_OTHER
-        truth.setdefault(wstart, {})
-        truth[wstart][term] = truth[wstart].get(term, 0) + 1
-    for (ws, _we), counts in got.items():
-        assert counts == truth[ws], (ws, counts, truth[ws])
-        wtot = sum(counts.values())
-        klp = klq = 0.0
-        for term in sorted(ref_counts):
-            c = counts.get(term, 0)
-            p, qq = c / wtot, ref_counts[term] / qtot
-            m = (p + qq) / 2.0
-            if c > 0:
-                klp += p * math.log(p / m)
-            if qq > 0:
-                klq += qq * math.log(qq / m)
-        jsd = (klp + klq) / 2.0
-        r = fin[ws]
-        assert r["jsd"] == round(jsd, 6), (ws, r["jsd"], jsd)
-        assert r["n_tokens"] == wtot
-        assert r["n_present"] == sum(1 for t in ref_counts if counts.get(t, 0) > 0)
-    wa, wb = base, base + dt.timedelta(minutes=10)
-    assert wa in fin and wb in fin
-    # planted drift: the skewed window diverges far more than the ref-like
-    assert fin[wb]["jsd"] > 4 * fin[wa]["jsd"], (fin[wa]["jsd"], fin[wb]["jsd"])
-    # branch proofs: OTHER carries mass in A; delta is a p=0 term in B
-    assert truth[wa][JSD_STREAM_OTHER] > 0
-    assert "delta" not in truth[wb] and fin[wb]["n_present"] < len(ref_counts)
-
-
-def test_stream_active_users(spark, tmp_path):
-    """Streaming windowed distinct actives (`stream_active_users`): the
-    chained dropDuplicates -> windowed-count plan must emit, per tumbling
-    window, EXACTLY the batch COUNT(DISTINCT user) — verified against a
-    brute-force replay over the same synthetic stream (users revisit
-    windows, so dedup genuinely fires: raw events >> distinct pairs)."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from htep_spark.streaming.stream import stream_active_users
-
-    base = dt.datetime(2024, 5, 1)
-    rows = []
-    for i in range(600):
-        # 7 users cycling over 3 ten-minute windows; heavy revisits
-        rows.append((i % 7, base + dt.timedelta(seconds=i * 3)))
-    pdf = pd.DataFrame(rows, columns=["user_id", "ts"])
-    src = str(tmp_path / "au_src")
-    spark.createDataFrame(pdf, "user_id long, ts timestamp").write.parquet(src)
-    stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
-    out = stream_active_users(
-        stream, window_duration="10 minutes", watermark="0 seconds"
-    )
-    assert out.isStreaming
-    q = (
-        out.writeStream.format("memory")
-        .queryName("au_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["window_start"]: r["dau"]
-        for r in spark.sql("select * from au_stream").collect()
-    }
-    assert got, "no windows emitted"
-    win = dt.timedelta(minutes=10)
-    want = {}
-    seen = set()
-    for u, ts in rows:
-        wstart = base + ((ts - base) // win) * win
-        if (wstart, u) not in seen:
-            seen.add((wstart, u))
-            want[wstart] = want.get(wstart, 0) + 1
-    # append mode emits a window only once the watermark passes its end —
-    # the FINAL window stays open at end-of-stream (the standard
-    # availableNow tail, same as the other stream_windowed_* tests)
-    assert len(got) >= 2
-    assert got == {k: want[k] for k in got}, (got, want)
-    missing = set(want) - set(got)
-    assert missing <= {max(want)}, missing
-    assert sum(want.values()) < len(rows)  # dedup genuinely fired

@@ -104,7 +104,7 @@ def test_ann_lsh_expr_plan_stays_jvm_side(spark):
 
 
 def test_conv_metrics_order_partial_aggregation(spark):
-    """Both stages of the salted ordering rollup must hash-aggregate with
+    """Both stages of the ordering rollup must hash-aggregate with
     map-side partial aggregation (partial_* before each exchange), and the
     scan must prune to the two referenced columns."""
     from htep_spark.driver_queries import _q_conv_metrics_order
@@ -320,183 +320,6 @@ def test_dup_longest_plan_is_shuffle_free(spark):
     assert "CartesianProduct" not in lplan, lplan
     assert "Exchange SinglePartition" not in lplan, lplan
     assert "EvalPython" not in lplan and "MapInPandas" not in lplan, lplan
-
-
-def test_pagerank_iterations_never_rescan_corpus(spark):
-    """pagerank's scale claim (docstring): ONE bounded corpus pass (the
-    <= N^2-row (src, dst) groupBy) feeds a driver-side power iteration
-    (round 7); the returned frame is a local table plus the final
-    projection, so the plan contains ZERO FileScans, ZERO Exchanges, no
-    cartesian product, and no Python stage."""
-    from htep_spark.driver_queries import q_pagerank
-
-    plan = (
-        q_pagerank(spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "FileScan" not in plan, plan
-    assert "Exchange" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "EvalPython" not in plan and "MapInPandas" not in plan, plan
-
-
-def test_hits_iterations_never_rescan_corpus(spark):
-    """hits shares pagerank's scale claim (round 7): one bounded corpus
-    pass, driver-side half-iterations, local-table result — the returned
-    plan contains ZERO FileScans, ZERO Exchanges, no cartesian product,
-    and no Python stage."""
-    from htep_spark.driver_queries import q_hits
-
-    plan = (
-        q_hits(spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "FileScan" not in plan, plan
-    assert "Exchange" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "EvalPython" not in plan and "MapInPandas" not in plan, plan
-
-
-def test_tpch_regional_revenue_plan_shape(spark):
-    """The Q5-shape plan must be the one you'd want at 100 TB: every
-    dimension (customer/supplier/nation/region) joins as a
-    BroadcastHashJoin, the fact-fact lineitem⋈orders join is NOT a
-    cartesian product, the o_orderdate range filter reaches the orders
-    scan as a pushed filter, and the lineitem scan's ReadSchema is
-    pruned to the four referenced columns."""
-    from htep_spark.driver_queries import q_tpch_regional_revenue
-
-    plan = (
-        q_tpch_regional_revenue(spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("BroadcastHashJoin") >= 4, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "EvalPython" not in plan, plan
-    # date range pushed down to the orders scan
-    assert "PushedFilters: [IsNotNull(o_orderdate), GreaterThanOrEqual(o_orderdate" in plan, plan
-    # lineitem scan pruned: never reads l_comment-class baggage like
-    # l_tax/l_returnflag for this query
-    import re
-
-    m = re.search(r"ReadSchema: struct<(l_[^>]*)>", plan)
-    assert m, plan
-    cols = {c.split(":")[0] for c in m.group(1).split(",")}
-    assert cols == {
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    }, cols
-
-
-def test_tpch_pricing_plan_shape(spark):
-    """The Q1-shape plan: shipdate filter pushed to the scan, partial
-    (map-side) aggregation before the exchange, no Python stage."""
-    from htep_spark.driver_queries import q_tpch_pricing
-
-    plan = (
-        q_tpch_pricing(spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [IsNotNull(l_shipdate), LessThan(l_shipdate" in plan, plan
-    # partial (map-side) + final aggregate pair — the combine happens
-    # before the exchange (WholeStageCodegen spans only materialize in
-    # the post-execution AQE final plan, so they are not asserted here)
-    assert "partial_sum" in plan, plan
-    assert plan.count("HashAggregate") >= 2, plan
-    assert "EvalPython" not in plan, plan
-
-
-def test_tpch_shipping_plan_shape(spark):
-    """The Q3-shape plan: both opposing date filters pushed to their
-    scans (orders < cutoff, lineitem > cutoff), the segment dim a
-    BroadcastHashJoin, the top-N a TakeOrderedAndProject (never a
-    single-partition window/sort), no cartesian, no Python."""
-    from htep_spark.driver_queries import q_tpch_shipping
-
-    plan = (
-        q_tpch_shipping(spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "EvalPython" not in plan, plan
-    assert "PushedFilters: [IsNotNull(o_orderdate), LessThan(o_orderdate" in plan, plan
-    assert "PushedFilters: [IsNotNull(l_shipdate), GreaterThan(l_shipdate" in plan, plan
-
-
-def test_tpch_big_orders_plan_shape(spark):
-    """The Q18-shape plan: the qualifying-order set is a partial
-    (map-side) aggregation before its exchange; the customer dim
-    broadcasts; no cartesian, no Python, and the lineitem ReadSchema is
-    pruned to exactly (l_orderkey, l_quantity)."""
-    import re
-
-    from htep_spark.driver_queries import q_tpch_big_orders
-
-    plan = (
-        q_tpch_big_orders(spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "partial_sum" in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "EvalPython" not in plan, plan
-    m = re.search(r"ReadSchema: struct<(l_[^>]*)>", plan)
-    assert m, plan
-    cols = {c.split(":")[0] for c in m.group(1).split(",")}
-    assert cols == {"l_orderkey", "l_quantity"}, cols
-
-
-def test_k_core_iterations_never_rescan_corpus(spark):
-    """k_core follows the pagerank discipline (round 7): one bounded
-    corpus pass (distinct u<v edge set), driver-side peel rounds,
-    local-table result — ZERO FileScans, ZERO Exchanges, no cartesian
-    product, no Python stage; the 12 peel rounds never re-touch the
-    corpus."""
-    from htep_spark.driver_queries import q_k_core
-
-    plan = (
-        q_k_core(spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "FileScan" not in plan, plan
-    assert "Exchange" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "EvalPython" not in plan, plan
-
-
-def test_active_users_plan_has_no_window(spark):
-    """active_users' sliding distinct-count must be the contribution-
-    explode plan: an Explode/Generate over the deduped frame and
-    map-side-combinable counts — NO window function anywhere (a
-    COUNT(DISTINCT) OVER frame is unsupported and a per-day window
-    would be the wrong plan at scale), no cartesian, no Python."""
-    from htep_spark.driver_queries import q_active_users
-
-    plan = (
-        q_active_users(spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Generate explode" in plan, plan
-    assert "Window" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "EvalPython" not in plan, plan
 
 
 def test_stage_udf_pruning(spark):

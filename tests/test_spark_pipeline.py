@@ -2,7 +2,7 @@
 
 ``spark_pipeline(turns) == [reference(t) for t in turns]`` byte-for-byte per
 turn under stable ``(conv_id, turn_idx)`` ordering — plus the per-
-conversation grouped stages (salted metrics, order validation) and the
+conversation grouped stages (metrics, order validation) and the
 checkpoint/resume protocol.
 """
 
@@ -78,15 +78,14 @@ def test_distributed_synthesis_matches_driver_synthesis(spark, transcripts_pdf):
 
 def test_per_conversation_metrics_and_salting(spark, transcripts):
     extracted = run_extraction(transcripts)
-    # tiny salt bucket forces multi-bucket merge even on small fixtures
-    metrics = per_conversation_metrics(extracted, bucket_size=5).collect()
+    metrics = per_conversation_metrics(extracted).collect()
     by_conv = {m["conv_id"]: m for m in metrics}
     # conv-000000 is the mega conversation (~20% of turns)
     assert by_conv["conv-000000"]["n_turns"] == 48
     assert all(m["ordered_ok"] for m in metrics)
     total = sum(m["n_turns"] for m in metrics)
     assert total == N_TURNS
-    assert validate_turn_order(extracted, bucket_size=5)
+    assert validate_turn_order(extracted)
 
 
 def test_order_validation_catches_gaps(spark, transcripts):
@@ -95,7 +94,7 @@ def test_order_validation_catches_gaps(spark, transcripts):
     broken = transcripts.filter(
         ~((F.col("conv_id") == "conv-000001") & (F.col("turn_idx") == 3))
     )
-    assert not validate_turn_order(run_extraction(broken), bucket_size=5)
+    assert not validate_turn_order(run_extraction(broken))
 
 
 def test_checkpoint_resume(spark, transcripts_pdf, tmp_path):
@@ -191,6 +190,20 @@ def test_extraction_plan_is_narrow(spark, transcripts):
     )
     assert "Exchange" not in plan, plan
     assert "ArrowEvalPython" in plan
+
+
+def test_conv_metrics_plan_has_two_exchanges(spark, transcripts):
+    """The per-conversation metrics are one groupBy: Catalyst's
+    countDistinct plan shuffles on (conv_id, turn_idx) and then on conv_id,
+    each exchange above partial aggregates."""
+    plan = (
+        per_conversation_metrics(run_extraction(transcripts))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+    assert "partial_count" in plan, plan
 
 
 def test_job_entrypoint_checkpoint_and_resume(spark, transcripts_pdf, tmp_path):
