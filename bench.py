@@ -186,16 +186,12 @@ def main() -> None:
         "asof_events",
         "range_join_sessions",
         "bm25",
-        "lm_score",
         "quality_filter",
         "top_ngrams",
         "beam_replace",
-        "sample_hash",
         "repetition_stats",
         "bpe_train",
-        "domain_mix",
         "embed_keepers",
-        "lm_tercile",
         "lm_heldout",
         "bpe_encode",
         "fuzzy_ratio",
@@ -210,29 +206,9 @@ def main() -> None:
         "token_quantiles",
         "difflib_match",
         "block_keep",
-        "strategy_best",
-        "qdigest",
-        "url_domains",
-        "seq_pack",
-        "dsir_select",
-        "semdedup",
-        "domain_quota",
         "block_correct",
         "conv_rollup_merge",
-        "gumbel_sample",
-        "novelty",
         "dict_correct",
-        "dsir_sampled",
-        "web_funnel",
-        "line_dedup",
-        "dup_longest",
-        "span_scrub",
-        "split_leakage",
-        "mojibake_fix",
-        "robots_filter",
-        "template_lines",
-        "nfc_normalize",
-        "lm_kneser_ney",
     ):
         _run(QUERIES[name][0](spark, SF_DIR))  # untimed warm pass
         best = float("inf")

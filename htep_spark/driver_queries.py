@@ -22,8 +22,6 @@ vacuously empty results.
 """
 
 from __future__ import annotations
-
-import math
 from typing import Callable, Dict, Iterator, Optional, Tuple
 
 import pandas as pd
@@ -922,7 +920,8 @@ FROM r
 # per-myriad rate; the stratum rate itself derives from the source string,
 # so the same row always gets the same verdict on any engine, any cluster
 # size, any run — no RNG state, no sampling seed to ship. Narrow plan: one
-# projection + filter, fully pushdown-friendly.
+# projection + filter, fully pushdown-friendly. `curation_funnel` runs it
+# as its last gate.
 # --------------------------------------------------------------------------
 
 SAMPLE_BASE_PERMYRIAD = 500  # 5% floor
@@ -967,51 +966,6 @@ SELECT * FROM (
            AS rate_permyriad
   FROM documents
 ) WHERE bucket < rate_permyriad
-"""
-
-
-# --------------------------------------------------------------------------
-# Domain-mix token accounting: per-source token totals → the sampling
-# weight that would equalize the mixture (weight = target_share /
-# observed_share, the standard LLM data-mixing correction). One hash
-# aggregation + a broadcast scalar join against the corpus total — the
-# whole thing is two map-side-combinable aggs at any scale.
-# --------------------------------------------------------------------------
-
-
-def q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    toks = F.size(
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0)
-    )
-    per = docs.groupBy("source").agg(
-        F.count("*").alias("n_docs"), F.sum(toks).alias("n_tokens")
-    )
-    w = Window.partitionBy()
-    n_sources = F.count("*").over(w)
-    total = F.sum("n_tokens").over(w)
-    share = F.col("n_tokens").cast("double") / total
-    return per.select(
-        "source",
-        F.col("n_docs").cast("long").alias("n_docs"),
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.round(share, 6).alias("token_share"),
-        F.round((1.0 / n_sources) / share, 6).alias("mix_weight"),
-    )
-
-
-SQL_DOMAIN_MIX = f"""
-WITH per AS (
-  SELECT source, count(*) AS n_docs,
-         sum(len(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))) AS n_tokens
-  FROM documents GROUP BY source
-)
-SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
-       CAST(n_tokens AS BIGINT) AS n_tokens,
-       round(CAST(n_tokens AS DOUBLE) / sum(n_tokens) OVER (), 6) AS token_share,
-       round((1.0 / count(*) OVER ())
-             / (CAST(n_tokens AS DOUBLE) / sum(n_tokens) OVER ()), 6) AS mix_weight
-FROM per
 """
 
 
@@ -1132,101 +1086,12 @@ FROM top WHERE rn = 1
 
 
 # --------------------------------------------------------------------------
-# Corpus-trained bigram LM scoring (CCNet-style quality signal): train
-# add-k-smoothed bigram probabilities on the corpus itself (two hash
-# aggregations), then score every document by its mean token-bigram log
-# probability. All relational — the expensive part is one shuffle join of
-# doc-bigrams against the corpus bigram counts. Determinism: the per-doc
-# mean folds the bigram log-probs in POSITION order (sorted list
-# aggregation on both engines), never in shuffle arrival order.
+# Add-k smoothing of the held-out bigram LM (`lm_heldout`,
+# operators/ranking.py). It lives here with the shared tokenizer and md5
+# split helpers that ranking.py imports lazily from this module.
 # --------------------------------------------------------------------------
 
 LM_SMOOTH_K = 0.5
-
-
-def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    toks = docs.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0)
-        ).alias("pos", "w"),
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    bigrams = (
-        toks.withColumn("w2", F.lead("w").over(w))
-        .filter(F.col("w2").isNotNull())
-        .select("doc_id", "pos", F.col("w").alias("w1"), "w2")
-    )
-    uni = toks.groupBy("w").agg(F.count("*").alias("cu"))
-    vocab = uni.count()  # small driver-side scalar (|V|), not row data
-    big = bigrams.groupBy("w1", "w2").agg(F.count("*").alias("cb"))
-    scored = (
-        bigrams.join(big, ["w1", "w2"])
-        .join(uni.withColumnRenamed("w", "w1"), "w1")
-        .withColumn(
-            "logp",
-            F.log(
-                (F.col("cb") + F.lit(LM_SMOOTH_K))
-                / (F.col("cu") + F.lit(LM_SMOOTH_K) * vocab)
-            ),
-        )
-    )
-    per_doc = (
-        scored.groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list(F.struct("pos", "logp"))).alias("ps"))
-        .select(
-            "doc_id",
-            F.round(
-                F.aggregate(
-                    F.col("ps"), F.lit(0.0), lambda acc, x: acc + x["logp"]
-                )
-                / F.size("ps"),
-                6,
-            ).alias("mean_logp"),
-            F.size("ps").cast("long").alias("n_bigrams"),
-        )
-    )
-    return docs.select("doc_id").join(per_doc, "doc_id", "left").select(
-        "doc_id", "mean_logp", F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams")
-    )
-
-
-SQL_LM_SCORE = f"""
-WITH toks AS (
-  SELECT doc_id, i - 1 AS pos, t[i] AS w
-  FROM (
-    SELECT doc_id, t, unnest(range(1, len(t)+1)) AS i
-    FROM (SELECT doc_id, regexp_extract_all(lower(text), '{_TOKEN_PATTERN}') AS t
-          FROM documents)
-  )
-), bigrams AS (
-  SELECT doc_id, pos, w AS w1,
-         lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-  FROM toks
-  QUALIFY w2 IS NOT NULL
-), uni AS (
-  SELECT w, count(*) AS cu FROM toks GROUP BY w
-), v AS (
-  SELECT count(*) AS vocab FROM uni
-), big AS (
-  SELECT w1, w2, count(*) AS cb FROM bigrams GROUP BY w1, w2
-), scored AS (
-  SELECT b.doc_id, b.pos,
-         ln((g.cb + {LM_SMOOTH_K}) / (u.cu + {LM_SMOOTH_K} * v.vocab)) AS logp
-  FROM bigrams b
-  JOIN big g ON g.w1 = b.w1 AND g.w2 = b.w2
-  JOIN uni u ON u.w = b.w1
-  CROSS JOIN v
-), per_doc AS (
-  SELECT doc_id,
-         round(list_sum(list(logp ORDER BY pos)) / count(*), 6) AS mean_logp,
-         CAST(count(*) AS BIGINT) AS n_bigrams
-  FROM scored GROUP BY doc_id
-)
-SELECT d.doc_id, p.mean_logp, coalesce(p.n_bigrams, 0) AS n_bigrams
-FROM documents d LEFT JOIN per_doc p USING (doc_id)
-"""
 
 
 # --------------------------------------------------------------------------
@@ -1337,45 +1202,6 @@ SELECT doc_id, bm25, n_terms_hit,
        row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) AS rank
 FROM scored
 QUALIFY rank <= {BM25_TOP_DOCS}
-"""
-
-
-# --------------------------------------------------------------------------
-# Document fingerprint + exact dedup (training-data pipeline ops)
-# --------------------------------------------------------------------------
-
-def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    return _docs(spark, sf_dir).select(
-        "doc_id", F.md5(norm).alias("fingerprint")
-    )
-
-
-SQL_FINGERPRINT = """
-SELECT doc_id, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint
-FROM documents
-"""
-
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    return (
-        _docs(spark, sf_dir)
-        .select(F.md5(norm).alias("fingerprint"), "doc_id")
-        .groupBy("fingerprint")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min("doc_id").alias("keeper_doc_id"),
-        )
-    )
-
-
-SQL_DEDUP_EXACT = """
-SELECT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint,
-       count(*) AS n_docs,
-       min(doc_id) AS keeper_doc_id
-FROM documents
-GROUP BY 1
 """
 
 
@@ -2037,222 +1863,6 @@ FROM emb e LEFT JOIN labels l ON e.vec_id = l.vec_id
 
 
 # --------------------------------------------------------------------------
-# Sampled DSIR (`dsir_sampled`): the DSIR paper's ACTUAL selection rule —
-# sampling without replacement with inclusion probability proportional to
-# exp(importance weight), via the Gumbel-top-k trick: key = weight + G
-# with G = -ln(-ln(u)) over a seed-free md5 uniform. Composes the two
-# already-oracled pieces (the `dsir_select` weights and the
-# `gumbel_sample` key machinery); the deterministic top-k cut remains
-# `dsir_select`. Keys are rounded once at 6dp before ranking (both
-# engines add the SAME already-rounded weight to a same-ulp Gumbel).
-# --------------------------------------------------------------------------
-
-
-def q_dsir_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.hashing import md5_prefix60_spark
-    from .operators.ranking import exact_global_rank
-
-    base = _dsir_weights(spark, sf_dir)
-    h = md5_prefix60_spark(
-        F.concat_ws("|", F.lit("dgum"), F.col("doc_id").cast("string"))
-    )
-    u = (h.cast("double") + F.lit(0.5)) / F.lit(float(1 << 60))
-    key = F.round(F.col("weight") - F.log(-F.log(u)), 6)
-    weighted = base.select("doc_id", "ntok", "weight", key.alias("key"))
-    ranked = exact_global_rank(
-        weighted.withColumn("nk", -F.col("key")), "nk", tie_cols=("doc_id",)
-    )
-    return ranked.select(
-        "doc_id",
-        "ntok",
-        "weight",
-        "key",
-        F.col("global_rank").alias("rank"),
-        (F.col("global_rank") <= F.col("global_count") / DSIR_KEEP_DEN)
-        .cast("long")
-        .alias("sampled"),
-    )
-
-
-def _sql_dsir_sampled() -> str:
-    from .functions.hashing import md5_prefix60_sql
-
-    h = md5_prefix60_sql("'dgum' || '|' || CAST(doc_id AS VARCHAR)")
-    return f"""
-WITH dz AS ({_sql_dsir_select()}
-), keyed AS (
-  SELECT doc_id, ntok, weight,
-         round(weight - ln(-ln((CAST(({h}) AS DOUBLE) + 0.5)
-                               / {float(1 << 60)!r})), 6) AS key
-  FROM dz
-), ranked AS (
-  SELECT doc_id, ntok, weight, key,
-         row_number() OVER (ORDER BY key DESC, doc_id) AS rank,
-         count(*) OVER () AS n
-  FROM keyed
-)
-SELECT doc_id, ntok, weight, key, CAST(rank AS BIGINT) AS rank,
-       CAST(CASE WHEN rank <= n / {DSIR_KEEP_DEN} THEN 1 ELSE 0 END
-            AS BIGINT) AS sampled
-FROM ranked
-"""
-
-
-# --------------------------------------------------------------------------
-# SemDeDup (`semdedup`, Abbas et al. 2023): semantic deduplication — the
-# embedding-space analogue of MinHash dedup used on web-scale LLM corpora.
-# Cluster embeddings with a coarse quantizer, find within-cluster pairs
-# above a cosine threshold, and keep ONE representative per duplicate
-# group — the paper keeps the member FARTHEST from its centroid (the
-# "keep outliers" rule; lowest centroid-cosine, vec_id tie-break).
-# Composes three audited blocks: the seeded-row IVF quantizer (ann_ivf —
-# assignment is broadcast + rounded-cosine argmax), within-cell pair
-# generation (cell equi-join, never an all-pairs across cells — the
-# paper's own scale story: clusters bound the quadratic term), and the
-# pointer-jumping connected components (dedup_keepers). All cosine gates
-# and the keeper ordering use 6dp-rounded values on both engines.
-# --------------------------------------------------------------------------
-
-SEMDEDUP_N = 200  # embedding subset (within-cell pairs stay bounded)
-SEMDEDUP_CELLS = 8  # seeded-row centroids: vec_id 0..7
-SEMDEDUP_THRESHOLD = 0.3  # within-cluster duplicate-pair cosine gate
-
-
-def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .filter(F.col("vec_id") < SEMDEDUP_N)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    )
-    cents = emb.filter(F.col("vec_id") < SEMDEDUP_CELLS).select(
-        F.col("vec_id").cast("int").alias("cell"), F.col("v").alias("cv")
-    )
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-        )
-
-    def norm(c):
-        return F.sqrt(
-            F.aggregate(
-                F.transform(c, lambda x: x * x), F.lit(0.0), lambda s, x: s + x
-            )
-        )
-
-    sims = emb.crossJoin(F.broadcast(cents)).withColumn(
-        "sim",
-        F.round(
-            dot(F.col("v"), F.col("cv")) / (norm(F.col("v")) * norm(F.col("cv"))),
-            6,
-        ),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cell"))
-    # pinned (round 7): assigned feeds the pair self-join AND the labeled
-    # output — one materialization of the SEMDEDUP_N-row frame
-    assigned = (
-        sims.withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") == 1)
-        .select("vec_id", "v", "cell", F.col("sim").alias("centroid_sim"))
-        .localCheckpoint(eager=True)
-    )
-    a = assigned.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), "cell"
-    )
-    b = assigned.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"),
-        F.col("cell").alias("cell_b"),
-    )
-    pairs = (
-        a.join(b, (a["cell"] == b["cell_b"]) & (F.col("vec_a") < F.col("vec_b")))
-        .withColumn(
-            "cos",
-            F.round(
-                dot(F.col("va"), F.col("vb"))
-                / (norm(F.col("va")) * norm(F.col("vb"))),
-                6,
-            ),
-        )
-        .filter(F.col("cos") >= SEMDEDUP_THRESHOLD)
-        .select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
-    )
-    # Round 7: within-cell pairs over SEMDEDUP_N = 200 vectors are bounded
-    # at any SF — bounded collect + driver-side union-find replaces the
-    # pointer-jumping rounds (identical min-id labels); every cosine stays
-    # in Spark unchanged.
-    labels = _min_label_components(
-        [(r["doc_a"], r["doc_b"]) for r in pairs.collect()]
-    )
-    comps = spark.createDataFrame(
-        list(labels.items()) or [], "doc_id long, cluster_id long"
-    )
-    labeled = assigned.join(
-        F.broadcast(comps), assigned["vec_id"] == comps["doc_id"], "left"
-    ).select(
-        "vec_id",
-        F.col("cell").cast("long").alias("cell"),
-        "centroid_sim",
-        F.coalesce("cluster_id", F.col("vec_id")).cast("long").alias("cluster_id"),
-    )
-    w2 = Window.partitionBy("cluster_id").orderBy(
-        F.asc("centroid_sim"), F.asc("vec_id")
-    )
-    return labeled.withColumn(
-        "keep", (F.row_number().over(w2) == 1).cast("long")
-    )
-
-
-def _sql_semdedup() -> str:
-    cos = (
-        "round(list_dot_product({a}, {b}) / "
-        "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-    )
-    sim_ec = cos.format(a="e.v", b="c.cv")
-    sim_ab = cos.format(a="a.v", b="b.v")
-    return f"""
-WITH RECURSIVE emb AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-  FROM embeddings WHERE vec_id < {SEMDEDUP_N}
-), cents AS (
-  SELECT CAST(vec_id AS INTEGER) AS cell, v AS cv
-  FROM emb WHERE vec_id < {SEMDEDUP_CELLS}
-), ea AS (
-  SELECT vec_id, v, cell, sim AS centroid_sim FROM (
-    SELECT e.vec_id, e.v, c.cell, {sim_ec} AS sim,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {sim_ec} DESC, c.cell ASC) AS crank
-    FROM emb e CROSS JOIN cents c)
-  WHERE crank = 1
-), epairs AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-  FROM ea a JOIN ea b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE {sim_ab} >= {SEMDEDUP_THRESHOLD}
-), edges AS (
-  SELECT vec_a AS src, vec_b AS dst FROM epairs
-  UNION
-  SELECT vec_b AS src, vec_a AS dst FROM epairs
-), reach AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-), labels AS (
-  SELECT src AS vec_id, least(min(dst), src) AS cluster_id
-  FROM reach GROUP BY src
-), labeled AS (
-  SELECT e.vec_id, CAST(e.cell AS BIGINT) AS cell, e.centroid_sim,
-         CAST(coalesce(l.cluster_id, e.vec_id) AS BIGINT) AS cluster_id
-  FROM ea e LEFT JOIN labels l ON e.vec_id = l.vec_id
-)
-SELECT vec_id, cell, centroid_sim, cluster_id,
-       CAST(CASE WHEN row_number() OVER (
-              PARTITION BY cluster_id
-              ORDER BY centroid_sim ASC, vec_id ASC) = 1
-            THEN 1 ELSE 0 END AS BIGINT) AS keep
-FROM labeled
-"""
-
-
-# --------------------------------------------------------------------------
 # Event sessionization: lag-gap rule (window functions, SURVEY §2.7)
 # --------------------------------------------------------------------------
 
@@ -2332,10 +1942,6 @@ GROUP BY 1, 2
 
 
 # --------------------------------------------------------------------------
-# Sort/limit: top-k docs by length (reading-order/top-k family, SURVEY §2.7)
-# --------------------------------------------------------------------------
-
-# --------------------------------------------------------------------------
 # Corpus vocabulary statistics: top-k most frequent word bigrams — the
 # vocab/frequency analysis a training-data pipeline runs before tokenizer
 # or dedup threshold decisions. Explode → hash-agg count (map-side
@@ -2382,20 +1988,6 @@ WITH toks AS (
 SELECT ngram, CAST(count(*) AS BIGINT) AS n
 FROM grams GROUP BY ngram
 ORDER BY n DESC, ngram ASC LIMIT {TOP_NGRAMS_K}
-"""
-
-
-def q_top_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _docs(spark, sf_dir)
-        .orderBy(F.desc("n_chars"), F.asc("doc_id"))
-        .limit(10)
-        .select("doc_id", "n_chars")
-    )
-
-
-SQL_TOP_DOCS = """
-SELECT doc_id, n_chars FROM documents ORDER BY n_chars DESC, doc_id ASC LIMIT 10
 """
 
 
@@ -2705,18 +2297,6 @@ def _q_beam_replace(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.decode import q_beam_replace
 
     return q_beam_replace(spark, sf_dir)
-
-
-def _q_lm_tercile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import q_lm_tercile
-
-    return q_lm_tercile(spark, sf_dir)
-
-
-def _sql_lm_tercile_str() -> str:
-    from .operators.ranking import _sql_lm_tercile
-
-    return _sql_lm_tercile()
 
 
 def _q_lm_heldout(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3222,7 +2802,7 @@ FROM ranked r JOIN (VALUES {qs}) AS q(quantile)
 # relational: explode characters → per-doc histogram (one hash agg) →
 # entropy fold in PINNED character order (sorted list aggregation) so the
 # float sum is bitwise identical cross-engine — the same determinism
-# discipline as lm_score. Flag thresholds sit well clear of the corpus
+# discipline as lm_heldout. Flag thresholds sit well clear of the corpus
 # distribution's interior so both verdicts fire.
 # --------------------------------------------------------------------------
 
@@ -3316,9 +2896,9 @@ FROM per
 # FineWeb recipe shape) — Gopher length/ratio rules → Gopher repetition
 # rules → cross-doc exact-substring dedup gate → deterministic md5
 # sampling — reported as per-source survivor counts at every stage plus
-# the final token yield. Both engines COMPOSE the already-hash-checked
-# building blocks (quality_filter, repetition_stats, dup_spans,
-# sample_hash) rather than restating them, so the funnel hash also proves
+# the final token yield. Both engines COMPOSE the building blocks
+# (the quality_filter, repetition_stats and dup_spans oracles, and the
+# q_sample_hash gate) rather than restating them, so the funnel hash proves
 # the gates agree doc-by-doc when chained, and the query doubles as the
 # "switch your pipeline to this engine" integration demo. Sequential
 # semantics: a doc must survive every earlier gate to count at a later
@@ -3624,7 +3204,7 @@ FROM probes pr LEFT JOIN hit h USING (token)
 
 # --------------------------------------------------------------------------
 # Mixture sampling plan (`mixture_plan`): the bridge from domain-mix
-# ACCOUNTING (q_domain_mix's equalizing weights) to an EXECUTABLE sampling
+# ACCOUNTING (per-source equalizing weights) to an EXECUTABLE sampling
 # plan — per source, the md5-bucket permyriad rate that hits a uniform
 # target mixture under a global token budget, the expected token yield,
 # and (in the same query) the plan APPLIED: documents are filtered by the
@@ -4041,18 +3621,6 @@ def _sql_beam_replace_str() -> str:
     return _sql_beam_replace()
 
 
-def _q_strategy_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.decode import q_strategy_best
-
-    return q_strategy_best(spark, sf_dir)
-
-
-def _sql_strategy_best_str() -> str:
-    from .operators.decode import _sql_strategy_best
-
-    return _sql_strategy_best()
-
-
 def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import q_minhash_lsh
 
@@ -4069,641 +3637,6 @@ def _q_minhash_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "doc_id", "cluster_id", F.col("keep").cast("long").alias("keep")
     )
-
-
-# --------------------------------------------------------------------------
-# Q-digest quantile sketch (`qdigest`, VERDICT r05 #7): the quantile member
-# of the sketch family (joins HLL/Bloom/Count-Min). See operators/qdigest.py
-# for why q-digest is the variant with a CROSS-ENGINE-DETERMINISTIC
-# compaction rule (t-digest/KLL compactions are arrival-order-dependent):
-# the digest is a pure function of the exact value histogram over a bounded
-# universe, and that histogram is one map-side-combinable groupBy whose
-# output is <= 2^D rows REGARDLESS of corpus size. The Spark side collects
-# the <= 2048-row histogram (bounded-and-legitimate, same class as the IVF
-# sample) and runs the shared Python compaction; DuckDB re-derives the
-# SAME compaction via a single-row recursive level-fold over struct lists.
-# Output = every digest node (byte-equal summaries) + each target quantile's
-# sketch estimate, the exact rank-selection answer (the `token_quantiles`
-# cross-check), the observed rank error and the D*sigma ancestor bound.
-# (The fully-general theorem allows one extra crossing-node mass term on
-# point-massed histograms — encoded exactly in test_qdigest_properties;
-# on these corpora the plain D*sigma bound holds and `within` is 1,
-# hash-checked on both engines either way.)
-# --------------------------------------------------------------------------
-
-
-def q_qdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.qdigest import (
-        QDIGEST_D,
-        QDIGEST_K,
-        QDIGEST_QUANTILES,
-        QDIGEST_U,
-        exact_quantile,
-        qdigest_compact,
-        qdigest_rank_query,
-        rank_of,
-    )
-
-    docs = _docs(spark, sf_dir)
-    # value = per-doc char length (300-500+ distinct values on the corpora,
-    # so the family merge fires across MULTIPLE levels — token counts were
-    # too concentrated to compact; token-count quantiles stay exactly
-    # covered by `token_quantiles`)
-    v = F.least(F.length(F.col("text")), F.lit(QDIGEST_U - 1))
-    # bounded collect: the histogram has <= 2^D = 2048 rows at ANY corpus
-    # size (the sketch's fixed-size summary) — the one aggregation pass is
-    # map-side combinable
-    hist_rows = (
-        docs.select(v.alias("v")).groupBy("v").agg(F.count("*").alias("c")).collect()
-    )
-    hist = {int(r["v"]): int(r["c"]) for r in hist_rows}
-    n = sum(hist.values())
-    sigma = n // QDIGEST_K
-    digest = qdigest_compact(hist, QDIGEST_D, sigma)
-    rows = []
-    for lv, ix, c in digest:
-        lo = ix << lv
-        rows.append(
-            ("node", lv, lo, lo + (1 << lv) - 1, c, None, None, None, None, None, None)
-        )
-    bound = QDIGEST_D * sigma
-    vmax = max(hist) if hist else 0
-    for label, num, den in QDIGEST_QUANTILES:
-        r = (num * n + den - 1) // den  # integer rank — no float quantile math
-        # clip to the observed max: a crossing node's upper bound can be a
-        # universe sentinel (the root reaches 2^D - 1), not a datum
-        est = min(qdigest_rank_query(digest, r), vmax)
-        ex = exact_quantile(hist, r)
-        err = abs(rank_of(hist, est) - r)
-        rows.append(
-            (
-                "quantile", None, None, None, None,
-                label, est, ex, err, bound, 1 if err <= bound else 0,
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "kind string, level bigint, lo bigint, hi bigint, cnt bigint, "
-        "p string, est bigint, exact bigint, rank_err bigint, bound bigint, "
-        "within bigint",
-    )
-
-
-def _sql_qdigest() -> str:
-    from .operators.qdigest import QDIGEST_D, QDIGEST_K, QDIGEST_QUANTILES, QDIGEST_U
-
-    D, K, U = QDIGEST_D, QDIGEST_K, QDIGEST_U
-    qrows = ", ".join(f"('{lb}', {nu}, {de})" for lb, nu, de in QDIGEST_QUANTILES)
-    famsum = (
-        "list_sum(list_transform(list_filter(pend, x -> x.idx // 2 = p),"
-        " x -> x.cnt))"
-    )
-    return f"""
-WITH RECURSIVE lens AS (
-  SELECT least(length(text), {U - 1}) AS v
-  FROM documents
-), leaves AS (
-  SELECT CAST(v AS BIGINT) AS idx, CAST(count(*) AS BIGINT) AS cnt
-  FROM lens GROUP BY v
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(count(*) // {K} AS BIGINT) AS sigma
-  FROM lens
-), step(lvl, pend, kept, sigma) AS (
-  SELECT 0,
-         (SELECT list(struct_pack(idx := idx, cnt := cnt) ORDER BY idx)
-          FROM leaves),
-         CAST([] AS STRUCT(lvl INTEGER, idx BIGINT, cnt BIGINT)[]),
-         (SELECT sigma FROM tot)
-  UNION ALL
-  SELECT lvl + 1,
-         list_transform(
-           list_filter(
-             list_sort(list_distinct(list_transform(pend, x -> x.idx // 2))),
-             p -> {famsum} <= sigma),
-           p -> struct_pack(idx := p, cnt := {famsum})),
-         kept || flatten(list_transform(
-           list_filter(
-             list_sort(list_distinct(list_transform(pend, x -> x.idx // 2))),
-             p -> {famsum} > sigma),
-           p -> list_transform(
-                  list_sort(list_filter(pend, x -> x.idx // 2 = p)),
-                  x -> struct_pack(lvl := lvl, idx := x.idx, cnt := x.cnt)))),
-         sigma
-  FROM step WHERE lvl < {D}
-), fin AS (
-  SELECT pend, kept FROM step WHERE lvl = {D}
-), nodes AS (
-  SELECT CAST({D} AS BIGINT) AS level, u.idx AS idx, u.cnt AS cnt
-  FROM (SELECT unnest(pend) AS u FROM fin)
-  UNION ALL
-  SELECT CAST(u.lvl AS BIGINT), u.idx, u.cnt
-  FROM (SELECT unnest(kept) AS u FROM fin)
-), spans AS (
-  SELECT level, idx * (CAST(1 AS BIGINT) << level) AS lo,
-         idx * (CAST(1 AS BIGINT) << level)
-           + (CAST(1 AS BIGINT) << level) - 1 AS hi,
-         cnt
-  FROM nodes
-), cum AS (
-  SELECT level, lo, hi, cnt,
-         sum(cnt) OVER (ORDER BY hi, level ROWS UNBOUNDED PRECEDING) AS c
-  FROM spans
-), lcum AS (
-  SELECT idx, sum(cnt) OVER (ORDER BY idx ROWS UNBOUNDED PRECEDING) AS c
-  FROM leaves
-), qs(p, num, den) AS (VALUES {qrows}),
-quant AS (
-  SELECT q.p, (q.num * t.n + q.den - 1) // q.den AS r,
-         CAST({D} AS BIGINT) * t.sigma AS bound
-  FROM qs q, tot t
-), qest AS (
-  SELECT p, r, bound,
-         least((SELECT min(hi) FROM cum WHERE cum.c >= quant.r),
-               (SELECT max(idx) FROM leaves)) AS est,
-         (SELECT min(idx) FROM lcum WHERE lcum.c >= quant.r) AS exact
-  FROM quant
-), qerr AS (
-  SELECT p, est, exact, bound,
-         abs((SELECT coalesce(sum(cnt), 0) FROM leaves
-              WHERE leaves.idx <= qest.est) - r) AS rank_err
-  FROM qest
-)
-SELECT 'node' AS kind, level, lo, hi, cnt,
-       CAST(NULL AS VARCHAR) AS p, CAST(NULL AS BIGINT) AS est,
-       CAST(NULL AS BIGINT) AS exact, CAST(NULL AS BIGINT) AS rank_err,
-       CAST(NULL AS BIGINT) AS bound, CAST(NULL AS BIGINT) AS within
-FROM spans
-UNION ALL
-SELECT 'quantile', NULL, NULL, NULL, NULL, p, est, CAST(exact AS BIGINT),
-       CAST(rank_err AS BIGINT), bound,
-       CAST(CASE WHEN rank_err <= bound THEN 1 ELSE 0 END AS BIGINT)
-FROM qerr
-"""
-
-
-# --------------------------------------------------------------------------
-# Sequence packing (`seq_pack`): the GPT-style concat-and-chunk batching
-# operator — documents concatenate in pinned doc_id order into one token
-# stream that is cut into fixed SEQ_PACK_C-token training windows; each
-# document reports the chunk span it lands in (boundary-crossing documents
-# are the ones a packing-aware loader must mask across). The global
-# exclusive prefix sum uses `exact_global_cumsum` (range-partitioned, NO
-# single-partition window — plan-gated), so the construction survives a
-# 10^9-document corpus; the oracle is a plain running-sum window (small
-# data has no scale constraint). Everything else is integer arithmetic:
-# start = floor(cum/C), end = floor((cum+ntok-1)/C).
-# --------------------------------------------------------------------------
-
-SEQ_PACK_C = 512  # tokens per packed training sequence
-
-
-def q_seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import exact_global_cumsum
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.size(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0)
-        )
-        .cast("long")
-        .alias("ntok"),
-    )
-    cum = exact_global_cumsum(docs, "doc_id", "ntok")
-    # `div` = exact integer division (never a double round-trip)
-    start = F.expr(f"cum_before div {SEQ_PACK_C}")
-    end = F.expr(f"(cum_before + ntok - 1) div {SEQ_PACK_C}")
-    return cum.select(
-        "doc_id",
-        "ntok",
-        F.col("cum_before").cast("long").alias("cum_before"),
-        start.cast("long").alias("start_chunk"),
-        end.cast("long").alias("end_chunk"),
-        (end - start + 1).cast("long").alias("n_chunks_spanned"),
-        "global_total",
-    )
-
-
-def _sql_seq_pack() -> str:
-    return f"""
-WITH base AS (
-  SELECT doc_id,
-         CAST(len(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
-              AS BIGINT) AS ntok
-  FROM documents
-), cum AS (
-  SELECT doc_id, ntok,
-         sum(ntok) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - ntok
-           AS cum_before,
-         sum(ntok) OVER () AS global_total
-  FROM base
-)
-SELECT doc_id, ntok, CAST(cum_before AS BIGINT) AS cum_before,
-       CAST(cum_before // {SEQ_PACK_C} AS BIGINT) AS start_chunk,
-       CAST((cum_before + ntok - 1) // {SEQ_PACK_C} AS BIGINT) AS end_chunk,
-       CAST((cum_before + ntok - 1) // {SEQ_PACK_C}
-            - cum_before // {SEQ_PACK_C} + 1 AS BIGINT) AS n_chunks_spanned,
-       CAST(global_total AS BIGINT) AS global_total
-FROM cum
-"""
-
-
-# --------------------------------------------------------------------------
-# DSIR importance resampling (`dsir_select`): Data Selection via Importance
-# Resampling (Xie et al., NeurIPS 2023) — score every document by the
-# log-likelihood ratio of a TARGET distribution (here: the clinical-snippet
-# corpus, the domain we want more of) vs the SOURCE distribution (the raw
-# corpus) over HASHED token-feature buckets, then keep the top quarter by
-# weight (the paper's deterministic top-k variant; the sampled variant
-# adds Gumbel noise). Shapes at scale: the two feature distributions are
-# FIXED-size summaries (DSIR_BUCKETS counters — the sketch property; the
-# source summary is one map-side-combinable agg, collected bounded and
-# inlined as plan literals like the BPE merge table), the per-doc weight is
-# ONE JVM fold over the materialized token array (position-pinned order,
-# no join, no Python), and the top-k cut is exact_global_rank — no
-# single-partition window. DuckDB independently recomputes BOTH
-# distributions, every ln, the pinned-order fold and the ranked cut, so
-# the hash cross-checks the Python-side ln literals against DuckDB's libm
-# as well as the count parity. Weight = round(mean log-ratio, 6) — rounded
-# once, on the raw double (the char_entropy lesson).
-# --------------------------------------------------------------------------
-
-DSIR_BUCKETS = 256  # hashed feature buckets (the paper's hashed n-grams)
-DSIR_KEEP_DEN = 4  # keep the top 1/4 of documents by importance weight
-
-
-def _dsir_bucket_py(tok: str) -> int:
-    import hashlib
-
-    return int(hashlib.md5(f"{tok}|dsir".encode()).hexdigest()[:15], 16) % (
-        DSIR_BUCKETS
-    )
-
-
-def _dsir_target_counts():
-    """Bucket counts of the literal clinical-snippet target corpus —
-    deterministic constants (the DuckDB oracle recomputes them from the
-    same snippet literals, so even this counting is cross-checked)."""
-    import re as _re
-
-    counts: Dict[int, int] = {}
-    total = 0
-    for s in CLINICAL_SNIPPETS:
-        for tok in _re.findall(_TOKEN_PATTERN, s.lower()):
-            b = _dsir_bucket_py(tok)
-            counts[b] = counts.get(b, 0) + 1
-            total += 1
-    return counts, total
-
-
-def _dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, ntok, weight) — the DSIR importance weights; shared by the
-    deterministic top-k cut (`dsir_select`) and the Gumbel-sampled variant
-    (`dsir_sampled`)."""
-    import math
-
-    from .functions.hashing import md5_prefix60_spark
-
-    B = DSIR_BUCKETS
-    tcounts, T = _dsir_target_counts()
-    docs = _docs(spark, sf_dir)
-    # ground-truth split: EVEN docs get the clinical prelude (in-target
-    # material), ODD docs are raw word soup — a correct importance scorer
-    # must rank the prelude docs on top (pytest-gated recovery check)
-    text_col = F.when(F.col("doc_id") % 2 == 0, _clinical_col()).otherwise(
-        F.col("text")
-    )
-    toks_expr = F.regexp_extract_all(F.lower(text_col), F.lit(_TOKEN_PATTERN), 0)
-    # drop zero-token docs: the DuckDB side's per-doc GROUP BY over the
-    # exploded tokens has no row for them, and the Spark weight would be
-    # 0/0 = NULL — parity requires absence on both sides (review r6)
-    staged = token_barrier(docs, toks_expr, keep_cols=("doc_id",)).filter(
-        F.size("t") > 0
-    )
-
-    def bucket(tok_col):
-        return F.pmod(
-            md5_prefix60_spark(F.concat(tok_col, F.lit("|dsir"))), F.lit(B)
-        )
-
-    # source distribution: one agg to <= B rows (bounded collect, inlined
-    # back as plan literals — the BPE-merge-table pattern)
-    src_rows = (
-        staged.select(F.explode("t").alias("tok"))
-        .select(bucket(F.col("tok")).alias("b"))
-        .groupBy("b")
-        .agg(F.count("*").alias("c"))
-        .collect()
-    )
-    scounts = {int(r["b"]): int(r["c"]) for r in src_rows}
-    S = sum(scounts.values())
-    lr = {
-        b: math.log((tcounts.get(b, 0) + 1) / (T + B))
-        - math.log((scounts.get(b, 0) + 1) / (S + B))
-        for b in range(B)
-    }
-    lr_map = F.create_map(
-        *[x for b in range(B) for x in (F.lit(b), F.lit(lr[b]))]
-    )
-    return staged.select(
-        "doc_id",
-        F.size("t").cast("long").alias("ntok"),
-        F.round(
-            F.aggregate(
-                F.col("t"),
-                F.lit(0.0),
-                lambda acc, tok: acc + F.element_at(lr_map, bucket(tok)),
-            )
-            / F.size("t"),
-            6,
-        ).alias("weight"),
-    )
-
-
-def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import exact_global_rank
-
-    weighted = _dsir_weights(spark, sf_dir).withColumn("nw", -F.col("weight"))
-    ranked = exact_global_rank(weighted, "nw", tie_cols=("doc_id",))
-    return ranked.select(
-        "doc_id",
-        "ntok",
-        "weight",
-        F.col("global_rank").alias("rank"),
-        (F.col("global_rank") <= F.col("global_count") / DSIR_KEEP_DEN)
-        .cast("long")
-        .alias("selected"),
-    )
-
-
-def _sql_dsir_select() -> str:
-    from .functions.hashing import md5_prefix60_sql
-
-    B = DSIR_BUCKETS
-    snip_rows = ",\n    ".join(f"({_sql_quote(s)})" for s in CLINICAL_SNIPPETS)
-    bucket = lambda e: f"({md5_prefix60_sql(f'{e} || {chr(39)}|dsir{chr(39)}')}) % {B}"
-    return f"""
-WITH snips(s) AS (
-  VALUES {snip_rows}
-), tgt_toks AS (
-  SELECT unnest(regexp_extract_all(lower(s), '{_TOKEN_PATTERN}')) AS tok
-  FROM snips
-), tgt AS (
-  SELECT {bucket('tok')} AS b, CAST(count(*) AS BIGINT) AS t_cnt
-  FROM tgt_toks GROUP BY 1
-), tstat AS (
-  SELECT CAST(count(*) AS BIGINT) AS T FROM tgt_toks
-), toks AS (
-  SELECT doc_id,
-         regexp_extract_all(lower(CASE WHEN doc_id % 2 = 0
-                                       THEN {_clinical_sql()}
-                                       ELSE text END),
-                            '{_TOKEN_PATTERN}') AS ts
-  FROM documents
-), tok_rows AS (
-  SELECT doc_id, i AS pos, ts[i] AS tok,
-         {bucket('ts[i]')} AS b
-  FROM (SELECT doc_id, ts, unnest(range(1, len(ts)+1)) AS i FROM toks)
-), src AS (
-  SELECT b, CAST(count(*) AS BIGINT) AS s_cnt FROM tok_rows GROUP BY b
-), sstat AS (
-  SELECT CAST(sum(s_cnt) AS BIGINT) AS S FROM src
-), lr AS (
-  SELECT s.b,
-         ln((coalesce(g.t_cnt, 0) + 1) / CAST(t.T + {B} AS DOUBLE))
-         - ln((s.s_cnt + 1) / CAST(st.S + {B} AS DOUBLE)) AS lrv
-  FROM src s LEFT JOIN tgt g USING (b), tstat t, sstat st
-), doc AS (
-  SELECT r.doc_id, CAST(count(*) AS BIGINT) AS ntok,
-         round(list_sum(list(l.lrv ORDER BY r.pos)) / count(*), 6) AS weight
-  FROM tok_rows r JOIN lr l USING (b)
-  GROUP BY r.doc_id
-), ranked AS (
-  SELECT doc_id, ntok, weight,
-         row_number() OVER (ORDER BY weight DESC, doc_id) AS rank,
-         count(*) OVER () AS n
-  FROM doc
-)
-SELECT doc_id, ntok, weight, CAST(rank AS BIGINT) AS rank,
-       CAST(CASE WHEN rank <= n / {DSIR_KEEP_DEN} THEN 1 ELSE 0 END
-            AS BIGINT) AS selected
-FROM ranked
-"""
-
-
-# --------------------------------------------------------------------------
-# URL/domain normalization + per-domain rollups (`url_domains`, VERDICT r05
-# #8): the per-document provenance-URL hygiene pass every web-scale
-# curation pipeline runs before domain mixing (the CCNet/RefinedWeb
-# url-dedup + domain-quota step). The testdata has no URL column, so one is
-# synthesized DETERMINISTICALLY from (doc_id, source) — eight messiness
-# variants keyed by doc_id % 8 (mixed case, www prefix, default and
-# non-default ports, utm_*/fbclid tracking params, fragments, trailing-dot
-# hosts, a cdn subdomain) over per-source registrable domains spanning
-# single- and multi-label public suffixes (com ... co.uk, com.au, co.jp).
-# Normalization (all relational, both engines, shared constants):
-# lowercase scheme+host, strip trailing host dot, strip the www prefix,
-# drop default ports (keep :8080), drop fragments, drop tracking params
-# (keep the rest of the query), then extract the registrable domain via a
-# longest-suffix-first match and broadcast-join per-domain doc/token
-# rollups back onto each row. Scale shape: pure string expressions in one
-# projection + one map-side-combinable agg broadcast back — no UDF, no
-# extra shuffle of the corpus.
-# --------------------------------------------------------------------------
-
-# 8 registrable-domain suffixes (public-suffix-list slice: multi-label
-# entries first exercise the longest-match rule), keyed by source % 8
-URL_SUFFIXES = ["co.uk", "org.uk", "com.au", "co.jp", "com", "org", "net", "io"]
-
-# tracking params stripped by normalization
-URL_TRACKING_RE = "^(utm_[a-z]+|fbclid)="
-
-# messy-URL variants (doc_id % 8): token streams over a tiny vocabulary —
-# ('lit', s) literal, ('dom',) lowercase registrable domain, ('udom',)
-# uppercased domain, ('path',) canonical path, ('docid',) the doc id
-URL_VARIANTS = [
-    [("lit", "https://www."), ("dom",), ("path",)],
-    [("lit", "HTTPS://WWW."), ("udom",), ("path",)],
-    [("lit", "https://"), ("dom",), ("lit", ":8080"), ("path",)],
-    [
-        ("lit", "https://"), ("dom",), ("path",),
-        ("lit", "?utm_source=feed&id="), ("docid",), ("lit", "&utm_campaign=x"),
-    ],
-    [("lit", "https://cdn."), ("dom",), ("path",), ("lit", "#frag-2")],
-    [("lit", "http://"), ("dom",), ("lit", ":80"), ("path",)],
-    [("lit", "https://"), ("dom",), ("lit", "."), ("path",)],
-    [
-        ("lit", "https://www."), ("dom",), ("lit", ":443"), ("path",),
-        ("lit", "?fbclid=abc&page=2#x"),
-    ],
-]
-
-
-def q_url_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("int")
-    suffix = F.element_at(
-        F.array(*[F.lit(s) for s in URL_SUFFIXES]),
-        (src_num % len(URL_SUFFIXES) + 1).cast("int"),
-    )
-    dom = F.concat(F.lit("site"), src_num.cast("string"), F.lit("."), suffix)
-    path = F.concat(F.lit("/doc/"), F.col("doc_id").cast("string"))
-
-    def tok_col(tok):
-        kind = tok[0]
-        if kind == "lit":
-            return F.lit(tok[1])
-        if kind == "dom":
-            return dom
-        if kind == "udom":
-            return F.upper(dom)
-        if kind == "path":
-            return path
-        return F.col("doc_id").cast("string")  # docid
-
-    url = F.element_at(
-        F.array(*[F.concat(*[tok_col(t) for t in v]) for v in URL_VARIANTS]),
-        (F.col("doc_id") % len(URL_VARIANTS) + 1).cast("int"),
-    )
-    toks = F.size(
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0)
-    )
-    base = docs.select(
-        "doc_id", url.alias("url"), toks.cast("long").alias("ntok")
-    ).repartition(spark.sparkContext.defaultParallelism)
-
-    scheme = F.lower(F.regexp_extract("url", r"^([A-Za-z]+)://", 1))
-    hostport = F.regexp_extract("url", r"^[A-Za-z]+://([^/?#]+)", 1)
-    port = F.regexp_extract(hostport, r":([0-9]+)$", 1)
-    host = F.regexp_replace(
-        F.regexp_replace(
-            F.lower(F.regexp_replace(hostport, r":[0-9]+$", "")), r"\.$", ""
-        ),
-        r"^www\.",
-        "",
-    )
-    upath = F.regexp_extract("url", r"^[A-Za-z]+://[^/?#]+(/[^?#]*)", 1)
-    query = F.regexp_extract("url", r"\?([^#]*)", 1)
-    fquery = F.array_join(
-        F.filter(F.split(query, "&"), lambda x: ~x.rlike(URL_TRACKING_RE)), "&"
-    )
-    keep_port = (port != "") & ~(
-        ((scheme == "http") & (port == "80"))
-        | ((scheme == "https") & (port == "443"))
-    )
-    norm = F.concat(
-        scheme,
-        F.lit("://"),
-        host,
-        F.when(keep_port, F.concat(F.lit(":"), port)).otherwise(F.lit("")),
-        upath,
-        F.when(fquery != "", F.concat(F.lit("?"), fquery)).otherwise(F.lit("")),
-    )
-    # registrable domain: longest suffix first (multi-label before generic)
-    ordered = sorted(URL_SUFFIXES, key=lambda s: (-s.count("."), s))
-    domain = None
-    for s in ordered:
-        pat = "([^.]+\\." + s.replace(".", "\\.") + ")$"
-        # extract from the MATERIALIZED host column — embedding the raw
-        # normalization chain here would re-derive it once per suffix
-        # branch (8x per row; the CollapseProject hazard, review r6)
-        hit = F.regexp_extract(F.col("host"), pat, 1)
-        cond = F.col("host").endswith("." + s)
-        domain = (
-            F.when(cond, hit) if domain is None else domain.when(cond, hit)
-        )
-    parsed = base.select(
-        "doc_id",
-        "url",
-        "ntok",
-        host.alias("host"),
-        norm.alias("norm_url"),
-    ).withColumn("domain", domain.otherwise(F.col("host")))
-    rollup = parsed.groupBy("domain").agg(
-        F.count("*").cast("long").alias("domain_docs"),
-        F.sum("ntok").cast("long").alias("domain_tokens"),
-    )
-    return parsed.join(F.broadcast(rollup), "domain").select(
-        "doc_id", "url", "norm_url", "host", "domain",
-        "domain_docs", "domain_tokens",
-    )
-
-
-def _sql_url_domains() -> str:
-    n_suf = len(URL_SUFFIXES)
-    suffix_list = "[" + ", ".join(f"'{s}'" for s in URL_SUFFIXES) + "]"
-    dom = (
-        f"('site' || CAST(CAST(substr(source, 4) AS INT) AS VARCHAR) || '.'"
-        f" || {suffix_list}[(CAST(substr(source, 4) AS INT) % {n_suf}) + 1])"
-    )
-    path = "('/doc/' || CAST(doc_id AS VARCHAR))"
-
-    def tok_sql(tok):
-        kind = tok[0]
-        if kind == "lit":
-            return _sql_quote(tok[1])
-        if kind == "dom":
-            return dom
-        if kind == "udom":
-            return f"upper({dom})"
-        if kind == "path":
-            return path
-        return "CAST(doc_id AS VARCHAR)"
-
-    whens = "".join(
-        f" WHEN {i} THEN " + " || ".join(tok_sql(t) for t in v)
-        for i, v in enumerate(URL_VARIANTS)
-    )
-    ordered = sorted(URL_SUFFIXES, key=lambda s: (-s.count("."), s))
-    dom_whens = "".join(
-        " WHEN host LIKE '%." + s + "' THEN "
-        "regexp_extract(host, '([^.]+\\." + s.replace(".", "\\.") + ")$', 1)"
-        for s in ordered
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id,
-         CASE (doc_id % {len(URL_VARIANTS)}){whens} END AS url,
-         CAST(len(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
-              AS BIGINT) AS ntok
-  FROM documents
-), parts AS (
-  SELECT doc_id, url, ntok,
-         lower(regexp_extract(url, '^([A-Za-z]+)://', 1)) AS scheme,
-         regexp_extract(url, '^[A-Za-z]+://([^/?#]+)', 1) AS hostport,
-         regexp_extract(url, '^[A-Za-z]+://[^/?#]+(/[^?#]*)', 1) AS upath,
-         regexp_extract(url, '\\?([^#]*)', 1) AS query
-  FROM base
-), hostq AS (
-  SELECT doc_id, url, ntok, scheme, upath,
-         regexp_extract(hostport, ':([0-9]+)$', 1) AS port,
-         regexp_replace(regexp_replace(
-           lower(regexp_replace(hostport, ':[0-9]+$', '')), '\\.$', ''),
-           '^www\\.', '') AS host,
-         array_to_string(
-           list_filter(string_split(query, '&'),
-                       x -> NOT regexp_matches(x, '{URL_TRACKING_RE}')),
-           '&') AS fquery
-  FROM parts
-), parsed AS (
-  SELECT doc_id, url, ntok, host,
-         scheme || '://' || host ||
-         CASE WHEN port <> '' AND NOT ((scheme = 'http' AND port = '80')
-                   OR (scheme = 'https' AND port = '443'))
-              THEN ':' || port ELSE '' END ||
-         upath ||
-         CASE WHEN fquery <> '' THEN '?' || fquery ELSE '' END AS norm_url,
-         CASE{dom_whens} ELSE host END AS domain
-  FROM hostq
-), rollup AS (
-  SELECT domain, CAST(count(*) AS BIGINT) AS domain_docs,
-         CAST(sum(ntok) AS BIGINT) AS domain_tokens
-  FROM parsed GROUP BY domain
-)
-SELECT p.doc_id, p.url, p.norm_url, p.host, p.domain,
-       r.domain_docs, r.domain_tokens
-FROM parsed p JOIN rollup r USING (domain)
-"""
 
 
 # --------------------------------------------------------------------------
@@ -5169,264 +4102,6 @@ FROM finalw GROUP BY doc_id
 
 
 # --------------------------------------------------------------------------
-# Web-curation funnel (`web_funnel`): the round-6 operators composed into
-# one per-domain survivor cascade — registrable domain (url_domains) →
-# per-domain quota cap (domain_quota) → DSIR top-quarter importance cut
-# (dsir_select) → Gumbel sample (gumbel_sample) — with doc and token
-# yields at each gate. The same composition-oracle discipline as
-# `curation_funnel`: both engines compose the ALREADY-hash-checked
-# building blocks (nested WITH over the generated SQL constants), so the
-# funnel hash proves the chained gates agree document-by-document, not
-# just in aggregate. Token yield uses gumbel_sample's raw-corpus ntok.
-# --------------------------------------------------------------------------
-
-
-def q_web_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round 7 (guide §2.4; VERDICT r06 "What's wrong #4"): quota
-    # membership is computed INLINE — `in_quota = row_number() <= Q` over
-    # the one url_domains frame — instead of left-joining against a quota
-    # subset that re-derived the whole url chain. Every u row gets a rank,
-    # rank <= Q is exactly "doc present in q_domain_quota's output", so the
-    # old `coalesce(in_quota, 0)` trichotomy collapses to the flag itself:
-    # rows identical (oracle hash replayed green), one url chain + one
-    # self-join fewer in the plan.
-    ord_col = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("quota"), F.col("doc_id")), 10_000
-    )
-    w = Window.partitionBy("domain").orderBy("ord", "doc_id")
-    u = (
-        q_url_domains(spark, sf_dir)
-        .select("doc_id", "domain", ord_col.alias("ord"))
-        .withColumn(
-            "in_quota",
-            (F.row_number().over(w) <= DOMAIN_QUOTA_Q).cast("int"),
-        )
-    )
-    d = q_dsir_select(spark, sf_dir).select("doc_id", "selected")
-    g = q_gumbel_sample(spark, sf_dir).select("doc_id", "ntok", "sampled")
-    joined = (
-        u.join(d, "doc_id")
-        .join(g, "doc_id")
-        .select(
-            "domain",
-            "ntok",
-            F.col("in_quota").alias("s1"),
-            (F.col("in_quota") * F.col("selected")).alias("s2"),
-            (
-                F.col("in_quota")
-                * F.col("selected")
-                * F.col("sampled")
-            ).alias("s3"),
-        )
-    )
-    return joined.groupBy("domain").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("s1").cast("long").alias("pass_quota"),
-        F.sum("s2").cast("long").alias("pass_dsir"),
-        F.sum("s3").cast("long").alias("sampled"),
-        F.sum(F.col("ntok") * F.col("s3")).cast("long").alias("kept_tokens"),
-    )
-
-
-def _sql_web_funnel() -> str:
-    return f"""
-WITH u AS ({_sql_url_domains()}
-), q AS ({_sql_domain_quota()}
-), d AS ({_sql_dsir_select()}
-), g AS ({_sql_gumbel_sample()}
-), j AS (
-  SELECT u.domain, g.ntok,
-         CASE WHEN q.doc_id IS NULL THEN 0 ELSE 1 END AS s1,
-         CASE WHEN q.doc_id IS NULL THEN 0 ELSE 1 END * d.selected AS s2,
-         CASE WHEN q.doc_id IS NULL THEN 0 ELSE 1 END * d.selected
-           * g.sampled AS s3
-  FROM u
-  LEFT JOIN q ON u.doc_id = q.doc_id
-  JOIN d ON u.doc_id = d.doc_id
-  JOIN g ON u.doc_id = g.doc_id
-)
-SELECT domain, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(s1) AS BIGINT) AS pass_quota,
-       CAST(sum(s2) AS BIGINT) AS pass_dsir,
-       CAST(sum(s3) AS BIGINT) AS sampled,
-       CAST(sum(ntok * s3) AS BIGINT) AS kept_tokens
-FROM j GROUP BY domain
-"""
-
-
-# --------------------------------------------------------------------------
-# N-gram novelty profile (`novelty`): for each document, the fraction of
-# its distinct k-token windows never seen in any EARLIER document (doc_id
-# order = ingestion order) — the directional counterpart of `dup_spans`
-# and the memorization-risk / marginal-information signal used when
-# deciding whether newly crawled data adds anything (a Lee-et-al-style
-# dedup curve per document). Relational end-to-end: the same token-linear
-# window hashes, one groupBy for the global first-seeing doc per hash, one
-# equi-join back. A doc's own windows never count against it (first = its
-# own doc_id when it introduces the window).
-# --------------------------------------------------------------------------
-
-
-def q_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select("doc_id", _clinical_col().alias("ctext"))
-    k = DUP_SPAN_K
-    toked = token_barrier(
-        docs,
-        F.regexp_extract_all(F.lower(F.col("ctext")), F.lit(_TOKEN_PATTERN), 0),
-        keep_cols=("doc_id",),
-    )
-    windows = toked.select(
-        "doc_id", F.explode(_window_hashes(F.col("t"), k)).alias("whash")
-    ).distinct()
-    first = windows.groupBy("whash").agg(F.min("doc_id").alias("first_doc"))
-    per = (
-        windows.join(first, "whash")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_windows"),
-            F.sum((F.col("first_doc") < F.col("doc_id")).cast("long")).alias(
-                "n_seen_before"
-            ),
-        )
-    )
-    nov = F.round(
-        1.0
-        - F.col("n_seen_before") / F.greatest(F.col("n_windows"), F.lit(1)),
-        6,
-    )
-    return (
-        docs.select("doc_id")
-        .join(per, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_windows", F.lit(0)).alias("n_windows"),
-            F.coalesce("n_seen_before", F.lit(0)).alias("n_seen_before"),
-            F.coalesce(nov, F.lit(1.0)).alias("novelty"),
-        )
-    )
-
-
-def _sql_novelty() -> str:
-    from .functions.hashing import md5_prefix60_sql
-
-    k = DUP_SPAN_K
-    whash = md5_prefix60_sql(f"array_to_string(t[i + 1 : i + {k}], ' ')")
-    return f"""
-WITH toked AS (
-  SELECT doc_id,
-         regexp_extract_all(lower({_clinical_sql()}), '{_TOKEN_PATTERN}') AS t
-  FROM documents
-), windows AS (
-  SELECT DISTINCT doc_id, {whash} AS whash
-  FROM (SELECT doc_id, t, unnest(range(0, greatest(len(t) - {k} + 1, 0)))
-               AS i
-        FROM toked)
-), first AS (
-  SELECT whash, min(doc_id) AS first_doc FROM windows GROUP BY whash
-), per AS (
-  SELECT w.doc_id,
-         CAST(count(*) AS BIGINT) AS n_windows,
-         CAST(sum(CASE WHEN f.first_doc < w.doc_id THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_seen_before
-  FROM windows w JOIN first f USING (whash)
-  GROUP BY w.doc_id
-)
-SELECT d.doc_id,
-       coalesce(p.n_windows, 0) AS n_windows,
-       coalesce(p.n_seen_before, 0) AS n_seen_before,
-       coalesce(round(CAST(1.0 AS DOUBLE) - p.n_seen_before /
-                      greatest(p.n_windows, 1), 6),
-                CAST(1.0 AS DOUBLE)) AS novelty
-FROM documents d LEFT JOIN per p USING (doc_id)
-"""
-
-
-# --------------------------------------------------------------------------
-# Gumbel-top-k weighted sampling (`gumbel_sample`): sampling WITHOUT
-# replacement with inclusion probability proportional to document weight
-# — the Gumbel-max trick (Vieira 2014; the sampled variant of DSIR and
-# the standard distributed weighted sampler): key_d = ln(w_d) + G_d with
-# G_d = -ln(-ln(u_d)), u_d a seed-free md5 uniform, and the sample = the
-# top-K keys. Weight here = token count (token-budget-proportional doc
-# sampling — the multi-epoch mixture primitive). Everything is one
-# projection + exact_global_rank: no RNG state, no driver loop,
-# cluster-size invariant, reproducible on both engines (u is the SAME
-# integer-derived double; keys rounded once at 6dp before ranking with a
-# doc_id tie-break — the strategy_best determinism pin).
-# --------------------------------------------------------------------------
-
-GUMBEL_KEEP_DEN = 10  # sample 1/10 of documents
-
-
-def q_gumbel_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.hashing import md5_prefix60_spark
-    from .operators.ranking import exact_global_rank
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.size(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_PATTERN), 0)
-        )
-        .cast("long")
-        .alias("ntok"),
-    )
-    h = md5_prefix60_spark(
-        F.concat_ws("|", F.lit("gumbel"), F.col("doc_id").cast("string"))
-    )
-    # u in (0,1) strictly: (h + 0.5) / 2^60 — identical long->double cast
-    # then identical arithmetic on both engines, so u is bitwise-shared
-    u = (h.cast("double") + F.lit(0.5)) / F.lit(float(1 << 60))
-    # greatest(ntok, 1): a zero-token doc would be ln(0) — an ERROR in
-    # DuckDB but a silent NULL in Spark (review r6); weight floor = ln(1)
-    key = F.round(
-        F.log(F.greatest(F.col("ntok"), F.lit(1)).cast("double"))
-        - F.log(-F.log(u)),
-        6,
-    )
-    weighted = docs.select(
-        "doc_id", "ntok", key.alias("key")
-    ).withColumn("nk", -F.col("key"))
-    ranked = exact_global_rank(weighted, "nk", tie_cols=("doc_id",))
-    return ranked.select(
-        "doc_id",
-        "ntok",
-        "key",
-        F.col("global_rank").alias("rank"),
-        (F.col("global_rank") <= F.col("global_count") / GUMBEL_KEEP_DEN)
-        .cast("long")
-        .alias("sampled"),
-    )
-
-
-def _sql_gumbel_sample() -> str:
-    from .functions.hashing import md5_prefix60_sql
-
-    h = md5_prefix60_sql("'gumbel' || '|' || CAST(doc_id AS VARCHAR)")
-    return f"""
-WITH base AS (
-  SELECT doc_id,
-         CAST(len(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}'))
-              AS BIGINT) AS ntok,
-         round(ln(CAST(greatest(
-                   len(regexp_extract_all(lower(text), '{_TOKEN_PATTERN}')),
-                   1) AS DOUBLE))
-               - ln(-ln((CAST(({h}) AS DOUBLE) + 0.5) / {float(1 << 60)!r})),
-               6) AS key
-  FROM documents
-), ranked AS (
-  SELECT doc_id, ntok, key,
-         row_number() OVER (ORDER BY key DESC, doc_id) AS rank,
-         count(*) OVER () AS n
-  FROM base
-)
-SELECT doc_id, ntok, key, CAST(rank AS BIGINT) AS rank,
-       CAST(CASE WHEN rank <= n / {GUMBEL_KEEP_DEN} THEN 1 ELSE 0 END
-            AS BIGINT) AS sampled
-FROM ranked
-"""
-
-
-# --------------------------------------------------------------------------
 # Conversation-rollup merge semantics (`conv_rollup_merge`): the REAL
 # ``conversation_rollup`` operator (the built-in aggregation behind the
 # rows-only `conv_rollup` query) run over SYNTHETIC per-turn result
@@ -5588,57 +4263,6 @@ SELECT conv_id,
        array_to_string(list_sort(list_distinct(list(document_type))), '|')
          AS document_types
 FROM synth GROUP BY conv_id
-"""
-
-
-# --------------------------------------------------------------------------
-# Per-domain quota sampling (`domain_quota`): the RefinedWeb-style cap —
-# no registrable domain may contribute more than DOMAIN_QUOTA_Q documents;
-# within a domain, survivors are chosen by a seed-free md5 order (the
-# sample_hash discipline: deterministic on any cluster size, no RNG state).
-# Composes the audited url_domains domain derivation (nested-WITH
-# composition oracle, the curation_funnel pattern). Scale shape: ONE
-# ranked window per domain whose rank<=Q filter Spark rewrites into
-# WindowGroupLimit (top-Q per group without materializing full ranks —
-# plan-gated), over the already-derived domain column.
-# --------------------------------------------------------------------------
-
-DOMAIN_QUOTA_Q = 15  # max docs per registrable domain
-
-
-def _domain_quota_over(u: DataFrame) -> DataFrame:
-    """Quota rule over an already-computed url_domains frame — factored
-    out (round 7) so q_web_funnel can reuse ONE pinned url chain instead
-    of re-deriving it inside the quota arm (guide §2.4 / VERDICT r06
-    "What's wrong #4": composition double-pay)."""
-    ord_col = _md5_bucket_spark(
-        F.concat_ws("|", F.lit("quota"), F.col("doc_id")), 10_000
-    )
-    base = u.select("doc_id", "domain", ord_col.alias("ord"))
-    w = Window.partitionBy("domain").orderBy("ord", "doc_id")
-    return (
-        base.withColumn("qrank", F.row_number().over(w))
-        .filter(F.col("qrank") <= DOMAIN_QUOTA_Q)
-        .select(
-            "doc_id", "domain", F.col("qrank").cast("long").alias("qrank")
-        )
-    )
-
-
-def q_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _domain_quota_over(q_url_domains(spark, sf_dir))
-
-
-def _sql_domain_quota() -> str:
-    ord_sql = _md5_bucket_sql("'quota' || '|' || CAST(doc_id AS VARCHAR)", 10_000)
-    return f"""
-WITH u AS ({_sql_url_domains()})
-SELECT doc_id, domain, CAST(qrank AS BIGINT) AS qrank FROM (
-  SELECT doc_id, domain,
-         row_number() OVER (PARTITION BY domain
-                            ORDER BY {ord_sql}, doc_id) AS qrank
-  FROM u
-) WHERE qrank <= {DOMAIN_QUOTA_Q}
 """
 
 
@@ -5827,1271 +4451,6 @@ def _sql_winnow() -> str:
     return SQL_WINNOW
 
 
-# --------------------------------------------------------------------------
-# Corpus-wide duplicate-line removal (`line_dedup`): the CCNet / C4
-# line-level dedup pass (Wenzek et al. 2020 §4.1; Raffel et al. 2020 C4
-# "three-sentence span" rule) — every later occurrence of a line anywhere
-# in the corpus (including within the same document) is dropped, the first
-# occurrence in (doc_id, line_idx) order is kept, and each document is
-# reconstructed from its surviving lines in order. This corpus has no
-# newlines, so a "line" is a deterministic fixed-width window of
-# LINE_DEDUP_LEN consecutive tokens (the C4 span analogue) — the boundary
-# rule is shared by both engines, so the dedup decision is identical.
-#
-# Scale shape: token-linear — one exchange to group line hashes (map-side
-# combinable min), one hash-key join back (co-partitioned under AQE), one
-# per-doc agg for the reconstruction. As a pure plan the line frame is
-# derived twice (once per join side — the module-wide no-persist idiom);
-# at real scale persist()/checkpoint the `lines` frame once to halve the
-# tokenization cost. First-occurrence is an argmin over a
-# packed (doc_id, line_idx) key — no window function, no sort, and no
-# driver-side state, so the keeper choice is cluster-size invariant.
-# Distinct from `novelty` (which counts overlapped windows per doc) and
-# `dedup_exact` (whole-doc): this one EDITS the corpus and yields the
-# deduplicated text, the form a training pipeline actually materializes.
-# --------------------------------------------------------------------------
-
-LINE_DEDUP_LEN = 8  # tokens per synthetic "line" (C4 uses 3-sentence spans)
-_LINE_PACK = 1_000_000  # packs (doc_id, line_idx) into one argmin key
-
-
-def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.hashing import md5_prefix60_spark
-
-    L = LINE_DEDUP_LEN
-    docs = _docs(spark, sf_dir).select("doc_id", _clinical_col().alias("ctext"))
-    toked = token_barrier(
-        docs,
-        F.regexp_extract_all(F.lower(F.col("ctext")), F.lit(_TOKEN_PATTERN), 0),
-        keep_cols=("doc_id",),
-    )
-    # sequence(0, n) DESCENDS for n < 0 — guard zero-token docs (same trap
-    # as _window_hashes); slice() clamps the final partial line
-    n_lines = F.ceil(F.size("t") / F.lit(float(L))).cast("int")
-    line_arr = F.when(
-        F.size("t") > 0,
-        F.transform(
-            F.sequence(F.lit(0), n_lines - 1),
-            lambda i: F.concat_ws(" ", F.slice(F.col("t"), i * L + 1, L)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    lines = toked.select(
-        "doc_id", F.posexplode(line_arr).alias("line_idx", "line_text")
-    ).select(
-        "doc_id",
-        "line_idx",
-        "line_text",
-        md5_prefix60_spark(F.col("line_text")).alias("lhash"),
-        (F.col("doc_id") * _LINE_PACK + F.col("line_idx")).alias("packed"),
-    )
-    first = lines.groupBy("lhash").agg(F.min("packed").alias("first_packed"))
-    flagged = lines.join(first, "lhash").withColumn(
-        "is_kept", (F.col("packed") == F.col("first_packed")).cast("long")
-    )
-    kept_struct = F.when(
-        F.col("is_kept") == 1, F.struct("line_idx", "line_text")
-    )
-    per = flagged.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n_lines"),
-        F.sum("is_kept").cast("long").alias("n_kept"),
-        F.sum(
-            F.when(
-                F.col("is_kept") == 1, F.size(F.split("line_text", " "))
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_tokens_kept"),
-        # collect_list skips NULLs -> only kept lines; array_sort on the
-        # struct orders by line_idx, restoring document order regardless of
-        # shuffle arrival order
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(kept_struct)),
-                lambda s: s.line_text,
-            ),
-            " ",
-        ).alias("dedup_text"),
-    )
-    return (
-        docs.select("doc_id")
-        .join(per, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_lines", F.lit(0)).alias("n_lines"),
-            F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-            F.coalesce("n_tokens_kept", F.lit(0)).alias("n_tokens_kept"),
-            F.coalesce("dedup_text", F.lit("")).alias("dedup_text"),
-        )
-    )
-
-
-def _sql_line_dedup() -> str:
-    from .functions.hashing import md5_prefix60_sql
-
-    L = LINE_DEDUP_LEN
-    lhash = md5_prefix60_sql("line_text")
-    return f"""
-WITH toked AS (
-  SELECT doc_id,
-         regexp_extract_all(lower({_clinical_sql()}), '{_TOKEN_PATTERN}') AS t
-  FROM documents
-), lines AS (
-  SELECT doc_id, i AS line_idx,
-         array_to_string(t[i * {L} + 1 : i * {L} + {L}], ' ') AS line_text
-  FROM (SELECT doc_id, t,
-               unnest(range(0, CAST(ceil(len(t) / CAST({L} AS DOUBLE))
-                                    AS BIGINT))) AS i
-        FROM toked)
-), hashed AS (
-  SELECT doc_id, line_idx, line_text, {lhash} AS lhash,
-         doc_id * {_LINE_PACK} + line_idx AS packed
-  FROM lines
-), first AS (
-  SELECT lhash, min(packed) AS first_packed FROM hashed GROUP BY lhash
-), flagged AS (
-  SELECT h.doc_id, h.line_idx, h.line_text,
-         CASE WHEN h.packed = f.first_packed THEN 1 ELSE 0 END AS is_kept
-  FROM hashed h JOIN first f USING (lhash)
-), per AS (
-  SELECT doc_id,
-         CAST(count(*) AS BIGINT) AS n_lines,
-         CAST(sum(is_kept) AS BIGINT) AS n_kept,
-         CAST(sum(CASE WHEN is_kept = 1
-                       THEN len(string_split(line_text, ' ')) ELSE 0 END)
-              AS BIGINT) AS n_tokens_kept,
-         coalesce(string_agg(CASE WHEN is_kept = 1 THEN line_text END, ' '
-                             ORDER BY line_idx), '') AS dedup_text
-  FROM flagged GROUP BY doc_id
-)
-SELECT d.doc_id,
-       coalesce(p.n_lines, 0) AS n_lines,
-       coalesce(p.n_kept, 0) AS n_kept,
-       coalesce(p.n_tokens_kept, 0) AS n_tokens_kept,
-       coalesce(p.dedup_text, '') AS dedup_text
-FROM documents d LEFT JOIN per p USING (doc_id)
-"""
-
-
-# --------------------------------------------------------------------------
-# Train/val/test split leakage audit (`split_leakage`): the pre-training
-# hygiene check a pipeline runs AFTER splitting — deterministic md5-bucket
-# split (8/1/1), then for every held-out doc: how many of its distinct
-# k-token windows also occur in ANY train doc (`n_leaked` / `leak_frac`),
-# and which single train doc shares the most windows (the deduplication
-# work-list). Complements `contamination` (external benchmark, broadcast
-# join) — this is the WITHIN-corpus cross-split audit, a big-big join
-# keyed by window hash.
-#
-# Scale shape: one token-linear window pass, distinct (doc, whash) pairs,
-# then (a) the leak COUNT joins eval windows to the train-window DF table
-# (hash join on whash, map-side combinable), and (b) the ATTRIBUTION join
-# excludes hub windows with train document frequency > LEAK_DF_CAP before
-# fanning out to (eval_doc, train_doc) pairs — the skew guard that keeps
-# a stop-phrase window from producing |eval|×|train| rows at 100 TB.
-# Capped hub windows still count toward n_leaked (only attribution skips
-# them); the cap is part of the operator's contract, identical in the
-# oracle, and sized so both branches fire at sf0.01 (prelude windows have
-# df≈62 > 40). Top attribution ranks (shared desc, train_doc asc) in a
-# PARTITIONED window (per eval doc — never single-partition).
-# --------------------------------------------------------------------------
-
-LEAK_DF_CAP = 40  # train-doc-frequency cap for the attribution join
-
-
-def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.hashing import md5_prefix60_spark
-
-    k = DUP_SPAN_K
-    docs = _docs(spark, sf_dir).select("doc_id", _clinical_col().alias("ctext"))
-    bucket = F.pmod(
-        md5_prefix60_spark(
-            F.concat(F.lit("split|"), F.col("doc_id").cast("string"))
-        ),
-        F.lit(10),
-    )
-    toked = token_barrier(
-        docs,
-        F.regexp_extract_all(F.lower(F.col("ctext")), F.lit(_TOKEN_PATTERN), 0),
-        keep_cols=("doc_id",),
-    )
-    dw = toked.select(
-        "doc_id",
-        F.explode(F.array_distinct(_window_hashes(F.col("t"), k))).alias(
-            "whash"
-        ),
-    ).withColumn("b", bucket)
-    train_w = dw.filter(F.col("b") < 8).select(
-        "whash", F.col("doc_id").alias("train_doc")
-    )
-    eval_w = dw.filter(F.col("b") >= 8).select("doc_id", "whash")
-    tdf = train_w.groupBy("whash").agg(F.count("*").alias("df"))
-    leaked = (
-        eval_w.join(tdf, "whash")
-        .groupBy("doc_id")
-        .agg(F.count("*").cast("long").alias("n_leaked"))
-    )
-    nwin = eval_w.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n_windows")
-    )
-    pairs = (
-        eval_w.join(tdf.filter(F.col("df") <= LEAK_DF_CAP), "whash")
-        .join(train_w, "whash")
-        .groupBy("doc_id", "train_doc")
-        .agg(F.count("*").cast("long").alias("shared"))
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("shared").desc(), F.col("train_doc").asc()
-    )
-    top = (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "train_doc", "shared")
-    )
-    base = docs.select("doc_id").withColumn("b", bucket).filter(
-        F.col("b") >= 8
-    )
-    return (
-        base.join(nwin, "doc_id", "left")
-        .join(leaked, "doc_id", "left")
-        .join(top, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("b") == 8, F.lit("val"))
-            .otherwise(F.lit("test"))
-            .alias("split"),
-            F.coalesce("n_windows", F.lit(0)).alias("n_windows"),
-            F.coalesce("n_leaked", F.lit(0)).alias("n_leaked"),
-            F.round(
-                F.coalesce("n_leaked", F.lit(0))
-                / F.greatest(F.coalesce("n_windows", F.lit(0)), F.lit(1)),
-                6,
-            ).alias("leak_frac"),
-            F.coalesce("train_doc", F.lit(-1)).alias("top_train_doc"),
-            F.coalesce("shared", F.lit(0)).alias("shared_with_top"),
-        )
-    )
-
-
-def _sql_split_leakage() -> str:
-    from .functions.hashing import md5_prefix60_sql
-
-    k = DUP_SPAN_K
-    text = _clinical_sql()
-    whash = md5_prefix60_sql(f"array_to_string(t[i + 1 : i + {k}], ' ')")
-    b = (
-        md5_prefix60_sql("'split|' || CAST(doc_id AS VARCHAR)")
-        + " % 10"
-    )
-    return f"""
-WITH toked AS (
-  SELECT doc_id, regexp_extract_all(lower({text}), '{_TOKEN_PATTERN}') AS t
-  FROM documents
-), dw AS (
-  SELECT DISTINCT doc_id, whash, ({b}) AS b
-  FROM (SELECT doc_id, {whash} AS whash
-        FROM (SELECT doc_id, t,
-                     unnest(range(0, greatest(len(t) - {k} + 1, 0))) AS i
-              FROM toked))
-), train_w AS (
-  SELECT whash, doc_id AS train_doc FROM dw WHERE b < 8
-), eval_w AS (
-  SELECT doc_id, whash FROM dw WHERE b >= 8
-), tdf AS (
-  SELECT whash, count(*) AS df FROM train_w GROUP BY whash
-), leaked AS (
-  SELECT e.doc_id, CAST(count(*) AS BIGINT) AS n_leaked
-  FROM eval_w e JOIN tdf USING (whash) GROUP BY e.doc_id
-), nwin AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_windows
-  FROM eval_w GROUP BY doc_id
-), pairs AS (
-  SELECT e.doc_id, t.train_doc, CAST(count(*) AS BIGINT) AS shared
-  FROM eval_w e
-  JOIN (SELECT whash FROM tdf WHERE df <= {LEAK_DF_CAP}) c USING (whash)
-  JOIN train_w t USING (whash)
-  GROUP BY e.doc_id, t.train_doc
-), top AS (
-  SELECT doc_id, train_doc, shared
-  FROM (SELECT *, row_number() OVER (
-            PARTITION BY doc_id ORDER BY shared DESC, train_doc ASC) AS rn
-        FROM pairs)
-  WHERE rn = 1
-)
-SELECT d.doc_id,
-       CASE WHEN ({b}) = 8 THEN 'val' ELSE 'test' END AS split,
-       coalesce(n.n_windows, 0) AS n_windows,
-       coalesce(l.n_leaked, 0) AS n_leaked,
-       round(CAST(coalesce(l.n_leaked, 0) AS DOUBLE)
-             / greatest(coalesce(n.n_windows, 0), 1), 6) AS leak_frac,
-       coalesce(t.train_doc, -1) AS top_train_doc,
-       coalesce(t.shared, 0) AS shared_with_top
-FROM (SELECT doc_id FROM documents WHERE ({b}) >= 8) d
-LEFT JOIN nwin n USING (doc_id)
-LEFT JOIN leaked l USING (doc_id)
-LEFT JOIN top t USING (doc_id)
-"""
-
-
-# --------------------------------------------------------------------------
-# Duplicate-span scrubbing (`span_scrub`): the C4 rule proper (Raffel et
-# al. 2020 §2.2 — "discarded all but one of any three-sentence span
-# occurring more than once") over OVERLAPPING k-token windows at arbitrary
-# positions — the positional generalization of `line_dedup`'s fixed-width
-# pass. Every non-first global occurrence of a duplicated window (first =
-# packed (doc_id, pos) argmin, cluster-size invariant, same rule as
-# line_dedup) marks its k token positions for removal; each document is
-# reconstructed from its surviving tokens in order. Distinct from
-# `dup_spans`, which only COUNTS duplicated windows — this one edits the
-# corpus and yields the text a training pipeline materializes.
-#
-# Scale shape: token-linear ×k — windows reuse `_window_hashes` (exchange-
-# backed, md5-prefix60 both engines), one map-side-combinable min agg, one
-# hash join back, a distinct on covered positions, one anti-join, one
-# per-doc reconstruction agg. No window functions, no driver state.
-# --------------------------------------------------------------------------
-
-
-def q_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select("doc_id", _clinical_col().alias("ctext"))
-    k = DUP_SPAN_K
-    toked = token_barrier(
-        docs,
-        F.regexp_extract_all(F.lower(F.col("ctext")), F.lit(_TOKEN_PATTERN), 0),
-        keep_cols=("doc_id",),
-    )
-    wins = toked.select(
-        "doc_id", F.posexplode(_window_hashes(F.col("t"), k)).alias("pos", "whash")
-    ).withColumn("packed", F.col("doc_id") * _LINE_PACK + F.col("pos"))
-    first = wins.groupBy("whash").agg(F.min("packed").alias("first_packed"))
-    covered = (
-        wins.join(first, "whash")
-        .filter(F.col("packed") != F.col("first_packed"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + k - 1)
-            ).alias("tpos"),
-        )
-        .distinct()
-    )
-    positions = toked.select(
-        "doc_id", F.posexplode(F.col("t")).alias("tpos", "tok")
-    )
-    kept = positions.join(covered, ["doc_id", "tpos"], "left_anti")
-    per = kept.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("tpos", "tok"))),
-                lambda s: s.tok,
-            ),
-            " ",
-        ).alias("scrub_text"),
-    )
-    return (
-        toked.select("doc_id", F.size("t").cast("long").alias("n_tokens"))
-        .join(per, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_tokens",
-            (F.col("n_tokens") - F.coalesce("n_kept", F.lit(0)))
-            .cast("long")
-            .alias("n_removed"),
-            F.coalesce("scrub_text", F.lit("")).alias("scrub_text"),
-        )
-    )
-
-
-def _sql_span_scrub() -> str:
-    from .functions.hashing import md5_prefix60_sql
-
-    k = DUP_SPAN_K
-    text = _clinical_sql()
-    whash = md5_prefix60_sql(f"array_to_string(t[i + 1 : i + {k}], ' ')")
-    return f"""
-WITH toked AS (
-  SELECT doc_id, regexp_extract_all(lower({text}), '{_TOKEN_PATTERN}') AS t
-  FROM documents
-), wins AS (
-  SELECT doc_id, i AS pos, {whash} AS whash,
-         doc_id * {_LINE_PACK} + i AS packed
-  FROM (SELECT doc_id, t,
-               unnest(range(0, greatest(len(t) - {k} + 1, 0))) AS i
-        FROM toked)
-), first AS (
-  SELECT whash, min(packed) AS first_packed FROM wins GROUP BY whash
-), covered AS (
-  SELECT DISTINCT w.doc_id, w.pos + u.j AS tpos
-  FROM wins w JOIN first f USING (whash),
-       unnest(range(0, {k})) AS u(j)
-  WHERE w.packed <> f.first_packed
-), positions AS (
-  SELECT doc_id, i - 1 AS tpos, t[i] AS tok
-  FROM (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS i FROM toked)
-), kept AS (
-  SELECT p.doc_id, p.tpos, p.tok
-  FROM positions p ANTI JOIN covered c USING (doc_id, tpos)
-), per AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-         string_agg(tok, ' ' ORDER BY tpos) AS scrub_text
-  FROM kept GROUP BY doc_id
-)
-SELECT tk.doc_id, CAST(len(tk.t) AS BIGINT) AS n_tokens,
-       CAST(len(tk.t) - coalesce(p.n_kept, 0) AS BIGINT) AS n_removed,
-       coalesce(p.scrub_text, '') AS scrub_text
-FROM toked tk LEFT JOIN per p USING (doc_id)
-"""
-
-
-# --------------------------------------------------------------------------
-# Per-doc longest duplicated token-substring (`dup_longest`): the exact
-# within-document repetition diagnostic of Lee et al. 2022 ("Deduplicating
-# Training Data Makes Language Models Better") — for each document, the
-# maximum L such that some L-token substring occurs twice, plus the
-# lexicographically smallest such substring.
-#
-# Spark-first design call: the problem is DOC-LOCAL, so it belongs in a
-# worker-local kernel, not in distributed iteration — the plan is
-# scan -> JVM tokenize -> mapInPandas, with ZERO exchanges (plan-gated
-# below); at 100 TB that is one narrow pass, embarrassingly parallel over
-# row groups. A driver-controlled all-docs-simultaneous bisection variant
-# (each round one grouped window-duplicate check, the embed_keepers
-# batched-hop discipline) was built and measured first: correct, but
-# 8.4-11.9s warm at sf0.1 vs ~1s for the kernel — log2(max_len) shuffle
-# rounds lose to a shuffle-free pass whenever a single doc fits a worker,
-# which is always for real corpora. Tokenization stays JVM-side
-# (regexp_extract_all — the cross-engine-parity-proven path shared with
-# line_dedup/novelty); the Python kernel only bisects over tuple-keyed
-# window sets, so no regex/lower semantics ever diverge from the oracle.
-#
-# The kernel bisects on "has a duplicated window of length L" (downward-
-# closed in L, hence bisection-sound), O(n log n) window hashes per doc;
-# the DuckDB oracle replays the same bisection as a set-based recursive
-# CTE (one grouped duplicate check per round over every unconverged doc).
-# Windows compare exactly (tuples / strings, no hashes) on both engines;
-# the reported substring is the min over JOINED window strings — for
-# equal-length windows of [a-z0-9]+ tokens that ordering is well-defined
-# identically on both engines (the separator ' ' sorts below the whole
-# token alphabet, so joined-string order equals token-tuple order).
-# --------------------------------------------------------------------------
-
-
-def _dup_longest_kernel(toks) -> tuple:
-    """(n_tokens, max_dup_len, top_dup) for one token sequence; exact."""
-    toks = [str(t) for t in toks]
-    n = len(toks)
-    lo, hi = 0, max(n - 1, 0)
-    while lo < hi:
-        mid = (lo + hi + 1) // 2
-        seen = set()
-        dup = False
-        for i in range(n - mid + 1):
-            w = tuple(toks[i : i + mid])
-            if w in seen:
-                dup = True
-                break
-            seen.add(w)
-        if dup:
-            lo = mid
-        else:
-            hi = mid - 1
-    if lo == 0:
-        return n, 0, ""
-    cnt: dict = {}
-    for i in range(n - lo + 1):
-        w = tuple(toks[i : i + lo])
-        cnt[w] = cnt.get(w, 0) + 1
-    best = min(" ".join(w) for w, c in cnt.items() if c > 1)
-    return n, lo, best
-
-
-def q_dup_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    docs = _docs(spark, sf_dir).select("doc_id", _clinical_col().alias("ctext"))
-    toked = docs.select(
-        "doc_id",
-        F.regexp_extract_all(
-            F.lower(F.col("ctext")), F.lit(_TOKEN_PATTERN), 0
-        ).alias("t"),
-    )
-
-    def run(batches):
-        for pdf in batches:
-            out = [
-                (int(d),) + _dup_longest_kernel(t)
-                for d, t in zip(pdf["doc_id"], pdf["t"])
-            ]
-            yield pd.DataFrame(
-                out, columns=["doc_id", "n_tokens", "max_dup_len", "top_dup"]
-            )
-
-    return toked.mapInPandas(
-        run,
-        schema="doc_id long, n_tokens long, max_dup_len long, top_dup string",
-    )
-
-
-def _sql_dup_longest() -> str:
-    text = _clinical_sql()
-    return f"""
-WITH RECURSIVE toked AS MATERIALIZED (
-  SELECT doc_id, regexp_extract_all(lower({text}), '{_TOKEN_PATTERN}') AS t,
-         len(regexp_extract_all(lower({text}), '{_TOKEN_PATTERN}')) AS n
-  FROM documents
-), bs AS (
-  SELECT doc_id, 0 AS lo, greatest(n - 1, 0) AS hi FROM toked
-  UNION ALL
-  -- set-based bisection round: ONE grouped duplicate check over every
-  -- unconverged doc's mid-length windows (a correlated per-doc subquery
-  -- here re-scans toked per outer row — measured 300x slower at sf0.1)
-  SELECT doc_id,
-         CASE WHEN dup THEN mid ELSE lo END AS lo,
-         CASE WHEN dup THEN hi ELSE mid - 1 END AS hi
-  FROM (
-    SELECT doc_id, lo, hi, mid, count(*) > count(DISTINCT w) AS dup
-    FROM (
-      SELECT b.doc_id, b.lo, b.hi, b.mid,
-             array_to_string(tk.t[i.i : i.i + b.mid - 1], ' ') AS w
-      FROM (SELECT doc_id, lo, hi, (lo + hi + 1) // 2 AS mid
-            FROM bs WHERE lo < hi) b
-      JOIN toked tk USING (doc_id),
-           unnest(range(1, tk.n - b.mid + 2)) AS i(i)
-    )
-    GROUP BY doc_id, lo, hi, mid
-  )
-), final AS (
-  SELECT doc_id, lo AS dup_len FROM bs WHERE lo >= hi
-), wins AS (
-  SELECT f.doc_id, array_to_string(tk.t[i.i : i.i + f.dup_len - 1], ' ') AS w
-  FROM final f JOIN toked tk USING (doc_id),
-       unnest(range(1, tk.n - f.dup_len + 2)) AS i(i)
-  WHERE f.dup_len > 0
-), best AS (
-  SELECT doc_id, min(w) AS top_dup
-  FROM (SELECT doc_id, w FROM wins GROUP BY doc_id, w HAVING count(*) > 1)
-  GROUP BY doc_id
-)
-SELECT tk.doc_id, CAST(tk.n AS BIGINT) AS n_tokens,
-       CAST(f.dup_len AS BIGINT) AS max_dup_len,
-       coalesce(b.top_dup, '') AS top_dup
-FROM toked tk JOIN final f USING (doc_id) LEFT JOIN best b USING (doc_id)
-"""
-
-
-# --------------------------------------------------------------------------
-# Robots.txt path filtering (`robots_filter`): the compliance gate between
-# the frontier and the fetcher — per-domain Disallow prefix rules applied
-# to canonical paths (RFC 9309 longest-practice reduced to its
-# deterministic core: first matching rule in file order wins). Rule sets
-# are a tiny table keyed by domain rule-group (src_num % 4), planted so
-# every branch fires: a group whose rules match nothing, a group with
-# partial-prefix blocks, a group where TWO rules match the same path
-# (file-order argmin tie-break), and a group with an empty rule file.
-#
-# Scale shape: the rule table is dimension-sized (a real robots corpus is
-# |domains|-sized) and broadcast; the corpus side is one projection into
-# a broadcast left join on (rule_grp, prefix-match) followed by one
-# map-side-combinable argmin per doc — no corpus shuffle keyed by rules,
-# no UDF. Per-domain blocked counts re-aggregate from the doc verdicts.
-# --------------------------------------------------------------------------
-
-# (rule_grp, rule_idx, path_prefix) — grp 3 deliberately has no rows
-ROBOTS_RULES = [
-    (0, 0, "/private/"),
-    (0, 1, "/tmp/"),
-    (1, 0, "/doc/1"),
-    (1, 1, "/doc/3"),
-    (2, 0, "/doc/"),
-    (2, 1, "/d"),
-]
-
-
-def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    src_num = F.substring(F.col("source"), 4, 10).cast("long")
-    suffix = F.element_at(
-        F.array(*[F.lit(s) for s in URL_SUFFIXES]),
-        (src_num % len(URL_SUFFIXES) + 1).cast("int"),
-    )
-    base = docs.select(
-        "doc_id",
-        F.concat(F.lit("site"), src_num.cast("string"), F.lit("."), suffix)
-        .alias("domain"),
-        F.concat(F.lit("/doc/"), F.col("doc_id").cast("string")).alias("path"),
-        (src_num % 4).alias("rgrp"),
-    )
-    rules = F.broadcast(
-        spark.createDataFrame(ROBOTS_RULES, "grp long, ridx long, prefix string")
-    )
-    j = base.join(
-        rules,
-        (base["rgrp"] == rules["grp"])
-        & base["path"].startswith(rules["prefix"]),
-        "left",
-    )
-    per_doc = j.groupBy("doc_id", "domain", "path", "rgrp").agg(
-        F.min("ridx").alias("mi"),
-        F.min_by("prefix", "ridx").alias("mp"),
-    )
-    verdict = per_doc.select(
-        "doc_id",
-        "domain",
-        "path",
-        "rgrp",
-        F.coalesce(F.col("mi"), F.lit(-1)).cast("long").alias("matched_idx"),
-        F.coalesce(F.col("mp"), F.lit("")).alias("matched_prefix"),
-        F.when(F.col("mi").isNull(), 1).otherwise(0).cast("long").alias(
-            "allowed"
-        ),
-    )
-    dom = verdict.groupBy("domain").agg(
-        F.sum(1 - F.col("allowed")).cast("long").alias("dom_blocked"),
-        F.count("*").cast("long").alias("dom_total"),
-    )
-    return verdict.join(F.broadcast(dom), "domain").select(
-        "doc_id", "domain", "path", "rgrp",
-        "matched_idx", "matched_prefix", "allowed",
-        "dom_blocked", "dom_total",
-    )
-
-
-def _sql_robots_filter() -> str:
-    n_suf = len(URL_SUFFIXES)
-    suffix_list = "[" + ", ".join(f"'{s}'" for s in URL_SUFFIXES) + "]"
-    values = ", ".join(
-        f"({g}, {i}, {_sql_quote(p)})" for g, i, p in ROBOTS_RULES
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id,
-         ('site' || CAST(CAST(substr(source, 4) AS BIGINT) AS VARCHAR) || '.'
-          || {suffix_list}[(CAST(substr(source, 4) AS BIGINT) % {n_suf}) + 1])
-           AS domain,
-         ('/doc/' || CAST(doc_id AS VARCHAR)) AS path,
-         (CAST(substr(source, 4) AS BIGINT) % 4) AS rgrp
-  FROM documents
-), rules AS (
-  SELECT * FROM (VALUES {values}) AS t(grp, ridx, prefix)
-), per_doc AS (
-  SELECT b.doc_id, b.domain, b.path, b.rgrp,
-         min(r.ridx) AS mi, arg_min(r.prefix, r.ridx) AS mp
-  FROM base b LEFT JOIN rules r
-    ON r.grp = b.rgrp AND starts_with(b.path, r.prefix)
-  GROUP BY b.doc_id, b.domain, b.path, b.rgrp
-), verdict AS (
-  SELECT doc_id, domain, path, rgrp,
-         CAST(coalesce(mi, -1) AS BIGINT) AS matched_idx,
-         coalesce(mp, '') AS matched_prefix,
-         CAST(CASE WHEN mi IS NULL THEN 1 ELSE 0 END AS BIGINT)
-           AS allowed
-  FROM per_doc
-), dom AS (
-  SELECT domain, CAST(sum(1 - allowed) AS BIGINT) AS dom_blocked,
-         CAST(count(*) AS BIGINT) AS dom_total
-  FROM verdict GROUP BY domain
-)
-SELECT v.doc_id, v.domain, v.path, v.rgrp, v.matched_idx, v.matched_prefix,
-       v.allowed, d.dom_blocked, d.dom_total
-FROM verdict v JOIN dom d USING (domain)
-"""
-
-
-# --------------------------------------------------------------------------
-# Mojibake repair (`mojibake_fix`): the encoding-hygiene pass every web
-# corpus needs before tokenization — UTF-8 text that was decoded as
-# Latin-1 and re-encoded ("CafÃ©" for "Café", "â€™" for "'") is the most
-# common wire corruption in crawled data (the ftfy fix_encoding core
-# case, reduced to its deterministic sequence-mapping heart). The raw
-# corpus is pure ASCII, so a per-doc prelude (doc_id % 6) plants the
-# classic double-encoded sequences plus one clean line (the zero-hit
-# branch). Detection counts occurrences of each known sequence
-# (char-length delta under replace — exact integers both engines);
-# repair applies the pair table as chained literal replaces in pinned
-# list order (no key is a substring of another, and no replacement
-# reintroduces a key, so the order is provably immaterial — pinned
-# anyway). Output carries md5 fingerprints of the text before/after so
-# the driver hash certifies the full repaired byte stream without
-# shipping it.
-#
-# Scale shape: a single narrow projection — chained constant-literal
-# string ops, whole-stage codegen, zero shuffles, zero UDFs. At 100 TB
-# this is the cheapest kind of operator there is; the design point is
-# cross-engine byte parity on multibyte UTF-8 repair.
-# --------------------------------------------------------------------------
-
-# (broken, fixed) pairs, applied in this order on both engines
-MOJIBAKE_PAIRS = [
-    ("Ã©", "é"),
-    ("Ã±", "ñ"),
-    ("Ã¡", "á"),
-    ("Ã¯", "ï"),
-    ("Ã¼", "ü"),
-    ("â€™", "’"),
-    ("â€œ", "“"),
-    ("â€“", "–"),
-]
-
-MOJI_SNIPPETS = [
-    "CafÃ© rÃ©sumÃ© attached",
-    "El niÃ±o estÃ¡ bien",
-    "naÃ¯ve Ã¼ber approach",
-    "donâ€™t worry â€“ stable",
-    "said â€œstableâ€œ twice",
-    "plain ascii note",
-]
-
-
-def q_mojibake_fix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    arr = F.array(*[F.lit(s) for s in MOJI_SNIPPETS])
-    idx = (F.col("doc_id") % len(MOJI_SNIPPETS) + 1).cast("int")
-    ctext = F.concat(F.element_at(arr, idx), F.lit("\n"), F.col("text"))
-    docs = _docs(spark, sf_dir).select("doc_id", ctext.alias("ctext"))
-    n_moji = None
-    for k, _v in MOJIBAKE_PAIRS:
-        cnt = (
-            (F.length("ctext") - F.length(F.replace(F.col("ctext"), F.lit(k))))
-            / len(k)
-        ).cast("long")
-        n_moji = cnt if n_moji is None else n_moji + cnt
-    fixed = F.col("ctext")
-    for k, v in MOJIBAKE_PAIRS:
-        fixed = F.replace(fixed, F.lit(k), F.lit(v))
-    return docs.select(
-        "doc_id",
-        n_moji.alias("n_moji"),
-        (n_moji > 0).cast("long").alias("moji"),
-        (F.length("ctext") - F.length(fixed)).cast("long").alias("len_delta"),
-        F.md5("ctext").alias("orig_md5"),
-        F.md5(fixed).alias("fixed_md5"),
-        (F.md5(fixed) != F.md5("ctext")).cast("long").alias("changed"),
-    )
-
-
-def _sql_mojibake_fix() -> str:
-    whens = "".join(
-        f" WHEN {i} THEN {_sql_quote(s)}" for i, s in enumerate(MOJI_SNIPPETS)
-    )
-    ctext = (
-        f"(CASE (doc_id % {len(MOJI_SNIPPETS)}){whens} END"
-        f" || chr(10) || text)"
-    )
-    counts = " + ".join(
-        f"((length(ctext) - length(replace(ctext, {_sql_quote(k)}, '')))"
-        f" / {len(k)})"
-        for k, _v in MOJIBAKE_PAIRS
-    )
-    fixed = "ctext"
-    for k, v in MOJIBAKE_PAIRS:
-        fixed = f"replace({fixed}, {_sql_quote(k)}, {_sql_quote(v)})"
-    return f"""
-WITH base AS (
-  SELECT doc_id, {ctext} AS ctext FROM documents
-), rep AS (
-  SELECT doc_id, ctext,
-         CAST({counts} AS BIGINT) AS n_moji,
-         {fixed} AS fixed
-  FROM base
-)
-SELECT doc_id, n_moji,
-       CAST(CASE WHEN n_moji > 0 THEN 1 ELSE 0 END AS BIGINT) AS moji,
-       CAST(length(ctext) - length(fixed) AS BIGINT) AS len_delta,
-       md5(ctext) AS orig_md5,
-       md5(fixed) AS fixed_md5,
-       CAST(CASE WHEN md5(fixed) <> md5(ctext) THEN 1 ELSE 0 END
-            AS BIGINT) AS changed
-FROM rep
-"""
-
-
-# --------------------------------------------------------------------------
-# Per-domain boilerplate line removal (`template_lines`): the trafilatura /
-# CCNet-shard boilerplate pass — a line that recurs across a large enough
-# FRACTION of a domain's documents (nav bars, footers, cookie banners) is
-# template markup, not content, and every occurrence is dropped (unlike
-# `line_dedup`, which keeps the corpus-global FIRST occurrence — the two
-# rules serve different stages: line_dedup de-duplicates content,
-# template_lines strips per-site chrome). Lines are the fixed-width
-# LINE_DEDUP_LEN token windows shared with `line_dedup`. The raw corpus
-# has no cross-doc boilerplate, so a deterministic per-domain prelude
-# plants three exactly-8-token lines: a header in EVERY doc of the domain
-# (100%), a footer in docs with even within-domain index (~52% — above
-# the 40% threshold, fires), and a promo in index % 4 == 0 docs (~28% —
-# below it, kept); thresholding is exact integer cross-multiplication
-# (100*nd >= TPL_PCT*n_docs), so both engines make the identical call.
-#
-# Scale shape: token-linear — one map-side-combinable count-distinct per
-# (domain, line-hash), the per-domain doc-count table broadcast into the
-# threshold filter, then one join back on the SAME (domain, lhash) keys
-# (co-partitioned with the producing agg under AQE — no extra exchange),
-# and one per-doc reconstruction agg. The template table is
-# |domains| x |chrome lines| — dimension-sized at any corpus scale.
-# --------------------------------------------------------------------------
-
-TPL_PCT = 40  # template iff occurring in >= 40% of the domain's docs...
-TPL_MIN_DOCS = 3  # ...and in at least 3 distinct docs (small-domain guard)
-
-
-def _tpl_ctext_spark():
-    j = F.floor(F.col("doc_id") / 20).cast("long")
-    header = F.concat(
-        F.lit("nav home "), F.col("source"),
-        F.lit(" about contact subscribe follow rss"),
-    )
-    mid = F.when(
-        j % 2 == 0,
-        F.concat(
-            F.lit("footer copyright "), F.col("source"),
-            F.lit(" all rights reserved privacy terms"),
-        ),
-    )
-    rare = F.when(
-        j % 4 == 0,
-        F.concat(
-            F.lit("promo banner "), F.col("source"),
-            F.lit(" limited offer click here now"),
-        ),
-    )
-    # concat_ws skips NULL parts on both engines
-    return F.concat_ws(" ", header, mid, rare, F.col("text"))
-
-
-def q_template_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.hashing import md5_prefix60_spark
-
-    L = LINE_DEDUP_LEN
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.substring(F.col("source"), 4, 10).cast("long").alias("src"),
-        _tpl_ctext_spark().alias("ctext"),
-    )
-    toked = token_barrier(
-        docs,
-        F.regexp_extract_all(F.lower(F.col("ctext")), F.lit(_TOKEN_PATTERN), 0),
-        keep_cols=("doc_id", "src"),
-    )
-    n_lines = F.ceil(F.size("t") / F.lit(float(L))).cast("int")
-    line_arr = F.when(
-        F.size("t") > 0,
-        F.transform(
-            F.sequence(F.lit(0), n_lines - 1),
-            lambda i: F.concat_ws(" ", F.slice(F.col("t"), i * L + 1, L)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    lines = toked.select(
-        "doc_id", "src", F.posexplode(line_arr).alias("line_idx", "line_text")
-    ).withColumn("lhash", md5_prefix60_spark(F.col("line_text")))
-    domain_docs = docs.groupBy("src").agg(F.count("*").alias("n_docs"))
-    nd = lines.groupBy("src", "lhash").agg(
-        F.count_distinct("doc_id").alias("nd")
-    )
-    tpl = (
-        nd.join(F.broadcast(domain_docs), "src")
-        .filter(
-            (F.lit(100) * F.col("nd") >= F.lit(TPL_PCT) * F.col("n_docs"))
-            & (F.col("nd") >= TPL_MIN_DOCS)
-        )
-        .select("src", "lhash")
-    )
-    flagged = lines.join(
-        tpl.withColumn("hit", F.lit(1)), ["src", "lhash"], "left"
-    ).withColumn("is_tpl", F.coalesce("hit", F.lit(0)).cast("long"))
-    kept_struct = F.when(F.col("is_tpl") == 0, F.struct("line_idx", "line_text"))
-    per = flagged.groupBy("doc_id", "src").agg(
-        F.count("*").cast("long").alias("n_lines"),
-        F.sum("is_tpl").cast("long").alias("n_tpl_dropped"),
-        F.sum(1 - F.col("is_tpl")).cast("long").alias("n_kept"),
-        F.sum(
-            F.when(
-                F.col("is_tpl") == 0, F.size(F.split("line_text", " "))
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_tokens_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(kept_struct)),
-                lambda s: s.line_text,
-            ),
-            " ",
-        ).alias("clean_text"),
-    )
-    dtpl = tpl.groupBy("src").agg(
-        F.count("*").cast("long").alias("domain_tpl_lines")
-    )
-    return per.join(F.broadcast(dtpl), "src", "left").select(
-        "doc_id",
-        "src",
-        "n_lines",
-        "n_tpl_dropped",
-        "n_kept",
-        "n_tokens_kept",
-        F.coalesce("domain_tpl_lines", F.lit(0)).cast("long")
-        .alias("domain_tpl_lines"),
-        "clean_text",
-    )
-
-
-def _sql_template_lines() -> str:
-    from .functions.hashing import md5_prefix60_sql
-
-    L = LINE_DEDUP_LEN
-    lhash = md5_prefix60_sql("line_text")
-    return f"""
-WITH base AS (
-  SELECT doc_id,
-         CAST(substr(source, 4) AS BIGINT) AS src,
-         concat_ws(' ',
-           'nav home ' || source || ' about contact subscribe follow rss',
-           CASE WHEN (doc_id // 20) % 2 = 0
-                THEN 'footer copyright ' || source ||
-                     ' all rights reserved privacy terms' END,
-           CASE WHEN (doc_id // 20) % 4 = 0
-                THEN 'promo banner ' || source ||
-                     ' limited offer click here now' END,
-           text) AS ctext
-  FROM documents
-), toked AS (
-  SELECT doc_id, src,
-         regexp_extract_all(lower(ctext), '{_TOKEN_PATTERN}') AS t
-  FROM base
-), lines AS (
-  SELECT doc_id, src, i AS line_idx,
-         array_to_string(t[i * {L} + 1 : i * {L} + {L}], ' ') AS line_text
-  FROM (SELECT doc_id, src, t,
-               unnest(range(0, CAST(ceil(len(t) / CAST({L} AS DOUBLE))
-                                    AS BIGINT))) AS i
-        FROM toked)
-), hashed AS (
-  SELECT doc_id, src, line_idx, line_text, {lhash} AS lhash FROM lines
-), dd AS (
-  SELECT src, CAST(count(*) AS BIGINT) AS n_docs FROM base GROUP BY src
-), nd AS (
-  SELECT src, lhash, CAST(count(DISTINCT doc_id) AS BIGINT) AS nd
-  FROM hashed GROUP BY src, lhash
-), tpl AS (
-  SELECT src, lhash
-  FROM nd JOIN dd USING (src)
-  WHERE 100 * nd >= {TPL_PCT} * n_docs AND nd >= {TPL_MIN_DOCS}
-), flagged AS (
-  SELECT h.doc_id, h.src, h.line_idx, h.line_text,
-         CASE WHEN t.lhash IS NOT NULL THEN 1 ELSE 0 END AS is_tpl
-  FROM hashed h
-  LEFT JOIN tpl t ON h.src = t.src AND h.lhash = t.lhash
-), per AS (
-  SELECT doc_id, src,
-         CAST(count(*) AS BIGINT) AS n_lines,
-         CAST(sum(is_tpl) AS BIGINT) AS n_tpl_dropped,
-         CAST(sum(1 - is_tpl) AS BIGINT) AS n_kept,
-         CAST(sum(CASE WHEN is_tpl = 0
-                       THEN len(string_split(line_text, ' ')) ELSE 0 END)
-              AS BIGINT) AS n_tokens_kept,
-         coalesce(string_agg(CASE WHEN is_tpl = 0 THEN line_text END, ' '
-                             ORDER BY line_idx), '') AS clean_text
-  FROM flagged GROUP BY doc_id, src
-), dtpl AS (
-  SELECT src, CAST(count(*) AS BIGINT) AS domain_tpl_lines
-  FROM tpl GROUP BY src
-)
-SELECT p.doc_id, p.src, p.n_lines, p.n_tpl_dropped, p.n_kept,
-       p.n_tokens_kept,
-       CAST(coalesce(d.domain_tpl_lines, 0) AS BIGINT) AS domain_tpl_lines,
-       p.clean_text
-FROM per p LEFT JOIN dtpl d USING (src)
-"""
-
-
-# --------------------------------------------------------------------------
-# Unicode NFC normalization (`nfc_normalize`): the canonical-form pass a
-# corpus needs before dedup/hashing — visually identical strings with
-# different code-point sequences ("e" + COMBINING ACUTE vs precomposed
-# "é") would otherwise defeat exact dedup, dictionary lookups, and
-# tokenizers (UAX #15; sibling of `mojibake_fix`, which repairs encoding
-# damage while this canonicalizes valid-but-decomposed sequences). The
-# raw corpus is ASCII, so a per-doc prelude (doc_id % 6) plants the
-# canonical cases: combining-mark composition, multiple marks with
-# canonical reordering (ogonek + acute), Hangul jamo LVT composition,
-# a compatibility ligature NFC must PRESERVE (ﬁ — zero-change branch),
-# and plain ASCII (zero-change). The cross-engine check is real: the
-# Spark side normalizes with Python's unicodedata (UCD tables via an
-# Arrow-batched pandas UDF — the approved slow path; normalization has
-# no JVM-expression analogue), DuckDB with utf8proc's nfc_normalize —
-# two independent UAX #15 implementations must agree byte-for-byte,
-# certified via md5 fingerprints of the normalized stream.
-#
-# Scale shape: a narrow per-doc projection + one Arrow batch pass —
-# zero shuffles, zero joins; at 100 TB this is embarrassingly parallel
-# and the UDF cost is one table scan (same class as `mojibake_fix`
-# with a Python kernel instead of literal replaces).
-# --------------------------------------------------------------------------
-
-NFC_SNIPPETS = [
-    # EXPLICITLY DECOMPOSED escapes — a precomposed literal here would
-    # make NFC a no-op and the composition branches vacuous
-    "cafe\u0301 menu",  # combining acute -> composes to \u00e9
-    "A\u030angstro\u0308m unit",  # ring + diaeresis -> \u00c5, \u00f6
-    "\u1100\u1161\u11a8 script",  # Hangul jamo L+V+T -> \uac01
-    "\ufb01le ready",  # compatibility ligature: NFC preserves (no-op)
-    "e\u0328\u0301 order",  # ogonek + acute: canonical reorder + compose
-    "plain ascii line",  # no-op branch
-]
-
-
-def q_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    arr = F.array(*[F.lit(s) for s in NFC_SNIPPETS])
-    idx = (F.col("doc_id") % len(NFC_SNIPPETS) + 1).cast("int")
-    ctext = F.concat(F.element_at(arr, idx), F.lit("\n"), F.col("text"))
-    docs = _docs(spark, sf_dir).select("doc_id", ctext.alias("ctext"))
-
-    @F.pandas_udf("string")
-    def nfc(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        import unicodedata
-
-        for series in batches:
-            yield series.map(lambda s: unicodedata.normalize("NFC", s))
-
-    return docs.select(
-        "doc_id", "ctext", nfc(F.col("ctext")).alias("norm")
-    ).select(
-        "doc_id",
-        F.length("ctext").cast("long").alias("n_chars_orig"),
-        F.length("norm").cast("long").alias("n_chars_norm"),
-        (F.length("ctext") - F.length("norm"))
-        .cast("long")
-        .alias("n_composed"),
-        F.md5("ctext").alias("orig_md5"),
-        F.md5("norm").alias("norm_md5"),
-        (F.md5("norm") != F.md5("ctext")).cast("long").alias("changed"),
-    )
-
-
-def _sql_nfc_normalize() -> str:
-    whens = "".join(
-        f" WHEN {i} THEN {_sql_quote(s)}" for i, s in enumerate(NFC_SNIPPETS)
-    )
-    ctext = (
-        f"(CASE (doc_id % {len(NFC_SNIPPETS)}){whens} END"
-        f" || chr(10) || text)"
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id, {ctext} AS ctext FROM documents
-), rep AS (
-  SELECT doc_id, ctext, nfc_normalize(ctext) AS norm FROM base
-)
-SELECT doc_id,
-       CAST(length(ctext) AS BIGINT) AS n_chars_orig,
-       CAST(length(norm) AS BIGINT) AS n_chars_norm,
-       CAST(length(ctext) - length(norm) AS BIGINT) AS n_composed,
-       md5(ctext) AS orig_md5,
-       md5(norm) AS norm_md5,
-       CAST(CASE WHEN md5(norm) <> md5(ctext) THEN 1 ELSE 0 END AS BIGINT)
-         AS changed
-FROM rep
-"""
-
-
-# --------------------------------------------------------------------------
-# Interpolated Kneser-Ney bigram LM (`lm_kneser_ney`): the canonical LM
-# smoothing (Kneser & Ney 1995; Chen & Goodman 1999 §2.7) — the method
-# KenLM implements and CCNet-style perplexity filters actually run,
-# upgrading the add-k family (`lm_score`/`lm_heldout`) with absolute
-# discounting and CONTINUATION probabilities: P(w2|w1) =
-# max(c(w1w2)-D,0)/c(w1) + D·N1+(w1·)/c(w1) · Pcont(w2), where
-# Pcont(w2) = N1+(·w2)/N1+(··) — novel-continuation mass, not raw
-# frequency. Same md5 train/held-out split discipline as `lm_heldout`
-# (new salt). Held-out docs carry a planted 3-token suffix
-# (" knua join knub") so all three rare branches provably fire: unseen
-# w2 under a seen context (discount mass only → numeric floor), unseen
-# CONTEXT with a seen w2 (pure-continuation back-off, positive p), and
-# unseen context with unseen w2 (floor again).
-#
-# Scale shape: the lm_heldout discipline verbatim — zero-exchange
-# hash split, token-linear bigram derivation via a PARTITIONED lead
-# window, train tables re-aggregated from the bigram count table (ctx /
-# forward- and backward-type counts — never a second corpus pass), LEFT
-# joins carry the back-off semantics, per-doc position-pinned fold. The
-# one driver action is the bigram-type-count scalar (bounded |V|², the
-# train-vocab precedent).
-# --------------------------------------------------------------------------
-
-KN_DISCOUNT = 0.75  # the standard absolute discount (Chen & Goodman)
-KN_FLOOR = 1e-10  # numeric floor for zero-continuation events
-KN_SALT = "kn"
-
-
-def q_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).withColumn(
-        "is_train",
-        _md5_bucket_spark(
-            F.concat_ws("|", F.lit(KN_SALT), F.col("doc_id")), 2
-        )
-        == 0,
-    ).withColumn(
-        "ctext",
-        F.when(F.col("is_train"), F.col("text")).otherwise(
-            F.concat(F.col("text"), F.lit(" knua join knub"))
-        ),
-    )
-    toks = docs.select(
-        "doc_id",
-        "is_train",
-        F.posexplode(
-            F.regexp_extract_all(
-                F.lower(F.col("ctext")), F.lit(_TOKEN_PATTERN), 0
-            )
-        ).alias("pos", "w"),
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    bigrams = (
-        toks.withColumn("w2", F.lead("w").over(w))
-        .filter(F.col("w2").isNotNull())
-        .select("doc_id", "is_train", "pos", F.col("w").alias("w1"), "w2")
-    )
-    big = (
-        bigrams.filter("is_train")
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("cb"))
-    )
-    ctx = big.groupBy("w1").agg(
-        F.sum("cb").cast("long").alias("cw1"),
-        F.count("*").cast("long").alias("n1f"),
-    )
-    bwd = big.groupBy("w2").agg(F.count("*").cast("long").alias("n1b"))
-    tt = float(big.count())  # bigram-type scalar (bounded |V|^2)
-    d = KN_DISCOUNT
-    held = bigrams.filter(~F.col("is_train"))
-    pcont = F.coalesce("n1b", F.lit(0)).cast("double") / F.lit(tt)
-    cw1d = F.col("cw1").cast("double")
-    p_seen = (
-        F.greatest(
-            F.coalesce("cb", F.lit(0)).cast("double") - F.lit(d), F.lit(0.0)
-        )
-        / cw1d
-        + F.lit(d) * F.col("n1f").cast("double") / cw1d * pcont
-    )
-    scored = (
-        held.join(big, ["w1", "w2"], "left")
-        .join(ctx, "w1", "left")
-        .join(bwd, "w2", "left")
-        .withColumn(
-            "p_raw", F.when(F.col("cw1").isNotNull(), p_seen).otherwise(pcont)
-        )
-        .select(
-            "doc_id",
-            "pos",
-            F.col("cw1").isNull().cast("long").alias("is_backoff"),
-            (F.col("p_raw") <= 0).cast("long").alias("is_floor"),
-            F.log(F.greatest(F.col("p_raw"), F.lit(KN_FLOOR))).alias("logp"),
-        )
-    )
-    per_doc = (
-        scored.groupBy("doc_id")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("pos", "logp"))).alias("ps"),
-            F.sum("is_backoff").cast("long").alias("n_backoff"),
-            F.sum("is_floor").cast("long").alias("n_floor"),
-        )
-        .select(
-            "doc_id",
-            F.round(
-                F.aggregate(
-                    F.col("ps"), F.lit(0.0), lambda acc, x: acc + x["logp"]
-                )
-                / F.size("ps"),
-                6,
-            ).alias("mean_logp"),
-            F.size("ps").cast("long").alias("n_bigrams"),
-            "n_backoff",
-            "n_floor",
-        )
-    )
-    return (
-        docs.filter(~F.col("is_train"))
-        .select("doc_id")
-        .join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            "mean_logp",
-            F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
-            F.coalesce("n_backoff", F.lit(0)).cast("long").alias("n_backoff"),
-            F.coalesce("n_floor", F.lit(0)).cast("long").alias("n_floor"),
-        )
-    )
-
-
-def _sql_lm_kneser_ney() -> str:
-    split = _md5_bucket_sql(
-        f"'{KN_SALT}' || '|' || CAST(doc_id AS VARCHAR)", 2
-    )
-    d = KN_DISCOUNT
-    return f"""
-WITH docs AS (
-  SELECT doc_id, ({split} = 0) AS is_train,
-         CASE WHEN {split} = 0 THEN text
-              ELSE text || ' knua join knub' END AS ctext
-  FROM documents
-), toks AS (
-  SELECT doc_id, is_train, i - 1 AS pos, t[i] AS w
-  FROM (
-    SELECT doc_id, is_train, t, unnest(range(1, len(t)+1)) AS i
-    FROM (SELECT doc_id, is_train,
-                 regexp_extract_all(lower(ctext), '{_TOKEN_PATTERN}') AS t
-          FROM docs)
-  )
-), bigrams AS (
-  SELECT doc_id, is_train, pos, w AS w1,
-         lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-  FROM toks
-  QUALIFY w2 IS NOT NULL
-), big AS MATERIALIZED (
-  SELECT w1, w2, count(*) AS cb FROM bigrams WHERE is_train GROUP BY w1, w2
-), ctx AS (
-  SELECT w1, CAST(sum(cb) AS BIGINT) AS cw1,
-         CAST(count(*) AS BIGINT) AS n1f
-  FROM big GROUP BY w1
-), bwd AS (
-  SELECT w2, CAST(count(*) AS BIGINT) AS n1b FROM big GROUP BY w2
-), tt AS (
-  SELECT CAST(count(*) AS DOUBLE) AS t FROM big
-), scored AS (
-  SELECT b.doc_id, b.pos,
-         CAST(CASE WHEN b.cw1 IS NULL THEN 1 ELSE 0 END AS BIGINT)
-           AS is_backoff,
-         CAST(CASE WHEN p_raw <= 0 THEN 1 ELSE 0 END AS BIGINT) AS is_floor,
-         ln(greatest(p_raw, {KN_FLOOR})) AS logp
-  FROM (
-    SELECT b.doc_id, b.pos, c.cw1,
-           CASE WHEN c.cw1 IS NOT NULL
-                THEN greatest(CAST(coalesce(g.cb, 0) AS DOUBLE) - {d}, 0.0)
-                       / CAST(c.cw1 AS DOUBLE)
-                     + {d} * CAST(c.n1f AS DOUBLE) / CAST(c.cw1 AS DOUBLE)
-                       * (CAST(coalesce(w.n1b, 0) AS DOUBLE) / tt.t)
-                ELSE CAST(coalesce(w.n1b, 0) AS DOUBLE) / tt.t END AS p_raw
-    FROM bigrams b
-    LEFT JOIN big g ON g.w1 = b.w1 AND g.w2 = b.w2
-    LEFT JOIN ctx c ON c.w1 = b.w1
-    LEFT JOIN bwd w ON w.w2 = b.w2
-    CROSS JOIN tt
-    WHERE NOT b.is_train
-  ) b
-), per_doc AS (
-  SELECT doc_id,
-         round(list_sum(list(logp ORDER BY pos)) / count(*), 6) AS mean_logp,
-         CAST(count(*) AS BIGINT) AS n_bigrams,
-         CAST(sum(is_backoff) AS BIGINT) AS n_backoff,
-         CAST(sum(is_floor) AS BIGINT) AS n_floor
-  FROM scored GROUP BY doc_id
-)
-SELECT d.doc_id, p.mean_logp,
-       coalesce(p.n_bigrams, 0) AS n_bigrams,
-       coalesce(p.n_backoff, 0) AS n_backoff,
-       coalesce(p.n_floor, 0) AS n_floor
-FROM docs d LEFT JOIN per_doc p USING (doc_id)
-WHERE NOT d.is_train
-"""
-
-
 QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]]] = {
     "fusion": (q_fusion, SQL_FUSION),
     "fusion_events": (q_fusion_events, SQL_FUSION_EVENTS),
@@ -7120,10 +4479,7 @@ QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]
     "measurements": (q_measurements, SQL_MEASUREMENTS),
     "text_stats": (q_text_stats, SQL_TEXT_STATS),
     "quality_filter": (q_quality_filter, SQL_QUALITY_FILTER),
-    "lm_score": (q_lm_score, SQL_LM_SCORE),
     "bm25": (q_bm25, SQL_BM25),
-    "fingerprint": (q_fingerprint, SQL_FINGERPRINT),
-    "dedup_exact": (q_dedup_exact, SQL_DEDUP_EXACT),
     "ngram_jaccard": (q_ngram_jaccard, SQL_NGRAM_JACCARD),
     "ann_cosine": (q_ann_cosine, SQL_ANN_COSINE),
     "sentences": (q_sentences, SQL_SENTENCES),
@@ -7136,13 +4492,9 @@ QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]
     "asof_events": (q_asof_events, SQL_ASOF_EVENTS),
     "range_join_sessions": (q_range_join_sessions, SQL_RANGE_JOIN_SESSIONS),
     "events_hourly": (q_events_hourly, SQL_EVENTS_HOURLY),
-    "top_docs": (q_top_docs, SQL_TOP_DOCS),
     "top_ngrams": (q_top_ngrams, SQL_TOP_NGRAMS),
-    "sample_hash": (q_sample_hash, SQL_SAMPLE_HASH),
     "repetition_stats": (q_repetition_stats, SQL_REPETITION_STATS),
-    "domain_mix": (q_domain_mix, SQL_DOMAIN_MIX),
     "embed_keepers": (q_embed_keepers, SQL_EMBED_KEEPERS),
-    "lm_tercile": (_q_lm_tercile, _sql_lm_tercile_str()),
     "lm_heldout": (_q_lm_heldout, _sql_lm_heldout_str()),
     "bpe_train": (_q_bpe_train, _sql_bpe_train_str()),
     "bpe_encode": (_q_bpe_encode, _sql_bpe_encode_str()),
@@ -7158,27 +4510,7 @@ QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]
     "token_quantiles": (q_token_quantiles, _sql_token_quantiles()),
     "difflib_match": (q_difflib_match, _sql_difflib_match()),
     "block_keep": (q_block_keep, _sql_block_keep()),
-    "strategy_best": (_q_strategy_best, _sql_strategy_best_str()),
-    "qdigest": (q_qdigest, _sql_qdigest()),
-    "url_domains": (q_url_domains, _sql_url_domains()),
-    "seq_pack": (q_seq_pack, _sql_seq_pack()),
-    "dsir_select": (q_dsir_select, _sql_dsir_select()),
-    "semdedup": (q_semdedup, _sql_semdedup()),
-    "domain_quota": (q_domain_quota, _sql_domain_quota()),
     "block_correct": (q_block_correct, _sql_block_correct()),
     "conv_rollup_merge": (q_conv_rollup_merge, _sql_conv_rollup_merge()),
-    "gumbel_sample": (q_gumbel_sample, _sql_gumbel_sample()),
-    "novelty": (q_novelty, _sql_novelty()),
     "dict_correct": (q_dict_correct, _sql_dict_correct()),
-    "dsir_sampled": (q_dsir_sampled, _sql_dsir_sampled()),
-    "web_funnel": (q_web_funnel, _sql_web_funnel()),
-    "line_dedup": (q_line_dedup, _sql_line_dedup()),
-    "dup_longest": (q_dup_longest, _sql_dup_longest()),
-    "span_scrub": (q_span_scrub, _sql_span_scrub()),
-    "split_leakage": (q_split_leakage, _sql_split_leakage()),
-    "mojibake_fix": (q_mojibake_fix, _sql_mojibake_fix()),
-    "robots_filter": (q_robots_filter, _sql_robots_filter()),
-    "template_lines": (q_template_lines, _sql_template_lines()),
-    "nfc_normalize": (q_nfc_normalize, _sql_nfc_normalize()),
-    "lm_kneser_ney": (q_lm_kneser_ney, _sql_lm_kneser_ney()),
 }

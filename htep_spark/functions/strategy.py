@@ -31,7 +31,6 @@ __all__ = [
     "default_strategies",
     "decode_line_with_strategy",
     "predict_paragraph_best",
-    "predict_line_best_segmented",
 ]
 
 # one word = per-position candidate lists: List[List[{"character", "confidence"}]]
@@ -121,39 +120,3 @@ def predict_paragraph_best(
         if best_text:
             kept.append(best_text)
     return "\n".join(kept), len(kept)
-
-
-def predict_line_best_segmented(
-    variants: Sequence[Line],
-    decoder: LexiconBeamDecoder,
-    beam_width: int = 20,
-) -> Tuple[int, str, float, List[Tuple[str, float]]]:
-    """Keep-best over SEGMENTATION variants of one line → ``(best_idx,
-    best_text, best_conf, [(text, conf) per variant])``.
-
-    The reference's strategy knobs vary how a line SEGMENTS into words
-    (``space_threshold``, ``tests/test_paragraph_icr.py:288-293``) — each
-    strategy yields a genuinely different word sequence, decoded
-    independently, and the highest-confidence decode wins with the same
-    strict ``>`` first-wins rule as ``predict_paragraph_best`` (:297-306).
-    This entry point takes the already-segmented variants (each a ``Line``)
-    so the text-domain analogue is explicit: variant 0 = default
-    segmentation, variant 1 = looser (merged words), variant 2 = stricter
-    (split words).
-
-    **Determinism pin (deliberate divergence from the reference's raw
-    float compare)**: per-variant confidence is rounded to 6dp BEFORE the
-    argmax. A distributed engine needs one reproducible winner per input
-    across C-library ``exp``/``log`` implementations; the oracle query
-    compares the same rounded values in DuckDB. Rounding happens ONCE, on
-    the raw double (never round-of-rounded — see the char_entropy lesson).
-    """
-    results: List[Tuple[str, float]] = []
-    for line in variants:
-        text, conf = decode_line_with_strategy(line, decoder, beam_width, 0.0)
-        results.append((text, round(conf, 6)))
-    best_idx, best_text, best_conf = 0, "", -1.0
-    for i, (text, conf) in enumerate(results):
-        if conf > best_conf:
-            best_idx, best_text, best_conf = i, text, conf
-    return best_idx, best_text, best_conf, results

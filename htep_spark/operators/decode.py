@@ -29,11 +29,9 @@ __all__ = [
     "make_beam_decode_udf",
     "make_parse_udf",
     "make_paragraph_decode_udf",
-    "make_strategy_best_udf",
     "PARSE_RESULT_TYPE",
     "DECODE_RESULT_TYPE",
     "PARAGRAPH_RESULT_TYPE",
-    "STRATEGY_BEST_TYPE",
 ]
 
 DECODE_RESULT_TYPE = StructType(
@@ -193,79 +191,6 @@ def make_paragraph_decode_udf(
                 text, n_lines = predict_paragraph_best(lines or [], decoder)
                 rows.append({"text": text, "n_lines": n_lines})
             yield pd.DataFrame(rows, columns=[f.name for f in PARAGRAPH_RESULT_TYPE])
-
-    return decode
-
-
-STRATEGY_BEST_TYPE = StructType(
-    [
-        StructField("best_strategy", IntegerType(), True),
-        StructField("best_conf", DoubleType(), True),
-        StructField("best_text", StringType(), True),
-        StructField("conf_0", DoubleType(), True),
-        StructField("conf_1", DoubleType(), True),
-        StructField("conf_2", DoubleType(), True),
-        StructField("text_0", StringType(), True),
-        StructField("text_1", StringType(), True),
-        StructField("text_2", StringType(), True),
-    ]
-)
-
-
-def make_strategy_best_udf(
-    lexicon_terms: Sequence[str],
-    primary_terms: Optional[Sequence[str]] = None,
-):
-    """Segmentation-variant candidate tensor (JSON: [variant][word][pos]
-    [candidate]) → keep-best decode via the REAL strategy loop
-    (``predict_line_best_segmented``); emits every variant's (text, conf)
-    so the oracle checks all three decodes, not just the winner."""
-    import json
-
-    from ..functions.strategy import predict_line_best_segmented
-
-    lex = list(lexicon_terms)
-    prim = list(primary_terms) if primary_terms else None
-
-    @F.pandas_udf(STRATEGY_BEST_TYPE)
-    def decode(payloads: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        decoder = LexiconBeamDecoder(lex, prim)
-        null_row = {f.name: None for f in STRATEGY_BEST_TYPE}
-        for series in payloads:
-            rows = []
-            for payload in series:
-                variants = json.loads(payload) if payload else []
-                # defensive: a NULL-text doc yields a null payload (and a
-                # malformed one could yield <3 or null variants; a doc
-                # with fewer than 3 uppercase token runs yields null WORDS
-                # inside variants 1/2 via concat of missing array
-                # elements, ADVICE r06) — emit a null row instead of
-                # crashing the task (the DuckDB oracle emits NULL rows for
-                # the same payloads, so this is also the parity behavior)
-                if (
-                    len(variants) != 3
-                    or any(v is None for v in variants)
-                    or any(w is None for v in variants for w in v)
-                ):
-                    rows.append(dict(null_row))
-                    continue
-                bi, bt, bc, results = predict_line_best_segmented(
-                    variants, decoder
-                )
-                rows.append(
-                    {
-                        "best_strategy": bi,
-                        "best_conf": bc,
-                        "best_text": bt,
-                        "conf_0": results[0][1],
-                        "conf_1": results[1][1],
-                        "conf_2": results[2][1],
-                        "text_0": results[0][0],
-                        "text_1": results[1][0],
-                        "text_2": results[2][0],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in STRATEGY_BEST_TYPE])
 
     return decode
 
@@ -610,202 +535,3 @@ LEFT JOIN (SELECT * FROM pnear WHERE rn = 1) p
   ON h.doc_id = p.doc_id AND h.word_idx = p.word_idx
 """
     )
-
-
-def q_strategy_best(spark, sf_dir: str):
-    """HASH-CHECKED: the R12 multi-strategy keep-best loop (VERDICT r05 #3;
-    ref ``tests/test_paragraph_icr.py:288-311``) over three SEGMENTATION
-    variants of a per-doc line — the text-domain analogue of the
-    reference's ``space_threshold`` strategies, which vary how the line
-    splits into words:
-
-    - variant 0 (default): ``[corrupt_drug, t1, t2, t3]`` (the corrupted
-      prelude term makes R10/R11 replacement fire inside the loop),
-    - variant 1 (looser): adjacent words merged pairwise,
-    - variant 2 (stricter): each word >= 4 chars split at ``len // 2``.
-
-    The REAL ``LexiconBeamDecoder`` + ``predict_line_best_segmented`` run
-    in the UDF; DuckDB re-derives every variant's word sequence, per-word
-    greedy confidence (shared md5 candidate matrices), the full R10/R11
-    replacement decision, the per-variant mean confidence (position-pinned
-    fold, rounded once at 6dp) and the strict-``>`` first-wins argmax —
-    so the strategy selection itself is cross-engine-verified, closing the
-    last non-SQL residue besides the HTML parser event stream."""
-    from ..dictionaries import DISEASES_SINGLE, DRUGS_SINGLE
-
-    cd, _cdis, _ed = _corrupt_prelude_terms()
-    idx = (F.col("doc_id") % 16 + 1).cast("int")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    ws_expr = F.concat(
-        F.array(F.element_at(F.array(*[F.lit(t) for t in cd]), idx)),
-        F.slice(
-            F.regexp_extract_all(F.upper(F.col("text")), F.lit("[A-Z]+"), 0), 1, 3
-        ),
-    )
-    # materialize the word list behind an exchange (token_barrier rationale:
-    # CollapseProject would re-run the regexp once per lambda reference)
-    staged = docs.select("doc_id", ws_expr.alias("ws")).repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    w = lambda i: F.element_at(F.col("ws"), i)
-    half = lambda x: (F.length(x) / F.lit(2)).cast("int")
-    s0 = F.col("ws")
-    s1 = F.array(F.concat(w(1), w(2)), F.concat(w(3), w(4)))
-    s2 = F.flatten(
-        F.transform(
-            F.col("ws"),
-            lambda x: F.when(
-                F.length(x) >= 4,
-                F.array(
-                    F.substring(x, F.lit(1), half(x)),
-                    F.substring(x, half(x) + 1, F.length(x)),
-                ),
-            ).otherwise(F.array(x)),
-        )
-    )
-    cands = lambda words: F.transform(words, lambda x: _word_candidates_col(x))
-    pjson = F.to_json(F.array(cands(s0), cands(s1), cands(s2)))
-    # second exchange: the to_json projection must not feed the pandas UDF
-    # in the same projection (Spark 4.1 StructsToJsonEvaluator codegen bug
-    # on repeated plans — same barrier as q_paragraph_decode)
-    staged2 = staged.select("doc_id", pjson.alias("pjson")).repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    decode = make_strategy_best_udf(DRUGS_SINGLE + DISEASES_SINGLE, DRUGS_SINGLE)
-    return staged2.select("doc_id", decode(F.col("pjson")).alias("r")).select(
-        "doc_id",
-        F.col("r.best_strategy").cast("long").alias("best_strategy"),
-        F.col("r.best_conf").alias("best_conf"),
-        F.col("r.best_text").alias("best_text"),
-        F.col("r.conf_0").alias("conf_0"),
-        F.col("r.conf_1").alias("conf_1"),
-        F.col("r.conf_2").alias("conf_2"),
-        F.col("r.text_0").alias("text_0"),
-        F.col("r.text_1").alias("text_1"),
-        F.col("r.text_2").alias("text_2"),
-    )
-
-
-def _sql_strategy_best() -> str:
-    from ..functions.beam import LexiconBeamDecoder
-
-    lex, prim = _beam_lexicons()
-    d = LexiconBeamDecoder([])
-    t_mean = repr(d.replacement_confidence_threshold)
-    t_min = repr(d.replacement_min_char_confidence_threshold)
-    t_np_min = repr(d.non_primary_replacement_min_char_confidence)
-    values = ", ".join(
-        f"('{term}', {'TRUE' if term in prim else 'FALSE'})" for term in lex
-    )
-    cd, _cdis, _ed = _corrupt_prelude_terms()
-    cd_list = "list_value(" + ", ".join(f"'{t}'" for t in cd) + ")"
-    md5_60 = md5_prefix60_sql(
-        "substr(w, i, 1) || '|' || w || '|' || CAST(i - 1 AS VARCHAR)"
-    )
-    gates = f"""
-  (NOT in_lex) AND n.term IS NOT NULL AND (
-      (n.is_primary AND (mean_conf <= CAST({t_mean} AS DOUBLE)
-                         OR min_conf <= CAST({t_min} AS DOUBLE)))
-   OR ((NOT n.is_primary) AND n.dist <= 1
-       AND min_conf <= CAST({t_np_min} AS DOUBLE)))"""
-    pfall = f"""
-  in_lex AND (NOT in_prim) AND p.pterm IS NOT NULL AND p.pdist <= 1
-  AND (mean_conf <= CAST({t_mean} AS DOUBLE)
-       OR min_conf <= CAST({t_min} AS DOUBLE))"""
-    return f"""
-WITH toks AS (
-  SELECT doc_id,
-         list_concat([{cd_list}[(doc_id % 16) + 1]],
-                     regexp_extract_all(upper(text), '[A-Z]+')[1:3]) AS ws
-  FROM documents
-), var AS (
-  SELECT doc_id, 0 AS sidx, ws FROM toks
-  UNION ALL
-  SELECT doc_id, 1, [ws[1] || ws[2], ws[3] || ws[4]] FROM toks
-  UNION ALL
-  SELECT doc_id, 2,
-         flatten(list_transform(ws, w -> CASE WHEN length(w) >= 4
-           THEN [w[1:length(w)//2], w[length(w)//2+1:]] ELSE [w] END))
-  FROM toks
-), words AS (
-  SELECT doc_id, sidx, i - 1 AS word_idx, ws[i] AS w
-  FROM (SELECT doc_id, sidx, ws, unnest(range(1, len(ws)+1)) AS i FROM var)
-), confs AS (
-  SELECT doc_id, sidx, word_idx, w,
-         list_transform(
-           range(1, length(w)+1),
-           i -> 0.35 + ({md5_60} % 64) / 100.0) AS cs
-  FROM words
-), stats AS (
-  SELECT doc_id, sidx, word_idx, w,
-         list_sum(cs) / len(cs) AS mean_conf,
-         list_min(cs) AS min_conf,
-         exp(list_sum(list_transform(cs, c -> ln(c))) / len(cs)) AS raw_conf
-  FROM confs
-), lex(term, is_primary) AS (VALUES {values}),
-hit AS (
-  SELECT s.*, l.term IS NOT NULL AS in_lex,
-         coalesce(l.is_primary, FALSE) AS in_prim
-  FROM stats s LEFT JOIN lex l ON s.w = l.term
-), near AS (
-  SELECT s.doc_id, s.sidx, s.word_idx, l.term, l.is_primary,
-         levenshtein(s.w, l.term) AS dist,
-         row_number() OVER (
-           PARTITION BY s.doc_id, s.sidx, s.word_idx
-           ORDER BY levenshtein(s.w, l.term), length(l.term), l.term
-         ) AS rn
-  FROM stats s JOIN lex l
-    ON substr(s.w, 1, 1) = substr(l.term, 1, 1)
-   AND abs(length(s.w) - length(l.term)) <= 1
-  WHERE length(s.w) >= 2 AND levenshtein(s.w, l.term) <= 2
-), pnear AS (
-  SELECT s.doc_id, s.sidx, s.word_idx, l.term AS pterm,
-         levenshtein(s.w, l.term) AS pdist,
-         row_number() OVER (
-           PARTITION BY s.doc_id, s.sidx, s.word_idx
-           ORDER BY levenshtein(s.w, l.term), length(l.term), l.term
-         ) AS rn
-  FROM stats s JOIN lex l
-    ON l.is_primary
-   AND substr(s.w, 1, 1) = substr(l.term, 1, 1)
-   AND abs(length(s.w) - length(l.term)) <= 1
-  WHERE length(s.w) >= 2 AND levenshtein(s.w, l.term) <= 2
-), dec AS (
-  SELECT h.doc_id, h.sidx, h.word_idx, h.raw_conf,
-         CASE WHEN {pfall} THEN p.pterm
-              WHEN {gates} THEN n.term
-              ELSE h.w END AS final
-  FROM hit h
-  LEFT JOIN (SELECT * FROM near WHERE rn = 1) n
-    ON h.doc_id = n.doc_id AND h.sidx = n.sidx AND h.word_idx = n.word_idx
-  LEFT JOIN (SELECT * FROM pnear WHERE rn = 1) p
-    ON h.doc_id = p.doc_id AND h.sidx = p.sidx AND h.word_idx = p.word_idx
-), line AS (
-  -- mean confidence: position-pinned left fold / word count, rounded ONCE
-  -- at 6dp (the same rounded value the Python keep-best compares)
-  SELECT doc_id, sidx,
-         string_agg(final, ' ' ORDER BY word_idx) AS text,
-         round(list_sum(list(raw_conf ORDER BY word_idx)) / count(*), 6)
-           AS conf
-  FROM dec GROUP BY doc_id, sidx
-), ranked AS (
-  -- strict-> first-wins argmax == max conf, then smallest strategy index
-  SELECT doc_id, sidx, text, conf,
-         row_number() OVER (
-           PARTITION BY doc_id ORDER BY conf DESC, sidx ASC) AS rn
-  FROM line
-), pivoted AS (
-  SELECT doc_id,
-         max(CASE WHEN sidx = 0 THEN conf END) AS conf_0,
-         max(CASE WHEN sidx = 1 THEN conf END) AS conf_1,
-         max(CASE WHEN sidx = 2 THEN conf END) AS conf_2,
-         max(CASE WHEN sidx = 0 THEN text END) AS text_0,
-         max(CASE WHEN sidx = 1 THEN text END) AS text_1,
-         max(CASE WHEN sidx = 2 THEN text END) AS text_2
-  FROM line GROUP BY doc_id
-)
-SELECT p.doc_id, CAST(b.sidx AS BIGINT) AS best_strategy,
-       b.conf AS best_conf, b.text AS best_text,
-       p.conf_0, p.conf_1, p.conf_2, p.text_0, p.text_1, p.text_2
-FROM pivoted p JOIN (SELECT * FROM ranked WHERE rn = 1) b USING (doc_id)
-"""

@@ -41,9 +41,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "exact_global_rank",
-    "exact_global_cumsum",
-    "q_lm_tercile",
-    "sql_lm_tercile",
     "q_lm_heldout",
     "sql_lm_heldout",
 ]
@@ -97,140 +94,14 @@ def exact_global_rank(
     )
 
 
-def exact_global_cumsum(
-    df: DataFrame,
-    order_col: str,
-    val_col: str,
-    tie_cols: Sequence[str] = (),
-    n_partitions: int = 0,
-) -> DataFrame:
-    """Append ``cum_before`` (exclusive prefix sum of ``val_col`` in global
-    ``order_col`` order) and ``global_total`` — the weighted sibling of
-    ``exact_global_rank`` (same range-partition + pinned-materialization
-    scaffolding, same no-single-partition-window guarantee). ``val_col``
-    must be non-null — NULL values would be skipped by the running sum
-    while still occupying rank positions, yielding inconsistent prefixes.
-
-    The in-partition running sum DOES use a window partitioned by the
-    materialized partition id: that plans one extra hash exchange of the
-    narrow rows, but its keys are the P partition ids of a range exchange
-    — one reducer per former partition, balanced by construction — and the
-    alternative (a driver-side loop) would not be distributed at all. The
-    per-partition value totals ride the same #partitions-scalar action the
-    rank variant already pays."""
-    from pyspark.sql.window import Window
-
-    keys = [F.col(order_col)] + [F.col(t) for t in tie_cols]
-    n_parts = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    parted = (
-        df.repartitionByRange(n_parts, *keys)
-        .sortWithinPartitions(*keys)
-        .withColumn("_pid", F.spark_partition_id())
-        .withColumn("_mid", F.monotonically_increasing_id())
-        .localCheckpoint(eager=True)
-    )
-    stats = sorted(
-        (r["_pid"], r["tot"])
-        for r in parted.groupBy("_pid")
-        .agg(F.sum(val_col).alias("tot"))
-        .collect()
-    )  # #partitions scalars — the one driver action
-    offsets, acc = [], 0
-    for pid, tot in stats:
-        offsets.append((pid, acc))
-        # tot is None only when a partition's val_col is entirely NULL;
-        # the contract requires a non-null val_col (NULL rows would also
-        # poison the in-partition running sum) — treat as 0 for the
-        # offset rather than crashing the driver (review r6)
-        acc += int(tot) if tot is not None else 0
-    spark = df.sparkSession
-    off_df = F.broadcast(
-        spark.createDataFrame(offsets, "_pid int, _offset long")
-    )
-    w = Window.partitionBy("_pid").orderBy("_mid")
-    return (
-        parted.join(off_df, "_pid")
-        .withColumn(
-            "cum_before",
-            F.col("_offset")
-            + F.sum(val_col).over(w)
-            - F.col(val_col),
-        )
-        .withColumn("global_total", F.lit(acc).cast("long"))
-        .drop("_pid", "_offset", "_mid")
-    )
-
-
-# --------------------------------------------------------------------------
-# CCNet-style perplexity bucketing (Wenzek et al. 2020): rank documents by
-# their corpus-LM score and split into head/middle/tail terciles — the
-# canonical "keep the head, drop the tail" curation signal. Built from
-# q_lm_score (already hash-checked) + exact_global_rank; the oracle is a
-# plain window row_number over the same 6dp-rounded scores with the same
-# (score, doc_id) tie-break.
-# --------------------------------------------------------------------------
-
-_TERCILES = ("head", "middle", "tail")
-
-
-def q_lm_tercile(spark, sf_dir: str) -> DataFrame:
-    from ..driver_queries import q_lm_score
-
-    scored = q_lm_score(spark, sf_dir)  # doc_id, mean_logp (rounded 6dp)
-    ranked = exact_global_rank(
-        scored, "mean_logp", tie_cols=("doc_id",)
-    )
-    bucket = F.floor(
-        3 * (F.col("global_rank") - 1) / F.col("global_count")
-    ).cast("int")
-    tercile = F.element_at(
-        F.array(*[F.lit(t) for t in reversed(_TERCILES)]), bucket + 1
-    )
-    return ranked.select(
-        "doc_id",
-        "mean_logp",
-        F.col("global_rank").cast("long").alias("global_rank"),
-        tercile.alias("tercile"),
-    )
-
-
-def _sql_lm_tercile() -> str:
-    from ..driver_queries import SQL_LM_SCORE
-
-    cases = " ".join(
-        f"WHEN {i} THEN '{t}'" for i, t in enumerate(reversed(_TERCILES))
-    )
-    return f"""
-WITH scored AS ({SQL_LM_SCORE}),
-ranked AS (
-  SELECT doc_id, mean_logp,
-         row_number() OVER (ORDER BY mean_logp NULLS FIRST, doc_id)
-           AS global_rank,
-         count(*) OVER () AS n
-  FROM scored
-)
-SELECT doc_id, mean_logp, CAST(global_rank AS BIGINT) AS global_rank,
-       CASE CAST(floor(3.0 * (global_rank - 1) / n) AS INT) {cases} END
-         AS tercile
-FROM ranked
-"""
-
-
-def sql_lm_tercile() -> str:
-    """Public oracle-SQL builder (function, not constant — SQL_LM_SCORE
-    lives in driver_queries, which imports this module's query: the same
-    lazy pattern as ``bpe.sql_bpe_train``)."""
-    return _sql_lm_tercile()
-
-
 # --------------------------------------------------------------------------
 # Held-out perplexity filter — CCNet PROPER (Wenzek et al. 2020, §3.3):
-# unlike q_lm_score/q_lm_tercile (which train the bigram LM on the same
-# corpus they score — a useful signal but methodologically self-referential)
-# this trains on an md5-hash-split HALF of the corpus and scores only the
-# complement, the actual train/score separation the CCNet recipe demands.
-# Reference has no distributed analogue; the closest pattern is the
-# train/eval split of its eval harness (tests/evaluate_metrics.py:39-90).
+# unlike an in-corpus bigram LM (trained on the same corpus it scores — a
+# useful signal but methodologically self-referential) this trains on an
+# md5-hash-split HALF of the corpus and scores only the complement, the
+# actual train/score separation the CCNet recipe demands. Reference has no
+# distributed analogue; the closest pattern is the train/eval split of its
+# eval harness (tests/evaluate_metrics.py:39-90).
 #
 # Scale shape: the split predicate is a pure hash of doc_id (zero-exchange,
 # cluster-size invariant, like q_sample_hash); training = two hash aggs
@@ -243,6 +114,7 @@ def sql_lm_tercile() -> str:
 
 LM_HELDOUT_SALT = "lm"
 LM_HELDOUT_MOD = 2  # bucket 0 trains, buckets 1..MOD-1 are scored
+_TERCILES = ("head", "middle", "tail")  # best-scoring third first
 
 
 def q_lm_heldout(spark, sf_dir: str) -> DataFrame:

@@ -27,10 +27,10 @@ def test_queries_and_oracles_consistent():
         "greedy_decode", "beam_replace", "deid_spans", "deid_mask",
         "repetition_stats", "bpe_train", "embed_keepers", "lm_heldout",
         # round-6 rotation (VERDICT r05 #1): the twelve born-overflow
-        # round-5 oracles now IN the dict (displaced siblings — fusion,
-        # sections, urgency, measurements, text_stats, fingerprint,
-        # dedup_exact, cer, events_hourly, sample_hash, domain_mix,
-        # lm_tercile — keep replaying via DRIVER_CAP_OVERFLOW)
+        # round-5 oracles now IN the dict (the displaced siblings still
+        # in QUERIES — fusion, sections, urgency, measurements,
+        # text_stats, cer, events_hourly — keep replaying via
+        # DRIVER_CAP_OVERFLOW)
         "fuzzy_ratio", "bpe_encode", "dup_spans", "contamination",
         "mixture_plan", "approx_distinct", "bloom_probe", "count_min",
         "curation_funnel", "char_entropy", "token_quantiles",
@@ -313,8 +313,6 @@ def test_bench_extras_names_resolve():
 # htep_spark modules that no entry point imports, each kept on purpose
 _KEPT_WITHOUT_CONSUMER = {
     "htep_spark.streaming.stream": "the streaming path of the batch/streaming parity",
-    "htep_spark.plans.compact": "the small-files stage for checkpointed output",
-    "htep_spark.functions.evaluation": "the reference's offline metrics (SURVEY §3.3)",
 }
 
 

@@ -454,37 +454,6 @@ def test_extract_turn_never_raises_on_hostile_input():
         assert isinstance(result["corrected_text"], str)
 
 
-# ----------------------------------------------------------- evaluation ----
-def test_cer_and_entity_accuracy():
-    from htep_spark.functions.evaluation import (
-        character_error_rate,
-        entity_set_accuracy,
-        flatten_record,
-    )
-
-    assert character_error_rate("abc", "abc") == 0.0
-    assert character_error_rate("abd", "abc") == pytest.approx(1 / 3)
-    assert character_error_rate("", "") == 0.0
-
-    truth = {
-        "patient_name": "Vikas Reddy",
-        "age": "45",
-        "diagnosis": ["Hypertension"],
-        "medicines": [{"name": "Metformin", "dosage": "500mg", "frequency": None}],
-        "vitals": {"bp": "120/80", "temp": None},
-    }
-    flat = flatten_record(truth)
-    assert "patient_name:vikas reddy" in flat
-    assert "medicines.name:metformin" in flat
-    assert "vitals.bp:120/80" in flat
-    assert not any("temp" in f or "frequency" in f for f in flat)
-
-    assert entity_set_accuracy(truth, truth) == 1.0
-    pred = dict(truth, age="46")
-    acc = entity_set_accuracy(pred, truth)
-    assert 0 < acc < 1.0
-
-
 def test_chat_json_payload():
     import json as _json
 
@@ -663,88 +632,6 @@ def test_paragraph_strategy_selection_changes_outcome():
     assert text == "ASPIRIN"  # low confidence -> primary replacement fires
 
 
-def test_segmented_keep_best_argmax_and_tie():
-    """predict_line_best_segmented: true argmax over variant confidences,
-    strict `>` so the FIRST variant wins exact ties, and the emitted
-    per-variant results are consistent with the winner."""
-    from htep_spark.dictionaries import DRUGS_SINGLE
-    from htep_spark.functions.beam import LexiconBeamDecoder
-    from htep_spark.functions.strategy import predict_line_best_segmented
-
-    decoder = LexiconBeamDecoder(DRUGS_SINGLE)
-    hi = [_mk_word("ASPIRIN", conf=0.9)]
-    lo = [_mk_word("ASPIRIN", conf=0.5)]
-    # middle variant strictly best -> index 1 wins
-    bi, bt, bc, results = predict_line_best_segmented([lo, hi, lo], decoder)
-    assert bi == 1 and (bt, bc) == results[1]
-    assert results[1][1] > results[0][1] == results[2][1]
-    # identical variants tie -> first wins
-    bi, bt, bc, results = predict_line_best_segmented([lo, lo, lo], decoder)
-    assert bi == 0 and (bt, bc) == results[0]
-
-
-def test_strategy_best_corpus_margins():
-    """Cross-engine safety of the 6dp-rounded argmax on the fixed corpora:
-    replicate the strategy_best construction in pure Python (shared md5
-    confidence formula + the REAL decoder) and assert (a) every strategy
-    index wins somewhere (non-vacuous argmax), (b) distinct per-doc variant
-    confidences differ by > 2e-6 (a 6dp disagreement cannot flip the
-    winner), (c) every unrounded mean clears its 0.5e-6 rounding boundary
-    by > 1e-12 — three orders of magnitude above the worst accumulated
-    cross-libm exp/ln error for an 8-term mean (~1e-15 relative); the
-    measured corpus minimum is 4.2e-10 (sf0.001+sf0.01 sweep, r6)."""
-    import hashlib
-    import re as _re
-
-    import duckdb
-
-    from htep_spark.dictionaries import DISEASES_SINGLE, DRUGS_SINGLE
-    from htep_spark.functions.beam import LexiconBeamDecoder
-    from htep_spark.functions.strategy import decode_line_with_strategy
-    from htep_spark.operators.decode import _corrupt_prelude_terms
-
-    def conf(ch, w, i):
-        h = int(hashlib.md5(f"{ch}|{w}|{i}".encode()).hexdigest()[:15], 16)
-        return 0.35 + (h % 64) / 100.0
-
-    def mk(w):
-        return [[{"character": c, "confidence": conf(c, w, i)}]
-                for i, c in enumerate(w)]
-
-    cd, _, _ = _corrupt_prelude_terms()
-    decoder = LexiconBeamDecoder(DRUGS_SINGLE + DISEASES_SINGLE, DRUGS_SINGLE)
-    rows = duckdb.sql(
-        "SELECT doc_id, text FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-        " UNION ALL SELECT doc_id, text FROM "
-        "read_parquet('/root/testdata/sf0.01/documents.parquet')"
-    ).fetchall()
-    winners = set()
-    for doc_id, text in rows:
-        toks = _re.findall("[A-Z]+", text.upper())[:3]
-        ws = [cd[doc_id % 16]] + toks
-        variants = [
-            ws,
-            [ws[0] + ws[1], ws[2] + ws[3]],
-            [p for w in ws for p in
-             ([w[: len(w) // 2], w[len(w) // 2:]] if len(w) >= 4 else [w])],
-        ]
-        confs = []
-        for line in variants:
-            _, c = decode_line_with_strategy([mk(w) for w in line], decoder, 20, 0.0)
-            confs.append(c)
-            # (c) rounding-boundary clearance on the RAW mean
-            frac = abs(c * 1e6 - round(c * 1e6))
-            assert abs(frac - 0.5) * 1e-6 > 1e-12, (doc_id, c)
-        rounded = [round(c, 6) for c in confs]
-        for i in range(3):
-            for j in range(i + 1, 3):
-                d = abs(rounded[i] - rounded[j])
-                assert d == 0.0 or d > 2e-6, (doc_id, rounded)
-        winners.add(max(range(3), key=lambda i: (rounded[i], -i)))
-    assert winners == {0, 1, 2}, winners
-
-
 def test_classify_pattern_gates_are_sound():
     """The literal gates that skip findall must be implied by the patterns:
     on a corpus designed to fire every pattern and every near-miss, the
@@ -901,685 +788,3 @@ def test_field_gates_are_sound():
         "doctor_name": None, "hospital": None, "diagnosis": [],
         "medicines": [], "vitals": {}, "instructions": [],
     }
-
-
-def test_dsir_recovers_target_docs_and_margins():
-    """DSIR recovery + cross-engine-rounding safety on the fixed corpus:
-    (a) every selected doc must be a prelude (in-target) doc — the scorer
-    recovers the planted ground truth; (b) every doc's unrounded mean
-    log-ratio clears its 0.5e-6 rounding boundary by > 1e-12 (python-libm
-    literals on the Spark side vs DuckDB ln cannot flip the 6dp value)."""
-    import math
-    import re as _re
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        CLINICAL_SNIPPETS,
-        DSIR_BUCKETS,
-        _dsir_bucket_py,
-        _dsir_target_counts,
-        _TOKEN_PATTERN,
-    )
-
-    B = DSIR_BUCKETS
-    tcounts, T = _dsir_target_counts()
-    rows = duckdb.sql(
-        "SELECT doc_id, text FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    ).fetchall()
-    docs = {}
-    for doc_id, text in rows:
-        if doc_id % 2 == 0:
-            text = CLINICAL_SNIPPETS[doc_id % 8] + "\n" + text
-        docs[doc_id] = _re.findall(_TOKEN_PATTERN, text.lower())
-    scounts: dict = {}
-    for toks in docs.values():
-        for tok in toks:
-            b = _dsir_bucket_py(tok)
-            scounts[b] = scounts.get(b, 0) + 1
-    S = sum(scounts.values())
-    lr = {
-        b: math.log((tcounts.get(b, 0) + 1) / (T + B))
-        - math.log((scounts.get(b, 0) + 1) / (S + B))
-        for b in range(B)
-    }
-    weights = {}
-    for doc_id, toks in docs.items():
-        acc = 0.0
-        for tok in toks:  # pinned position order, like both engines
-            acc += lr[_dsir_bucket_py(tok)]
-        w = acc / len(toks)
-        frac = abs(w * 1e6 - round(w * 1e6))
-        assert abs(frac - 0.5) * 1e-6 > 1e-12, (doc_id, w)
-        weights[doc_id] = round(w, 6)
-    order = sorted(weights, key=lambda d: (-weights[d], d))
-    n_keep = len(order) // 4
-    selected = set(order[:n_keep])
-    assert all(d % 2 == 0 for d in selected), "non-prelude doc selected"
-
-
-def test_gumbel_sample_length_bias_and_margins():
-    """Gumbel-top-k weighted sampling sanity on the fixed corpus: (a) the
-    sampled set is length-biased (inclusion prob ∝ ntok, so the sampled
-    mean token count must exceed the corpus mean); (b) every key clears
-    its 6dp rounding boundary by > 1e-12 (cross-libm ln parity, the
-    strategy_best/dsir margin discipline)."""
-    import hashlib
-    import math
-    import re as _re
-
-    import duckdb
-
-    from htep_spark.driver_queries import _TOKEN_PATTERN, GUMBEL_KEEP_DEN
-
-    rows = duckdb.sql(
-        "SELECT doc_id, text FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    ).fetchall()
-    keys = {}
-    ntoks = {}
-    for doc_id, text in rows:
-        ntok = len(_re.findall(_TOKEN_PATTERN, text.lower()))
-        h = int(
-            hashlib.md5(f"gumbel|{doc_id}".encode()).hexdigest()[:15], 16
-        )
-        u = (float(h) + 0.5) / float(1 << 60)
-        k = math.log(float(ntok)) - math.log(-math.log(u))
-        frac = abs(k * 1e6 - round(k * 1e6))
-        assert abs(frac - 0.5) * 1e-6 > 1e-12, (doc_id, k)
-        keys[doc_id] = round(k, 6)
-        ntoks[doc_id] = ntok
-    order = sorted(keys, key=lambda d: (-keys[d], d))
-    sampled = order[: len(order) // GUMBEL_KEEP_DEN]
-    mean_all = sum(ntoks.values()) / len(ntoks)
-    mean_sampled = sum(ntoks[d] for d in sampled) / len(sampled)
-    assert mean_sampled > mean_all, (mean_sampled, mean_all)
-
-
-def test_web_funnel_monotone():
-    """The composed web-curation cascade must be monotone per domain
-    (n_docs >= pass_quota >= pass_dsir >= sampled) and its totals must
-    equal the individual gates' own totals (quota = domains x Q; dsir
-    quarter intersected with quota; token yield only from survivors)."""
-    import duckdb
-
-    from htep_spark.driver_queries import DOMAIN_QUOTA_Q, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.01/documents.parquet')"
-    )
-    df = con.execute(QUERIES["web_funnel"][1]).df()
-    assert (df.pass_quota <= df.n_docs).all()
-    assert (df.pass_dsir <= df.pass_quota).all()
-    assert (df.sampled <= df.pass_dsir).all()
-    assert (df.pass_quota <= DOMAIN_QUOTA_Q).all()
-    assert ((df.kept_tokens == 0) == (df.sampled == 0)).all()
-    assert df.pass_dsir.sum() > 0 and df.sampled.sum() > 0  # non-vacuous
-
-
-def test_line_dedup_keep_first_and_reconstruction():
-    """Corpus-wide duplicate-line removal (`line_dedup`, CCNet §4.1 / C4
-    span rule): an independent pure-Python replay of the keep-first rule —
-    fixed-width 8-token windows over the clinical-prelude text, global
-    first-occurrence in (doc_id, line_idx) order wins, per-doc text
-    rebuilt from survivors in order — must match the DuckDB oracle
-    row-for-row at sf0.001, and the pass must be non-vacuous (at least
-    one later duplicate actually dropped)."""
-    import re as _re
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        _TOKEN_PATTERN,
-        CLINICAL_SNIPPETS,
-        LINE_DEDUP_LEN,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    got = {
-        r[0]: r[1:]
-        for r in con.execute(QUERIES["line_dedup"][1]).fetchall()
-    }
-
-    rows = con.execute(
-        "SELECT doc_id, text FROM documents ORDER BY doc_id"
-    ).fetchall()
-    L = LINE_DEDUP_LEN
-    seen: set = set()
-    dropped_any = False
-    for doc_id, text in rows:
-        full = CLINICAL_SNIPPETS[doc_id % len(CLINICAL_SNIPPETS)] + "\n" + text
-        toks = _re.findall(_TOKEN_PATTERN, full.lower())
-        lines = [" ".join(toks[i : i + L]) for i in range(0, len(toks), L)]
-        kept = []
-        for ln in lines:
-            if ln in seen:
-                dropped_any = True
-            else:
-                seen.add(ln)
-                kept.append(ln)
-        exp = (
-            len(lines),
-            len(kept),
-            sum(len(ln.split(" ")) for ln in kept),
-            " ".join(kept),
-        )
-        assert got[doc_id] == exp, (doc_id, got[doc_id][:3], exp[:3])
-    assert dropped_any, "no duplicate line in the corpus; dedup vacuous"
-    assert len(got) == len(rows)
-
-
-def test_dup_longest_matches_brute_force():
-    """Exact longest duplicated token-substring (`dup_longest`): the
-    DuckDB bisection oracle must equal a brute-force scan (descending L,
-    first L with any repeated window; lexicographically smallest winner)
-    on every sf0.001 doc — i.e. the binary search is sound (the duplicate
-    predicate is downward-closed in L) and the reported substring really
-    is maximal. Non-vacuous: several distinct dup lengths occur and at
-    least one doc has no within-doc repeat."""
-    import re as _re
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        _TOKEN_PATTERN,
-        CLINICAL_SNIPPETS,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    got = {
-        r[0]: r[1:] for r in con.execute(QUERIES["dup_longest"][1]).fetchall()
-    }
-    rows = con.execute("SELECT doc_id, text FROM documents").fetchall()
-
-    def brute(toks):
-        for L in range(len(toks) - 1, 0, -1):
-            seen: dict = {}
-            for i in range(len(toks) - L + 1):
-                w = " ".join(toks[i : i + L])
-                seen[w] = seen.get(w, 0) + 1
-            reps = sorted(w for w, c in seen.items() if c > 1)
-            if reps:
-                return L, reps[0]
-        return 0, ""
-
-    lens = set()
-    for doc_id, text in rows:
-        full = CLINICAL_SNIPPETS[doc_id % len(CLINICAL_SNIPPETS)] + "\n" + text
-        toks = _re.findall(_TOKEN_PATTERN, full.lower())
-        L, w = brute(toks)
-        assert got[doc_id] == (len(toks), L, w), (doc_id, got[doc_id], (L, w))
-        lens.add(L)
-    assert len(lens) >= 3, lens
-    assert len(got) == len(rows)
-
-
-def test_span_scrub_keep_first_coverage_semantics():
-    """C4 duplicate-span scrubbing (`span_scrub`): an independent
-    pure-Python replay — overlapping k-token windows, global keep-first by
-    (doc_id, pos), every other occurrence marks its k positions, doc
-    rebuilt from surviving tokens — must match the DuckDB oracle
-    row-for-row at sf0.001. Non-vacuous both ways: some doc loses tokens,
-    some doc keeps everything; and a doc's removal count is never more
-    than its token count."""
-    import re as _re
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        _TOKEN_PATTERN,
-        CLINICAL_SNIPPETS,
-        DUP_SPAN_K,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    got = {
-        r[0]: r[1:] for r in con.execute(QUERIES["span_scrub"][1]).fetchall()
-    }
-
-    rows = con.execute(
-        "SELECT doc_id, text FROM documents ORDER BY doc_id"
-    ).fetchall()
-    k = DUP_SPAN_K
-    toks_of = {}
-    for doc_id, text in rows:
-        full = CLINICAL_SNIPPETS[doc_id % len(CLINICAL_SNIPPETS)] + "\n" + text
-        toks_of[doc_id] = _re.findall(_TOKEN_PATTERN, full.lower())
-    first: dict = {}
-    for doc_id in sorted(toks_of):  # packed-key order == (doc_id, pos)
-        toks = toks_of[doc_id]
-        for i in range(max(len(toks) - k + 1, 0)):
-            w = tuple(toks[i : i + k])
-            first.setdefault(w, (doc_id, i))
-    removed_some = kept_all = False
-    for doc_id in sorted(toks_of):
-        toks = toks_of[doc_id]
-        cov = set()
-        for i in range(max(len(toks) - k + 1, 0)):
-            if first[tuple(toks[i : i + k])] != (doc_id, i):
-                cov.update(range(i, i + k))
-        keep = [t for i, t in enumerate(toks) if i not in cov]
-        exp = (len(toks), len(toks) - len(keep), " ".join(keep))
-        assert got[doc_id] == exp, (doc_id, got[doc_id][:2], exp[:2])
-        assert exp[1] <= exp[0]
-        removed_some |= exp[1] > 0
-        kept_all |= exp[1] == 0 and exp[0] > 0
-    assert removed_some and kept_all
-    assert len(got) == len(rows)
-
-
-def test_split_leakage_pure_python_replay():
-    """Split-leakage audit (`split_leakage`): an independent pure-Python
-    replay — md5-bucket 8/1/1 split, distinct k-token windows, leak
-    counts vs the train side, df<=cap attribution with (shared desc,
-    train_doc asc) tie-break — must match the DuckDB oracle row-for-row
-    at sf0.001. Both cap branches must fire: at least one doc leaks but
-    has NO attribution (all its shared windows are hub windows above
-    LEAK_DF_CAP) and at least one doc is attributed."""
-    import hashlib
-    import re as _re
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        _TOKEN_PATTERN,
-        CLINICAL_SNIPPETS,
-        DUP_SPAN_K,
-        LEAK_DF_CAP,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    got = {
-        r[0]: r[1:]
-        for r in con.execute(QUERIES["split_leakage"][1]).fetchall()
-    }
-    rows = con.execute("SELECT doc_id, text FROM documents").fetchall()
-    k = DUP_SPAN_K
-
-    def bucket(doc_id):
-        h = int(hashlib.md5(f"split|{doc_id}".encode()).hexdigest()[:15], 16)
-        return h % 10
-
-    wins_of = {}
-    for doc_id, text in rows:
-        full = CLINICAL_SNIPPETS[doc_id % len(CLINICAL_SNIPPETS)] + "\n" + text
-        toks = _re.findall(_TOKEN_PATTERN, full.lower())
-        wins_of[doc_id] = {
-            tuple(toks[i : i + k])
-            for i in range(max(len(toks) - k + 1, 0))
-        }
-    train = {d: ws for d, ws in wins_of.items() if bucket(d) < 8}
-    train_df: dict = {}
-    for ws in train.values():
-        for w in ws:
-            train_df[w] = train_df.get(w, 0) + 1
-    capped_fired = attributed = False
-    for doc_id, ws in wins_of.items():
-        b = bucket(doc_id)
-        if b < 8:
-            assert doc_id not in got
-            continue
-        leaked = {w for w in ws if w in train_df}
-        shared_counts: dict = {}
-        for td, tws in train.items():
-            s = sum(
-                1 for w in ws if w in tws and train_df[w] <= LEAK_DF_CAP
-            )
-            if s:
-                shared_counts[td] = s
-        if shared_counts:
-            top = min(shared_counts, key=lambda d: (-shared_counts[d], d))
-            top_doc, top_shared = top, shared_counts[top]
-            attributed = True
-        else:
-            top_doc, top_shared = -1, 0
-            capped_fired |= bool(leaked)
-        exp = (
-            "val" if b == 8 else "test",
-            len(ws),
-            len(leaked),
-            round(len(leaked) / max(len(ws), 1), 6),
-            top_doc,
-            top_shared,
-        )
-        assert got[doc_id] == exp, (doc_id, got[doc_id], exp)
-    assert capped_fired, "cap branch vacuous: every leaked doc attributed"
-    assert attributed, "attribution vacuous"
-
-
-def test_robots_filter_pure_python_replay_and_branches():
-    """Robots filtering (`robots_filter`): a pure-Python replay of the
-    first-matching-rule semantics must match the DuckDB oracle at
-    sf0.001, and all four planted branches must fire: a rule group whose
-    rules match nothing, a partial-block group, a group where two rules
-    match the same path (file-order argmin picks idx 0), and the empty
-    rule file group."""
-    import duckdb
-
-    from htep_spark.driver_queries import QUERIES, ROBOTS_RULES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    rows = con.execute(QUERIES["robots_filter"][1]).fetchall()
-    assert rows
-    by_grp: dict = {}
-    dom_counts: dict = {}
-    for doc_id, domain, path, rgrp, midx, mpfx, allowed, db, dt in rows:
-        assert path == f"/doc/{doc_id}"
-        cands = [
-            (i, p)
-            for g, i, p in ROBOTS_RULES
-            if g == rgrp and path.startswith(p)
-        ]
-        exp = min(cands) if cands else (-1, "")
-        assert (midx, mpfx) == exp, (doc_id, rgrp, midx, mpfx, exp)
-        assert allowed == (0 if cands else 1)
-        if rgrp == 2:
-            assert len(cands) == 2 and midx == 0 and mpfx == "/doc/"
-        by_grp.setdefault(rgrp, set()).add(allowed)
-        dom_counts.setdefault(domain, [0, 0])
-        dom_counts[domain][0] += 1 - allowed
-        dom_counts[domain][1] += 1
-    assert by_grp[0] == {1}, by_grp  # rules match nothing
-    assert by_grp[1] == {0, 1}, by_grp  # partial block
-    assert by_grp[2] == {0}, by_grp  # everything blocked (tie-break)
-    assert by_grp[3] == {1}, by_grp  # empty rule file
-    # per-domain rollup consistency (re-scan now that totals are final)
-    for doc_id, domain, path, rgrp, midx, mpfx, allowed, db, dt in rows:
-        assert [db, dt] == dom_counts[domain], (domain, db, dt)
-
-
-def test_mojibake_fix_pure_python_replay_and_branches():
-    """Mojibake repair (`mojibake_fix`): a pure-Python replay — the same
-    pair table applied with str.replace in pinned order over the same
-    prelude — must reproduce the DuckDB oracle's counts, char deltas and
-    md5 fingerprints (UTF-8 byte hashing parity on multibyte repair);
-    both the hit branch (n_moji > 0, changed, len_delta > 0) and the
-    clean branch (all zeros, md5 unchanged) must fire."""
-    import duckdb
-    import hashlib
-
-    from htep_spark.driver_queries import (
-        MOJI_SNIPPETS,
-        MOJIBAKE_PAIRS,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    got = {r[0]: r[1:] for r in con.execute(QUERIES["mojibake_fix"][1]).fetchall()}
-    raw = con.execute("SELECT doc_id, text FROM documents").fetchall()
-    hit = clean = 0
-    for doc_id, text in raw:
-        ctext = MOJI_SNIPPETS[doc_id % len(MOJI_SNIPPETS)] + "\n" + text
-        n = sum(ctext.count(k) for k, _ in MOJIBAKE_PAIRS)
-        fixed = ctext
-        for k, v in MOJIBAKE_PAIRS:
-            fixed = fixed.replace(k, v)
-        exp = (
-            n,
-            1 if n else 0,
-            len(ctext) - len(fixed),
-            hashlib.md5(ctext.encode()).hexdigest(),
-            hashlib.md5(fixed.encode()).hexdigest(),
-            1 if fixed != ctext else 0,
-        )
-        assert got[doc_id] == exp, (doc_id, got[doc_id], exp)
-        if n:
-            hit += 1
-            assert exp[2] > 0 and exp[5] == 1
-        else:
-            clean += 1
-            assert exp[3] == exp[4] and exp[5] == 0
-    assert hit and clean, (hit, clean)
-
-
-def test_template_lines_pure_python_replay_and_branches():
-    """Per-domain boilerplate removal (`template_lines`): a pure-Python
-    replay of the frequency-threshold rule over the planted preludes must
-    match the DuckDB oracle at sf0.001, and the planted branches must
-    fire: the 100% header and ~52% footer lines are template (dropped
-    everywhere), the ~28% promo line is below the 40% threshold (kept),
-    and real-text lines survive."""
-    import re
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        LINE_DEDUP_LEN,
-        QUERIES,
-        TPL_MIN_DOCS,
-        TPL_PCT,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT doc_id, source, text FROM documents").fetchall()
-    L = LINE_DEDUP_LEN
-    # replay the prelude + fixed-width line split
-    doc_lines: dict = {}
-    doc_src: dict = {}
-    for doc_id, source, text in raw:
-        j = doc_id // 20
-        parts = [f"nav home {source} about contact subscribe follow rss"]
-        if j % 2 == 0:
-            parts.append(
-                f"footer copyright {source} all rights reserved privacy terms"
-            )
-        if j % 4 == 0:
-            parts.append(f"promo banner {source} limited offer click here now")
-        parts.append(text)
-        toks = re.findall("[a-z0-9]+", " ".join(parts).lower())
-        lines = [
-            " ".join(toks[i : i + L]) for i in range(0, len(toks), L)
-        ]
-        doc_lines[doc_id] = lines
-        doc_src[doc_id] = int(source[3:])
-    # per-(domain, line) distinct-doc counts -> template set
-    from collections import defaultdict
-
-    nd: dict = defaultdict(set)
-    dom_docs: dict = defaultdict(int)
-    for doc_id, lines in doc_lines.items():
-        dom_docs[doc_src[doc_id]] += 1
-        for ln in set(lines):
-            nd[(doc_src[doc_id], ln)].add(doc_id)
-    tpl = {
-        (s, ln)
-        for (s, ln), ds in nd.items()
-        if 100 * len(ds) >= TPL_PCT * dom_docs[s] and len(ds) >= TPL_MIN_DOCS
-    }
-    rows = con.execute(QUERIES["template_lines"][1]).fetchall()
-    assert len(rows) == len(raw)
-    seen_kept_promo = 0
-    for doc_id, src, n_lines, n_drop, n_kept, n_tok, d_tpl, clean in rows:
-        assert src == doc_src[doc_id]
-        lines = doc_lines[doc_id]
-        exp_kept = [ln for ln in lines if (src, ln) not in tpl]
-        assert n_lines == len(lines)
-        assert n_drop == len(lines) - len(exp_kept)
-        assert n_kept == len(exp_kept)
-        assert clean == " ".join(exp_kept), doc_id
-        assert n_tok == sum(len(ln.split(" ")) for ln in exp_kept)
-        assert d_tpl == sum(1 for s, _ln in tpl if s == src)
-        # branch checks: header+footer stripped, promo kept
-        assert "nav home" not in clean and "footer copyright" not in clean
-        assert n_drop >= 1
-        if (doc_id // 20) % 4 == 0:
-            assert "promo banner" in clean
-            seen_kept_promo += 1
-    assert seen_kept_promo > 0
-    # every domain must have exactly the 2 planted template lines (header
-    # + footer): the promo line (~28%) stays below the 40% threshold
-    per_dom = {s: sum(1 for t, _ in tpl if t == s) for s in dom_docs}
-    assert set(per_dom.values()) == {2}, per_dom
-
-
-def test_nfc_normalize_pure_python_replay_and_branches():
-    """NFC normalization (`nfc_normalize`): a pure-Python unicodedata
-    replay must match the DuckDB (utf8proc) oracle at sf0.001 — two
-    independent UAX #15 implementations agreeing byte-for-byte — and the
-    planted branches must fire: combining-mark composition (classes 0,
-    1, 4 shrink), Hangul jamo LVT composition (class 2 shrinks by 2),
-    the ﬁ compatibility ligature and plain ASCII are preserved
-    (changed = 0)."""
-    import hashlib
-    import unicodedata
-
-    import duckdb
-
-    from htep_spark.driver_queries import NFC_SNIPPETS, QUERIES
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = dict(con.execute("SELECT doc_id, text FROM documents").fetchall())
-    rows = con.execute(QUERIES["nfc_normalize"][1]).fetchall()
-    assert len(rows) == len(raw)
-    seen = set()
-    for doc_id, n_orig, n_norm, n_comp, omd5, nmd5, changed in rows:
-        snip = NFC_SNIPPETS[doc_id % 6]
-        ctext = snip + "\n" + raw[doc_id]
-        norm = unicodedata.normalize("NFC", ctext)
-        assert omd5 == hashlib.md5(ctext.encode("utf-8")).hexdigest()
-        assert nmd5 == hashlib.md5(norm.encode("utf-8")).hexdigest()
-        assert n_orig == len(ctext) and n_norm == len(norm)
-        assert n_comp == len(ctext) - len(norm)
-        assert changed == (1 if norm != ctext else 0)
-        cls = doc_id % 6
-        if cls in (0, 4):
-            assert n_comp == 1 and changed == 1
-        elif cls in (1, 2):
-            assert n_comp == 2 and changed == 1
-        else:
-            assert n_comp == 0 and changed == 0
-        seen.add(cls)
-    assert seen == set(range(6))
-    # the ogonek+acute case exercises canonical REORDERING, not just
-    # composition: the raw mark order is non-canonical
-    assert unicodedata.normalize("NFC", NFC_SNIPPETS[4]) != NFC_SNIPPETS[4]
-
-
-def test_lm_kneser_ney_pure_python_replay_and_branches():
-    """Kneser-Ney LM (`lm_kneser_ney`): a pure-Python interpolated-KN
-    replay — same split, discount, continuation counts, floor — must
-    match the DuckDB oracle at sf0.001 to 6dp; every held-out doc fires
-    exactly one pure-continuation back-off (knua->join) and two floors
-    ((last, knua), (join, knub)); the back-off bigram must score a
-    POSITIVE probability (continuation mass of the common 'join');
-    every rounded mean_logp clears its 6dp boundary."""
-    import hashlib
-    import math
-    import re
-    from collections import Counter, defaultdict
-
-    import duckdb
-
-    from htep_spark.driver_queries import (
-        KN_DISCOUNT,
-        KN_FLOOR,
-        KN_SALT,
-        QUERIES,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    raw = con.execute("SELECT doc_id, text FROM documents").fetchall()
-
-    def is_train(d):
-        h = int(hashlib.md5(f"{KN_SALT}|{d}".encode()).hexdigest()[:15], 16)
-        return h % 2 == 0
-
-    doc_bigrams: dict = {}
-    big: Counter = Counter()
-    for d, t in raw:
-        text = t if is_train(d) else t + " knua join knub"
-        toks = re.findall("[a-z0-9]+", text.lower())
-        bgs = list(zip(toks, toks[1:]))
-        doc_bigrams[d] = bgs
-        if is_train(d):
-            big.update(bgs)
-    ctx: dict = defaultdict(lambda: [0, 0])  # w1 -> [cw1, n1f]
-    bwd: Counter = Counter()
-    for (w1, w2), c in big.items():
-        ctx[w1][0] += c
-        ctx[w1][1] += 1
-        bwd[w2] += 1
-    tt = float(len(big))
-    D = KN_DISCOUNT
-    rows = con.execute(QUERIES["lm_kneser_ney"][1]).fetchall()
-    held_ids = [d for d, _t in raw if not is_train(d)]
-    assert len(rows) == len(held_ids)
-    for doc_id, mean_logp, n_bigrams, n_backoff, n_floor in rows:
-        assert not is_train(doc_id)
-        bgs = doc_bigrams[doc_id]
-        assert n_bigrams == len(bgs)
-        logps, nb, nf = [], 0, 0
-        for w1, w2 in bgs:
-            pcont = bwd.get(w2, 0) / tt
-            if w1 in ctx:
-                cw1, n1f = ctx[w1]
-                p = (
-                    max(big.get((w1, w2), 0) - D, 0.0) / cw1
-                    + D * n1f / cw1 * pcont
-                )
-            else:
-                p = pcont
-                nb += 1
-                if w2 == "join":
-                    assert p > 0  # pure-continuation mass of a common token
-            if p <= 0:
-                nf += 1
-            logps.append(math.log(max(p, KN_FLOOR)))
-        exp = sum(logps) / len(logps)
-        frac = abs(exp * 1e6 - math.floor(exp * 1e6) - 0.5)
-        assert frac > 1e-4, (doc_id, exp)
-        assert mean_logp == round(exp, 6), (doc_id, mean_logp, exp)
-        assert (n_backoff, n_floor) == (nb, nf) == (1, 2), (doc_id, nb, nf)
-    # KN probability sanity on a seen context: sums to ~1 over the vocab
-    some_w1 = next(w1 for (w1, _w2) in big)
-    cw1, n1f = ctx[some_w1]
-    vocab = set(bwd) | {w2 for _w1, w2 in big}
-    total_p = sum(
-        max(big.get((some_w1, w2), 0) - D, 0.0) / cw1
-        + D * n1f / cw1 * (bwd.get(w2, 0) / tt)
-        for w2 in vocab
-    )
-    assert abs(total_p - 1.0) < 0.02, total_p

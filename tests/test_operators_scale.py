@@ -549,8 +549,8 @@ def test_lm_heldout_matches_pure_python(spark):
     held-out mean log-prob, exact global rank and tercile must all match a
     straightforward pure-Python reimplementation — and the held-out
     smoothing branch (bigram unseen in training) must actually fire, since
-    that fallback is exactly what distinguishes this from in-corpus
-    lm_score."""
+    that fallback is exactly what distinguishes this from an in-corpus
+    LM."""
     import hashlib
     import math
     import re

@@ -176,10 +176,10 @@ def test_exact_global_rank_has_no_single_partition_window(spark):
     NO Exchange SinglePartition anywhere in the plan (the naive
     row_number-over-unpartitioned-window collapses the dataset into one
     task)."""
-    from htep_spark.operators.ranking import q_lm_tercile
+    from htep_spark.operators.ranking import q_lm_heldout
 
     plan = (
-        q_lm_tercile(spark, "/root/testdata/sf0.001")
+        q_lm_heldout(spark, "/root/testdata/sf0.001")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -191,17 +191,6 @@ def test_exact_global_rank_has_no_single_partition_window(spark):
     assert "Scan ExistingRDD" in plan, plan
     assert "Exchange hashpartitioning" not in plan, plan
     assert "BroadcastExchange" in plan, plan
-    # the held-out variant rides the same construction — same gate
-    from htep_spark.operators.ranking import q_lm_heldout
-
-    hplan = (
-        q_lm_heldout(spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange SinglePartition" not in hplan, hplan
-    assert "Scan ExistingRDD" in hplan, hplan
     # rank-selected quantiles: same construction, same gate
     from htep_spark.driver_queries import q_token_quantiles
 
@@ -236,23 +225,9 @@ def test_mixture_plan_no_window(spark):
 
 
 def test_round6_operator_plan_shapes(spark):
-    """url_domains must stay entirely JVM-side (string expressions only —
-    no Python in the plan), join its per-domain rollup as a broadcast, and
-    shuffle the corpus exactly once (the rollup aggregation). block_keep is
-    one narrow Arrow projection (scan → exchange → UDF → explode), no
-    shuffle of parsed rows, no joins."""
+    """block_keep is one narrow Arrow projection (scan → exchange → UDF →
+    explode), no shuffle of parsed rows, no joins."""
     from htep_spark.driver_queries import QUERIES
-
-    plan = (
-        QUERIES["url_domains"][0](spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
-    assert "BroadcastExchange" in plan, plan
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "CartesianProduct" not in plan, plan
 
     bplan = (
         QUERIES["block_keep"][0](spark, "/root/testdata/sf0.001")
@@ -263,17 +238,6 @@ def test_round6_operator_plan_shapes(spark):
     assert bplan.count("ArrowEvalPython") == 1, bplan
     assert "Exchange hashpartitioning" not in bplan, bplan
     assert "CartesianProduct" not in bplan, bplan
-
-    # domain_quota: the rank<=Q filter must rewrite into WindowGroupLimit
-    # (top-Q per domain without materializing full ranks), all JVM-side
-    qplan = (
-        QUERIES["domain_quota"][0](spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "WindowGroupLimit" in qplan, qplan
-    assert "EvalPython" not in qplan, qplan
 
 
 def test_dup_spans_plan_shape(spark):
@@ -292,34 +256,6 @@ def test_dup_spans_plan_shape(spark):
     assert "CartesianProduct" not in plan, plan
     assert "Exchange SinglePartition" not in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
-
-
-def test_dup_longest_plan_is_shuffle_free(spark):
-    """dup_longest's scale claim (docstring): a doc-local problem solved
-    worker-locally — scan → JVM tokenize → mapInPandas with ZERO
-    exchanges of any kind, and exactly one Python stage (the bisection
-    kernel). line_dedup's corpus-global claim rides along: no cartesian
-    product, no single-partition exchange."""
-    from htep_spark.driver_queries import q_dup_longest, q_line_dedup
-
-    plan = (
-        q_dup_longest(spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan, plan
-    assert plan.count("MapInPandas") == 1, plan
-
-    lplan = (
-        q_line_dedup(spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "CartesianProduct" not in lplan, lplan
-    assert "Exchange SinglePartition" not in lplan, lplan
-    assert "EvalPython" not in lplan and "MapInPandas" not in lplan, lplan
 
 
 def test_stage_udf_pruning(spark):

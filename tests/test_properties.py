@@ -490,51 +490,3 @@ def test_asof_join_matches_pandas_merge_asof(spark):
         assert lhs.equals(rhs), f"tol={tol}: first diff at\n" + str(
             pd.concat([got, want["rid_r"].rename("want")], axis=1)[lhs != rhs].head()
         )
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.dictionaries(
-        st.integers(min_value=0, max_value=255),
-        st.integers(min_value=1, max_value=500),
-        max_size=60,
-    ),
-    st.integers(min_value=1, max_value=64),
-)
-def test_qdigest_properties(hist, k):
-    """Q-digest invariants on random histograms (universe 2^8 for speed —
-    the rule is depth-generic): (1) counts are preserved exactly; (2)
-    digest size <= 2k + 1 (each kept family totals > sigma and families
-    are disjoint); (3) every rank query errs by <= D * sigma ranks vs the
-    exact rank-selection answer; (4) compaction is a pure function (same
-    input -> identical digest)."""
-    from htep_spark.operators.qdigest import (
-        exact_quantile,
-        qdigest_compact,
-        qdigest_rank_query,
-        rank_of,
-    )
-
-    d = 8
-    n = sum(hist.values())
-    sigma = n // k
-    digest = qdigest_compact(hist, d, sigma)
-    assert digest == qdigest_compact(dict(reversed(list(hist.items()))), d, sigma)
-    assert sum(c for _, _, c in digest) == n
-    if sigma > 0:
-        assert len(digest) <= 2 * k + 1, (len(digest), k)
-    else:
-        assert len(digest) <= len(hist) + 1
-    for num, den in ((1, 2), (9, 10), (99, 100), (1, 100)):
-        r = (num * n + den - 1) // den
-        if r == 0:
-            continue
-        est = min(qdigest_rank_query(digest, r), max(hist))
-        assert abs(rank_of(hist, est) - r) <= d * sigma + max(hist.values()), (
-            # rank error bound: D*sigma from merged ancestors, plus at most
-            # one node's own count from the crossing node itself
-            hist, k, r, est,
-        )
-        exact = exact_quantile(hist, r)
-        if sigma == 0:
-            assert est == exact  # no compaction -> the sketch is exact

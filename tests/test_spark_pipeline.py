@@ -122,64 +122,6 @@ def test_checkpoint_resume(spark, transcripts_pdf, tmp_path):
     assert manifest.agg({"n_turns": "sum"}).collect()[0][0] == len(transcripts_pdf)
 
 
-def test_compact_output(spark, transcripts_pdf, tmp_path):
-    """Small-files compaction: row-set preserved exactly, file count drops
-    to the bin-packed group count, plan/manifest deterministic, oversized
-    parts pass through, re-run idempotent."""
-    from htep_spark.plans.compact import compact_output, plan_groups
-
-    src = str(tmp_path / "many_parts")
-    dst = str(tmp_path / "compacted")
-    df = spark.createDataFrame(transcripts_pdf, schema=TRANSCRIPT_SCHEMA)
-    df.repartition(8).write.mode("overwrite").parquet(src)
-
-    part_sizes = [
-        os.path.getsize(os.path.join(src, f))
-        for f in os.listdir(src)
-        if f.endswith(".parquet")
-    ]
-    assert len(part_sizes) == 8
-    target = sum(part_sizes) // 3  # force ~3-4 groups
-    groups = plan_groups(src, target)
-    assert 1 < len(groups) < 8
-    assert plan_groups(src, target) == groups  # deterministic plan
-    # tiny target: every file its own group (oversized pass-through)
-    assert len(plan_groups(src, 1)) == 8
-
-    result = compact_output(spark, src, dst, target_bytes=target)
-    assert result["n_files_in"] == 8
-    assert result["n_groups"] == len(groups)
-    assert result["n_rows"] == len(transcripts_pdf)
-    out = spark.read.parquet(dst)
-    assert out.count() == len(transcripts_pdf)
-    # row-set equality, not just counts
-    key = F.concat_ws("#", "conv_id", "turn_idx")
-    assert (
-        sorted(r[0] for r in out.select(key).collect())
-        == sorted(r[0] for r in df.select(key).collect())
-    )
-    # one data file per group
-    n_parts = sum(
-        1
-        for root, _d, names in os.walk(dst)
-        for n in names
-        if n.endswith(".parquet") and not n.startswith(".")
-    )
-    assert n_parts == len(groups)
-    # idempotent re-run (overwrite per group)
-    again = compact_output(spark, src, dst, target_bytes=target)
-    assert again["n_rows"] == result["n_rows"]
-    assert spark.read.parquet(dst).count() == len(transcripts_pdf)
-    # no Hive partition-column inference: compacted schema == the input's
-    # on-disk schema (parquet drops nullable=False on both sides equally)
-    assert spark.read.parquet(dst).schema == spark.read.parquet(src).schema
-    # re-plan with fewer groups must remove stale group dirs, not
-    # duplicate rows (review r04 finding)
-    big = compact_output(spark, src, dst, target_bytes=sum(part_sizes) * 2)
-    assert big["n_groups"] == 1
-    assert spark.read.parquet(dst).count() == len(transcripts_pdf)
-
-
 def test_extraction_plan_is_narrow(spark, transcripts):
     """The hot path must stay shuffle-free with pruned input columns."""
     plan = (
