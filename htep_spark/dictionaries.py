@@ -22,7 +22,6 @@ __all__ = [
     "MEDICAL_TERMS",
     "ENGLISH_COMMON",
     "SECTION_KEYWORDS",
-    "SECTION_TYPES",
     "DOCUMENT_PATTERNS",
     "DOCUMENT_TYPE_ORDER",
     "URGENT_KEYWORDS",
@@ -76,7 +75,6 @@ SECTION_KEYWORDS = {
     "plan": ["plan", "follow up", "follow-up", "recommendation"],
     "vitals": ["bp", "pulse", "temperature", "mmhg"],
 }
-SECTION_TYPES = list(SECTION_KEYWORDS) + ["general"]
 
 # src/nlp/classifier.py:29-121 — keyword lists + regex patterns per type;
 # dict insertion order is the stable tie-break of the score sort (:183).

@@ -38,7 +38,39 @@ from .dictionaries import (
     SECTION_KEYWORDS,
     URGENT_KEYWORDS,
 )
-from .operators.dedup import _TOKEN_PATTERN, token_barrier
+from .operators.bpe import q_bpe_encode, q_bpe_train, sql_bpe_encode, sql_bpe_train
+from .operators.decode import (
+    SQL_GREEDY_DECODE,
+    _sql_beam_replace,
+    q_beam_replace,
+    q_greedy_decode,
+)
+from .operators.dedup import (
+    _TOKEN_PATTERN,
+    MINHASH_QUERY_THRESHOLD,
+    SQL_MINHASH_KEEPERS,
+    SQL_MINHASH_LSH,
+    SQL_SIMHASH,
+    connected_components,
+    dedup_keepers,
+    q_minhash_lsh,
+    q_simhash,
+    token_barrier,
+)
+from .operators.ranking import q_lm_heldout, sql_lm_heldout
+from .operators.similarity import (
+    ann_ivf_seeded_topk,
+    ann_lsh_topk,
+    cosine_topk,
+    make_ann_ivf_sql,
+    make_ann_lsh_sql,
+)
+from .operators.text_analysis import (
+    SQL_WINNOW,
+    SQL_WINNOW_OVERLAP,
+    q_winnow_fingerprints,
+    q_winnow_overlap,
+)
 
 # --------------------------------------------------------------------------
 # Shared constants (single source for both engines)
@@ -1316,14 +1348,13 @@ SELECT doc_a, doc_b, jaccard FROM jpairs
 # min-label rounds until a round's second hop moves no label) from the
 # exact n-gram Jaccard pairs above, so the cluster/keeper logic is
 # hash-verified against a DuckDB recursive-CTE transitive closure. The
-# MinHash-LSH pair source (the at-scale candidate generator; xxhash64 is not
-# DuckDB-expressible) stays covered by `minhash_lsh` + `dedup_keepers_minhash`
-# rows-only queries and pytest (test_minhash_matches_exact_jaccard).
+# MinHash-LSH pair source (the at-scale candidate generator) is hash-checked
+# by `minhash_lsh` and `dedup_keepers_minhash`, which run its md5 base hash
+# (the one DuckDB can reproduce) against `SQL_MINHASH_LSH` and
+# `SQL_MINHASH_KEEPERS`; pytest gates md5/xxhash64 agreement.
 # --------------------------------------------------------------------------
 
 def q_dedup_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import connected_components
-
     pairs = q_ngram_jaccard(spark, sf_dir)
     comps = connected_components(pairs)
     docs = _docs(spark, sf_dir).select("doc_id")
@@ -1366,37 +1397,8 @@ ANN_N_QUERIES = 8
 
 
 def q_ann_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    queries = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
-    dot = F.aggregate(
-        F.zip_with("q", "v", lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-    )
-    norm = lambda c: F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda a: a * a), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
-    scored = (
-        F.broadcast(queries)
-        .join(emb, F.col("vec_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(dot / (norm(F.col("q")) * norm(F.col("v"))), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_K)
-        .select(
-            "query_id", "vec_id", "cosine", F.col("rank").cast("long").alias("rank")
-        )
-    )
+    out = cosine_topk(*_ann_inputs(spark, sf_dir), k=ANN_K)
+    return out.withColumn("rank", F.col("rank").cast("long"))
 
 
 SQL_ANN_COSINE = f"""
@@ -2132,12 +2134,6 @@ SQL_RANGE_JOIN_SESSIONS = _range_join_sessions_sql()
 # Registry
 # --------------------------------------------------------------------------
 
-def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import q_simhash
-
-    return q_simhash(spark, sf_dir)
-
-
 def _ann_inputs(spark: SparkSession, sf_dir: str):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
@@ -2147,46 +2143,19 @@ def _ann_inputs(spark: SparkSession, sf_dir: str):
 
 
 def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HASH-CHECKED: LSH-banded ANN (scale path) — the expr signature
-    backend makes the full band→candidate→re-rank flow DuckDB-reproducible
-    (``make_ann_lsh_sql`` from the same plane constants); numpy-backend
-    agreement is pytest-gated."""
-    from .operators.similarity import ann_lsh_topk
-
-    emb, queries = _ann_inputs(spark, sf_dir)
-    out = ann_lsh_topk(emb, queries, k=ANN_K)
-    return out.select(
-        "query_id", "vec_id", F.round("cosine", 6).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
-
-
-def _sql_ann_lsh() -> str:
-    from .operators.similarity import make_ann_lsh_sql
-
-    return make_ann_lsh_sql(ANN_N_QUERIES, ANN_K)
+    """HASH-CHECKED: LSH-banded ANN (scale path). The JVM-side band
+    chunks make the full band→candidate→re-rank flow DuckDB-reproducible
+    (``make_ann_lsh_sql`` from the same plane constants)."""
+    out = ann_lsh_topk(*_ann_inputs(spark, sf_dir), k=ANN_K)
+    return out.withColumn("rank", F.col("rank").cast("long"))
 
 
 def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HASH-CHECKED: IVF ANN with the seeded-row coarse quantizer
     (``make_ann_ivf_sql`` reproduces assignment + probe + re-rank in
-    DuckDB from the same constants). The k-means quantizer variant
-    (``ann_ivf_topk``) stays pytest-gated (top-1 agreement vs brute
-    force)."""
-    from .operators.similarity import ann_ivf_seeded_topk
-
-    emb, queries = _ann_inputs(spark, sf_dir)
-    out = ann_ivf_seeded_topk(emb, queries, k=ANN_K)
-    return out.select(
-        "query_id", "vec_id", F.round("cosine", 6).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
-
-
-def _sql_ann_ivf() -> str:
-    from .operators.similarity import make_ann_ivf_sql
-
-    return make_ann_ivf_sql(ANN_N_QUERIES, ANN_K)
+    DuckDB from the same constants)."""
+    out = ann_ivf_seeded_topk(*_ann_inputs(spark, sf_dir), k=ANN_K)
+    return out.withColumn("rank", F.col("rank").cast("long"))
 
 
 def _q_conv_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2279,60 +2248,6 @@ SELECT conv_id,
                  THEN 1 ELSE 0 END AS BIGINT) AS ordered_ok
 FROM t GROUP BY conv_id
 """
-
-
-def _q_greedy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.decode import q_greedy_decode
-
-    return q_greedy_decode(spark, sf_dir)
-
-
-def _sql_greedy_decode() -> str:
-    from .operators.decode import SQL_GREEDY_DECODE
-
-    return SQL_GREEDY_DECODE
-
-
-def _q_beam_replace(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.decode import q_beam_replace
-
-    return q_beam_replace(spark, sf_dir)
-
-
-def _q_lm_heldout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.ranking import q_lm_heldout
-
-    return q_lm_heldout(spark, sf_dir)
-
-
-def _sql_lm_heldout_str() -> str:
-    from .operators.ranking import sql_lm_heldout
-
-    return sql_lm_heldout()
-
-
-def _q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.bpe import q_bpe_train
-
-    return q_bpe_train(spark, sf_dir)
-
-
-def _sql_bpe_train_str() -> str:
-    from .operators.bpe import sql_bpe_train
-
-    return sql_bpe_train()
-
-
-def _q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.bpe import q_bpe_encode
-
-    return q_bpe_encode(spark, sf_dir)
-
-
-def _sql_bpe_encode_str() -> str:
-    from .operators.bpe import sql_bpe_encode
-
-    return sql_bpe_encode()
 
 
 # --------------------------------------------------------------------------
@@ -3460,7 +3375,7 @@ LEFT JOIN hits h USING (bench_id)
 # tools/check_oracles.py.
 # --------------------------------------------------------------------------
 
-FUZZY_RATIO_CUTOFF = 85.0  # dictionary_correct's production threshold
+FUZZY_RATIO_CUTOFF = 85.0  # dictionary_correct_batch's production threshold
 
 
 def _fuzzy_prelude_terms():
@@ -3615,25 +3530,14 @@ FROM words w LEFT JOIN best b ON b.token = w.token
 """
 
 
-def _sql_beam_replace_str() -> str:
-    from .operators.decode import _sql_beam_replace
-
-    return _sql_beam_replace()
-
-
-def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import q_minhash_lsh
-
-    return q_minhash_lsh(spark, sf_dir)
-
-
 def _q_minhash_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keeper verdict over the at-scale MinHash-LSH pair source (the same
-    connected-components operator as `dedup_keepers`, different pairs)."""
-    from .operators.dedup import MINHASH_QUERY_THRESHOLD, dedup_keepers
-
+    connected-components operator as `dedup_keepers`, different pairs). The
+    md5 base hash is the one ``SQL_MINHASH_KEEPERS`` models."""
     docs = _docs(spark, sf_dir)
-    out = dedup_keepers(docs, "doc_id", "text", threshold=MINHASH_QUERY_THRESHOLD)
+    out = dedup_keepers(
+        docs, "doc_id", "text", threshold=MINHASH_QUERY_THRESHOLD, base_hash="md5"
+    )
     return out.select(
         "doc_id", "cluster_id", F.col("keep").cast("long").alias("keep")
     )
@@ -3901,7 +3805,7 @@ FROM resolved
 # Dictionary-correction application (`dict_correct`): the T7
 # ocr_postprocessor waterfall APPLIED — the twin of `block_correct` for
 # the other correction path (ref ``src/nlp/ocr_postprocessor.py:188-283``).
-# The REAL ``dictionary_correct`` runs in a pandas UDF (drugs layer,
+# The REAL ``dictionary_correct_batch`` runs in a pandas UDF (drugs layer,
 # multi_dict empty — the n-gram detection pass is oracled separately via
 # `multiword_disease`); DuckDB re-derives per token: whitespace split,
 # strip-all-non-alpha + lower, the len<3 pass, the exact-set fast path,
@@ -4409,48 +4313,6 @@ FROM blocks
 """
 
 
-def _q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.text_analysis import q_winnow_fingerprints
-
-    return q_winnow_fingerprints(spark, sf_dir)
-
-
-def _q_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.text_analysis import q_winnow_overlap
-
-    return q_winnow_overlap(spark, sf_dir)
-
-
-def _sql_winnow_overlap() -> str:
-    from .operators.text_analysis import SQL_WINNOW_OVERLAP
-
-    return SQL_WINNOW_OVERLAP
-
-
-def _sql_simhash() -> str:
-    from .operators.dedup import SQL_SIMHASH
-
-    return SQL_SIMHASH
-
-
-def _sql_minhash() -> str:
-    from .operators.dedup import SQL_MINHASH_LSH
-
-    return SQL_MINHASH_LSH
-
-
-def _sql_minhash_keepers() -> str:
-    from .operators.dedup import SQL_MINHASH_KEEPERS
-
-    return SQL_MINHASH_KEEPERS
-
-
-def _sql_winnow() -> str:
-    from .operators.text_analysis import SQL_WINNOW
-
-    return SQL_WINNOW
-
-
 QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]]] = {
     "fusion": (q_fusion, SQL_FUSION),
     "fusion_events": (q_fusion_events, SQL_FUSION_EVENTS),
@@ -4460,18 +4322,18 @@ QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]
     "classify_segments": (q_classify_segments, SQL_CLASSIFY_SEGMENTS),
     "conv_class_rollup": (q_conv_class_rollup, SQL_CONV_CLASS_ROLLUP),
     "dedup_keepers": (q_dedup_keepers, SQL_DEDUP_KEEPERS),
-    "simhash": (_q_simhash, _sql_simhash()),
-    "winnow_fingerprints": (_q_winnow, _sql_winnow()),
-    "minhash_lsh": (_q_minhash_lsh, _sql_minhash()),
-    "dedup_keepers_minhash": (_q_minhash_keepers, _sql_minhash_keepers()),
-    "winnow_overlap": (_q_winnow_overlap, _sql_winnow_overlap()),
-    "ann_lsh": (_q_ann_lsh, _sql_ann_lsh()),
-    "ann_ivf": (_q_ann_ivf, _sql_ann_ivf()),
+    "simhash": (q_simhash, SQL_SIMHASH),
+    "winnow_fingerprints": (q_winnow_fingerprints, SQL_WINNOW),
+    "minhash_lsh": (q_minhash_lsh, SQL_MINHASH_LSH),
+    "dedup_keepers_minhash": (_q_minhash_keepers, SQL_MINHASH_KEEPERS),
+    "winnow_overlap": (q_winnow_overlap, SQL_WINNOW_OVERLAP),
+    "ann_lsh": (_q_ann_lsh, make_ann_lsh_sql(ANN_N_QUERIES, ANN_K)),
+    "ann_ivf": (_q_ann_ivf, make_ann_ivf_sql(ANN_N_QUERIES, ANN_K)),
     "conv_metrics": (_q_conv_metrics, None),
     "conv_metrics_order": (_q_conv_metrics_order, SQL_CONV_METRICS_ORDER),
     "extract_class": (_q_extract_class, SQL_EXTRACT_CLASS),
-    "greedy_decode": (_q_greedy_decode, _sql_greedy_decode()),
-    "beam_replace": (_q_beam_replace, _sql_beam_replace_str()),
+    "greedy_decode": (q_greedy_decode, SQL_GREEDY_DECODE),
+    "beam_replace": (q_beam_replace, _sql_beam_replace()),
     "dict_match": (q_dict_match, SQL_DICT_MATCH),
     "multiword_disease": (q_multiword_disease, SQL_MULTIWORD_DISEASE),
     "vitals_fields": (q_vitals_fields, SQL_VITALS_FIELDS),
@@ -4495,9 +4357,9 @@ QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]
     "top_ngrams": (q_top_ngrams, SQL_TOP_NGRAMS),
     "repetition_stats": (q_repetition_stats, SQL_REPETITION_STATS),
     "embed_keepers": (q_embed_keepers, SQL_EMBED_KEEPERS),
-    "lm_heldout": (_q_lm_heldout, _sql_lm_heldout_str()),
-    "bpe_train": (_q_bpe_train, _sql_bpe_train_str()),
-    "bpe_encode": (_q_bpe_encode, _sql_bpe_encode_str()),
+    "lm_heldout": (q_lm_heldout, sql_lm_heldout()),
+    "bpe_train": (q_bpe_train, sql_bpe_train()),
+    "bpe_encode": (q_bpe_encode, sql_bpe_encode()),
     "fuzzy_ratio": (q_fuzzy_ratio, _sql_fuzzy_ratio()),
     "dup_spans": (q_dup_spans, _sql_dup_spans()),
     "contamination": (q_contamination, _sql_contamination()),

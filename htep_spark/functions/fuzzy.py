@@ -30,7 +30,6 @@ __all__ = [
     "FuzzyMatcher",
     "get_matcher",
     "CloseMatchIndex",
-    "close_matches",
 ]
 
 # Size of the (queries × entries × chars) uint8 temporary one bound chunk
@@ -303,14 +302,3 @@ class CloseMatchIndex:
                     if r >= cutoff and (best is None or (r, x) > best):
                         best = (r, x)
         return best[1] if best else None
-
-
-def close_matches(
-    word: str,
-    possibilities: Iterable[str],
-    cutoff: float,
-) -> Optional[str]:
-    """Best match with difflib ratio >= cutoff, else None — one-shot
-    wrapper over :class:`CloseMatchIndex` (semantics of
-    ``difflib.get_close_matches(n=1)``; hot callers hold an index)."""
-    return CloseMatchIndex(possibilities).lookup(word, cutoff)

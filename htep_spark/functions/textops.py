@@ -8,7 +8,7 @@ Arrow batches — equality by construction, then tested anyway.
 Whitespace quirks are load-bearing and preserved exactly:
 - ``fusion_correct`` rejoins tokens with a single space, collapsing newlines
   (``src/pipeline/fusion.py:36``);
-- ``dictionary_correct`` does the same in its single-word pass
+- ``dictionary_correct_batch`` does the same in its single-word pass
   (``src/nlp/ocr_postprocessor.py:270``).
 """
 
@@ -26,9 +26,7 @@ __all__ = [
     "fusion_correct",
     "normalize_ocr_confusions",
     "apply_case",
-    "correct_token",
     "correct_text_regex",
-    "dictionary_correct",
     "dictionary_correct_batch",
     "postprocess",
     "postprocess_batch",
@@ -158,19 +156,6 @@ class TokenCorrector:
         if close_english:
             return apply_case(original, self._english_lookup[close_english]), "english"
         return original, None
-
-
-def correct_token(
-    token: str,
-    medical_terms: Sequence[str],
-    english_terms: Sequence[str],
-    similarity_cutoff: float = 0.84,
-    english_similarity_cutoff: float = 0.93,
-) -> Tuple[str, Optional[str]]:
-    """One-shot wrapper over :class:`TokenCorrector` (tests/convenience)."""
-    return TokenCorrector(
-        medical_terms, english_terms, similarity_cutoff, english_similarity_cutoff
-    ).correct(token)
 
 
 def correct_text_regex(
@@ -403,8 +388,8 @@ def _word_action(
     exact_set: frozenset,
     result: Optional[Tuple[str, float]],
 ) -> Tuple[str, Optional[str], Optional[int]]:
-    """Per-word decision of ``dictionary_correct`` given the cleaned word
-    and its fuzzy lookup result (semantics of
+    """Per-word decision of ``dictionary_correct_batch`` given the cleaned
+    word and its fuzzy lookup result (semantics of
     ``src/nlp/ocr_postprocessor.py:188-283``, see its docstring)."""
     if len(clean) < 3:
         return (word, None, None)
@@ -520,21 +505,6 @@ def dictionary_correct_batch(
         (out_text, corrections, sorted(matched | found))
         for out_text, (corrections, matched), found in zip(out_texts, per_text, multi)
     ]
-
-
-def dictionary_correct(
-    text: str,
-    single_dict: Sequence[str],
-    multi_dict: Sequence[str],
-    exact_set: frozenset,
-    threshold: float,
-    label: str,
-    memo: Optional[Dict[str, Optional[Tuple[str, float]]]] = None,
-) -> Tuple[str, List[Dict], List[str]]:
-    """:func:`dictionary_correct_batch` of one text."""
-    return dictionary_correct_batch(
-        [text], single_dict, multi_dict, exact_set, threshold, label, memo
-    )[0]
 
 
 def postprocess_batch(

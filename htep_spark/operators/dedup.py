@@ -1,4 +1,4 @@
-"""Near-duplicate detection at scale: MinHash+LSH and SimHash.
+"""Near-duplicate detection at scale: MinHash+LSH, plus SimHash signatures.
 
 Training-data pipeline operators (task brief): exact dedup and n-gram
 Jaccard live in ``driver_queries.py`` (SQL-expressible, DuckDB-checked);
@@ -13,14 +13,11 @@ self-join:
   (band, band_hash) — shuffle is O(n·bands), never O(n²), with oversized
   buckets star-paired to a representative (``_capped_band_pairs``).
 - **SimHash**: 64-bit signature via an Arrow-vectorized pandas UDF (numpy
-  bit ops — no per-row Python), then 8×8-bit band equi-join for
-  candidates (pigeonhole-exact for Hamming ≤ 7) and exact Hamming filter
-  via ``bit_count(a XOR b)``.
+  bit ops — no per-row Python), the ``simhash`` query.
 
 Both are deterministic (fixed hash constants, no RNG at runtime), and both
-are DuckDB-oracle-checked end to end (``SQL_MINHASH_LSH`` /
-``SQL_MINHASH_KEEPERS`` / ``SQL_SIMHASH`` generated from the same
-constants).
+are DuckDB-oracle-checked (``SQL_MINHASH_LSH`` / ``SQL_MINHASH_KEEPERS`` /
+``SQL_SIMHASH`` generated from the same constants).
 """
 
 from __future__ import annotations
@@ -40,7 +37,6 @@ __all__ = [
     "lsh_candidate_pairs",
     "minhash_dedup_pairs",
     "simhash_udf",
-    "simhash_near_dup_pairs",
     "connected_components",
     "dedup_keepers",
     "q_minhash_lsh",
@@ -204,31 +200,25 @@ class _Pins:
 
 
 def _capped_band_pairs(
-    bands: DataFrame, keys, max_bucket_size: int, pins: _Pins, payload: str | None = None
+    bands: DataFrame, keys, max_bucket_size: int, pins: _Pins
 ) -> DataFrame:
-    """(doc_id[, payload], *keys) band rows → candidate (doc_a, doc_b
-    [, payload_a, payload_b]) pairs with a per-bucket size cap.
+    """(doc_id, *keys) band rows → candidate (doc_a, doc_b) pairs with a
+    per-bucket size cap.
 
     Buckets ≤ cap: all-pairs equi-join (the normal LSH path). Buckets > cap
     (degenerate corpora — boilerplate, empty docs — where one bucket would
     otherwise contribute O(bucket²) join rows): **star pairs** to the
     bucket's minimum doc_id — O(bucket) rows that keep every member
     *candidate*-connected to the representative. Downstream exact filters
-    (est_jaccard / Hamming) still apply to every emitted pair, so cluster
+    (est_jaccard) still apply to every emitted pair, so cluster
     connectivity through the star survives only where the rep-member pair
     itself passes the filter — docs similar to each other but not to the
     representative can end up in separate clusters. That pairwise-recall
     loss inside oversized buckets is the deliberate trade for a hard
     O(n·bands) bound; the MinHash DuckDB oracle models the same cap, so
     Spark and oracle agree at any bucket size.
-
-    ``payload`` names an optional per-doc column (e.g. the simhash value)
-    carried through to both sides of each pair, avoiding a re-join against
-    (and recomputation of) the signature relation.
     """
     keys = list(keys)
-    pcols_a = [F.col(f"a.{payload}").alias(f"{payload}_a")] if payload else []
-    pcols_b = [F.col(f"b.{payload}").alias(f"{payload}_b")] if payload else []
     sizes = bands.groupBy(*keys).agg(F.count("*").alias("_bn"))
     # pinned (round 7): tagged feeds the small-bucket self-join (both
     # aliases), the big-bucket filter and the representative agg — four
@@ -245,27 +235,14 @@ def _capped_band_pairs(
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            *pcols_a,
-            *pcols_b,
         )
     )
-    # struct-min picks the representative and its payload in one pass
-    rep_struct = F.struct("doc_id", *([payload] if payload else []))
-    reps = big.groupBy(*keys).agg(F.min(rep_struct).alias("_rep"))
-    rcols = (
-        [F.col(f"_rep.{payload}").alias(f"{payload}_a"), F.col(f"b.{payload}").alias(f"{payload}_b")]
-        if payload
-        else []
-    )
+    reps = big.groupBy(*keys).agg(F.min("doc_id").alias("_rep"))
     cand_big = (
         big.alias("b")
         .join(reps, keys)
-        .filter(F.col("b.doc_id") != F.col("_rep.doc_id"))
-        .select(
-            F.col("_rep.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            *rcols,
-        )
+        .filter(F.col("b.doc_id") != F.col("_rep"))
+        .select(F.col("_rep").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
     )
     return cand_small.unionByName(cand_big).distinct()
 
@@ -383,52 +360,6 @@ def simhash_udf(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
 
     for series in texts:
         yield series.map(one).astype("int64")
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 7,
-    max_bucket_size: int = MAX_BUCKET_SIZE,
-) -> DataFrame:
-    """8×8-bit band join + exact Hamming ≤ max_hamming filter.
-
-    Pigeonhole: any pair within Hamming distance 7 shares at least one of
-    the 8 byte-chunks, so candidate generation at this banding is *exact*
-    for the default threshold — no recall loss, shuffle stays O(n·8).
-
-    Bucket sizes are capped (``_capped_band_pairs``): a (band, chunk)
-    bucket over ``max_bucket_size`` emits star pairs to its min doc_id
-    instead of all pairs. Unlike MinHash bands, an 8-bit chunk collision is
-    weak evidence, so the cap here trades exactness *inside* degenerate
-    buckets for the hard O(n·8) bound — identical docs (Hamming 0) still
-    pair with the representative and stay connected for dedup."""
-    sigs = df.select(
-        F.col(id_col).alias("doc_id"), simhash_udf(F.col(text_col)).alias("sim")
-    )
-    bands = sigs.select(
-        "doc_id",
-        "sim",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("sim"), 8 * b).bitwiseAND(F.lit(0xFF))
-                    for b in range(8)
-                ]
-            )
-        ).alias("band", "chunk"),
-    )
-    cand = _capped_band_pairs(
-        bands, ["band", "chunk"], max_bucket_size, _Pins(), payload="sim"
-    )
-    return (
-        cand.withColumn(
-            "hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
 
 
 def _local_stars(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -579,8 +510,11 @@ def dedup_keepers(
     )
     comps = _components(pairs, pins)
     all_docs = df.select(F.col(id_col).alias("doc_id"))
+    # the label table holds only the docs of some passing pair; broadcast,
+    # the closing left join shuffles neither side. A corpus whose
+    # duplicated docs outgrow a broadcast would need the hint dropped.
     return (
-        all_docs.join(comps, "doc_id", "left")
+        all_docs.join(F.broadcast(comps), "doc_id", "left")
         .select(
             "doc_id",
             F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),

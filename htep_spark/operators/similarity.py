@@ -1,47 +1,38 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths (task brief "training-data pipeline" operators):
+Three top-k paths, each ranking on the 6dp-rounded cosine with ``vec_id``
+breaking ties, and each checked against a DuckDB oracle:
 
-- **Brute-force cosine top-k** (the exact baseline; DuckDB-oracled form in
-  ``driver_queries.q_ann_cosine``): broadcast the query set, JVM-side
+- **Brute-force cosine top-k** (the exact baseline, query
+  ``ann_cosine``): broadcast the query set, JVM-side
   ``zip_with``/``aggregate`` dot products, ``row_number`` window for top-k.
   Exact, O(|queries|·n) — right answer whenever the query set is small.
 - **LSH-bucketed ANN** (the scale path): random-hyperplane signatures
   (deterministic seeded planes), multi-probe candidate generation by
   signature-band equi-join — shuffle O(n·bands) instead of a full cross
   product — then exact cosine re-rank of candidates only. Recall is
-  tunable by (n_planes, bands). Two signature backends with pytest-gated
-  agreement: ``expr`` (default — JVM fold dot products against literal
-  plane arrays, whole-stage-codegen-able and reproducible in DuckDB, so
-  the driver hash-checks the full LSH flow) and ``numpy`` (one
-  Arrow-vectorized pandas UDF, BLAS matmul). Both quantize the hyperplane
-  sign as ``round(dot, 6) > 0`` — making the bit decision robust to
-  float-summation-order differences between BLAS, JVM fold, and DuckDB's
+  tunable by (n_planes, bands). The band chunks are JVM fold dot products
+  against literal plane arrays: whole-stage-codegen-able and reproducible
+  in DuckDB (``make_ann_lsh_sql``). The hyperplane sign is quantized as
+  ``round(dot, 6) > 0``, so the bit decision is robust to
+  float-summation-order differences between the JVM fold and DuckDB's
   ``list_dot_product``.
 - **IVF ANN**: coarse-quantize into cells, probe the query's nearest
-  cells, exact re-rank within probed cells. Two coarse quantizers:
-  ``seed`` (default — centroids are deterministic member rows of the
-  table itself, fully SQL-expressible → driver hash-checked) and
-  ``kmeans`` (bounded-sample Lloyd iterations — the offline-training
-  shape a production IVF would use).
+  cells, exact re-rank within probed cells. The centroids are
+  deterministic member rows of the table itself, so the flow is fully
+  SQL-expressible (``make_ann_ivf_sql``).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegerType, LongType
 from pyspark.sql.window import Window
 
 __all__ = [
     "cosine_topk",
-    "hyperplane_signature_udf",
     "ann_lsh_topk",
-    "ann_ivf_topk",
     "ann_ivf_seeded_topk",
     "make_ann_lsh_sql",
     "make_ann_ivf_sql",
@@ -68,7 +59,9 @@ def cosine_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Exact top-k by cosine; queries broadcast (small side)."""
+    """Exact top-k by cosine; queries broadcast (small side). Ranks on the
+    6dp-rounded cosine, like the ANN paths, so near-ties order the same
+    in Spark and DuckDB."""
     emb = embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v")
     )
@@ -77,7 +70,8 @@ def cosine_topk(
         F.col(vec_col).cast("array<double>").alias("q"),
     )
     scored = F.broadcast(q).join(emb, F.col("vec_id") != F.col("query_id")).withColumn(
-        "cosine", _dot(F.col("q"), F.col("v")) / (_norm(F.col("q")) * _norm(F.col("v")))
+        "cosine",
+        F.round(_dot(F.col("q"), F.col("v")) / (_norm(F.col("q")) * _norm(F.col("v"))), 6),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
@@ -90,30 +84,6 @@ def cosine_topk(
 def _planes(dim: int, n_planes: int = N_PLANES) -> np.ndarray:
     rng = np.random.default_rng(20260816)  # fixed seed — deterministic planes
     return rng.standard_normal((n_planes, dim))
-
-
-def make_signature_udf(dim: int = _DIM_DEFAULT, n_planes: int = N_PLANES):
-    planes = _planes(dim, n_planes)
-
-    @F.pandas_udf(LongType())
-    def signature(vecs: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in vecs:
-            mat = np.stack(
-                [
-                    np.asarray(v, dtype=np.float64)
-                    if v is not None
-                    else np.zeros(dim)
-                    for v in series
-                ]
-            )
-            # quantized sign (same rule as the expr backend / DuckDB
-            # oracle): round to 6dp before the bit decision, so BLAS
-            # summation order cannot flip a near-zero dot product
-            bits = np.round(mat @ planes.T, 6) > 0  # (n, n_planes)
-            weights = (1 << np.arange(n_planes, dtype=np.int64))
-            yield pd.Series(bits.astype(np.int64) @ weights)
-
-    return signature
 
 
 def _expr_band_chunks(vec, dim: int = _DIM_DEFAULT, n_planes: int = N_PLANES):
@@ -166,9 +136,6 @@ def _sql_band_chunks(vec_expr: str, dim: int = _DIM_DEFAULT, n_planes: int = N_P
     return chunks
 
 
-hyperplane_signature_udf = make_signature_udf()
-
-
 def ann_lsh_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -177,41 +144,16 @@ def ann_lsh_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     dim: int = _DIM_DEFAULT,
-    signature_mode: str = "expr",
 ) -> DataFrame:
-    """LSH candidate generation + exact cosine re-rank of candidates.
-
-    ``signature_mode="expr"`` (default) computes band chunks as JVM column
-    expressions (DuckDB-reproducible — the driver's `ann_lsh` oracle);
-    ``"numpy"`` uses the Arrow-batched pandas UDF. Identical outputs are
-    pytest-gated (both quantize the hyperplane sign at 6dp)."""
-    bits_per_band = N_PLANES // N_BANDS
-    mask = (1 << bits_per_band) - 1
+    """LSH candidate generation + exact cosine re-rank of candidates. The
+    band chunks are JVM column expressions (``_expr_band_chunks``), which
+    DuckDB reproduces for the ``ann_lsh`` oracle."""
 
     def with_bands(df: DataFrame, idc: str, vc) -> DataFrame:
-        if signature_mode == "expr":
-            return df.select(
-                idc,
-                vc.alias("vec"),
-                F.posexplode(F.array(*_expr_band_chunks(vc, dim))).alias(
-                    "band", "chunk"
-                ),
-            )
-        sig = make_signature_udf(dim)
-        s = df.withColumn("sig", sig(vc))
-        return s.select(
+        return df.select(
             idc,
             vc.alias("vec"),
-            F.posexplode(
-                F.array(
-                    *[
-                        F.shiftrightunsigned(F.col("sig"), b * bits_per_band)
-                        .bitwiseAND(F.lit(mask))
-                        .cast("int")
-                        for b in range(N_BANDS)
-                    ]
-                )
-            ).alias("band", "chunk"),
+            F.posexplode(F.array(*_expr_band_chunks(vc, dim))).alias("band", "chunk"),
         )
 
     emb = embeddings.select(
@@ -248,9 +190,9 @@ def ann_lsh_topk(
 
 
 def make_ann_lsh_sql(n_queries: int, k: int, dim: int = _DIM_DEFAULT) -> str:
-    """DuckDB oracle for ``ann_lsh_topk(signature_mode='expr')``, generated
-    from the same plane constants: band chunks from quantized hyperplane
-    signs, (band, chunk) equi-join candidates, exact 6dp cosine re-rank."""
+    """DuckDB oracle for ``ann_lsh_topk``, generated from the same plane
+    constants: band chunks from quantized hyperplane signs, (band, chunk)
+    equi-join candidates, exact 6dp cosine re-rank."""
     e_chunks = ", ".join(_sql_band_chunks("v", dim))
     q_chunks = ", ".join(_sql_band_chunks("qv", dim))
     return f"""
@@ -289,98 +231,6 @@ QUALIFY rank <= {k}
 
 IVF_N_CELLS = 16
 IVF_N_PROBE = 2
-_IVF_KMEANS_ITERS = 5
-
-
-def _ivf_centroids(vectors: np.ndarray, n_cells: int = IVF_N_CELLS) -> np.ndarray:
-    """Deterministic Lloyd iterations from seeded initial centroids.
-
-    Trained driver-side on a bounded sample (IVF training is always a
-    sample-based offline step; the assignment below is the distributed
-    part). Fixed seed → same cells every run."""
-    rng = np.random.default_rng(20260817)
-    n = len(vectors)
-    centroids = vectors[rng.choice(n, size=min(n_cells, n), replace=False)].copy()
-    for _ in range(_IVF_KMEANS_ITERS):
-        # cosine assignment: normalize then argmax dot
-        vn = vectors / np.maximum(np.linalg.norm(vectors, axis=1, keepdims=True), 1e-12)
-        cn = centroids / np.maximum(np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
-        assign = (vn @ cn.T).argmax(axis=1)
-        for c in range(len(centroids)):
-            members = vectors[assign == c]
-            if len(members):
-                centroids[c] = members.mean(axis=0)
-    return centroids
-
-
-def make_cell_assign_udf(centroids: np.ndarray, n_probe: int = 1):
-    """vector → array of the n_probe nearest cell ids (numpy-vectorized)."""
-    cn = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-    )
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def assign(vecs: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in vecs:
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in series])
-            mn = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            sims = mn @ cn.T
-            top = np.argsort(-sims, axis=1)[:, :n_probe]
-            yield pd.Series([row.astype(int).tolist() for row in top])
-
-    return assign
-
-
-def ann_ivf_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    n_cells: int = IVF_N_CELLS,
-    n_probe: int = IVF_N_PROBE,
-    train_sample: int = 4096,
-) -> DataFrame:
-    """IVF-style ANN: coarse-quantize into cells, probe the query's nearest
-    ``n_probe`` cells, exact cosine re-rank within probed cells only.
-
-    Shuffle shape: equi-join on ``cell`` — O(n·1) for the index side and
-    O(q·n_probe) for queries; the cross product never materializes."""
-    sample = np.stack(
-        [
-            np.asarray(r[0], dtype=np.float64)
-            for r in embeddings.select(id_col, vec_col)
-            .orderBy(id_col)
-            .limit(train_sample)
-            .select(vec_col)
-            .collect()
-        ]
-    )
-    centroids = _ivf_centroids(sample, n_cells)
-    assign1 = make_cell_assign_udf(centroids, n_probe=1)
-    assign_p = make_cell_assign_udf(centroids, n_probe=n_probe)
-
-    emb = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v")
-    ).withColumn("cell", F.element_at(assign1(F.col("v")), 1))
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    ).withColumn("cell", F.explode(assign_p(F.col("qv"))))
-
-    cand = q.join(emb, "cell").filter(F.col("vec_id") != F.col("query_id"))
-    scored = cand.withColumn(
-        "cosine", _dot(F.col("qv"), F.col("v")) / (_norm(F.col("qv")) * _norm(F.col("v")))
-    ).dropDuplicates(["query_id", "vec_id"])
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
-
-
 # ----------------------------------------------------- IVF (seeded cells) --
 
 IVF_SEED_OFFSET = 100
@@ -402,13 +252,12 @@ def ann_ivf_seeded_topk(
     n_cells)`` — deterministic actual rows of the table, so the whole flow
     (assignment → cell equi-join → exact re-rank) is SQL-expressible and
     driver hash-checked (``make_ann_ivf_sql``). IVF does not require
-    k-means; any fixed coarse quantizer partitions the space — the Lloyd
-    variant (``ann_ivf_topk``) remains the offline-trained alternative.
+    k-means; any fixed coarse quantizer partitions the space.
 
-    Same shuffle shape as the k-means variant: centroids broadcast, every
-    vector assigned to its top cell (6dp-rounded cosine, cell-asc
-    tie-break), queries probe ``n_probe`` cells, candidates come from a
-    cell equi-join — the cross product never materializes."""
+    Shuffle shape: centroids broadcast, every vector assigned to its top
+    cell (6dp-rounded cosine, cell-asc tie-break), queries probe
+    ``n_probe`` cells, candidates come from a cell equi-join — the cross
+    product never materializes."""
     emb = embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v")
     )

@@ -25,6 +25,7 @@ import os
 import time
 from typing import Dict, List, Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,10 +57,15 @@ def plan_units(input_path: str) -> List[Dict[str, str]]:
 
 
 def read_manifest(spark: SparkSession, manifest_dir: str) -> Optional[DataFrame]:
+    """The manifest table, or None when no run has written one yet. Any
+    other read failure (a corrupt manifest) raises: reading it as "no
+    manifest" would re-run every unit and keep appending to it."""
     try:
         return spark.read.parquet(manifest_dir)
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 def pending_units(spark: SparkSession, input_path: str, manifest_dir: str) -> List[Dict]:

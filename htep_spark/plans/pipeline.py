@@ -6,7 +6,7 @@ Physical design for 10^12 turns (SURVEY.md §4):
   projection → sink. No shuffle, no driver collection; Catalyst prunes the
   scan to the referenced columns.
 - The shuffles in the job are the per-conversation stages: this module's
-  metrics/validation pass and ``operators/conversation.conversation_rollup``.
+  metrics pass and ``operators/conversation.conversation_rollup``.
   Conversation skew (one conversation with 10^6 turns) is a *group* skew
   AQE's skew-join splitting does not fix. Both stages are one
   ``groupBy("conv_id")`` of partial-aggregable aggregates, so a
@@ -29,7 +29,6 @@ __all__ = [
     "run_extraction",
     "per_conversation_metrics",
     "per_conversation_order",
-    "validate_turn_order",
 ]
 
 
@@ -100,14 +99,3 @@ def per_conversation_order(transcripts: DataFrame) -> DataFrame:
         .cast("long")
         .alias("ordered_ok"),
     )
-
-
-def validate_turn_order(extracted: DataFrame) -> bool:
-    """True iff every conversation's turn indices are exactly 0..n-1."""
-    bad = (
-        per_conversation_metrics(extracted)
-        .filter(~F.col("ordered_ok"))
-        .limit(1)
-        .count()
-    )
-    return bad == 0

@@ -54,53 +54,32 @@ def stream_dedup_turns(
 
 
 def stream_conversation_state(
-    stream_df: DataFrame,
-    watermark: str = "10 minutes",
-    idle_timeout_ms: int = 0,
+    stream_df: DataFrame, watermark: str = "10 minutes"
 ) -> DataFrame:
     """Custom stateful operator: per-conversation running progress via
     ``applyInPandasWithState`` (GroupState).
 
-    State per ``conv_id``: turns seen, max turn_idx, contiguity-so-far (the
-    streaming form of the batch ``ordered_ok`` invariant), drug-turn count.
-    Emits one updated row per conversation per micro-batch; a conversation
-    idle past ``idle_timeout_ms`` (when > 0) emits a final ``closed=true``
-    row and drops its state — bounded state under 10^12-turn streams: state
-    size is O(live conversations), not O(turns). Timeout-based closing uses
-    ``ProcessingTimeTimeout`` and suits continuously-running queries; with
-    ``Trigger.AvailableNow`` leave it at 0 (``NoTimeout``) so the query
-    terminates once the backlog drains."""
+    State per ``conv_id``: turns seen, max turn_idx, distinct turns and
+    drug-turn count, from which each row derives contiguity-so-far (the
+    streaming form of the batch ``ordered_ok`` invariant). Emits one
+    updated row per conversation per micro-batch; state size is O(live
+    conversations), not O(turns)."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     output_schema = (
         "conv_id string, n_turns long, max_turn long, distinct_turns long, "
-        "contiguous boolean, n_drug_turns long, closed boolean"
+        "contiguous boolean, n_drug_turns long"
     )
-    state_schema = (
-        "n_turns long, max_turn long, distinct_turns long, "
-        "n_drug_turns long, seen_hash long"
-    )
+    state_schema = "n_turns long, max_turn long, distinct_turns long, n_drug_turns long"
 
     out_cols = [
-        "conv_id", "n_turns", "max_turn", "distinct_turns",
-        "contiguous", "n_drug_turns", "closed",
+        "conv_id", "n_turns", "max_turn", "distinct_turns", "contiguous", "n_drug_turns",
     ]
 
     def update(key, pdfs, state: GroupState):
         (conv_id,) = key
-        if state.hasTimedOut:
-            n, mx, dstn, drugs, _ = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [[conv_id, n, mx, dstn, dstn == mx + 1 == n, drugs, True]],
-                columns=out_cols,
-            )
-            return
-        if state.exists:
-            n, mx, dstn, drugs, seen_hash = state.get
-        else:
-            n, mx, dstn, drugs, seen_hash = 0, -1, 0, 0, 0
+        n, mx, dstn, drugs = state.get if state.exists else (0, -1, 0, 0)
         seen = set()
         for pdf in pdfs:
             for turn_idx, drug_hits in zip(pdf["turn_idx"], pdf["n_drug"]):
@@ -108,19 +87,15 @@ def stream_conversation_state(
                 ti = int(turn_idx)
                 if ti > mx:
                     mx = ti
-                if ti not in seen:
-                    seen.add(ti)
+                seen.add(ti)
                 drugs += int(drug_hits)
         # distinct count approximation across batches: exact within batch,
         # cross-batch via max-turn bound (state stores no per-turn set —
         # bounded state); contiguity check is (distinct == max+1 == total)
         dstn += len(seen)
-        state.update((n, mx, dstn, drugs, seen_hash))
-        if idle_timeout_ms > 0:
-            state.setTimeoutDuration(idle_timeout_ms)
+        state.update((n, mx, dstn, drugs))
         yield pd.DataFrame(
-            [[conv_id, n, mx, dstn, dstn == mx + 1 == n, drugs, False]],
-            columns=out_cols,
+            [[conv_id, n, mx, dstn, dstn == mx + 1 == n, drugs]], columns=out_cols
         )
 
     extracted = stream_extraction(stream_df).select(
@@ -137,11 +112,7 @@ def stream_conversation_state(
             outputStructType=output_schema,
             stateStructType=state_schema,
             outputMode="update",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if idle_timeout_ms > 0
-                else GroupStateTimeout.NoTimeout
-            ),
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 

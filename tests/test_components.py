@@ -1,6 +1,8 @@
 """``operators.dedup.connected_components``: labels equal a union-find
 reference on graphs spread over several partitions, one call stays within
-its Spark job and pin budget, and a call that runs out of rounds raises."""
+its Spark job and pin budget, and a call that runs out of rounds raises.
+One ``dedup_keepers`` call over a corpus with planted near-copies stays
+within its job and pin budget too."""
 
 from __future__ import annotations
 
@@ -115,5 +117,43 @@ def test_connected_components_job_and_pin_budget(spark):
     assert {r["cluster_id"] for r in labels} == {c * 7 for c in range(400)}
     assert len(labels) == 2_000
     assert len(jobs) <= 12, len(jobs)
+    new_pins = set(sc._jsc.getPersistentRDDs().keySet().toArray()) - pinned
+    assert len(new_pins) <= 1, new_pins
+
+
+def _dup_corpus(spark):
+    """(doc_id, text) rows: 1,000 twenty-word documents, every fourth with
+    two near-copies (one word replaced), ids shuffled over the partitions."""
+    rng = random.Random(301)
+    vocab = [f"w{i}" for i in range(500)]
+    rows = []
+    for i in range(1_000):
+        words = rng.choices(vocab, k=20)
+        rows.append(" ".join(words))
+        if i % 4 == 0:
+            for _ in range(2):
+                copy = list(words)
+                copy[rng.randrange(20)] = rng.choice(vocab)
+                rows.append(" ".join(copy))
+    ids = _random_ids(rng, len(rows), 0)
+    return spark.createDataFrame(list(zip(ids, rows)), "doc_id long, text string")
+
+
+def test_dedup_keepers_job_and_pin_budget(spark):
+    from htep_spark.operators.dedup import dedup_keepers
+
+    sc = spark.sparkContext
+    docs = _dup_corpus(spark)
+    pinned = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    group = "test-dedup-keepers-budget"
+    sc.setJobGroup(group, group)
+    try:
+        rows = dedup_keepers(docs, "doc_id", "text").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(rows) == 1_500
+    assert sum(r["keep"] for r in rows) < 1_500
+    assert len(jobs) <= 26, len(jobs)
     new_pins = set(sc._jsc.getPersistentRDDs().keySet().toArray()) - pinned
     assert len(new_pins) <= 1, new_pins

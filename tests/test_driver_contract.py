@@ -371,3 +371,94 @@ def test_every_module_has_a_consumer():
     )
     # the allowlist names only modules that still lack a consumer
     assert reach(entries) & set(kept) == set()
+
+
+# top-level names no entry point reaches, each a reference or fixture that
+# tests use
+_NAMES_KEPT_WITHOUT_CONSUMER = {
+    "htep_spark.functions.textops.fusion_correct":
+        "reference of the source's T1 fusion rule; `fusion` is its JVM form",
+    "htep_spark.functions.deid.split_sentences":
+        "reference splitter sharing SENTENCE_PATTERN with the `sentences` query",
+    "htep_spark.functions.fuzzy.extract_one":
+        "one-shot rapidfuzz extractOne reference over FuzzyMatcher",
+    "htep_spark.functions.classify.classify_segments":
+        "reference of the source's C3 rule; `classify_segments` is its SQL form",
+    "htep_spark.sources.io.synthesize_transcripts_pdf":
+        "pandas transcript fixture the Spark tests build their frames from",
+    "htep_spark.sources.io.write_bucketed_transcripts":
+        "bucketed-table writer whose plans the bucketing tests check",
+}
+
+
+def test_every_name_has_a_consumer():
+    """Every top-level name an htep_spark module defines is reached from a
+    non-test entry point (the files of ``test_every_module_has_a_consumer``).
+    Roots are every identifier in the entry files and in each module-level
+    statement that runs at import but defines no single name (a tuple
+    assign, an ``if``, a call); a reached function, class or assigned
+    value adds the identifiers inside it. Names are matched by identifier,
+    so a call or attribute anywhere in reached code keeps every definition
+    of that name. A function, constant or wrapper only tests call fails
+    here."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+
+    def idents(node):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+                yield n.id
+            elif isinstance(n, ast.Attribute):
+                yield n.attr
+
+    def defined(stmt):
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            return stmt.name
+        if isinstance(stmt, ast.Assign):
+            targets = stmt.targets
+        elif isinstance(stmt, ast.AnnAssign):
+            targets = [stmt.target]
+        else:
+            return None
+        if len(targets) == 1 and isinstance(targets[0], ast.Name):
+            return targets[0].id
+        return None
+
+    scripts = [*root.glob("perfbench/*.py"), *root.glob("tools/*.py")]
+    roots = set()
+    for path in [root / "__spark_entry__.py", root / "bench.py", *scripts]:
+        roots.update(idents(ast.parse(path.read_text())))
+    definitions = {}  # name -> [(module, statement)]
+    for path in sorted(root.glob("htep_spark/**/*.py")):
+        module = ".".join(path.relative_to(root).with_suffix("").parts)
+        for stmt in ast.parse(path.read_text()).body:
+            if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                continue
+            name = defined(stmt)
+            if name is None or module in _KEPT_WITHOUT_CONSUMER:
+                roots.update(idents(stmt))
+            elif not (name.startswith("__") and name.endswith("__")):
+                definitions.setdefault(name, []).append((module, stmt))
+
+    def reach(starts):
+        reached, todo = set(), list(starts)
+        while todo:
+            name = todo.pop()
+            if name not in reached:
+                reached.add(name)
+                for _, stmt in definitions.get(name, ()):
+                    todo.extend(idents(stmt))
+        return reached
+
+    qualified = {f"{m}.{n}": n for n, defs in definitions.items() for m, _ in defs}
+    kept = {qualified[q] for q in _NAMES_KEPT_WITHOUT_CONSUMER}
+    reached = reach(roots | kept)
+    unreached = sorted(q for q, name in qualified.items() if name not in reached)
+    assert unreached == [], (
+        f"htep_spark names no entry point reaches: {unreached}; "
+        "give each a consumer or delete it"
+    )
+    # the allowlist names only definitions that still lack a consumer
+    assert reach(roots) & kept == set()

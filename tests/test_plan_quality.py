@@ -84,9 +84,8 @@ def test_aqe_handles_skewed_join(spark):
 
 
 def test_ann_lsh_expr_plan_stays_jvm_side(spark):
-    """The expr signature backend must compile to pure column expressions:
-    no Python evaluation node anywhere in the LSH candidate/re-rank plan
-    (the numpy backend is the explicit opt-in that adds ArrowEvalPython)."""
+    """The LSH signatures must compile to pure column expressions: no
+    Python evaluation node anywhere in the LSH candidate/re-rank plan."""
     from pyspark.sql import functions as F
 
     from htep_spark.operators.similarity import ann_lsh_topk
@@ -95,12 +94,9 @@ def test_ann_lsh_expr_plan_stays_jvm_side(spark):
     queries = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = ann_lsh_topk(emb, queries, k=3)  # expr default
+    out = ann_lsh_topk(emb, queries, k=3)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan, "Python eval node in expr-mode ANN plan"
-    numpy_out = ann_lsh_topk(emb, queries, k=3, signature_mode="numpy")
-    numpy_plan = numpy_out._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" in numpy_plan  # sanity: the opt-in really differs
+    assert "EvalPython" not in plan, "Python eval node in the ANN plan"
 
 
 def test_conv_metrics_order_partial_aggregation(spark):
